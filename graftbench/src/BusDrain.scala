@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every listener event posted so far has been delivered.
+  * The listener bus is asynchronous and its drain is package-private,
+  * hence this package. */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

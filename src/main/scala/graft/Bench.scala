@@ -178,9 +178,6 @@ object Bench {
         wdS: Option[Double], sweepTag: String): (Double, Option[String]) = {
       spark.catalog.clearCache()
       if (cold) coldReset()
-      // pooled builds that run inside this timed region are charged
-      // to this query in the artifact's pool_builds map
-      CachePool.setChargeContext(s"$name@$sweepTag")
       val gid = s"bench-$name"
       @volatile var fired = false
       // repeating timer: cancelJobGroup only kills ACTIVE jobs, and a
@@ -200,7 +197,9 @@ object Bench {
       spark.sparkContext.setJobGroup(gid, s"bench $name",
         interruptOnCancel = true)
       val t0 = System.nanoTime()
-      val err =
+      // pooled builds that run inside this timed region are charged
+      // to this query in the artifact's pool_builds map
+      val err = CachePool.charging(s"$name@$sweepTag") {
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable =>
           Some(Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -209,6 +208,7 @@ object Bench {
           timer.foreach(_.cancel())
           spark.sparkContext.clearJobGroup()
         }
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // a watchdog kill is its own category: never a crash-fast time,
       // never a process failure — the artifact records the cancel

@@ -159,17 +159,24 @@ object CachePool {
   private var serveTick = 0L
 
   /** Every pooled build this JVM has run: (kernel, build seconds,
-    * charge label). The charge label is whatever the harness set via
-    * [[setChargeContext]] — the bench sets "query@sweep" around each
-    * timed run, so the artifact can attribute each build to the query
-    * whose timed run paid for it. */
+    * charge label). The charge label is the timed region the harness
+    * opened with [[charging]] — the bench wraps each timed run as
+    * "query@sweep", so the artifact can attribute each build to the
+    * query whose timed run paid for it — else [[Untimed]]. */
   private val buildLog =
     scala.collection.mutable.ArrayBuffer.empty[(String, Double, String)]
-  @volatile private var charge: String = ""
 
-  /** Label the current timed region; pooled builds that run inside it
-    * are charged to this label in [[drainBuildLog]]. */
-  def setChargeContext(label: String): Unit = { charge = label }
+  /** Charge label of builds that run outside any timed region. */
+  val Untimed = "untimed"
+  @volatile private var charge: String = Untimed
+
+  /** Run `body` as a timed region: pooled builds inside it are charged
+    * to `label` in [[drainBuildLog]], and builds after it to
+    * [[Untimed]]. */
+  def charging[A](label: String)(body: => A): A = {
+    charge = label
+    try body finally charge = Untimed
+  }
 
   /** Drain the build log (bench artifact emission). */
   def drainBuildLog(): Seq[(String, Double, String)] = synchronized {

@@ -46,8 +46,12 @@ case class JobContext(
   * with remaps/save-mode semantics applied.
   *
   * Parallel-degree ↔ file-count coupling (files.py:794-885): PARALLEL n
-  * ⇒ each table's dump set is written as n part files (repartition(n)) —
-  * Spark's substitute for the `%U` substitution variable.
+  * ⇒ each table's dump set is written as n part files — Spark's
+  * substitute for the `%U` substitution variable. Each table moves in
+  * one Spark job where its scan allows: with k the partition count of
+  * the planned scan, k == n writes the scan as it is, k > n with
+  * n ≥ defaultParallelism coalesces, and anything else repartitions
+  * (see `layout`).
   */
 case class DataPumpJob(
     operation: Operation,
@@ -428,9 +432,9 @@ case class DataPumpJob(
               val obs = Observation()
               val comboOut = s"$storageTarget/$targetSchema/${targetTable}_$suffix"
               guardInPlaceWrite(comboOut, part.schema)
-              writeTable(part.observe(obs, count(lit(1)).as("rows"))
-                .repartition(comboParts(combo)), comboOut, saveMode,
-                writerOpts, writeFormat)
+              val shape = layout(part, comboParts(combo))
+              writeTable(shape(part.observe(obs, count(lit(1)).as("rows"))),
+                comboOut, saveMode, writerOpts, writeFormat)
               rows += obs.get("rows").asInstanceOf[Long]
               bytes += pathBytes(spark, comboOut)
             }
@@ -455,8 +459,8 @@ case class DataPumpJob(
                 math.min(1L << 20, math.max(1L, (srcBytes + b - 1) / b)).toInt
               case None => parallel
             }
-            writeTable(df.observe(obs, count(lit(1)).as("rows"))
-              .repartition(nParts),
+            val shape = layout(df, nParts)
+            writeTable(shape(df.observe(obs, count(lit(1)).as("rows"))),
               outPath, saveMode, writerOpts, writeFormat)
             ObjectStatus(table, "COMPLETED",
               obs.get("rows").asInstanceOf[Long],
@@ -698,7 +702,49 @@ case class DataPumpJob(
         .option("inferSchema", "true").csv(path)
       case "json" => r.json(path)
       case "orc" => r.orc(path)
-      case _ => r.parquet(path)
+      // the schema comes from one footer read on the driver: inference
+      // would launch a one-task Spark job per table for it
+      case _ => graft.sources.ParquetSchema.of(spark, path, readerOpts)
+        .fold(r)(r.schema).parquet(path)
+    }
+  }
+
+  /** How a frame is laid out for a write of exactly n part files, as a
+    * function applied to the (observed) frame. With k the partition
+    * count of `df`'s planned scan: k == n writes the scan as it is;
+    * k > n coalesces, when n ≥ defaultParallelism so that no core is
+    * left idle; otherwise (k < n, an unknown k, or a small n that
+    * coalesce would serialize) a round-robin repartition(n). `df` is the
+    * frame before `.observe(...)`, so the observation sees only the
+    * write. */
+  private def layout(df: DataFrame, n: Int): DataFrame => DataFrame =
+    scanPartitions(df) match {
+      case Some(k) if k == n => identity
+      case Some(k) if k > n &&
+          n >= df.sparkSession.sparkContext.defaultParallelism => _.coalesce(n)
+      case _ => _.repartition(n)
+    }
+
+  /** Partition count of `df`'s planned file scan when each partition
+    * writes one file: the plan is a single file scan that keeps every
+    * row (projections only; a filter could empty a partition, and
+    * Spark writes no file for an empty one), and each partition holds a
+    * whole file (a split holding no row group's midpoint reads empty).
+    * Planning only: no Spark job runs. None for any other plan. */
+  private def scanPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    val plan = df.queryExecution.executedPlan
+    val rowPreserving = !plan.exists {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec |
+          _: ProjectExec => false
+      case s: FileSourceScanExec => s.dataFilters.nonEmpty
+      case _ => true
+    }
+    if (!rowPreserving) None
+    else plan.collectFirst { case s: FileSourceScanExec => s.inputRDD }.collect {
+      case rdd: FileScanRDD if rdd.filePartitions.forall(_.files.exists(f =>
+          f.start == 0 && f.length == f.fileSize)) => rdd.filePartitions.size
     }
   }
 

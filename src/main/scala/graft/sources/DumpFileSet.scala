@@ -100,14 +100,13 @@ object DumpFileSet {
       val codec =
         if (blocks.isEmpty || blocks.get(0).getColumns.isEmpty) "UNCOMPRESSED"
         else blocks.get(0).getColumns.get(0).getCodec.toString
-      val sparkSchema = spark.read.parquet(file).schema
       DumpFileInfo(
         path = file,
         fileSizeBytes = fs.getFileStatus(p).getLen,
         numRows = reader.getRecordCount,
         numRowGroups = blocks.size(),
         compression = codec,
-        schemaDdl = sparkSchema.toDDL,
+        schemaDdl = ParquetSchema.of(spark, p, footer).toDDL,
         createdBy = Option(meta.getCreatedBy).getOrElse("unknown"))
     } finally reader.close()
   }

@@ -23,20 +23,64 @@ class JobSpec extends AnyFunSuite {
   private class GroupMetrics(group: String)
       extends org.apache.spark.scheduler.SparkListener {
     private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val jobIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val recordsRead = new java.util.concurrent.atomic.AtomicLong()
     val scanTasks = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleWriteBytes = new java.util.concurrent.atomic.AtomicLong()
     override def onJobStart(
         js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
       if (js.properties != null &&
-          group == js.properties.getProperty("spark.jobGroup.id"))
+          group == js.properties.getProperty("spark.jobGroup.id")) {
         js.stageIds.foreach(id => stages.add(id))
+        jobIds.add(js.jobId)
+        jobs.incrementAndGet()
+      }
+    override def onJobEnd(
+        je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      if (jobIds.contains(je.jobId)) jobsEnded.incrementAndGet()
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
       if (stages.contains(te.stageId) && te.taskMetrics != null) {
         recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
         if (te.taskMetrics.inputMetrics.recordsRead > 0)
           scanTasks.incrementAndGet()
+        shuffleWriteBytes.addAndGet(
+          te.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
+    /** Block until the bus has delivered the end of every job the group
+      * started (task ends precede their job's end on the bus). */
+    def settle(): Unit = {
+      val deadline = System.currentTimeMillis() + 10000
+      while ((jobs.get() == 0 || jobsEnded.get() < jobs.get()) &&
+          System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    }
+  }
+
+  /** Order-insensitive content digest: the sum of xxhash64 over all
+    * columns of every row. */
+  private def digest(path: String, opts: Map[String, String] = Map.empty): Long = {
+    val df = spark.read.options(opts).parquet(path)
+    df.select(org.apache.spark.sql.functions.xxhash64(
+      df.columns.map(org.apache.spark.sql.functions.col): _*))
+      .collect().map(_.getLong(0)).sum
+  }
+
+  private def partFiles(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+
+  /** Run a job under its own job group with a GroupMetrics attached. */
+  private def metered(group: String)(job: Option[String] => DataPumpJob)
+      : (graft.status.JobStatusInfo, GroupMetrics) = {
+    val m = new GroupMetrics(group)
+    spark.sparkContext.addSparkListener(m)
+    try {
+      val info = job(Some(group)).run(spark)
+      m.settle()
+      (info, m)
+    } finally spark.sparkContext.removeSparkListener(m)
   }
 
   test("export writes a parallel dump set + metadata sidecar") {
@@ -652,6 +696,115 @@ class JobSpec extends AnyFunSuite {
       assert(listener.recordsRead.get() == 30,
         s"expected exactly 30 source rows read, saw ${listener.recordsRead.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("PARALLEL n: n part files, one Spark job and no shuffle where the scan has the layout") {
+    // n ≥ defaultParallelism, so a scan of k > n partitions coalesces
+    val n = spark.sparkContext.defaultParallelism
+    val src = tmp("jobspec-layout-src")
+    val orders = Tables.load(spark, sf, "orders")
+    orders.coalesce(1).write.parquet(s"$src/fewer.parquet")
+    orders.repartition(n).write.parquet(s"$src/equal.parquet")
+    // incompressible text, `files` files of `rows` rows (one row group each)
+    def hashes(t: String, files: Int, rows: Long): Unit =
+      spark.range(0, rows * files, 1, files)
+        .selectExpr("id", "sha2(cast(id as string), 256) as h")
+        .write.parquet(s"$src/$t.parquet")
+    // n + 1 files of ~3 MB: too big to share a scan partition, too
+    // small to be split
+    hashes("more", n + 1, 40000L)
+    // 2 files of ~8 MB, each split in two: n partitions, half of them
+    // a tail split holding no row group, which reads no rows
+    hashes("split", 2, 110000L)
+    def scanK(t: String) =
+      spark.read.parquet(s"$src/$t.parquet").rdd.getNumPartitions
+    val tables = Seq("fewer", "equal", "more", "split")
+    assert(scanK("fewer") < n && scanK("equal") == n && scanK("more") > n &&
+      scanK("split") == n, tables.map(scanK))
+
+    val dump = tmp("jobspec-layout-dump")
+    Seq("fewer" -> true, "equal" -> false, "more" -> false,
+        "split" -> true).foreach {
+      case (t, shuffles) =>
+        val (info, m) = metered(s"JOBSPEC-LAYOUT-$t") { group =>
+          DataPumpJob(Operation.Export, JobMode.Table, src, dump,
+            directives = Seq(IncludeTable(Seq(t)), Parallel(n)),
+            explicitJobName = group)
+        }
+        assert(info.state == JobState.Completed, info.errors)
+        assert(partFiles(s"$dump/main/$t") == n, t)
+        assert(digest(s"$dump/main/$t") == digest(s"$src/$t.parquet"), t)
+        assert((m.shuffleWriteBytes.get() > 0) == shuffles,
+          s"$t: ${m.shuffleWriteBytes.get()} shuffle bytes")
+        if (!shuffles) assert(m.jobs.get() == 1, s"$t: ${m.jobs.get()} jobs")
+    }
+    // a filter can empty scan partitions (here every kept row sits in
+    // the first file), so a filtered export still repartitions
+    val filtered = tmp("jobspec-layout-query")
+    val q = DataPumpJob(Operation.Export, JobMode.Table, src, filtered,
+      directives = Seq(IncludeTable(Seq("more")), Parallel(n),
+        Query("id < 40000"))).run(spark)
+    assert(q.state == JobState.Completed, q.errors)
+    assert(q.totalRows == 40000)
+    assert(partFiles(s"$filtered/main/more") == n)
+
+    // the n-file dump imports with PARALLEL n: one job per table, no
+    // shuffle, and still n files
+    val tgt = tmp("jobspec-layout-tgt")
+    val (imp, m) = metered("JOBSPEC-LAYOUT-IMP") { group =>
+      DataPumpJob(Operation.Import, JobMode.Full, dump, tgt,
+        directives = Seq(Parallel(n)), explicitJobName = group)
+    }
+    assert(imp.state == JobState.Completed, imp.errors)
+    assert(m.jobs.get() == tables.size,
+      s"${m.jobs.get()} Spark jobs for ${tables.size} tables")
+    assert(m.shuffleWriteBytes.get() == 0)
+    tables.foreach { t =>
+      assert(partFiles(s"$tgt/main/$t") == n, t)
+      assert(digest(s"$tgt/main/$t") == digest(s"$src/$t.parquet"), t)
+    }
+  }
+
+  test("driver-side parquet schema equals Spark's inferred schema") {
+    import graft.sources.{ParquetCrypto, ParquetSchema}
+    assert(spark.conf.get(Sessions.NanosAsLongKey) == "true")
+    def same(path: String, opts: Map[String, String] = Map.empty,
+        partitioned: Boolean = false): Unit = {
+      val inferred = spark.read.options(opts).parquet(path).schema
+      val driver = ParquetSchema.of(spark, path, opts)
+      assert(driver.nonEmpty, path)
+      // StructField equality covers nullability and field metadata
+      if (!partitioned) assert(driver.get == inferred, path)
+      assert(spark.read.options(opts).schema(driver.get).parquet(path)
+        .schema == inferred, path)
+    }
+    // every sf0.01 fixture table, events' ns timestamps as long
+    val sf01 = new java.io.File(sf).toPath.resolveSibling("sf0.01").toString
+    Tables.all.foreach(t => same(Tables.path(sf01, t)))
+    // a Spark-written dump (row-metadata key, _SUCCESS marker)
+    val dump = tmp("jobspec-schema-dump")
+    DataPumpJob(Operation.Export, JobMode.Table, sf, dump,
+      directives = Seq(IncludeTable(Seq("events")), Parallel(2))).run(spark)
+    same(s"$dump/main/events")
+    // an ENCRYPTION=ALL dump, read with its keys
+    val enc = tmp("jobspec-schema-enc")
+    val exp = DataPumpJob(Operation.Export, JobMode.Table, sf, enc,
+      directives = Seq(IncludeTable(Seq("nation")), Encryption("ALL"),
+        EncryptionPassword("s3cret-pw"))).run(spark)
+    assert(exp.state == JobState.Completed, exp.errors)
+    same(s"$enc/main/nation", Map(
+      ParquetCrypto.FactoryClassKey -> ParquetCrypto.FactoryClass,
+      ParquetCrypto.KmsClassKey -> classOf[graft.sources.GraftKms].getName,
+      ParquetCrypto.PasswordConf -> "s3cret-pw"))
+    // a k=v partitioned source, as MERGE and DEPARTITION read it
+    val parted = tmp("jobspec-schema-kv")
+    graft.operators.Events.load(spark, sf)
+      .write.partitionBy("event_type").parquet(s"$parted/events")
+    same(s"$parted/events", partitioned = true)
+    // a missing path and schema merging are left to Spark
+    assert(ParquetSchema.of(spark, s"$parted/absent").isEmpty)
+    assert(ParquetSchema.of(spark, s"$parted/events",
+      Map("mergeSchema" -> "true")).isEmpty)
   }
 
   test("flat FULL export enumerates the directory, not a static table list") {

@@ -1044,6 +1044,21 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("build log charges a pooled build to its timed region, and later builds untimed") {
+    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.drainBuildLog()
+    try {
+      graft.CachePool.charging("q_knn@sweep1") {
+        Similarity.knnBruteForce(spark, sf, k = 5).count()
+      }
+      graft.CachePool.clearSessionCheckpoints()
+      Similarity.knnBruteForce(spark, sf, k = 5).count() // rebuilt, untimed
+      val charges = graft.CachePool.drainBuildLog()
+        .filter(_._1.startsWith("knn-brute-top")).map(_._3)
+      assert(charges == Seq("q_knn@sweep1", graft.CachePool.Untimed), charges)
+    } finally graft.CachePool.clearSessionCheckpoints()
+  }
+
   test("exact kernels fail fast when the broadcast side exceeds the configured bound") {
     val key = "spark.graft.exact.maxBroadcastRows"
     // the knn kernel is session-pooled (r17): the guard runs inside

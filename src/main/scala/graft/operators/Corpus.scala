@@ -19,11 +19,9 @@ import org.apache.spark.sql.functions._
   *    half the corpus); Catalyst's rank-limit pushdown caps every map
   *    partition to k rows per domain before the shuffle, so no reducer
   *    sees more than `k × mapPartitions` rows of one domain.
-  *  - [[packChunks]] needs a GLOBAL running sum — a bare
-  *    `Window.orderBy` collapses to one partition at scale, so it uses
-  *    the two-phase distributed prefix-sum: per-range partial sums
-  *    (tiny) are offset-joined back and the long window runs only
-  *    WITHIN each range.
+  *  - [[packChunks]] and every other GLOBAL rank or running sum here
+  *    go through [[TwoPhase.prefix]] — a bare `Window.orderBy`
+  *    collapses to one partition at scale.
   */
 object Corpus {
 
@@ -92,13 +90,9 @@ object Corpus {
     * training chunk `floor(exclusive_running_tokens / budget)` — the
     * shard layout step before tokenize-and-concat.
     *
-    * Distributed prefix sum: doc_ids are range-bucketed into `buckets`
-    * deterministic equal-width ranges (no sampling — the same doc
-    * always lands in the same bucket), per-bucket token totals (tiny:
-    * `buckets` rows) are exclusive-cumsum'd on the driver-sized side
-    * and broadcast-joined back as offsets, and the unbounded-preceding
-    * window runs only within a bucket. No stage ever holds the corpus
-    * in one partition, unlike a bare `Window.orderBy(doc_id)`.
+    * The running sum is [[TwoPhase.prefix]] over `buckets`
+    * deterministic equal-width doc_id ranges (no sampling — the same
+    * doc always lands in the same bucket).
     */
   def packChunks(spark: SparkSession, sf: String,
       budget: Int = 512, buckets: Int = 32): DataFrame =
@@ -123,20 +117,10 @@ object Corpus {
       .withColumn("bucket", expr(
         s"(doc_id - min_id) div " +
           s"cast(ceil((max_id - min_id + 1) / $buckets.0) as bigint)"))
-    val totals = ranged.groupBy(col("bucket"))
-      .agg(sum(col("n_tokens")).as("bucket_tokens"))
-    val offsets = totals.withColumn("offset",
-      coalesce(sum(col("bucket_tokens")).over(
-        Window.orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val inBucket = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), "bucket")
-      .withColumn("excl",
-        col("offset") + sum(col("n_tokens")).over(inBucket) - col("n_tokens"))
+    TwoPhase.prefix(ranged, Nil, Seq("bucket"), Seq(col("doc_id")),
+        col("n_tokens"), "cum")
       .select(col("doc_id"), col("n_tokens"),
-        expr(s"excl div $budget").as("chunk"))
+        expr(s"(cum - n_tokens) div $budget").as("chunk"))
       .orderBy(col("doc_id"))
   }
 
@@ -1440,7 +1424,7 @@ object Corpus {
     }
   }
 
-  /** Hash-range buckets for [[curateV3]]'s two-phase stage-2 rank. */
+  /** Value-range buckets for [[curateV3]]'s stage-2 rank. */
   val CurateV3RankBuckets = 32
 
   /** End-to-end curation v3 — the r15 additions composed into the
@@ -1462,9 +1446,8 @@ object Corpus {
     *      interpolated percentile cut and its t-digest approximation
     *      disagree about the boundary ties (measured: 3-doc diff at
     *      sf0.001) — the rank rule is integer-exact in both engines
-    *      AND scale-safe via the [[Text.pplBuckets]] two-phase
-    *      bucketed-rank construction (no exact-percentile buffer, no
-    *      single-task window, no sketch),
+    *      AND scale-safe via [[TwoPhase.prefix]] (no
+    *      exact-percentile buffer, no single-task window, no sketch),
     *   3. LSH NEAR-DUP SURVIVOR: among what stages 1–2 kept, drop
     *      every doc that is the larger id of a verified
     *      [[Dedup.minhashLsh]] pair whose BOTH endpoints survived —
@@ -1542,46 +1525,39 @@ object Corpus {
       .orderBy(col("source"))
   }
 
+  /** `s2pre` plus `rk`, its global rank by (mean_millibits, doc_id),
+    * and the row count — the stage-2 rank shared by [[curateV3Frames]]
+    * and [[curateV3Sweep]]. [[TwoPhase.prefix]] over equal-width value
+    * ranges (bucket id monotone in score, ties confined to one
+    * bucket). The three range scalars are ONE bounded head() off the
+    * checkpointed frame (the house driver-bounded-trainer rule), so
+    * the plan carries no single-row nested-loop broadcast inside the
+    * 9-way-referenced rank subtree. */
+  private def curateV3Ranked(s2pre: DataFrame): (DataFrame, Long) = {
+    val ext = s2pre.agg(min(col("mean_millibits")),
+      max(col("mean_millibits")), count(lit(1))).head()
+    val (mn, mx, nTotal) = (ext.getLong(0), ext.getLong(1), ext.getLong(2))
+    val width = math.max(1L,
+      math.ceil((mx - mn + 1).toDouble / CurateV3RankBuckets).toLong)
+    val ranged = s2pre
+      .withColumn("vb", expr(s"(mean_millibits - ${mn}L) div ${width}L"))
+    (TwoPhase.prefix(ranged, Nil, Seq("vb"),
+      Seq(col("mean_millibits"), col("doc_id")), lit(1L), "rk"), nTotal)
+  }
+
   /** The four stage frames of [[curateV3]] — (gopher-passed scored
     * set, rank-quartile survivors, near-dup survivors, mixture-kept
     * output) — shared by the pipeline row and its funnel census. */
   private[graft] def curateV3Frames(spark: SparkSession, sf: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val up = curateV3Upstream(spark, sf)
-    // two-phase global rank by (mean_millibits, doc_id): equal-width
-    // value ranges (bucket id monotone in score, ties confined to one
-    // bucket), per-bucket offsets cumsum'd over a buckets-sized
-    // table, row_number only within a bucket — the pplBuckets
-    // construction, corpus-wide. The three range scalars are ONE
-    // bounded head() off the checkpointed frame (the house
-    // driver-bounded-trainer rule), so the plan carries no
-    // single-row nested-loop broadcast inside the 9-way-referenced
-    // rank subtree.
-    val ext = up.s2pre.agg(min(col("mean_millibits")),
-      max(col("mean_millibits")), count(lit(1))).head()
-    val (mn, mx, nTotal) = (ext.getLong(0), ext.getLong(1), ext.getLong(2))
-    val width = math.max(1L,
-      math.ceil((mx - mn + 1).toDouble / CurateV3RankBuckets).toLong)
-    val ranged = up.s2pre
-      .withColumn("vb", expr(s"(mean_millibits - ${mn}L) div ${width}L"))
-    val offsets = ranged.groupBy(col("vb"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum(col("bn")).over(
-          Window.orderBy(col("vb"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("vb"), col("offset"))
+    val (ranked, nTotal) = curateV3Ranked(up.s2pre)
     // pooled: the quartile survivors feed the two dedup id joins, the
     // anti-join left side, and the mixture census — unpersisted, each
     // consumer would re-run the rank window (generational CachePool,
     // one cached generation per session)
     val kept2 = graft.CachePool.swapOne("curate-v3-kept2",
-      ranged.join(broadcast(offsets), "vb")
-        .withColumn("rk", col("offset") + row_number().over(
-          Window.partitionBy(col("vb"))
-            .orderBy(col("mean_millibits"), col("doc_id"))))
-        .filter(col("rk") * 4 <= lit(nTotal * 3))
+      ranked.filter(col("rk") * 4 <= lit(nTotal * 3))
         .select(col("doc_id"), col("lang"), col("bucket"),
           col("mean_millibits")))
     val ids = kept2.select(col("doc_id"))
@@ -1622,38 +1598,20 @@ object Corpus {
     * post-dedup survivor count.
     *
     * Shape: the global rank is computed ONCE off the session-shared
-    * checkpointed upstream (the [[curateV3Frames]] two-phase bucketed
-    * construction — no single-task window), then every cut is
+    * checkpointed upstream ([[curateV3Ranked]] — no single-task
+    * window), then every cut is
     * arithmetic over (a) the pooled rank frame (one |cuts|-row
     * broadcast fan-out + partial agg) and (b) the rank-joined pair
     * frame (output-bounded — near-dup pairs, not the corpus). The
     * sweep costs ONE rank pass + |pairs|·|cuts| projection, never a
     * pipeline re-run per knob. */
   def curateV3Sweep(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val up = curateV3Upstream(spark, sf)
-    val ext = up.s2pre.agg(min(col("mean_millibits")),
-      max(col("mean_millibits")), count(lit(1))).head()
-    val (mn, mx, nTotal) = (ext.getLong(0), ext.getLong(1), ext.getLong(2))
-    val width = math.max(1L,
-      math.ceil((mx - mn + 1).toDouble / CurateV3RankBuckets).toLong)
-    val ranged = up.s2pre
-      .withColumn("vb", expr(s"(mean_millibits - ${mn}L) div ${width}L"))
-    val offsets = ranged.groupBy(col("vb"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum(col("bn")).over(
-          Window.orderBy(col("vb"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("vb"), col("offset"))
+    val (rankedAll, nTotal) = curateV3Ranked(up.s2pre)
     // pooled: the rank frame feeds the per-cut census AND both sides
     // of the pair-rank join
     val ranked = graft.CachePool.swapOne("curate-v3-sweep-ranked",
-      ranged.join(broadcast(offsets), "vb")
-        .withColumn("rk", col("offset") + row_number().over(
-          Window.partitionBy(col("vb"))
-            .orderBy(col("mean_millibits"), col("doc_id"))))
-        .select(col("doc_id"), col("rk")))
+      rankedAll.select(col("doc_id"), col("rk")))
     val cuts = spark.range(1)
       .select(explode(typedLit(CurateV3SweepCutsBp)).as("cut_bp"))
     val n2 = ranked.crossJoin(broadcast(cuts))
@@ -1757,8 +1715,7 @@ object Corpus {
     * engines. */
   val KfoldK = 5
 
-  /** Hash-range buckets for the two-phase per-stratum rank in
-    * [[stratifiedKfold]]. */
+  /** Hash-range buckets for [[stratifiedKfold]]'s per-stratum rank. */
   val KfoldRankBuckets = 64
 
   /** q_stratified_kfold: K-fold cross-validation assignment,
@@ -1772,16 +1729,12 @@ object Corpus {
     * partitionings, and runs, and stable under corpus reordering.
     * Fold = (per-stratum rank − 1) mod K — the round-robin deal.
     *
-    * Scale shape: the per-stratum rank is the SAME two-phase bucketed
-    * construction as [[epochShuffle]]/[[Text.pplBuckets]] — a stratum
-    * at 100 TB cannot ride one `Window.partitionBy(lang)` task, so the
-    * hash value range-buckets rows into [[KfoldRankBuckets]] ordered
-    * groups per stratum, per-(stratum, bucket) counts are exclusive-
-    * cumsum'd over a strata×buckets-row table and broadcast back, and
-    * row_number runs only within a (stratum, bucket). */
+    * Scale shape: a stratum at 100 TB cannot ride one
+    * `Window.partitionBy(lang)` task, so the per-stratum rank is
+    * [[TwoPhase.prefix]] by `lang` over [[KfoldRankBuckets]]
+    * equal-width ranges of the hash value. */
   def stratifiedKfold(spark: SparkSession, sf: String,
       k: Int = KfoldK, buckets: Int = KfoldRankBuckets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("lang"),
         expr("cast(conv(substring(md5(text), 1, 8), 16, 10) as bigint)")
@@ -1789,17 +1742,8 @@ object Corpus {
     // equal-width hash ranges: h is uniform in [0, 2^32)
     val width = (1L << 32) / buckets
     val ranged = docs.withColumn("bucket", expr(s"h div ${width}L"))
-    val offsets = ranged.groupBy(col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum(col("bn")).over(
-          Window.partitionBy(col("lang")).orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("lang"), col("bucket"), col("offset"))
-    ranged.join(broadcast(offsets), Seq("lang", "bucket"))
-      .withColumn("rk", col("offset") + row_number().over(
-        Window.partitionBy(col("lang"), col("bucket"))
-          .orderBy(col("h"), col("doc_id"))))
+    TwoPhase.prefix(ranged, Seq("lang"), Seq("bucket"),
+        Seq(col("h"), col("doc_id")), lit(1L), "rk")
       .select(col("doc_id"), col("lang"),
         ((col("rk") - 1) % k).cast("long").as("fold"))
       .orderBy(col("doc_id"))
@@ -1910,14 +1854,10 @@ object Corpus {
     * (content-free, so the order is stable under text edits; keyed on
     * the id like the split/sample bucket functions).
     *
-    * The global rank is the SAME two-phase construction as
-    * [[packChunksDf]] — a bare `Window.orderBy(key)` would funnel the
-    * corpus through one partition. The first two hex digits of the key
-    * range-bucket rows into 256 ordered groups (hex-string order ==
-    * numeric order at fixed width), per-bucket counts are
-    * exclusive-cumsum'd on the 256-row side and broadcast back as
-    * offsets, and row_number runs only within a bucket. At 100 TB the
-    * writer pairs this with `repartitionByRange(shuffle_rank)` +
+    * The global rank is [[TwoPhase.prefix]]: the first two hex digits
+    * of the key range-bucket rows into 256 ordered groups (hex-string
+    * order == numeric order at fixed width). At 100 TB the writer
+    * pairs this with `repartitionByRange(shuffle_rank)` +
     * `sortWithinPartitions` to lay out training shards.
     */
   def epochShuffle(spark: SparkSession, sf: String,
@@ -1928,19 +1868,9 @@ object Corpus {
           .as("skey"))
       .withColumn("bucket",
         expr("cast(conv(substring(skey, 1, 2), 16, 10) as bigint)"))
-    val offsets = keyed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("offset",
-        coalesce(sum(col("n")).over(
-          Window.orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val inBucket = Window.partitionBy(col("bucket"))
-      .orderBy(col("skey"), col("doc_id"))
-    keyed.join(broadcast(offsets), "bucket")
-      .select(col("doc_id"),
-        (col("offset") + row_number().over(inBucket) - 1)
-          .cast("long").as("shuffle_rank"))
+    TwoPhase.prefix(keyed, Nil, Seq("bucket"),
+        Seq(col("skey"), col("doc_id")), lit(1L), "rk")
+      .select(col("doc_id"), (col("rk") - 1).as("shuffle_rank"))
       .orderBy(col("doc_id"))
   }
 
@@ -2106,15 +2036,12 @@ object Corpus {
     * shrinking the budget always yields a subset (ablation-comparable
     * corpora, same argument as [[stratifiedSample]]'s nesting).
     *
-    * The running total is a GLOBAL ordered sum — the same
-    * single-partition-window trap as [[packChunksDf]], solved the same
-    * way: equal-width QUALITY-RANGE buckets (descending; score order ↔
-    * bucket order, ties stay within one bucket since the bucket is a
-    * function of the score) give per-bucket token totals (≤ `buckets`
-    * rows) that are exclusive-cumsum'd and broadcast back as offsets,
-    * and the unbounded-preceding window runs only within a bucket.
-    * Token counts are integers, so the cumulative sums are exact
-    * regardless of how the double-valued bucket boundaries fall.
+    * The running total is [[TwoPhase.prefix]] over equal-width
+    * QUALITY-RANGE buckets (descending; score order ↔ bucket order,
+    * ties stay within one bucket since the bucket is a function of the
+    * score). Token counts are integers, so the cumulative sums are
+    * exact regardless of how the double-valued bucket boundaries
+    * fall.
     */
   def tokenBudget(spark: SparkSession, sf: String,
       budget: Long = 10000L, buckets: Int = 32): DataFrame = {
@@ -2128,19 +2055,9 @@ object Corpus {
           .otherwise(least(lit(buckets - 1L),
             floor((col("mx") - col("quality_score")) /
               ((col("mx") - col("mn")) / buckets)))))
-    val offsets = ranged.groupBy(col("bucket"))
-      .agg(sum(col("n_tokens")).as("bucket_tokens"))
-      .withColumn("offset",
-        coalesce(sum(col("bucket_tokens")).over(
-          Window.orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val inBucket = Window.partitionBy(col("bucket"))
-      .orderBy(col("quality_score").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), "bucket")
-      .withColumn("cum_tokens",
-        col("offset") + sum(col("n_tokens")).over(inBucket))
+    TwoPhase.prefix(ranged, Nil, Seq("bucket"),
+        Seq(col("quality_score").desc, col("doc_id")), col("n_tokens"),
+        "cum_tokens")
       .filter(col("cum_tokens") <= budget)
       .select(col("doc_id"), col("n_tokens"), col("quality_score"),
         col("cum_tokens"))
@@ -2157,11 +2074,8 @@ object Corpus {
     * byte-balanced output files — the fix for the long-tail-straggler
     * shard a naive hash split produces when doc sizes are skewed.
     *
-    * The global size rank is the [[packChunksDf]]/[[epochShuffle]]
-    * two-phase construction over equal-width TOKEN-COUNT ranges
-    * (descending, all-integer): per-bucket counts are exclusive-
-    * cumsum'd and broadcast back, row_number runs only within a
-    * bucket — no single-partition global window at any scale.
+    * The global size rank is [[TwoPhase.prefix]] over equal-width
+    * TOKEN-COUNT ranges (descending, all-integer).
     */
   def shardAssign(spark: SparkSession, sf: String,
       shards: Int = 8, buckets: Int = 32): DataFrame = {
@@ -2172,19 +2086,10 @@ object Corpus {
     val ranged = docs.crossJoin(broadcast(ext))
       .withColumn("bucket", expr(
         s"(mx - n_tokens) div cast(ceil((mx - mn + 1) / $buckets.0) as bigint)"))
-    val offsets = ranged.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("offset",
-        coalesce(sum(col("n")).over(
-          Window.orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val inBucket = Window.partitionBy(col("bucket"))
-      .orderBy(col("n_tokens").desc, col("doc_id"))
-    ranged.join(broadcast(offsets), "bucket")
+    TwoPhase.prefix(ranged, Nil, Seq("bucket"),
+        Seq(col("n_tokens").desc, col("doc_id")), lit(1L), "rk")
       .select(col("doc_id"), col("n_tokens"),
-        ((col("offset") + row_number().over(inBucket) - 1) % shards)
-          .cast("long").as("shard"))
+        ((col("rk") - 1) % shards).as("shard"))
       .orderBy(col("doc_id"))
   }
 
@@ -2325,11 +2230,9 @@ object Corpus {
     * position is decorrelated from content before the stride is laid
     * over it.
     *
-    * Scale: the exclusive running total is the [[packChunksDf]]
-    * two-phase prefix sum over equal-width HASH-KEY ranges (the key is
-    * uniform on [0, 2³²), so ranges are balanced by construction) —
-    * per-bucket totals broadcast back as offsets, the long window runs
-    * only within a bucket, no single-partition stage.
+    * Scale: the running total is [[TwoPhase.prefix]] over equal-width
+    * HASH-KEY ranges (the key is uniform on [0, 2³²), so ranges are
+    * balanced by construction).
     */
   def systematicSample(spark: SparkSession, sf: String,
       step: Long = 100, buckets: Int = 32): DataFrame = {
@@ -2340,20 +2243,9 @@ object Corpus {
         expr("cast(conv(substring(md5(text), 1, 8), 16, 10) as bigint)")
           .as("hkey"))
       .withColumn("bucket", expr(s"hkey div ${width}L"))
-    val offsets = docs.groupBy(col("bucket"))
-      .agg(sum(col("n_tokens")).as("bucket_tokens"))
-      .withColumn("offset",
-        coalesce(sum(col("bucket_tokens")).over(
-          Window.orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val inBucket = Window.partitionBy(col("bucket"))
-      .orderBy(col("hkey"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs.join(broadcast(offsets), "bucket")
-      .withColumn("excl",
-        col("offset") + sum(col("n_tokens")).over(inBucket) - col("n_tokens"))
-      .filter(expr(s"(excl + n_tokens) div ${step}L > excl div ${step}L"))
+    TwoPhase.prefix(docs, Nil, Seq("bucket"),
+        Seq(col("hkey"), col("doc_id")), col("n_tokens"), "cum")
+      .filter(expr(s"cum div ${step}L > (cum - n_tokens) div ${step}L"))
       .select(col("doc_id"), col("n_tokens"))
       .orderBy(col("doc_id"))
   }

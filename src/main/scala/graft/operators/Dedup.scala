@@ -1436,10 +1436,10 @@ object Dedup {
       tNum: Int = 3, tDen: Int = 5): DataFrame = {
     // r17 (the allPairsJaccard lessons, ported): shingles are
     // DICTIONARY-ENCODED to dense long ids assigned in global rarity
-    // order (df asc, shingle asc — the same two-phase bucketed
-    // construction), so the candidate join keys become 8-byte longs
-    // instead of 3-word strings, the per-doc rarity ranking degenerates
-    // to one int-array sort, and the verification arrays shrink ~10×
+    // order (df asc, shingle asc — [[featureIds]]), so the candidate
+    // join keys become 8-byte longs instead of 3-word strings, the
+    // per-doc rarity ranking degenerates to one int-array sort, and
+    // the verification arrays shrink ~10×
     // in every exchange that carries them. The candidate join also
     // gains the PPJoin POSITIONAL filter adapted to one-sided
     // containment: a match row at A-prefix position pa / B-position pb
@@ -1454,23 +1454,9 @@ object Dedup {
     val docs = shingledCached(spark, sf)
     val ex = docs.select(col("doc_id"), explode(col("sh")).as("w"))
     val dfCounts = ex.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    // two-phase dense rank in (df, w) order: (df, 8-char prefix)
-    // buckets are contiguous under the total order, per-bucket counts
-    // cumsum into offsets, row_number runs only within a bucket —
-    // offset + in-bucket rank == the bare global row_number without a
-    // single-partition window (the allPairsJaccard construction).
-    val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy(col("df"), col("pre"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val bucketed = dfCounts.withColumn("pre", substring(col("w"), 1, 8))
-    val offs = bucketed.groupBy(col("df"), col("pre"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum(col("n")).over(wOff), lit(0L)))
-      .select(col("df"), col("pre"), col("offset"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("df"), col("pre")).orderBy(col("w"))
-    val fids = bucketed.join(broadcast(offs), Seq("df", "pre"))
-      .withColumn("fid", (col("offset") + row_number().over(wIn)).cast("long"))
+    // dense rank in (df, w) order over (df, 8-char prefix) buckets —
+    // the allPairsJaccard dictionary
+    val fids = featureIds(dfCounts)
     val ranked = ex.join(fids.select(col("w"), col("fid")), "w")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("fid"))).as("fs"))
@@ -1522,6 +1508,27 @@ object Dedup {
 
   // ---- AllPairs prefix filtering ------------------------------------
 
+  /** (w, df) feature counts plus `fid`, the dense global rank in
+    * (df asc, w asc) order — [[TwoPhase.prefix]] over (df, 8-char
+    * feature prefix) buckets, which are contiguous under that order
+    * (every feature sharing a prefix is adjacent under w). fid equals
+    * the bare global row_number, which is what the DuckDB oracle's
+    * candidate set pins; the bucket key MUST therefore be
+    * order-preserving under (df, w) — a hash-salted sub-bucket would
+    * bound size better but reorders ties and desynchronizes the
+    * oracle. Residual bound, stated honestly: at crawl scale most
+    * shingles have df=1 and first words are Zipfian, so the worst
+    * (df=1, prefix) bucket holds the trigrams sharing one common
+    * first-word-plus-start-of-second (8 chars reaches into word two,
+    * where 2 chars left several percent of the vocabulary in one
+    * bucket). Past that, the same construction nests: a second
+    * (prefix-within-bucket, offset) layer bounds any bucket without
+    * touching the total order; the offsets broadcast is the next
+    * constraint to watch, not the window partition. */
+  private def featureIds(counts: DataFrame): DataFrame =
+    TwoPhase.prefix(counts.withColumn("pre", substring(col("w"), 1, 8)),
+      Nil, Seq("df", "pre"), Seq(col("df"), col("w")), lit(1L), "fid")
+
   /** EXACT all-pairs Jaccard join over distinct word-TRIGRAM sets via
     * prefix filtering (AllPairs, Bayardo et al. WWW'07; the PPJoin
     * family). Unlike [[ngramJaccard]] — which self-joins on EVERY
@@ -1565,37 +1572,8 @@ object Dedup {
     // ranking then degenerates to a plain int-array sort, the
     // candidate join keys become longs, and the verification arrays
     // shrink ~10× vs. carrying shingle strings — the exchange that
-    // dominated the un-encoded form. The rank is the TWO-PHASE
-    // construction (the epochShuffle/packChunks pattern): (df, 8-char
-    // feature prefix) forms ordered contiguous buckets of the (df, w)
-    // total order — every feature sharing a prefix is adjacent under w
-    // — so per-bucket counts cumsum on the bucket-count-sized side,
-    // broadcast back as offsets, and row_number runs only within a
-    // bucket. offset + in-bucket rank == the bare global row_number,
-    // which is what the DuckDB oracle's candidate set pins; the bucket
-    // key MUST therefore be order-preserving under (df, w) — a
-    // hash-salted sub-bucket would bound size better but reorders ties
-    // and desynchronizes the oracle. Residual bound, stated honestly:
-    // at crawl scale most shingles have df=1 and first words are
-    // Zipfian, so the worst (df=1, prefix) bucket holds the trigrams
-    // sharing one common first-word-plus-start-of-second (8 chars
-    // reaches into word two, where 2 chars left several percent of the
-    // vocabulary in one bucket). Past that, the same construction
-    // nests: a second (prefix-within-bucket, offset) layer bounds any
-    // bucket without touching the total order; the offs broadcast is
-    // the next constraint to watch, not the window partition.
-    val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy(col("df"), col("pre"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val bucketed = df.withColumn("pre", substring(col("w"), 1, 8))
-    val offs = bucketed.groupBy(col("df"), col("pre"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum(col("n")).over(wOff), lit(0L)))
-      .select(col("df"), col("pre"), col("offset"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("df"), col("pre")).orderBy(col("w"))
-    val fids = bucketed.join(broadcast(offs), Seq("df", "pre"))
-      .withColumn("fid", (col("offset") + row_number().over(wIn)).cast("long"))
+    // dominated the un-encoded form ([[featureIds]]).
+    val fids = featureIds(df)
     val ranked = tokens.join(fids.select(col("w"), col("fid")), "w")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("fid"))).as("fs"))

@@ -719,34 +719,19 @@ object Relational {
           expr("qs[2]").as("p99_rows"))
     }
     // Exact mode (the documented oracle for the approx default): the
-    // global rank over (n, l_orderkey) is the SAME two-phase bucketed
-    // construction as packChunks/epoch_shuffle, not a single-partition
-    // Window.orderBy — keys range-bucket on the leading sort column n
-    // (equal-width over [min_n, max_n]; bucket id is monotone in n, so
-    // per-bucket ranks + exclusive bucket-count offsets compose to the
-    // identical total order), the per-bucket window partitions on
-    // bucket, and only the `buckets`-row totals side sees a global
-    // window. With few distinct n values the effective bucket count is
-    // bounded by them (group-size profiles are narrow-domained), which
-    // still caps any one partition at one value-class of keys.
+    // global rank over (n, l_orderkey) is TwoPhase.prefix, not a
+    // single-partition Window.orderBy — keys range-bucket on the
+    // leading sort column n (equal-width over [min_n, max_n]). With
+    // few distinct n values the effective bucket count is bounded by
+    // them (group-size profiles are narrow-domained), which still caps
+    // any one partition at one value-class of keys.
     val buckets = 32
     val ext = sizes.agg(min(col("n")).as("mn"), max(col("n")).as("mx"))
     val ranged = sizes.crossJoin(broadcast(ext))
       .withColumn("bucket", expr(
         s"(n - mn) div cast(ceil((mx - mn + 1) / $buckets.0) as bigint)"))
-    val offsets = ranged.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bucket_keys"))
-      .withColumn("offset",
-        coalesce(sum(col("bucket_keys")).over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))
-            .rowsBetween(org.apache.spark.sql.expressions.Window
-              .unboundedPreceding, -1)), lit(0L)))
-      .select(col("bucket"), col("offset"))
-    val ranked = ranged.join(broadcast(offsets), "bucket")
-      .withColumn("rk",
-        (col("offset") + row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("bucket"))
-            .orderBy(col("n"), col("l_orderkey")))).cast("long"))
+    val ranked = TwoPhase.prefix(ranged, Nil, Seq("bucket"),
+      Seq(col("n"), col("l_orderkey")), lit(1L), "rk")
     val qs = ranked.crossJoin(broadcast(n))
       .select(col("n"), col("rk"), col("n_keys"))
       .filter(col("rk") === expr("cast(ceil(n_keys * 0.5) as bigint)") ||

@@ -422,10 +422,9 @@ object Text {
     * exactly what the shared oracle checks.
     *
     * Scale shape: scoring is the q_backoff_score plan; the cut is
-    * the [[pplBuckets]] two-phase bucketed rank over the train
-    * scores (no single-task window) collapsed to ONE collected
-    * scalar — trainer-bounded, the same rule as the IVF/PQ
-    * trainers. */
+    * a [[TwoPhase.prefix]] rank over the train scores collapsed to
+    * ONE collected scalar — trainer-bounded, the same rule as the
+    * IVF/PQ trainers. */
   def lmQualityGate(spark: SparkSession, sf: String): DataFrame = {
     val cut = lmGateCut(spark, sf)
     backoffScoredAll(spark, sf)
@@ -437,11 +436,10 @@ object Text {
   /** The frozen-gate threshold: the ⌊3n/4⌋-th order statistic of the
     * TRAIN split's mean_millibits under the (value, doc_id) total
     * order — shared by the batch row and the streaming twin so the
-    * two cannot disagree about the artifact they ship. Two-phase
-    * bucketed rank (the pplBuckets construction), one scalar
-    * collected. */
+    * two cannot disagree about the artifact they ship.
+    * [[TwoPhase.prefix]] rank over equal-width value ranges whose
+    * extremes are collected on the driver, one scalar collected. */
   private[graft] def lmGateCut(spark: SparkSession, sf: String): Long = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     // SESSION-POOLED (r17): the train slice PROJECTS from the pooled
@@ -467,17 +465,8 @@ object Text {
     val width = math.max(1L, math.ceil((mx - mn + 1).toDouble / 32).toLong)
     val ranged = scored.withColumn("vb",
       expr(s"(mean_millibits - ${mn}L) div ${width}L"))
-    val offsets = ranged.groupBy(col("vb"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum(col("bn")).over(
-          Window.orderBy(col("vb"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("vb"), col("offset"))
-    ranged.join(broadcast(offsets), "vb")
-      .withColumn("rk", col("offset") + row_number().over(
-        Window.partitionBy(col("vb"))
-          .orderBy(col("mean_millibits"), col("doc_id"))))
+    TwoPhase.prefix(ranged, Nil, Seq("vb"),
+        Seq(col("mean_millibits"), col("doc_id")), lit(1L), "rk")
       .filter(col("rk") === lit(k))
       .select(col("mean_millibits"))
       .head().getLong(0)
@@ -758,7 +747,7 @@ object Text {
          FROM documents d LEFT JOIN pd USING (doc_id))"""
   }
 
-  /** Range-bucket width for [[pplBuckets]]' two-phase per-source rank. */
+  /** Range-bucket count for [[pplBuckets]]' per-source rank. */
   private val PplRankBuckets = 32
 
   /** q_ppl_buckets — the CCNet head/middle/tail split (Wenzek et al.
@@ -774,19 +763,16 @@ object Text {
     *
     * The per-source rank is NOT a per-source global window: a source
     * at 100 TB is tens of TB, and `Window.partitionBy(source)` puts
-    * each source on one task. It is the same two-phase bucketed rank
-    * as exact skewProfile/packChunks, per source: equal-width score
-    * buckets from broadcast per-source extremes (bucket id monotone
-    * in score, ties confined to one bucket), per-(source, bucket)
-    * windows bounded by bucket population, and a global window only
-    * over the (source × [[PplRankBuckets]])-row offsets table. The
+    * each source on one task. It is [[TwoPhase.prefix]] by source
+    * over equal-width score buckets from broadcast per-source
+    * extremes (bucket id monotone in score, ties confined to one
+    * bucket), so windows are bounded by bucket population. The
     * tercile is then integer arithmetic on the rank —
     * `(3·(rank−1)) div n_source` — which the oracle replays against a
     * plain ROW_NUMBER, pinning the two-phase construction equal to
     * the single-window total order.
     */
   def pplBuckets(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // persisted: the scored frame (docs × 3 cols) feeds the extremes
     // aggregate, the bucket projection, and the final rank join — the
     // r11 plan-audit lesson; without the pin each reference recomputes
@@ -805,17 +791,8 @@ object Text {
       .withColumn("bucket", expr(
         s"(mean_millibits - mn) div " +
           s"cast(ceil((mx - mn + 1) / $PplRankBuckets.0) as bigint)"))
-    val offsets = ranged.groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("offset",
-        coalesce(sum(col("bn")).over(
-          Window.partitionBy(col("source")).orderBy(col("bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("source"), col("bucket"), col("offset"))
-    ranged.join(broadcast(offsets), Seq("source", "bucket"))
-      .withColumn("rk", col("offset") + row_number().over(
-        Window.partitionBy(col("source"), col("bucket"))
-          .orderBy(col("mean_millibits"), col("doc_id"))))
+    TwoPhase.prefix(ranged, Seq("source"), Seq("bucket"),
+        Seq(col("mean_millibits"), col("doc_id")), lit(1L), "rk")
       .select(col("doc_id"), col("source"), col("mean_millibits"),
         expr("case (3 * (rk - 1)) div ns when 0 then 'head'" +
           " when 1 then 'middle' else 'tail' end").as("ppl_bucket"))
@@ -954,10 +931,8 @@ object Text {
     * Scale shape: scoring is the same one-pass grid as [[nbClassify]];
     * the margin reduction is a per-doc aggregate over ≤|classes| rows
     * (sorted two-smallest, collect bounded by class count). The
-    * NTILE over a global total order is the exact verification form —
-    * at 100 TB the decile edges come from one approx-quantile pass
-    * over margins (the q_equidepth / GK-sketch cut) and the binning
-    * becomes a stateless map against broadcast edges. */
+    * deciles are NTILE arithmetic on a [[TwoPhase.prefix]] rank over
+    * equal-width ranges of −margin, so no task holds the holdout. */
   def nbReliability(spark: SparkSession, sf: String): DataFrame = {
     val grid = nbBitsGridHoldout(spark, sf)
     val perDoc = grid
@@ -969,10 +944,21 @@ object Text {
           .cast("long").as("is_correct"),
         (col("ranked")(1).getField("bits") - col("ranked")(0).getField("bits"))
           .as("margin"))
-    val byConfidence = org.apache.spark.sql.expressions.Window
-      .orderBy(col("margin").desc, col("doc_id"))
-    perDoc
-      .withColumn("tile", ntile(10).over(byConfidence).cast("long"))
+    val buckets = 32
+    val ext = perDoc.agg(min(-col("margin")).as("mn"),
+      max(-col("margin")).as("mx"), count(lit(1)).as("n_docs"))
+    val ranged = perDoc.crossJoin(broadcast(ext))
+      .withColumn("bucket", expr(
+        s"(-margin - mn) div cast(ceil((mx - mn + 1) / $buckets.0) as bigint)"))
+    // NTILE(10) on the rank: with q = n div 10 and r = n mod 10, the
+    // first r tiles hold q + 1 rows and the rest hold q
+    TwoPhase.prefix(ranged, Nil, Seq("bucket"),
+        Seq(col("margin").desc, col("doc_id")), lit(1L), "rk")
+      .withColumn("q", expr("n_docs div 10"))
+      .withColumn("big", expr("(n_docs % 10) * (q + 1)"))
+      .withColumn("tile", expr("case when rk <= big" +
+        " then (rk - 1) div (q + 1) + 1" +
+        " else n_docs % 10 + (rk - 1 - big) div q + 1 end"))
       .groupBy(col("tile"))
       .agg(count(lit(1)).as("n"),
         sum(col("is_correct")).as("n_correct"),

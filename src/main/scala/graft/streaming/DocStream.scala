@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, TwoPhase}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -366,16 +366,13 @@ object DocStream {
     * total SEEN so far — persisted batchId-keyed (overwrite, so a
     * retried micro-batch is idempotent: it re-reads its predecessor's
     * total and re-derives its own). Within a batch the running total
-    * is the two-phase bucketed prefix sum over doc_id ranges (the
-    * packChunks/epoch_shuffle construction — per-bucket sums,
-    * exclusive cumsum over ≤ `buckets` rows, in-bucket windows), never
-    * a single-partition global window; a 100 TB delivery prefix-sums
+    * [[TwoPhase.prefix]] over doc_id ranges, never a
+    * single-partition global window; a 100 TB delivery prefix-sums
     * the same way. Output: admitted docs from BOTH deliveries with
     * their running totals — identical to the one-shot batch replay,
     * which is the oracle. */
   def tokenBudgetViaStream(spark: SparkSession, sf: String,
       budget: Long = StreamTokenBudget, buckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val root = graft.TempDirs.create("graft-budgetstream")
     val outDir = s"$root/out"
     val stateDir = s"$root/state"
@@ -400,18 +397,9 @@ object DocStream {
         val ranged = toks.crossJoin(broadcast(ext))
           .withColumn("bucket", expr(
             s"(doc_id - mn) div cast(ceil((mx - mn + 1) / $buckets.0) as bigint)"))
-        val offsets = ranged.groupBy(col("bucket"))
-          .agg(sum(col("n_tokens")).as("bt"))
-          .withColumn("offset",
-            coalesce(sum(col("bt")).over(
-              Window.orderBy(col("bucket"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("bucket"), col("offset"))
-        val inB = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ranged.join(broadcast(offsets), "bucket")
-          .withColumn("cum_tokens",
-            col("offset") + sum(col("n_tokens")).over(inB) + carried)
+        TwoPhase.prefix(ranged, Nil, Seq("bucket"), Seq(col("doc_id")),
+            col("n_tokens"), "cum")
+          .withColumn("cum_tokens", col("cum") + carried)
           .filter(col("cum_tokens") <= budget)
           .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
           .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")

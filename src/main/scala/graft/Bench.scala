@@ -86,41 +86,27 @@ import org.apache.spark.sql.SparkSession
   * artifact could no longer attribute a regression in any pooled
   * kernel):
   *
-  *   - every [[CachePool.sessionCheckpoint]] BUILD is timed and
+  *   - every [[CachePool]] BUILD (pooled kernels, relations,
+  *     trainers, layouts) is timed and
   *     charged to the query whose timed run paid it; the full
   *     artifact line carries `pool_builds` (kernel, seconds,
   *     charging query@sweep) and the compact line carries
   *     `n_pool_builds` / `pool_build_sec`, so sweep-1 totals
   *     decompose into serve cost + build cost per kernel;
   *   - COLD mode (`SPARK_GRAFT_BENCH_COLD=1`, `bench_cold` in the
-  *     artifact): every cross-query memo — the CachePool session
-  *     checkpoints and generational pins, the fast-mode artifact
-  *     memo, the shingle / dup-method-leg / curate upstreams, the
-  *     IVF-PQ-SQ trainer content caches — is cleared BEFORE EVERY
-  *     QUERY, so each row's time is its full from-parquet operator
-  *     cost. The driver never sets it; the builder runs it once per
-  *     round and commits the artifact (plans/r18/) so pooled-kernel
-  *     regressions stay attributable. (The bucketing / partition-
-  *     pruning written-layout memos are NOT cleared: write-once IS
-  *     the semantics those rows measure, unchanged since their build
-  *     rounds.)
+  *     artifact): [[CachePool.clear]] runs BEFORE EVERY QUERY, which
+  *     drops every cross-query memo — pooled kernels and swap
+  *     generations, the shingle frame and curate upstreams, the
+  *     IVF/PQ/SQ trainers, the fast-mode artifacts, resolved
+  *     relations, and the bucketed / date-partitioned join layouts —
+  *     so each row's time is its full from-parquet operator cost
+  *     (q_bucketed_join and q_dpp_join included: they pay their
+  *     layout write when cold). It is off by default; a cold
+  *     artifact committed per round (plans/r18/) keeps pooled-kernel
+  *     regressions attributable.
   */
 object Bench {
 
-  /** COLD-mode per-query reset: drop every cross-query memo so the
-    * next query computes from the fixture parquet alone. */
-  private def coldReset(): Unit = {
-    CachePool.clearSessionCheckpoints()
-    CachePool.clear()
-    operators.IndexStore.clearArtifactMemo()
-    operators.Dedup.clearShingleCache()
-    operators.Dedup.clearDupMethodLegs()
-    operators.Corpus.clearCurateCache()
-    operators.Corpus.clearCurateV3Cache()
-    operators.Similarity.clearCentroidCache()
-    operators.Similarity.clearPqCache()
-    operators.Similarity.clearSqGridCache()
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -177,7 +163,7 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         wdS: Option[Double], sweepTag: String): (Double, Option[String]) = {
       spark.catalog.clearCache()
-      if (cold) coldReset()
+      if (cold) CachePool.clear()
       val gid = s"bench-$name"
       @volatile var fired = false
       // repeating timer: cancelJobGroup only kills ACTIVE jobs, and a

@@ -22,52 +22,19 @@ object Tables {
     s"$dir/$name.parquet"
   }
 
-  /** Session-level RELATION memo (r18, guide §6 "file listing …
-    * cached per session"): every `spark.read.parquet(path)` call pays
-    * a driver-side directory listing plus a footer read for schema
-    * inference — pure per-query overhead when the same immutable
-    * fixture table is scanned by hundreds of queries in one session
-    * (the catalog-table/file-index caching any production metastore
-    * provides; the bare-path reads here otherwise re-derive it every
-    * call). The memo returns the SAME resolved DataFrame, so each
-    * query still plans its own pruned, pushed-down scan over it — no
-    * data is cached and nothing about any plan changes except that
-    * listing+schema resolution happens once.
-    *
-    * Staleness guard: entries are validated against the table dir's
-    * mtime — a path whose contents were rewritten in place (the
-    * retrain-on-content-change specs do this) re-resolves instead of
-    * serving a file list that no longer exists. Single-session memo
-    * (the shingledCached discipline): a new SparkSession drops every
-    * entry, so a restarted session never receives a Dataset bound to
-    * a dead one. */
-  private var relMemo
-      : Map[String, (SparkSession, Long, DataFrame)] = Map.empty
-
-  private def dirMtime(p: String): Long =
-    try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(p)).toMillis
-    catch { case _: Exception => -1L }
-
-  /** Read one table. Parquet scans get predicate pushdown + column
-    * pruning from Catalyst for free; nothing but the resolved relation
-    * (file listing + schema) is cached here, so each query plans its
-    * own pruned scan.
+  /** Read one table, resolved once per session: every
+    * `spark.read.parquet(path)` pays a driver-side listing plus a
+    * footer read for schema inference, pure per-query overhead when
+    * hundreds of queries scan the same fixture table (the file-index
+    * caching any production metastore provides). The resolved relation is a
+    * [[CachePool]] entry keyed by the table path, so a table rewritten
+    * in place re-resolves instead of serving a file list that no longer
+    * exists. Nothing but the relation (file listing + schema) is
+    * cached: each query still plans its own pruned, pushed-down scan.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    synchronized {
-      val p = path(sfDir, name)
-      val mt = dirMtime(p)
-      relMemo.get(p) match {
-        case Some((s, m, df)) if (s eq spark) && m == mt && mt >= 0 => df
-        case _ =>
-          val df = spark.read.parquet(p)
-          // single-session discipline: drop entries from other sessions
-          relMemo = relMemo.filter(_._2._1 eq spark) + (p -> ((spark, mt, df)))
-          df
-      }
-    }
-
-  /** Drop the relation memo (test/session hygiene). */
-  def clearRelationCache(): Unit = synchronized { relMemo = Map.empty }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
+    CachePool.memo(s"relation:$p", spark, p)(
+      CachePool.Held(spark.read.parquet(p)))
+  }
 }

@@ -32,34 +32,25 @@ object Bucketing {
 
   private def dec(c: org.apache.spark.sql.Column) = Relational.dec(c)
 
-  // session-level memo of written layouts, keyed by (sf, buckets):
-  // the whole point of write-side bucketing is write-once — re-writing
-  // per call would both misstate the economics and accrete a full
-  // table copy in /tmp per invocation (the TempDirs noise problem)
-  private val written = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), (String, String)]
-  def clearWrittenCache(): Unit = written.clear()
-
   /** One-time bucketed write of the two fact tables into a scratch
-    * external location, memoized per (source, bucket count) — repeated
-    * calls (bench sweeps, spec cases) reuse the layout, which is the
-    * semantics bucketing exists to provide. Returns the (lineitem,
-    * orders) table names, suffixed per key so distinct sources/counts
-    * never alias in the session catalog. */
+    * external location, a [[graft.CachePool]] entry per (source,
+    * bucket count, session): the whole point of write-side bucketing
+    * is write-once — re-writing per call would both misstate the
+    * economics and accrete a full table copy in /tmp per invocation.
+    * Returns the (lineitem, orders) table names, suffixed per key so
+    * distinct sources/counts never alias in the session catalog. A
+    * DROP TABLE behind the memo leaves the source's fingerprint
+    * unchanged, so a served pair whose tables left the catalog is
+    * written again under the same names instead of failing every
+    * later call with TABLE_OR_VIEW_NOT_FOUND. */
   private[graft] def writeBucketed(spark: SparkSession, sf: String,
-      buckets: Int): (String, String) =
-    // a memo hit is only good if the tables still exist in THIS
-    // session's catalog — a stop()+rebuild of the SparkSession drops
-    // the catalog while the JVM-level memo survives, and handing out
-    // dangling table names turns every later call into
-    // TABLE_OR_VIEW_NOT_FOUND instead of a re-write
-    written.get((sf, buckets)).filter { case (li, o) =>
-      spark.catalog.tableExists(li) && spark.catalog.tableExists(o)
-    }.getOrElse {
-      val v = writeBucketedUncached(spark, sf, buckets)
-      written.put((sf, buckets), v)
-      v
-    }
+      buckets: Int): (String, String) = {
+    val names = graft.CachePool.memo(s"bucketed:$buckets", spark, sf)(
+      graft.CachePool.Held(writeBucketedUncached(spark, sf, buckets)))
+    if (spark.catalog.tableExists(names._1) &&
+        spark.catalog.tableExists(names._2)) names
+    else writeBucketedUncached(spark, sf, buckets)
+  }
 
   private def writeBucketedUncached(spark: SparkSession, sf: String,
       buckets: Int): (String, String) = {

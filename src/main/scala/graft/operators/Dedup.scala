@@ -41,52 +41,36 @@ object Dedup {
     * minhashRecall, contamination — plus both sides of every self-join
     * inside them) starts from the same scan→normalize→split→shingle
     * derivation; without sharing, the clustering query alone pays it
-    * ~4×. Single-entry memo: requesting a different dataset (or the
-    * same one from a NEW session) drops the previous entry, so a
+    * ~4×. One [[graft.CachePool]] entry (see its doc for the key,
+    * fingerprint and release rules): a different dataset, a rewritten
+    * one or a NEW session releases the previous frame's blocks, so a
     * long-lived session sweeping datasets never accumulates cached
-    * blocks (the r4 leak), and a restarted session never receives a
-    * Dataset bound to a dead one. Re-persists if an external
-    * `catalog.clearCache()` dropped the blocks. ASSUMES the parquet
-    * under the dataset dir is immutable for the JVM's lifetime (true
-    * for the fixture dirs); a path that rewrites a documents dir must
-    * call [[clearShingleCache]]. At 100 TB the same sharing is a
-    * checkpoint to the job's scratch storage, not memory.
+    * blocks (the r4 leak). Re-persists if an external
+    * `catalog.clearCache()` dropped the blocks. At 100 TB the same
+    * sharing is a checkpoint to the job's scratch storage, not memory.
     */
-  private var shingleMemo: Option[(String, DataFrame)] = None
-  private[graft] def shingledCached(spark: SparkSession, sf: String): DataFrame =
-    synchronized {
-      val df = shingleMemo match {
-        case Some((k, cached)) if k == sf && (cached.sparkSession eq spark) =>
-          cached
-        case prev =>
-          prev.foreach(p => scala.util.Try(p._2.unpersist()))
-          // repartition to the SESSION's parallelism before the pin
-          // (r18): the cached frame otherwise inherits the SCAN's
-          // partitioning — a fixture table is one parquet file under
-          // maxPartitionBytes, i.e. ONE partition — and the exact
-          // pair kernels' expensive stage (broadcast pair join +
-          // partial agg) runs map-side over these cached partitions
-          // with NO exchange to re-parallelize it: measured at the 8×
-          // scaling fixture as one task holding ~136 s of CPU while
-          // 31 cores idle (core-count-independent wall-clock, the
-          // signature that exposed it). Hash on doc_id (no sort-
-          // before-repartition cost, deterministic); N derives from
-          // defaultParallelism — scale-adaptive, never a constant.
-          val n = math.max(1, spark.sparkContext.defaultParallelism)
-          val fresh = shingled(Tables.load(spark, sf, "documents"))
-            .repartition(n, col("doc_id"))
-          shingleMemo = Some(sf -> fresh)
-          fresh
-      }
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
+  private[graft] def shingledCached(spark: SparkSession, sf: String): DataFrame = {
+    val df = graft.CachePool.memo("shingled", spark, sf) {
+      // repartition to the SESSION's parallelism before the pin
+      // (r18): the cached frame otherwise inherits the SCAN's
+      // partitioning — a fixture table is one parquet file under
+      // maxPartitionBytes, i.e. ONE partition — and the exact
+      // pair kernels' expensive stage (broadcast pair join +
+      // partial agg) runs map-side over these cached partitions
+      // with NO exchange to re-parallelize it: measured at the 8×
+      // scaling fixture as one task holding ~136 s of CPU while
+      // 31 cores idle (core-count-independent wall-clock, the
+      // signature that exposed it). Hash on doc_id (no sort-
+      // before-repartition cost, deterministic); N derives from
+      // defaultParallelism — scale-adaptive, never a constant.
+      val n = math.max(1, spark.sparkContext.defaultParallelism)
+      val fresh = shingled(Tables.load(spark, sf, "documents"))
+        .repartition(n, col("doc_id"))
+      graft.CachePool.Held(fresh, () => fresh.unpersist())
     }
-
-  /** Drop the shared shingle cache (test/session hygiene). */
-  def clearShingleCache(): Unit = synchronized {
-    shingleMemo.foreach(_._2.unpersist())
-    shingleMemo = None
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df
   }
 
   /** Exact dedup via content hash: every doc mapped to the canonical
@@ -1164,7 +1148,7 @@ object Dedup {
     * round-trip bit-flip surfaces as a pair diff at the gate. */
   def minhashLshSaved(spark: SparkSession, sf: String,
       threshold: Double = 0.5): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(sf, "minhash")(
+    val (root, v) = IndexStore.sessionArtifact(spark, sf, "minhash")(
       IndexStore.saveMinhash(spark, sf, _))
     val signed = IndexStore.loadMinhash(spark, root, Some(v))
     val sh = shingledCached(spark, sf)
@@ -1367,13 +1351,9 @@ object Dedup {
     * IDENTICAL between [[dupMethodAgreement]] and
     * [[dupMethodAgreementLsh]] (only the Jaccard leg differs), so the
     * twins share ONE computation per (dataset, session) instead of
-    * re-running both detector pipelines each (the
-    * [[graft.operators.Corpus]] curateUpstream precedent). The
-    * checkpointed frames are the detectors' OUTPUT pair sets —
-    * near-dup-bounded, tiny at any corpus scale — and localCheckpoint
-    * blocks survive the bench harness's per-query
-    * `catalog.clearCache()`; superseded generations release their
-    * blocks immediately (the [[shingledCached]] rule). */
+    * re-running both detector pipelines each. The pooled frames are
+    * the detectors' OUTPUT pair sets — near-dup-bounded, tiny at any
+    * corpus scale — held as [[graft.CachePool]] entries. */
   private def dupMethodLegs(spark: SparkSession,
       sf: String): (DataFrame, DataFrame) =
     // r17: the detectors themselves are session-pooled now
@@ -1384,11 +1364,6 @@ object Dedup {
     (simhashPairs(spark, sf).select(col("doc_a"), col("doc_b")),
       FeatureHash.hashEmbedNearDup(spark, sf)
         .select(col("doc_a"), col("doc_b")))
-
-  /** Drop the shared method-agreement legs (test/session hygiene) —
-    * now an alias for the pooled-kernel release. */
-  def clearDupMethodLegs(): Unit =
-    graft.CachePool.clearSessionCheckpoints()
 
   /** The agreement arithmetic over an arbitrary (doc_a, doc_b)
     * Jaccard-leg pair frame — exact and LSH-fed rows share it, so the

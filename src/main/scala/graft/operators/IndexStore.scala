@@ -37,29 +37,21 @@ object IndexStore {
     * row once per sweep, and re-TRAINING + re-publishing the same
     * deterministic artifact every sweep times the harness, not the
     * serve path the rows exist to measure. Fast mode publishes once
-    * per (dataset, kind) per JVM and serves later sweeps from the
-    * same versioned bytes — the exact production posture ("train
-    * once, publish v=N, every serving job loads the pin"). Fidelity
-    * surfaces (Verify, specs) keep `fast = false` and rebuild every
-    * call. Assumes the dataset dir is immutable for the JVM lifetime
-    * (the [[Dedup.shingledCached]] contract). */
-  private val artifactMemo =
-    scala.collection.mutable.HashMap.empty[(String, String), (String, Long)]
-
-  private[graft] def sessionArtifact(sfDir: String, kind: String)(
-      build: String => Long): (String, Long) = synchronized {
+    * per (dataset, kind, session) — a [[graft.CachePool]] entry — and
+    * serves later sweeps from the same versioned bytes, the exact
+    * production posture ("train once, publish v=N, every serving job
+    * loads the pin"). Fidelity surfaces (Verify, specs) keep
+    * `fast = false` and rebuild every call. */
+  private[graft] def sessionArtifact(spark: SparkSession, sfDir: String,
+      kind: String)(build: String => Long): (String, Long) = {
     def fresh(): (String, Long) = {
       val root = graft.TempDirs.create(s"graft-$kind-artifact")
       (root, build(root))
     }
     if (graft.BenchMode.fast)
-      artifactMemo.getOrElseUpdate((sfDir, kind), fresh())
+      graft.CachePool.memo(s"artifact:$kind", spark, sfDir)(
+        graft.CachePool.Held(fresh()))
     else fresh()
-  }
-
-  /** Drop the fast-mode artifact memo (test/session hygiene). */
-  private[graft] def clearArtifactMemo(): Unit = synchronized {
-    artifactMemo.clear()
   }
 
   private def nextVersion(spark: SparkSession, root: String): Long =

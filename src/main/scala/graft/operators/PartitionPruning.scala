@@ -24,43 +24,22 @@ import org.apache.spark.sql.types.DecimalType
   */
 object PartitionPruning {
 
-  // session-level memo of the written layout per source — the layout
-  // is write-once by definition; re-writing per call would accrete a
-  // full fact copy in /tmp per invocation
-  private val written =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def clearWrittenCache(): Unit = written.clear()
-
   /** One-time date-partitioned write of the events fact into a
     * scratch location (the write-side layout decision; ~30 daily
-    * partitions at fixture scale), memoized per source. */
+    * partitions at fixture scale), a [[graft.CachePool]] entry per
+    * (source, session): the layout is write-once by definition, and
+    * re-writing per call would accrete a full fact copy in /tmp per
+    * invocation. */
   private[graft] def writePartitionedEvents(spark: SparkSession,
-      sf: String): String = {
-    // validate the memo hit: the layout lives in a scratch dir whose
-    // lifetime is shorter than the JVM-level memo (temp cleanup,
-    // harness re-init) — a dangling path must trigger a re-write, not
-    // a PATH_NOT_FOUND on every later read. Checked through the Hadoop
-    // FileSystem API (not java.io.File): the scratch root may carry a
-    // non-local scheme on a real cluster
-    def live(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      try hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(hp).isDirectory
-      catch { case _: java.io.IOException => false }
+      sf: String): String =
+    graft.CachePool.memo("dpp-events", spark, sf) {
+      val dir = graft.TempDirs.create("graft-dpp")
+      Events.load(spark, sf)
+        .withColumn("event_date", to_date(col("ts")))
+        .write.partitionBy("event_date").mode("overwrite")
+        .parquet(s"$dir/events")
+      graft.CachePool.Held(s"$dir/events")
     }
-    written.get(sf)
-      .filter(live)
-      .getOrElse {
-        val dir = graft.TempDirs.create("graft-dpp")
-        Events.load(spark, sf)
-          .withColumn("event_date", to_date(col("ts")))
-          .write.partitionBy("event_date").mode("overwrite")
-          .parquet(s"$dir/events")
-        val p = s"$dir/events"
-        written.put(sf, p)
-        p
-      }
-  }
 
   /** The dim side: the first week of the calendar, derived from the
     * partitioned layout's OWN partition values (a file-listing read,

@@ -341,7 +341,7 @@ object Similarity {
     * already-materialized top-k frame and never re-scans the source,
     * so it correctly skips the guard; lowering the bound mid-session
     * takes effect at the next cold build
-    * ([[graft.CachePool.clearSessionCheckpoints]] forces one). */
+    * ([[graft.CachePool.clear]] forces one). */
   def knnBruteForce(spark: SparkSession, sf: String, k: Int = 5): DataFrame = {
     // SESSION-POOLED (r17): the guarded O(n·m) broadcast-NL scan is
     // the session's single most re-derived exact kernel — q_knn_brute
@@ -845,33 +845,6 @@ object Similarity {
     slice(transform(array_sort(scored), s => s.getField("cell")), 1, n)
   }
 
-  /** Trained-centroid memo keyed by (dataset path → content version):
-    * k-means output is a persistent index artifact (deterministic per
-    * dataset content), so the index and its recall gate — and repeated
-    * queries — share one training run instead of re-training per query.
-    * The version is an FS-metadata fingerprint (name, length, mtime of
-    * every file under the dataset path — a listing, no data read), so
-    * rewriting the parquet under the same path forces a retrain instead
-    * of serving a stale index for the life of the JVM. One entry per
-    * path: superseded versions are dropped, not accumulated. At 100 TB
-    * the artifact lives next to the data keyed by its snapshot version.
-    */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[Seq[Long]])]
-  def clearCentroidCache(): Unit = centroidCache.clear()
-
-  private def datasetVersion(spark: SparkSession, sf: String): String = {
-    val path = new org.apache.hadoop.fs.Path(Tables.path(sf, "embeddings"))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val s = it.next()
-      parts += s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
-    }
-    parts.sorted.mkString("|")
-  }
-
   /** Deterministic 1-in-[[SampleDenom]] row-hash sample — the actual
     * TABLESAMPLE shape the trainer's 100 TB note promises: a stateless
     * hash filter on the key (no sort, no shuffle, scan-pushable) whose
@@ -881,25 +854,20 @@ object Similarity {
   private[graft] def trainingSample(e: DataFrame): DataFrame =
     e.filter(pmod(xxhash64(col("vec_id")), lit(SampleDenom)) === 0L)
 
+  /** Trained k-means centroids, a [[graft.CachePool]] entry per
+    * (dataset, session): k-means output is a persistent index artifact
+    * (deterministic per dataset content), so the index and its recall
+    * gate — and repeated queries — share one training run, and
+    * rewriting the parquet under the same path forces a retrain
+    * instead of serving a stale index. At 100 TB the artifact lives
+    * next to the data keyed by its snapshot version. */
   private[graft] def centroidsFor(spark: SparkSession,
-      sf: String, sampled: Boolean = false): Seq[Seq[Long]] = {
-    val key = if (sampled) s"$sf#sampled" else sf
-    val version = datasetVersion(spark, sf)
-    centroidCache.get(key) match {
-      case Some((v, c)) if v == version =>
-        System.err.println(s"[graft] centroid index: cache-hit ($key)")
-        c
-      case _ =>
-        val t0 = System.nanoTime()
-        val base = Tables.load(spark, sf, "embeddings")
-        val trained =
-          kmeansCentroidsQ(trainerPool(base, sampled, IvfCells))
-        centroidCache.put(key, (version, trained))
-        System.err.println(f"[graft] centroid index: retrain ($key, ${
-          (System.nanoTime() - t0) / 1e9}%.2f s)")
-        trained
+      sf: String, sampled: Boolean = false): Seq[Seq[Long]] =
+    graft.CachePool.memo(
+        if (sampled) "ivf-centroids#sampled" else "ivf-centroids", spark, sf) {
+      graft.CachePool.Held(kmeansCentroidsQ(
+        trainerPool(Tables.load(spark, sf, "embeddings"), sampled, IvfCells)))
     }
-  }
 
   /** SALTED cell join (r18, guide §2.5), shared by every cell-probed
     * scoring kernel: the bare join key has only [[IvfCells]] (16)
@@ -985,9 +953,10 @@ object Similarity {
   /** q_ann_ivf_saved: IVF search SERVED FROM THE PERSISTED INDEX
     * ARTIFACT — the [[graft.operators.IndexStore]] round trip run
     * end-to-end inside one row: train → publish the versioned
-    * centroid artifact → drop the in-JVM trainer memo (so nothing can
-    * leak from training to serving except the artifact bytes) → load
-    * the pinned version → answer the same top-k as [[annIvf]]. The
+    * centroid artifact → load the pinned version → answer the same
+    * top-k as [[annIvf]] from the LOADED centroids (the serve path
+    * receives them as an argument, so the trainer memo cannot leak
+    * into it). The
     * DuckDB oracle is q_ann_ivf's trainer-replay query, so a
     * save/load bit-flip, a version mispin, or a stale-memo leak moves
     * an assignment and fails the hash. This is the FAISS
@@ -995,9 +964,8 @@ object Similarity {
     * the delta family: [[deltaIvfAssign]] freezes centroids within a
     * run, the store freezes them across sessions. */
   def annIvfSaved(spark: SparkSession, sf: String, k: Int = 3): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(sf, "ivf")(
+    val (root, v) = IndexStore.sessionArtifact(spark, sf, "ivf")(
       IndexStore.saveIvf(spark, sf, _))
-    clearCentroidCache()
     annIvfWith(spark, sf,
       IndexStore.loadIvfCentroids(spark, root, Some(v)), k)
   }
@@ -1291,13 +1259,6 @@ object Similarity {
     books
   }
 
-  /** Content-versioned codebook memo — same contract as the IVF
-    * centroid cache: the codebook is a persistent index artifact,
-    * retrained only when the dataset content changes. */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[Seq[Seq[Long]]])]
-  def clearPqCache(): Unit = pqCache.clear()
-
   /** Trainer input selection: the 1/[[SampleDenom]] hash sample when
     * `sampled`, EXCEPT when the sample undershoots the `minSeeds` the
     * trainer requires (a tiny fixture) — then the full set, so the
@@ -1315,20 +1276,15 @@ object Similarity {
   private[graft] def pqTrainerPool(base: DataFrame,
       sampled: Boolean): DataFrame = trainerPool(base, sampled, PqK)
 
+  /** Trained PQ codebooks — the same [[graft.CachePool]] contract as
+    * [[centroidsFor]]. */
   private[graft] def pqCodebooksFor(spark: SparkSession,
-      sf: String, sampled: Boolean = false): Seq[Seq[Seq[Long]]] = {
-    val key = if (sampled) s"$sf#sampled" else sf
-    val version = datasetVersion(spark, sf)
-    pqCache.get(key) match {
-      case Some((v, b)) if v == version => b
-      case _ =>
-        val trained =
-          pqCodebooksQ(pqTrainerPool(Tables.load(spark, sf, "embeddings"),
-            sampled))
-        pqCache.put(key, (version, trained))
-        trained
+      sf: String, sampled: Boolean = false): Seq[Seq[Seq[Long]]] =
+    graft.CachePool.memo(
+        if (sampled) "pq-codebooks#sampled" else "pq-codebooks", spark, sf) {
+      graft.CachePool.Held(pqCodebooksQ(
+        pqTrainerPool(Tables.load(spark, sf, "embeddings"), sampled)))
     }
-  }
 
   /** PQ encoding: every vector's M codes against the trained
     * codebooks — a shuffle-free map (the codebooks ride the plan as
@@ -1441,28 +1397,14 @@ object Similarity {
   /** SQ8 code levels (1 byte per dimension). */
   private val SqLevels = 256
 
-  private val sqGridCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, (IndexedSeq[Long], IndexedSeq[Long]))]
-  def clearSqGridCache(): Unit = sqGridCache.clear()
-
-  /** Content-versioned SQ8 grid accessor — the centroidsFor/
-    * pqCodebooksFor convention: the grid is a persistent index
-    * artifact of the dataset, so one training per (dataset, content
-    * version) serves every encode/score call in the session instead
-    * of re-scanning the corpus per query. */
+  /** Trained SQ8 grid — the [[centroidsFor]] convention: one training
+    * per (dataset, session) serves every encode/score call instead of
+    * re-scanning the corpus per query. */
   private[graft] def sqGridFor(spark: SparkSession,
-      sf: String): (IndexedSeq[Long], IndexedSeq[Long]) = {
-    val version = datasetVersion(spark, sf)
-    sqGridCache.get(sf) match {
-      case Some((v, g)) if v == version =>
-        System.err.println(s"[graft] sq grid: cache-hit ($sf)")
-        g
-      case _ =>
-        val g = sqGrid(Tables.load(spark, sf, "embeddings"))
-        sqGridCache.put(sf, (version, g))
-        g
+      sf: String): (IndexedSeq[Long], IndexedSeq[Long]) =
+    graft.CachePool.memo("sq-grid", spark, sf) {
+      graft.CachePool.Held(sqGrid(Tables.load(spark, sf, "embeddings")))
     }
-  }
 
   /** Trained SQ8 grid: per-dimension (lo, step) over the corpus, both
     * on the 2²⁶ integer grid so train/encode/score and the DuckDB twin

@@ -401,7 +401,7 @@ object Text {
     * from the same bytes). Same output and oracle as the in-place
     * scorer — the q_nb_classify_saved pattern. */
   def backoffScoreSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(sf, "backoff")(
+    val (root, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
       IndexStore.saveBackoffLm(spark, sf, _))
     val (tri, bigr, uni) = IndexStore.loadBackoffLm(spark, root, Some(v))
     backoffScoreWith(spark, sf, tri, bigr, uni)
@@ -560,7 +560,7 @@ object Text {
   private[graft] def backoffModelShared(spark: SparkSession,
       sf: String): (DataFrame, DataFrame, DataFrame) =
     if (graft.BenchMode.fast) {
-      val (root, v) = IndexStore.sessionArtifact(sf, "backoff")(
+      val (root, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
         IndexStore.saveBackoffLm(spark, sf, _))
       IndexStore.loadBackoffLm(spark, root, Some(v))
     } else backoffModel(spark, sf)
@@ -842,7 +842,7 @@ object Text {
     * trains once, ships as storage, and every scoring job — batch or
     * per-delivery — reads the same bytes. */
   def nbClassifySaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(sf, "nb")(
+    val (root, v) = IndexStore.sessionArtifact(spark, sf, "nb")(
       IndexStore.saveNb(spark, sf, _))
     val (classes, counts) = IndexStore.loadNb(spark, root, Some(v))
     // generational persist: the model frames feed several scoring
@@ -1294,7 +1294,7 @@ object Text {
     * kernel bit-for-bit — same output, same DuckDB oracle as
     * q_winnow_overlap. */
   def winnowOverlapSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(sf, "winnow")(
+    val (root, v) = IndexStore.sessionArtifact(spark, sf, "winnow")(
       IndexStore.saveWinnow(spark, sf, _))
     winnowOverlapFromFps(IndexStore.loadWinnow(spark, root, Some(v)))
   }

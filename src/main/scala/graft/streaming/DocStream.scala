@@ -244,7 +244,7 @@ object DocStream {
     // train+publish rides the session-artifact discipline: bench-mode
     // sweeps reuse the one published model (the *_saved pattern);
     // fidelity surfaces publish a fresh artifact per call
-    val (artifactRoot, v) = IndexStore.sessionArtifact(sf, "backoff")(
+    val (artifactRoot, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
       IndexStore.saveBackoffLm(spark, sf, _))
     val (tri, bigr, uni) = IndexStore.loadBackoffLm(spark, artifactRoot,
       Some(v))
@@ -283,7 +283,7 @@ object DocStream {
     // shared session artifact in bench mode (the *_saved pattern) —
     // model+cut ship-together semantics are unchanged: the cut is
     // re-derived from the loaded tables either way
-    val (artifactRoot, v) = IndexStore.sessionArtifact(sf, "backoff")(
+    val (artifactRoot, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
       IndexStore.saveBackoffLm(spark, sf, _))
     val (tri, bigr, uni) = IndexStore.loadBackoffLm(spark, artifactRoot,
       Some(v))

@@ -293,7 +293,7 @@ class CorpusSpec extends AnyFunSuite {
     import graft.operators.Dedup
     import org.apache.spark.storage.StorageLevel
     try {
-      Dedup.clearShingleCache()
+      graft.CachePool.clear()
       val a = Dedup.shingledCached(spark, sf)
       assert(a.storageLevel != StorageLevel.NONE)
       // same dataset → the same cached instance (structural sharing —
@@ -309,13 +309,13 @@ class CorpusSpec extends AnyFunSuite {
       val other = Dedup.shingledCached(spark, "/root/testdata/sf0.01")
       assert(other.storageLevel != StorageLevel.NONE)
       assert(b.storageLevel == StorageLevel.NONE)
-    } finally Dedup.clearShingleCache()
+    } finally graft.CachePool.clear()
   }
 
   test("every dedup consumer reads the shared shingle cache in its physical plan") {
     import graft.operators.Dedup
     try {
-      Dedup.clearShingleCache()
+      graft.CachePool.clear()
       Dedup.shingledCached(spark, sf) // populate
       // structural sharing, not CacheManager plan-matching luck: each
       // kernel BUILD's executed plan must scan the in-memory relation,
@@ -338,7 +338,7 @@ class CorpusSpec extends AnyFunSuite {
       // pool exists to provide
       assert(Dedup.ngramJaccard(spark, sf) eq Dedup.ngramJaccard(spark, sf))
       assert(Dedup.minhashLsh(spark, sf) eq Dedup.minhashLsh(spark, sf))
-    } finally Dedup.clearShingleCache()
+    } finally graft.CachePool.clear()
   }
 
   test("clusters match a reference union-find across seeded random graphs") {
@@ -489,8 +489,7 @@ class CorpusSpec extends AnyFunSuite {
       // sf0.1 blocks must not outlive this test — shingle persist AND
       // the r17 session-pooled kernel checkpoints (minhash pairs,
       // cluster labels) all hold sf0.1-sized generations here
-      Dedup.clearShingleCache()
-      graft.CachePool.clearSessionCheckpoints()
+      graft.CachePool.clear()
     }
   }
 

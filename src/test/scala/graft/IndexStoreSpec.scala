@@ -22,11 +22,11 @@ class IndexStoreSpec extends AnyFunSuite {
     val v = IndexStore.saveIvf(spark, sf, root)
     // fresh-session simulation: nothing may flow from training to
     // serving except the artifact bytes
-    Similarity.clearCentroidCache()
+    CachePool.clear()
     val loaded = IndexStore.loadIvfCentroids(spark, root, Some(v))
     assert(loaded == trained, "centroid round-trip not bit-identical")
 
-    Similarity.clearCentroidCache()
+    CachePool.clear()
     val served = Similarity.annIvfSaved(spark, sf).collect()
       .map(_.toSeq.toList).toSeq
     assert(served.nonEmpty && served == inPlace,
@@ -50,14 +50,14 @@ class IndexStoreSpec extends AnyFunSuite {
     val books = Similarity.pqCodebooksFor(spark, sf)
     val rootPq = TempDirs.create("graft-pqstore-spec")
     val vPq = IndexStore.savePq(spark, sf, rootPq)
-    Similarity.clearPqCache()
+    CachePool.clear()
     assert(IndexStore.loadPqCodebooks(spark, rootPq, Some(vPq)) == books,
       "PQ codebook round-trip not bit-identical")
 
     val grid = Similarity.sqGridFor(spark, sf)
     val rootSq = TempDirs.create("graft-sqstore-spec")
     val vSq = IndexStore.saveSq(spark, sf, rootSq)
-    Similarity.clearSqGridCache()
+    CachePool.clear()
     assert(IndexStore.loadSqGrid(spark, rootSq, Some(vSq)) == grid,
       "SQ grid round-trip not bit-identical")
   }

@@ -971,7 +971,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("knn kernel pool: any k <= pooled depth is the exact rk-prefix; warm serve bit-identical") {
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     val k5 = Similarity.knnBruteForce(spark, sf, k = 5).collect() // cold build
     val k3 = Similarity.knnBruteForce(spark, sf, k = 3).collect() // warm serve
     assert(k3.map(_.toString).toSeq ==
@@ -1006,57 +1006,41 @@ class OperatorSpec extends AnyFunSuite {
     // are non-replicated and lineage-truncated); every pooled frame is
     // exact longs/strings/IEEE754 doubles, so the round trip must be
     // bit-identical to the default path
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     val viaCk = Similarity.knnBruteForce(spark, sf, k = 5).collect()
-    graft.CachePool.clearSessionCheckpoints()
+    val curateCk = SparkEntry.queries("q_curate_v2")(spark, sf).collect()
+    graft.CachePool.clear()
     spark.conf.set("spark.graft.pool.materialize", "parquet")
     try {
       val viaPq = Similarity.knnBruteForce(spark, sf, k = 5).collect()
       assert(viaPq.map(_.toString).toSeq == viaCk.map(_.toString).toSeq)
+      // the curate upstreams are pooled kernels too
+      val curatePq = SparkEntry.queries("q_curate_v2")(spark, sf).collect()
+      assert(curateCk.nonEmpty &&
+        curatePq.map(_.toString).toSeq == curateCk.map(_.toString).toSeq)
       // warm serves read the scratch parquet — still the exact prefix
       val k3 = Similarity.knnBruteForce(spark, sf, k = 3).collect()
       assert(k3.map(_.toString).toSeq ==
         viaCk.filter(_.getLong(2) <= 3L).map(_.toString).toSeq)
     } finally {
       spark.conf.unset("spark.graft.pool.materialize")
-      graft.CachePool.clearSessionCheckpoints()
-    }
-  }
-
-  test("pool residency bound evicts the least-recently-served kernel; build log charges rebuilds") {
-    graft.CachePool.clearSessionCheckpoints()
-    graft.CachePool.drainBuildLog()
-    spark.conf.set("spark.graft.pool.maxResident", "1")
-    try {
-      Similarity.knnBruteForce(spark, sf, k = 5).count() // build knn
-      Graph.kcore(spark, sf).count() // builds part-co-edges, evicts knn
-      Similarity.knnBruteForce(spark, sf, k = 5).count() // must rebuild
-      val builds = graft.CachePool.drainBuildLog().map(_._1)
-      assert(builds.count(_.startsWith("knn-brute-top")) == 2,
-        s"expected an eviction-forced knn rebuild, got $builds")
-      assert(builds.count(_ == "part-co-edges") == 1)
-      // the rebuilt kernel is resident — a warm serve adds no entry
-      Similarity.knnBruteForce(spark, sf, k = 5).count()
-      assert(graft.CachePool.drainBuildLog().isEmpty)
-    } finally {
-      spark.conf.unset("spark.graft.pool.maxResident")
-      graft.CachePool.clearSessionCheckpoints()
+      graft.CachePool.clear()
     }
   }
 
   test("build log charges a pooled build to its timed region, and later builds untimed") {
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     graft.CachePool.drainBuildLog()
     try {
       graft.CachePool.charging("q_knn@sweep1") {
         Similarity.knnBruteForce(spark, sf, k = 5).count()
       }
-      graft.CachePool.clearSessionCheckpoints()
+      graft.CachePool.clear()
       Similarity.knnBruteForce(spark, sf, k = 5).count() // rebuilt, untimed
       val charges = graft.CachePool.drainBuildLog()
         .filter(_._1.startsWith("knn-brute-top")).map(_._3)
       assert(charges == Seq("q_knn@sweep1", graft.CachePool.Untimed), charges)
-    } finally graft.CachePool.clearSessionCheckpoints()
+    } finally graft.CachePool.clear()
   }
 
   test("exact kernels fail fast when the broadcast side exceeds the configured bound") {
@@ -1064,7 +1048,7 @@ class OperatorSpec extends AnyFunSuite {
     // the knn kernel is session-pooled (r17): the guard runs inside
     // the build closure, so drop any pooled frame first — a warm
     // serve never re-scans and correctly skips the guard
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     spark.conf.set(key, "10") // fixture has 50+ vectors
     try {
       val e1 = intercept[IllegalArgumentException] {
@@ -1805,7 +1789,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("pooled corpus LM scores: the train-slice projection equals scoring the slice directly") {
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     val docs = graft.Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val trainIds = Corpus.splitAssignDf(docs)
@@ -1822,7 +1806,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("pooled winnow fp set equals the direct census (shared substr-census derivation)") {
-    graft.CachePool.clearSessionCheckpoints()
+    graft.CachePool.clear()
     val direct = Text.winnowFpSet(graft.Tables.load(spark, sf, "documents")
         .select(col("doc_id"), col("text"))).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

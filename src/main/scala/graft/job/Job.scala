@@ -153,6 +153,11 @@ case class DataPumpJob(
       .map(v => graft.sources.SnapshotStore.versionDir(targetDir, v))
       .getOrElse(targetDir)
 
+    def srcPathOf(srcSchema: String, table: String): String = operation match {
+      case Operation.Import => s"$importSource/$srcSchema/$table"
+      case _ => sourceTablePath(spark, sourceDir, srcSchema, table)
+    }
+
     // ---- object enumeration (mode scoping + metadata filters) ----
     // (schema, table) pairs. Source layouts: flat `dir/<table>.parquet`
     // under the job's constructor schema, nested `dir/<schema>/<table>
@@ -195,10 +200,6 @@ case class DataPumpJob(
             case Operation.Import => importSource
             case _ => sourceDir
           }
-          def pathOf(s: String, t: String): String = operation match {
-            case Operation.Import => s"$importSource/$s/$t"
-            case _ => sourceTablePath(spark, sourceDir, s, t)
-          }
           def under(path: String, prefix: String): Boolean = {
             val abs = if (prefix.startsWith("/")) prefix
               else s"$srcRoot/$prefix"
@@ -206,7 +207,7 @@ case class DataPumpJob(
               path.startsWith(abs + ".") // flat `<prefix>.parquet`
           }
           schemaScoped.filter { case (s, t) =>
-            prefixes.exists(p => under(pathOf(s, t), p)) }
+            prefixes.exists(p => under(srcPathOf(s, t), p)) }
         }
       case _ => schemaScoped
     }
@@ -314,11 +315,6 @@ case class DataPumpJob(
           startedAt = started, finishedAt = None))
     }
 
-    def srcPathOf(srcSchema: String, table: String): String = operation match {
-      case Operation.Import => s"$importSource/$srcSchema/$table"
-      case _ => sourceTablePath(spark, sourceDir, srcSchema, table)
-    }
-
     def moveOne(srcSchema: String, table: String): ObjectStatus = {
       val t0 = System.nanoTime()
       val targetTable = tableRemaps.getOrElse(table, table)
@@ -411,7 +407,7 @@ case class DataPumpJob(
                     val p = new Path(f)
                     p.getFileSystem(conf).getFileStatus(p).getLen
                   }.sum
-                  math.min(1L << 20, math.max(1L, (sz + b - 1) / b)).toInt
+                  partsFor(sz, b)
                 case None => parallel
               }
             var rows = 0L; var bytes = 0L
@@ -455,8 +451,7 @@ case class DataPumpJob(
             // index share.)
             val nParts = targetFileBytes match {
               case Some(b) =>
-                val srcBytes = pathBytes(spark, srcPath)
-                math.min(1L << 20, math.max(1L, (srcBytes + b - 1) / b)).toInt
+                partsFor(pathBytes(spark, srcPath), b)
               case None => parallel
             }
             val shape = layout(df, nParts)
@@ -708,6 +703,11 @@ case class DataPumpJob(
         .fold(r)(r.schema).parquet(path)
     }
   }
+
+  /** TARGET_FILE_SIZE part count: `bytes` in files of at most
+    * `target` bytes, at least one file and at most 2²⁰. */
+  private def partsFor(bytes: Long, target: Long): Int =
+    math.min(1L << 20, math.max(1L, (bytes + target - 1) / target)).toInt
 
   /** How a frame is laid out for a write of exactly n part files, as a
     * function applied to the (observed) frame. With k the partition

@@ -743,16 +743,7 @@ object Dedup {
     * spot (a boundary-straddling repeat shorter than any aligned full
     * chunk), which [[graft.operators.Text.substrDedup]] closes. */
   private[graft] def spanDedupFrom(docs: DataFrame, span: Int = 10): DataFrame = {
-    val chunks = docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) > 0)
-      .select(col("doc_id"), posexplode(
-        transform(
-          sequence(lit(0L),
-            floor((size(col("ws")) + (span - 1)).cast("long") / span) - 1L),
-          i => array_join(slice(col("ws"), (i * span + 1).cast("int"), lit(span)),
-            " "))).as(Seq("pos", "chunk")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("chunk"))
+    val chunks = spanChunks(docs, span)
     // global first occurrence per chunk content; (doc_id, pos) packed
     // into one long so the map side combines to one row per chunk.
     // Censused and joined on the 64-bit chunk FINGERPRINT (the
@@ -775,6 +766,23 @@ object Dedup {
         sum(when(!col("keep"), 1L).otherwise(0L)).as("dropped"))
       .orderBy(col("doc_id"))
   }
+
+  /** The aligned `span`-word chunks of every non-empty document:
+    * (doc_id, pos, chunk), chunk `pos` holding words
+    * [pos·span, (pos+1)·span) — shuffle-free (array slice, no word
+    * explode). Shared by [[spanDedupFrom]] and [[boilerplate]], whose
+    * DuckDB twins chunk the same way. */
+  private def spanChunks(docs: DataFrame, span: Int): DataFrame =
+    docs
+      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) > 0)
+      .select(col("doc_id"), posexplode(
+        transform(
+          sequence(lit(0L),
+            floor((size(col("ws")) + (span - 1)).cast("long") / span) - 1L),
+          i => array_join(slice(col("ws"), (i * span + 1).cast("int"), lit(span)),
+            " "))).as(Seq("pos", "chunk")))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("chunk"))
 
   /** Document-frequency floor for [[boilerplate]]: a chunk present in
     * ≥ this many DISTINCT documents is boilerplate (the C4 "line in
@@ -801,18 +809,7 @@ object Dedup {
     * the hash key).
     */
   def boilerplate(spark: SparkSession, sf: String, span: Int = 10): DataFrame = {
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val chunks = docs
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) > 0)
-      .select(col("doc_id"), posexplode(
-        transform(
-          sequence(lit(0L),
-            floor((size(col("ws")) + (span - 1)).cast("long") / span) - 1L),
-          i => array_join(slice(col("ws"), (i * span + 1).cast("int"), lit(span)),
-            " "))).as(Seq("pos", "chunk")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("chunk"))
+    val chunks = spanChunks(Tables.load(spark, sf, "documents"), span)
     // document frequency per chunk content, censused and joined on a
     // 64-bit FINGERPRINT of the chunk (the q_dup_rate_by_source
     // pattern): the census exchange carries 8-byte hashes instead of

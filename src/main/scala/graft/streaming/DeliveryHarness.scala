@@ -1,19 +1,25 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-/** The ONE two-delivery file-stream replay harness, shared by every
-  * streaming twin that feeds a bounded corpus through the engine as
-  * ordered deliveries ([[DocStream.nearDupViaStream]],
-  * [[DocStream.nbClassifyViaStream]],
-  * [[EmbedStream.embedDriftViaStream]]): each half lands as one
-  * parquet file, file mtimes are pinned so `maxFilesPerTrigger=1`
-  * replays them in delivery order, and `onBatch` runs per micro-batch
-  * (callers write batchId-keyed subdirs — the retry-idempotence
-  * contract). A delivery-mechanics fix lands here once, not three
-  * times.
+/** THE bounded-stream runner every streaming twin goes through.
+  *
+  *  - [[drain]] is the one query driver: foreachBatch sink,
+  *    AvailableNow trigger, checkpoint, block until drained, stop —
+  *    plus the save/restore of the session confs the query captures at
+  *    start. A query lifecycle fix, and the per-incarnation fixed cost,
+  *    live here once.
+  *  - [[replay]] is the one delivery replay: a bounded corpus lands as
+  *    ordered deliveries, one parquet file each, file mtimes pinned so
+  *    `maxFilesPerTrigger=1` replays them in delivery order (delivery
+  *    i arrives as micro-batch i), optionally with a PROCESS RESTART
+  *    between two incarnations of the query.
+  *  - [[tableStream]] streams a whole sf table as one file source.
+  *
+  * `onBatch` writes batchId-keyed [[StreamState]] subtrees — the
+  * retry-idempotence contract is the store's.
   */
 object DeliveryHarness {
 
@@ -22,7 +28,7 @@ object DeliveryHarness {
     * not java.io.File — the scratch root may carry a non-local scheme
     * on a real cluster, where File.listFiles() returns null and the
     * ordering pin would silently become a no-op. */
-  private[streaming] def writeDelivery(df: DataFrame, dir: String,
+  private def writeDelivery(df: DataFrame, dir: String,
       mtime: Long): Unit = {
     df.coalesce(1).write.mode("overwrite").parquet(dir)
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -33,108 +39,93 @@ object DeliveryHarness {
       .foreach(st => fs.setTimes(st.getPath, mtime, -1))
   }
 
-  /** THE one reader→(optional transform)→foreachBatch scaffold: every
-    * delivery-replay variant builds its query here, so a mechanics
-    * fix (reader option, glob, trigger, checkpoint wiring) lands
-    * once. `transform` lets a stateful caller ride the stream itself
-    * (e.g. transformWithState before the sink); the default is the
-    * raw batch feed. Drains AvailableNow and stops. */
-  private def runIncarnation(spark: SparkSession, landing: String,
-      ckpt: String, schema: StructType, transform: DataFrame => DataFrame,
+  /** Run the bounded streaming query `stream` to completion: every
+    * micro-batch goes to `onBatch` (on the driver), the query drains
+    * AvailableNow from checkpoint `ckpt` and stops. `confs` are set for
+    * the run and restored (or unset) after it — the query captures
+    * them at start, and the stream-execution thread reads them
+    * asynchronously while planning batch 0, so they are held until
+    * the query has stopped. */
+  private[streaming] def drain(stream: DataFrame, ckpt: String,
+      confs: Map[String, String] = Map.empty,
+      mode: OutputMode = OutputMode.Append())(
       onBatch: (DataFrame, Long) => Unit): Unit = {
-    val q = transform(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$landing/*"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onBatch(batch, batchId); ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
+    val spark = stream.sparkSession
+    def setAll(kv: Map[String, Option[String]]): Unit = kv.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    setAll(confs.map { case (k, v) => k -> Some(v) })
+    try {
+      val q = stream.writeStream
+        .outputMode(mode)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          onBatch(batch, batchId); ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try { q.processAllAvailable() } finally q.stop()
+    } finally setAll(saved)
   }
 
   /** Land each part of `parts` in order under `root/landing`, stream
-    * them back one file per trigger (AvailableNow — delivery i arrives
-    * as micro-batch i), run `onBatch` for each, block until drained.
-    * The caller owns `root` (TempDirs-created) so it can hang sibling
-    * dirs (index, out) off the same lifetime. The long-ingest harness:
-    * the compaction receipts feed ≥5 deliveries through this. */
-  def runDeliveries(spark: SparkSession, root: String,
-      parts: Seq[DataFrame], schema: StructType,
-      onBatch: (DataFrame, Long) => Unit): Unit = {
-    val landing = s"$root/landing"
-    parts.zipWithIndex.foreach { case (d, i) =>
-      writeDelivery(d, s"$landing/d$i", (i + 1) * 1000000L)
-    }
-    runIncarnation(spark, landing, s"$root/ckpt", schema,
-      identity, onBatch)
-  }
-
-  /** Land `d0` then `d1` under `root/landing`, stream them back one
-    * file per trigger (AvailableNow), run `onBatch` for each, block
-    * until drained. */
-  def runTwoDeliveries(spark: SparkSession, root: String,
-      d0: DataFrame, d1: DataFrame, schema: StructType,
-      onBatch: (DataFrame, Long) => Unit): Unit =
-    runDeliveries(spark, root, Seq(d0, d1), schema, onBatch)
-
-  /** [[runDeliveries]] with a PROCESS RESTART after the first
-    * `restartAfter` deliveries drain: the first incarnation stops (its
+    * them back one file per trigger and run `onBatch` for each
+    * micro-batch, blocking until drained. The landing schema is the
+    * first part's (file sources read every column as nullable). The
+    * caller owns `root` (TempDirs-created) so it can hang its stores
+    * off the same lifetime.
+    *
+    * `restartAfter = Some(m)` is the PROCESS RESTART: the first
+    * incarnation drains the first m deliveries and stops (its
     * in-memory state is gone), the remaining parts land while nothing
-    * runs, and a NEW query recovers from the same checkpoint — batch
-    * ids must continue, nothing re-reads, nothing skips (the
-    * [[runTwoDeliveriesWithRestart]] contract on the long-ingest
-    * shape). */
-  def runDeliveriesWithRestart(spark: SparkSession, root: String,
-      parts: Seq[DataFrame], schema: StructType,
-      onBatch: (DataFrame, Long) => Unit, restartAfter: Int): Unit = {
-    require(restartAfter > 0 && restartAfter < parts.length,
+    * runs, and a NEW query recovers from the same checkpoint. The
+    * file-source offset log must resume exactly where the first
+    * incarnation committed — nothing re-reads, nothing skips, batch
+    * ids continue — which is the recovery contract a long-running
+    * ingest relies on; specs pin restarted runs bit-identical to the
+    * single-process ones.
+    *
+    * `transform` rides the stream before the sink, in every
+    * incarnation — a stateful stage (transformWithState) must rebuild
+    * its store state in the second incarnation from the checkpoint.
+    * `confs` go to [[drain]]. */
+  def replay(spark: SparkSession, root: String, parts: Seq[DataFrame],
+      restartAfter: Option[Int] = None,
+      transform: DataFrame => DataFrame = identity,
+      confs: Map[String, String] = Map.empty)(
+      onBatch: (DataFrame, Long) => Unit): Unit = {
+    require(restartAfter.forall(m => m > 0 && m < parts.length),
       s"restartAfter $restartAfter outside (0, ${parts.length})")
     val landing = s"$root/landing"
-    parts.take(restartAfter).zipWithIndex.foreach { case (d, i) =>
-      writeDelivery(d, s"$landing/d$i", (i + 1) * 1000000L)
+    val schema = parts.head.schema
+    def land(from: Int, ds: Seq[DataFrame]): Unit =
+      ds.zipWithIndex.foreach { case (d, i) =>
+        writeDelivery(d, s"$landing/d${from + i}", (from + i + 1) * 1000000L)
+      }
+    def incarnation(): Unit =
+      drain(transform(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$landing/*")), s"$root/ckpt", confs)(onBatch)
+    val m = restartAfter.getOrElse(parts.length)
+    land(0, parts.take(m))
+    incarnation()
+    if (m < parts.length) {
+      land(m, parts.drop(m))
+      incarnation()
     }
-    runIncarnation(spark, landing, s"$root/ckpt", schema,
-      identity, onBatch)
-    parts.drop(restartAfter).zipWithIndex.foreach { case (d, i) =>
-      val j = restartAfter + i
-      writeDelivery(d, s"$landing/d$j", (j + 1) * 1000000L)
-    }
-    runIncarnation(spark, landing, s"$root/ckpt", schema,
-      identity, onBatch)
   }
 
-  /** [[runTwoDeliveries]] with a PROCESS RESTART between the
-    * deliveries: delivery 0 is drained by one query which then stops
-    * (the simulated crash/redeploy — its in-memory state is gone),
-    * delivery 1 lands while nothing is running, and a NEW query
-    * recovers from the same checkpoint. Structured Streaming's
-    * file-source offset log must resume exactly where the first
-    * incarnation committed — delivery 0 is not re-read, delivery 1 is
-    * not skipped, batch ids continue — and because callers write
-    * batchId-keyed subdirs, even a re-delivered batch would overwrite
-    * itself rather than double-count. This is the recovery contract a
-    * long-running 100 TB ingest actually relies on; specs pin the
-    * restarted run bit-identical to the single-process one.
-    *
-    * `transform` rides the stream through the restart — a stateful
-    * stage here (transformWithState) must rebuild its store state in
-    * the second incarnation from the checkpoint, which is exactly
-    * what the RocksDB session receipt exercises.
-    */
-  def runTwoDeliveriesWithRestart(spark: SparkSession, root: String,
-      d0: DataFrame, d1: DataFrame, schema: StructType,
-      onBatch: (DataFrame, Long) => Unit,
-      transform: DataFrame => DataFrame = identity): Unit = {
-    val landing = s"$root/landing"
-    writeDelivery(d0, s"$landing/d0", 1000000L)
-    runIncarnation(spark, landing, s"$root/ckpt", schema,
-      transform, onBatch)
-    writeDelivery(d1, s"$landing/d1", 2000000L)
-    runIncarnation(spark, landing, s"$root/ckpt", schema,
-      transform, onBatch)
+  /** Streaming view of one sf table: a file source over the sf dir
+    * filtered to the table's file (FileStreamSource needs a directory;
+    * a real deployment points at a landing dir). */
+  private[streaming] def tableStream(spark: SparkSession, sf: String,
+      table: String): DataFrame = {
+    val schema = spark.read.parquet(Tables.path(sf, table)).schema
+    spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(sf.stripSuffix("/"))
   }
 }

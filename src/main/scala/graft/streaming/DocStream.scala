@@ -37,14 +37,41 @@ object DocStream {
     StructField("band_key", LongType),
     StructField("doc_id", LongType),
     StructField("minhash",
-      org.apache.spark.sql.types.ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+      org.apache.spark.sql.types.ArrayType(LongType))))
 
   private val OutSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("status", StringType),
-    StructField("matched_id", LongType),
-    StructField("batch_id", LongType)))
+    StructField("matched_id", LongType)))
+
+  /** The (doc_id, text) columns of the documents table — the landing
+    * shape of every document delivery. */
+  private def documents(spark: SparkSession, sf: String): DataFrame =
+    Tables.load(spark, sf, "documents").select(col("doc_id"), col("text"))
+
+  /** Two doc_id-range deliveries: ids below `frac` of the id span (the
+    * already-ingested corpus), then the rest. */
+  private def splitAt(docs: DataFrame, frac: Double): Seq[DataFrame] = {
+    val w = docs.agg(floor((max(col("doc_id")) + 1) * frac).cast("long"))
+      .head().getLong(0)
+    Seq(docs.filter(col("doc_id") < w), docs.filter(col("doc_id") >= w))
+  }
+
+  /** [[CompactDeliveries]] equal-width doc_id-range deliveries (the last
+    * one takes the remainder) — the split the compact oracles replay. */
+  private def idRanges(docs: DataFrame): Seq[DataFrame] = {
+    val parts = CompactDeliveries
+    val wdt = math.max(1L,
+      docs.agg(floor((max(col("doc_id")) + 1) / parts).cast("long"))
+        .head().getLong(0))
+    val delivery = least(expr(s"doc_id div ${wdt}L"), lit(parts - 1L))
+    (0 until parts).map(i => docs.filter(delivery === i))
+  }
+
+  /** Two deliveries by id parity — any holdout shape splits into two
+    * halves whose union is the whole frame. */
+  private def byParity(df: DataFrame): Seq[DataFrame] =
+    Seq(df.filter(expr("doc_id % 2 = 0")), df.filter(expr("doc_id % 2 = 1")))
 
   /** Classify one arriving delivery against the persistent index and
     * grow the index — the foreachBatch body, usable directly by a
@@ -55,29 +82,12 @@ object DocStream {
     * after its own index subdir landed (crash between index write and
     * checkpoint commit) must not classify against its own
     * fingerprints, or every retried doc would self-match and the
-    * retry's output would diverge from the first attempt's. A row
-    * predicate, not a subdir-name filter, so it survives
-    * [[StreamState.compactState]] renaming subtrees. */
+    * retry's output would diverge from the first attempt's
+    * ([[StreamState.before]]). */
   def classifyBatch(spark: SparkSession, batch: DataFrame,
       indexDir: String, threshold: Double, batchId: Long): DataFrame = {
     val banded = Dedup.signedBanded(batch)
-    // Hadoop FS, not java.io: the index dir is object storage / HDFS
-    // in any real deployment
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the index grows one `batch-<id>` subdir per accepted delivery
-    // (see [[nearDupViaStream]]: per-delivery overwrite makes a
-    // retried delivery idempotent), so emptiness and reads are both
-    // recursive
-    val indexNonEmpty = fs.exists(idxPath) &&
-      fs.globStatus(new org.apache.hadoop.fs.Path(idxPath, "batch-*"))
-        .nonEmpty
-    val index =
-      (if (indexNonEmpty)
-        StreamState.readState(spark, indexDir, IndexSchema)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], IndexSchema))
-        .filter(col("batch_id") < batchId)
+    val index = StreamState.before(spark, indexDir, IndexSchema, batchId)
 
     val corpusMatch = banded.join(
         index.select(col("band"), col("band_key"),
@@ -128,48 +138,27 @@ object DocStream {
     val root = graft.TempDirs.create("graft-docstream")
     val indexDir = s"$root/index"
     val outDir = s"$root/out"
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .mkdirs(idxPath)
-
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val w = docs.agg(floor((max(col("doc_id")) + 1) * 0.8).cast("long"))
-      .head().getLong(0)
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(col("doc_id") < w), docs.filter(col("doc_id") >= w),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        // batchId-keyed overwrite, not append: a micro-batch retried
-        // after a transient failure re-writes ITS OWN subdir instead
-        // of double-appending rows into the result and the index (the
-        // foreachBatch exactly-once contract is ours to provide)
-        val out = classifyBatch(spark, batch, indexDir, threshold, batchId)
-          .withColumn("batch_id", lit(batchId))
-        out.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        Dedup.signedBanded(batch)
-          .select(col("band"), col("band_key"), col("doc_id"), col("minhash"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
+    DeliveryHarness.replay(spark, root, splitAt(documents(spark, sf), 0.8)) {
+      (batch, batchId) =>
+        StreamState.append(outDir,
+          classifyBatch(spark, batch, indexDir, threshold, batchId), batchId)
+        StreamState.append(indexDir, Dedup.signedBanded(batch)
+          .select(IndexSchema.map(f => col(f.name)): _*), batchId)
         // own subtree EXCLUDED from the consumed set: a retry after
         // this compaction ran must still overwrite batch-N in place,
         // never find its rows already folded into the compacted copy
         // (which would duplicate them for every later probe)
         if (compactIndex)
           StreamState.compactState(spark, indexDir, IndexSchema,
-            excludeSubdir = Some(s"batch-$batchId"))
-        ()
-      })
+            ownBatch = Some(batchId))
+    }
 
     // the NEW delivery's classification (delivery 0 bootstrapped the
     // index). Returned parquet-backed, not collected: a real delivery
     // is executor-sized, and the temp dir outlives the frame via the
     // TempDirs shutdown hook — no driver materialization, no litter.
-    spark.read.schema(OutSchema)
-      .option("recursiveFileLookup", "true").parquet(outDir)
-      .filter(col("batch_id") === 1L)
-      .select(col("doc_id"), col("status"), col("matched_id"))
+    StreamState.read(spark, outDir, OutSchema.add("batch_id", LongType))
+      .filter(col("batch_id") === 1L).drop("batch_id")
       .orderBy(col("doc_id"))
   }
 
@@ -205,23 +194,16 @@ object DocStream {
     // multi-dataset caller must hold its own persist for the stream's
     // lifetime.
     val (classes, counts) = Text.nbModelShared(spark, sf)
+    def score(b: DataFrame) = Text.nbScore(Text.nbTokenized(b), classes, counts)
 
-    val docs = Tables.load(spark, sf, "documents")
-    val held = docs.filter(expr(Text.NbHoldoutExpr))
+    val held = Tables.load(spark, sf, "documents")
+      .filter(expr(Text.NbHoldoutExpr))
     // the two deliveries must PARTITION the holdout (their union is
-    // what the shared NbClassifySql oracle scores); parity does that
-    // for any holdout shape
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      held.filter(expr("doc_id % 2 = 0")),
-      held.filter(expr("doc_id % 2 = 1")), docs.schema,
-      { (batch: DataFrame, batchId: Long) =>
-        // batchId-keyed overwrite: a retried delivery re-writes its
-        // own subdir (idempotent), same contract as nearDupViaStream
-        Text.nbScore(Text.nbTokenized(batch), classes, counts)
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      })
-
-    spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+    // what the shared NbClassifySql oracle scores)
+    DeliveryHarness.replay(spark, root, byParity(held)) { (batch, batchId) =>
+      StreamState.append(outDir, score(batch), batchId)
+    }
+    StreamState.read(spark, outDir, score(held).schema)
       .orderBy(col("doc_id"))
   }
 
@@ -250,18 +232,12 @@ object DocStream {
       Some(v))
     val Seq(triC, bigrC, uniC) =
       graft.CachePool.swap("backoff-stream-model", tri, bigr, uni)
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        Text.backoffScoreDocs(batch, triC, bigrC, uniC)
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      })
-    spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+    def score(b: DataFrame) = Text.backoffScoreDocs(b, triC, bigrC, uniC)
+    val docs = documents(spark, sf)
+    DeliveryHarness.replay(spark, root, byParity(docs)) { (batch, batchId) =>
+      StreamState.append(outDir, score(batch), batchId)
+    }
+    StreamState.read(spark, outDir, score(docs).schema)
       .orderBy(col("doc_id"))
   }
 
@@ -293,20 +269,14 @@ object DocStream {
     // whichever serve path scored the train slice (exact-integer
     // artifact round-trip), so the twin shares the pooled cut trainer
     val cut = Text.lmGateCut(spark, sf)
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(expr("doc_id % 2 = 0")),
-      docs.filter(expr("doc_id % 2 = 1")),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        Text.backoffScoreDocs(batch, triC, bigrC, uniC)
-          .select(col("doc_id"), col("mean_millibits"))
-          .filter(col("mean_millibits") <= lit(cut))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      })
-    spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+    def admit(b: DataFrame) = Text.backoffScoreDocs(b, triC, bigrC, uniC)
+      .select(col("doc_id"), col("mean_millibits"))
+      .filter(col("mean_millibits") <= lit(cut))
+    val docs = documents(spark, sf)
+    DeliveryHarness.replay(spark, root, byParity(docs)) { (batch, batchId) =>
+      StreamState.append(outDir, admit(batch), batchId)
+    }
+    StreamState.read(spark, outDir, admit(docs).schema)
       .orderBy(col("doc_id"))
   }
 
@@ -327,10 +297,7 @@ object DocStream {
     * Misra-Gries pass per delivery. */
   def heavyHittersViaStream(spark: SparkSession, sf: String,
       k: Int = graft.operators.Corpus.HeavyHittersK): DataFrame = {
-    val schema = spark.read.parquet(Tables.path(sf, "documents")).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(if (sf.endsWith("/")) sf.dropRight(1) else sf)
+    val stream = DeliveryHarness.tableStream(spark, sf, "documents")
       .select(explode(regexp_extract_all(lower(col("text")),
         lit("[a-z]+"), lit(0))).as("w"))
       .groupBy(col("w"))
@@ -363,9 +330,11 @@ object DocStream {
     * scalar carried between deliveries.
     *
     * State across micro-batches is exactly that scalar — the token
-    * total SEEN so far — persisted batchId-keyed (overwrite, so a
-    * retried micro-batch is idempotent: it re-reads its predecessor's
-    * total and re-derives its own). Within a batch the running total
+    * total SEEN so far (admitted or not, the prefix rule's
+    * denominator): each delivery stores its own count, and the carry
+    * is their sum over strictly earlier deliveries
+    * ([[StreamState.before]]), so a retried micro-batch re-derives the
+    * same carry. Within a batch the running total is
     * [[TwoPhase.prefix]] over doc_id ranges, never a
     * single-partition global window; a 100 TB delivery prefix-sums
     * the same way. Output: admitted docs from BOTH deliveries with
@@ -375,20 +344,12 @@ object DocStream {
       budget: Long = StreamTokenBudget, buckets: Int = 32): DataFrame = {
     val root = graft.TempDirs.create("graft-budgetstream")
     val outDir = s"$root/out"
-    val stateDir = s"$root/state"
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val w = docs.agg(floor((max(col("doc_id")) + 1) * 0.5).cast("long"))
-      .head().getLong(0)
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(col("doc_id") < w), docs.filter(col("doc_id") >= w),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        val carried =
-          if (batchId == 0L) 0L
-          else spark.read.parquet(s"$stateDir/batch-${batchId - 1}")
-            .head().getLong(0)
+    val seenDir = s"$root/seen"
+    val seenSchema = StructType(Seq(StructField("seen", LongType)))
+    DeliveryHarness.replay(spark, root, splitAt(documents(spark, sf), 0.5)) {
+      (batch, batchId) =>
+        val carried = StreamState.before(spark, seenDir, seenSchema, batchId)
+          .agg(coalesce(sum(col("seen")), lit(0L))).head().getLong(0)
         val toks = batch.select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"))
         // two-phase prefix sum in doc_id order, offset by the carry
@@ -397,187 +358,170 @@ object DocStream {
         val ranged = toks.crossJoin(broadcast(ext))
           .withColumn("bucket", expr(
             s"(doc_id - mn) div cast(ceil((mx - mn + 1) / $buckets.0) as bigint)"))
-        TwoPhase.prefix(ranged, Nil, Seq("bucket"), Seq(col("doc_id")),
-            col("n_tokens"), "cum")
-          .withColumn("cum_tokens", col("cum") + carried)
-          .filter(col("cum_tokens") <= budget)
-          .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        // the carry: tokens SEEN (admitted or not) — the prefix rule's
-        // denominator; one row, batchId-keyed overwrite
+        StreamState.append(outDir,
+          TwoPhase.prefix(ranged, Nil, Seq("bucket"), Seq(col("doc_id")),
+              col("n_tokens"), "cum")
+            .withColumn("cum_tokens", col("cum") + carried)
+            .filter(col("cum_tokens") <= budget)
+            .select(col("doc_id"), col("n_tokens"), col("cum_tokens")),
+          batchId)
         val seen = toks.agg(coalesce(sum(col("n_tokens")), lit(0L)))
           .head().getLong(0)
-        spark.range(1).select(lit(carried + seen).as("total"))
-          .write.mode("overwrite").parquet(s"$stateDir/batch-$batchId")
-      })
-    spark.read.schema(StructType(Seq(
+        StreamState.append(seenDir,
+          spark.range(1).select(lit(seen).as("seen")), batchId)
+    }
+    StreamState.read(spark, outDir, StructType(Seq(
         StructField("doc_id", LongType),
         StructField("n_tokens", LongType),
         StructField("cum_tokens", LongType))))
-      .option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy(col("doc_id"))
   }
 
   private val WinnowIndexSchema = StructType(Seq(
     StructField("doc_id", LongType),
-    StructField("fp", LongType),
+    StructField("fp", LongType)))
+
+  private val WinnowOutSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("status", StringType),
+    StructField("matched_id", LongType),
+    StructField("n_shared", LongType),
     StructField("batch_id", LongType)))
 
   /** The winnow fingerprint index visible to batch `batchId`: rows
     * from STRICTLY EARLIER batches only (the same retry-idempotence
-    * row predicate as [[classifyBatch]] — a retried delivery must not
-    * classify against its own `batch-N` subdir, or every doc would
-    * self-match and the retry's output would diverge from the first
-    * attempt's; a stored-column filter, so it survives compaction).
-    * The `batch_id` column is dropped on the way out — probes see the
-    * logical (doc_id, fp) index. */
+    * rule as [[classifyBatch]] — a retried delivery must not classify
+    * against its own `batch-N` subdir, or every doc would self-match
+    * and the retry's output would diverge from the first attempt's).
+    * Probes see the logical (doc_id, fp) index. */
   private[graft] def winnowIndexBefore(spark: SparkSession,
       indexDir: String, batchId: Long): DataFrame =
-    StreamState.readState(spark, indexDir, WinnowIndexSchema)
-      .filter(col("batch_id") < batchId)
-      .drop("batch_id")
+    StreamState.before(spark, indexDir, WinnowIndexSchema, batchId)
 
-  /** q_delta_winnow's STREAMING twin — substring-overlap triage at
-    * ingest over a PERSISTENT winnowing fingerprint index (the same
-    * storage-resident-index shape as [[nearDupViaStream]]'s LSH band
-    * store): the corpus delivery bootstraps the index, each following
-    * micro-batch fingerprints its documents with the shared
-    * `WinnowPack` codegen pass, classifies them against the grown
-    * index through the SAME `Text.classifyAgainstIndex` kernel as the
-    * batch twin (one fp-equality probe — O(collisions), never a
-    * corpus scan), and appends its own batchId-keyed fingerprint
-    * subdir (overwrite — a retried delivery is idempotent). Same
-    * output and DuckDB oracle as q_delta_winnow: the streaming and
-    * batch paths must agree row-for-row. */
-  def winnowViaStream(spark: SparkSession, sf: String): DataFrame = {
+  /** The winnowing ingest both winnow twins run: each micro-batch
+    * fingerprints its documents with the shared `WinnowPack` codegen
+    * pass, classifies them against the index of strictly earlier
+    * deliveries through the SAME `Text.classifyAgainstIndex` kernel as
+    * the batch twin (one fp-equality probe — O(collisions), never a
+    * corpus scan, df-cap computed over the index as of that delivery),
+    * and appends its own fingerprints. `compact` runs the
+    * [[CompactTiers]]-tiered [[StreamState.compactState]] pass after
+    * each delivery (own subtree EXCLUDED: a retry after compaction
+    * must overwrite batch-N in place, never find its first attempt's
+    * rows already folded into the compacted copy — duplication for
+    * every later probe's df census). Returns every post-bootstrap
+    * classification with its `batch_id`. */
+  private def winnowIngest(spark: SparkSession, parts: Seq[DataFrame],
+      compact: Boolean, restartAfter: Option[Int] = None): DataFrame = {
     import graft.operators.Text
     val root = graft.TempDirs.create("graft-winnowstream")
     val indexDir = s"$root/index"
     val outDir = s"$root/out"
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(idxPath)
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val w = docs.agg(floor((max(col("doc_id")) + 1) * 0.8).cast("long"))
-      .head().getLong(0)
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(col("doc_id") < w), docs.filter(col("doc_id") >= w),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
+    DeliveryHarness.replay(spark, root, parts, restartAfter) {
+      (batch, batchId) =>
         val fps = Text.winnowFpSet(batch)
-        Text.classifyAgainstIndex(batch.select(col("doc_id")), fps,
-            winnowIndexBefore(spark, indexDir, batchId))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        fps.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
-      })
-    spark.read.schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("status", StringType),
-        StructField("matched_id", LongType),
-        StructField("n_shared", LongType),
-        StructField("batch_id", LongType))))
-      .option("recursiveFileLookup", "true").parquet(outDir)
-      .filter(col("batch_id") === 1L)
-      .select(col("doc_id"), col("status"), col("matched_id"),
-        col("n_shared"))
-      .orderBy(col("doc_id"))
+        StreamState.append(outDir,
+          Text.classifyAgainstIndex(batch.select(col("doc_id")), fps,
+            winnowIndexBefore(spark, indexDir, batchId)), batchId)
+        StreamState.append(indexDir, fps, batchId)
+        if (compact)
+          StreamState.compactState(spark, indexDir, WinnowIndexSchema,
+            ownBatch = Some(batchId), maxCompactedTrees = CompactTiers)
+    }
+    StreamState.read(spark, outDir, WinnowOutSchema)
+      .filter(col("batch_id") >= 1L)
   }
+
+  /** q_delta_winnow's STREAMING twin — substring-overlap triage at
+    * ingest over a PERSISTENT winnowing fingerprint index (the same
+    * storage-resident-index shape as [[nearDupViaStream]]'s LSH band
+    * store): the corpus delivery bootstraps the index and the second
+    * delivery is classified against it ([[winnowIngest]]). Same
+    * output and DuckDB oracle as q_delta_winnow: the streaming and
+    * batch paths must agree row-for-row. */
+  def winnowViaStream(spark: SparkSession, sf: String): DataFrame =
+    winnowIngest(spark, splitAt(documents(spark, sf), 0.8), compact = false)
+      .drop("batch_id")
+      .orderBy(col("doc_id"))
 
   private val SubstrIndexSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("pos", LongType),
-    StructField("fp", LongType),
-    StructField("batch_id", LongType)))
+    StructField("fp", LongType)))
 
   private val SubstrTextSchema = StructType(Seq(
     StructField("doc_id", LongType),
-    StructField("text", StringType),
+    StructField("text", StringType)))
+
+  private val SpanSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("span_start", LongType),
+    StructField("span_end", LongType),
+    StructField("span_chars", LongType),
     StructField("batch_id", LongType)))
 
-  /** q_delta_substr's STREAMING twin — EXACT-SUBSTRING span audit at
-    * ingest over a persistent POSITIONED-fingerprint index (the
-    * winnow family's [[winnowViaStream]] shape, at the substring
-    * family's fidelity): the corpus delivery bootstraps two
+  /** The exact-substring ingest both substring twins run, over two
     * storage-resident stores — the (doc_id, pos, fp) anchor index and
-    * the (doc_id, text) store the extend-and-verify step reads — and
-    * each following micro-batch fingerprints its documents with the
-    * shared `WinnowPack` pass, probes the index through the SAME
+    * the (doc_id, text) store the extend-and-verify step reads. Each
+    * micro-batch after the bootstrap fingerprints its documents with
+    * the shared `WinnowPack` pass and probes both stores as of
+    * strictly earlier deliveries through the SAME
     * `Text.substrSpansAgainstIndex` kernel as the batch twin (anchor
     * join = fp equality, O(collisions); the extension join touches
-    * only anchor-HIT corpus docs' texts, never the whole store), and
-    * appends its own batchId-keyed subdirs (overwrite — a retried
-    * delivery is idempotent; the batch_id < current visibility
-    * predicate is a stored column, so it survives compaction).
-    * Same output and DuckDB oracle as q_delta_substr: the streaming
-    * and batch paths must agree row-for-row — the winnowing
-    * guarantee is indifferent to which path found the anchor. */
-  def substrViaStream(spark: SparkSession, sf: String): DataFrame = {
+    * only anchor-HIT corpus docs' texts, never the whole store); every
+    * micro-batch then appends to both stores. `compact` runs the
+    * tiered compaction pass on BOTH stores after each delivery (own
+    * subtree excluded, as in [[winnowIngest]]). Returns every span
+    * with its `batch_id`. */
+  private def substrIngest(spark: SparkSession, parts: Seq[DataFrame],
+      compact: Boolean): DataFrame = {
     import graft.operators.Text
     val root = graft.TempDirs.create("graft-substrstream")
     val indexDir = s"$root/index"
     val textDir = s"$root/texts"
     val outDir = s"$root/out"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(indexDir, textDir).foreach(d =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(d)))
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val w = docs.agg(floor((max(col("doc_id")) + 1) * 0.8).cast("long"))
-      .head().getLong(0)
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      docs.filter(col("doc_id") < w), docs.filter(col("doc_id") >= w),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        val fps = Text.substrFpSet(batch)
-        // bootstrap (batch 0) only seeds the two stores: the final
-        // read filters to batch 1, so probing the still-empty index
-        // and writing a discarded span output would pay a full
-        // WinnowPack fingerprint + join pass for nothing (r15
-        // advisory)
-        if (batchId > 0) {
-          val idxFps = StreamState.readState(spark, indexDir, SubstrIndexSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          val idxTexts = StreamState.readState(spark, textDir, SubstrTextSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          Text.substrSpansAgainstIndex(batch, fps, idxFps, idxTexts)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-        fps.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$textDir/batch-$batchId")
-      })
-    spark.read.schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("span_start", LongType),
-        StructField("span_end", LongType),
-        StructField("span_chars", LongType),
-        StructField("batch_id", LongType))))
-      .option("recursiveFileLookup", "true").parquet(outDir)
-      .filter(col("batch_id") === 1L)
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        col("span_chars"))
-      .orderBy(col("doc_id"), col("span_start"))
+    DeliveryHarness.replay(spark, root, parts) { (batch, batchId) =>
+      val fps = Text.substrFpSet(batch)
+      // bootstrap (batch 0) only seeds the two stores: probing the
+      // still-empty index would pay a full WinnowPack fingerprint +
+      // join pass for an output nobody reads
+      if (batchId > 0)
+        StreamState.append(outDir, Text.substrSpansAgainstIndex(batch, fps,
+          StreamState.before(spark, indexDir, SubstrIndexSchema, batchId),
+          StreamState.before(spark, textDir, SubstrTextSchema, batchId)),
+          batchId)
+      StreamState.append(indexDir, fps, batchId)
+      StreamState.append(textDir, batch, batchId)
+      if (compact)
+        Seq(indexDir -> SubstrIndexSchema, textDir -> SubstrTextSchema)
+          .foreach { case (dir, schema) =>
+            StreamState.compactState(spark, dir, schema,
+              ownBatch = Some(batchId), maxCompactedTrees = CompactTiers)
+          }
+    }
+    StreamState.read(spark, outDir, SpanSchema)
   }
+
+  /** q_delta_substr's STREAMING twin — EXACT-SUBSTRING span audit at
+    * ingest over a persistent POSITIONED-fingerprint index (the
+    * winnow family's [[winnowViaStream]] shape, at the substring
+    * family's fidelity, [[substrIngest]]): the corpus delivery
+    * bootstraps the stores and the second delivery is audited against
+    * them. Same output and DuckDB oracle as q_delta_substr: the
+    * streaming and batch paths must agree row-for-row — the winnowing
+    * guarantee is indifferent to which path found the anchor. */
+  def substrViaStream(spark: SparkSession, sf: String): DataFrame =
+    substrIngest(spark, splitAt(documents(spark, sf), 0.8), compact = false)
+      .drop("batch_id")
+      .orderBy(col("doc_id"), col("span_start"))
 
   /** q_stream_substr_compact: the LONG-INGEST substring twin with the
     * recurring [[StreamState.compactState]] maintenance pass LIVE on
     * BOTH stores — [[winnowCompactViaStream]]'s receipt at the
     * substring family's fidelity: [[CompactDeliveries]] doc_id-range
-    * deliveries stream through, each micro-batch audits its documents
-    * against the accumulated positioned-fingerprint index + text
-    * store through the shared `substrSpansAgainstIndex` kernel, then
-    * BOTH stores are rewritten into size-targeted files (own subtree
-    * excluded — the retry-idempotence rule), so every probe after the
-    * first reads stores that have been compacted at least once. The
-    * batch_id visibility predicate rides a stored COLUMN on both
+    * deliveries stream through [[substrIngest]], so every probe after
+    * the first reads stores that have been compacted at least once.
+    * The batch_id visibility predicate rides a stored COLUMN on both
     * stores, which is exactly why it survives the rename-based
     * rewrite — the receipt this row exists to pin: compaction is a
     * pure layout change, bit-identical output, fewer files.
@@ -587,70 +531,11 @@ object DocStream {
     * incremental semantics brute-force (spans against STRICTLY
     * earlier deliveries only). */
   def substrCompactViaStream(spark: SparkSession, sf: String,
-      compactIndex: Boolean = true): DataFrame = {
-    import graft.operators.Text
-    val parts = CompactDeliveries
-    val root = graft.TempDirs.create("graft-substrcompact")
-    val indexDir = s"$root/index"
-    val textDir = s"$root/texts"
-    val outDir = s"$root/out"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(indexDir, textDir).foreach(d =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(d)))
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val wdt = math.max(1L,
-      docs.agg(floor((max(col("doc_id")) + 1) / parts).cast("long"))
-        .head().getLong(0))
-    val delivery = least(expr(s"doc_id div ${wdt}L"), lit(parts - 1L))
-    DeliveryHarness.runDeliveries(spark, root,
-      (0 until parts).map(i => docs.filter(delivery === i)),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        val fps = Text.substrFpSet(batch)
-        // bootstrap delivery seeds the stores only — its span output
-        // is filtered out below (batch_id >= 1), so the empty-index
-        // probe is skipped (the substrViaStream rule); compaction
-        // still runs so delivery 1 already reads a compacted store
-        if (batchId > 0) {
-          val idxFps = StreamState.readState(spark, indexDir, SubstrIndexSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          val idxTexts = StreamState.readState(spark, textDir, SubstrTextSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          Text.substrSpansAgainstIndex(batch, fps, idxFps, idxTexts)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-        fps.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$textDir/batch-$batchId")
-        if (compactIndex) {
-          // tiered (r18): fold raw subtrees per delivery, existing
-          // compacted trees only at the CompactTiers bound
-          StreamState.compactState(spark, indexDir, SubstrIndexSchema,
-            excludeSubdir = Some(s"batch-$batchId"),
-            maxCompactedTrees = CompactTiers)
-          StreamState.compactState(spark, textDir, SubstrTextSchema,
-            excludeSubdir = Some(s"batch-$batchId"),
-            maxCompactedTrees = CompactTiers)
-        }
-        ()
-      })
-    spark.read.schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("span_start", LongType),
-        StructField("span_end", LongType),
-        StructField("span_chars", LongType),
-        StructField("batch_id", LongType))))
-      .option("recursiveFileLookup", "true").parquet(outDir)
-      .filter(col("batch_id") >= 1L)
+      compactIndex: Boolean = true): DataFrame =
+    substrIngest(spark, idRanges(documents(spark, sf)), compactIndex)
       .select(col("doc_id"), col("batch_id").as("delivery"),
         col("span_start"), col("span_end"), col("span_chars"))
       .orderBy(col("doc_id"), col("span_start"))
-  }
 
   /** DuckDB replay of [[substrCompactViaStream]]'s INCREMENTAL
     * semantics: the brute-force L-gram definition with the shared
@@ -723,18 +608,15 @@ object DocStream {
   /** q_stream_winnow_compact: the LONG-INGEST winnowing twin with the
     * recurring [[StreamState.compactState]] maintenance pass LIVE in
     * the loop — [[CompactDeliveries]] doc_id-range deliveries stream
-    * through, each micro-batch classifies against the accumulated
-    * fingerprint index (same `Text.classifyAgainstIndex` kernel and
-    * df-cap as the batch twin, df computed over the index as of that
-    * delivery), appends its own batchId-keyed fingerprint subdir, and
-    * then the accumulated RAW subtrees are compacted into
-    * size-targeted files ([[CompactTiers]]-tiered, r18: prior
-    * compacted trees fold only at the tier bound) — so every probe
-    * after the first runs against a store that has been rewritten at
-    * least once, and the index dir's subtree count stays bounded by
-    * the tier bound instead of growing one per delivery. The
-    * batch_id retry/visibility predicate rides a stored COLUMN, which
-    * is exactly why it survives the rename-based rewrite.
+    * through [[winnowIngest]], and after each one the accumulated RAW
+    * subtrees are compacted into size-targeted files
+    * ([[CompactTiers]]-tiered: prior compacted trees fold only at the
+    * tier bound) — so every probe after the first runs against a store
+    * that has been rewritten at least once, and the index dir's
+    * subtree count stays bounded by the tier bound instead of growing
+    * one per delivery. The batch_id retry/visibility predicate rides a
+    * stored COLUMN, which is exactly why it survives the rename-based
+    * rewrite.
     *
     * Output: every post-bootstrap document's classification with its
     * delivery number — replayed exactly by a DuckDB oracle that
@@ -751,63 +633,12 @@ object DocStream {
     * column, not a directory name). */
   def winnowCompactViaStream(spark: SparkSession, sf: String,
       compactIndex: Boolean = true,
-      restartAfter: Option[Int] = None): DataFrame = {
-    import graft.operators.Text
-    val parts = CompactDeliveries
-    val root = graft.TempDirs.create("graft-winnowcompact")
-    val indexDir = s"$root/index"
-    val outDir = s"$root/out"
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .mkdirs(idxPath)
-    val docs = Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val wdt = math.max(1L,
-      docs.agg(floor((max(col("doc_id")) + 1) / parts).cast("long"))
-        .head().getLong(0))
-    val delivery = least(expr(s"doc_id div ${wdt}L"), lit(parts - 1L))
-    val run: (SparkSession, String, Seq[DataFrame], StructType,
-      (DataFrame, Long) => Unit) => Unit = restartAfter match {
-      case Some(m) =>
-        DeliveryHarness.runDeliveriesWithRestart(_, _, _, _, _, m)
-      case None => DeliveryHarness.runDeliveries
-    }
-    run(spark, root,
-      (0 until parts).map(i => docs.filter(delivery === i)),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))),
-      { (batch: DataFrame, batchId: Long) =>
-        val fps = Text.winnowFpSet(batch)
-        Text.classifyAgainstIndex(batch.select(col("doc_id")), fps,
-            winnowIndexBefore(spark, indexDir, batchId))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        fps.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
-        // the maintenance pass runs INSIDE the delivery loop — the
-        // next micro-batch probes the rewritten store. Own subtree
-        // EXCLUDED: a retry after compaction must overwrite batch-N
-        // in place, never find its first attempt's rows already
-        // folded into the compacted copy (duplication for every
-        // later probe's df census)
-        if (compactIndex)
-          StreamState.compactState(spark, indexDir, WinnowIndexSchema,
-            excludeSubdir = Some(s"batch-$batchId"),
-            maxCompactedTrees = CompactTiers)
-        ()
-      })
-    spark.read.schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("status", StringType),
-        StructField("matched_id", LongType),
-        StructField("n_shared", LongType),
-        StructField("batch_id", LongType))))
-      .option("recursiveFileLookup", "true").parquet(outDir)
-      .filter(col("batch_id") >= 1L)
+      restartAfter: Option[Int] = None): DataFrame =
+    winnowIngest(spark, idRanges(documents(spark, sf)), compactIndex,
+        restartAfter)
       .select(col("doc_id"), col("batch_id").as("delivery"),
         col("status"), col("matched_id"), col("n_shared"))
       .orderBy(col("doc_id"))
-  }
 
   /** DuckDB replay of [[winnowCompactViaStream]]'s INCREMENTAL
     * semantics: the shared winnow selection CTEs, documents assigned

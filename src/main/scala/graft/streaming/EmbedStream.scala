@@ -46,29 +46,30 @@ object EmbedStream {
     ref.persist()
     val refNorm = ref.agg(
       sqrt(sum(col("rs") * col("rs")).cast("double")).as("rnorm"))
+    def drift(batch: DataFrame): DataFrame = {
+      val meta = batch.agg(
+        pmod(min(col("vec_id")), lit(2L)).as("delivery"),
+        count(lit(1)).as("n_vecs"))
+      sums(batch).withColumnRenamed("s", "bs")
+        .join(broadcast(ref), "pos")
+        .agg(sum(col("bs") * col("rs")).as("d"),
+          sum(col("bs") * col("bs")).as("bn"))
+        .crossJoin(broadcast(refNorm))
+        .crossJoin(broadcast(meta))
+        .select(col("delivery"), col("n_vecs"),
+          (col("d").cast("double") /
+            (sqrt(col("bn").cast("double")) * col("rnorm")))
+            .as("drift_cos"))
+    }
 
-    DeliveryHarness.runTwoDeliveries(spark, root,
-      vecs.filter(expr("vec_id % 2 = 0")),
-      vecs.filter(expr("vec_id % 2 = 1")), vecs.schema,
-      { (batch: DataFrame, batchId: Long) =>
-        val meta = batch.agg(
-          pmod(min(col("vec_id")), lit(2L)).as("delivery"),
-          count(lit(1)).as("n_vecs"))
-        sums(batch).withColumnRenamed("s", "bs")
-          .join(broadcast(ref), "pos")
-          .agg(sum(col("bs") * col("rs")).as("d"),
-            sum(col("bs") * col("bs")).as("bn"))
-          .crossJoin(broadcast(refNorm))
-          .crossJoin(broadcast(meta))
-          .select(col("delivery"), col("n_vecs"),
-            (col("d").cast("double") /
-              (sqrt(col("bn").cast("double")) * col("rnorm")))
-              .as("drift_cos"))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      })
+    DeliveryHarness.replay(spark, root,
+      Seq(vecs.filter(expr("vec_id % 2 = 0")),
+        vecs.filter(expr("vec_id % 2 = 1")))) { (batch, batchId) =>
+      StreamState.append(outDir, drift(batch), batchId)
+    }
     ref.unpersist()
 
-    spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+    StreamState.read(spark, outDir, drift(vecs).schema)
       .orderBy(col("delivery"))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import java.sql.Timestamp
 
@@ -27,13 +27,8 @@ object EventStream {
     * [[graft.operators.Events.normalizeTs]]). */
   def readEvents(spark: SparkSession, sf: String): DataFrame = {
     graft.Sessions.ensureEventTimestampCompat(spark)
-    val schema = spark.read.parquet(Tables.path(sf, "events")).schema
-    // FileStreamSource needs a directory: stream the sf dir filtered
-    // to the events file (a real deployment points at a landing dir)
     graft.operators.Events.normalizeTs(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(if (sf.endsWith("/")) sf.dropRight(1) else sf))
+      DeliveryHarness.tableStream(spark, sf, "events"))
   }
 
   /** Tumbling 1-hour windowed counts with a 2-hour watermark —
@@ -78,53 +73,42 @@ object EventStream {
     runToCompletion(spark, stream, OutputMode.Append(), Seq("event_id"))
   }
 
+  /** Stateful-operator partition count: it should track KEY
+    * CARDINALITY, not input parallelism — these aggregations group over
+    * handfuls of keys, and 32 state-store partitions cost ~1 s of setup
+    * per query for nothing. At production keyspaces, size this up. */
+  private val StateConfs = Map("spark.sql.shuffle.partitions" -> "4")
+
+  /** [[StateConfs]] on the RocksDB state store — the backend
+    * transformWithState requires (see [[sessionsViaTws]]). */
+  private val RocksDbConfs = StateConfs +
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   /** Drive a bounded streaming query to completion into a parquet
-    * scratch sink and hand back the result as a parquet-backed,
+    * scratch store and hand back the result as a parquet-backed,
     * deterministically-ordered DataFrame. Shared by every
-    * streaming-twin queries() entry.
+    * streaming-twin queries() entry over a whole table.
     *
     * foreachBatch→parquet, not a memory sink: the memory sink holds
     * the whole result on the driver, which caps the twin at driver-
     * sized outputs — the parquet sink is the shape a real delivery
     * lands in (executor-parallel write, consumer reads lazily).
-    * Complete-mode batches overwrite (each batch carries the full
-    * updated result); Append-mode batches append. The scratch dir
-    * outlives the returned frame via the TempDirs shutdown hook. */
+    * Append-mode batches each land their own batchId-keyed subtree;
+    * every Complete-mode batch carries the full updated result, so all
+    * of them land in slot 0 and each replaces the last. The scratch
+    * dir outlives the returned frame via the TempDirs shutdown hook. */
   private[graft] def runToCompletion(spark: SparkSession, stream: DataFrame,
       mode: OutputMode, sortCols: Seq[String],
-      statePartitions: Int = 4): DataFrame = {
+      confs: Map[String, String] = StateConfs): DataFrame = {
     val root = graft.TempDirs.create("graft-eventstream")
     val outDir = s"$root/out"
-    new java.io.File(outDir).mkdirs()
-    val saveMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
-    // Stateful-operator partition count should track KEY CARDINALITY,
-    // not input parallelism: these aggregations group over handfuls of
-    // keys, and 32 state-store partitions cost ~1 s of setup per query
-    // for nothing. The conf is captured by the query at start and
-    // restored after — at production keyspaces, size this up.
-    // (Held until the bounded run completes: the stream-execution
-    // thread reads the conf asynchronously while planning batch 0.)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = stream.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Complete mode overwrites the whole dir each batch (already
-          // idempotent); Append batches each overwrite a batchId-keyed
-          // subdir, so a retried micro-batch can never double-append —
-          // the foreachBatch exactly-once contract is ours to provide.
-          if (saveMode == "overwrite") batch.write.mode("overwrite").parquet(outDir)
-          else batch.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.read.schema(stream.schema)
-      .option("recursiveFileLookup", "true").parquet(outDir)
+    val complete = mode == OutputMode.Complete()
+    DeliveryHarness.drain(stream, s"$root/ckpt", confs, mode) {
+      (batch, batchId) =>
+        StreamState.append(outDir, batch, if (complete) 0L else batchId)
+    }
+    StreamState.read(spark, outDir, stream.schema)
       .orderBy(sortCols.map(col): _*)
   }
 
@@ -251,18 +235,6 @@ object EventStream {
       .orderBy(col("event_id"))
   }
 
-  /** Run a streaming query into an in-memory sink until all available
-    * input is processed (batch-driven smoke for local verification). */
-  def runToMemory(df: DataFrame, name: String): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory").queryName(name)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
-    q.processAllAvailable()
-    q
-  }
-
   // ---- stateful sessionization (mapGroupsWithState) ----------------
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -378,9 +350,8 @@ object EventStream {
     * stream's OWN output rebuilds the exact q_sessionize shape, so the
     * same DuckDB window oracle pins the full pipeline end-to-end.
     *
-    * The provider conf is set for the bounded run and restored — it is
-    * captured by the query at start, the same contract runToCompletion
-    * already uses for the state partition count. */
+    * The provider conf is set for the bounded run and restored
+    * ([[RocksDbConfs]], through [[DeliveryHarness.drain]]). */
   /** The TWS sessionization stage — ONE definition shared by the
     * single-process twin and the restart receipt, so the processor
     * wiring (key, time mode, output mode) cannot drift between them. */
@@ -408,7 +379,8 @@ object EventStream {
     val assigned = sessionized(readEvents(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value")))
-    sessionAggregate(runBoundedOnRocksDb(spark, assigned))
+    sessionAggregate(runToCompletion(spark, assigned, OutputMode.Append(),
+      Seq("event_id"), RocksDbConfs))
   }
 
   /** [[sessionsViaTws]] with a PROCESS RESTART mid-feed — the receipt
@@ -451,48 +423,17 @@ object EventStream {
         (b.getLong(0) + b.getLong(1)) / 2
       } else (pair.getStruct(0).getLong(0) + pair.getStruct(0).getLong(1)) / 2
 
-    val prevProv = spark.conf.getOption(ProviderConfKey)
-    val prevShuf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(ProviderConfKey, RocksDbProvider)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      // the shared harness carries the TWS stage through the restart
-      // (transform rides the stream, so the second incarnation must
-      // rebuild the processor's state store from the checkpoint)
-      DeliveryHarness.runTwoDeliveriesWithRestart(spark, root,
-        evs.filter(mcol <= cut), evs.filter(mcol > cut), evs.schema,
-        { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch-$id"); () },
-        transform = sessionized)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuf)
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderConfKey, v)
-        case None => spark.conf.unset(ProviderConfKey)
-      }
+    // the shared harness carries the TWS stage through the restart
+    // (transform rides the stream, so the second incarnation must
+    // rebuild the processor's state store from the checkpoint)
+    DeliveryHarness.replay(spark, root,
+      Seq(evs.filter(mcol <= cut), evs.filter(mcol > cut)),
+      restartAfter = Some(1), transform = sessionized,
+      confs = RocksDbConfs) { (batch, batchId) =>
+      StreamState.append(outDir, batch, batchId)
     }
-    sessionAggregate(
-      spark.read.option("recursiveFileLookup", "true").parquet(outDir))
-  }
-
-  private val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Bounded replay on the RocksDB state store, provider conf saved
-    * and restored around the run — the single definition of the conf
-    * dance both transformWithState twins use (it is captured by the
-    * query at start, the runToCompletion contract). */
-  private def runBoundedOnRocksDb(spark: SparkSession,
-      streamed: DataFrame): DataFrame = {
-    val prev = spark.conf.getOption(ProviderConfKey)
-    spark.conf.set(ProviderConfKey, RocksDbProvider)
-    try runToCompletion(spark, streamed, OutputMode.Append(),
-      Seq("event_id"))
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderConfKey, v)
-      case None => spark.conf.unset(ProviderConfKey)
-    }
+    sessionAggregate(StreamState.read(spark, outDir,
+      org.apache.spark.sql.Encoders.product[SessionEvent].schema))
   }
 
   // ---- stateful SCD2 version assignment (transformWithState) -------
@@ -559,6 +500,7 @@ object EventStream {
       .toDF()
     // dimension rows come from THE shared aggregation (Events.scd2
     // calls the same method), so the twins cannot drift
-    graft.operators.Events.scd2Dimension(runBoundedOnRocksDb(spark, assigned))
+    graft.operators.Events.scd2Dimension(runToCompletion(spark, assigned,
+      OutputMode.Append(), Seq("event_id"), RocksDbConfs))
   }
 }

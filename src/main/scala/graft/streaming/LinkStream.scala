@@ -42,15 +42,11 @@ object LinkStream {
     StructField("bal", LongType),
     StructField("kind", StringType)))
 
-  /** [[RecordSchema]] plus the `batch_id` lineage column the index
-    * store physically carries (the retry-idempotence filter key).
-    * Terminal reads use the bare [[RecordSchema]] — parquet column
-    * pruning skips the extra column. */
-  private val IndexedRecordSchema =
-    StructType(RecordSchema.fields :+ StructField("batch_id", LongType))
+  private val EdgeSchema = StructType(Seq(
+    StructField("doc_a", LongType), StructField("doc_b", LongType)))
 
-  /** `restart = true` swaps in
-    * [[DeliveryHarness.runTwoDeliveriesWithRestart]]: the query STOPS
+  /** `restart = true` replays with a restart
+    * ([[DeliveryHarness.replay]]'s `restartAfter`): the query STOPS
     * after the registry delivery and a fresh incarnation recovers the
     * dirty feed from the checkpoint — the output must be bit-identical
     * (spec-pinned), proving the linkage state (record index + edge
@@ -69,91 +65,57 @@ object LinkStream {
     * `compactIndex = true` runs the [[StreamState.compactState]]
     * maintenance pass LIVE at the start of each foreachBatch body —
     * so every post-bootstrap probe reads a store that has already
-    * been rewritten at least once. The index store compacts under
-    * [[IndexedRecordSchema]] (NOT the bare [[RecordSchema]]): the
-    * rewrite must carry the `batch_id` lineage column, or the
-    * strictly-less retry filter would read NULL off the compacted
-    * rows and silently drop the whole compacted index from every
-    * later probe. */
+    * been rewritten at least once. The rewrite carries the stored
+    * `batch_id` column, so the strictly-earlier probe filter still
+    * sees the compacted rows (spec-pinned). */
   private[graft] def runStream(spark: SparkSession, sf: String,
       restart: Boolean = false, compactIndex: Boolean = false): (String, String) = {
     val root = graft.TempDirs.create("graft-linkstream")
     val indexDir = s"$root/index"
     val edgeDir = s"$root/edges"
-    // batch 0 probes the index before anything has written it — the
-    // empty dir must exist for the schema-pinned read
-    val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-    idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .mkdirs(idxPath)
-
     val recs = Linkage.records(spark, sf)
-    val run: (SparkSession, String, DataFrame, DataFrame, StructType,
-      (DataFrame, Long) => Unit) => Unit =
-      if (restart)
-        DeliveryHarness.runTwoDeliveriesWithRestart(_, _, _, _, _, _)
-      else DeliveryHarness.runTwoDeliveries
-    run(spark, root,
-      recs.filter(col("kind") === "orig"),
-      recs.filter(col("kind") =!= "orig"), RecordSchema,
-      { (batch: DataFrame, batchId: Long) =>
-        // the maintenance pass runs BEFORE this batch's own writes and
-        // EXCLUDES its own subtrees — a retried delivery's
-        // mode-overwrite stays idempotent (see compactState's doc)
-        if (compactIndex) {
-          StreamState.compactState(spark, indexDir, IndexedRecordSchema,
-            excludeSubdir = Some(s"batch-$batchId"))
-          StreamState.compactState(spark, edgeDir, EdgeSchema,
-            excludeSubdir = Some(s"batch-$batchId"))
-        }
-        // the batch frame feeds three joins below — pin it or the
-        // landing file re-reads per consumer
-        val b = batch.persist()
-        // RETRY IDEMPOTENCE: read only rows from STRICTLY EARLIER
-        // batches. A micro-batch retried after its own index subdir
-        // landed (crash between index write and checkpoint commit)
-        // would otherwise probe an index already containing its own
-        // records — the edge set survives that (distinct + the
-        // within-batch arm already emits those pairs), but the skew
-        // census would double-count the batch's block members and
-        // could purge blocks the first attempt kept. The batch_id
-        // lineage column makes the predicate survive compaction,
-        // where subdir names do not.
-        val idx = StreamState.readState(spark, indexDir, IndexedRecordSchema)
-          .filter(col("batch_id") < batchId)
-          .drop("batch_id")
-        // the skew guard's census must cover the full ACCUMULATED
-        // record set, not the slice each call happens to hold —
-        // otherwise a capped run would purge different blocks than
-        // the batch twin (a delivery's two records look innocent
-        // even when their block is giant)
-        val accumulated = Some(b.unionByName(idx))
-        val edges = Linkage.matchedPairs(b, b, accumulated)
-          .unionByName(Linkage.matchedPairs(b, idx, accumulated))
-        // batchId-keyed overwrite, not append: a retried micro-batch
-        // re-writes its own subdirs (the foreachBatch exactly-once
-        // contract is ours to provide)
-        edges.write.mode("overwrite").parquet(s"$edgeDir/batch-$batchId")
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$indexDir/batch-$batchId")
-        b.unpersist()
-        ()
-      })
-
+    DeliveryHarness.replay(spark, root,
+      Seq(recs.filter(col("kind") === "orig"),
+        recs.filter(col("kind") =!= "orig")),
+      restartAfter = if (restart) Some(1) else None) { (batch, batchId) =>
+      // the maintenance pass runs BEFORE this batch's own writes and
+      // EXCLUDES its own subtrees — a retried delivery's overwrite
+      // stays idempotent (see compactState's doc)
+      if (compactIndex)
+        Seq(indexDir -> RecordSchema, edgeDir -> EdgeSchema)
+          .foreach { case (dir, schema) =>
+            StreamState.compactState(spark, dir, schema,
+              ownBatch = Some(batchId))
+          }
+      // the batch frame feeds three joins below — pin it or the
+      // landing file re-reads per consumer
+      val b = batch.persist()
+      // RETRY IDEMPOTENCE: a micro-batch retried after its own index
+      // subdir landed would otherwise probe an index already holding
+      // its own records — the edge set survives that (distinct + the
+      // within-batch arm already emits those pairs), but the skew
+      // census would double-count the batch's block members and could
+      // purge blocks the first attempt kept
+      val idx = StreamState.before(spark, indexDir, RecordSchema, batchId)
+      // the skew guard's census must cover the full ACCUMULATED
+      // record set, not the slice each call happens to hold —
+      // otherwise a capped run would purge different blocks than
+      // the batch twin (a delivery's two records look innocent
+      // even when their block is giant)
+      val accumulated = Some(b.unionByName(idx))
+      StreamState.append(edgeDir, Linkage.matchedPairs(b, b, accumulated)
+        .unionByName(Linkage.matchedPairs(b, idx, accumulated)), batchId)
+      StreamState.append(indexDir, b, batchId)
+      b.unpersist()
+    }
     (indexDir, edgeDir)
   }
-
-  private val EdgeSchema = StructType(Seq(
-    StructField("doc_a", LongType), StructField("doc_b", LongType)))
-
-  private def readState(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    StreamState.readState(spark, dir, schema)
 
   /** Terminal cluster assembly over the accumulated state dirs. */
   private[graft] def resolveFrom(spark: SparkSession, indexDir: String,
       edgeDir: String): DataFrame = {
-    val allRecs = readState(spark, indexDir, RecordSchema)
-    val allEdges = readState(spark, edgeDir, EdgeSchema)
+    val allRecs = StreamState.read(spark, indexDir, RecordSchema)
+    val allEdges = StreamState.read(spark, edgeDir, EdgeSchema)
     // terminal cap gate: a block can outgrow the cap after earlier
     // deliveries already emitted its edges — the final census decides
     Linkage.resolve(allRecs, Linkage.enforceBlockCap(allRecs, allEdges))
@@ -161,17 +123,12 @@ object LinkStream {
 
   /** Compaction for both linkage stores — the machinery lives in
     * [[StreamState.compactState]] (shared with [[DocStream]]'s band
-    * and fingerprint indexes). The index store compacts under
-    * [[IndexedRecordSchema]]: rewriting with the bare [[RecordSchema]]
-    * would strip the stored `batch_id` lineage column, and a
-    * mid-ingest probe's `batch_id < current` filter would then read
-    * NULL and drop the entire compacted index. Terminal reads
-    * ([[resolveFrom]]) still use the bare schema — parquet column
-    * pruning skips the extra column. */
+    * and fingerprint indexes), which keeps the stored `batch_id`
+    * column through the rewrite. */
   private[graft] def compactLinkageState(spark: SparkSession,
       indexDir: String, edgeDir: String,
       targetFileBytes: Long = 128L << 20): ((Int, Int), (Int, Int)) =
-    (StreamState.compactState(spark, indexDir, IndexedRecordSchema,
+    (StreamState.compactState(spark, indexDir, RecordSchema,
         targetFileBytes),
       StreamState.compactState(spark, edgeDir, EdgeSchema, targetFileBytes))
 }

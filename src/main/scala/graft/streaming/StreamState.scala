@@ -1,25 +1,69 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Storage-resident streaming state shared by every persistent-index
-  * twin ([[LinkStream]]'s record/edge stores, [[DocStream]]'s LSH band
-  * index and winnow fingerprint index): per-delivery `batch-N`
-  * subtrees of parquet files, plus the recurring COMPACTION pass that
-  * keeps a long ingest's probe cost flat.
+/** THE batchId-keyed store every streaming twin writes through: a
+  * persistent index ([[LinkStream]]'s record/edge stores,
+  * [[DocStream]]'s LSH band, winnow and substring indexes), a carried
+  * scalar, or a twin's output dir. Each micro-batch lands one
+  * `batch-N` subtree of parquet files whose rows carry the stored
+  * `batch_id` column, plus the recurring COMPACTION pass that keeps a
+  * long ingest's probe cost flat.
+  *
+  * The retry-idempotence contract lives here once: [[append]]
+  * OVERWRITES batch N's own subtree (a micro-batch retried after its
+  * write landed — crash between write and checkpoint commit — replaces
+  * its rows instead of doubling them), and [[before]] shows batch N
+  * only rows from STRICTLY EARLIER batches (the retry never probes its
+  * own first attempt). The rule is a row predicate on the stored
+  * column, not a subdir-name filter, so it survives [[compactState]]
+  * renaming subtrees.
   */
 object StreamState {
 
-  /** Schema-pinned recursive read of a grow-only state dir. Extra
-    * physical columns in older files are simply not read (parquet
-    * column pruning), so adding a column to a store's schema stays
-    * backward-compatible with pre-existing subtrees. */
-  private[streaming] def readState(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
+  /** `schema` plus the stored lineage column (as is when it has one). */
+  private def withBatchId(schema: StructType): StructType =
+    if (schema.fieldNames.contains("batch_id")) schema
+    else schema.add("batch_id", LongType)
+
+  private def fs(spark: SparkSession, dir: String) =
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Land batch `batchId`'s rows of `df` under `dir/batch-<batchId>`,
+    * stamped with the `batch_id` column; a rewrite of the same batch
+    * replaces its subtree. Parent dirs are created by the write. */
+  def append(dir: String, df: DataFrame, batchId: Long): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").parquet(s"$dir/batch-$batchId")
+
+  /** Every row of the store, read through `schema` (name `batch_id` in
+    * it to get the lineage column). Extra physical columns are not read
+    * (parquet column pruning), so adding a column to a store's schema
+    * stays backward-compatible with older subtrees. A store that was
+    * never written reads as an empty frame of `schema`, so no caller
+    * creates a store dir up front. */
+  def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    if (!fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir)))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else scan(spark, schema, dir)
+
+  /** Schema-pinned recursive read of the parquet files under `paths`. */
+  private def scan(spark: SparkSession, schema: StructType,
+      paths: String*): DataFrame =
     spark.read.schema(schema)
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet").parquet(dir)
+      .option("pathGlobFilter", "*.parquet").parquet(paths: _*)
+
+  /** The store as batch `batchId` may see it: rows of strictly earlier
+    * batches, `schema`'s columns only (the lineage column is dropped). */
+  def before(spark: SparkSession, dir: String, schema: StructType,
+      batchId: Long): DataFrame =
+    read(spark, dir, withBatchId(schema))
+      .filter(col("batch_id") < batchId)
+      .select(schema.map(f => col(f.name)): _*)
 
   /** State COMPACTION for a grow-only store: each delivery appends a
     * `batch-N` subtree of micro-batch-sized parquet files, so after N
@@ -38,46 +82,46 @@ object StreamState {
     * natural slot — nothing probes while it runs), never concurrently
     * with one.
     *
-    * Rows are rewritten verbatim — including any `batch_id` lineage
-    * column — so the retry-idempotence filter (`batch_id < current`)
-    * survives compaction unchanged. Callers that compact INSIDE a
-    * foreachBatch body pass their own subtree name as
-    * `excludeSubdir`: a micro-batch retried after compaction already
-    * ran (crash between index write and checkpoint commit) would
-    * otherwise find its first attempt's rows folded into the
-    * compacted copy, re-create `batch-N` on the retry's
-    * mode-overwrite, and leave batch N's rows DUPLICATED for every
-    * later probe — excluding the current batch's subtree keeps the
-    * own-subdir overwrite idempotent through the whole crash window.
+    * Rows are rewritten verbatim with the `batch_id` column (added to
+    * `schema` when it does not name it), so [[before]]'s visibility
+    * rule survives compaction unchanged. Callers that compact INSIDE a
+    * foreachBatch body pass their own batch id as `ownBatch`: a
+    * micro-batch retried after compaction already ran (crash between
+    * index write and checkpoint commit) would otherwise find its first
+    * attempt's rows folded into the compacted copy, re-create
+    * `batch-N` on the retry's overwrite, and leave batch N's rows
+    * DUPLICATED for every later probe — excluding the current batch's
+    * subtree keeps the own-subdir overwrite idempotent through the
+    * whole crash window.
     *
     * The next micro-batch keeps appending `batch-N` subtrees beside
     * the compacted file — compaction is a recurring maintenance pass,
     * not a terminal step. Returns (filesBefore, filesAfter) for the
-    * receipt. */
-  /** TIERED consumption (r18, the LSM/size-tiered posture): with
-    * `maxCompactedTrees = 1` (the default — every pre-r18 caller's
-    * exact behavior) each pass consumes EVERYTHING, previous
-    * compacted output included, so a long ingest rewrites the whole
-    * accumulated store once per pass — O(N²) bytes over N deliveries.
-    * A caller that compacts once per delivery (the long-ingest
-    * compact twins) passes a higher bound: raw `batch-N` subtrees are
-    * always consumed (the small-file accretion compaction exists
-    * for), but prior `batch--compacted-*` trees are left in place —
-    * already size-targeted, nothing to gain from re-copying them —
-    * until their COUNT reaches the bound, at which point one pass
-    * folds them all (the tier merge), so probe-side file count stays
-    * bounded by `maxCompactedTrees + in-flight batches` while total
-    * rewrite volume drops from O(N²) to O(N) per ingest. Pure layout
-    * policy: visibility rides the stored `batch_id` column and every
-    * row is still rewritten verbatim exactly once per fold, so output
-    * is bit-identical for any bound (spec-pinned). */
+    * receipt.
+    *
+    * TIERED consumption (the LSM/size-tiered posture): with
+    * `maxCompactedTrees = 1` (the default) each pass consumes
+    * EVERYTHING, previous compacted output included, so a long ingest
+    * rewrites the whole accumulated store once per pass — O(N²) bytes
+    * over N deliveries. A caller that compacts once per delivery (the
+    * long-ingest compact twins) passes a higher bound: raw `batch-N`
+    * subtrees are always consumed (the small-file accretion compaction
+    * exists for), but prior `batch--compacted-*` trees are left in
+    * place — already size-targeted, nothing to gain from re-copying
+    * them — until their COUNT reaches the bound, at which point one
+    * pass folds them all (the tier merge), so probe-side file count
+    * stays bounded by `maxCompactedTrees + in-flight batches` while
+    * total rewrite volume drops from O(N²) to O(N) per ingest. Pure
+    * layout policy: visibility rides the stored `batch_id` column and
+    * every row is still rewritten verbatim exactly once per fold, so
+    * output is bit-identical for any bound (spec-pinned). */
   private[graft] def compactState(spark: SparkSession, dir: String,
       schema: StructType, targetFileBytes: Long = 128L << 20,
-      excludeSubdir: Option[String] = None,
+      ownBatch: Option[Long] = None,
       maxCompactedTrees: Int = 1): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = this.fs(spark, dir)
     // a store that has never been written (edge dir before the first
     // delivery lands) has nothing to compact
     if (!fs.exists(p)) return (0, 0)
@@ -90,9 +134,10 @@ object StreamState {
     // snapshot the consumed subtrees FIRST: a micro-batch landing a
     // new batch-N while the rewrite runs is neither read nor deleted —
     // it simply survives into the next compaction pass
+    val own = ownBatch.map(b => s"batch-$b")
     val all = fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-") &&
-        !excludeSubdir.contains(s.getPath.getName))
+        !own.contains(s.getPath.getName))
       .map(_.getPath)
     val (compactedTrees, rawTrees) =
       all.partition(_.getName.startsWith("batch--compacted-"))
@@ -103,10 +148,7 @@ object StreamState {
     // read EXACTLY the consumed subtrees (never the whole dir): an
     // excluded own-subtree or a concurrently-landing batch must not
     // be rewritten into the compacted copy while its source survives
-    val src = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(consumed.map(_.toString): _*)
+    val src = scan(spark, withBatchId(schema), consumed.map(_.toString): _*)
     val totalBytes = consumed.map { d =>
       val it = fs.listFiles(d, true)
       Iterator.continually(it).takeWhile(_.hasNext).map(_.next())

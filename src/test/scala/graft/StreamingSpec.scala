@@ -10,21 +10,16 @@ class StreamingSpec extends AnyFunSuite {
   private val sf = SparkTestBase.sf
 
   test("streaming hourly counts equal the batch hourly counts") {
-    val q = EventStream.runToMemory(
-      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)),
-      "hourly_stream")
-    try {
-      val streamed = spark.table("hourly_stream")
-        .select(col("hour"), col("event_type"), col("n"))
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-        .toSet
-      val batch = Events.hourlyStats(spark, sf)
-        .select(col("hour"), col("event_type"), col("n"))
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-        .toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
+    val streamed = EventStream.hourlyViaStream(spark, sf)
+      .select(col("hour"), col("event_type"), col("n"))
+      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
+      .toSet
+    val batch = Events.hourlyStats(spark, sf)
+      .select(col("hour"), col("event_type"), col("n"))
+      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
+      .toSet
+    assert(streamed == batch)
+    assert(streamed.nonEmpty)
   }
 
   test("streaming watermarked dedup emits exactly the distinct key set") {
@@ -555,6 +550,45 @@ class StreamingSpec extends AnyFunSuite {
       assert(readAll() == want.sorted.toSeq, s"rows drifted after pass $b")
     }
     assert(sawFold, "5 passes at bound 3 never exercised the fold")
+  }
+
+  test("batchId-keyed store: a rewrite replaces its batch, before(N) sees only earlier batches, a missing store is empty") {
+    // the one retry-idempotence contract every streaming twin writes
+    // through (StreamState): append(N) twice leaves one copy of batch
+    // N, before(N) is the strictly-earlier visibility rule — also after
+    // compaction renamed the subtrees away — and a store nothing has
+    // written yet reads as an empty frame with its declared schema
+    import graft.streaming.StreamState
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val root = graft.TempDirs.create("graft-storetest")
+    val dir = s"$root/store"
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).sorted.toSeq
+    val missing = StreamState.read(spark, dir, schema)
+    assert(missing.schema == schema && missing.isEmpty)
+    assert(StreamState.before(spark, dir, schema, 3L).isEmpty)
+    (0L until 3L).foreach { b =>
+      StreamState.append(dir, spark.range(b * 10, b * 10 + 10).toDF("id"), b)
+    }
+    // the retry: batch 1 lands again (same rows) — no duplicate
+    StreamState.append(dir, spark.range(10, 20).toDF("id"), 1L)
+    val all = (0L until 30L).toSeq
+    assert(ids(StreamState.read(spark, dir, schema)) == all)
+    def check(stage: String): Unit = (0L to 3L).foreach { b =>
+      val seen = StreamState.before(spark, dir, schema, b)
+      assert(seen.schema.fieldNames.toSeq == Seq("id"), stage)
+      assert(ids(seen) == all.take((b * 10).toInt),
+        s"$stage: before($b) saw ${ids(seen).size} rows")
+    }
+    check("raw subtrees")
+    val (filesBefore, filesAfter) =
+      StreamState.compactState(spark, dir, schema, ownBatch = Some(2L))
+    assert(filesAfter < filesBefore)
+    check("after compaction")
+    StreamState.compactState(spark, dir, schema)
+    check("after a full compaction")
+    graft.TempDirs.delete(root)
   }
 
   test("linkage state compaction: fewer files, bit-identical resolution, repeatable") {

@@ -38,7 +38,9 @@ import org.apache.spark.storage.StorageLevel
   * local-checkpoint blocks or delete the `graft-pool` scratch dir
   * (pooled kernels), or nothing (driver values, relations, written
   * layouts, whose scratch dirs go at JVM exit as before). It runs when
-  * the entry is superseded and on [[clear]].
+  * the entry is superseded and on [[clear]]. A pooled kernel's build
+  * also frees the [[scratch]] frames it made, once its own value is
+  * materialized.
   *
   * BUILD LOG. Every [[memo]] build is timed and logged under the charge
   * label of the timed region that paid for it ([[charging]],
@@ -209,9 +211,40 @@ object CachePool {
     * checkpoint is a materialization boundary, not a plan change. */
   def sessionCheckpoint(kernel: String, spark: SparkSession, sf: String)(
       build: => DataFrame): DataFrame =
-    memo(kernel, spark, sf)(materialize(build))
+    memo(kernel, spark, sf) {
+      val outer = buildScratch.get
+      buildScratch.set(Nil)
+      try materialize(build)
+      finally {
+        buildScratch.get.foreach(r => scala.util.Try(r()))
+        buildScratch.set(outer)
+      }
+    }
 
-  /** Materialize per `spark.graft.pool.materialize`:
+  /** The [[scratch]] releases of the innermost open [[sessionCheckpoint]]
+    * build on this thread; null outside any build. */
+  private val buildScratch = new ThreadLocal[List[() => Unit]]
+
+  /** [[materialize]] `df` for a caller whose result still references
+    * it lazily (a frame consumed several times, a fixpoint loop's last
+    * round), so nothing can free it when the caller returns. */
+  private[graft] def scratch(df: DataFrame): DataFrame =
+    releasedByBuild(materialize(df))
+
+  /** `held`'s frame, its (idempotent) release handed to the innermost
+    * open [[sessionCheckpoint]] build on this thread. That build
+    * materializes its value with truncated lineage, then runs the
+    * release when it publishes or throws. Outside a build the
+    * ContextCleaner frees the blocks once the frame is unreachable (a
+    * `parquet` dir goes at JVM exit). */
+  private[graft] def releasedByBuild(held: Held[DataFrame]): DataFrame = {
+    Option(buildScratch.get).foreach(rs => buildScratch.set(held.release :: rs))
+    held.value
+  }
+
+  /** Materialize per `spark.graft.pool.materialize` — pooled kernels,
+    * [[scratch]] frames and every [[graft.operators.Rounds]] round; the
+    * one place graft calls `localCheckpoint`:
     *
     *   - `localCheckpoint` (default, right for local mode): eager
     *     MEMORY_AND_DISK RDD blocks, NOT replicated, lineage truncated
@@ -224,7 +257,7 @@ object CachePool {
     *     IEEE754 doubles), so the served frame is bit-identical on
     *     either path (OperatorSpec's materialize-parity spec). Released
     *     by deleting the dir. */
-  private def materialize(df: DataFrame): Held[DataFrame] = {
+  private[graft] def materialize(df: DataFrame): Held[DataFrame] = {
     val spark = df.sparkSession
     spark.conf.get("spark.graft.pool.materialize", "localCheckpoint") match {
       case "parquet" =>
@@ -235,7 +268,8 @@ object CachePool {
         val ck = df.localCheckpoint()
         Held(ck, () => ck.queryExecution.analyzed.foreach {
           case r: org.apache.spark.sql.execution.LogicalRDD =>
-            r.rdd.unpersist(blocking = false)
+            org.apache.spark.sql.graftbridge.Bridge
+              .unpersistRdd(spark.sparkContext, r.rdd.id)
           case _ => ()
         })
     }

@@ -848,22 +848,13 @@ object Dedup {
     * to large-star/small-star alternation ([[starLabels]], O(log²n)
     * rounds) instead of failing — the result is correct either way.
     *
-    * `checkpointDir`: each round truncates lineage. The default
-    * (`None`) uses `localCheckpoint` — executor-local blocks, fastest,
-    * but recomputation-unsafe on executor loss. Passing a scratch dir
-    * switches every round to reliable `checkpoint()` into that dir —
-    * the fault-tolerant mode for long cluster runs, at the cost of a
-    * write+read per round.
+    * Rounds run through [[Rounds.iterate]]: each is materialized per
+    * `spark.graft.pool.materialize` (`parquet` for executor-loss
+    * tolerance on long cluster runs) and the one before it freed.
     */
   def clustersFrom(docs: DataFrame, pairs: DataFrame,
-      maxIter: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val ck: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        docs.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -873,25 +864,15 @@ object Dedup {
     // real corpus the similarity graph is a tiny fraction of the data —
     // iterating over all documents would shuffle dead weight every
     // round. (edges is symmetric, so `src` alone covers every node.)
-    // checkpointed: the singleton anti-join below runs AFTER edges is
+    // materialized: the singleton anti-join below runs AFTER edges is
     // unpersisted — an un-materialized `nodes` would silently recompute
     // the whole pair join there
-    val nodes = ck(edges.select(col("src").as("doc_id")).distinct())
-    // Each round MUST truncate lineage (checkpoint), not merely cache:
-    // an iterative plan built on the previous round's plan grows
-    // exponentially and OOMs the driver compiling/printing it long
-    // before any data moves.
-    var labels = ck(nodes.select(col("doc_id"), col("doc_id").as("label")))
-    var iter = 0
-    var changed = 1L
-    // per-round timing telemetry (off by default): the CC loop is the
-    // repo's only iterative driver loop, so a bench-level slowdown that
-    // localizes here needs per-round visibility to diagnose
-    val ccLog = docs.sparkSession.conf
-      .getOption("spark.graft.cc.log").orElse(sys.env.get("GRAFT_CC_LOG"))
-      .contains("true")
-    while (changed > 0 && iter < maxIter) {
-      val t0 = System.nanoTime()
+    val nodes = graft.CachePool.scratch(
+      edges.select(col("src").as("doc_id")).distinct())
+    val init = nodes.select(col("doc_id"), col("doc_id").as("label"))
+    val cc = Rounds.iterate("cc", graft.CachePool.materialize(init),
+        maxIter) { state =>
+      val labels = state.select(col("doc_id"), col("label"))
       val neighborMin = edges
         .join(labels.withColumnRenamed("doc_id", "dst")
           .withColumnRenamed("label", "dst_label"), "dst")
@@ -918,29 +899,21 @@ object Dedup {
       val hop = propagated
         .select(col("doc_id").as("label"), col("label").as("hop_label"))
       // fold the convergence flag into the round's own projection: the
-      // change count then reads the just-checkpointed partitions
+      // change count then reads the just-materialized partitions
       // instead of re-joining next against prev
-      val next = ck(propagated
-        .join(hop, Seq("label"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("hop_label"), col("label")))
-            .as("label"),
-          (least(col("label"), coalesce(col("hop_label"), col("label")))
-            < col("prev")).as("chg")))
-      propagated.unpersist() // `next` is checkpointed (eager) above
-      changed = next.filter(col("chg")).count()
-      // the previous round's checkpoint blocks are released by the
-      // ContextCleaner once this reassignment drops the last reference;
-      // peak storage is bounded by two label tables (graph-node-sized)
-      labels = next.select(col("doc_id"), col("label"))
-      iter += 1
-      if (ccLog) System.err.println(
-        f"[graft-cc] round=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
+      val jumped =
+        least(col("label"), coalesce(col("hop_label"), col("label")))
+      graft.CachePool.Held(propagated.join(hop, Seq("label"), "left")
+          .select(col("doc_id"), jumped.as("label"),
+            (jumped < col("prev")).as("chg")),
+        () => propagated.unpersist())
+    }(Rounds.noneChanged)
     // an unconverged propagation means the graph's diameter exceeds
     // maxIter — switch to the round-efficient algorithm rather than
     // either failing or (worse) silently emitting wrong labels
-    val graphLabels = if (changed == 0) labels else starLabels(edges, ck)
+    val graphLabels =
+      if (cc.halted) cc.state.select(col("doc_id"), col("label"))
+      else starLabels(edges)
     val singletons = docs
       .join(nodes, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("label"))
@@ -964,28 +937,26 @@ object Dedup {
     * 10⁶ there). Input must be the symmetric edge set; returns
     * (doc_id, label) for every graph node, label = component minimum.
     */
-  private def starLabels(edgesSym: DataFrame,
-      ck: DataFrame => DataFrame, maxRounds: Int = 50): DataFrame = {
+  private def starLabels(edgesSym: DataFrame, maxRounds: Int = 50): DataFrame = {
     // convergence = edge-set fixpoint, detected by (count, hash-sum)
     // checksum equality — two scalar aggregates per round, no collect.
     // Each term is pmod-bounded below 2³⁰ so the long sum cannot
     // overflow (ANSI mode would throw) before ~2³³ edges.
-    def checksum(df: DataFrame): (Long, Long) = {
+    var prev = (-1L, -1L)
+    val converged: DataFrame => Rounds.Verdict = { df =>
       val r = df.agg(count(lit(1)),
         sum(pmod(xxhash64(col("src"), col("dst")), lit(1000000007L)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      val cs = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      val same = cs == prev
+      prev = cs
+      Rounds.Verdict(cs._1, same)
     }
-    var cur: DataFrame = null // directed (src > dst) after round 1
-    var prev = (-1L, -1L)
-    var converged = false
-    var round = 0
-    val ccLog = edgesSym.sparkSession.conf
-      .getOption("spark.graft.cc.log").orElse(sys.env.get("GRAFT_CC_LOG"))
-      .contains("true")
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      val sym = if (cur == null) edgesSym
-        else cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
+    // the state is directed (src > dst); a self-loop reaches no star
+    // output, so dropping self-loops from the input is exact
+    val star = Rounds.iterate("cc-star",
+        graft.CachePool.Held(edgesSym.filter(col("src") > col("dst"))),
+        maxRounds) { cur =>
+      val sym = cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
       // large-star: m(u) = min(Γ(u) ∪ {u}); emit (v, m(u)) for v>u.
       // Output is strictly downward-directed (v > u ≥ m).
       val mins = sym.groupBy("src").agg(min("dst").as("nmin"))
@@ -997,23 +968,17 @@ object Dedup {
       // small-star on the directed graph: all of u's (smaller)
       // neighbors AND u itself re-point at m(u) = min neighbor
       val mins2 = large.groupBy("src").agg(min("dst").as("m"))
-      val small = large.join(mins2, "src")
+      graft.CachePool.Held(large.join(mins2, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(mins2.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
-        .distinct()
-      cur = ck(small)
-      val cs = checksum(cur)
-      converged = cs == prev
-      prev = cs
-      round += 1
-      if (ccLog) System.err.println(
-        f"[graft-cc] star round=$round edges=${cs._1} ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    require(converged,
+        .distinct())
+    }(converged)
+    require(star.halted,
       s"star contraction did not converge within $maxRounds rounds")
     // fixpoint is a star forest: every non-root points at its component
     // minimum; roots (appearing only as dst) label themselves
+    val cur = star.state
     val pointed = cur.select(col("src").as("doc_id"), col("dst").as("label"))
     val roots = cur.select(col("dst").as("doc_id")).distinct()
       .join(pointed, Seq("doc_id"), "left_anti")
@@ -1423,23 +1388,8 @@ object Dedup {
     // passes (overlap ≥ c implies the bound ≥ c there), and the first
     // shared feature is inside A's prefix by the pigeonhole that
     // defines it. Measured at sf0.1: 5.25 s → see OPTIMIZATION_r17.md.
-    val docs = shingledCached(spark, sf)
-    val ex = docs.select(col("doc_id"), explode(col("sh")).as("w"))
-    val dfCounts = ex.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    // dense rank in (df, w) order over (df, 8-char prefix) buckets —
-    // the allPairsJaccard dictionary
-    val fids = featureIds(dfCounts)
-    val ranked = ex.join(fids.select(col("w"), col("fid")), "w")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("fid"))).as("fs"))
-      .select(col("doc_id"), col("fs"), size(col("fs")).cast("long").as("n"))
-    // c = ceil(t·n); prefix = first n − c + 1 rarest (≥ 1 always).
-    // Materialized once: the candidate join consumes it on both sides
-    // and the verification joins twice more.
-    val prefixed = ranked.select(col("doc_id"), col("fs"), col("n"),
-      expr(s"slice(fs, 1, cast(n - (($tNum * n + ${tDen - 1}) div $tDen) + 1 as int))")
-        .as("prefix"))
-      .localCheckpoint()
+    val prefixed = prefixedSets(shingledCached(spark, sf)
+      .select(col("doc_id"), explode(col("sh")).as("w")), tNum, tDen)
     val aTok = prefixed.select(col("doc_id").as("doc_a"),
       col("n").as("na"), posexplode(col("prefix")).as(Seq("pa", "fid")))
     val bTok = prefixed.select(col("doc_id").as("doc_b"),
@@ -1501,6 +1451,28 @@ object Dedup {
     TwoPhase.prefix(counts.withColumn("pre", substring(col("w"), 1, 8)),
       Nil, Seq("df", "pre"), Seq(col("df"), col("w")), lit(1L), "fid")
 
+  /** The PPJoin side of [[containmentPrefixPairs]] and
+    * [[allPairsJaccard]] over (doc_id, w) feature rows: (doc_id, fs, n,
+    * prefix). Features are DICTIONARY-ENCODED to dense long ids in
+    * global rarity order ([[featureIds]]), so the per-doc canonical
+    * ranking degenerates to one int-array sort (`fs`, size `n`), the
+    * candidate join keys become longs, and the verification arrays
+    * shrink ~10× vs. carrying shingle strings. `prefix` is the first
+    * n − ⌈t·n⌉ + 1 (≥ 1) rarest ids. Materialized once (docs-sized,
+    * ints only): the candidate join consumes it on both sides and the
+    * verification joins twice more — un-materialized, each consumer
+    * would replay the whole tokenize→rank→sort derivation. */
+  private def prefixedSets(features: DataFrame, tNum: Int,
+      tDen: Int): DataFrame = {
+    val fids = featureIds(features.groupBy(col("w")).agg(count(lit(1)).as("df")))
+    graft.CachePool.scratch(features.join(fids.select(col("w"), col("fid")), "w")
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("fid"))).as("fs"))
+      .select(col("doc_id"), col("fs"), size(col("fs")).cast("long").as("n"))
+      .withColumn("prefix", expr(
+        s"slice(fs, 1, cast(n - (($tNum * n + ${tDen - 1}) div $tDen) + 1 as int))")))
+  }
+
   /** EXACT all-pairs Jaccard join over distinct word-TRIGRAM sets via
     * prefix filtering (AllPairs, Bayardo et al. WWW'07; the PPJoin
     * family). Unlike [[ngramJaccard]] — which self-joins on EVERY
@@ -1537,27 +1509,10 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(
           graft.functions.ArrayOps.shinglesAll(col("toks"), 3)).as("ws"))
-    val tokens = docs.select(col("doc_id"), explode(col("ws")).as("w"))
-    val df = tokens.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    // Dictionary-encode features to dense integer ids ASSIGNED IN
-    // GLOBAL RARITY ORDER (df asc, w asc): the per-doc canonical
-    // ranking then degenerates to a plain int-array sort, the
-    // candidate join keys become longs, and the verification arrays
-    // shrink ~10× vs. carrying shingle strings — the exchange that
-    // dominated the un-encoded form ([[featureIds]]).
-    val fids = featureIds(df)
-    val ranked = tokens.join(fids.select(col("w"), col("fid")), "w")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("fid"))).as("fs"))
-      .select(col("doc_id"), col("fs"), size(col("fs")).cast("long").as("s"))
-    // materialized once (docs-sized, ints only): the candidate
-    // self-join consumes it twice and the verification joins twice
-    // more — un-checkpointed, each consumer would replay the whole
-    // tokenize→rank→sort derivation
-    val prefixed = ranked.select(col("doc_id"), col("fs"), col("s"),
-      expr(s"slice(fs, 1, cast(s - (($tNum * s + ${tDen - 1}) div $tDen) + 1 as int))")
-        .as("prefix"))
-      .localCheckpoint()
+    // s = |A|, the set size the Jaccard bounds below are written in
+    val prefixed = prefixedSets(
+      docs.select(col("doc_id"), explode(col("ws")).as("w")), tNum, tDen)
+      .withColumnRenamed("n", "s")
     // posexplode: the 0-based prefix position feeds the PPJoin
     // positional filter below
     val pTok = prefixed.select(col("doc_id"), col("s"),

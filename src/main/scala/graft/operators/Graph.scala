@@ -31,9 +31,9 @@ import org.apache.spark.storage.StorageLevel
   * partition), then one partial-agg groupBy. Past the node count
   * where the vector stops fitting an executor, the same algebra runs
   * as a shuffle join against a src-partitioned edge cache — the
-  * branch is a one-line threshold. Each round is `localCheckpoint`ed:
-  * iterative lineage otherwise compounds into a plan the driver
-  * cannot compile (the [[Dedup.clustersFrom]] lesson). Dangling nodes
+  * branch is a one-line threshold. Rounds run through [[Rounds]],
+  * which materializes every other one: iterative lineage otherwise
+  * compounds into a plan the driver cannot compile. Dangling nodes
   * don't exist by construction (edges are symmetric); isolated nodes
   * ride the teleport term only.
   */
@@ -91,29 +91,27 @@ object Graph {
     // (G // nn) / ((G·(1−damp)) // nn) CTE terms
     val s0 = G / nn
     val base = (G * (DampDen - DampNum) / DampDen) / nn
-    var score = nodes.select(col("node"), lit(s0).as("s")).localCheckpoint()
-    (1 to iters).foreach { i =>
+    // materialized every OTHER round (r18): the materialization is a
+    // pure boundary (bit-identical output), so halving the eager jobs
+    // halves per-round scheduling overhead at a bounded cost — lineage
+    // depth never exceeds two rounds, far under the compounding that
+    // motivated per-round materialization ([[Rounds]])
+    val init = nodes.select(col("node"), lit(s0).as("s"))
+    val score = Rounds.iterate("pagerank", graft.CachePool.materialize(init),
+        iters, everyK = 2) { score =>
       // the teleport term rides a zero-contribution row per node
       // through the SAME aggregation, so nodes without in-edges need
       // no second join to be re-materialized
       val renamed = score.withColumnRenamed("node", "src")
         .withColumnRenamed("s", "src_s")
-      val next = edgesDeg
+      graft.CachePool.Held(edgesDeg
         .join(if (broadcastScore) broadcast(renamed) else renamed, "src")
         .select(col("dst").as("node"), expr("src_s div outdeg").as("c"))
         .union(nodes.select(col("node"), lit(0L).as("c")))
         .groupBy(col("node")).agg(sum(col("c")).as("s_in"))
         .select(col("node"),
-          (lit(base) + expr(s"($DampNum * s_in) div $DampDen")).as("s"))
-      // checkpoint every OTHER round (r18): the checkpoint is a pure
-      // materialization boundary (bit-identical output), so halving
-      // the eager jobs halves per-round scheduling overhead at a
-      // bounded cost — lineage depth never exceeds two rounds, far
-      // under the compounding that motivated per-round checkpoints
-      // (the Dedup.clustersFrom lesson was unbounded depth)
-      score =
-        if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
-    }
+          (lit(base) + expr(s"($DampNum * s_in) div $DampDen")).as("s")))
+    }(Rounds.fixed).state
     edgesDeg.unpersist(); nodes.unpersist()
     score.select(col("node"),
         when(col("node") % 2 === 0, lit("customer"))
@@ -195,29 +193,33 @@ object Graph {
     * Integer clustering coefficient: 2·triangles·10⁶ div deg·(deg−1)
     * ppm — engine-exact, no float division.
     */
-  /** Supplier co-occurrence edge list (a < b, weight floor applied) —
-    * the shared graph under [[triangles]] and [[kcore]]. One bounded
+  /** Co-occurrence edge list over lineitem's `item` column (a < b,
+    * weight floor applied) — suppliers under [[triangles]], parts under
+    * [[kcore]] and [[lpaCommunities]] ([[partCoEdges]]). One bounded
     * per-order pair explosion (Σ order-size², never corpus²) + one
     * partial-agg groupBy. */
-  private def coEdges(spark: SparkSession, sf: String): DataFrame = {
-    val so = Tables.load(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_suppkey").cast("long").as("s"))
+  private def coEdges(spark: SparkSession, sf: String,
+      item: String): DataFrame = {
+    val oi = Tables.load(spark, sf, "lineitem")
+      .select(col("l_orderkey").as("ok"), col(item).cast("long").as("i"))
       .distinct()
-    so.select(col("ok"), col("s").as("sa"))
-      .join(so.select(col("ok"), col("s").as("sb")), "ok")
-      .filter(col("sa") < col("sb"))
-      .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("w"))
+    oi.select(col("ok"), col("i").as("a"))
+      .join(oi.select(col("ok"), col("i").as("b")), "ok")
+      .filter(col("a") < col("b"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
       .filter(col("w") >= TriMinCoOrders)
-      .select(col("sa").as("a"), col("sb").as("b"))
+      .select(col("a"), col("b"))
   }
+
+  /** (v, `name`): every node's degree in an undirected (a, b) edge list. */
+  private def degrees(edges: DataFrame, name: String): DataFrame =
+    edges.select(col("a").as("v")).unionByName(edges.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as(name))
 
   def triangles(spark: SparkSession, sf: String): DataFrame = {
     val edges = graft.CachePool.swapOne("triangles-edges",
-      coEdges(spark, sf))
-    val deg = graft.CachePool.swapOne("triangles-deg",
-      edges.select(col("a").as("v"))
-        .unionByName(edges.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg")))
+      coEdges(spark, sf, "l_suppkey"))
+    val deg = graft.CachePool.swapOne("triangles-deg", degrees(edges, "deg"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val oriented = edges
@@ -312,15 +314,7 @@ object Graph {
     // of both rows; one derivation per (dataset, session), the edge
     // list itself is graph-sized (thresholded pairs).
     graft.CachePool.sessionCheckpoint("part-co-edges", spark, sf) {
-      val po = Tables.load(spark, sf, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").cast("long").as("p"))
-        .distinct()
-      po.select(col("ok"), col("p").as("pa"))
-        .join(po.select(col("ok"), col("p").as("pb")), "ok")
-        .filter(col("pa") < col("pb"))
-        .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("w"))
-        .filter(col("w") >= TriMinCoOrders)
-        .select(col("pa").as("a"), col("pb").as("b"))
+      coEdges(spark, sf, "l_partkey")
     }
 
   /** q_kcore: K-core membership over the part co-purchase graph
@@ -336,7 +330,7 @@ object Graph {
     * drop edges with a peeled endpoint — all equality shuffles on
     * node keys, no window, no driver-sized state; the driver loop
     * only orchestrates a FIXED [[KcoreRounds]] rounds (each round
-    * `localCheckpoint`ed, the [[Dedup.clustersFrom]] lineage lesson).
+    * materialized by [[Rounds.iterate]]).
     * FIXED rounds, not a convergence loop, because the DuckDB oracle
     * unrolls the same recurrence — both engines agree even on a graph
     * whose true peel depth exceeds R; production loops on the Pregel
@@ -361,35 +355,29 @@ object Graph {
       edges0.select(col("a").as("v"))
         .unionByName(edges0.select(col("b").as("v")))
         .distinct())
-    var edges = edges0
-    var round = 0
     // Pregel halting test alongside the fixed-round bound: the peel is
     // MONOTONE (each round's edge set ⊆ the last), so an unchanged
     // edge COUNT means no edge was removed ⇒ same degrees ⇒ fixpoint,
     // and every further round — here or in the oracle's remaining
     // unrolled layers — is the identity. Early exit is therefore
     // bit-identical to running all `rounds`; the count is one scalar
-    // job over the just-checkpointed frame, never a collect.
+    // job over the just-materialized frame, never a collect.
     var prevCount = -1L
-    while (round < rounds && prevCount != 0L) {
-      val deg = edges.select(col("a").as("v"))
-        .unionByName(edges.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val alive = deg.filter(col("deg") >= k).select(col("v"))
-      val next = edges
+    val peeled: DataFrame => Rounds.Verdict = { df =>
+      val n = df.count()
+      val halt = n == prevCount || n == 0L
+      prevCount = n
+      Rounds.Verdict(n, halt)
+    }
+    val edges = Rounds.iterate("kcore", graft.CachePool.Held(edges0),
+        rounds) { edges =>
+      val alive = degrees(edges, "deg").filter(col("deg") >= k).select(col("v"))
+      graft.CachePool.Held(edges
         .join(alive.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-      val n = next.count()
-      if (prevCount == n) round = rounds // fixpoint — halt
-      else { prevCount = n; round += 1 }
-      edges = next
-    }
-    val coreDeg = edges.select(col("a").as("v"))
-      .unionByName(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
-    allNodes.join(coreDeg, Seq("v"), "left")
+        .select(col("a"), col("b")))
+    }(peeled).state
+    allNodes.join(degrees(edges, "core_deg"), Seq("v"), "left")
       .select(col("v"),
         when(col("core_deg").isNotNull, lit(1L)).otherwise(lit(0L))
           .as("in_core"),
@@ -474,8 +462,8 @@ object Graph {
     * labels on the neighbor key) + two partial-agg groupBys (label
     * census per node, then the argmax via one packed `max(struct)` —
     * never a window) — all shuffles on node keys, Pregel-shaped;
-    * rounds are `localCheckpoint`ed ([[Dedup.clustersFrom]] lineage
-    * lesson) and the driver holds only the changed-count scalar.
+    * rounds are materialized by [[Rounds.iterate]] and the driver
+    * holds only the changed-count scalar.
     * Output: one row per graph node with its community label and the
     * community's size. */
   def lpaCommunities(spark: SparkSession, sf: String,
@@ -509,35 +497,31 @@ object Graph {
     val sym = sym0
       .repartition(if (broadcastLabels) col("src") else col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.select(col("v"), col("v").as("label"))
-      .localCheckpoint()
-    var round = 0
-    while (round < rounds) {
+    val init = nodes.select(col("v"), col("v").as("label"))
+    val labels = Rounds.iterate("lpa", graft.CachePool.materialize(init),
+        rounds) { state =>
+      val labels = state.select(col("v"), col("label"))
       val renamed = labels.select(col("v").as("u"), col("label"))
-      // the old label rides INTO the checkpointed frame (r18): the
-      // halting test used to run a separate join of two checkpointed
+      // the old label rides INTO the materialized frame (r18): the
+      // halting test used to run a separate join of two materialized
       // frames per round — folding the comparison into the round's
       // own materialization job makes the halting count a plain
-      // filter-scan of the in-memory checkpoint, one shuffle fewer
-      // per round, and bit-identical (the chg column is projected
-      // away before the next round reads the labels)
-      val next = sym.select(col("src").as("v"), col("dst").as("u"))
+      // filter-scan of the materialized round, one shuffle fewer per
+      // round, and bit-identical (the chg column is projected away
+      // before the next round reads the labels)
+      graft.CachePool.Held(sym.select(col("src").as("v"), col("dst").as("u"))
         .join(if (broadcastLabels) broadcast(renamed) else renamed, "u")
         .select(col("v"), col("label"))
-        .unionByName(labels.select(col("v"), col("label"))) // the self vote
+        .unionByName(labels) // the self vote
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("v"))
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("b"))
         .select(col("v"), (-col("b.neg")).as("label"))
         .join(labels.select(col("v"), col("label").as("old")), "v")
         .select(col("v"), col("label"),
-          (col("label") =!= col("old")).as("chg"))
-        .localCheckpoint()
-      val changed = next.filter(col("chg")).count()
-      labels = next.select(col("v"), col("label"))
-      if (changed == 0L) round = rounds else round += 1
-    }
-    // labels is localCheckpoint'ed (eager) — the returned plan no
+          (col("label") =!= col("old")).as("chg")))
+    }(Rounds.noneChanged).state.select(col("v"), col("label"))
+    // labels is materialized (eager) — the returned plan no
     // longer references the graph frames, so the pins release here
     // rather than accreting in the session cache
     edges.unpersist(); sym.unpersist(); nodes.unpersist()

@@ -24,21 +24,34 @@ object Multimodal {
 
   // r18 (guide §1.2 per-task work): ImageIO's default stream cache is
   // DISK-backed — every ImageIO.read/write over a byte-array stream
-  // creates (and deletes) a temp FILE per image, so the codec passes
-  // paid one filesystem round-trip per frame on top of the actual
-  // encode/decode. In-memory payloads this small (8×8-ish rasters,
-  // ~100 B compressed) belong in the memory-backed stream cache.
-  // Process-wide, pixel-exact: the codec and the decoded rasters are
-  // unchanged, only the stream plumbing stops touching disk. Each
-  // codec mapPartitions calls [[memCachedImageIO]] first — object
-  // initialization alone would not reach a remote executor whose
-  // closure never touches this object's fields.
-  javax.imageio.ImageIO.setUseCache(false)
+  // creates (and deletes) a temp FILE per image. In-memory payloads
+  // this small (8×8-ish rasters, ~100 B compressed) go through
+  // memory-cached streams instead, chosen per call: nothing
+  // process-global is switched, and the codec bytes are unchanged.
 
-  /** Idempotent per-task switch to the memory-backed ImageIO stream
-    * cache (see the object-level note). */
-  private def memCachedImageIO(): Unit =
-    if (javax.imageio.ImageIO.getUseCache) javax.imageio.ImageIO.setUseCache(false)
+  /** PNG bytes of a w×h 8-bit gray image, pixel (x, y) = `pixel(x, y)`. */
+  private def grayPng(w: Int, h: Int)(pixel: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { raster.setSample(x, y, 0, pixel(x, y)); x += 1 }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", out)
+    finally out.close() // flushes into bos; bos itself stays open
+    bos.toByteArray
+  }
+
+  /** Decode image bytes; null when no registered reader accepts them. */
+  private def decoded(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(
+      new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
 
   /** Synthesize a binary "media" column from document text (the
     * harness has no media tables; payload bytes are UTF-8 text, which
@@ -102,27 +115,11 @@ object Multimodal {
       .repartition(math.max(1, spark.sparkContext.defaultParallelism),
         col("doc_id"))
       .mapPartitions { rows =>
-        memCachedImageIO()
         rows.map { r =>
           val id = r.getLong(0)
           val w = 8 + (id % 8).toInt
           val h = 8 + (id % 5).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              raster.setSample(x, y, 0,
-                ((id * 31 + x * 7 + y * 13) % 256).toInt)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          Row(id, bos.toByteArray)
+          Row(id, grayPng(w, h)((x, y) => ((id * 31 + x * 7 + y * 13) % 256).toInt))
         }
       }(enc)
   }
@@ -150,11 +147,9 @@ object Multimodal {
       .mapPartitions { rows =>
         // codec init amortized per partition (ImageIO reader registry
         // lookup happens once per JVM; stream wrappers per image)
-        memCachedImageIO()
         rows.map { r =>
           val id = r.getLong(0)
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+          val img = decoded(r.getAs[Array[Byte]](1))
           require(img != null, s"undecodable payload for doc $id")
           val raster = img.getRaster
           val hist = new Array[Long](16)
@@ -198,11 +193,9 @@ object Multimodal {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(hashSchema)
     val hashes = imageized(spark, sf).mapPartitions { rows =>
-      memCachedImageIO()
       rows.map { r =>
         val id = r.getLong(0)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+        val img = decoded(r.getAs[Array[Byte]](1))
         require(img != null, s"undecodable payload for doc $id")
         val raster = img.getRaster
         val w = img.getWidth
@@ -469,7 +462,6 @@ object Multimodal {
       .repartition(math.max(1, spark.sparkContext.defaultParallelism),
         col("doc_id"))
       .mapPartitions { rows =>
-        memCachedImageIO()
         rows.flatMap { r =>
           val id = r.getLong(0)
           val w = 8 + (id % 8).toInt
@@ -477,28 +469,13 @@ object Multimodal {
           val nf = 6 + (id % 4).toInt
           (0 until nf).map { fi =>
             val base = (((id + fi / DecodedSceneLen) % 4) * 64).toInt
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val raster = img.getRaster
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                raster.setSample(x, y, 0, base + (x * 7 + y * 13) % 32)
-                x += 1
-              }
-              y += 1
-            }
             // the real codec round-trip: compressed bytes in the
             // middle, the feature comes off the DECODED raster
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            val dec = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bos.toByteArray))
+            val dec = decoded(grayPng(w, h)((x, y) => base + (x * 7 + y * 13) % 32))
             require(dec != null, s"undecodable frame $fi of doc $id")
             val dr = dec.getRaster
             var sum = 0L
-            y = 0
+            var y = 0
             while (y < dec.getHeight) {
               var x = 0
               while (x < dec.getWidth) {

@@ -12,4 +12,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Free a persisted RDD's blocks the way the ContextCleaner does:
+    * `RDD.unpersist` logs a warning for every locally checkpointed RDD. */
+  def unpersistRdd(sc: org.apache.spark.SparkContext, id: Int): Unit =
+    sc.unpersistRDD(id, blocking = false)
 }

@@ -448,43 +448,49 @@ class CorpusSpec extends AnyFunSuite {
     }
   }
 
+  /** `body` with every materialization written through to `graft-pool`
+    * parquet (the executor-loss-tolerant mode). */
+  private def parquetRounds[A](body: => A): A = {
+    spark.conf.set("spark.graft.pool.materialize", "parquet")
+    try body finally spark.conf.unset("spark.graft.pool.materialize")
+  }
+
+  /** True when `df` reads files under a `graft-pool` dir. */
+  private def readsPool(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.inputFiles.exists(f => java.nio.file.Paths.get(new java.net.URI(f))
+      .getParent.getFileName.toString.startsWith("graft-pool"))
+
   test("reliable-checkpoint mode produces the same labeling and writes checkpoints") {
     import spark.implicits._
     import graft.operators.Dedup
-    val dir = graft.TempDirs.create("graft-ckpt")
     val docs = (1L to 30L).toDF("doc_id")
     val pairs = (1L until 30L by 3).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val local = Dedup.clustersFrom(docs, pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val reliable = Dedup.clustersFrom(docs, pairs,
-        checkpointDir = Some(dir)).collect()
+    val result = parquetRounds(Dedup.clustersFrom(docs, pairs))
+    val reliable = result.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(reliable == local)
-    // the reliable path actually wrote RDD checkpoints into the dir
-    def anyFile(f: java.io.File): Boolean =
-      f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-    assert(anyFile(new java.io.File(dir)), s"no checkpoint data under $dir")
+    // the reliable path materialized its rounds as graft-pool parquet
+    assert(readsPool(result), result.inputFiles.toSeq)
   }
 
   test("reliable-checkpoint mode reproduces q_dup_clusters_lsh at sf0.1 (bench-adjacent)") {
-    // guards the checkpoint() path against bit-rot at a real data
+    // guards the parquet round path against bit-rot at a real data
     // scale: the toy case above can't catch per-round write/read
     // regressions that only surface with actual shuffle partitions
     import graft.operators.Dedup
     val big = "/root/testdata/sf0.1"
-    val dir = graft.TempDirs.create("graft-ckpt-lsh")
     try {
       val docs = graft.Tables.load(spark, big, "documents").select(col("doc_id"))
       val pairs = Dedup.minhashLsh(spark, big).select(col("doc_a"), col("doc_b"))
       val default = Dedup.nearDupClustersLsh(spark, big).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      val reliable = Dedup.clustersFrom(docs, pairs,
-          checkpointDir = Some(dir)).collect()
+      val result = parquetRounds(Dedup.clustersFrom(docs, pairs))
+      val reliable = result.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(reliable == default)
-      def anyFile(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-      assert(anyFile(new java.io.File(dir)), s"no checkpoint data under $dir")
+      assert(readsPool(result), result.inputFiles.toSeq)
     } finally {
       // sf0.1 blocks must not outlive this test — shingle persist AND
       // the r17 session-pooled kernel checkpoints (minhash pairs,

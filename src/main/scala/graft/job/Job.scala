@@ -8,6 +8,7 @@ import graft.model._
 import graft.status.{JobRegistry, JobStatusInfo, ObjectStatus}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions.{count, lit}
 
 import java.time.Instant
@@ -51,7 +52,9 @@ case class JobContext(
   * one Spark job where its scan allows: with k the partition count of
   * the planned scan, k == n writes the scan as it is, k > n with
   * n ≥ defaultParallelism coalesces, and anything else repartitions
-  * (see `layout`).
+  * (see `layout`). An IMPORT whose rewrite would write the table the
+  * dump already holds copies the dump's part files instead and runs no
+  * Spark job (see `plan`).
   */
 case class DataPumpJob(
     operation: Operation,
@@ -64,6 +67,7 @@ case class DataPumpJob(
     jobOwner: String = "spark",
     explicitJobName: Option[String] = None,
     versioned: Boolean = false) {
+  import DataPumpJob.{CopyParts, Plan, Write}
 
   private val mapper =
     new ObjectMapper().registerModule(DefaultScalaModule)
@@ -257,6 +261,15 @@ case class DataPumpJob(
     val transforms = effects.collect { case Effect.PlanTransform(f) => f }
     val estimateOnly = effects.contains(Effect.EstimateOnly)
     val departition = effects.contains(Effect.Departition)
+    // IMPORT may copy a dump table's part files instead of rewriting its
+    // rows when nothing would change them: no row transform, no reader
+    // or writer option, PARALLEL (not TARGET_FILE_SIZE) sets the file
+    // count, and the write creates or replaces the target. `plan` makes
+    // the per-object rest of the decision from the dump's files.
+    val copyable = operation == Operation.Import && transforms.isEmpty &&
+      readerOpts.isEmpty && writerOpts.isEmpty && targetFileBytes.isEmpty &&
+      !truncate &&
+      (saveMode == SaveMode.Overwrite || saveMode == SaveMode.ErrorIfExists)
     val schemaRemaps = effects.collect {
       case Effect.IdentityRemap("SCHEMA", f, t) => f.toLowerCase -> t
     }.toMap
@@ -315,19 +328,34 @@ case class DataPumpJob(
           startedAt = started, finishedAt = None))
     }
 
-    def moveOne(srcSchema: String, table: String): ObjectStatus = {
+    // each object's on-disk source bytes (driver-side FS metadata, no
+    // scan): the live tier's expected input, TARGET_FILE_SIZE's measure
+    // and the worker pool's start order
+    val srcBytes: IndexedSeq[Long] = selected.toIndexedSeq.map { case (s, t) =>
+      if (estimateOnly) 0L
+      else try pathBytes(spark, srcPathOf(s, t)) catch { case NonFatal(_) => 0L }
+    }
+
+    def moveOne(i: Int): ObjectStatus = {
+      val (srcSchema, table) = selected(i)
       val t0 = System.nanoTime()
       val targetTable = tableRemaps.getOrElse(table, table)
       val targetSchema = targetSchemaOf(srcSchema)
       val outPath = s"$storageTarget/$targetSchema/$targetTable"
       val srcPath = srcPathOf(srcSchema, table)
       try {
+        // STOP cancels the job group's running and future Spark jobs; an
+        // object that would run none (a copy) stops here
+        if (JobRegistry.stopRequested(name))
+          throw new java.util.concurrent.CancellationException(
+            s"job $name stopped by user request")
         val srcFormat = operation match {
           case Operation.Import => detectFormat(spark, srcPath)
           case _ => "parquet"
         }
-        val df0 = readTable(spark, srcPath, readerOpts, srcFormat)
-        val df = transforms.foldLeft(df0)((d, f) => f(d))
+        // built only by the paths that read rows: a copy reads footers
+        lazy val df0 = readTable(spark, srcPath, readerOpts, srcFormat)
+        lazy val df = transforms.foldLeft(df0)((d, f) => f(d))
         if (estimateOnly || operation == Operation.SqlFile) {
           // ESTIMATE_ONLY (directives.py:304-305): stats, no movement.
           val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -355,7 +383,7 @@ case class DataPumpJob(
           // DEPARTITION combo writes append onto previously promoted
           // tables through the very same hole otherwise.
           def guardInPlaceWrite(outP: String,
-              incoming: org.apache.spark.sql.types.StructType): Unit = {
+              incoming: => org.apache.spark.sql.types.StructType): Unit = {
             val existingFormat =
               if ((truncate || saveMode == SaveMode.Append) &&
                 exists(spark, outP)) Some(detectFormat(spark, outP))
@@ -440,25 +468,30 @@ case class DataPumpJob(
             ObjectStatus(table, "SKIPPED", 0, 0, secsSince(t0), None, srcSchema)
           } else {
             guardInPlaceWrite(outPath, df.schema)
-            // Row count observed ON the write itself — a second full
-            // scan of what was just written would double read I/O
-            // (tens of redundant TB at the 100 TB design point).
-            val obs = Observation()
             // File count: PARALLEL (%U dump-set layout) unless
             // TARGET_FILE_SIZE bounds it by measured source bytes —
             // driver-side FS metadata, no scan. (DEPARTITION combos
             // above size per promoted table from the combo's own file
             // index share.)
             val nParts = targetFileBytes match {
-              case Some(b) =>
-                partsFor(pathBytes(spark, srcPath), b)
+              case Some(b) => partsFor(srcBytes(i), b)
               case None => parallel
             }
-            val shape = layout(df, nParts)
-            writeTable(shape(df.observe(obs, count(lit(1)).as("rows"))),
-              outPath, saveMode, writerOpts, writeFormat)
-            ObjectStatus(table, "COMPLETED",
-              obs.get("rows").asInstanceOf[Long],
+            val rows = plan(spark, df, nParts,
+                Option.when(copyable && srcFormat == "parquet")(srcPath)) match {
+              case CopyParts(files, footerRows) =>
+                copyParts(spark, files, outPath, saveMode)
+                footerRows
+              case Write(shape) =>
+                // Row count observed ON the write itself — a second full
+                // scan of what was just written would double read I/O
+                // (tens of redundant TB at the 100 TB design point).
+                val obs = Observation()
+                writeTable(shape(df.observe(obs, count(lit(1)).as("rows"))),
+                  outPath, saveMode, writerOpts, writeFormat)
+                obs.get("rows").asInstanceOf[Long]
+            }
+            ObjectStatus(table, "COMPLETED", rows,
               pathBytes(spark, outPath), secsSince(t0), None, srcSchema)
           }
         }
@@ -470,15 +503,9 @@ case class DataPumpJob(
     }
 
     // Live within-object progress: expected input volume is the sum of
-    // the selected sources' on-disk bytes (driver-side FS metadata, no
-    // scan); the listener accumulates task-level bytesRead for this
-    // job group only.
-    val expectedBytes =
-      if (estimateOnly) 0L
-      else selected.map { case (s, t) =>
-        try pathBytes(spark, srcPathOf(s, t)) catch { case NonFatal(_) => 0L }
-      }.sum
-    val liveTier = new graft.status.LiveProgress(name, expectedBytes)
+    // the selected sources' on-disk bytes; the listener accumulates
+    // task-level bytesRead for this job group only.
+    val liveTier = new graft.status.LiveProgress(name, srcBytes.sum)
     spark.sparkContext.addSparkListener(liveTier)
     JobRegistry.attachLive(name, liveTier)
     try {
@@ -488,18 +515,20 @@ case class DataPumpJob(
       // serialize one Spark write job per table. Spark schedules
       // concurrent actions from separate driver threads; parallelism
       // INSIDE each action is still the cluster scheduler's job.
+      // Objects start largest first, so the longest one does not wait
+      // for a worker to free up; results keep `selected` order.
       val workers = math.max(1, math.min(parallel, math.max(1, selected.size)))
       if (workers <= 1 || selected.size <= 1) {
-        selected.zipWithIndex.foreach { case ((s, t), i) =>
-          resultByIdx.put(i, moveOne(s, t)); publishProgress()
+        selected.indices.foreach { i =>
+          resultByIdx.put(i, moveOne(i)); publishProgress()
         }
       } else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
         try {
-          val futures = selected.zipWithIndex.map { case ((s, t), i) =>
+          val futures = selected.indices.sortBy(i => -srcBytes(i)).map { i =>
             pool.submit(new java.util.concurrent.Callable[Unit] {
               def call(): Unit = {
-                resultByIdx.put(i, moveOne(s, t)); publishProgress()
+                resultByIdx.put(i, moveOne(i)); publishProgress()
               }
             })
           }
@@ -624,9 +653,9 @@ case class DataPumpJob(
     fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && isSchemaDirName(s.getPath.getName))
       .flatMap { schemaDir =>
-        fs.listStatus(schemaDir.getPath).filter(_.isDirectory).map { td =>
-          schemaDir.getPath.getName -> td.getPath.getName
-        }
+        fs.listStatus(schemaDir.getPath)
+          .filter(s => s.isDirectory && !FooterBridge.hidden(s.getPath.getName))
+          .map(td => schemaDir.getPath.getName -> td.getPath.getName)
       }.sorted
   }
 
@@ -708,6 +737,72 @@ case class DataPumpJob(
     * `target` bytes, at least one file and at most 2²⁰. */
   private def partsFor(bytes: Long, target: Long): Int =
     math.min(1L << 20, math.max(1L, (bytes + target - 1) / target)).toInt
+
+  /** The one copy-or-write decision. `copyFrom` is a parquet dump table
+    * dir whose job allows a copy; it is copied when a rewrite of it
+    * would write the same table: the dir is flat, holds exactly n data
+    * files, and their footers say this session's writer would have
+    * written them as they are (`ParquetSchema.sessionWritten`). Decided
+    * on the driver, from the listing and the footers; `df` is built
+    * only for a write. */
+  private def plan(spark: SparkSession, df: => DataFrame, n: Int,
+      copyFrom: Option[String]): Plan =
+    copyFrom.flatMap { dir =>
+      val p = new Path(dir)
+      val listed = p.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(p).toSeq.filterNot(s => FooterBridge.hidden(s.getPath.getName))
+        .sortBy(_.getPath.toString)
+      // a summary file (`_metadata`, which the listing keeps) is no data file
+      if (listed.size != n ||
+          listed.exists(s => !s.isFile || s.getPath.getName.startsWith("_"))) None
+      else graft.sources.ParquetSchema.sessionWritten(spark, listed)
+        .map(CopyParts(listed.map(_.getPath), _))
+    }.getOrElse(Write(layout(df, n)))
+
+  /** Land `files` byte for byte as the table at `path`, through a
+    * `_`-prefixed staging dir beside it that no table listing sees,
+    * renamed into place after the last file (with Spark's `_SUCCESS`
+    * marker): a failure leaves neither a half-copied table nor the
+    * staging dir. Overwrite replaces an existing table at the rename;
+    * ErrorIfExists fails on one before copying. Each file's head magic
+    * is checked on the way (its footer read checked the tail). */
+  private def copyParts(spark: SparkSession, files: Seq[Path], path: String,
+      mode: SaveMode): Unit = {
+    import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
+    val conf = spark.sessionState.newHadoopConf()
+    val out = new Path(path)
+    val fs = out.getFileSystem(conf)
+    def taken() = new org.apache.hadoop.fs.FileAlreadyExistsException(
+      s"path $path already exists")
+    if (mode == SaveMode.ErrorIfExists && fs.exists(out)) throw taken()
+    val staging = new Path(out.getParent,
+      s"_copying-${out.getName}-${java.util.UUID.randomUUID}")
+    try {
+      files.foreach { f =>
+        val in = f.getFileSystem(conf).open(f)
+        try {
+          val magic = new Array[Byte](4)
+          in.readFully(magic)
+          if (new String(magic, "US-ASCII") != "PAR1")
+            throw new java.io.IOException(s"$f has no parquet magic at its head")
+          val o = fs.create(new Path(staging, f.getName), false)
+          try {
+            o.write(magic)
+            org.apache.hadoop.io.IOUtils.copyBytes(in, o, 1 << 16)
+          } finally o.close()
+        } finally in.close()
+      }
+      if (conf.getBoolean(FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, true))
+        fs.create(new Path(staging, FileOutputCommitter.SUCCEEDED_FILE_NAME), false)
+          .close()
+      if (mode == SaveMode.Overwrite) fs.delete(out, true)
+      else if (fs.exists(out)) throw taken()
+      if (!fs.rename(staging, out))
+        throw new java.io.IOException(s"could not rename $staging to $path")
+    } catch {
+      case NonFatal(e) => fs.delete(staging, true); throw e
+    }
+  }
 
   /** How a frame is laid out for a write of exactly n part files, as a
     * function applied to the (observed) frame. With k the partition
@@ -814,6 +909,13 @@ case class DataPumpJob(
 }
 
 object DataPumpJob {
+  /** How one object lands as a table of n part files. */
+  private sealed trait Plan
+  /** Copy the dump's part files as they are; `rows` from their footers. */
+  private final case class CopyParts(files: Seq[Path], rows: Long) extends Plan
+  /** Write the (observed) frame in `shape` (see `layout`). */
+  private final case class Write(shape: DataFrame => DataFrame) extends Plan
+
   /** Read a dump dir's `_metadata.json` sidecar (the attach recovery
     * source and the consumer-facing provenance record: tables,
     * directives, per-schema tablespace + source version). */

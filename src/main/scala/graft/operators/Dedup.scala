@@ -869,8 +869,9 @@ object Dedup {
     // the whole pair join there
     val nodes = graft.CachePool.scratch(
       edges.select(col("src").as("doc_id")).distinct())
+    // round 0 only projects the materialized nodes: no eager job of its own
     val init = nodes.select(col("doc_id"), col("doc_id").as("label"))
-    val cc = Rounds.iterate("cc", graft.CachePool.materialize(init),
+    val cc = Rounds.iterate("cc", graft.CachePool.Held(init),
         maxIter) { state =>
       val labels = state.select(col("doc_id"), col("label"))
       val neighborMin = edges
@@ -913,7 +914,7 @@ object Dedup {
     // either failing or (worse) silently emitting wrong labels
     val graphLabels =
       if (cc.halted) cc.state.select(col("doc_id"), col("label"))
-      else starLabels(edges)
+      else starLabels(edges, nodes)
     val singletons = docs
       .join(nodes, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("label"))
@@ -934,10 +935,12 @@ object Dedup {
     * contracts any graph to per-component stars in O(log²n) rounds —
     * the fallback for graphs whose diameter defeats min-label
     * propagation (a 10⁶-long chain converges in ~20 rounds here vs
-    * 10⁶ there). Input must be the symmetric edge set; returns
-    * (doc_id, label) for every graph node, label = component minimum.
+    * 10⁶ there). Input must be the symmetric edge set and its nodes
+    * (`doc_id`); returns (doc_id, label) for every node, label =
+    * component minimum.
     */
-  private def starLabels(edgesSym: DataFrame, maxRounds: Int = 50): DataFrame = {
+  private def starLabels(edgesSym: DataFrame, nodes: DataFrame,
+      maxRounds: Int = 50): DataFrame = {
     // convergence = edge-set fixpoint, detected by (count, hash-sum)
     // checksum equality — two scalar aggregates per round, no collect.
     // Each term is pmod-bounded below 2³⁰ so the long sum cannot
@@ -951,8 +954,9 @@ object Dedup {
       prev = cs
       Rounds.Verdict(cs._1, same)
     }
-    // the state is directed (src > dst); a self-loop reaches no star
-    // output, so dropping self-loops from the input is exact
+    // the state is directed (src > dst), so self-loops are dropped: they
+    // join no two nodes. A node whose only edge is a self-loop is then
+    // in no star, and labels itself below as a root.
     val star = Rounds.iterate("cc-star",
         graft.CachePool.Held(edgesSym.filter(col("src") > col("dst"))),
         maxRounds) { cur =>
@@ -977,11 +981,10 @@ object Dedup {
     require(star.halted,
       s"star contraction did not converge within $maxRounds rounds")
     // fixpoint is a star forest: every non-root points at its component
-    // minimum; roots (appearing only as dst) label themselves
-    val cur = star.state
-    val pointed = cur.select(col("src").as("doc_id"), col("dst").as("label"))
-    val roots = cur.select(col("dst").as("doc_id")).distinct()
-      .join(pointed, Seq("doc_id"), "left_anti")
+    // minimum; every other node is a root and labels itself
+    val pointed = star.state
+      .select(col("src").as("doc_id"), col("dst").as("label"))
+    val roots = nodes.join(pointed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("label"))
     pointed.union(roots)
   }
@@ -1004,7 +1007,6 @@ object Dedup {
   private val Bs: Seq[Long] =
     (1 to NumHashes).map(i =>
       scala.util.hashing.byteswap32((i + 977) * 40503).toLong.abs % P)
-  private val AbPairs: Seq[(Long, Long)] = As.zip(Bs)
 
   /** Per-doc MinHash signature: shingle → 31-bit base hash →
     * (aᵢ·h+bᵢ) mod P per component, min over shingles. The base hash

@@ -96,8 +96,9 @@ object Graph {
     // halves per-round scheduling overhead at a bounded cost — lineage
     // depth never exceeds two rounds, far under the compounding that
     // motivated per-round materialization ([[Rounds]])
+    // round 0 only projects the persisted nodes: no eager job of its own
     val init = nodes.select(col("node"), lit(s0).as("s"))
-    val score = Rounds.iterate("pagerank", graft.CachePool.materialize(init),
+    val score = Rounds.iterate("pagerank", graft.CachePool.Held(init),
         iters, everyK = 2) { score =>
       // the teleport term rides a zero-contribution row per node
       // through the SAME aggregation, so nodes without in-edges need
@@ -497,8 +498,9 @@ object Graph {
     val sym = sym0
       .repartition(if (broadcastLabels) col("src") else col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // round 0 only projects the persisted nodes: no eager job of its own
     val init = nodes.select(col("v"), col("v").as("label"))
-    val labels = Rounds.iterate("lpa", graft.CachePool.materialize(init),
+    val labels = Rounds.iterate("lpa", graft.CachePool.Held(init),
         rounds) { state =>
       val labels = state.select(col("v"), col("label"))
       val renamed = labels.select(col("v").as("u"), col("label"))

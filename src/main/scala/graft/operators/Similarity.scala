@@ -34,8 +34,6 @@ object Similarity {
     */
   val Q: Double = 67108864.0 // 2^26
 
-  private def iq(x: Column): Column = floor(x.cast("double") * Q).cast("long")
-
   /** Per-vector quantized norms & dimension — the sanity projection.
     * norm_sq is on the Q² grid (divide by 2⁵² for the real value).
     * Quantize once, then one codegen'd `dot_long` — the interpreted
@@ -517,14 +515,12 @@ object Similarity {
   }
 
   /** Multi-probe LSH: a query probes its own bucket plus every
-    * Hamming-distance-1 neighbor bucket — recovering near-dups that
-    * straddle a single hyperplane boundary for a 13× probe fan-out
-    * instead of 13 independent hash tables (the standard multi-probe
-    * trade: fan-out is cheap rows, tables are whole extra indexes). */
-  def multiProbeBuckets(iv: Column): Column = multiProbeBucketsT(iv, 0)
-
-  /** Hamming≤1 probe set over hyperplane family `table` — the
-    * per-table probe fan-out of the near-dup pair kernel. */
+    * Hamming-distance-1 neighbor bucket of hyperplane family `table` —
+    * recovering near-dups that straddle a single hyperplane boundary
+    * for a 13× probe fan-out instead of 13 independent hash tables (the
+    * standard multi-probe trade: fan-out is cheap rows, tables are
+    * whole extra indexes). The per-table probe fan-out of the near-dup
+    * pair kernel. */
   def multiProbeBucketsT(iv: Column, table: Int): Column = {
     val base = lshBucketT(iv, table)
     array((base +: (0 until SignBits).map(p =>

@@ -3,10 +3,13 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.{FooterBridge, ParquetOptions}
+import org.apache.spark.sql.execution.datasources.parquet.{FooterBridge, ParquetOptions, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** A parquet dataset's schema read on the driver, from the one footer
   * Spark's non-merging inference would read, through Spark's own
@@ -38,6 +41,35 @@ object ParquetSchema {
   /** The same schema from a footer the caller already holds. */
   def of(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
     FooterBridge.readSchema(spark, Seq(new Footer(file, footer))).get
+
+  /** Row count of the parquet `files` when this session's writer, fed
+    * their rows, would write them as they are: every footer is
+    * cleartext and carries Spark's row-metadata schema, one schema for
+    * all of them, the parquet schema the writer produces for it
+    * (`SparkToParquetSchemaConverter` under the session conf), and the
+    * session codec in every column chunk. None otherwise, and when a
+    * footer does not read. Footers only, on the driver. */
+  def sessionWritten(spark: SparkSession, files: Seq[FileStatus]): Option[Long] =
+    try {
+      val conf = spark.sessionState.conf
+      val footers = FooterBridge.readFooters(spark.sessionState.newHadoopConf(),
+        files, ignoreCorruptFiles = false, rowGroups = true)
+      val codec = new ParquetOptions(Map.empty[String, String], conf)
+        .compressionCodecClassName
+      val schemas = footers.map(f => FooterBridge.readSchema(spark, Seq(f)))
+      val message = schemas.headOption.flatten
+        .map(new SparkToParquetSchemaConverter(conf).convert)
+      val same = footers.zip(schemas).forall { case (f, schema) =>
+        val meta = f.getParquetMetadata.getFileMetaData
+        meta.getEncryptionType == FileMetaData.EncryptionType.UNENCRYPTED &&
+          meta.getKeyValueMetaData.containsKey(FooterBridge.RowMetadataKey) &&
+          schema == schemas.head && message.contains(meta.getSchema) &&
+          f.getParquetMetadata.getBlocks.asScala.forall(
+            _.getColumns.asScala.forall(_.getCodec.name == codec))
+      }
+      Option.when(footers.nonEmpty && same)(footers.map(
+        _.getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum)
+    } catch { case NonFatal(_) => None }
 
   /** The file Spark's non-merging inference reads: `_common_metadata`,
     * else `_metadata`, else the first data file by path, over the same

@@ -123,7 +123,10 @@ object DeliveryHarness {
     * a real deployment points at a landing dir). */
   private[streaming] def tableStream(spark: SparkSession, sf: String,
       table: String): DataFrame = {
-    val schema = spark.read.parquet(Tables.path(sf, table)).schema
+    // one footer read on the driver; inference would run a Spark job
+    val path = Tables.path(sf, table)
+    val schema = graft.sources.ParquetSchema.of(spark, path)
+      .getOrElse(spark.read.parquet(path).schema)
     spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$table.parquet")
       .parquet(sf.stripSuffix("/"))

@@ -419,6 +419,20 @@ class CorpusSpec extends AnyFunSuite {
     assert(ccL.length == 120 && ccL.forall(_.getLong(1) == 1L))
   }
 
+  test("a doc whose only pair is a self-loop is its own cluster on both paths") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // doc 1 is a graph node through (1, 1) alone; maxIter = 0 forces the
+    // star-contraction fallback, which drops self-loops
+    val docs = Seq(1L, 2L, 3L).toDF("doc_id")
+    val pairs = Seq((1L, 1L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val want = Seq((1L, 1L, 1L), (2L, 2L, 2L), (3L, 2L, 2L))
+    def got(maxIter: Int) = Dedup.clustersFrom(docs, pairs, maxIter).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got(25) == want)
+    assert(got(0) == want)
+  }
+
   test("star contraction matches union-find across seeded random graphs") {
     import spark.implicits._
     import graft.operators.Dedup

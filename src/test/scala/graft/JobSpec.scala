@@ -23,23 +23,24 @@ class JobSpec extends AnyFunSuite {
   private class GroupMetrics(group: String)
       extends org.apache.spark.scheduler.SparkListener {
     private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    private val jobIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val recordsRead = new java.util.concurrent.atomic.AtomicLong()
     val scanTasks = new java.util.concurrent.atomic.AtomicInteger()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger()
     val shuffleWriteBytes = new java.util.concurrent.atomic.AtomicLong()
+    private val marker = s"$group/settle"
+    private val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val markerEnded = new java.util.concurrent.CountDownLatch(1)
     override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      if (js.properties != null &&
-          group == js.properties.getProperty("spark.jobGroup.id")) {
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
+      if (g.contains(group)) {
         js.stageIds.foreach(id => stages.add(id))
-        jobIds.add(js.jobId)
         jobs.incrementAndGet()
-      }
+      } else if (g.contains(marker)) markerIds.add(js.jobId)
+    }
     override def onJobEnd(
         je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      if (jobIds.contains(je.jobId)) jobsEnded.incrementAndGet()
+      if (markerIds.contains(je.jobId)) markerEnded.countDown()
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
       if (stages.contains(te.stageId) && te.taskMetrics != null) {
@@ -49,13 +50,15 @@ class JobSpec extends AnyFunSuite {
         shuffleWriteBytes.addAndGet(
           te.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
-    /** Block until the bus has delivered the end of every job the group
-      * started (task ends precede their job's end on the bus). */
+    /** Block until the bus has delivered every event the group's jobs
+      * posted: a listener sees events in order, so once the end of a
+      * marker job run after them arrives, so have they — also when the
+      * group ran no job at all. */
     def settle(): Unit = {
-      val deadline = System.currentTimeMillis() + 10000
-      while ((jobs.get() == 0 || jobsEnded.get() < jobs.get()) &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      val sc = spark.sparkContext
+      sc.setJobGroup(marker, "settle")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnded.await(10, java.util.concurrent.TimeUnit.SECONDS))
     }
   }
 
@@ -70,6 +73,20 @@ class JobSpec extends AnyFunSuite {
 
   private def partFiles(dir: String): Int =
     new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+
+  /** The data files of a table dir, by name. */
+  private def parts(dir: String): Map[String, java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> f).toMap
+
+  /** Whether `copy` holds exactly `dump`'s part files, byte for byte. */
+  private def sameParts(dump: String, copy: String): Boolean = {
+    val (d, c) = (parts(dump), parts(copy))
+    d.nonEmpty && d.keySet == c.keySet && d.forall { case (n, f) =>
+      java.util.Arrays.equals(Files.readAllBytes(f.toPath),
+        Files.readAllBytes(c(n).toPath))
+    }
+  }
 
   /** Run a job under its own job group with a GroupMetrics attached. */
   private def metered(group: String)(job: Option[String] => DataPumpJob)
@@ -748,21 +765,201 @@ class JobSpec extends AnyFunSuite {
     assert(q.totalRows == 40000)
     assert(partFiles(s"$filtered/main/more") == n)
 
-    // the n-file dump imports with PARALLEL n: one job per table, no
-    // shuffle, and still n files
+    // the n-file dump imports with PARALLEL n as a copy of its part
+    // files: no Spark job, and the same n files byte for byte
     val tgt = tmp("jobspec-layout-tgt")
     val (imp, m) = metered("JOBSPEC-LAYOUT-IMP") { group =>
       DataPumpJob(Operation.Import, JobMode.Full, dump, tgt,
         directives = Seq(Parallel(n)), explicitJobName = group)
     }
     assert(imp.state == JobState.Completed, imp.errors)
-    assert(m.jobs.get() == tables.size,
-      s"${m.jobs.get()} Spark jobs for ${tables.size} tables")
+    assert(m.jobs.get() == 0, s"${m.jobs.get()} Spark jobs for ${tables.size} tables")
     assert(m.shuffleWriteBytes.get() == 0)
     tables.foreach { t =>
       assert(partFiles(s"$tgt/main/$t") == n, t)
+      assert(sameParts(s"$dump/main/$t", s"$tgt/main/$t"), t)
       assert(digest(s"$tgt/main/$t") == digest(s"$src/$t.parquet"), t)
     }
+  }
+
+  /** A table dir's first part file's parquet schema and Spark
+    * row-metadata schema, as its footer holds them. */
+  private def footerSchemas(dir: String): (String, String) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val f = parts(dir).toSeq.minBy(_._1)._2
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.toURI), spark.sessionState.newHadoopConf()))
+    try {
+      val meta = r.getFooter.getFileMetaData
+      (meta.getSchema.toString, meta.getKeyValueMetaData.get(org.apache.spark.sql
+        .execution.datasources.parquet.FooterBridge.RowMetadataKey))
+    } finally r.close()
+  }
+
+  test("IMPORT copies a Spark-written dump's part files; the copy reads back as the rewrite") {
+    // every sf0.01 table: events' ns timestamps as long, embeddings'
+    // arrays, documents' text
+    val sf01 = new java.io.File(sf).toPath.resolveSibling("sf0.01").toString
+    val dump = tmp("jobspec-copy-dump")
+    val exp = DataPumpJob(Operation.Export, JobMode.Full, sf01, dump,
+      directives = Seq(Parallel(2))).run(spark)
+    assert(exp.state == JobState.Completed, exp.errors)
+    assert(exp.objects.map(_.objectName).sorted == Tables.all.sorted)
+    val copied = tmp("jobspec-copy-copied")
+    val (cp, mc) = metered("JOBSPEC-COPY") { group =>
+      DataPumpJob(Operation.Import, JobMode.Full, dump, copied,
+        directives = Seq(Parallel(2)), explicitJobName = group)
+    }
+    // APPEND onto an absent table writes what a create writes, through
+    // the rewrite
+    val rewritten = tmp("jobspec-copy-rewritten")
+    val (rw, mr) = metered("JOBSPEC-COPY-RW") { group =>
+      DataPumpJob(Operation.Import, JobMode.Full, dump, rewritten,
+        directives = Seq(Parallel(2), TableExistsAction("APPEND")),
+        explicitJobName = group)
+    }
+    assert(cp.state == JobState.Completed, cp.errors)
+    assert(rw.state == JobState.Completed, rw.errors)
+    assert(mc.jobs.get() == 0, s"${mc.jobs.get()} Spark jobs in the copy")
+    assert(mr.jobs.get() >= Tables.all.size, s"${mr.jobs.get()} Spark jobs in the rewrite")
+    def rows(i: graft.status.JobStatusInfo) =
+      i.objects.map(o => o.objectName -> o.rows).toMap
+    assert(rows(cp) == rows(rw) && rows(cp) == rows(exp))
+    Tables.all.foreach { t =>
+      val (d, c, r) = (s"$dump/main/$t", s"$copied/main/$t", s"$rewritten/main/$t")
+      assert(sameParts(d, c), t)
+      assert(parts(r).keySet.intersect(parts(d).keySet).isEmpty, t)
+      // StructType equality covers nullability and field metadata
+      assert(spark.read.parquet(c).schema == spark.read.parquet(r).schema, t)
+      assert(footerSchemas(c) == footerSchemas(r), t)
+      assert(digest(c) == digest(r) && digest(c) == digest(d), t)
+    }
+  }
+
+  test("IMPORT rewrites, one Spark job per table, wherever a copy could differ") {
+    // dumps of two part files per table, unless a case says otherwise
+    def dumpOf(dir: String, tables: Seq[String], more: Directive*): String = {
+      val e = DataPumpJob(Operation.Export, JobMode.Table, sf, dir,
+        directives = IncludeTable(tables) +: more).run(spark)
+      assert(e.state == JobState.Completed, e.errors)
+      dir
+    }
+    val two = Seq("nation", "customer")
+    val plain = dumpOf(tmp("jobspec-nocopy-plain"), two, Parallel(2))
+    // more files than cores: PARALLEL 4 reads them in 4 scan partitions
+    val eight = dumpOf(tmp("jobspec-nocopy-eight"), two, Parallel(8))
+    val one = dumpOf(tmp("jobspec-nocopy-one"), two)
+    val zstd = dumpOf(tmp("jobspec-nocopy-zstd"), two, Parallel(2),
+      Compression("ALL"), CompressionAlgorithm("HIGH"))
+    val enc = Seq(Encryption("ALL"), EncryptionPassword("s3cret-pw"))
+    val encrypted = dumpOf(tmp("jobspec-nocopy-enc"), two, Parallel(2) +: enc: _*)
+    val keyed = {
+      import graft.sources.ParquetCrypto
+      Map(ParquetCrypto.FactoryClassKey -> ParquetCrypto.FactoryClass,
+        ParquetCrypto.KmsClassKey -> classOf[graft.sources.GraftKms].getName,
+        ParquetCrypto.PasswordConf -> "s3cret-pw")
+    }
+    // the fixture's own files: written by pyarrow, no Spark row schema
+    val pyarrow = tmp("jobspec-nocopy-pyarrow")
+    two.foreach { t =>
+      val d = new java.io.File(s"$pyarrow/main/$t"); d.mkdirs()
+      Files.copy(new java.io.File(Tables.path(sf, t)).toPath,
+        new java.io.File(d, "part-00000.parquet").toPath)
+    }
+    // a Spark write of a non-nullable column: `required` in the file,
+    // `optional` in a rewrite
+    val required = tmp("jobspec-nocopy-required")
+    spark.range(0, 100, 1, 2).write.parquet(s"$required/main/ids")
+    // (case, dump, tables, import directives, reader options)
+    val cases = Seq(
+      ("COMPRESSION", plain, two, Seq(Parallel(2), Compression("ALL")), Map.empty[String, String]),
+      ("codec", zstd, two, Seq(Parallel(2)), Map.empty[String, String]),
+      ("PARALLEL", eight, two, Seq(Parallel(4)), Map.empty[String, String]),
+      // a QUERY that keeps every row and plans away: still a rewrite
+      ("QUERY", plain, two, Seq(Parallel(2), Query("1 = 1")), Map.empty[String, String]),
+      ("ENCRYPTION", encrypted, two, Parallel(2) +: enc, keyed),
+      ("APPEND", plain, two, Seq(Parallel(2), TableExistsAction("APPEND")), Map.empty[String, String]),
+      ("TRUNCATE", plain, two, Seq(Parallel(2), TableExistsAction("TRUNCATE")), Map.empty[String, String]),
+      ("TARGET_FILE_SIZE", one, two, Seq(TargetFileSize(1L << 30)), Map.empty[String, String]),
+      ("pyarrow", pyarrow, two, Nil, Map.empty[String, String]),
+      ("required", required, Seq("ids"), Seq(Parallel(2)), Map.empty[String, String]))
+    cases.foreach { case (label, dump, tables, dirs, opts) =>
+      val tgt = tmp(s"jobspec-nocopy-tgt")
+      val (imp, m) = metered(s"JOBSPEC-NOCOPY-$label") { group =>
+        DataPumpJob(Operation.Import, JobMode.Full, dump, tgt,
+          directives = dirs, explicitJobName = group)
+      }
+      assert(imp.state == JobState.Completed, s"$label: ${imp.errors}")
+      assert(m.jobs.get() == tables.size, s"$label: ${m.jobs.get()} Spark jobs")
+      tables.foreach { t =>
+        val (d, c) = (s"$dump/main/$t", s"$tgt/main/$t")
+        assert(parts(c).keySet.intersect(parts(d).keySet).isEmpty, s"$label $t")
+        assert(digest(c, opts) == digest(d, opts), s"$label $t")
+      }
+    }
+  }
+
+  test("IMPORT copy: REPLACE swaps whole tables, ErrorIfExists and STOP copy nothing") {
+    val tables = Seq("nation", "region")
+    def dumpOf(dir: String): String = {
+      val e = DataPumpJob(Operation.Export, JobMode.Table, sf, dir,
+        directives = Seq(IncludeTable(tables), Parallel(2))).run(spark)
+      assert(e.state == JobState.Completed, e.errors)
+      dir
+    }
+    val (a, b) = (dumpOf(tmp("jobspec-copy-a")), dumpOf(tmp("jobspec-copy-b")))
+    def listed(dir: String) = Option(new java.io.File(dir).list()).toSeq.flatten.sorted
+    val tgt = tmp("jobspec-copy-tgt")
+    val first = DataPumpJob(Operation.Import, JobMode.Full, a, tgt,
+      directives = Seq(Parallel(2))).run(spark)
+    assert(first.state == JobState.Completed, first.errors)
+    tables.foreach(t => assert(sameParts(s"$a/main/$t", s"$tgt/main/$t"), t))
+    // REPLACE: b's files and no part file of a, no Spark job, and no
+    // staging dir left beside the tables
+    val (rep, m) = metered("JOBSPEC-COPY-REPLACE") { group =>
+      DataPumpJob(Operation.Import, JobMode.Full, b, tgt,
+        directives = Seq(Parallel(2), TableExistsAction("REPLACE")),
+        explicitJobName = group)
+    }
+    assert(rep.state == JobState.Completed, rep.errors)
+    assert(m.jobs.get() == 0)
+    tables.foreach(t => assert(sameParts(s"$b/main/$t", s"$tgt/main/$t"), t))
+    assert(listed(s"$tgt/main") == tables.sorted)
+    // ErrorIfExists (no TABLE_EXISTS_ACTION) onto existing tables: every
+    // object FAILED, the tables untouched
+    val err = DataPumpJob(Operation.Import, JobMode.Full, a, tgt,
+      directives = Seq(Parallel(2))).run(spark)
+    assert(err.objects.forall(o => o.state == "FAILED" &&
+      o.error.exists(_.contains("already exists"))), err.objects)
+    tables.foreach(t => assert(sameParts(s"$b/main/$t", s"$tgt/main/$t"), t))
+    assert(listed(s"$tgt/main") == tables.sorted)
+    // a part file whose head lost its magic fails its object during the
+    // copy, leaving neither the table nor the staging dir
+    val broken = dumpOf(tmp("jobspec-copy-broken"))
+    val victim = parts(s"$broken/main/nation").values.head
+    val bytes = Files.readAllBytes(victim.toPath)
+    "XXXX".getBytes("US-ASCII").copyToArray(bytes)
+    Files.write(victim.toPath, bytes)
+    new java.io.File(victim.getParent, s".${victim.getName}.crc").delete()
+    val brokenTgt = tmp("jobspec-copy-broken-tgt")
+    val bad = DataPumpJob(Operation.Import, JobMode.Full, broken, brokenTgt,
+      directives = Seq(Parallel(2))).run(spark)
+    assert(bad.state == JobState.CompletedWithErrors, bad.state)
+    assert(bad.objects.exists(o => o.objectName == "nation" && o.state == "FAILED" &&
+      o.error.exists(_.contains("magic"))), bad.objects)
+    assert(listed(s"$brokenTgt/main") == Seq("region"))
+    // a STOP is checked before each object: requested before the job
+    // starts, it copies none
+    val stopTgt = tmp("jobspec-copy-stop")
+    JobRegistry.requestStop("JOBSPEC-COPY-STOP")
+    val stopped = DataPumpJob(Operation.Import, JobMode.Full, a, stopTgt,
+      directives = Seq(Parallel(2)),
+      explicitJobName = Some("JOBSPEC-COPY-STOP")).run(spark)
+    assert(stopped.state == JobState.Stopped, stopped.state)
+    assert(stopped.objects.forall(_.state == "FAILED"), stopped.objects)
+    assert(listed(s"$stopTgt/main").isEmpty)
+    assert(!JobRegistry.stopRequested("JOBSPEC-COPY-STOP"))
   }
 
   test("driver-side parquet schema equals Spark's inferred schema") {

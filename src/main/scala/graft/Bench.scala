@@ -60,13 +60,10 @@ import org.apache.spark.sql.SparkSession
   *     sweep's wall-clock (partial-sweep walls excluded — the r16
   *     advisory; no complete sweep → no extra sweep).
   *
-  * Harness-cost trim: Bench (and only Bench) sets [[BenchMode.fast]]
-  * (`SPARK_GRAFT_BENCH_FAST=0` to disable; `bench_fast` recorded in
-  * the artifact), which lets the `*_saved` rows and the in-place LM
-  * family publish their trained artifact once per JVM and serve
-  * later sweeps from the same bytes — per-sweep cost becomes the
-  * load+serve path those rows exist to measure. Verify never sets
-  * it; outputs are identical either way.
+  * One code path per row: Bench runs each query exactly as Verify
+  * does (the session from [[Sessions.build]], every `*_saved` row
+  * training and publishing its artifact in every sweep), so a timed
+  * row is a checked row.
   *
   * Output ordering: the COMPACT summary line prints FIRST AND LAST
   * (every round since r5 recorded `parsed: null` because the full
@@ -97,8 +94,8 @@ import org.apache.spark.sql.SparkSession
   *     artifact): [[CachePool.clear]] runs BEFORE EVERY QUERY, which
   *     drops every cross-query memo — pooled kernels and swap
   *     generations, the shingle frame and curate upstreams, the
-  *     IVF/PQ/SQ trainers, the fast-mode artifacts, resolved
-  *     relations, and the bucketed / date-partitioned join layouts —
+  *     IVF/PQ/SQ trainers, resolved relations, and the bucketed /
+  *     date-partitioned join layouts —
   *     so each row's time is its full from-parquet operator cost
   *     (q_bucketed_join and q_dpp_join included: they pay their
   *     layout write when cold). It is off by default; a cold
@@ -109,12 +106,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "2").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
     val watchdogK = sys.env.getOrElse("SPARK_GRAFT_WATCHDOG_K",
       BenchSchedule.WatchdogK.toString).toDouble
-    BenchMode.fast = sys.env.getOrElse("SPARK_GRAFT_BENCH_FAST", "1") != "0"
     val cold = sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD", "0") == "1"
     // committed per-query reference times (seconds, last quiet
     // artifact); missing/malformed file → empty map → r16 behavior
@@ -129,13 +124,7 @@ object Bench {
     }
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(graft.Sessions.NanosAsLongKey, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-bench")
     // Untimed warmup: the first shuffle/broadcast/window query in a
     // fresh JVM pays JIT + codegen + FS-metadata costs that would land
     // on whichever query happens to run first.
@@ -351,7 +340,6 @@ object Bench {
       s""""unit":"sec","sweeps":${sweepBuf.size},""" +
       s""""extra_sweeps":$extraSweeps,"skipped_sweeps":$skippedSweeps,""" +
       s""""partial_sweeps":$partialSweeps,""" +
-      s""""bench_fast":${if (BenchMode.fast) 1 else 0},""" +
       s""""bench_cold":${if (cold) 1 else 0},""" +
       s""""n_pool_builds":${poolBuilds.size},""" +
       s""""pool_build_sec":${num(poolBuildSec)},""" +

@@ -1,34 +1,5 @@
 package graft
 
-/** Session-wide switch distinguishing the TIMED bench surface from
-  * the fidelity surfaces (Verify, ScalaTest, any user session).
-  *
-  * `fast = true` (set only by [[Bench]].main, default on there,
-  * `SPARK_GRAFT_BENCH_FAST=0` to disable) authorizes HARNESS-COST
-  * shortcuts that do not change any operator's plan or output
-  * values:
-  *
-  *   - the `*_saved` artifact rows publish their trained artifact
-  *     ONCE per (dataset, kind) per JVM and serve every later sweep
-  *     from the same bytes ([[operators.IndexStore.sessionArtifact]])
-  *     — the per-sweep cost becomes load+serve, which is what the
-  *     rows exist to measure; the write path is still timed in the
-  *     sweep that builds it, and Verify always rebuilds;
-  *   - the in-place LM rows (q_backoff_score, q_lm_gate, the stream
-  *     twins, curate_v3's scorer) serve their Stupid-Backoff count
-  *     tables from the SAME session artifact
-  *     ([[operators.Text.backoffModelShared]]) — the artifact
-  *     round-trip is exact-integer, so the loaded frames are
-  *     bit-identical to a fresh train.
-  *
-  * Everything else — delivery counts, oracle-checked outputs, plan
-  * shapes — is identical in both modes: a fast-mode result collected
-  * by the driver would still hash-match the oracle.
-  */
-object BenchMode {
-  @volatile var fast: Boolean = false
-}
-
 /** The bench budget scheduler's DECISIONS as pure functions, so the
   * contract is unit-pinned instead of only observable on a 20-minute
   * run. [[Bench]] is the only caller.

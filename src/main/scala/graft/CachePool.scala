@@ -8,10 +8,10 @@ import org.apache.spark.storage.StorageLevel
   * queries lives in ONE map here — pooled kernels
   * ([[sessionCheckpoint]]), the shared shingle frame, the curate
   * upstreams, resolved table relations ([[Tables.load]]), trained
-  * IVF/PQ/SQ artifacts, the fast-mode `*_saved` artifacts, the
-  * bucketed and date-partitioned join layouts, and the per-invocation
-  * persist generations of [[swap]]. One staleness rule, one
-  * [[clear]].
+  * IVF/PQ/SQ artifacts, the bucketed and date-partitioned join
+  * layouts, and the per-invocation persist generations of [[swap]].
+  * One staleness rule, one [[clear]]. Published `*_saved` artifacts
+  * are not memoized: every call trains and publishes afresh.
   *
   * KEY. One entry per string key: a kernel name, `relation:<path>`,
   * `swap:<key>`, …. An entry holds (session, input fingerprint, value,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: print the formatted physical plan of one or
   * more `SparkEntry.queries` entries. The things to look for at 100 TB:
   * `PushedFilters`/`ReadSchema` on every parquet scan (filters and
@@ -17,16 +15,9 @@ object Explain {
     val names =
       if (args.length > 1) args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // honors $SPARK_GRAFT_CPUS (r18) so captures can show the
-    // parallelism-DERIVED plan shapes (the IVF salt fan-out) at the
-    // bench's core count, not the audit default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(graft.Sessions.NanosAsLongKey, "true")
-      .getOrCreate()
+    // the bench's session, so captures show the parallelism-DERIVED
+    // plan shapes (the IVF salt fan-out) at $SPARK_GRAFT_CPUS
+    val spark = Sessions.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

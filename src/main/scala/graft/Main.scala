@@ -2,7 +2,6 @@ package graft
 
 import graft.model.JobState
 import graft.request.Protocol
-import org.apache.spark.sql.SparkSession
 
 /** CLI — same flag surface as the reference's argparse front-end
   * (cli.py:22-149): one of --schema/--full/--table picks the mode,
@@ -150,16 +149,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val (op, opts, directives, wait) = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Sessions.NanosAsLongKey, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-cli")
     try {
       val response = Protocol.handle(spark,
         buildRequestJson(op, opts, directives, wait))

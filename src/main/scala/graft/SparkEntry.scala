@@ -265,7 +265,8 @@ object SparkEntry {
     "q_ngram_novelty_bloom" -> ((s: SparkSession, d: String) =>
       Dedup.ngramNoveltyBloomCheck(s, d)),
     "q_dedup_survivors" -> (Dedup.keepBest _),
-    "q_entity_resolution" -> (Linkage.entityResolution _),
+    "q_entity_resolution" -> ((s: SparkSession, d: String) =>
+      Linkage.entityResolution(s, d)),
     "q_entity_resolution_skew" -> (Linkage.entityResolutionSkew _),
     "q_stream_entity_resolution" -> ((s: SparkSession, d: String) =>
       graft.streaming.LinkStream.entityResolutionViaStream(s, d)),

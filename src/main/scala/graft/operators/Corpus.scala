@@ -535,7 +535,7 @@ object Corpus {
     * in-place encode, so a round-trip bit-flip or version mispin
     * changes a token count and fails the hash. */
   def bpeEncodeSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "bpe")(
+    val (root, v) = IndexStore.freshArtifact("bpe")(
       IndexStore.saveBpe(spark, sf, _))
     bpeEncodeWith(spark, sf, IndexStore.loadBpeMerges(spark, root, Some(v)))
   }
@@ -543,7 +543,7 @@ object Corpus {
   /** q_unigram_encode_saved: [[unigramEncode]] served from the
     * persisted piece table — [[bpeEncodeSaved]]'s unigram twin. */
   def unigramEncodeSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "unigram")(
+    val (root, v) = IndexStore.freshArtifact("unigram")(
       IndexStore.saveUnigram(spark, sf, _))
     unigramEncodeWith(spark, sf,
       IndexStore.loadUnigramBits(spark, root, Some(v)))

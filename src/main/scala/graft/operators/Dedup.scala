@@ -1112,7 +1112,7 @@ object Dedup {
     * round-trip bit-flip surfaces as a pair diff at the gate. */
   def minhashLshSaved(spark: SparkSession, sf: String,
       threshold: Double = 0.5): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "minhash")(
+    val (root, v) = IndexStore.freshArtifact("minhash")(
       IndexStore.saveMinhash(spark, sf, _))
     val signed = IndexStore.loadMinhash(spark, root, Some(v))
     val sh = shingledCached(spark, sf)

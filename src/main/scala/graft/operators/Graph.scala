@@ -43,6 +43,17 @@ object Graph {
   private val DampNum = 85L          // damping 0.85 as an exact ratio
   private val DampDen = 100L
 
+  /** Broadcast an `nn`-row node vector each round? Its rows are
+    * UnsafeRows of two longs (24 bytes with the null-bit word), so it
+    * broadcasts exactly when Spark's planner would broadcast a
+    * relation that size: nn × 24 within the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, and never when that
+    * threshold is negative (broadcasts off). */
+  private def broadcastsNodes(spark: SparkSession, nn: Long): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && nn * 24 <= limit
+  }
+
   /** 10-iteration integer PageRank over the customer–supplier graph.
     * Output: one row per node with its entity type/id and final score
     * in ppb. */
@@ -64,19 +75,18 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nn = nodes.count()
     // The score vector is nodes-sized — orders of magnitude smaller
-    // than the edge list. While it fits an executor (it does into the
-    // hundreds of millions of nodes), BROADCAST it each round: the
-    // edge join then needs no exchange at all (edges stay put,
-    // persisted), and a round costs ONE shuffle (the dst aggregation).
+    // than the edge list. While it fits Spark's broadcast threshold,
+    // BROADCAST it each round: the edge join then needs no exchange
+    // at all (edges stay put, persisted), and a round costs ONE
+    // shuffle (the dst aggregation).
     // Past that size, fall back to the shuffle join against a
     // SRC-partitioned edge cache — same algebra, and the per-round
     // join reuses the cache's partitioning so only the (small) score
-    // side shuffles. The threshold is a conf so tests can force the
-    // fallback and pin it bit-identical to the broadcast path
-    // (OperatorSpec), not dead code waiting for its first 10M-node
-    // corpus.
-    val broadcastScore = nn <= spark.conf
-      .get("spark.graft.pagerank.broadcastMaxNodes", "10000000").toLong
+    // side shuffles. The switch follows Spark's own broadcast
+    // threshold ([[broadcastsNodes]]), so tests force the fallback by
+    // turning broadcasts off and pin it bit-identical to the
+    // broadcast path (OperatorSpec).
+    val broadcastScore = broadcastsNodes(spark, nn)
     // degree folded onto each edge ONCE; the persisted clustering
     // matches the round's join strategy: broadcast rounds cluster by
     // DST so the map-side partial agg collapses each partition's
@@ -482,19 +492,18 @@ object Graph {
     val nodes = sym0.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // r17, the [[pageRank]] round posture ported: the label vector is
-    // NODE-sized — while it fits an executor, BROADCAST it each round
+    // NODE-sized — while it broadcasts, BROADCAST it each round
     // and the per-round edge join needs no exchange at all (sym stays
     // put, persisted clustered by SRC so the (v, label) vote census
     // partial-aggregates map-side and the round's one shuffle carries
     // ~|votes-collapsed| rows, never |edges| — before this, every
     // round re-shuffled the edge list on the neighbor key AND the raw
     // vote stream again on (v, label): 8.5 s → 5.4 s at sf0.1). Past
-    // broadcast size, the conf flips to a DST-clustered edge cache
+    // broadcast size ([[broadcastsNodes]]), a DST-clustered edge cache
     // whose per-round join reuses the cache's partitioning so only the
     // label vector shuffles — same algebra, spec-pinned bit-identical.
-    val nn = nodes.count()
-    val broadcastLabels = nn <= edgeFrame.sparkSession.conf
-      .get("spark.graft.lpa.broadcastMaxNodes", "10000000").toLong
+    val broadcastLabels = broadcastsNodes(edgeFrame.sparkSession,
+      nodes.count())
     val sym = sym0
       .repartition(if (broadcastLabels) col("src") else col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)

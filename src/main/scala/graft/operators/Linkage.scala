@@ -106,18 +106,15 @@ object Linkage {
     orig.unionByName(dirty).unionByName(decoy)
   }
 
-  /** Conf key for the block-skew guard: blocks whose accumulated
-    * record count exceeds this cap are PURGED from matching entirely
-    * (their records stay singletons) — the Hernández/Stolfo big-block
-    * purge. 0 (the default) disables the guard; the DuckDB oracle
-    * replays the uncapped form. This is the mechanism behind the
-    * SCALING.md claim: one degenerate blocking key (every record
-    * sharing a placeholder phone/balance) re-creates the n² kernel,
-    * and purging it bounds per-block pair work at cap² while touching
-    * nothing else — the oversized-key set is skew-small by
-    * definition, so it rides a broadcast anti-join.
-    */
-  val MaxBlockConf = "spark.graft.linkage.maxBlock"
+  /** The block census of the skew guard: the (nat, bal) keys of the
+    * blocks holding more than `cap` distinct records. Only those keys
+    * — few, by the definition of skew — leave the aggregation. */
+  private def oversizedBlocks(recs: DataFrame, cap: Int): DataFrame =
+    recs.select(col("entity_id"), col("nat"), col("bal"))
+      .distinct()
+      .groupBy(col("nat"), col("bal")).agg(count(lit(1)).as("block_n"))
+      .filter(col("block_n") > cap)
+      .select(col("nat"), col("bal"))
 
   /** Blocked candidate pairs between two record frames that pass the
     * edit-distance gate, normalized to `entity_id`-ordered (a < b)
@@ -127,6 +124,17 @@ object Linkage {
     * (`matchedPairs(r, r)`) keeps the a < b half; cross-frame calls
     * (the streaming twin's batch-vs-index probe) normalize with
     * least/greatest so edge identity is frame-order-independent.
+    *
+    * `cap`: the block-skew guard. Blocks whose record count exceeds
+    * it are PURGED from matching entirely (their records stay
+    * singletons) — the Hernández/Stolfo big-block purge. 0 (the
+    * default) disables the guard; the DuckDB oracle replays the
+    * uncapped form. This is the mechanism behind the SCALING.md
+    * claim: one degenerate blocking key (every record sharing a
+    * placeholder phone/balance) re-creates the n² kernel, and purging
+    * it bounds per-block pair work at cap² while touching nothing
+    * else — the oversized-key set is skew-small, so it rides a
+    * broadcast anti-join.
     *
     * `censusOver`: the record set the skew guard counts blocks over.
     * Defaults to left ∪ right — correct for one-shot linkage — but an
@@ -138,18 +146,12 @@ object Linkage {
     * which call first met it.
     */
   private[graft] def matchedPairs(left: DataFrame, right: DataFrame,
-      censusOver: Option[DataFrame] = None): DataFrame = {
-    val cap = left.sparkSession.conf.get(MaxBlockConf, "0").toInt
+      censusOver: Option[DataFrame] = None, cap: Int = 0): DataFrame = {
     val (lg, rg) = if (cap <= 0) (left, right) else {
-      // block census over the DISTINCT union of both sides (self-
-      // linkage passes the same frame twice); only the oversized
-      // keys — few, by the definition of skew — leave the aggregation
-      val basis = censusOver.getOrElse(left.unionByName(right))
-      val over = basis.select(col("entity_id"), col("nat"), col("bal"))
-        .distinct()
-        .groupBy(col("nat"), col("bal")).agg(count(lit(1)).as("block_n"))
-        .filter(col("block_n") > cap)
-        .select(col("nat"), col("bal"))
+      // self-linkage passes the same frame twice; the census counts
+      // DISTINCT records, so the union double-counts nothing
+      val over = oversizedBlocks(
+        censusOver.getOrElse(left.unionByName(right)), cap)
       (left.join(broadcast(over), Seq("nat", "bal"), "left_anti"),
         right.join(broadcast(over), Seq("nat", "bal"), "left_anti"))
     }
@@ -174,21 +176,16 @@ object Linkage {
     * property of the block's final size, not of which delivery first
     * met it. Edges only ever form within a block, so both endpoints
     * share a block key and the doc_a anti-join is complete. No-op
-    * when the cap conf is unset.
+    * when `cap` is 0.
     */
-  private[graft] def enforceBlockCap(recs: DataFrame,
-      edges: DataFrame): DataFrame = {
-    val cap = recs.sparkSession.conf.get(MaxBlockConf, "0").toInt
+  private[graft] def enforceBlockCap(recs: DataFrame, edges: DataFrame,
+      cap: Int = 0): DataFrame = {
     if (cap <= 0) return edges
-    val over = recs.select(col("entity_id"), col("nat"), col("bal"))
-      .distinct()
-      .groupBy(col("nat"), col("bal")).agg(count(lit(1)).as("block_n"))
-      .filter(col("block_n") > cap)
-      .select(col("nat"), col("bal"))
-    // `over` is skew-small (few oversized KEYS) and broadcasts; the
+    // the oversized-key set is skew-small and broadcasts; the
     // member-id set may be huge (a degenerate block can be corpus-
     // sized), so the edge anti-join stays a plain shuffle join
-    val overIds = recs.join(broadcast(over), Seq("nat", "bal"))
+    val overIds = recs.join(broadcast(oversizedBlocks(recs, cap)),
+        Seq("nat", "bal"))
       .select(col("entity_id").as("doc_a"))
     edges.join(overIds, Seq("doc_a"), "left_anti")
   }
@@ -210,16 +207,17 @@ object Linkage {
 
   /** q_entity_resolution: every record labeled with its resolved
     * entity cluster (canonical id = min member id), cluster size, and
-    * its seeded kind for auditability.
+    * its seeded kind for auditability. `cap` arms the block-skew
+    * guard ([[matchedPairs]]); 0 (the driver row) disables it.
     */
-  def entityResolution(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  def entityResolution(spark: SparkSession, sf: String,
+      cap: Int = 0): DataFrame = {
     // four consumers (both pair-join sides, the CC node set, and the
     // final kind re-join) — persist or the customer scan + seeding
     // re-runs per consumer
     val recs = graft.CachePool.swapOne("linkage-records",
       records(spark, sf))
-    resolve(recs, matchedPairs(recs, recs))
+    resolve(recs, matchedPairs(recs, recs, cap = cap))
   }
 
   /** Degenerate-block skew fixture: every `k % SkewMod == 0` customer
@@ -255,24 +253,15 @@ object Linkage {
     * degenerate block WITH the purge cap armed. The placeholder block
     * is purged (its records resolve as singletons — including dirty
     * twins whose originals fell into it, the price of the cap the
-    * oracle replays exactly); every other block links as usual. The
-    * cap conf is read eagerly by [[matchedPairs]], so scoping it
-    * around plan construction is sound even though execution is lazy.
+    * oracle replays exactly); every other block links as usual.
     */
   def entityResolutionSkew(spark: SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val prev = spark.conf.getOption(MaxBlockConf)
-    spark.conf.set(MaxBlockConf, SkewCap.toString)
-    try {
-      val recs = graft.CachePool.swapOne("linkage-skew-records",
-        skewRecords(spark, sf))
-      // self-linkage: the census basis is the record set itself (r18)
-      // — the default left ∪ right would scan-and-distinct the same
-      // frame twice for the same block counts
-      resolve(recs, matchedPairs(recs, recs, censusOver = Some(recs)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(MaxBlockConf, v)
-      case None => spark.conf.unset(MaxBlockConf)
-    }
+    val recs = graft.CachePool.swapOne("linkage-skew-records",
+      skewRecords(spark, sf))
+    // self-linkage: the census basis is the record set itself (r18)
+    // — the default left ∪ right would scan-and-distinct the same
+    // frame twice for the same block counts
+    resolve(recs, matchedPairs(recs, recs, censusOver = Some(recs),
+      cap = SkewCap))
   }
 }

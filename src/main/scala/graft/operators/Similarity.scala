@@ -960,7 +960,7 @@ object Similarity {
     * the delta family: [[deltaIvfAssign]] freezes centroids within a
     * run, the store freezes them across sessions. */
   def annIvfSaved(spark: SparkSession, sf: String, k: Int = 3): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "ivf")(
+    val (root, v) = IndexStore.freshArtifact("ivf")(
       IndexStore.saveIvf(spark, sf, _))
     annIvfWith(spark, sf,
       IndexStore.loadIvfCentroids(spark, root, Some(v)), k)

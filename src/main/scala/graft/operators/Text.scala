@@ -388,7 +388,7 @@ object Text {
   private[graft] def backoffScoredAll(spark: SparkSession,
       sf: String): DataFrame =
     graft.CachePool.sessionCheckpoint("backoff-scored-all", spark, sf) {
-      val (tri, bigr, uni) = backoffModelShared(spark, sf)
+      val (tri, bigr, uni) = backoffModel(spark, sf)
       backoffScoredUnsorted(Tables.load(spark, sf, "documents")
         .select(col("doc_id"), col("text")), tri, bigr, uni)
     }
@@ -401,7 +401,7 @@ object Text {
     * from the same bytes). Same output and oracle as the in-place
     * scorer — the q_nb_classify_saved pattern. */
   def backoffScoreSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
+    val (root, v) = IndexStore.freshArtifact("backoff")(
       IndexStore.saveBackoffLm(spark, sf, _))
     val (tri, bigr, uni) = IndexStore.loadBackoffLm(spark, root, Some(v))
     backoffScoreWith(spark, sf, tri, bigr, uni)
@@ -547,24 +547,6 @@ object Text {
     * (executor-resident; never collected). The prefix tables and the
     * scalar total DERIVE from these by exact aggregation, so the
     * three count frames ARE the whole model artifact. */
-  /** The model frames the in-place LM rows consume. Under
-    * [[graft.BenchMode.fast]] (the timed bench surface only) the
-    * family — q_backoff_score, q_lm_gate, curate_v3's scorer — is
-    * served from the SAME session-published backoff artifact as the
-    * `*_saved` rows ([[graft.operators.IndexStore.sessionArtifact]],
-    * one train+publish per (dataset, JVM)): the artifact round-trip
-    * is exact-integer, so the loaded count frames are bit-identical
-    * to a fresh train and every downstream row hashes the same.
-    * Fidelity surfaces (Verify, specs) keep `fast = false` and
-    * retrain in place every call. */
-  private[graft] def backoffModelShared(spark: SparkSession,
-      sf: String): (DataFrame, DataFrame, DataFrame) =
-    if (graft.BenchMode.fast) {
-      val (root, v) = IndexStore.sessionArtifact(spark, sf, "backoff")(
-        IndexStore.saveBackoffLm(spark, sf, _))
-      IndexStore.loadBackoffLm(spark, root, Some(v))
-    } else backoffModel(spark, sf)
-
   private[graft] def backoffModel(spark: SparkSession,
       sf: String): (DataFrame, DataFrame, DataFrame) = {
     val docs = Tables.load(spark, sf, "documents")
@@ -842,7 +824,7 @@ object Text {
     * trains once, ships as storage, and every scoring job — batch or
     * per-delivery — reads the same bytes. */
   def nbClassifySaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "nb")(
+    val (root, v) = IndexStore.freshArtifact("nb")(
       IndexStore.saveNb(spark, sf, _))
     val (classes, counts) = IndexStore.loadNb(spark, root, Some(v))
     // generational persist: the model frames feed several scoring
@@ -1294,7 +1276,7 @@ object Text {
     * kernel bit-for-bit — same output, same DuckDB oracle as
     * q_winnow_overlap. */
   def winnowOverlapSaved(spark: SparkSession, sf: String): DataFrame = {
-    val (root, v) = IndexStore.sessionArtifact(spark, sf, "winnow")(
+    val (root, v) = IndexStore.freshArtifact("winnow")(
       IndexStore.saveWinnow(spark, sf, _))
     winnowOverlapFromFps(IndexStore.loadWinnow(spark, root, Some(v)))
   }

@@ -50,11 +50,15 @@ object LinkStream {
     * after the registry delivery and a fresh incarnation recovers the
     * dirty feed from the checkpoint — the output must be bit-identical
     * (spec-pinned), proving the linkage state (record index + edge
-    * store) lives entirely in storage, not in query memory. */
+    * store) lives entirely in storage, not in query memory.
+    * `cap` is the batch twin's block-skew guard
+    * ([[Linkage.matchedPairs]]); 0 disables it. */
   def entityResolutionViaStream(spark: SparkSession, sf: String,
-      restart: Boolean = false, compactIndex: Boolean = false): DataFrame = {
-    val (indexDir, edgeDir) = runStream(spark, sf, restart, compactIndex)
-    resolveFrom(spark, indexDir, edgeDir)
+      restart: Boolean = false, compactIndex: Boolean = false,
+      cap: Int = 0): DataFrame = {
+    val (indexDir, edgeDir) = runStream(spark, sf, restart, compactIndex,
+      cap)
+    resolveFrom(spark, indexDir, edgeDir, cap)
   }
 
   /** Run the two-delivery linkage stream and return its storage-
@@ -69,7 +73,8 @@ object LinkStream {
     * `batch_id` column, so the strictly-earlier probe filter still
     * sees the compacted rows (spec-pinned). */
   private[graft] def runStream(spark: SparkSession, sf: String,
-      restart: Boolean = false, compactIndex: Boolean = false): (String, String) = {
+      restart: Boolean = false, compactIndex: Boolean = false,
+      cap: Int = 0): (String, String) = {
     val root = graft.TempDirs.create("graft-linkstream")
     val indexDir = s"$root/index"
     val edgeDir = s"$root/edges"
@@ -103,8 +108,8 @@ object LinkStream {
       // the batch twin (a delivery's two records look innocent
       // even when their block is giant)
       val accumulated = Some(b.unionByName(idx))
-      StreamState.append(edgeDir, Linkage.matchedPairs(b, b, accumulated)
-        .unionByName(Linkage.matchedPairs(b, idx, accumulated)), batchId)
+      StreamState.append(edgeDir, Linkage.matchedPairs(b, b, accumulated, cap)
+        .unionByName(Linkage.matchedPairs(b, idx, accumulated, cap)), batchId)
       StreamState.append(indexDir, b, batchId)
       b.unpersist()
     }
@@ -113,12 +118,12 @@ object LinkStream {
 
   /** Terminal cluster assembly over the accumulated state dirs. */
   private[graft] def resolveFrom(spark: SparkSession, indexDir: String,
-      edgeDir: String): DataFrame = {
+      edgeDir: String, cap: Int = 0): DataFrame = {
     val allRecs = StreamState.read(spark, indexDir, RecordSchema)
     val allEdges = StreamState.read(spark, edgeDir, EdgeSchema)
     // terminal cap gate: a block can outgrow the cap after earlier
     // deliveries already emitted its edges — the final census decides
-    Linkage.resolve(allRecs, Linkage.enforceBlockCap(allRecs, allEdges))
+    Linkage.resolve(allRecs, Linkage.enforceBlockCap(allRecs, allEdges, cap))
   }
 
   /** Compaction for both linkage stores — the machinery lives in

@@ -2780,32 +2780,36 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("lpa: forced shuffle-join fallback is bit-identical to the broadcast path") {
-    // the >10M-node branch (the one a 100 TB graph runs) has no
-    // natural fixture — force it through the conf knob and pin every
-    // community assignment to the broadcast path's output (the
-    // pagerank fallback-spec pattern)
+    // the past-broadcast-threshold branch (the one a 100 TB graph
+    // runs) has no natural fixture — force it by turning Spark's
+    // broadcasts off and pin every community assignment to the
+    // broadcast path's output (the pagerank fallback-spec pattern)
     val viaBroadcast = graft.operators.Graph.lpaCommunities(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    spark.conf.set("spark.graft.lpa.broadcastMaxNodes", "0")
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaShuffle = graft.operators.Graph.lpaCommunities(spark, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(viaShuffle.sameElements(viaBroadcast))
-    } finally spark.conf.unset("spark.graft.lpa.broadcastMaxNodes")
+    } finally
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
   test("pagerank: forced shuffle-join fallback is bit-identical to the broadcast path") {
-    // the >10M-node branch (the one a 100 TB graph runs) has no
-    // natural fixture — force it through the conf knob and pin every
-    // score to the broadcast path's output
+    // the past-broadcast-threshold branch (the one a 100 TB graph
+    // runs) has no natural fixture — force it by turning Spark's
+    // broadcasts off and pin every score to the broadcast path's output
     val viaBroadcast = graft.operators.Graph.pageRank(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    spark.conf.set("spark.graft.pagerank.broadcastMaxNodes", "0")
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaShuffle = graft.operators.Graph.pageRank(spark, sf).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       assert(viaShuffle.sameElements(viaBroadcast))
-    } finally spark.conf.unset("spark.graft.pagerank.broadcastMaxNodes")
+    } finally
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
 
   test("incremental card merge reproduces the full-rescan dataset card exactly") {
@@ -3213,16 +3217,13 @@ class OperatorSpec extends AnyFunSuite {
   test("linkage block-skew guard: oversized blocks purge cleanly, generous cap is a no-op") {
     val uncapped = Linkage.entityResolution(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    def withCap[A](cap: Int)(f: => A): A =
-      try { spark.conf.set(Linkage.MaxBlockConf, cap.toString); f }
-      finally spark.conf.unset(Linkage.MaxBlockConf)
     // a cap no block reaches must not change a single assignment
-    val generous = withCap(1000)(Linkage.entityResolution(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq)
+    val generous = Linkage.entityResolution(spark, sf, cap = 1000).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     assert(generous == uncapped)
     // cap=1 purges every multi-record block: no edges survive, every
     // record is its own singleton cluster
-    val purgedAll = withCap(1)(Linkage.entityResolution(spark, sf).collect())
+    val purgedAll = Linkage.entityResolution(spark, sf, cap = 1).collect()
     purgedAll.foreach { r =>
       assert(r.getLong(2) == r.getLong(0) && r.getLong(3) == 1L,
         s"record ${r.getLong(0)} linked under cap=1") }
@@ -3233,7 +3234,7 @@ class OperatorSpec extends AnyFunSuite {
       .map { case (k, v) => k -> v.length }
     val byId = Linkage.records(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
-    val capped2 = withCap(2)(Linkage.entityResolution(spark, sf).collect())
+    val capped2 = Linkage.entityResolution(spark, sf, cap = 2).collect()
     capped2.filter(_.getLong(3) >= 2L).foreach { r =>
       assert(blockSize(byId(r.getLong(0))) <= 2,
         s"record ${r.getLong(0)} linked from an oversized block under cap=2") }
@@ -3522,12 +3523,9 @@ class OperatorSpec extends AnyFunSuite {
       "only the seeded block should exceed the spec cap at sf0.001")
     // semantic side under that cap: purged-block members resolve as
     // singletons; a dirty twin OUTSIDE the degenerate block still links
-    def withCap[A](c: Int)(f: => A): A =
-      try { spark.conf.set(Linkage.MaxBlockConf, c.toString); f }
-      finally spark.conf.unset(Linkage.MaxBlockConf)
     val recs = Linkage.skewRecords(spark, sf)
-    val resolved = withCap(cap)(
-      Linkage.resolve(recs, Linkage.matchedPairs(recs, recs)).collect())
+    val resolved = Linkage.resolve(recs,
+      Linkage.matchedPairs(recs, recs, cap = cap)).collect()
     val degIds = Linkage.skewRecords(spark, sf).collect()
       .filter(r => (r.getLong(2), r.getLong(3)) == degKey)
       .map(_.getLong(0)).toSet

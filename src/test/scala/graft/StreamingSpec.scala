@@ -493,21 +493,19 @@ class StreamingSpec extends AnyFunSuite {
     // already probed them, so the terminal census gate — not the
     // per-delivery guard — is what keeps the twins identical
     import graft.operators.Linkage
-    try {
-      spark.conf.set(Linkage.MaxBlockConf, "2")
-      val s = graft.streaming.LinkStream.entityResolutionViaStream(spark, sf)
-        .collect().map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      val b = Linkage.entityResolution(spark, sf)
-        .collect().map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(s.nonEmpty && s == b)
-      // the cap bit: some size-3 block (orig + dirty + decoy) was
-      // purged, so at least one dirty record is now a singleton
-      assert(s.exists(r => r._2 == "dirty" && r._4 == 1L))
-      // while small blocks still link
-      assert(s.exists(r => r._2 == "dirty" && r._4 >= 2L))
-    } finally spark.conf.unset(Linkage.MaxBlockConf)
+    val s = graft.streaming.LinkStream
+      .entityResolutionViaStream(spark, sf, cap = 2)
+      .collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    val b = Linkage.entityResolution(spark, sf, cap = 2)
+      .collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(s.nonEmpty && s == b)
+    // the cap bit: some size-3 block (orig + dirty + decoy) was
+    // purged, so at least one dirty record is now a singleton
+    assert(s.exists(r => r._2 == "dirty" && r._4 == 1L))
+    // while small blocks still link
+    assert(s.exists(r => r._2 == "dirty" && r._4 >= 2L))
   }
 
   test("tiered state compaction: exactly-once rows per pass, bounded trees, fold at the tier bound") {

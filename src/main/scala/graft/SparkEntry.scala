@@ -2,15 +2,18 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.operators._
+import graft.streaming.{DocStream, EmbedStream, EventStream, LinkStream}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query inventory — see SURVEY.md §7.
   *
-  * Every operator from SURVEY.md §2 with a SQL-expressible semantics has
-  * both a `queries` entry (Spark implementation) and an `oracleSql`
-  * entry (DuckDB equivalent over the same parquet tables). Non-SQL-
-  * expressible operators (MinHash-LSH, SimHash, hyperplane-LSH ANN, the
-  * mapPartitions decode stub) have queries entries only → rows-only
-  * check.
+  * Every row is one [[QueryRow]] declared in the `rows` member of the
+  * object that implements it: the Spark implementation beside the
+  * DuckDB oracle SQL that must return the same rows over the same
+  * parquet tables. Every row has an oracle, including the data-
+  * dependent ones (the BPE, k-means and fixpoint trainers are replayed
+  * by unrolled recursive or iterated CTEs beside their operators).
+  * This object only lists the families and derives the two views,
+  * `queries` and `oracleSql`, from that one list.
   *
   * Cross-engine determinism rules used throughout the operators package:
   *  - double measures go through fixed-scale decimal sums, one final
@@ -26,4667 +29,51 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggPricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- scans / projections / filters (SURVEY §2.1, §2.2)
-    "q_project" -> (Relational.project _),
-    "q_filter_in" -> (Relational.filterIn _),
-    // --- aggregations (SURVEY §2.6)
-    "q_agg_pricing" -> (Relational.aggPricing _),
-    "q_distinct" -> (Relational.distinctSeg _),
-    "q_mode_agg" -> (Relational.modeAgg _),
-    "q_stats_agg" -> (Relational.statsAgg _),
-    "q_rollup" -> (Relational.rollupAgg _),
-    "q_cube" -> (Relational.cubeAgg _),
-    "q_percentiles" -> (Relational.percentiles _),
-    "q_trimmed_stats" -> ((s: SparkSession, d: String) =>
-      Relational.trimmedStats(s, d)),
-    "q_cdf_norm" -> (Relational.cdfNorm _),
-    "q_equidepth" -> ((s: SparkSession, d: String) =>
-      Relational.equidepth(s, d)),
-    "q_grouping_sets" -> (Relational.groupingSetsAgg _),
-    "q_regression" -> (Relational.regressionAgg _),
-    "q_approx_percentiles" -> (Relational.approxPercentiles _),
-    "q_monthly_orders" -> (Relational.monthlyOrders _),
-    // --- joins (SURVEY §2.5)
-    "q_join_region" -> (Relational.joinRevenueByRegion _),
-    "q_semi_join" -> (Relational.semiJoin _),
-    "q_anti_join" -> (Relational.antiJoin _),
-    "q_above_avg" -> (Relational.aboveAvgOrders _),
-    "q_salted_join" -> ((s: SparkSession, d: String) => Relational.saltedRevenuePerOrder(s, d)),
-    "q_bucketed_join" -> ((s: SparkSession, d: String) => Bucketing.bucketedRevenue(s, d)),
-    "q_dpp_join" -> (PartitionPruning.dppWeekStats _),
-    "q_interval_join" -> ((s: SparkSession, d: String) => RangeJoin.intervalJoin(s, d)),
-    "q_zorder" -> ((s: SparkSession, d: String) => ZOrder.zorderLayout(s, d)),
-    // exact mode: the k-th-order-statistic quantiles the DuckDB oracle
-    // states; the library default is the approx_percentile scale path
-    "q_skew_profile" ->
-      ((s: SparkSession, d: String) => Relational.skewProfile(s, d, exact = true)),
-    "q_histogram" -> ((s: SparkSession, d: String) => Relational.histogram(s, d)),
-    // --- set ops / sort / limit (SURVEY §2.5)
-    "q_union_order" -> (Relational.unionOrder _),
-    "q_intersect" -> (Relational.intersectNations _),
-    "q_except" -> (Relational.exceptNations _),
-    "q_topk" -> (Relational.topK _),
-    // --- windows (SURVEY §2.7)
-    "q_window_rank" -> (Relational.windowRank _),
-    "q_pct_share" -> (Relational.pctShare _),
-    "q_running_sum" -> (Relational.runningSum _),
-    "q_order_gaps" -> (Relational.orderGaps _),
-    "q_window_frames" -> (Relational.windowFrames _),
-    "q_string_ops" -> (Relational.stringOps _),
-    "q_conditional_agg" -> (Relational.conditionalAgg _),
-    "q_correlated_subquery" -> (Relational.correlatedSubquery _),
-    // --- generators
-    "q_explode_words" -> (Relational.explodeWords _),
-    // --- events / time (SURVEY §2.8, §2.10)
-    "q_hourly_events" -> (Events.hourlyStats _),
-    "q_stream_hourly" -> (graft.streaming.EventStream.hourlyViaStream _),
-    "q_stream_dedup" -> (graft.streaming.EventStream.dedupViaStream _),
-    "q_stream_enrich" -> (graft.streaming.EventStream.enrichViaStream _),
-    "q_stream_interval" ->
-      ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.intervalJoinViaStream(s, d)),
-    "q_stream_outliers" ->
-      ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.outliersViaStream(s, d)),
-    "q_stream_sessions" ->
-      ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.sessionsViaTws(s, d)),
-    "q_stream_scd2" ->
-      ((s: SparkSession, d: String) =>
-        graft.streaming.EventStream.scd2ViaTws(s, d)),
-    "q_pivot" -> (Relational.pivotStatus _),
-    "q_approx_distinct" -> (Relational.approxDistinct _),
-    "q_profile" -> (Relational.profile _),
-    "q_sessionize" -> (Events.sessionize _),
-    "q_scd2" -> (Events.scd2 _),
-    "q_resample" -> (Events.resample _),
-    "q_funnel" -> (Events.funnel _),
-    "q_retention" -> (Events.retention _),
-    "q_latest_version" -> (Events.latestVersion _),
-    "q_regex_extract" -> (Text.regexExtract _),
-    "q_json_extract" -> (Text.jsonExtract _),
-    "q_asof_join" -> (AsOf.eventAttribution _),
-    "q_date_format" -> (Scalar.jobDateFormat _),
-    "q_base64" -> (Scalar.base64Envelope _),
-    // --- text analysis (north-star training-data ops)
-    "q_fingerprint" -> (Text.fingerprint _),
-    "q_winnow" -> (Text.winnow _),
-    "q_winnow_overlap" -> (Text.winnowOverlap _),
-    "q_winnow_overlap_saved" -> (Text.winnowOverlapSaved _),
-    "q_winnow_skew" -> (Text.winnowOverlapSkew _),
-    "q_substr_dedup" -> (Text.substrDedup _),
-    "q_substr_scrub" -> (Text.substrScrub _),
-    "q_substr_keep_first" -> (Text.substrKeepFirst _),
-    "q_substr_scrub_first" -> (Text.substrScrubFirst _),
-    "q_decontaminate" -> (Text.decontaminate _),
-    "q_delta_substr" -> (Text.deltaSubstr _),
-    "q_stream_substr" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.substrViaStream(s, d)),
-    "q_stream_substr_compact" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.substrCompactViaStream(s, d)),
-    "q_decontaminate_scrub" -> (Text.decontaminateScrub _),
-    "q_delta_winnow" -> (Text.deltaWinnow _),
-    "q_stream_winnow" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.winnowViaStream(s, d)),
-    "q_stream_winnow_compact" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.winnowCompactViaStream(s, d)),
-    "q_text_drift" -> (Text.textDrift _),
-    "q_token_count" -> (Text.tokenCount _),
-    "q_langid" -> (Text.langId _),
-    "q_quality" -> (Text.quality _),
-    "q_gopher_rules" -> (Text.gopherRules _),
-    "q_lm_gate" -> (Text.lmQualityGate _),
-    "q_lm_gate_by_source" -> (Text.lmGateBySource _),
-    "q_stream_lm_gate" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.lmGateViaStream(s, d)),
-    "q_gopher_by_source" -> (Text.gopherBySource _),
-    "q_surprisal" -> (Text.surprisal _),
-    "q_bigram_surprisal" -> (Text.bigramSurprisal _),
-    "q_backoff_score" -> (Text.backoffScore _),
-    "q_backoff_score_saved" -> (Text.backoffScoreSaved _),
-    "q_stream_backoff" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.backoffViaStream(s, d)),
-    "q_ppl_buckets" -> (Text.pplBuckets _),
-    "q_ngram_diversity" -> (Corpus.ngramDiversity _),
-    "q_hash_embed" -> (FeatureHash.hashEmbed _),
-    "q_hash_embed_neardup" -> (FeatureHash.hashEmbedNearDup _),
-    "q_nb_classify" -> (Text.nbClassify _),
-    "q_nb_classify_saved" -> (Text.nbClassifySaved _),
-    "q_nb_confusion" -> (Text.nbConfusion _),
-    "q_nb_eval" -> (Text.nbEval _),
-    "q_nb_reliability" -> (Text.nbReliability _),
-    "q_learning_curve" -> (Text.nbLearningCurve _),
-    "q_stream_nb_classify" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.nbClassifyViaStream(s, d)),
-    "q_outliers" -> (Events.outliers _),
-    "q_robust_outliers" -> (Events.robustOutliers _),
-    "q_event_paths" -> ((s: SparkSession, d: String) => Events.eventPaths(s, d)),
-    "q_fk_audit" -> (Relational.fkAudit _),
-    "q_heavy_hitters" -> ((s: SparkSession, d: String) => Corpus.heavyHitters(s, d)),
-    "q_cms_heavy_hitters" -> ((s: SparkSession, d: String) =>
-      Corpus.cmsHeavyHitters(s, d)),
-    "q_stream_heavy_hitters" ->
-      ((s: SparkSession, d: String) =>
-        graft.streaming.DocStream.heavyHittersViaStream(s, d)),
-    "q_bloom_join" -> ((s: SparkSession, d: String) => Relational.bloomSemiJoin(s, d)),
-    // --- corpus preparation (split/sample/pack/stats)
-    "q_split_assign" -> (Corpus.splitAssign _),
-    "q_domain_cap" -> ((s: SparkSession, d: String) => Corpus.domainCap(s, d)),
-    "q_pack_chunks" -> ((s: SparkSession, d: String) => Corpus.packChunks(s, d)),
-    "q_tfidf_top" -> ((s: SparkSession, d: String) => Corpus.tfidfTop(s, d)),
-    "q_bigram_top" -> ((s: SparkSession, d: String) => Corpus.bigramTop(s, d)),
-    "q_pmi_top" -> ((s: SparkSession, d: String) => Corpus.pmiTop(s, d)),
-    // rows-only by design: the BPE merge recurrence is data-dependent
-    // iteration no SQL oracle can express; pinned by the CorpusSpec
-    // replay case (every merge count re-derived from the raw vocab)
-    "q_bpe_merges" -> ((s: SparkSession, d: String) => Corpus.bpeMerges(s, d)),
-    "q_unigram_train" -> (Corpus.unigramTrain _),
-    "q_unigram_encode" -> (Corpus.unigramEncode _),
-    "q_unigram_fertility" -> (Corpus.unigramFertility _),
-    // rows-only by design (same contract): pinned by the CorpusSpec
-    // case re-encoding the vocabulary against the trainer's end state
-    "q_bpe_encode" -> ((s: SparkSession, d: String) => Corpus.bpeEncode(s, d)),
-    "q_bpe_curve" -> (Corpus.bpeCurve _),
-    "q_bpe_encode_saved" -> (Corpus.bpeEncodeSaved _),
-    "q_unigram_encode_saved" -> (Corpus.unigramEncodeSaved _),
-    "q_bpe_fertility" -> ((s: SparkSession, d: String) => Corpus.bpeFertility(s, d)),
-    "q_pagerank" -> ((s: SparkSession, d: String) => Graph.pageRank(s, d)),
-    "q_triangles" -> (Graph.triangles _),
-    "q_kcore" -> ((s: SparkSession, d: String) => Graph.kcore(s, d)),
-    "q_lpa_communities" -> ((s: SparkSession, d: String) =>
-      Graph.lpaCommunities(s, d)),
-    "q_search" -> ((s: SparkSession, d: String) => Corpus.search(s, d)),
-    "q_bm25" -> ((s: SparkSession, d: String) => Corpus.bm25(s, d)),
-    "q_skipgrams" -> ((s: SparkSession, d: String) => Corpus.skipgrams(s, d)),
-    "q_rrf" -> ((s: SparkSession, d: String) => Corpus.rrfFusion(s, d)),
-    "q_pii_scrub" -> (Corpus.piiScrub _),
-    "q_stratified_sample" -> ((s: SparkSession, d: String) => Corpus.stratifiedSample(s, d)),
-    // exact mode: the DuckDB quantile_cont oracle needs the exact cut;
-    // the default (approx_percentile) is the scale path, pinned by a
-    // CorpusSpec tolerance case against this mode
-    "q_quality_gate" -> ((s: SparkSession, d: String) =>
-      Corpus.qualityGate(s, d, exact = true)),
-    "q_quality_sweep" -> (Corpus.qualityThresholdSweep _),
-    "q_repetition" -> (Corpus.repetition _),
-    "q_dup_ngram_frac" -> ((s: SparkSession, d: String) =>
-      Corpus.dupNgramFrac(s, d)),
-    // exact gram-keyed mode (buckets = None) for the oracle; the
-    // hashed fixed-size feature table is the scale default
-    "q_dsir_weights" -> ((s: SparkSession, d: String) => Corpus.dsirWeights(s, d)),
-    "q_curate" -> (Corpus.curate _),
-    // exact mode: the composed oracle replays the stage-1 cut with
-    // DuckDB quantile_cont; the default (approx_percentile t-digest)
-    // is the scale path, pinned plan-level by a CorpusSpec case
-    "q_curate_v2" -> ((s: SparkSession, d: String) =>
-      Corpus.curateV2(s, d, exact = true)),
-    "q_curate_v3" -> (Corpus.curateV3 _),
-    "q_curate_v3_funnel" -> (Corpus.curateV3Funnel _),
-    "q_curate_v3_by_source" -> (Corpus.curateV3BySource _),
-    "q_curate_v3_sweep" -> (Corpus.curateV3Sweep _),
-    // the DEFAULT (approx) path, driver-checked against the SAME
-    // exact-replay oracle: at verification scale the corpus is
-    // smaller than the t-digest accuracy knob, so the sketch cut is
-    // value-identical to the exact percentile and the production
-    // wiring must reproduce the exact kept set bit-for-bit — a
-    // drifted estimator or a boundary-doc flip goes red here, not
-    // just in the spec's tolerance band
-    "q_curate_v2_approx" -> ((s: SparkSession, d: String) =>
-      Corpus.curateV2(s, d)),
-    "q_contamination" -> (Corpus.contamination _),
-    // --- dedup
-    "q_dedup_exact" -> (Dedup.exact _),
-    "q_dup_rate_by_source" -> (Dedup.dupRateBySource _),
-    "q_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccard(s, d)),
-    "q_dedup_sweep" -> (Dedup.dedupThresholdSweep _),
-    "q_dedup_sweep_lsh" -> (Dedup.dedupThresholdSweepLsh _),
-    "q_dup_matrix" -> (Dedup.dupMatrix _),
-    "q_dup_matrix_lsh" -> (Dedup.dupMatrixLsh _),
-    "q_containment" -> ((s: SparkSession, d: String) => Dedup.containmentPairs(s, d)),
-    "q_containment_prefix" -> ((s: SparkSession, d: String) =>
-      Dedup.containmentPrefixPairs(s, d)),
-    "q_allpairs" -> ((s: SparkSession, d: String) => Dedup.allPairsJaccard(s, d)),
-    "q_fuzzy_join" -> ((s: SparkSession, d: String) => Relational.fuzzyJoin(s, d)),
-    "q_minhash_lsh" -> ((s: SparkSession, d: String) => Dedup.minhashLsh(s, d)),
-    "q_minhash_lsh_saved" -> ((s: SparkSession, d: String) =>
-      Dedup.minhashLshSaved(s, d)),
-    "q_minhash_recall" -> (Dedup.minhashRecall _),
-    "q_dup_clusters" -> (Dedup.nearDupClusters _),
-    "q_dup_clusters_lsh" -> (Dedup.nearDupClustersLsh _),
-    "q_cluster_sizes" -> (Dedup.clusterSizes _),
-    "q_contamination_lsh" -> (Corpus.contaminationLsh _),
-    "q_delta_dedup" -> (Dedup.deltaDedup _),
-    "q_delta_neardup" -> ((s: SparkSession, d: String) => Dedup.deltaNearDup(s, d)),
-    "q_ngram_novelty" -> (Dedup.ngramNovelty _),
-    // the sketch row runs as its verification harness: exact counts +
-    // undercount/error-bound verdict flags the DuckDB oracle pins to 1
-    // (bloom membership bits themselves are engine-specific)
-    "q_ngram_novelty_bloom" -> ((s: SparkSession, d: String) =>
-      Dedup.ngramNoveltyBloomCheck(s, d)),
-    "q_dedup_survivors" -> (Dedup.keepBest _),
-    "q_entity_resolution" -> ((s: SparkSession, d: String) =>
-      Linkage.entityResolution(s, d)),
-    "q_entity_resolution_skew" -> (Linkage.entityResolutionSkew _),
-    "q_stream_entity_resolution" -> ((s: SparkSession, d: String) =>
-      graft.streaming.LinkStream.entityResolutionViaStream(s, d)),
-    "q_span_dedup" -> ((s: SparkSession, d: String) => Dedup.spanDedup(s, d)),
-    "q_boilerplate" -> ((s: SparkSession, d: String) => Dedup.boilerplate(s, d)),
-    "q_stream_neardup" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.nearDupViaStream(s, d)),
-    "q_stream_token_budget" -> ((s: SparkSession, d: String) =>
-      graft.streaming.DocStream.tokenBudgetViaStream(s, d)),
-    "q_epoch_shuffle" -> ((s: SparkSession, d: String) => Corpus.epochShuffle(s, d)),
-    "q_temperature_sample" -> (Corpus.temperatureSample _),
-    "q_temperature_sweep" -> (Corpus.temperatureSweep _),
-    "q_token_budget" -> ((s: SparkSession, d: String) => Corpus.tokenBudget(s, d)),
-    "q_shard_assign" -> ((s: SparkSession, d: String) => Corpus.shardAssign(s, d)),
-    "q_mixture_sample" -> ((s: SparkSession, d: String) => Corpus.mixtureSample(s, d)),
-    "q_token_mixture" -> ((s: SparkSession, d: String) => Corpus.tokenMixture(s, d)),
-    "q_chunk_stride" -> ((s: SparkSession, d: String) => Corpus.chunkStride(s, d)),
-    "q_systematic_sample" -> ((s: SparkSession, d: String) => Corpus.systematicSample(s, d)),
-    "q_stratified_kfold" -> ((s: SparkSession, d: String) =>
-      Corpus.stratifiedKfold(s, d)),
-    "q_vocab_coverage" -> ((s: SparkSession, d: String) => Corpus.vocabCoverage(s, d)),
-    "q_dataset_card" -> (Corpus.datasetCard _),
-    "q_delta_card" -> (Corpus.deltaCard _),
-    "q_semantic_clusters" -> ((s: SparkSession, d: String) =>
-      Similarity.semanticClusters(s, d)),
-    "q_semantic_clusters_lsh" -> ((s: SparkSession, d: String) =>
-      Similarity.semanticClustersLsh(s, d)),
-    "q_semdedup" -> ((s: SparkSession, d: String) => Similarity.semDedup(s, d)),
-    "q_semdedup_lsh" -> ((s: SparkSession, d: String) =>
-      Similarity.semDedupLsh(s, d)),
-    "q_label_centroids" -> (Similarity.labelCentroids _),
-    "q_prototypicality" -> (Similarity.prototypicality _),
-    "q_mmr_select" -> ((s: SparkSession, d: String) => Similarity.mmrSelect(s, d)),
-    "q_embed_diag" -> (Similarity.embedDiagnostics _),
-    "q_stream_embed_drift" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EmbedStream.embedDriftViaStream(s, d)),
-    "q_cluster_balance" -> ((s: SparkSession, d: String) =>
-      Similarity.clusterBalancedCurate(s, d)),
-    "q_cluster_balance_lsh" -> ((s: SparkSession, d: String) =>
-      Similarity.clusterBalancedCurateLsh(s, d)),
-    "q_simhash_pairs" -> ((s: SparkSession, d: String) => Dedup.simhashPairs(s, d)),
-    "q_dup_methods" -> (Dedup.dupMethodAgreement _),
-    "q_dup_methods_lsh" -> (Dedup.dupMethodAgreementLsh _),
-    // --- similarity search
-    "q_embed_norms" -> (Similarity.norms _),
-    "q_knn_brute" -> ((s: SparkSession, d: String) => Similarity.knnBruteForce(s, d)),
-    "q_label_knn" -> ((s: SparkSession, d: String) => Similarity.labelKnn(s, d)),
-    "q_label_knn_ivf" -> ((s: SparkSession, d: String) =>
-      Similarity.labelKnnIvf(s, d)),
-    "q_class_weights" -> (Similarity.classWeights _),
-    "q_ann_lsh" -> ((s: SparkSession, d: String) => Similarity.annLsh(s, d)),
-    "q_cosine_near_dup" -> ((s: SparkSession, d: String) => Similarity.cosineNearDup(s, d)),
-    "q_ann_ivf" -> ((s: SparkSession, d: String) => Similarity.annIvf(s, d)),
-    "q_ann_ivf_saved" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvfSaved(s, d)),
-    "q_ann_filtered" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvfFiltered(s, d)),
-    "q_delta_ivf" -> (Similarity.deltaIvfAssign _),
-    "q_ann_recall" -> (Similarity.annPlantedRecall _),
-    "q_mrl_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.mrlPlantedRecall(s, d)),
-    "q_ivf_recall" -> (Similarity.ivfPlantedRecall _),
-    "q_ivf_sweep" -> (Similarity.ivfProbeSweep _),
-    "q_ivf_sampled_recall" -> (Similarity.ivfSampledPlantedRecall _),
-    "q_cosine_recall" -> ((s: SparkSession, d: String) => Similarity.cosinePlantedRecall(s, d)),
-    "q_pq_codes" -> (Similarity.pqCodes _),
-    "q_pq_recall" -> (Similarity.pqPlantedRecall _),
-    "q_pq_sampled_recall" -> (Similarity.pqSampledPlantedRecall _),
-    "q_ivfpq_recall" -> (Similarity.ivfPqPlantedRecall _),
-    "q_sq_codes" -> (Similarity.sqCodes _),
-    "q_sq_recall" -> (Similarity.sqPlantedRecall _),
-    "q_ivfsq_recall" -> (Similarity.ivfSqPlantedRecall _),
-    "q_cosine_pairs" -> ((s: SparkSession, d: String) => Similarity.cosinePairsExact(s, d)),
-    "q_triplets" -> (Similarity.tripletMine _),
-    "q_triplets_ivf" -> (Similarity.tripletMineIvf _),
-    // --- multimodal binary plumbing
-    "q_binary_meta" -> (Multimodal.binaryMeta _),
-    "q_decode_features" -> (Multimodal.decodeFeatures _),
-    "q_audio_features" -> ((s: SparkSession, d: String) => Multimodal.audioFeatures(s, d)),
-    "q_resize_pool" -> ((s: SparkSession, d: String) => Multimodal.resizePool(s, d)),
-    "q_image_phash" -> (Multimodal.imagePhash _),
-    "q_frame_sample" -> ((s: SparkSession, d: String) => Multimodal.frameSample(s, d)),
-    "q_scene_cuts" -> (Multimodal.sceneCuts _),
-    "q_scene_cuts_decoded" -> (Multimodal.sceneCutsDecoded _),
-    "q_keyframes" -> (Multimodal.keyframes _),
-    "q_video_neardup" -> (Multimodal.videoNearDup _),
-    "q_audio_vad" -> (Multimodal.audioVad _),
-    // --- job engine end-to-end (SURVEY §2.1, §2.3, §2.4)
-    "q_roundtrip" -> (JobQueries.roundtrip _),
-    "q_table_exists_append" -> (JobQueries.appendSemantics _),
-    "q_table_exists_skip" -> (JobQueries.skipSemantics _),
-    "q_estimate_only" -> (JobQueries.estimateOnly _),
-    "q_snapshot_diff" -> (JobQueries.snapshotDiff _),
-    "q_remap_data" -> (JobQueries.remapData _),
-    "q_remap_schema" -> (JobQueries.remapSchema _)
-  )
+  /** Every row family, keyed by the name it is reported under. */
+  lazy val families: Seq[(String, Seq[QueryRow])] = Seq(
+    "relational" -> Relational.rows,
+    "bucketing" -> Bucketing.rows,
+    "partition_pruning" -> PartitionPruning.rows,
+    "range_join" -> RangeJoin.rows,
+    "zorder" -> ZOrder.rows,
+    "events" -> Events.rows,
+    "scalar" -> Scalar.rows,
+    "asof" -> AsOf.rows,
+    "text" -> Text.rows,
+    "corpus" -> Corpus.rows,
+    "dedup" -> Dedup.rows,
+    "similarity" -> Similarity.rows,
+    "graph" -> Graph.rows,
+    "linkage" -> Linkage.rows,
+    "feature_hash" -> FeatureHash.rows,
+    "multimodal" -> Multimodal.rows,
+    "job" -> JobQueries.rows,
+    "event_stream" -> EventStream.rows,
+    "doc_stream" -> DocStream.rows,
+    "link_stream" -> LinkStream.rows,
+    "embed_stream" -> EmbedStream.rows)
 
-  // Shared SQL fragment: text normalization identical to
-  // Text.normalized (DuckDB needs the 'g' flag to replace all).
-  private val Norm = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
-
-  // ---- k-means trainer replay (the q_ann_ivf / q_pq_codes oracles) --
-
-  /** Exact squared-L2 ranking term c·c − 2 v·c over `dim` BIGINT list
-    * components (the v·v term is per-vector constant, dropped — the
-    * same argmin the engine's nearestCellsQ computes). */
-  private def d2Sql(vec: String, cent: String, dim: Int): String =
-    s"""list_sum(list_transform(generate_series(1, $dim), j -> $cent[j] * $cent[j]))
-               - 2 * list_sum(list_transform(generate_series(1, $dim), j -> $vec[j] * $cent[j]))"""
-
-  /** Java floorDiv in DuckDB (whose `//` truncates): subtract the
-    * positive remainder first, then divide exactly. */
-  private def floorDivSql(s: String, n: String): String =
-    s"($s - ((($s % $n) + $n) % $n)) // $n"
-
-  /** One unrolled Lloyd iteration over full vectors — assignment
-    * (argmin, ties on cell) + floor-division centroid update (emptied
-    * cells keep their previous centroid). Mirrors
-    * Similarity.kmeansCentroidsQ statement for statement; the
-    * engine's trainer seeds from MD5-of-id order precisely so this
-    * replay is possible in any engine with md5(). */
-  private def lloydIterSql(i: Int, dim: Int): String =
-    s"""a$i AS (
-           SELECT vec_id, iv, cell FROM (
-             SELECT q.vec_id, q.iv, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${d2Sql("q.iv", "c.c", dim)},
-                 c.cell) AS rn
-             FROM qv q, c$i c) t
-           WHERE rn = 1),
-         u$i AS (
-           SELECT cell, list(${floorDivSql("s", "n")} ORDER BY pos) AS c FROM (
-             SELECT cell, p.j AS pos, SUM(iv[p.j]) AS s, COUNT(*) AS n
-             FROM a$i, (SELECT unnest(generate_series(1, $dim)) AS j) p
-             GROUP BY 1, 2) t
-           GROUP BY cell),
-         c${i + 1} AS (
-           SELECT pr.cell, COALESCE(u.c, pr.c) AS c
-           FROM c$i pr LEFT JOIN u$i u ON pr.cell = u.cell)"""
-
-  /** One unrolled per-subspace Lloyd iteration (the PQ trainer): same
-    * contract as [[lloydIterSql]] with every stage keyed by subspace
-    * `m` — all 8 subspaces train in the same pass, like the engine. */
-  private def pqIterSql(i: Int, subDim: Int): String =
-    s"""pa$i AS (
-           SELECT vec_id, m, sub, cell FROM (
-             SELECT s.vec_id, s.m, s.sub, b.cell,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 ${d2Sql("s.sub", "b.c", subDim)},
-                 b.cell) AS rn
-             FROM sv s JOIN b$i b ON s.m = b.m) t
-           WHERE rn = 1),
-         pu$i AS (
-           SELECT m, cell, list(${floorDivSql("s", "n")} ORDER BY pos) AS c FROM (
-             SELECT m, cell, p.j AS pos, SUM(sub[p.j]) AS s, COUNT(*) AS n
-             FROM pa$i, (SELECT unnest(generate_series(1, $subDim)) AS j) p
-             GROUP BY 1, 2, 3) t
-           GROUP BY m, cell),
-         b${i + 1} AS (
-           SELECT pr.m, pr.cell, COALESCE(u.c, pr.c) AS c
-           FROM b$i pr LEFT JOIN pu$i u ON pr.m = u.m AND pr.cell = u.cell)"""
-
-  /** The replayed IVF candidate chain — quantize, seed from
-    * MD5-of-id order, unroll KmeansIters Lloyd iterations
-    * ([[lloydIterSql]]), index each vector in its argmin cell, probe
-    * the NProbe nearest cells, and score candidates on cell equality
-    * with the shared exact quantized cosine. Ends at CTE `cand`
-    * (query_id, neighbor_id, cosine) — shared prefix of q_ann_ivf,
-    * q_label_knn_ivf and q_triplets_ivf, so the three consumers of
-    * the engine's ivfCandidatePairs replay ONE oracle candidate
-    * definition (they cannot desynchronize). */
-  private val IvfCandCtes: String =
-    s"""WITH qv AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         seeds AS (
-           SELECT vec_id, iv FROM qv
-           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT ${graft.operators.Similarity.IvfCells}),
-         c0 AS (
-           SELECT ROW_NUMBER() OVER (
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
-             iv AS c
-           FROM seeds),
-         ${(0 until graft.operators.Similarity.KmeansIters)
-             .map(i => lloydIterSql(i, graft.operators.Similarity.Dim))
-             .mkString(",\n         ")},
-         rank_cells AS (
-           SELECT q.vec_id, q.iv, c.cell,
-             ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-               ${d2Sql("q.iv", "c.c", graft.operators.Similarity.Dim)},
-               c.cell) AS rn
-           FROM qv q, c${graft.operators.Similarity.KmeansIters} c),
-         indexed AS (SELECT vec_id, iv, cell FROM rank_cells WHERE rn = 1),
-         probes AS (SELECT vec_id, iv, cell FROM rank_cells
-           WHERE rn <= ${graft.operators.Similarity.NProbe}),
-         cand AS (
-           SELECT pr.vec_id AS query_id, ix.vec_id AS neighbor_id,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(pr.iv)),
-               i -> pr.iv[i] * ix.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(pr.iv)),
-                 i -> pr.iv[i] * pr.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(ix.iv)),
-                 i -> ix.iv[i] * ix.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM probes pr JOIN indexed ix
-             ON pr.cell = ix.cell AND pr.vec_id <> ix.vec_id)"""
-
-  // ---- BPE trainer replay (the q_bpe_merges / q_bpe_encode oracles) --
-
-  /** One unrolled BPE trainer stage. Word state is a `|tok||tok|`
-    * wrapped string: adjacent tokens never share a delimiter char, so
-    * plain string `replace` of `|l||r|` → `|lr|` is EXACTLY the
-    * engine's leftmost non-overlapping [[graft.operators.Corpus
-    * .applyMerge]] pass (a shared boundary would let one 'a' serve two
-    * overlapping `a a` matches — the classic greedy-BPE trap a
-    * space-delimited encoding falls into). Stage shape: count adjacent
-    * pairs over the vocabulary weighted by word frequency, take the
-    * argmax by (count desc, left, right) — the trainer's exact
-    * tie-break — then rewrite every word state. `v`/`b` are
-    * MATERIALIZED: each is referenced twice (next stage + final
-    * union), and DuckDB's default CTE inlining would make a 30-stage
-    * chain exponential. */
-  private def bpeStageSql(i: Int): String =
-    s"""p$i AS (
-           SELECT pr[1] AS l, pr[2] AS r, SUM(c) AS pc FROM (
-             SELECT unnest(list_transform(generate_series(1, len(t)-1),
-                      j -> [t[j], t[j+1]])) AS pr, c
-             FROM (SELECT string_split(trim(s, '|'), '||') AS t, c FROM v$i))
-           GROUP BY 1, 2),
-         b$i AS MATERIALIZED (
-           SELECT $i AS rank, l, r, l || r AS merged, pc
-           FROM p$i ORDER BY pc DESC, l, r LIMIT 1),
-         v${i + 1} AS MATERIALIZED (
-           SELECT w, replace(s, '|' || b.l || '||' || b.r || '|',
-                             '|' || b.l || b.r || '|') AS s, c
-           FROM v$i, b$i b)"""
-
-  /** Shared replay prefix: the trainer vocabulary (same frequency
-    * floor + deterministic top-cap as `Corpus.trainerVocab`) exploded
-    * into per-char wrapped states, then all [[graft.operators.Corpus
-    * .BpeNMerges]] stages. */
-  private def bpeChainSql: String =
-    s"""WITH wc AS (
-           SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
-             SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-             FROM documents)
-           GROUP BY w HAVING COUNT(*) >= ${graft.operators.Corpus.BpeMinCount}
-           ORDER BY c DESC, w LIMIT ${graft.operators.Corpus.BpeMaxVocab}),
-         v0 AS MATERIALIZED (
-           SELECT w, regexp_replace(w, '(.)', '|\\1|', 'g') AS s, c FROM wc),
-         ${(0 until graft.operators.Corpus.BpeNMerges)
-             .map(bpeStageSql).mkString(",\n         ")}"""
-
-  /** Plain-decimal SQL literal for a shared Double constant —
-    * `toString` would render 67108864.0 as "6.7108864E7"; BigDecimal
-    * of the decimal string keeps 0.7 as "0.7" (not the exact binary
-    * expansion). One formatting path for every oracle that
-    * interpolates an engine-side constant. */
-  private def dlit(x: Double): String = {
-    val s = BigDecimal(x.toString).bigDecimal.stripTrailingZeros.toPlainString
-    if (s.contains('.')) s else s + ".0"
-  }
-  private val QLit = dlit(graft.operators.Similarity.Q)
-  private val ProtoQLit = dlit(graft.operators.Similarity.ProtoQ)
-  private val MmrLambdaLit = dlit(graft.operators.Similarity.MmrLambda)
-
-  /** The full-rescan dataset-card replay — ONE definition for
-    * q_dataset_card and its incremental twin q_delta_card (state
-    * merging must reproduce the full-rescan card exactly). */
-  private val DatasetCardSql: String =
-    """WITH b AS (SELECT
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
-               AS n_tokens,
-             CAST(sum(length(text)) AS BIGINT) AS n_chars,
-             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-             CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique_docs,
-             CAST(max(len(string_split(lower(text), ' '))) AS BIGINT)
-               AS max_tokens,
-             CAST(min(len(string_split(lower(text), ' '))) AS BIGINT)
-               AS min_tokens
-           FROM documents),
-         v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS vocab_size
-           FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
-             AS w FROM documents))
-         SELECT metric, value FROM (
-           SELECT 'n_docs' AS metric, n_docs AS value FROM b
-           UNION ALL SELECT 'n_tokens', n_tokens FROM b
-           UNION ALL SELECT 'n_chars', n_chars FROM b
-           UNION ALL SELECT 'n_langs', n_langs FROM b
-           UNION ALL SELECT 'n_sources', n_sources FROM b
-           UNION ALL SELECT 'n_unique_docs', n_unique_docs FROM b
-           UNION ALL SELECT 'n_exact_dups', n_docs - n_unique_docs FROM b
-           UNION ALL SELECT 'max_tokens', max_tokens FROM b
-           UNION ALL SELECT 'min_tokens', min_tokens FROM b
-           UNION ALL SELECT 'vocab_size', vocab_size FROM v)
-         ORDER BY metric"""
-
-  /** The q_quality composite score over a `(doc_id, text, t)` scope
-    * (t = whitespace-split lowered tokens) — ONE definition for the
-    * three oracles that rank by it (q_quality, q_quality_gate,
-    * q_cluster_balance), mirroring the single engine-side
-    * `Text.qualityScoredDf`. */
-  private val QualityScoreSql: String =
-    """(CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
-             + (CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                / CAST(len(t) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
-             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE)"""
-
-  /** Shared encode suffix over the replayed chain: end-state per-word
-    * token counts (wt), the exploded corpus word stream (dw), per-doc
-    * sums (pd). One definition for q_bpe_encode and q_bpe_fertility —
-    * an encode-shape tweak cannot desynchronize the two oracles. */
-  private def bpeEncodeCtes: String =
-    s"""wt AS (SELECT w, CAST(len(string_split(trim(s, '|'), '||')) AS BIGINT)
-                  AS n_toks
-                FROM v${graft.operators.Corpus.BpeNMerges}),
-         dw AS (SELECT doc_id,
-                  unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-                FROM documents),
-         pd AS (
-           SELECT doc_id, COUNT(*) AS n_words, SUM(n_toks) AS n_bpe_tokens,
-             SUM(len(w)) AS n_alpha_chars
-           FROM dw JOIN wt USING (w) GROUP BY doc_id)"""
-
-  /** The BPE corpus-sizing replay — shared verbatim by q_bpe_encode
-    * and its artifact-served twin q_bpe_encode_saved (per-word token
-    * counts are the replay chain's end-state symbol counts; LEFT join
-    * from documents so no-word docs report zero). */
-  private def bpeEncodeSql: String =
-    s"""$bpeChainSql,
-         $bpeEncodeCtes
-         SELECT d.doc_id,
-           CAST(COALESCE(n_words, 0) AS BIGINT) AS n_words,
-           CAST(COALESCE(n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens,
-           CAST(COALESCE(n_alpha_chars, 0) AS BIGINT) AS n_alpha_chars,
-           CAST(COALESCE(CASE WHEN n_bpe_tokens > 0
-             THEN (n_alpha_chars * 1000) // n_bpe_tokens END, 0) AS BIGINT)
-             AS chars_per_tok_pm
-         FROM documents d LEFT JOIN pd USING (doc_id) ORDER BY d.doc_id"""
-
-  /** The brute-force threshold-sweep replay, parameterized by the
-    * threshold list — one definition for q_dedup_sweep (full
-    * [[operators.Dedup.SweepThresholdsBp]]) and q_dedup_sweep_lsh
-    * (the ≥ banding-regime subset), so the two rows can never
-    * disagree about the curve arithmetic. */
-  private def dedupSweepSql(thresholds: Seq[Long]): String = {
-    val ts = thresholds.map(t => s"($t)").mkString(", ")
-    s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         pb AS (SELECT doc_a, doc_b,
-                  (common * 10000) // (sa.n_sh + sb.n_sh - common) AS j
-                FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b),
-         ts AS (SELECT CAST(v AS BIGINT) AS threshold_bp
-                FROM (VALUES $ts) x(v)),
-         sw AS (SELECT t.threshold_bp, p.doc_a, p.doc_b
-                FROM pb p, ts t WHERE p.j >= t.threshold_bp)
-         SELECT t.threshold_bp,
-           CAST(COALESCE(np.n, 0) AS BIGINT) AS n_pairs,
-           CAST(COALESCE(nd.n, 0) AS BIGINT) AS n_docs,
-           CAST(COALESCE(dr.n, 0) AS BIGINT) AS n_would_drop
-         FROM ts t
-         LEFT JOIN (SELECT threshold_bp, COUNT(*) AS n FROM sw
-                    GROUP BY 1) np USING (threshold_bp)
-         LEFT JOIN (SELECT threshold_bp, COUNT(*) AS n FROM (
-                      SELECT DISTINCT threshold_bp, d FROM (
-                        SELECT threshold_bp, doc_a AS d FROM sw
-                        UNION ALL SELECT threshold_bp, doc_b FROM sw))
-                    GROUP BY 1) nd USING (threshold_bp)
-         LEFT JOIN (SELECT threshold_bp, COUNT(DISTINCT doc_b) AS n
-                    FROM sw GROUP BY 1) dr USING (threshold_bp)
-         ORDER BY t.threshold_bp"""
+  /** name → row; a family key or row name declared twice fails
+    * construction instead of one declaration replacing another. */
+  private[graft] def index(families: Seq[(String, Seq[QueryRow])]): Map[String, QueryRow] = {
+    def twice(names: Seq[String]) = names.diff(names.distinct).distinct.sorted
+    val dupFamilies = twice(families.map(_._1))
+    require(dupFamilies.isEmpty, s"row families declared twice: ${dupFamilies.mkString(", ")}")
+    val rows = families.flatMap(_._2)
+    val dupRows = twice(rows.map(_.name))
+    require(dupRows.isEmpty, s"rows declared twice: ${dupRows.mkString(", ")}")
+    rows.map(r => r.name -> r).toMap
   }
 
-  /** Exact-edge connected-components oracle (recursive CTE transitive
-    * closure) — shared by q_dup_clusters and q_dup_clusters_lsh, whose
-    * Spark sides differ only in how the edge set is derived. */
-  private val DupClustersCtes: String =
-    s"""WITH RECURSIVE
-         docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         jp AS (SELECT doc_a, doc_b
-                FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
-         e AS (SELECT doc_a AS a, doc_b AS b FROM jp
-               UNION SELECT doc_b, doc_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM e
-           UNION
-           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-         lab AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-                 FROM reach GROUP BY a),
-         labeled AS (SELECT d.doc_id,
-                       COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-                     FROM documents d LEFT JOIN lab l USING (doc_id))"""
+  private lazy val registry = index(families)
 
-  private lazy val AnnIvfSql: String =
-    s"""$IvfCandCtes
-         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, neighbor_id) AS rk FROM cand)
-         WHERE rk <= 3 ORDER BY query_id, rk"""
+  private lazy val runs = registry.map { case (name, r) => name -> r.run }
 
-  private lazy val DupMatrixSql: String =
-    s"""WITH docs AS (
-           SELECT doc_id, source,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, source, string_split($Norm, ' ') AS ws
-                 FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         jp AS (SELECT doc_a, doc_b FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE CAST(common AS DOUBLE)
-                  / (sa.n_sh + sb.n_sh - common) >= 0.5),
-         lab AS (SELECT least(da.source, db.source) AS src_a,
-                   greatest(da.source, db.source) AS src_b,
-                   jp.doc_a, jp.doc_b
-                 FROM jp
-                 JOIN docs da ON da.doc_id = jp.doc_a
-                 JOIN docs db ON db.doc_id = jp.doc_b)
-         SELECT np.src_a, np.src_b, np.n_pairs, nd.n_docs
-         FROM (SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
-               FROM lab GROUP BY 1, 2) np
-         JOIN (SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_docs
-               FROM (SELECT DISTINCT src_a, src_b, d FROM (
-                       SELECT src_a, src_b, doc_a AS d FROM lab
-                       UNION ALL SELECT src_a, src_b, doc_b FROM lab))
-               GROUP BY 1, 2) nd USING (src_a, src_b)
-         ORDER BY src_a, src_b"""
+  /** The Spark implementation of every row. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = runs
 
-  private val DupClustersSql: String =
-    s"""$DupClustersCtes
-         SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-         FROM labeled
-         ORDER BY doc_id"""
-
-  /** Record-linkage replay: the same seeded records (dirty twins,
-    * reversed-name decoys), the same blocking key, the same
-    * levenshtein gate (threshold interpolated from
-    * [[graft.operators.Linkage.NameEditMax]]), and the same
-    * recursive-CTE transitive closure as [[DupClustersCtes]] — an
-    * LSH-style blocking miss, a gate off-by-one, or a CC mislabel all
-    * flip the hash. */
-  private val EntityResolutionSql: String =
-    entityResolutionSqlOver(
-      s"""SELECT c_custkey AS k, c_name AS name,
-           CAST(c_nationkey AS BIGINT) AS nat,
-           CAST(floor(c_acctbal) AS BIGINT) AS bal
-         FROM customer""", cap = 0)
-
-  /** The skew twin: 10% of customers collapse onto the placeholder
-    * blocking key and the purge cap is armed — census + purge replayed
-    * in SQL (blocks strictly over [[graft.operators.Linkage.SkewCap]]
-    * records leave matching; their members resolve as singletons). */
-  private val EntityResolutionSkewSql: String =
-    entityResolutionSqlOver(
-      s"""SELECT c_custkey AS k, c_name AS name,
-           CASE WHEN c_custkey % ${Linkage.SkewMod} = 0
-             THEN ${Linkage.SkewNat}
-             ELSE CAST(c_nationkey AS BIGINT) END AS nat,
-           CASE WHEN c_custkey % ${Linkage.SkewMod} = 0
-             THEN ${Linkage.SkewBal}
-             ELSE CAST(floor(c_acctbal) AS BIGINT) END AS bal
-         FROM customer""", cap = Linkage.SkewCap)
-
-  private def entityResolutionSqlOver(cSelect: String, cap: Int): String = {
-    // cap = 0 replays the unguarded form (m = recs verbatim); cap > 0
-    // replays the Hernández/Stolfo purge: a block census over the full
-    // record set, blocks above the cap excluded from matching entirely
-    val matchable =
-      if (cap <= 0) "SELECT * FROM recs"
-      else s"""SELECT r.* FROM recs r
-               JOIN blocks b ON r.nat = b.nat AND r.bal = b.bal
-               WHERE b.block_n <= $cap"""
-    s"""WITH RECURSIVE c AS ($cSelect),
-         recs AS (
-           SELECT k AS entity_id, name, nat, bal, 'orig' AS kind FROM c
-           UNION ALL
-           SELECT k + ${Linkage.DirtyOffset},
-             ${Linkage.DirtyNameSql}, nat, bal, 'dirty'
-           FROM c WHERE k % ${Linkage.DirtyMod} = 0
-           UNION ALL
-           SELECT k + ${Linkage.DecoyOffset},
-             ${Linkage.DecoyNameSql}, nat, bal, 'decoy'
-           FROM c WHERE k % ${Linkage.DecoyMod} = 0),
-         blocks AS (SELECT nat, bal, COUNT(*) AS block_n
-                    FROM recs GROUP BY 1, 2),
-         m AS ($matchable),
-         p AS (
-           SELECT a.entity_id AS ea, b.entity_id AS eb
-           FROM m a JOIN m b
-             ON a.nat = b.nat AND a.bal = b.bal AND a.entity_id < b.entity_id
-           WHERE levenshtein(a.name, b.name) <= ${Linkage.NameEditMax}),
-         e AS (SELECT ea AS a, eb AS b FROM p UNION SELECT eb, ea FROM p),
-         reach(a, b) AS (
-           SELECT a, b FROM e
-           UNION
-           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-         lab AS (SELECT a AS entity_id, LEAST(a, MIN(b)) AS cluster_id
-                 FROM reach GROUP BY a),
-         labeled AS (SELECT r.entity_id, r.kind,
-                       COALESCE(l.cluster_id, r.entity_id) AS cluster_id
-                     FROM recs r LEFT JOIN lab l USING (entity_id))
-         SELECT CAST(entity_id AS BIGINT) AS entity_id, kind,
-           CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size
-         FROM labeled
-         ORDER BY entity_id"""
-  }
-
-  /** Naive Bayes trained-model replay up to the per-(doc, class) bit
-    * grid (`scored`) — the shared prefix of the argmin oracles
-    * ([[NbPredCtes]]) and the margin-calibration oracle
-    * (q_nb_reliability): one model, six oracles, zero drift. */
-  /** The trained-NB-model CTE block (docs→classes, no WITH prefix) —
-    * shared by [[NbScoredCtes]] (holdout scoring) and the q_curate_v2
-    * oracle (gate-survivor scoring): one model replay, two test
-    * slices, zero drift. */
-  private val NbModelCtes: String =
-    s"""docs AS (
-           SELECT doc_id, source,
-             regexp_extract_all(lower(text), '[a-z]+') AS t
-           FROM documents),
-         train AS (SELECT * FROM docs
-                   WHERE (doc_id // ${Text.NbSplitBlock})
-                     % ${Text.NbSplitMod} != 0),
-         tt AS (SELECT source, unnest(t) AS w FROM train),
-         counts AS (SELECT source, w, COUNT(*) AS cnt FROM tt GROUP BY 1, 2),
-         ctok AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS class_tokens
-                  FROM counts GROUP BY 1),
-         voc AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM counts),
-         pri AS (SELECT source, COUNT(*) AS class_docs FROM train GROUP BY 1),
-         tot AS (SELECT COUNT(*) AS total_docs FROM train),
-         classes AS (
-           SELECT ctok.source AS cls, class_tokens,
-             CAST(length(bin(total_docs // class_docs)) AS BIGINT)
-               AS prior_bits, v
-           FROM ctok JOIN pri USING (source) CROSS JOIN tot CROSS JOIN voc)"""
-
-  private val NbScoredCtes: String =
-    s"""WITH $NbModelCtes,
-         test AS (SELECT doc_id, source AS true_source, t FROM docs
-                  WHERE (doc_id // ${Text.NbSplitBlock})
-                    % ${Text.NbSplitMod} = 0),
-         tok AS (SELECT doc_id, unnest(t) AS w FROM test),
-         tb AS (
-           SELECT doc_id, cls,
-             CAST(SUM(length(bin(
-               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
-               AS token_bits
-           FROM tok CROSS JOIN classes
-           LEFT JOIN counts ON counts.source = classes.cls
-             AND counts.w = tok.w
-           GROUP BY 1, 2),
-         grid AS (SELECT doc_id, true_source, cls, prior_bits
-                  FROM test CROSS JOIN classes),
-         scored AS (
-           SELECT doc_id, true_source, cls,
-             prior_bits + COALESCE(token_bits, 0) AS bits
-           FROM grid LEFT JOIN tb USING (doc_id, cls))"""
-
-  /** The per-doc argmin (`pred`) over the shared bit grid — shared by
-    * q_nb_classify, its streaming twin q_stream_nb_classify, and the
-    * two eval views q_nb_confusion / q_nb_eval. */
-  private val NbPredCtes: String =
-    s"""$NbScoredCtes,
-         pred AS (
-           SELECT doc_id, true_source, cls AS pred_source,
-             CAST(bits AS BIGINT) AS total_bits,
-             CAST(cls = true_source AS BIGINT) AS is_correct
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                   ORDER BY bits, cls) AS rk FROM scored)
-           WHERE rk = 1)"""
-
-  private val NbClassifySql: String =
-    s"""$NbPredCtes
-         SELECT doc_id, true_source, pred_source, total_bits, is_correct
-         FROM pred ORDER BY doc_id"""
-
-  /** Exact-edge semantic-clustering oracle (recursive CTE transitive
-    * closure over the 0.35-cosine pair set on the 2²⁶ quantized grid)
-    * — shared by q_semantic_clusters and q_semantic_clusters_lsh,
-    * whose Spark sides differ only in the candidate edge derivation. */
-  private val SemanticClustersCtes: String =
-    """WITH RECURSIVE
-         q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, iv,
-             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
-               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm,
-             CAST(list_sum(list_transform(generate_series(1, len(iv)),
-               i -> iv[i] * iv[i])) AS BIGINT) AS n2
-           FROM q),
-         jp AS (
-           SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-           FROM n a, n b
-           WHERE a.vec_id < b.vec_id
-             AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-               / (a.nrm * b.nrm) >= 0.35),
-         e AS (SELECT doc_a AS a, doc_b AS b FROM jp
-               UNION SELECT doc_b, doc_a FROM jp),
-         reach(a, b) AS (
-           SELECT a, b FROM e
-           UNION
-           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-         lab AS (SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
-                 FROM reach GROUP BY a),
-         labeled AS (SELECT v.vec_id,
-                       COALESCE(l.cluster_id, v.vec_id) AS cluster_id,
-                       v.n2
-                     FROM n v LEFT JOIN lab l USING (vec_id))"""
-
-  private val SemanticClustersSql: String =
-    s"""$SemanticClustersCtes
-         SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-         FROM labeled
-         ORDER BY vec_id"""
-
-  /** The closure plus the norm²-argmax survivor rule (ties to the
-    * smaller vec_id) the Spark side computes as a partial-aggregable
-    * max(struct(n2, -vec_id)) — shared by q_semdedup and
-    * q_semdedup_lsh. */
-  private val SemDedupSql: String =
-    s"""$SemanticClustersCtes
-         SELECT vec_id, cluster_id, survivor_id,
-           CAST(vec_id = survivor_id AS BIGINT) AS keep
-         FROM (
-           SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-             CAST(FIRST_VALUE(vec_id) OVER (PARTITION BY cluster_id
-               ORDER BY n2 DESC, vec_id) AS BIGINT) AS survivor_id
-           FROM labeled) t
-         ORDER BY vec_id"""
-
-  /** The closure plus the quality-argmax curation rule (rank by the
-    * q_quality composite desc, ties to the smaller vec_id) — shared by
-    * q_cluster_balance and q_cluster_balance_lsh, whose Spark sides
-    * differ only in the candidate edge derivation (one shared
-    * clusterBalancedFrom code path engine-side). */
-  private lazy val ClusterBalanceSql: String =
-    s"""$SemanticClustersCtes,
-         qual AS (
-           SELECT doc_id AS vec_id,
-             $QualityScoreSql AS quality_score
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-         cl AS (
-           SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-             CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-           FROM labeled)
-         SELECT vec_id, cluster_id, cluster_size, quality_score,
-           CAST(qrank AS BIGINT) AS qrank,
-           CAST(qrank <= 1 AS BIGINT) AS keep
-         FROM (SELECT vec_id, cluster_id, cluster_size, quality_score,
-                 ROW_NUMBER() OVER (PARTITION BY cluster_id
-                   ORDER BY quality_score DESC, vec_id) AS qrank
-               FROM cl JOIN qual USING (vec_id))
-         ORDER BY vec_id"""
-
-  /** The mixture CASE expression, generated from
-    * Corpus.MixtureTargets — shared by q_mixture_sample and
-    * q_curate_v2 (one recipe, two oracles). */
-  private lazy val MixtureCaseSql: String =
-    "CASE lang " + graft.operators.Corpus.MixtureTargets
-      .map { case (l, p) => s"WHEN '$l' THEN $p" }.mkString(" ") +
-      " ELSE 0 END"
-
-  /** q_curate_v2: the four verified stage oracles composed in one
-    * statement — semantic closure ([[SemanticClustersCtes]]), NB model
-    * replay ([[NbModelCtes]]), quality scoring ([[QualityScoreSql]])
-    * and the water-filling mixture ([[MixtureCaseSql]]) — so the
-    * composed pipeline is pinned value for value end to end, not
-    * stage by stage. */
-  private lazy val CurateV2Sql: String = {
-    val allow = graft.operators.Corpus.CurateAllowSources
-      .map(s => s"'$s'").mkString(", ")
-    s"""$SemanticClustersCtes,
-         $NbModelCtes,
-         sq AS (
-           SELECT doc_id, lang,
-             ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS bucket,
-             $QualityScoreSql AS quality_score
-           FROM (SELECT doc_id, lang, text,
-                   string_split(lower(text), ' ') AS t FROM documents)),
-         thr AS (SELECT quantile_cont(quality_score, 0.25) AS cut FROM sq),
-         gate AS (SELECT sq.* FROM sq, thr WHERE quality_score > cut),
-         gtest AS (SELECT d.doc_id, d.t FROM docs d JOIN gate USING (doc_id)),
-         gtok AS (SELECT doc_id, unnest(t) AS w FROM gtest),
-         gtb AS (
-           SELECT doc_id, cls,
-             CAST(SUM(length(bin(
-               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
-               AS token_bits
-           FROM gtok CROSS JOIN classes
-           LEFT JOIN counts ON counts.source = classes.cls
-             AND counts.w = gtok.w
-           GROUP BY 1, 2),
-         ggrid AS (SELECT g.doc_id, cls, prior_bits
-                   FROM gtest g CROSS JOIN classes),
-         gscored AS (
-           SELECT doc_id, cls, prior_bits + COALESCE(token_bits, 0) AS bits
-           FROM ggrid LEFT JOIN gtb USING (doc_id, cls)),
-         gpred AS (
-           SELECT doc_id, cls AS pred_source
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                   ORDER BY bits, cls) AS rk FROM gscored)
-           WHERE rk = 1),
-         nbkeep AS (
-           SELECT g.doc_id, g.lang, g.bucket, g.quality_score,
-             p.pred_source
-           FROM gate g JOIN gpred p USING (doc_id)
-           WHERE p.pred_source IN ($allow)),
-         rq AS (SELECT l.vec_id, CAST(l.cluster_id AS BIGINT) AS cluster_id,
-                  s.quality_score
-                FROM labeled l JOIN sq s ON s.doc_id = l.vec_id),
-         surv AS (
-           SELECT vec_id AS doc_id, cluster_id
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster_id
-                   ORDER BY quality_score DESC, vec_id) AS qrank FROM rq)
-           WHERE qrank = 1),
-         sem AS (SELECT n.*, v.cluster_id
-                 FROM nbkeep n JOIN surv v USING (doc_id)),
-         mc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM sem GROUP BY 1),
-         mt AS (SELECT lang, n_docs,
-                  CAST($MixtureCaseSql AS BIGINT) AS tp
-                FROM mc),
-         mm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total
-                FROM mt WHERE tp > 0),
-         mr AS (SELECT lang,
-                  LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
-                    AS rate_permille
-                FROM mt, mm WHERE tp > 0)
-         SELECT s.doc_id, s.lang, s.quality_score, s.pred_source,
-           s.cluster_id, r.rate_permille
-         FROM sem s JOIN mr r USING (lang)
-         WHERE s.bucket < r.rate_permille
-         ORDER BY s.doc_id"""
-  }
-
-  /** q_curate_v3: the r15-stage production stack composed in one
-    * statement — the Gopher battery replay ([[gopherRulesSql]]), the
-    * trigram Stupid-Backoff model + per-doc scores
-    * ([[graft.operators.Text.backoffCtes]] — the IDENTICAL CTEs
-    * q_backoff_score pins), the brute-force exact pair set (which the
-    * verified LSH pipeline must equal — the q_minhash_lsh argument),
-    * and the water-filling mixture ([[MixtureCaseSql]]) — so the
-    * composed pipeline is pinned value for value end to end. */
-  private lazy val CurateV3Sql: String =
-    s"""WITH $CurateV3Ctes
-       SELECT s.doc_id, s.lang, s.mean_millibits, r.rate_permille
-       FROM s3 s JOIN mr r USING (lang)
-       WHERE s.bucket < r.rate_permille
-       ORDER BY s.doc_id"""
-
-  /** q_curate_v3_funnel: the same stage CTEs counted per stage — the
-    * attrition table cannot drift from the pipeline it describes. */
-  private lazy val CurateV3FunnelSql: String =
-    s"""WITH $CurateV3Ctes,
-         fin AS (SELECT s.doc_id
-                 FROM s3 s JOIN mr r USING (lang)
-                 WHERE s.bucket < r.rate_permille),
-         f AS (
-           SELECT 0 AS i, 'corpus' AS stage,
-             (SELECT COUNT(*) FROM documents) AS n
-           UNION ALL SELECT 1, 'gopher_pass', COUNT(*) FROM s2pre
-           UNION ALL SELECT 2, 'lm_quartile', COUNT(*) FROM k2
-           UNION ALL SELECT 3, 'neardup_survivor', COUNT(*) FROM s3
-           UNION ALL SELECT 4, 'mixture', COUNT(*) FROM fin)
-       SELECT CAST(i AS BIGINT) AS stage_idx, stage,
-         CAST(n AS BIGINT) AS n_docs,
-         CAST(COALESCE(lag(n) OVER (ORDER BY i) - n, 0) AS BIGINT)
-           AS n_dropped_here
-       FROM f ORDER BY stage_idx"""
-
-  private lazy val CurateV3Ctes: String =
-    s"""${graft.operators.Text.backoffCtes},
-         g AS (SELECT doc_id FROM ($gopherRulesSql) WHERE gopher_pass = 1),
-         dl AS (SELECT doc_id, lang,
-                  ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000
-                    AS bucket
-                FROM documents),
-         s2pre AS (
-           SELECT g.doc_id, dl.lang, dl.bucket, b.mean_millibits
-           FROM g JOIN bsc b USING (doc_id) JOIN dl USING (doc_id)),
-         cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM s2pre),
-         k2 AS (SELECT doc_id, lang, bucket, mean_millibits FROM (
-                  SELECT s2pre.*, ROW_NUMBER() OVER
-                    (ORDER BY mean_millibits, doc_id) AS rk
-                  FROM s2pre), cnt
-                WHERE rk * 4 <= n_total * 3),
-         jp AS (SELECT doc_a, doc_b FROM ($NgramJaccardSql)),
-         dropd AS (SELECT DISTINCT p.doc_b AS doc_id FROM jp p
-                   JOIN k2 a ON a.doc_id = p.doc_a
-                   JOIN k2 b ON b.doc_id = p.doc_b),
-         s3 AS (SELECT * FROM k2
-                WHERE doc_id NOT IN (SELECT doc_id FROM dropd)),
-         mc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM s3 GROUP BY 1),
-         mt AS (SELECT lang, n_docs, CAST($MixtureCaseSql AS BIGINT) AS tp
-                FROM mc),
-         mm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total
-                FROM mt WHERE tp > 0),
-         mr AS (SELECT lang,
-                  LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
-                    AS rate_permille
-                FROM mt, mm WHERE tp > 0)"""
-
-  /** Exact-pair near-dup delta classification — shared by the batch
-    * twin (q_delta_neardup) and the streaming ingest classifier
-    * (q_stream_neardup), which must land on the identical answer. */
-  private val DeltaNearDupSql: String =
-    s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         jp AS (SELECT doc_a, doc_b FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
-         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
-               FROM documents),
-         m AS (SELECT doc_b AS doc_id,
-                 MIN(CASE WHEN doc_a < w THEN doc_a END) AS corpus_match,
-                 MIN(CASE WHEN doc_a >= w THEN doc_a END) AS batch_match
-               FROM jp, w WHERE doc_b >= w GROUP BY doc_b)
-         SELECT b.doc_id,
-           CASE WHEN corpus_match IS NOT NULL THEN 'near_dup_of_corpus'
-                WHEN batch_match IS NOT NULL THEN 'near_dup_in_batch'
-                ELSE 'new' END AS status,
-           COALESCE(corpus_match, batch_match, CAST(-1 AS BIGINT)) AS matched_id
-         FROM (SELECT doc_id FROM documents, w WHERE doc_id >= w) b
-         LEFT JOIN m ON m.doc_id = b.doc_id
-         ORDER BY b.doc_id"""
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** The SimHash pair replay — shared by q_simhash_pairs and the
-    * method-agreement triage (one definition, two rows). */
-  private val SimhashPairsSql: String =
-    s"""WITH toks AS (
-           SELECT doc_id, unnest(list_distinct(string_split($Norm, ' '))) AS w
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             list_reduce(list_transform(generate_series(1, 8),
-               i -> strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1),
-               (a, b) -> a * 16 + b) AS h1,
-             list_reduce(list_transform(generate_series(9, 16),
-               i -> strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1),
-               (a, b) -> a * 16 + b) AS h2
-           FROM toks),
-         votes AS (
-           SELECT doc_id, bits.b,
-             2 * SUM(CASE WHEN bits.b < 32 THEN (h2 >> bits.b) & 1
-                          ELSE (h1 >> (bits.b - 32)) & 1 END) - COUNT(*) AS v
-           FROM h, (SELECT unnest(generate_series(0, 63)) AS b) bits
-           GROUP BY 1, 2),
-         sig AS (
-           SELECT doc_id,
-             string_agg(CASE WHEN v > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS s
-           FROM votes GROUP BY 1)
-         SELECT doc_a, doc_b, hamming FROM (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(len(list_filter(generate_series(1, 64),
-               i -> substr(a.s, i, 1) <> substr(b.s, i, 1))) AS BIGINT) AS hamming
-           FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
-         WHERE hamming <= 3
-         ORDER BY doc_a, doc_b"""
-
-  /** The exact n-gram Jaccard pair replay — shared by
-    * q_ngram_jaccard and the method-agreement triage. */
-  private val NgramJaccardSql: String =
-    s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
-         ORDER BY doc_a, doc_b"""
-
-  /** The exact-pair replay pinning the verified MinHash-LSH pipeline
-    * — shared by q_minhash_lsh and its artifact-served twin
-    * q_minhash_lsh_saved (candidates from the persisted signature
-    * index must emit the same exact pair set). */
-  private val MinhashLshSql: String =
-    s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
-         ORDER BY doc_a, doc_b"""
-
-  /** The brute-force asymmetric-containment replay — shared by
-    * q_containment and its prefix-filtered twin q_containment_prefix
-    * (candidate completeness is the theorem under test, so the
-    * oracle deliberately skips the filter). */
-  private lazy val ContainmentSql: String =
-    s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_a FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-                   GROUP BY 1, 2)
-         SELECT doc_a, doc_b, CAST(common AS BIGINT) AS common,
-           CAST(s.n_a AS BIGINT) AS n_a,
-           CAST((common * 10000) // s.n_a AS BIGINT) AS containment_bp
-         FROM pairs p JOIN sizes s ON s.doc_id = p.doc_a
-         WHERE (common * 10000) // s.n_a >= 6000
-         ORDER BY doc_a, doc_b"""
-
-  /** The method-agreement triage replay — shared by q_dup_methods
-    * (exact Jaccard leg) and q_dup_methods_lsh (minhashLsh-fed leg):
-    * the verified LSH pipeline must land on the identical agreement
-    * table, so both rows pin against the brute-force three-detector
-    * union. One definition per leg — a drifted leg fails its own row
-    * AND both triage rows. */
-  private lazy val DupMethodsSql: String =
-    s"""WITH j AS (SELECT doc_a, doc_b FROM ($NgramJaccardSql)),
-         sh AS (SELECT doc_a, doc_b FROM ($SimhashPairsSql)),
-         ce AS (SELECT doc_a, doc_b FROM
-           (${graft.operators.FeatureHash.hashEmbedNearDupOracle})),
-         allp AS (SELECT doc_a, doc_b FROM j
-                  UNION SELECT doc_a, doc_b FROM sh
-                  UNION SELECT doc_a, doc_b FROM ce)
-         SELECT p.doc_a, p.doc_b,
-           CAST(CASE WHEN j.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS by_jaccard,
-           CAST(CASE WHEN sh.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS by_simhash,
-           CAST(CASE WHEN ce.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS by_cosine,
-           CAST((CASE WHEN j.doc_a IS NOT NULL THEN 1 ELSE 0 END)
-             + (CASE WHEN sh.doc_a IS NOT NULL THEN 1 ELSE 0 END)
-             + (CASE WHEN ce.doc_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_methods
-         FROM allp p
-         LEFT JOIN j ON j.doc_a = p.doc_a AND j.doc_b = p.doc_b
-         LEFT JOIN sh ON sh.doc_a = p.doc_a AND sh.doc_b = p.doc_b
-         LEFT JOIN ce ON ce.doc_a = p.doc_a AND ce.doc_b = p.doc_b
-         ORDER BY p.doc_a, p.doc_b"""
-
-  /** The per-doc Gopher battery replay — shared by q_gopher_rules
-    * and the per-source triage aggregate q_gopher_by_source. */
-  private def gopherRulesSql: String = {
-      import graft.operators.Text._
-      val stops = GopherStops.map(s => s"'$s'").mkString("[", ", ", "]")
-      s"""WITH c AS (
-           SELECT doc_id,
-             len(t) AS n_words, len(l) AS n_lines,
-             length(replace(text, ' ', '')) AS sum_len,
-             (length(text) - length(replace(text, '#', '')))
-               + (length(text) - length(replace(text, '...', ''))) // 3
-               + (length(text) - length(replace(text, '…', ''))) AS n_symbols,
-             len(list_filter(t, x -> regexp_matches(x, '[a-z]'))) AS n_alpha,
-             len(list_filter(l, x -> regexp_matches(x, '^\\s*[-•*] ')))
-               AS n_bullet,
-             len(list_filter(l, x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
-               AS n_ellipsis_end,
-             len(list_filter($stops, s -> list_contains(t, s))) AS stop_hits
-           FROM (SELECT doc_id, text,
-                   string_split(lower(text), ' ') AS t,
-                   string_split(text, chr(10)) AS l FROM documents)),
-         r AS (
-           SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-             CAST((sum_len * 1000) // n_words AS BIGINT) AS word_len_pm,
-             CAST((n_symbols * 10000) // n_words AS BIGINT) AS symbol_bp,
-             CAST((n_alpha * 10000) // n_words AS BIGINT) AS alpha_word_bp,
-             CAST((n_bullet * 10000) // n_lines AS BIGINT) AS bullet_bp,
-             CAST((n_ellipsis_end * 10000) // n_lines AS BIGINT)
-               AS ellipsis_bp,
-             CAST(stop_hits AS BIGINT) AS stop_hits
-           FROM c)
-         SELECT *, CAST((n_words >= $GopherMinWords
-             AND n_words <= $GopherMaxWords
-             AND word_len_pm >= $GopherMinWordLenPm
-             AND word_len_pm <= $GopherMaxWordLenPm
-             AND symbol_bp <= $GopherMaxSymbolBp
-             AND alpha_word_bp >= $GopherMinAlphaBp
-             AND bullet_bp <= $GopherMaxBulletBp
-             AND ellipsis_bp <= $GopherMaxEllipsisBp
-             AND stop_hits >= $GopherMinStops) AS BIGINT) AS gopher_pass
-         FROM r ORDER BY doc_id"""
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_project" ->
-      "SELECT l_orderkey, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_extendedprice",
-
-    "q_filter_in" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         l_returnflag, l_quantity
-         FROM lineitem WHERE l_returnflag IN ('A','N') AND l_quantity > 30
-         ORDER BY l_orderkey, l_linenumber, l_returnflag, l_quantity""",
-
-    "q_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-         COUNT(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q_distinct" ->
-      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-
-    "q_mode_agg" ->
-      """SELECT o_orderpriority, COUNT(*) AS n FROM orders
-         GROUP BY o_orderpriority ORDER BY n DESC, o_orderpriority LIMIT 1""",
-
-    "q_stats_agg" ->
-      """SELECT l_returnflag, MIN(l_quantity) AS min_qty,
-         MAX(l_quantity) AS max_qty,
-         COUNT(DISTINCT l_orderkey) AS n_orders, COUNT(*) AS n_rows
-         FROM lineitem GROUP BY l_returnflag
-         ORDER BY l_returnflag""",
-
-    "q_profile" ->
-      """SELECT 'doc_id' AS column_name, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(COUNT(*) - COUNT(doc_id) AS BIGINT) AS n_nulls,
-         CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_distinct,
-         CAST(MIN(doc_id) AS VARCHAR) AS min_repr,
-         CAST(MAX(doc_id) AS VARCHAR) AS max_repr FROM documents
-         UNION ALL
-         SELECT 'lang', CAST(COUNT(*) AS BIGINT),
-         CAST(COUNT(*) - COUNT(lang) AS BIGINT),
-         CAST(COUNT(DISTINCT lang) AS BIGINT),
-         CAST(MIN(lang) AS VARCHAR), CAST(MAX(lang) AS VARCHAR) FROM documents
-         UNION ALL
-         SELECT 'n_chars', CAST(COUNT(*) AS BIGINT),
-         CAST(COUNT(*) - COUNT(n_chars) AS BIGINT),
-         CAST(COUNT(DISTINCT n_chars) AS BIGINT),
-         CAST(MIN(n_chars) AS VARCHAR), CAST(MAX(n_chars) AS VARCHAR) FROM documents
-         UNION ALL
-         SELECT 'source', CAST(COUNT(*) AS BIGINT),
-         CAST(COUNT(*) - COUNT(source) AS BIGINT),
-         CAST(COUNT(DISTINCT source) AS BIGINT),
-         CAST(MIN(source) AS VARCHAR), CAST(MAX(source) AS VARCHAR) FROM documents
-         UNION ALL
-         SELECT 'text', CAST(COUNT(*) AS BIGINT),
-         CAST(COUNT(*) - COUNT(text) AS BIGINT),
-         CAST(COUNT(DISTINCT text) AS BIGINT),
-         CAST(MIN(text) AS VARCHAR), CAST(MAX(text) AS VARCHAR) FROM documents
-         ORDER BY column_name""",
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         COUNT(*) AS n
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         COUNT(*) AS n
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-         quantile_cont(l_quantity, 0.5) AS p50,
-         quantile_cont(l_quantity, 0.25) AS p25,
-         quantile_cont(l_quantity, 0.75) AS p75,
-         quantile_cont(l_extendedprice, 0.9) AS price_p90
-         FROM lineitem GROUP BY l_returnflag
-         ORDER BY l_returnflag""",
-
-    // GK-sketch verdict row: Spark verifies percentile_approx's rank
-    // guarantee (error ≤ n/10000) against the group's own cumulative
-    // rank windows; the oracle recomputes n and tol and pins every
-    // flag to 1 — a sketch past its contract goes red here
-    "q_approx_percentiles" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(COUNT(*) // 10000 + 1 AS BIGINT) AS tol,
-         CAST(1 AS BIGINT) AS p25_ok, CAST(1 AS BIGINT) AS p50_ok,
-         CAST(1 AS BIGINT) AS p75_ok, CAST(1 AS BIGINT) AS price_p90_ok
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // HLL++ verdict row: exact distincts recomputed by the oracle,
-    // within-5% flags (≥5σ at rsd 0.01) pinned to 1
-    "q_approx_distinct" ->
-      """SELECT l_returnflag,
-         CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
-         CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-         CAST(1 AS BIGINT) AS orders_within_5pct,
-         CAST(1 AS BIGINT) AS parts_within_5pct
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    // Trimmed/winsorized means: integer rank cut over cents, both
-    // means as one fixed-shape IEEE expression over HUGEINT operands —
-    // mirrors Relational.trimmedStats term for term
-    "q_trimmed_stats" ->
-      s"""WITH r AS (
-           SELECT l_returnflag,
-             CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem),
-         rk AS (
-           SELECT l_returnflag, v,
-             row_number() OVER (PARTITION BY l_returnflag ORDER BY v) AS rk,
-             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-           FROM r),
-         k AS (SELECT * FROM rk
-               WHERE rk > n * ${Relational.TrimPct} // 100
-                 AND rk <= n - n * ${Relational.TrimPct} // 100)
-         SELECT l_returnflag, CAST(MAX(n) AS BIGINT) AS n,
-           CAST(COUNT(*) AS BIGINT) AS n_kept,
-           CAST(SUM(CAST(v AS HUGEINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 100.0 AS trimmed_mean,
-           CAST(SUM(CAST(v AS HUGEINT))
-                + ((MAX(n) - COUNT(*)) // 2) * CAST(MIN(v) AS HUGEINT)
-                + ((MAX(n) - COUNT(*)) // 2) * CAST(MAX(v) AS HUGEINT)
-              AS DOUBLE)
-             / CAST(MAX(n) AS DOUBLE) / 100.0 AS winsorized_mean
-         FROM k GROUP BY l_returnflag
-         ORDER BY l_returnflag""",
-
-    // Equi-depth binning: NTILE over a total order — both engines
-    // split n rows into k buckets of sizes differing by <=1, larger
-    // first, so boundaries are a pure function of the data
-    "q_equidepth" ->
-      """WITH r AS (
-           SELECT l_returnflag,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
-             l_orderkey, l_linenumber
-           FROM lineitem),
-         b AS (
-           SELECT l_returnflag, v,
-             CAST(ntile(10) OVER (PARTITION BY l_returnflag
-               ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS bucket
-           FROM r)
-         SELECT l_returnflag, bucket, CAST(COUNT(*) AS BIGINT) AS n,
-           MIN(v) AS lo_cents, MAX(v) AS hi_cents
-         FROM b GROUP BY 1, 2
-         ORDER BY l_returnflag, bucket""",
-
-    // CDF normalization: RANK (ties share a percentile) over cents,
-    // scaled to basis points by integer floor division
-    "q_cdf_norm" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-           l_returnflag, v, (rk * 10000) // n AS cdf_bp
-         FROM (
-           SELECT l_orderkey, l_linenumber, l_returnflag,
-             CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v,
-             CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY
-               CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rk,
-             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-           FROM lineitem)
-         ORDER BY l_orderkey, l_linenumber, l_returnflag, v""",
-
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         COUNT(*) AS n
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-
-    // Same integer-exact co-moment construction as the Scala side
-    // (DECIMAL(38,0) there, HUGEINT here — both exact), then ONE
-    // fixed-shape IEEE expression per output: bit-identical doubles.
-    "q_regression" ->
-      """WITH m AS (
-           SELECT l_returnflag,
-             CAST(COUNT(*) AS HUGEINT) AS n,
-             SUM(CAST(ROUND(l_quantity * 100) AS HUGEINT)) AS sx,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS HUGEINT)) AS sy,
-             SUM(CAST(ROUND(l_quantity * 100) AS HUGEINT) *
-                 CAST(ROUND(l_extendedprice * 100) AS HUGEINT)) AS sxy,
-             SUM(CAST(ROUND(l_quantity * 100) AS HUGEINT) *
-                 CAST(ROUND(l_quantity * 100) AS HUGEINT)) AS sxx,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS HUGEINT) *
-                 CAST(ROUND(l_extendedprice * 100) AS HUGEINT)) AS syy
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-           CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE)
-             AS slope,
-           (CAST(sy AS DOUBLE) -
-              (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE))
-                * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept,
-           (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE)) *
-             (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*syy - sy*sy AS DOUBLE))
-             AS r2,
-           CAST(n*sxy - sx*sy AS DOUBLE) /
-             (sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) *
-              sqrt(CAST(n*syy - sy*sy AS DOUBLE))) AS corr_xy
-         FROM m ORDER BY l_returnflag""",
-
-    "q_salted_join" ->
-      """SELECT l_orderkey,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY l_orderkey
-         ORDER BY l_orderkey""",
-
-    // The bucketed-layout join: values must equal the plain parquet
-    // join (this oracle); the LAYOUT claim — zero Exchange, zero Sort,
-    // bucket-pruned scans — is asserted from executed plans in
-    // BucketingSpec.
-    "q_bucketed_join" ->
-      """SELECT o_orderpriority,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_items
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""",
-
-    // Dynamic partition pruning: values must equal the plain WHERE
-    // filter (this oracle); the ACCESS-PATH claim — a dynamicpruning
-    // subquery on the fact scan reading 7 of 30 date partitions — is
-    // asserted from the executed plan + scan metrics in DppSpec.
-    "q_dpp_join" ->
-      """SELECT event_type, COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events
-         WHERE CAST(ts AS DATE) <
-           (SELECT MIN(CAST(ts AS DATE)) FROM events) + 7
-         GROUP BY event_type
-         ORDER BY event_type""",
-
-    // Keyless range join: the oracle states the predicate directly
-    // (DuckDB plans inequality joins natively via IEJoin); the Spark
-    // side must reach the same pair set through the bucketed
-    // equality-join rewrite
-    "q_interval_join" ->
-      """SELECT o_orderkey, o_orderpriority,
-         CAST(count(l.l_shipdate) AS BIGINT) AS n_shipped
-         FROM orders o LEFT JOIN lineitem l
-           ON l.l_shipdate >= o.o_orderdate
-          AND l.l_shipdate < o.o_orderdate + INTERVAL 7 DAY
-         GROUP BY o_orderkey, o_orderpriority
-         ORDER BY o_orderkey""",
-
-    "q_cosine_pairs" ->
-      """WITH q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, iv,
-             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
-               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm
-           FROM q)
-         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cosine
-         FROM n a, n b
-         WHERE a.vec_id < b.vec_id
-           AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) >= 0.25
-         ORDER BY vec_a, vec_b""",
-
-    // Embedding near-dup pairs at the production threshold (0.95):
-    // the oracle is the full EXACT pair scan, so the LSH-bucketed
-    // path must emit exactly the exact set — empty on the natural
-    // fixture (max pairwise cosine ≈ 0.51), which the oracle now
-    // proves instead of a rows-only shrug; any spurious bucket pair
-    // or missed true pair goes red
-    "q_cosine_near_dup" ->
-      """WITH q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         n AS (
-           SELECT vec_id, iv,
-             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
-               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm
-           FROM q)
-         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cosine
-         FROM n a, n b
-         WHERE a.vec_id < b.vec_id
-           AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) >= 0.95
-         ORDER BY vec_a, vec_b""",
-
-    "q_monthly_orders" ->
-      """SELECT date_trunc('month', o_orderdate) AS month,
-         COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-         FROM orders GROUP BY 1
-         ORDER BY month""",
-
-    "q_join_region" ->
-      """SELECT r_name,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n_lines
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name
-         ORDER BY r_name""",
-
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders
-                       WHERE o_custkey = c_custkey AND o_totalprice > 100000)
-         ORDER BY c_custkey""",
-
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-
-    "q_above_avg" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) >
-           (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) FROM orders)
-         ORDER BY o_orderkey""",
-
-    "q_union_order" ->
-      """SELECT name, kind FROM (
-           SELECT c_name AS name, 'CUSTOMER' AS kind FROM customer
-           UNION ALL
-           SELECT s_name AS name, 'SUPPLIER' AS kind FROM supplier)
-         WHERE name IS NOT NULL
-         ORDER BY kind, name""",
-
-    "q_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-         INTERSECT
-         SELECT s_nationkey AS nationkey FROM supplier
-         ORDER BY nationkey""",
-
-    "q_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-         EXCEPT
-         SELECT s_nationkey AS nationkey FROM supplier
-         ORDER BY nationkey""",
-
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rk AS BIGINT) AS rk
-         FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-                 ROW_NUMBER() OVER (PARTITION BY o_custkey
-                   ORDER BY o_totalprice DESC, o_orderkey) AS rk
-               FROM orders) WHERE rk <= 3
-         ORDER BY o_custkey, rk""",
-
-    "q_pct_share" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) /
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                OVER (PARTITION BY l_orderkey) AS DOUBLE) AS price_share
-         FROM lineitem
-         ORDER BY l_orderkey, l_linenumber, price_share""",
-
-    "q_running_sum" ->
-      """SELECT l_suppkey, l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-              OVER (PARTITION BY l_suppkey
-                    ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
-                    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_qty
-         FROM lineitem
-         ORDER BY l_suppkey, running_qty, l_orderkey, l_linenumber""",
-
-    "q_order_gaps" ->
-      """SELECT o_custkey, o_orderkey,
-         CAST(date_diff('day',
-           CAST(LAG(o_orderdate) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey) AS DATE),
-           CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since_prev
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-
-    "q_window_frames" ->
-      """SELECT l_returnflag, l_orderkey,
-         CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-         FIRST_VALUE(l_extendedprice) OVER wf AS flag_min_price,
-         LAST_VALUE(l_extendedprice) OVER wf AS flag_max_price
-         FROM lineitem
-         WINDOW w AS (PARTITION BY l_returnflag
-             ORDER BY l_extendedprice, l_orderkey, l_linenumber),
-           wf AS (PARTITION BY l_returnflag
-             ORDER BY l_extendedprice, l_orderkey, l_linenumber
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ORDER BY l_returnflag, l_orderkey, l_linenumber, quartile""",
-
-    "q_string_ops" ->
-      """SELECT c_custkey, upper(c_name) AS upper_name,
-         lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS padded_key,
-         substring(c_name, 1, 8) AS prefix8,
-         CAST(levenshtein(c_mktsegment, 'BUILDING') AS BIGINT) AS seg_dist,
-         reverse(c_mktsegment) AS seg_rev,
-         CAST(instr(c_name, '#') AS BIGINT) AS hash_pos
-         FROM customer
-         ORDER BY c_custkey""",
-
-    "q_conditional_agg" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-         CAST(count_if(o_orderstatus = 'F') AS BIGINT) AS n_finished,
-         CAST(SUM(CASE WHEN o_totalprice > 100000
-           THEN CAST(o_totalprice AS DECIMAL(18,2))
-           ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS big_order_revenue
-         FROM orders GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""",
-
-    "q_correlated_subquery" ->
-      """SELECT c_custkey, c_name,
-         (SELECT MAX(o_totalprice) FROM orders
-          WHERE o_custkey = c_custkey) AS max_order
-         FROM customer
-         ORDER BY c_custkey""",
-
-    "q_explode_words" ->
-      """SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, ws[i] AS word
-         FROM (SELECT doc_id, string_split(text, ' ') AS ws
-               FROM documents WHERE doc_id < 10) t,
-              LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-         ORDER BY doc_id, pos""",
-
-    "q_hourly_events" ->
-      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2
-         ORDER BY hour, event_type""",
-
-    "q_stream_hourly" ->
-      """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2
-         ORDER BY hour, event_type""",
-
-    // Streaming ingest dedup: the engine emits the distinct key set
-    // (which duplicate row survives is arrival-order-dependent; the key
-    // set is deterministic and hash-checkable).
-    "q_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-         ORDER BY user_id, event_type""",
-
-    // Stream-stream event-time interval join: per purchase, the same
-    // user's views in the trailing 24h. The streaming engine produces
-    // the pair set; the rollup is deterministic on either engine.
-    "q_stream_interval" ->
-      """SELECT p.event_id, p.user_id, CAST(COUNT(*) AS BIGINT) AS n_views
-         FROM (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'purchase') p
-         JOIN (SELECT user_id, ts FROM events
-               WHERE event_type = 'view') v
-           ON p.user_id = v.user_id
-          AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 24 HOUR
-         GROUP BY p.event_id, p.user_id
-         ORDER BY p.event_id""",
-
-    // Stream-static enrichment join (events stream × customer dim)
-    // aggregated per segment.
-    "q_stream_enrich" ->
-      """SELECT c.c_mktsegment, COUNT(*) AS n,
-         CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY 1 ORDER BY 1""",
-
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-         CAST(count_if(o_orderstatus = 'F') AS BIGINT) AS n_f,
-         CAST(count_if(o_orderstatus = 'O') AS BIGINT) AS n_o,
-         CAST(count_if(o_orderstatus = 'P') AS BIGINT) AS n_p
-         FROM orders GROUP BY o_orderpriority
-         ORDER BY o_orderpriority""",
-
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-         w AS (SELECT user_id, event_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-               FROM e),
-         s AS (SELECT *, CASE WHEN prev_ts IS NULL
-                 OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-                 THEN 1 ELSE 0 END AS new_session FROM w),
-         c AS (SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-               FROM s)
-         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-           COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end
-         FROM c GROUP BY 1, 2 ORDER BY user_id, session_id""",
-
-    // SCD2: gaps-and-islands over event_type changes; valid_to chains
-    // to the next version's valid_from, NULL on the current row (a
-    // far-future sentinel overflows int64-ns timestamp consumers)
-    "q_scd2" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-                 CAST(ts AS TIMESTAMP) AS ts FROM events),
-         w AS (SELECT *, LAG(event_type) OVER
-                 (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-               FROM e),
-         m AS (SELECT *, CASE WHEN prev IS NULL OR prev <> event_type
-                 THEN 1 ELSE 0 END AS chg FROM w),
-         v AS (SELECT *, SUM(chg) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS version
-               FROM m),
-         i AS (SELECT user_id, CAST(version AS BIGINT) AS version,
-                 event_type, MIN(ts) AS valid_from,
-                 CAST(COUNT(*) AS BIGINT) AS n_events
-               FROM v GROUP BY 1, 2, 3)
-         SELECT user_id, version, event_type, valid_from,
-           LEAD(valid_from) OVER
-               (PARTITION BY user_id ORDER BY version) AS valid_to,
-           n_events,
-           CAST(LEAD(valid_from) OVER
-               (PARTITION BY user_id ORDER BY version)
-             IS NULL AS BIGINT) AS is_current
-         FROM i ORDER BY user_id, version""",
-
-    // the transformWithState streaming twin stamps versions with
-    // carried RocksDB state and rebuilds the same dimension rows from
-    // its own output, so it shares the batch SCD2 oracle verbatim
-    "q_stream_scd2" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-                 CAST(ts AS TIMESTAMP) AS ts FROM events),
-         w AS (SELECT *, LAG(event_type) OVER
-                 (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-               FROM e),
-         m AS (SELECT *, CASE WHEN prev IS NULL OR prev <> event_type
-                 THEN 1 ELSE 0 END AS chg FROM w),
-         v AS (SELECT *, SUM(chg) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS version
-               FROM m),
-         i AS (SELECT user_id, CAST(version AS BIGINT) AS version,
-                 event_type, MIN(ts) AS valid_from,
-                 CAST(COUNT(*) AS BIGINT) AS n_events
-               FROM v GROUP BY 1, 2, 3)
-         SELECT user_id, version, event_type, valid_from,
-           LEAD(valid_from) OVER
-               (PARTITION BY user_id ORDER BY version) AS valid_to,
-           n_events,
-           CAST(LEAD(valid_from) OVER
-               (PARTITION BY user_id ORDER BY version)
-             IS NULL AS BIGINT) AS is_current
-         FROM i ORDER BY user_id, version""",
-
-    // Hourly resample + forward fill: the value doubles pass through
-    // untouched (deterministic last = max event_id), so parity needs
-    // no float rule at all
-    "q_resample" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-                 date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour
-               FROM events),
-         h AS (SELECT user_id, hour, CAST(COUNT(*) AS BIGINT) AS n_events,
-                 arg_max(value, event_id) AS v
-               FROM e GROUP BY 1, 2),
-         s AS (SELECT user_id, MIN(hour) AS h0, MAX(hour) AS h1
-               FROM e GROUP BY 1),
-         g AS (SELECT user_id,
-                 unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-               FROM s)
-         SELECT g.user_id, g.hour,
-           COALESCE(h.n_events, 0) AS n_events,
-           last_value(h.v IGNORE NULLS) OVER (PARTITION BY g.user_id
-             ORDER BY g.hour ROWS UNBOUNDED PRECEDING) AS filled_value
-         FROM g LEFT JOIN h ON g.user_id = h.user_id AND g.hour = h.hour
-         ORDER BY g.user_id, g.hour""",
-
-    // the transformWithState/RocksDB streaming twin reproduces the
-    // batch session aggregate exactly, so it shares the window oracle
-    "q_stream_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-         w AS (SELECT user_id, event_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-               FROM e),
-         s AS (SELECT *, CASE WHEN prev_ts IS NULL
-                 OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-                 THEN 1 ELSE 0 END AS new_session FROM w),
-         c AS (SELECT *, SUM(new_session) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-               FROM s)
-         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-           COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end
-         FROM c GROUP BY 1, 2 ORDER BY user_id, session_id""",
-
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
-         v AS (SELECT user_id, MIN(ts) AS t_view FROM e
-               WHERE event_type = 'view' GROUP BY user_id),
-         c AS (SELECT e.user_id, MIN(e.ts) AS t_click FROM e
-               JOIN v ON e.user_id = v.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.t_view
-               GROUP BY e.user_id),
-         p AS (SELECT e.user_id, MIN(e.ts) AS t_purchase FROM e
-               JOIN c ON e.user_id = c.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-               GROUP BY e.user_id)
-         SELECT u.user_id, v.t_view, c.t_click, p.t_purchase,
-           CAST(CASE WHEN p.t_purchase IS NOT NULL THEN 3
-                WHEN c.t_click IS NOT NULL THEN 2
-                WHEN v.t_view IS NOT NULL THEN 1
-                ELSE 0 END AS BIGINT) AS stage
-         FROM (SELECT DISTINCT user_id FROM e) u
-         LEFT JOIN v USING (user_id)
-         LEFT JOIN c USING (user_id)
-         LEFT JOIN p USING (user_id)
-         ORDER BY user_id""",
-
-    // CDC latest-wins compaction: newest row per (user_id, event_type),
-    // ties by event_id — total order, engine-independent winner
-    "q_latest_version" ->
-      """WITH r AS (SELECT user_id, event_type, event_id,
-             row_number() OVER (PARTITION BY user_id, event_type
-               ORDER BY ts DESC, event_id DESC) AS rn,
-             count(*) OVER (PARTITION BY user_id, event_type) AS n_versions
-           FROM events)
-         SELECT user_id, event_type, event_id AS latest_event_id,
-           CAST(n_versions AS BIGINT) AS n_versions
-         FROM r WHERE rn = 1
-         ORDER BY user_id, event_type""",
-
-    "q_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id,
-               CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS d
-             FROM events),
-         f AS (SELECT user_id, MIN(d) AS cohort_day FROM e GROUP BY user_id)
-         SELECT cohort_day,
-           CAST(date_diff('day', cohort_day, d) AS BIGINT) AS day_offset,
-           CAST(COUNT(*) AS BIGINT) AS n_users
-         FROM e JOIN f USING (user_id)
-         GROUP BY 1, 2
-         ORDER BY 1, 2""",
-
-    "q_regex_extract" ->
-      """SELECT event_id, event_type,
-         CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
-         FROM events WHERE event_type = 'error'
-         ORDER BY event_id""",
-
-    "q_json_extract" ->
-      """SELECT event_id, event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-         FROM events
-         ORDER BY event_id""",
-
-    "q_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-                     event_type, value FROM events),
-         rights AS (SELECT user_id, ts, arg_max(value, event_id) AS ref_value,
-                      MAX(event_id) AS ref_event_id
-                    FROM e WHERE event_type = 'signup' GROUP BY 1, 2),
-         lefts AS (SELECT * FROM e WHERE event_type <> 'signup')
-         SELECT l.event_id, l.user_id, l.event_type,
-           r.ref_event_id, r.ts AS ref_ts, r.ref_value
-         FROM lefts l ASOF LEFT JOIN rights r
-           ON l.user_id = r.user_id AND l.ts >= r.ts
-         ORDER BY event_id""",
-
-    "q_date_format" ->
-      """SELECT o_orderkey,
-         strftime(o_orderdate, '%Y%m%d%H%M%S%f') AS job_date_str
-         FROM orders
-         ORDER BY o_orderkey""",
-
-    "q_base64" ->
-      """SELECT event_id, base64(encode(props)) AS props_b64,
-         decode(from_base64(base64(encode(props)))) AS props_roundtrip
-         FROM events
-         ORDER BY event_id""",
-
-    "q_fingerprint" ->
-      s"""SELECT doc_id, md5($Norm) AS fingerprint,
-         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
-         FROM documents
-         ORDER BY doc_id""",
-
-    // Winnowing fingerprints: the oracle re-derives every rolling
-    // Rabin-Karp gram hash in closed form (Σ ord·Bᵉ mod M), replays
-    // the frame-window minima and the rightmost-tie argmin per window
-    // start — a drifted rolling update, window boundary, or tie-break
-    // flips rows
-    "q_winnow" -> operators.Text.winnowOracle,
-
-    // Overlap verdicts off the same selection CTEs: df-cap purge
-    // (boilerplate AND skew keys) + the shared-count floor
-    "q_winnow_overlap" -> operators.Text.winnowOverlapOracle(),
-    // the artifact-served twin: the overlap join over the LOADED
-    // fingerprint index must equal the in-place kernel bit-for-bit
-    // (exact-integer round-trip) — SAME oracle
-    "q_winnow_overlap_saved" -> operators.Text.winnowOverlapOracle(),
-    // the seeded-boilerplate skew receipt: the SAME overlap oracle
-    // over the seeded corpus (one seeding expression, two engines)
-    // Exact-substring dedup: the oracle replays the DEFINITION
-    // (brute-force L-gram join + island merge); the engine's
-    // winnow-anchored extend-and-verify must land on the same spans —
-    // the winnowing guarantee, driver-pinned.
-    "q_substr_dedup" -> operators.Text.substrDedupOracle,
-    "q_substr_scrub" -> operators.Text.substrScrubOracle,
-    // keep-one-copy semantics: cut-eligible iff a smaller-id doc holds
-    // the substring; the first-occurrence holder stays byte-identical
-    "q_substr_keep_first" -> operators.Text.substrKeepFirstOracle,
-    "q_substr_scrub_first" -> operators.Text.substrScrubFirstOracle,
-    // benchmark decontamination: the same definition restricted to
-    // train x test (the shared content-hash split), spans + applied
-    // scrub both hash-pinned
-    "q_decontaminate" -> operators.Text.decontaminateOracle,
-    "q_delta_substr" -> operators.Text.deltaSubstrOracle,
-    // the SAME oracle pins the streaming twin: per-delivery span
-    // audit against the persistent anchor index must agree with the
-    // batch delta pass row-for-row
-    "q_stream_substr" -> operators.Text.deltaSubstrOracle,
-    // the long-ingest twin with live two-store compaction: the oracle
-    // replays the per-delivery incremental semantics brute-force —
-    // compaction must be a pure layout change, bit-for-bit
-    "q_stream_substr_compact" ->
-      graft.streaming.DocStream.substrCompactOracle,
-    "q_decontaminate_scrub" -> operators.Text.decontaminateScrubOracle,
-    "q_winnow_skew" -> operators.Text.winnowOverlapOracle(
-      s"(SELECT doc_id, ${operators.Text.winnowSkewTextSql} AS text " +
-        "FROM documents) sd"),
-
-    // Incremental ingest classification against the corpus-slice
-    // fingerprint index: corpus-side df purge, fp-equality probe,
-    // best-partner (most shared, ties to smaller id)
-    "q_delta_winnow" -> operators.Text.deltaWinnowOracle,
-
-    // the streaming twin shares the batch oracle: a delivery
-    // classified against the persisted index must equal the one-shot
-    // corpus-slice classification row-for-row
-    "q_stream_winnow" -> operators.Text.deltaWinnowOracle,
-    "q_stream_winnow_compact" ->
-      graft.streaming.DocStream.winnowCompactOracle,
-
-    // Text-feature drift: the bit-identical quality composite bucketed
-    // (floor ×20), both sides' counts and integer per-mille shares,
-    // full-outer so one-sided buckets report novel mass explicitly
-    "q_text_drift" ->
-      s"""WITH s AS (
-           SELECT doc_id,
-             CAST(floor(($QualityScoreSql) *
-               ${operators.Text.DriftBucketScale}) AS BIGINT) AS bucket
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t
-                 FROM documents)),
-         wsp AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
-                 FROM documents),
-         ref AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_ref
-                 FROM s, wsp WHERE doc_id < w GROUP BY bucket),
-         nw AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_new
-                FROM s, wsp WHERE doc_id >= w GROUP BY bucket),
-         rt AS (SELECT COALESCE(SUM(n_ref), 1) AS t FROM ref),
-         nt AS (SELECT COALESCE(SUM(n_new), 1) AS t FROM nw)
-         SELECT COALESCE(r.bucket, n.bucket) AS bucket,
-           COALESCE(r.n_ref, 0) AS n_ref,
-           COALESCE(n.n_new, 0) AS n_new,
-           CAST(COALESCE(r.n_ref, 0) * 1000 // greatest(rt.t, 1)
-             AS BIGINT) AS share_ref_pm,
-           CAST(COALESCE(n.n_new, 0) * 1000 // greatest(nt.t, 1)
-             AS BIGINT) AS share_new_pm,
-           CAST(abs(COALESCE(r.n_ref, 0) * 1000 // greatest(rt.t, 1)
-             - COALESCE(n.n_new, 0) * 1000 // greatest(nt.t, 1))
-             AS BIGINT) AS delta_pm
-         FROM ref r FULL OUTER JOIN nw n ON r.bucket = n.bucket
-         CROSS JOIN rt CROSS JOIN nt
-         ORDER BY bucket""",
-
-    "q_token_count" ->
-      """SELECT doc_id,
-         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_ws_tokens,
-         CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct,
-         CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha_runs,
-         CAST(length(text) AS BIGINT) AS n_chars_measured
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q_langid" ->
-      """SELECT doc_id, lang AS lang_label,
-         CASE WHEN en >= es AND en >= de AND en > 0 THEN 'en'
-              WHEN es >= de AND es > 0 THEN 'es'
-              WHEN de > 0 THEN 'de'
-              ELSE 'unknown' END AS lang_pred
-         FROM (SELECT doc_id, lang,
-           len(list_filter(string_split(lower(text), ' '),
-             t -> t IN ('the','a','of','and','to'))) AS en,
-           len(list_filter(string_split(lower(text), ' '),
-             t -> t IN ('el','la','de','y','que'))) AS es,
-           len(list_filter(string_split(lower(text), ' '),
-             t -> t IN ('der','die','das','und','ist'))) AS de
-           FROM documents)
-         ORDER BY doc_id""",
-
-    // Unigram surprisal: integer-exact bits via length(bin(total div
-    // cnt)) = floor(log2)+1 — both engines compute the identical
-    // binary-string length, no float log in either plan
-    "q_surprisal" ->
-      """WITH tok AS (
-           SELECT doc_id,
-             unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-           FROM documents),
-         counts AS (SELECT w, count(*) AS cnt FROM tok GROUP BY w),
-         tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM counts),
-         scored AS (
-           SELECT doc_id, length(bin(total // cnt)) AS bits
-           FROM tok JOIN counts USING (w) CROSS JOIN tot)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(sum(bits) AS BIGINT) AS total_bits,
-           CAST((sum(bits) * 1000) // count(*) AS BIGINT) AS mean_millibits
-         FROM scored GROUP BY doc_id ORDER BY doc_id""",
-
-    // Bigram surprisal: prefix counts derive from the bigram counts
-    // (cnt1 = sum of cnt2 over w1), so cnt1 >= cnt2 and the integer
-    // bit cost length(bin(cnt1 // cnt2)) is always >= 1
-    "q_bigram_surprisal" ->
-      """WITH docs AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
-           FROM documents),
-         big AS (
-           SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-           FROM docs, unnest(range(1, len(t))) AS u(i)
-           WHERE len(t) >= 2),
-         bi AS (SELECT w1, w2, count(*) AS cnt2 FROM big GROUP BY w1, w2),
-         pre AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1 FROM bi GROUP BY w1),
-         scored AS (
-           SELECT doc_id, length(bin(cnt1 // cnt2)) AS bits
-           FROM big JOIN bi USING (w1, w2) JOIN pre USING (w1))
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(bits) AS BIGINT) AS total_bits,
-           CAST((sum(bits) * 1000) // count(*) AS BIGINT) AS mean_millibits
-         FROM scored GROUP BY doc_id ORDER BY doc_id""",
-
-    // Trigram Stupid Backoff against the train-split model: the
-    // three-level CASE, integer bit costs, and per-level censuses all
-    // replay off the shared content-hash split definition.
-    "q_backoff_score" -> operators.Text.backoffScoreOracle,
-    // The frozen-artifact LM gate: ONE oracle pins the batch gate and
-    // its streaming twin (model + cut ship together; the two paths
-    // must admit the identical set).
-    "q_lm_gate" -> operators.Text.lmGateOracle,
-    "q_stream_lm_gate" -> operators.Text.lmGateOracle,
-    // the same model + frozen cut grouped per feed — admission census
-    "q_lm_gate_by_source" -> operators.Text.lmGateBySourceOracle,
-    // scored from the LOADED count tables (train -> publish -> load
-    // -> score): same oracle, so a round-trip bit-flip fails
-    "q_backoff_score_saved" -> operators.Text.backoffScoreOracle,
-    // the SAME oracle pins the streaming twin: per-delivery scoring
-    // against the frozen persisted LM must equal the batch pass
-    "q_stream_backoff" -> operators.Text.backoffScoreOracle,
-
-    // CCNet head/middle/tail: the bigram model replays as above, then
-    // the per-source tercile is plain ROW_NUMBER + integer arithmetic
-    // — pinning the Spark side's two-phase bucketed rank equal to the
-    // single-window total order (same receipt as exact skewProfile)
-    "q_ppl_buckets" ->
-      """WITH docs AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
-           FROM documents),
-         big AS (
-           SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-           FROM docs, unnest(range(1, len(t))) AS u(i)
-           WHERE len(t) >= 2),
-         bi AS (SELECT w1, w2, count(*) AS cnt2 FROM big GROUP BY w1, w2),
-         pre AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1 FROM bi GROUP BY w1),
-         sc AS (
-           SELECT doc_id,
-             CAST((sum(length(bin(cnt1 // cnt2))) * 1000) // count(*) AS BIGINT)
-               AS mean_millibits
-           FROM big JOIN bi USING (w1, w2) JOIN pre USING (w1)
-           GROUP BY doc_id),
-         j AS (
-           SELECT sc.doc_id, d.source, sc.mean_millibits
-           FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
-         n AS (SELECT source, CAST(count(*) AS BIGINT) AS ns FROM j GROUP BY source),
-         r AS (
-           SELECT doc_id, source, mean_millibits,
-             ROW_NUMBER() OVER (PARTITION BY source
-               ORDER BY mean_millibits, doc_id) AS rk
-           FROM j)
-         SELECT r.doc_id, r.source, r.mean_millibits,
-           CASE (3 * (rk - 1)) // ns
-             WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail'
-           END AS ppl_bucket
-         FROM r JOIN n USING (source)
-         ORDER BY doc_id""",
-
-    // Exact heavy hitters: the oracle is the definition (count > n/k);
-    // the Spark side reaches the same rows via the two-pass
-    // Misra-Gries reduction without shuffling the token stream. The
-    // threshold derives from the operator's own k constant, so the
-    // two sides cannot drift.
-    "q_heavy_hitters" ->
-      s"""WITH tok AS (
-           SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-           FROM documents),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM tok)
-         SELECT w, CAST(count(*) AS BIGINT) AS cnt
-         FROM tok CROSS JOIN tot GROUP BY w, total
-         HAVING count(*) * ${Corpus.HeavyHittersK} > total
-         ORDER BY cnt DESC, w""",
-
-    // Count-Min Sketch: the md5 row hashes, the depth×width grid,
-    // the min-over-rows estimate, and the overcount flag all replay
-    // deterministically — a ge_flag of 0 anywhere means a broken grid
-    "q_cms_heavy_hitters" -> operators.Corpus.cmsHeavyHittersOracle,
-
-    // the streaming Complete-mode aggregation twin shares the exact
-    // batch oracle: the state-store counts must equal a one-shot
-    // groupBy to the row
-    "q_stream_heavy_hitters" ->
-      s"""WITH tok AS (
-           SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-           FROM documents),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM tok)
-         SELECT w, CAST(count(*) AS BIGINT) AS cnt
-         FROM tok CROSS JOIN tot GROUP BY w, total
-         HAVING count(*) * ${Corpus.HeavyHittersK} > total
-         ORDER BY cnt DESC, w""",
-
-    // Integer-exact 3-sigma outliers: (n*x - s)^2 > 9*(n*ss - s^2)
-    // over integer cents, HUGEINT on the DuckDB side mirroring the
-    // Spark DECIMAL(38,0) accumulators
-    "q_outliers" ->
-      """WITH e AS (
-           SELECT event_id, event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-           FROM events),
-         st AS (
-           SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(c) AS HUGEINT) AS s,
-             sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss
-           FROM e GROUP BY event_type)
-         SELECT event_id, event_type, c AS value_cents
-         FROM e JOIN st USING (event_type)
-         WHERE (n*c - s) * (n*c - s) > 9 * (n*ss - s*s)
-         ORDER BY event_id""",
-
-    // Robust (median/MAD) outliers: medians over integers are exact
-    // halves, so doubled units make med2/mad4 exact BIGINTs and the
-    // 3.5-modified-z gate cross-multiplies to pure integers
-    "q_robust_outliers" ->
-      """WITH e AS (
-           SELECT event_id, event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-           FROM events),
-         med AS (
-           SELECT event_type,
-             CAST(quantile_cont(c, 0.5) * 2 AS BIGINT) AS med2
-           FROM e GROUP BY event_type),
-         dev AS (
-           SELECT e.*, abs(e.c * 2 - med.med2) AS adev2
-           FROM e JOIN med USING (event_type)),
-         mad AS (
-           SELECT event_type,
-             CAST(quantile_cont(adev2, 0.5) * 2 AS BIGINT) AS mad4
-           FROM dev GROUP BY event_type)
-         SELECT event_id, event_type, c AS value_cents,
-           (13490 * adev2) // mad4 AS mz_bp
-         FROM dev JOIN mad USING (event_type)
-         WHERE mad4 > 0 AND adev2 * 1349 > mad4 * 3500
-         ORDER BY event_id""",
-
-    // Streaming twin: the stream must land exactly the batch rows
-    "q_stream_outliers" ->
-      """WITH e AS (
-           SELECT event_id, event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-           FROM events),
-         st AS (
-           SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(c) AS HUGEINT) AS s,
-             sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss
-           FROM e GROUP BY event_type)
-         SELECT event_id, event_type, c AS value_cents
-         FROM e JOIN st USING (event_type)
-         WHERE (n*c - s) * (n*c - s) > 9 * (n*ss - s*s)
-         ORDER BY event_id""",
-
-    // Fixed-iteration integer PageRank, unrolled to 10 CTE layers
-    "q_pagerank" -> operators.Graph.pageRankOracle(),
-
-    // Triangle census: pair explosion, weight floor, degree-ordered
-    // orientation, wedge close, and the integer ppm clustering
-    // coefficient all replay verbatim — a wrong orientation tie-break
-    // or a double-counted triangle flips rows
-    "q_triangles" -> operators.Graph.trianglesOracle,
-
-    // K-core peel: the same co-occurrence graph, the fixed-round
-    // degree-peel unrolled as CTE layers — a wrong degree count or a
-    // non-fixpoint round count splits the engines
-    "q_kcore" -> operators.Graph.kcoreOracle,
-    "q_lpa_communities" -> operators.Graph.lpaOracle,
-
-    // Feature-hash embeddings: md5-derived dim/sign, integer values —
-    // the whole representation replays bit-for-bit
-    "q_hash_embed" -> operators.FeatureHash.hashEmbedOracle,
-
-    // Per-source n-gram diversity: exact distinct counts + integer
-    // ppm ratio replay directly
-    "q_ngram_diversity" -> operators.Corpus.ngramDiversityOracle,
-
-    // ... and the near-dup screen over them: same top-two-dim
-    // blocking, same integer square-comparison cosine gate
-    "q_hash_embed_neardup" -> operators.FeatureHash.hashEmbedNearDupOracle,
-
-    "q_event_paths" ->
-      """WITH seq AS (
-           SELECT event_type AS e1,
-             lead(event_type, 1) OVER w AS e2,
-             lead(event_type, 2) OVER w AS e3
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         SELECT e1 || '>' || e2 || '>' || e3 AS path,
-           CAST(count(*) AS BIGINT) AS n
-         FROM seq WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-         GROUP BY 1 ORDER BY n DESC, path LIMIT 20""",
-
-    "q_fk_audit" ->
-      """SELECT * FROM (
-         SELECT 'lineitem.l_orderkey->orders' AS relationship,
-           (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS child_rows,
-           CAST(count(*) AS BIGINT) AS orphan_rows,
-           CAST(count(DISTINCT l_orderkey) AS BIGINT) AS distinct_orphan_keys
-         FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)
-         UNION ALL
-         SELECT 'lineitem.l_suppkey->supplier',
-           (SELECT count(*) FROM lineitem), count(*), count(DISTINCT l_suppkey)
-         FROM lineitem WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier)
-         UNION ALL
-         SELECT 'orders.o_custkey->customer',
-           (SELECT count(*) FROM orders), count(*), count(DISTINCT o_custkey)
-         FROM orders WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
-         UNION ALL
-         SELECT 'customer.c_nationkey->nation',
-           (SELECT count(*) FROM customer), count(*), count(DISTINCT c_nationkey)
-         FROM customer WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation)
-         UNION ALL
-         SELECT 'supplier.s_nationkey->nation',
-           (SELECT count(*) FROM supplier), count(*), count(DISTINCT s_nationkey)
-         FROM supplier WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation)
-         UNION ALL
-         SELECT 'nation.n_regionkey->region',
-           (SELECT count(*) FROM nation), count(*), count(DISTINCT n_regionkey)
-         FROM nation WHERE n_regionkey NOT IN (SELECT r_regionkey FROM region))
-         ORDER BY relationship""",
-
-    "q_bloom_join" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_items,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-         FROM lineitem
-         WHERE l_orderkey IN (
-           SELECT o_orderkey FROM orders
-           WHERE o_orderstatus = 'F' AND o_orderpriority = '1-URGENT')
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_quality" ->
-      s"""SELECT doc_id,
-         CAST(len(t) AS BIGINT) AS n_tokens,
-         CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE) AS distinct_ratio,
-         CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-           / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-         CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-           / CAST(len(t) AS DOUBLE) AS stopword_ratio,
-         $QualityScoreSql AS quality_score
-         FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)
-         ORDER BY doc_id""",
-
-    // Gopher rule battery: every signal an integer count or div ratio
-    // (per-mille / bp), thresholds interpolated from the shared
-    // constants — the composed pass verdict replays BIGINT-exact.
-    "q_gopher_rules" -> gopherRulesSql,
-    // Per-source triage: the battery replay aggregated by source with
-    // per-rule fail censuses — every census an integer comparison on
-    // the battery's own columns.
-    "q_gopher_by_source" -> {
-      import graft.operators.Text._
-      s"""WITH g AS (SELECT * FROM ($gopherRulesSql)),
-         d AS (SELECT doc_id, source FROM documents),
-         a AS (
-           SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(g.gopher_pass) AS BIGINT) AS n_pass,
-             CAST(SUM(CASE WHEN g.n_words >= $GopherMinWords
-               AND g.n_words <= $GopherMaxWords THEN 0 ELSE 1 END)
-               AS BIGINT) AS fail_words,
-             CAST(SUM(CASE WHEN g.word_len_pm >= $GopherMinWordLenPm
-               AND g.word_len_pm <= $GopherMaxWordLenPm THEN 0 ELSE 1 END)
-               AS BIGINT) AS fail_word_len,
-             CAST(SUM(CASE WHEN g.symbol_bp <= $GopherMaxSymbolBp
-               THEN 0 ELSE 1 END) AS BIGINT) AS fail_symbol,
-             CAST(SUM(CASE WHEN g.alpha_word_bp >= $GopherMinAlphaBp
-               THEN 0 ELSE 1 END) AS BIGINT) AS fail_alpha,
-             CAST(SUM(CASE WHEN g.bullet_bp <= $GopherMaxBulletBp
-               THEN 0 ELSE 1 END) AS BIGINT) AS fail_bullet,
-             CAST(SUM(CASE WHEN g.ellipsis_bp <= $GopherMaxEllipsisBp
-               THEN 0 ELSE 1 END) AS BIGINT) AS fail_ellipsis,
-             CAST(SUM(CASE WHEN g.stop_hits >= $GopherMinStops
-               THEN 0 ELSE 1 END) AS BIGINT) AS fail_stops
-           FROM g JOIN d USING (doc_id) GROUP BY d.source)
-         SELECT source, n_docs, n_pass,
-           CAST((n_pass * 10000) // n_docs AS BIGINT) AS pass_bp,
-           fail_words, fail_word_len, fail_symbol, fail_alpha,
-           fail_bullet, fail_ellipsis, fail_stops
-         FROM a ORDER BY source"""
-    },
-
-    // Stratified sampling: same content-hash bucket as q_split_assign,
-    // per-language keep rate (en downsampled to 500‰).
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang,
-         CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
-         CAST(CASE WHEN lang = 'en' THEN 500 ELSE 1000 END AS BIGINT) AS rate_permille
-         FROM documents
-         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 <
-               CASE WHEN lang = 'en' THEN 500 ELSE 1000 END
-         ORDER BY doc_id""",
-
-    // Quality gate: drop the worst quartile by the composite score
-    // (Spark exact `percentile` ↔ DuckDB `quantile_cont` — the
-    // interpolation parity q_percentiles already pins).
-    "q_quality_gate" ->
-      s"""WITH s AS (
-           SELECT doc_id,
-             $QualityScoreSql AS quality_score
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents))
-         SELECT doc_id, quality_score FROM s
-         WHERE quality_score > (SELECT quantile_cont(quality_score, 0.25) FROM s)
-         ORDER BY doc_id""",
-
-    // Quality-gate knob-tuning curve: one scored scan fanned to the
-    // fixed per-mille thresholds; doc/token keep censuses + integer-bp
-    // shares. The score and the IEEE pm/1000 comparison are the same
-    // expressions q_quality_gate already pins cross-engine.
-    "q_quality_sweep" -> {
-      val ts = operators.Corpus.QualitySweepThresholdsPm
-        .map(t => s"($t)").mkString(", ")
-      s"""WITH s AS (
-           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-             $QualityScoreSql AS q
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t
-                 FROM documents)),
-         tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total_docs,
-                   CAST(SUM(n_tokens) AS BIGINT) AS total_tokens FROM s),
-         ts AS (SELECT CAST(v AS BIGINT) AS threshold_pm
-                FROM (VALUES $ts) x(v)),
-         k AS (SELECT t.threshold_pm, CAST(COUNT(*) AS BIGINT) AS n_kept,
-                 CAST(SUM(s.n_tokens) AS BIGINT) AS kept_tokens
-               FROM s, ts t
-               WHERE s.q >= CAST(t.threshold_pm AS DOUBLE) / 1000.0
-               GROUP BY 1)
-         SELECT t.threshold_pm,
-           CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
-           CAST(tot.total_docs - COALESCE(k.n_kept, 0) AS BIGINT) AS n_dropped,
-           CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens,
-           CAST((COALESCE(k.n_kept, 0) * 10000) // tot.total_docs AS BIGINT)
-             AS kept_docs_bp,
-           CAST((COALESCE(k.kept_tokens, 0) * 10000) // tot.total_tokens
-             AS BIGINT) AS kept_tokens_bp
-         FROM ts t CROSS JOIN tot LEFT JOIN k USING (threshold_pm)
-         ORDER BY t.threshold_pm"""
-    },
-
-    "q_split_assign" ->
-      """SELECT doc_id,
-         CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
-         CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
-              WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
-              ELSE 'test' END AS split
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q_domain_cap" ->
-      """SELECT doc_id, source, rn FROM (
-           SELECT doc_id, source,
-             CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
-           FROM documents)
-         WHERE rn <= 50
-         ORDER BY source, rn""",
-
-    "q_pack_chunks" ->
-      """SELECT doc_id,
-         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
-         CAST(COALESCE(SUM(CAST(len(string_split(lower(text), ' ')) AS BIGINT))
-             OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           0) AS BIGINT) // 512 AS chunk
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q_tfidf_top" ->
-      """WITH w AS (
-           SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-           FROM documents),
-         tf AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-                FROM w GROUP BY doc_id, word),
-         dfreq AS (SELECT word, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-                   FROM w GROUP BY word),
-         n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
-         SELECT doc_id, word, tf, score, rk FROM (
-           SELECT doc_id, word, tf,
-             CAST(tf * ((n_docs * 1000) // df) AS BIGINT) AS score,
-             CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY tf * ((n_docs * 1000) // df) DESC, word) AS BIGINT) AS rk
-           FROM tf JOIN dfreq USING (word) CROSS JOIN n)
-         WHERE rk <= 3
-         ORDER BY doc_id, rk""",
-
-    // DSIR importance weights: one gram explode feeds both corpus
-    // counts; add-one-smoothed count ratios in integer basis points
-    // (// is DuckDB floor division — both operand signs are positive,
-    // so it matches Spark's `div` exactly)
-    "q_dsir_weights" ->
-      """WITH d AS (
-           SELECT doc_id, lang,
-             regexp_extract_all(lower(text), '[a-z]+') AS ws
-           FROM documents),
-         g AS (
-           SELECT doc_id, lang,
-             unnest(list_transform(generate_series(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i + 1])) AS gram
-           FROM d WHERE len(ws) >= 2),
-         c AS (
-           SELECT gram, COUNT(*) AS rc,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS tc
-           FROM g GROUP BY gram),
-         w AS (
-           SELECT g.doc_id, COUNT(*) AS n_grams,
-             SUM(((c.tc + 1) * 10000) // (c.rc + 1)) // COUNT(*) AS weight_bp
-           FROM g JOIN c USING (gram) GROUP BY g.doc_id),
-         t AS (SELECT SUM(weight_bp) AS tot, COUNT(*) AS n FROM w)
-         SELECT w.doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-           CAST(weight_bp AS BIGINT) AS weight_bp,
-           CAST(weight_bp * t.n > t.tot AS BIGINT) AS keep
-         FROM w, t ORDER BY doc_id""",
-
-    // Term search: integer tf·idf ranking (idf floor basis points)
-    "q_search" ->
-      """WITH d AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-           FROM documents),
-         n AS (SELECT COUNT(*) AS n_docs FROM d),
-         tf AS (
-           SELECT doc_id, w, COUNT(*) AS tf FROM
-             (SELECT doc_id, unnest(ws) AS w FROM d)
-           WHERE w IN ('spark', 'join', 'stream', 'window')
-           GROUP BY doc_id, w),
-         idf AS (
-           SELECT w, (n.n_docs * 10000) // COUNT(DISTINCT doc_id) AS idf_bp
-           FROM tf, n GROUP BY w, n.n_docs)
-         SELECT doc_id,
-           CAST(SUM(tf * idf_bp) AS BIGINT) AS score,
-           CAST(COUNT(*) AS BIGINT) AS n_terms_hit
-         FROM tf JOIN idf USING (w)
-         GROUP BY doc_id
-         ORDER BY score DESC, doc_id
-         LIMIT 15""",
-
-    // BM25 (k1=1.2, b=0.75): idf as the bit cost of the doubled
-    // Robertson ratio, saturation cross-multiplied into one HUGEINT
-    // quotient in basis points — mirrors Corpus.bm25's DECIMAL(38,0)
-    // arithmetic term for term, so scores are integer-identical
-    "q_bm25" ->
-      s"""WITH d AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-           FROM documents),
-         dd AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl, ws FROM d),
-         st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(dl) AS BIGINT) AS total_len FROM dd),
-         tf AS (
-           SELECT doc_id, dl, w, CAST(COUNT(*) AS BIGINT) AS tf FROM
-             (SELECT doc_id, dl, unnest(ws) AS w FROM dd)
-           WHERE w IN ('spark', 'join', 'stream', 'window')
-           GROUP BY doc_id, dl, w),
-         dfreq AS (SELECT w, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-                   FROM tf GROUP BY w)
-         SELECT doc_id,
-           CAST(SUM(
-             CAST(length(bin((2 * st.n_docs + 2) // (2 * df + 1))) AS BIGINT) *
-             CAST((CAST(tf AS HUGEINT) * ${Corpus.Bm25NumCoef}
-                     * CAST(st.total_len AS HUGEINT)) //
-                  (CAST(tf AS HUGEINT) * 1000000
-                     * CAST(st.total_len AS HUGEINT)
-                   + ${Corpus.Bm25ConstCoef} * CAST(st.total_len AS HUGEINT)
-                   + ${Corpus.Bm25DlCoef} * CAST(dl AS HUGEINT)
-                            * CAST(st.n_docs AS HUGEINT)) AS BIGINT))
-             AS BIGINT) AS score,
-           CAST(COUNT(*) AS BIGINT) AS n_terms_hit
-         FROM tf JOIN dfreq USING (w) CROSS JOIN st
-         GROUP BY doc_id
-         ORDER BY score DESC, doc_id
-         LIMIT 15""",
-
-    // Skip-gram co-occurrence (window ±2), symmetric: both offset
-    // generators mirror the Spark transform(sequence) pass exactly
-    "q_skipgrams" ->
-      """WITH d AS (
-           SELECT regexp_extract_all(lower(text), '[a-z]+') AS t
-           FROM documents),
-         p AS (
-           SELECT t[i] AS center, t[i+1] AS context
-           FROM d, unnest(range(1, len(t))) AS u(i) WHERE len(t) >= 2
-           UNION ALL
-           SELECT t[i] AS center, t[i+2] AS context
-           FROM d, unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3),
-         s AS (SELECT center, context FROM p
-               UNION ALL
-               SELECT context AS center, center AS context FROM p)
-         SELECT center, context, CAST(COUNT(*) AS BIGINT) AS n
-         FROM s GROUP BY 1, 2
-         ORDER BY n DESC, center, context
-         LIMIT 30""",
-
-    // Reciprocal-rank fusion: the integer tf·idf lexical ranking and
-    // the quantized-cosine vector ranking (both top-100), fused by
-    // pre-floored reciprocal weights 10⁹ // (60 + rank). The cosine is
-    // the exact-integer-grid expression of q_knn_brute, so both legs'
-    // ranks — and therefore the fused scores — are bit-identical.
-    "q_rrf" ->
-      s"""WITH d AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-           FROM documents),
-         n AS (SELECT COUNT(*) AS n_docs FROM d),
-         tf AS (
-           SELECT doc_id, w, COUNT(*) AS tf FROM
-             (SELECT doc_id, unnest(ws) AS w FROM d)
-           WHERE w IN ('spark', 'join', 'stream', 'window')
-           GROUP BY doc_id, w),
-         idf AS (
-           SELECT w, (n.n_docs * 10000) // COUNT(DISTINCT doc_id) AS idf_bp
-           FROM tf, n GROUP BY w, n.n_docs),
-         lexs AS (
-           SELECT doc_id, SUM(tf * idf_bp) AS score
-           FROM tf JOIN idf USING (w) GROUP BY doc_id
-           ORDER BY score DESC, doc_id LIMIT ${Corpus.RrfDepth}),
-         lex AS (
-           SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rk
-           FROM lexs),
-         q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         qv AS (SELECT iv FROM q WHERE vec_id = 0),
-         vs AS (
-           SELECT c.vec_id,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(c.iv)),
-               i -> c.iv[i] * qv.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(c.iv)),
-                 i -> c.iv[i] * c.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(qv.iv)),
-                 i -> qv.iv[i] * qv.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM q c, qv WHERE c.vec_id <> 0
-           ORDER BY cosine DESC, vec_id LIMIT ${Corpus.RrfDepth}),
-         vec AS (
-           SELECT vec_id, CAST(row_number() OVER
-             (ORDER BY cosine DESC, vec_id) AS BIGINT) AS vec_rk
-           FROM vs)
-         SELECT CAST(COALESCE(lex.doc_id, vec.vec_id) AS BIGINT) AS doc_id,
-           COALESCE(lex_rk, 0) AS lex_rk,
-           COALESCE(vec_rk, 0) AS vec_rk,
-           CAST(CASE WHEN lex_rk IS NULL THEN 0
-                  ELSE 1000000000 // (${Corpus.RrfSmoothK} + lex_rk) END
-              + CASE WHEN vec_rk IS NULL THEN 0
-                  ELSE 1000000000 // (${Corpus.RrfSmoothK} + vec_rk) END
-             AS BIGINT) AS rrf_score
-         FROM lex FULL JOIN vec ON lex.doc_id = vec.vec_id
-         ORDER BY rrf_score DESC, doc_id
-         LIMIT 20""",
-
-    // Collocations by integer-scaled lift (rank-identical to PMI; see
-    // Corpus.pmiTop). N is computed as sum(len-1), never a re-explode.
-    "q_pmi_top" ->
-      """WITH d AS (
-           SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws
-           FROM documents),
-         dd AS (SELECT ws FROM d WHERE len(ws) >= 2),
-         uni AS (
-           SELECT w, COUNT(*) AS c FROM
-             (SELECT unnest(ws) AS w FROM dd) GROUP BY w),
-         bi AS (
-           SELECT bigram, COUNT(*) AS c_xy FROM
-             (SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-                i -> ws[i] || ' ' || ws[i + 1])) AS bigram FROM dd)
-           GROUP BY bigram HAVING COUNT(*) >= 5),
-         t AS (SELECT SUM(len(ws) - 1) AS n_total FROM dd)
-         SELECT bigram, CAST(c_xy AS BIGINT) AS c_xy,
-           CAST((t.n_total * c_xy * 10000)
-             // (u1.c * u2.c) AS BIGINT) AS lift_bp
-         FROM bi, t
-         JOIN uni u1 ON u1.w = string_split(bigram, ' ')[1]
-         JOIN uni u2 ON u2.w = string_split(bigram, ' ')[2]
-         ORDER BY lift_bp DESC, bigram
-         LIMIT 30""",
-
-    "q_bigram_top" ->
-      """WITH b AS (
-           SELECT unnest(CASE WHEN len(ws) >= 2
-             THEN list_transform(generate_series(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i + 1])
-             ELSE [] END) AS bigram
-           FROM (SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws
-                 FROM documents))
-         SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
-         FROM b GROUP BY bigram
-         ORDER BY n DESC, bigram
-         LIMIT 20""",
-
-    "q_pii_scrub" ->
-      """SELECT doc_id,
-         md5(regexp_replace(
-           regexp_replace(text,
-             '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-           '[0-9]+', '<NUM>', 'g')) AS scrub_md5,
-         CAST(len(regexp_extract_all(text,
-           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
-         CAST(len(regexp_extract_all(regexp_replace(text,
-           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-           '[0-9]+')) AS BIGINT) AS n_numbers
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q_repetition" ->
-      """WITH tf AS (
-           SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM (SELECT doc_id,
-                   unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                 FROM documents)
-           GROUP BY doc_id, word)
-         SELECT doc_id,
-           CAST(SUM(tf) AS BIGINT) AS n_words,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct,
-           CAST(MAX(tf) AS BIGINT) AS top_tf,
-           CAST(MAX(tf) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE) AS rep_ratio
-         FROM tf GROUP BY doc_id
-         ORDER BY doc_id""",
-
-    "q_dup_ngram_frac" -> Corpus.dupNgramFracOracle,
-
-    "q_dedup_exact" ->
-      s"""WITH d AS (SELECT doc_id, md5($Norm) AS fingerprint FROM documents),
-         c AS (SELECT fingerprint, MIN(doc_id) AS canonical_id,
-                 COUNT(*) AS group_size FROM d GROUP BY fingerprint)
-         SELECT doc_id, canonical_id, group_size,
-           doc_id <> canonical_id AS is_dup
-         FROM d JOIN c USING (fingerprint)
-         ORDER BY doc_id""",
-
-    // Per-source dup-mass triage on the RAW text fingerprint (the
-    // dataset-card n_unique_docs basis, not the normalized dedup
-    // fingerprint — the card and this report must reconcile).
-    "q_dup_rate_by_source" ->
-      """WITH d AS (SELECT source, md5(text) AS fp FROM documents),
-         per AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_unique
-                 FROM d GROUP BY 1),
-         multi AS (SELECT fp FROM (
-                     SELECT fp, COUNT(DISTINCT source) AS ns
-                     FROM d GROUP BY 1) WHERE ns > 1),
-         sh AS (SELECT source, CAST(COUNT(DISTINCT d.fp) AS BIGINT)
-                  AS shared_fps
-                FROM d JOIN multi USING (fp) GROUP BY 1)
-         SELECT source, n_docs, n_unique,
-           CAST(n_docs - n_unique AS BIGINT) AS dup_within,
-           CAST(((n_docs - n_unique) * 10000) // n_docs AS BIGINT)
-             AS dup_pct_bp,
-           CAST(COALESCE(shared_fps, 0) AS BIGINT) AS shared_fps
-         FROM per LEFT JOIN sh USING (source)
-         ORDER BY source""",
-
-    // Fuzzy join: both engines implement classic unit-cost edit
-    // distance, so the residual predicate agrees exactly; the oracle
-    // runs the naive theta join the Spark side's banding avoids
-    "q_fuzzy_join" ->
-      """WITH n AS (SELECT DISTINCT p_name AS name FROM part)
-         SELECT a.name AS name_a, b.name AS name_b,
-           CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-         FROM n a JOIN n b ON a.name < b.name
-         WHERE levenshtein(a.name, b.name) <= 2
-         ORDER BY name_a, name_b""",
-
-    // Asymmetric containment |A∩B|/|A| in integer basis points over
-    // ORDERED pairs — the subset-duplicate direction Jaccard misses.
-    // The prefix-filtered twin must reproduce the SAME brute-force
-    // pair set verbatim (one-sided prefix completeness is a theorem,
-    // so the oracle deliberately skips the filter — the q_allpairs
-    // convention).
-    "q_containment" -> ContainmentSql,
-    "q_containment_prefix" -> ContainmentSql,
-
-    // Prefix-filtered AllPairs exact bigram-set Jaccard (t = 1/2); the
-    // oracle is the brute-force quadratic join the prefix filter must
-    // reproduce verbatim — candidate completeness is the theorem under
-    // test, so the oracle deliberately skips the filter
-    "q_allpairs" ->
-      """WITH s AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z]+') AS ws
-                 FROM documents) t
-           WHERE len(ws) >= 3),
-         p AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.sh, b.sh)) AS inter_size,
-             len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS union_size
-           FROM s a JOIN s b ON a.doc_id < b.doc_id)
-         SELECT doc_a, doc_b, CAST(inter_size AS BIGINT) AS inter_size,
-           CAST(union_size AS BIGINT) AS union_size,
-           CAST((inter_size * 10000) // union_size AS BIGINT) AS jaccard_bp
-         FROM p WHERE inter_size * 2 >= union_size
-         ORDER BY doc_a, doc_b""",
-
-    "q_ngram_jaccard" -> NgramJaccardSql,
-
-    // Threshold-tuning curve over the same exact pair kernel: integer
-    // basis-point jaccard, pairs fanned to the thresholds they clear,
-    // three censuses per threshold, zero-filled spine.
-    "q_dedup_sweep" -> dedupSweepSql(operators.Dedup.SweepThresholdsBp),
-    // The LSH-fed sweep: the SAME brute-force curve restricted to the
-    // thresholds the banding reliably feeds (every fixture pair over
-    // 0.5 sits at j >= 0.88, banding miss <= 2e-7 — the
-    // q_dup_matrix_lsh pinning argument), so candidate-set == exact
-    // and one oracle pins both engines' pair derivations.
-    "q_dedup_sweep_lsh" ->
-      dedupSweepSql(operators.Dedup.SweepLshThresholdsBp),
-
-    // Source×source near-dup mass matrix: least/greatest-normalized
-    // source pair, pair count + distinct docs involved. The SAME
-    // brute-force oracle pins both the exact-kernel row and the
-    // LSH-fed twin (the two engine pair sets coincide at the
-    // fixtures' j >= 0.9 similarity levels — the q_dup_clusters_lsh
-    // pinning argument).
-    "q_dup_matrix" -> DupMatrixSql,
-    "q_dup_matrix_lsh" -> DupMatrixSql,
-
-    // The VERIFIED MinHash-LSH pipeline (band → margin prune → exact
-    // confirm on candidate shingle sets) must emit exactly the exact
-    // pair set — the oracle IS the brute-force pair query above, so a
-    // banding miss or a spurious survivor is a row diff, not a
-    // rows-only shrug. Same single-division IEEE jaccard both sides.
-    "q_minhash_lsh" -> MinhashLshSql,
-    "q_minhash_lsh_saved" -> MinhashLshSql,
-
-    // SimHash near-dup pairs, replayed OFF-ENGINE end to end: the
-    // per-token 64 vote bits come from md5 hex halves (h1 = chars 1-8,
-    // h2 = 9-16; token hash = h1<<32 | h2, so bit b<32 reads h2 and
-    // bit 32+b reads h1), votes aggregate per (doc, bit), the
-    // signature is the positive-vote bitstring, and the pair set is
-    // every doc pair at hamming ≤ 3. Banding adds nothing to pin:
-    // 3 differing bits touch ≤ 3 of the 4 16-bit bands, so ≥ 1 band
-    // always collides (the pigeonhole spec) — the emitted set IS the
-    // full hamming ball, banding-independent, hence exactly this SQL
-    "q_simhash_pairs" -> SimhashPairsSql,
-    // Method-agreement triage: the three pair detectors' replays
-    // (each individually pinned above/below) unioned and flagged —
-    // one definition per leg, so a drifted leg fails BOTH its own
-    // row and this one. The LSH-fed twin carries the SAME oracle
-    // (the q_minhash_lsh argument: at the fixtures' similarity
-    // levels the verified banded pipeline emits exactly the exact
-    // pair set, so a banding miss is a row diff here too).
-    "q_dup_methods_lsh" -> DupMethodsSql,
-    "q_dup_methods" -> DupMethodsSql,
-
-    "q_contamination" ->
-      s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         jp AS (SELECT doc_a, doc_b,
-                  CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
-                FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
-         sp AS (SELECT doc_id,
-                  CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
-                       WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
-                       ELSE 'test' END AS split
-                FROM documents)
-         SELECT doc_a, doc_b, jaccard, sa.split AS split_a, sb.split AS split_b
-         FROM jp
-         JOIN sp sa ON sa.doc_id = doc_a
-         JOIN sp sb ON sb.doc_id = doc_b
-         WHERE sa.split <> sb.split
-         ORDER BY doc_a, doc_b""",
-
-    "q_curate" ->
-      s"""WITH q AS (
-           SELECT doc_id, text, lang,
-             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct
-           FROM documents),
-         f AS (SELECT doc_id, text, lang, n_tokens, md5($Norm) AS fp
-               FROM q
-               WHERE n_tokens >= 10
-                 AND CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) >= 0.3),
-         c AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS canonical FROM f)
-         SELECT CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
-                WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
-                ELSE 'test' END AS split,
-           lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-         FROM c WHERE doc_id = canonical
-         GROUP BY 1, 2
-         ORDER BY split, lang""",
-
-    // Composed curation pipeline: quality gate ∘ NB source gate ∘
-    // semantic survivor ∘ mixture rebalance, one end-to-end value-
-    // exact replay (the four stage oracles composed as one statement)
-    "q_curate_v2" -> CurateV2Sql,
-    "q_curate_v2_approx" -> CurateV2Sql,
-    // The composed v3 stack — ONE row, fully integer-exact: the
-    // stage-2 quartile is a RANK rule (no percentile interpolation,
-    // no sketch), so the single row is simultaneously the oracle
-    // replay AND the scale path (two-phase bucketed rank). The
-    // funnel census counts the SAME stage CTEs.
-    "q_curate_v3" -> CurateV3Sql,
-    "q_curate_v3_funnel" -> CurateV3FunnelSql,
-    // Per-feed attrition: the same stage CTEs censused by source.
-    "q_curate_v3_by_source" ->
-      s"""WITH $CurateV3Ctes,
-         fin AS (SELECT s.doc_id
-                 FROM s3 s JOIN mr r USING (lang)
-                 WHERE s.bucket < r.rate_permille),
-         ds AS (SELECT doc_id, source FROM documents),
-         base AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-                  FROM ds GROUP BY 1),
-         c1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_gopher
-                FROM s2pre JOIN ds USING (doc_id) GROUP BY 1),
-         c2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quartile
-                FROM k2 JOIN ds USING (doc_id) GROUP BY 1),
-         c3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_neardup
-                FROM s3 JOIN ds USING (doc_id) GROUP BY 1),
-         c4 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept
-                FROM fin JOIN ds USING (doc_id) GROUP BY 1)
-       SELECT base.source, n_docs,
-         CAST(COALESCE(n_gopher, 0) AS BIGINT) AS n_gopher,
-         CAST(COALESCE(n_quartile, 0) AS BIGINT) AS n_quartile,
-         CAST(COALESCE(n_neardup, 0) AS BIGINT) AS n_neardup,
-         CAST(COALESCE(n_kept, 0) AS BIGINT) AS n_kept,
-         CAST((COALESCE(n_kept, 0) * 10000) // n_docs AS BIGINT) AS kept_bp
-       FROM base
-       LEFT JOIN c1 USING (source) LEFT JOIN c2 USING (source)
-       LEFT JOIN c3 USING (source) LEFT JOIN c4 USING (source)
-       ORDER BY base.source""",
-
-    // The rank-cut knob curve off the same stage CTEs: the global
-    // (mean_millibits, doc_id) rank crossed with the candidate cuts,
-    // keep-first drops recounted per cut over the exact pair set —
-    // the engine's one-rank-pass fan-out must agree knob for knob.
-    "q_curate_v3_sweep" ->
-      s"""WITH $CurateV3Ctes,
-         cuts(cut_bp) AS (VALUES (CAST(5000 AS BIGINT)), (6250), (7500), (8750)),
-         rkt AS (SELECT doc_id,
-                   CAST(ROW_NUMBER() OVER
-                     (ORDER BY mean_millibits, doc_id) AS BIGINT) AS rk
-                 FROM s2pre),
-         n2 AS (SELECT cut_bp, CAST(COUNT(*) AS BIGINT) AS n_rank_kept
-                FROM rkt CROSS JOIN cnt CROSS JOIN cuts
-                WHERE rk * 10000 <= cut_bp * n_total GROUP BY 1),
-         dr AS (SELECT cut_bp, CAST(COUNT(DISTINCT p.doc_b) AS BIGINT)
-                  AS n_dup_dropped
-                FROM jp p
-                JOIN rkt a ON a.doc_id = p.doc_a
-                JOIN rkt b ON b.doc_id = p.doc_b
-                CROSS JOIN cnt CROSS JOIN cuts
-                WHERE a.rk * 10000 <= cut_bp * n_total
-                  AND b.rk * 10000 <= cut_bp * n_total
-                GROUP BY 1)
-       SELECT cuts.cut_bp,
-         CAST(COALESCE(n_rank_kept, 0) AS BIGINT) AS n_rank_kept,
-         CAST(COALESCE(n_dup_dropped, 0) AS BIGINT) AS n_dup_dropped,
-         CAST(COALESCE(n_rank_kept, 0) - COALESCE(n_dup_dropped, 0)
-           AS BIGINT) AS n_survivors
-       FROM cuts
-       LEFT JOIN n2 USING (cut_bp) LEFT JOIN dr USING (cut_bp)
-       ORDER BY cuts.cut_bp""",
-
-    "q_delta_dedup" ->
-      s"""WITH d AS (SELECT doc_id, md5($Norm) AS fp FROM documents),
-         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w FROM d),
-         corpus AS (SELECT DISTINCT fp FROM d, w WHERE doc_id < w),
-         batch AS (SELECT doc_id, fp FROM d, w WHERE doc_id >= w)
-         SELECT doc_id, fp AS fingerprint,
-           CASE WHEN fp IN (SELECT fp FROM corpus) THEN 'dup_of_corpus'
-                WHEN MIN(doc_id) OVER (PARTITION BY fp) < doc_id THEN 'dup_in_batch'
-                ELSE 'new' END AS status
-         FROM batch
-         ORDER BY doc_id""",
-
-    // Near-dup delta classification: the Spark side classifies off
-    // LSH candidates; the oracle off EXACT n-gram Jaccard pairs — at
-    // the fixtures' similarity levels (every exact pair at j >= 0.9)
-    // the two pair sets coincide (same pinning as q_dup_clusters_lsh),
-    // so any banding miss or spurious candidate flips a status/match
-    // and fails the hash.
-    "q_delta_neardup" -> DeltaNearDupSql,
-
-    // The streaming ingest classifier replays corpus-then-delivery
-    // through the engine and must land on the batch twin's exact
-    // answer — SAME oracle.
-    "q_stream_neardup" -> DeltaNearDupSql,
-
-    // Survivorship: highest-quality doc per near-dup cluster. Clusters
-    // from the exact-edge recursive CTE (== the LSH-fed assignment at
-    // fixture similarity levels), score = the bit-exact cross-engine
-    // composite q_quality_gate pins, winner by ROW_NUMBER with doc_id
-    // tie-break.
-    "q_dedup_survivors" ->
-      s"""$DupClustersCtes,
-         clusters AS (
-           SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-             CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-           FROM labeled),
-         q AS (
-           SELECT doc_id,
-             (CAST(len(list_distinct(tk)) AS DOUBLE) / CAST(len(tk) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
-             + (CAST(len(list_filter(tk, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                / CAST(len(tk) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
-             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE) AS quality_score
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS tk FROM documents)),
-         ranked AS (
-           SELECT c.doc_id, c.cluster_id, c.cluster_size, q.quality_score,
-             ROW_NUMBER() OVER (PARTITION BY c.cluster_id
-               ORDER BY q.quality_score DESC, c.doc_id) AS rk
-           FROM clusters c JOIN q ON q.doc_id = c.doc_id)
-         SELECT doc_id, cluster_id, cluster_size, quality_score,
-           rk = 1 AS keep
-         FROM ranked
-         ORDER BY doc_id""",
-
-    // Span-level exact dedup: multiple unnests in one DuckDB SELECT
-    // zip positionally, which pairs each word with its index for the
-    // 10-word chunking; (doc_id, pos) packs into one BIGINT exactly as
-    // the Spark side does, so "global first occurrence" is the same
-    // MIN on both engines.
-    "q_span_dedup" ->
-      """WITH c AS (
-           SELECT doc_id, i // 10 AS pos,
-             string_agg(word, ' ' ORDER BY i) AS chunk
-           FROM (SELECT doc_id, unnest(ws) AS word,
-                        unnest(range(len(ws))) AS i
-                 FROM (SELECT doc_id, string_split(text, ' ') AS ws
-                       FROM documents) t0
-                 WHERE len(ws) > 0) t
-           GROUP BY doc_id, i // 10),
-         own AS (
-           SELECT chunk, MIN(doc_id * 1000000 + pos) AS first
-           FROM c GROUP BY chunk),
-         j AS (
-           SELECT c.doc_id, c.pos, c.chunk,
-             (c.doc_id * 1000000 + c.pos = o.first) AS keep
-           FROM c JOIN own o USING (chunk))
-         SELECT doc_id,
-           COALESCE(string_agg(chunk, ' ' ORDER BY pos)
-             FILTER (WHERE keep), '') AS clean_text,
-           CAST(COALESCE(SUM(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept,
-           CAST(COALESCE(SUM(CASE WHEN keep THEN 0 ELSE 1 END), 0) AS BIGINT) AS dropped
-         FROM j GROUP BY doc_id ORDER BY doc_id""",
-
-    // C4 boilerplate rule: same chunking as q_span_dedup, but the
-    // verdict is a DISTINCT-document frequency floor and removal is
-    // total (first occurrence included) — a drifted df count or an
-    // off-by-one threshold flips kept/dropped rows
-    "q_boilerplate" ->
-      s"""WITH c AS (
-           SELECT doc_id, i // 10 AS pos,
-             string_agg(word, ' ' ORDER BY i) AS chunk
-           FROM (SELECT doc_id, unnest(ws) AS word,
-                        unnest(range(len(ws))) AS i
-                 FROM (SELECT doc_id, string_split(text, ' ') AS ws
-                       FROM documents) t0
-                 WHERE len(ws) > 0) t
-           GROUP BY doc_id, i // 10),
-         df AS (
-           SELECT chunk, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-           FROM c GROUP BY chunk),
-         j AS (
-           SELECT c.doc_id, c.pos, c.chunk,
-             (f.df < ${operators.Dedup.BoilerDocFreq}) AS keep
-           FROM c JOIN df f USING (chunk))
-         SELECT doc_id,
-           COALESCE(string_agg(chunk, ' ' ORDER BY pos)
-             FILTER (WHERE keep), '') AS clean_text,
-           CAST(COALESCE(SUM(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept,
-           CAST(COALESCE(SUM(CASE WHEN keep THEN 0 ELSE 1 END), 0) AS BIGINT) AS dropped
-         FROM j GROUP BY doc_id ORDER BY doc_id""",
-
-    // Batch novelty vs the corpus shingle index (deltaDedup's 80/20
-    // framing; docs under the shingle width have no row on either side)
-    "q_ngram_novelty" ->
-      s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
-               FROM documents),
-         corpus AS (SELECT DISTINCT shingle FROM
-           (SELECT unnest(sh) AS shingle FROM docs, w WHERE doc_id < w)),
-         batch AS (SELECT doc_id, unnest(sh) AS shingle
-                   FROM docs, w WHERE doc_id >= w)
-         SELECT b.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) AS novelty
-         FROM batch b LEFT JOIN corpus c ON b.shingle = c.shingle
-         GROUP BY b.doc_id
-         ORDER BY b.doc_id""",
-
-    // Bloom-sketch verdict row: the oracle recomputes the EXACT
-    // novelty counts; the undercount-only and ≤5%-shortfall flags
-    // (verified in Spark against the sketch's own output) pin to 1
-    "q_ngram_novelty_bloom" ->
-      s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
-               FROM documents),
-         corpus AS (SELECT DISTINCT shingle FROM
-           (SELECT unnest(sh) AS shingle FROM docs, w WHERE doc_id < w)),
-         batch AS (SELECT doc_id, unnest(sh) AS shingle
-                   FROM docs, w WHERE doc_id >= w)
-         SELECT b.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-           CAST(1 AS BIGINT) AS bloom_le_exact,
-           CAST(1 AS BIGINT) AS shortfall_within_5pct
-         FROM batch b LEFT JOIN corpus c ON b.shingle = c.shingle
-         GROUP BY b.doc_id
-         ORDER BY b.doc_id""",
-
-    // Deterministic epoch shuffle: the oracle is the bare global
-    // row_number over the same md5 key — Spark's two-phase
-    // bucket-offset construction must produce the identical total order
-    "q_epoch_shuffle" ->
-      """SELECT doc_id,
-         CAST(ROW_NUMBER() OVER (
-           ORDER BY md5('epoch1:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
-           AS BIGINT) AS shuffle_rank
-         FROM documents
-         ORDER BY doc_id""",
-
-    // sqrt/mult/div are correctly-rounded IEEE in both engines, so the
-    // derived per-language rates are bit-identical and the content-hash
-    // keep decision matches row-for-row
-    "q_temperature_sample" ->
-      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-                    FROM documents GROUP BY lang),
-         m AS (SELECT MAX(n_docs) AS mx FROM c),
-         r AS (SELECT lang,
-                 LEAST(1000, CAST(floor(1000.0 * sqrt(CAST(n_docs AS DOUBLE))
-                   / sqrt(CAST(mx AS DOUBLE))) AS BIGINT)) AS rate_permille
-               FROM c, m)
-         SELECT doc_id, d.lang,
-           CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
-           rate_permille
-         FROM documents d JOIN r ON d.lang = r.lang
-         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < rate_permille
-         ORDER BY doc_id""",
-
-    // The temperature knob curve: alpha in {0, 1/4, 1/2, 1} expressed
-    // through correctly-rounded IEEE primitives only (keep-all,
-    // sqrt-of-sqrt, sqrt, integer ratio) — rates and kept censuses
-    // must agree knob for knob, language for language
-    "q_temperature_sweep" ->
-      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-                    FROM documents GROUP BY lang),
-         m AS (SELECT MAX(n_docs) AS mx FROM c),
-         a(alpha_bp) AS (VALUES (CAST(0 AS BIGINT)), (2500), (5000), (10000)),
-         r AS (SELECT alpha_bp, lang,
-                 CASE WHEN alpha_bp = 0 THEN CAST(1000 AS BIGINT)
-                   WHEN alpha_bp = 2500 THEN LEAST(CAST(1000 AS BIGINT),
-                     CAST(floor(1000.0 * sqrt(sqrt(CAST(n_docs AS DOUBLE)))
-                       / sqrt(sqrt(CAST(mx AS DOUBLE)))) AS BIGINT))
-                   WHEN alpha_bp = 5000 THEN LEAST(CAST(1000 AS BIGINT),
-                     CAST(floor(1000.0 * sqrt(CAST(n_docs AS DOUBLE))
-                       / sqrt(CAST(mx AS DOUBLE))) AS BIGINT))
-                   ELSE (n_docs * 1000) // mx END AS rate_permille
-               FROM c, m, a),
-         k AS (SELECT r.alpha_bp, d.lang, CAST(COUNT(*) AS BIGINT) AS n_kept
-               FROM documents d
-               JOIN r ON d.lang = r.lang
-               WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000
-                 < r.rate_permille
-               GROUP BY 1, 2)
-         SELECT r.alpha_bp, r.lang, r.rate_permille,
-           CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept
-         FROM r
-         LEFT JOIN k ON r.alpha_bp = k.alpha_bp AND r.lang = k.lang
-         ORDER BY r.alpha_bp, r.lang""",
-
-    // Token-budget curation: oracle is the bare global ordered cumsum
-    // over (quality DESC, doc_id) — the two-phase quality-range
-    // construction must reproduce the identical running totals (token
-    // counts are integers, so the sums are exact in both engines; the
-    // quality composite is the bit-identical q_quality arithmetic)
-    "q_token_budget" ->
-      """WITH s AS (
-           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-             (CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
-             + (CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                / CAST(len(t) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
-             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE) AS quality_score
-           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
-         c AS (SELECT doc_id, n_tokens, quality_score,
-           CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-           FROM s)
-         SELECT doc_id, n_tokens, quality_score, cum_tokens FROM c
-         WHERE cum_tokens <= 10000
-         ORDER BY doc_id""",
-
-    // Streaming budget admission: the oracle is the one-shot prefix
-    // rule over doc_id order — the per-delivery two-phase prefix sums
-    // plus the carried scalar must reproduce the identical running
-    // totals and the identical mid-second-delivery cutoff
-    "q_stream_token_budget" ->
-      s"""WITH s AS (
-           SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-           CAST(SUM(n_tokens) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS cum_tokens
-           FROM s)
-         SELECT doc_id, n_tokens, cum_tokens FROM c
-         WHERE cum_tokens <= ${graft.streaming.DocStream.StreamTokenBudget}
-         ORDER BY doc_id""",
-
-    // Balanced shard layout: oracle is the bare global size rank —
-    // round-robin modulo must agree rank-for-rank with the two-phase
-    // token-range construction
-    "q_shard_assign" ->
-      """SELECT doc_id, n_tokens,
-         CAST((ROW_NUMBER() OVER (ORDER BY n_tokens DESC, doc_id) - 1) % 8
-           AS BIGINT) AS shard
-         FROM (SELECT doc_id,
-                 CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
-               FROM documents)
-         ORDER BY doc_id""",
-
-    // Explicit-target mixture: all rate arithmetic is integer
-    // multiply/floor-divide, so the derived rates are identical in both
-    // engines and the content-hash keep decision matches row-for-row
-    "q_mixture_sample" ->
-      s"""WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-                    FROM documents GROUP BY lang),
-         t AS (SELECT lang, n_docs,
-                 CAST($MixtureCaseSql AS BIGINT) AS tp
-               FROM c),
-         tm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total FROM t WHERE tp > 0),
-         r AS (SELECT lang, LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
-                 AS rate_permille
-               FROM t, tm WHERE tp > 0)
-         SELECT doc_id, d.lang,
-           CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
-           rate_permille
-         FROM documents d JOIN r ON d.lang = r.lang
-         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < rate_permille
-         ORDER BY doc_id""",
-
-    // Token-mass mixture: the same integer water-filling over the
-    // per-language TOKEN census (the mass a training run budgets);
-    // same content-hash keep decision, row-for-row.
-    "q_token_mixture" ->
-      s"""WITH d AS (SELECT doc_id, lang,
-             ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS bucket,
-             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS tt
-               FROM d GROUP BY lang),
-         t AS (SELECT lang, tt, CAST($MixtureCaseSql AS BIGINT) AS tp
-               FROM c),
-         tm AS (SELECT MIN(tt * 1000 // tp) AS t_total FROM t WHERE tp > 0),
-         r AS (SELECT lang, LEAST(CAST(1000 AS BIGINT), (tp * t_total) // tt)
-                 AS rate_permille
-               FROM t, tm WHERE tp > 0)
-         SELECT doc_id, d.lang, n_tokens,
-           CAST(bucket AS BIGINT) AS bucket, rate_permille
-         FROM d JOIN r ON d.lang = r.lang
-         WHERE bucket < rate_permille
-         ORDER BY doc_id""",
-
-    // Sliding-window chunking: pure integer span arithmetic — the
-    // explode/unnest row multiplication must agree row-for-row
-    "q_chunk_stride" ->
-      """WITH d AS (SELECT doc_id,
-             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-             unnest(generate_series(0,
-               1 + greatest(0, (n_tokens - 32 + 23) // 24) - 1)) AS chunk_idx
-           FROM d)
-         SELECT doc_id, n_tokens, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-           CAST(chunk_idx * 24 AS BIGINT) AS start_tok,
-           CAST(LEAST(chunk_idx * 24 + 32, n_tokens) AS BIGINT) AS end_tok,
-           CAST(LEAST(chunk_idx * 24 + 32, n_tokens) - chunk_idx * 24 AS BIGINT)
-             AS chunk_tokens
-         FROM c
-         ORDER BY doc_id, chunk_idx""",
-
-    // Fixed-width histogram in integer cents; bucket and bound maps
-    // are exact floor/ceil division — no width_bucket edge drift
-    "q_histogram" ->
-      """WITH r AS (SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-             * 100 AS BIGINT) AS v FROM lineitem),
-         e AS (SELECT min(v) AS mn, max(v) AS mx,
-             CAST(count(*) AS BIGINT) AS n_total FROM r),
-         b AS (SELECT ((v - mn) * 20) // (mx - mn + 1) AS bucket,
-             mn, mx, n_total FROM r, e)
-         SELECT CAST(bucket AS BIGINT) AS bucket,
-           CAST(mn + (bucket * (mx - mn + 1) + 19) // 20 AS BIGINT)
-             AS lo_cents,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(*) * 10000 // n_total AS BIGINT) AS share_bp
-         FROM b GROUP BY bucket, mn, mx, n_total
-         ORDER BY bucket""",
-
-    // Key-skew diagnostic: discrete (k-th order statistic) quantiles,
-    // k = ceil(q*n) with (size, key) tie-break — identical integer
-    // definition on both engines, no interpolation
-    "q_skew_profile" ->
-      """WITH s AS (SELECT l_orderkey, count(*) AS n
-             FROM lineitem GROUP BY l_orderkey),
-         t AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-             CAST(sum(n) AS BIGINT) AS n_rows,
-             CAST(max(n) AS BIGINT) AS max_rows FROM s),
-         r AS (SELECT n, row_number() OVER (ORDER BY n, l_orderkey) AS rk
-             FROM s),
-         q AS (SELECT
-             CAST(max(CASE WHEN rk = CAST(ceil(t.n_keys * 0.5) AS BIGINT)
-               THEN n END) AS BIGINT) AS p50_rows,
-             CAST(max(CASE WHEN rk = CAST(ceil(t.n_keys * 0.9) AS BIGINT)
-               THEN n END) AS BIGINT) AS p90_rows,
-             CAST(max(CASE WHEN rk = CAST(ceil(t.n_keys * 0.99) AS BIGINT)
-               THEN n END) AS BIGINT) AS p99_rows
-           FROM r, t)
-         SELECT 'l_orderkey' AS key_col, n_keys, n_rows, max_rows,
-           CAST(max_rows * 10000 // n_rows AS BIGINT) AS top_share_bp,
-           p50_rows, p90_rows, p99_rows
-         FROM t, q""",
-
-    // Z-order layout: the SAME unrolled shift/mask interleave text is
-    // the oracle arithmetic (ZOrder.mortonExpr) — bit-identical by
-    // construction, so the whole curve is hash-pinned
-    "q_zorder" ->
-      s"""WITH raw AS (SELECT o_orderkey,
-             CAST(o_custkey AS BIGINT) AS ck_raw,
-             CAST(date_diff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS BIGINT) AS dy_raw
-           FROM orders),
-         ext AS (SELECT min(ck_raw) AS ck_min, max(ck_raw) AS ck_max,
-             min(dy_raw) AS dy_min, max(dy_raw) AS dy_max FROM raw),
-         k AS (SELECT o_orderkey,
-             ((ck_raw - ck_min) * 65535) // greatest(1, ck_max - ck_min) AS ck,
-             ((dy_raw - dy_min) * 65535) // greatest(1, dy_max - dy_min) AS dy
-           FROM raw, ext),
-         z AS (SELECT o_orderkey, ck, dy,
-             CAST(${operators.ZOrder.mortonExpr("ck", "dy")} AS BIGINT) AS z
-           FROM k)
-         SELECT o_orderkey, CAST(ck AS BIGINT) AS ck, CAST(dy AS BIGINT) AS dy,
-           z, CAST(z >> 28 AS BIGINT) AS zgroup
-         FROM z ORDER BY o_orderkey""",
-
-    // Systematic sampling over cumulative token mass: the oracle
-    // states the running sum as one window in hash order; the Spark
-    // side must reach the identical cumsum through the two-phase
-    // bucketed prefix sum
-    "q_systematic_sample" ->
-      """WITH d AS (SELECT doc_id,
-             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
-             ('0x' || substring(md5(text), 1, 8))::BIGINT AS hkey
-           FROM documents),
-         c AS (SELECT doc_id, n_tokens,
-             sum(n_tokens) OVER (ORDER BY hkey, doc_id
-               ROWS UNBOUNDED PRECEDING) - n_tokens AS excl
-           FROM d)
-         SELECT doc_id, n_tokens FROM c
-         WHERE (excl + n_tokens) // 100 > excl // 100
-         ORDER BY doc_id""",
-
-    // Stratified k-fold: the oracle is the bare per-stratum
-    // ROW_NUMBER over (content hash, doc_id) round-robin-dealt into
-    // folds; the two-phase hash-range construction must reproduce
-    // the identical per-stratum total order
-    "q_stratified_kfold" -> operators.Corpus.stratifiedKfoldOracle,
-
-    // Dataset card: long-format corpus summary, every metric an
-    // integer count/sum/distinct (no float means — order-dependent).
-    // The SAME oracle pins q_delta_card: merging per-delivery state
-    // must land on the full-rescan card bit for bit.
-    "q_dataset_card" -> DatasetCardSql,
-
-    "q_delta_card" -> DatasetCardSql,
-
-    // Vocabulary coverage: all-integer basis-point coverage so the
-    // table is bit-identical cross-engine; ties in count break by term
-    "q_vocab_coverage" ->
-      """WITH w AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
-             AS term FROM documents),
-         c AS (SELECT term, count(*) AS cnt FROM w GROUP BY term),
-         t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
-         r AS (SELECT term, cnt,
-             row_number() OVER (ORDER BY cnt DESC, term) AS rank FROM c)
-         SELECT CAST(rank AS BIGINT) AS rank, term, CAST(cnt AS BIGINT) AS cnt,
-           CAST(sum(cnt) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)
-             AS BIGINT) AS cum_cnt,
-           CAST(CAST(sum(cnt) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)
-             AS BIGINT) * 10000 // t.total AS BIGINT) AS coverage_bp
-         FROM r, t WHERE rank <= 100 ORDER BY rank""",
-
-    // Semantic clustering: recursive-CTE transitive closure over the
-    // exact cosine pair set (same closure construction as
-    // q_dup_clusters, edges from the q_cosine_pairs kernel at 0.35)
-    "q_semantic_clusters" -> SemanticClustersSql,
-
-    // The cell-fed clustering runs off k-means-cell candidate edges;
-    // at the fixtures' geometry the candidate set equals the exact
-    // pair set (every 0.35-cosine pair has an endpoint probing the
-    // other's home cell — SimilaritySpec pins edge-for-edge
-    // equality), so the SAME exact-edge recursive-CTE oracle pins the
-    // assignment — a cell miss or spurious candidate flips a cluster
-    // id and fails the hash.
-    "q_semantic_clusters_lsh" -> SemanticClustersSql,
-
-    // SemDeDup: the same transitive closure, plus the norm²-argmax
-    // survivor rule (ties to the smaller vec_id) the Spark side
-    // computes as a partial-aggregable max(struct(n2, -vec_id)).
-    "q_semdedup" -> SemDedupSql,
-
-    // Cell-fed SemDeDup: same candidate-completeness pinning as
-    // q_semantic_clusters_lsh; survivor rule is one shared code path
-    // with the exact twin.
-    "q_semdedup_lsh" -> SemDedupSql,
-
-    "q_label_centroids" ->
-      """SELECT label, pos, n_vecs,
-         CAST(q_sum AS DOUBLE) / (CAST(n_vecs AS DOUBLE) * 67108864.0) AS centroid
-         FROM (
-           SELECT CAST(label AS BIGINT) AS label, CAST(i - 1 AS BIGINT) AS pos,
-             CAST(COUNT(*) AS BIGINT) AS n_vecs,
-             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT)) AS BIGINT) AS q_sum
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g
-           GROUP BY 1, 2)
-         ORDER BY label, pos""",
-
-    // Connected components: DuckDB computes the transitive closure of
-    // the near-dup edge set by recursive CTE; Spark's min-label
-    // propagation must agree on every component assignment.
-    "q_dup_clusters" -> DupClustersSql,
-
-    // The LSH-fed clustering runs off MinHash candidate edges; at the
-    // fixtures' similarity levels (all exact pairs at j >= 0.9) the
-    // candidate edge set equals the exact set, so the SAME exact-edge
-    // recursive-CTE oracle pins the assignment — an LSH miss or a
-    // spurious candidate flips a cluster id and fails the hash.
-    "q_dup_clusters_lsh" -> DupClustersSql,
-
-    // The cluster-size census off the LSH-fed labels, pinned by the
-    // same recursive-CTE closure aggregated twice: a single drifted
-    // component assignment changes a size bucket and fails the hash.
-    "q_cluster_sizes" ->
-      s"""$DupClustersCtes
-         SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
-         FROM (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-               FROM labeled GROUP BY cluster_id)
-         GROUP BY cluster_size
-         ORDER BY cluster_size""",
-
-    // Entity resolution: blocking + edit-distance gate + transitive
-    // closure, replayed end to end (seeded dirty/decoy records
-    // included) — see EntityResolutionSql's doc for what a mismatch
-    // catches.
-    "q_entity_resolution" -> EntityResolutionSql,
-
-    // Degenerate-block skew + armed purge cap: the census and the
-    // over-cap exclusion replay in SQL, so a guard that purges the
-    // wrong blocks (or silently drops records instead of edges)
-    // flips rows, not just timings.
-    "q_entity_resolution_skew" -> EntityResolutionSkewSql,
-
-    // The streaming twin's incremental edge emission (within-batch +
-    // batch-vs-index) unions to the one-shot pair set, and CC is
-    // edge-order-insensitive — same oracle, row-for-row.
-    "q_stream_entity_resolution" -> EntityResolutionSql,
-
-    // LSH-fed leakage screen: pair SET must equal the exact-edge
-    // contamination audit (no similarity column — the signature
-    // estimate is not the exact Jaccard).
-    "q_contamination_lsh" ->
-      s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         jp AS (SELECT doc_a, doc_b
-                FROM pairs
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
-         sp AS (SELECT doc_id,
-                  CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
-                       WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
-                       ELSE 'test' END AS split
-                FROM documents)
-         SELECT doc_a, doc_b, sa.split AS split_a, sb.split AS split_b
-         FROM jp
-         JOIN sp sa ON sa.doc_id = doc_a
-         JOIN sp sb ON sb.doc_id = doc_b
-         WHERE sa.split <> sb.split
-         ORDER BY doc_a, doc_b""",
-    // Recall pin: Spark emits the exact pairs RECOVERED by MinHash-LSH;
-    // the oracle is the full exact-pair set, so any LSH miss = red row.
-    "q_minhash_recall" ->
-      s"""WITH docs AS (
-           SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
-           WHERE len(ws) >= 3),
-         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
-         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
-         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     COUNT(*) AS common
-                   FROM expl a JOIN expl b
-                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
-         FROM pairs
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
-         ORDER BY doc_a, doc_b""",
-
-    // Recall pin: every planted near-identical twin (id+1e6) the
-    // multi-probe LSH index recovered; oracle = the full planted list.
-    "q_ann_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth pins the MATRYOSHKA funnel: green iff
-    // the 16-dim-prefix coarse shortlist never drops a twin AND the
-    // full-dim rescore ranks it back to top-1 — both funnel stages,
-    // end-to-end.
-    "q_mrl_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth pins the k-means IVF index: green iff
-    // NProbe=2 cell probing recovers every twin.
-    "q_ivf_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth through the SAMPLE-TRAINED centroid
-    // set (deterministic 1/8 hash sample — the bounded 100 TB trainer):
-    // green iff the cheaper trainer costs zero twin recall.
-    "q_ivf_sampled_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth pins the cosine NEAR-DUP pair kernel
-    // (q_cosine_near_dup's multi-probe bucket join at threshold 0.95,
-    // which is empty on the natural fixtures): green iff the bucketed
-    // pair join recovers every (original, twin) pair.
-    "q_cosine_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth pins the PRODUCT-QUANTIZED index:
-    // green iff every query's top-1 by codegen ADC distance over the
-    // 8-byte code index is its own cosine-0.999 twin — the whole PQ
-    // train→encode→score loop, end-to-end.
-    "q_pq_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth through SAMPLE-TRAINED codebooks
-    // (deterministic 1/8 hash sample — the bounded 100 TB trainer):
-    // green iff the cheaper trainer costs zero twin recall.
-    "q_pq_sampled_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Same planted ground truth through BOTH approximations composed
-    // (IVF cell probing bounds the candidates, PQ ADC scores them):
-    // green iff no twin is lost to an unprobed cell OR out-ranked by a
-    // co-cell stranger under 8-byte codes.
-    "q_ivfpq_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // SQ8 encode is fully SQL-derivable (per-dim min/max grid + integer
-    // floor-div — no k-means), so unlike q_pq_codes this code dump is
-    // oracle-EXACT end-to-end: DuckDB recomputes the same grid and the
-    // same byte codes from the raw embeddings.
-    "q_sq_codes" ->
-      """WITH iv AS (
-           SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT) AS v
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-         st AS (
-           SELECT dim, MIN(v) AS lo,
-             GREATEST(1, (MAX(v) - MIN(v) + 254) // 255) AS step
-           FROM iv GROUP BY dim)
-         SELECT iv.vec_id, iv.dim,
-           CAST(GREATEST(0, LEAST(255, (iv.v - st.lo) // st.step)) AS BIGINT)
-             AS code
-         FROM iv JOIN st USING (dim)
-         ORDER BY vec_id, dim""",
-
-    // Same planted ground truth pins the SCALAR-QUANTIZED (1 byte/dim)
-    // index: green iff every query's top-1 by the codegen sq_wdot
-    // kernel over packed int8 codes is its own cosine-0.999 twin.
-    "q_sq_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // IVF ∘ SQ8 composed (the FAISS IndexIVFScalarQuantizer layout):
-    // green iff no twin is lost to an unprobed cell OR out-ranked by a
-    // co-cell stranger under packed byte codes.
-    "q_ivfsq_recall" ->
-      """SELECT CAST(vec_id AS BIGINT) AS query_id,
-         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
-         FROM embeddings ORDER BY query_id""",
-
-    // Embedding numerics: floats quantized by floor(x * 2^26) (exact in
-    // every engine), then exact BIGINT dot products — see Similarity.Q.
-    "q_embed_norms" ->
-      """SELECT vec_id, CAST(label AS BIGINT) AS label,
-         CAST(len(embedding) AS BIGINT) AS dim,
-         CAST(list_sum(list_transform(generate_series(1, len(embedding)),
-           i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT)
-              * CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT))) AS BIGINT) AS norm_sq
-         FROM embeddings
-         ORDER BY vec_id""",
-
-    "q_knn_brute" ->
-      """WITH q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
-                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM q a, q b WHERE a.vec_id <> b.vec_id)
-         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
-         WHERE rk <= 5 ORDER BY query_id, rk""",
-
-    // LSH-bucketed ANN, replayed off-engine END TO END: the 12
-    // hyperplanes are DATA-INDEPENDENT deterministic constants
-    // (Similarity.planeQ — interpolated below from the ONE definition
-    // the engine's plan literals come from, so the two sides cannot
-    // desynchronize), the bucket key is the packed sign-bit sum, and
-    // the in-bucket exact-cosine top-3 is the same kernel as
-    // q_knn_brute's oracle. A bucketing bug, plane drift, or ranking
-    // tie-break slip is a row diff at the driver gate.
-    "q_ann_lsh" ->
-      s"""WITH q AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         planes(p, pl) AS (VALUES ${(0 until graft.operators.Similarity.SignBits)
-             .map(p => s"(${p}, ${graft.operators.Similarity.planeQ(p)
-               .mkString("[", ", ", "]")})").mkString(",\n           ")}),
-         b AS (
-           SELECT vec_id, iv,
-             CAST(SUM(CASE WHEN list_sum(list_transform(
-                 generate_series(1, len(iv)), i -> iv[i] * pl[i])) >= 0
-               THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS bucket
-           FROM q, planes GROUP BY vec_id, iv),
-         p AS (
-           SELECT a.vec_id AS query_id, b2.vec_id AS neighbor_id,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b2.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b2.iv)),
-                 i -> b2.iv[i] * b2.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM b a JOIN b b2
-             ON a.bucket = b2.bucket AND a.vec_id <> b2.vec_id)
-         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
-         WHERE rk <= 3 ORDER BY query_id, rk""",
-
-    // IVF ANN, replayed off-engine INCLUDING THE TRAINER: the engine's
-    // k-means is integer-exact end to end (floor(x·2^26) quantization,
-    // exact long sums, floor-division updates, argmin ties on cell)
-    // and seeds from MD5-of-id order — so the whole 3-iteration Lloyd
-    // loop unrolls here as CTEs (lloydIterSql, interpolated from the
-    // SAME IvfCells/NProbe/KmeansIters/Dim constants the engine
-    // trains with), then the index/probe/top-3 phases replay over the
-    // replayed centroids. Any trainer drift — a changed seed order, a
-    // truncating division, a tie broken differently — moves a vector
-    // across cells and shows as a row diff at the driver gate.
-    "q_ann_ivf" -> AnnIvfSql,
-    // nprobe recall curve: the shared trainer-replay chain's
-    // rank_cells already orders every cell per query, so each swept
-    // depth is a prefix predicate; truth = the exact brute-force
-    // top-k replay (q_knn_brute's formula at k=3), counts and
-    // integer-bp recall per depth.
-    "q_ivf_sweep" -> {
-      val ts = operators.Similarity.ProbeSweepPoints
-        .map(t => s"($t)").mkString(", ")
-      val maxP = operators.Similarity.ProbeSweepPoints.max
-      val k = operators.Similarity.SweepTrueK
-      s"""$IvfCandCtes,
-         cf AS (SELECT r.vec_id AS query_id, ix.vec_id AS neighbor_id,
-                  CAST(MIN(r.rn) AS BIGINT) AS first_rank
-                FROM rank_cells r JOIN indexed ix
-                  ON r.cell = ix.cell AND r.vec_id <> ix.vec_id
-                WHERE r.rn <= $maxP GROUP BY 1, 2),
-         pc AS (
-           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
-                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM qv a, qv b WHERE a.vec_id <> b.vec_id),
-         knn AS (SELECT query_id, neighbor_id FROM
-                   (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY cosine DESC, neighbor_id) AS rk FROM pc)
-                 WHERE rk <= $k),
-         tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true_total FROM knn),
-         ts AS (SELECT CAST(v AS BIGINT) AS nprobe FROM (VALUES $ts) x(v)),
-         sw AS (SELECT t.nprobe,
-                  CAST(COUNT(*) AS BIGINT) AS n_candidates,
-                  CAST(SUM(CASE WHEN kn.query_id IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_true_hits
-                FROM cf c
-                JOIN ts t ON c.first_rank <= t.nprobe
-                LEFT JOIN knn kn ON kn.query_id = c.query_id
-                  AND kn.neighbor_id = c.neighbor_id
-                GROUP BY 1)
-         SELECT t.nprobe,
-           CAST(COALESCE(sw.n_candidates, 0) AS BIGINT) AS n_candidates,
-           CAST(COALESCE(sw.n_true_hits, 0) AS BIGINT) AS n_true_hits,
-           CAST((COALESCE(sw.n_true_hits, 0) * 10000) // tot.n_true_total
-             AS BIGINT) AS recall_bp
-         FROM ts t CROSS JOIN tot LEFT JOIN sw USING (nprobe)
-         ORDER BY t.nprobe"""
-    },
-    // served from the persisted centroid artifact (train -> publish ->
-    // drop the trainer memo -> load -> serve): the oracle is the SAME
-    // trainer replay, so a save/load bit-flip fails the hash
-    "q_ann_ivf_saved" -> AnnIvfSql,
-
-    // Filtered vector search: the SAME replayed candidate chain with
-    // the metadata predicate applied before ranking (post-filter form)
-    // — value-exact against the engine's post-filtered IVF stream.
-    "q_ann_filtered" ->
-      s"""$IvfCandCtes,
-         allowed AS (SELECT doc_id FROM documents
-                     WHERE lang = '${operators.Similarity.FilterLang}'),
-         fc AS (SELECT c.query_id, c.neighbor_id, c.cosine
-                FROM cand c JOIN allowed a ON a.doc_id = c.neighbor_id)
-         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, neighbor_id) AS rk FROM fc)
-         WHERE rk <= 3 ORDER BY query_id, rk""",
-
-    // IVF-served leave-one-out kNN classification: the SAME replayed
-    // candidate chain as q_ann_ivf, topped at 5 and majority-voted
-    // (count desc, label asc) — value-exact against the engine's
-    // labelKnnIvf, which shares its vote code path with the exact
-    // q_label_knn. Queries whose probed cells hold no other vector
-    // drop on both sides.
-    "q_label_knn_ivf" ->
-      s"""$IvfCandCtes,
-         knn AS (
-           SELECT query_id, neighbor_id
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rk FROM cand)
-           WHERE rk <= 5),
-         lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label
-                 FROM embeddings),
-         votes AS (
-           SELECT k.query_id, l.label AS n_label, COUNT(*) AS n_votes
-           FROM knn k JOIN lab l ON l.vec_id = k.neighbor_id
-           GROUP BY 1, 2),
-         pred AS (
-           SELECT query_id AS vec_id, n_label AS pred_label
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY n_votes DESC, n_label) AS vrk FROM votes)
-           WHERE vrk = 1)
-         SELECT p.vec_id, l.label, p.pred_label,
-           CAST(l.label = p.pred_label AS BIGINT) AS correct
-         FROM pred p JOIN lab l ON l.vec_id = p.vec_id
-         ORDER BY p.vec_id""",
-
-    // IVF-served hard-triplet mining: the SAME replayed candidate
-    // chain, arg-maxed per (anchor, same-label) side with ties to the
-    // smaller id — value-exact against tripletMineIvf, which shares
-    // its selection code path with the exact q_triplets. Anchors
-    // lacking a same-label or other-label candidate drop on both
-    // sides.
-    "q_triplets_ivf" ->
-      s"""$IvfCandCtes,
-         lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label
-                 FROM embeddings),
-         scored AS (
-           SELECT c.query_id AS anchor_id, c.neighbor_id AS cand_id,
-             c.cosine, (la.label = lc.label) AS same
-           FROM cand c JOIN lab la ON la.vec_id = c.query_id
-             JOIN lab lc ON lc.vec_id = c.neighbor_id),
-         pos AS (
-           SELECT anchor_id, cand_id AS pos_id, cosine AS pos_cos
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                   ORDER BY cosine DESC, cand_id) AS rk
-                 FROM scored WHERE same) WHERE rk = 1),
-         neg AS (
-           SELECT anchor_id, cand_id AS neg_id, cosine AS neg_cos
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                   ORDER BY cosine DESC, cand_id) AS rk
-                 FROM scored WHERE NOT same) WHERE rk = 1)
-         SELECT pos.anchor_id, pos_id, pos_cos, neg_id, neg_cos,
-           pos_cos - neg_cos AS margin
-         FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
-         ORDER BY pos.anchor_id""",
-
-    // Incremental IVF maintenance: the SAME unrolled Lloyd replay as
-    // q_ann_ivf but trained on the indexed 80% slice only; the delta
-    // slice then assigns into the replayed frozen centroids — one
-    // integer argmin per new vector, pinned value for value.
-    "q_delta_ivf" ->
-      s"""WITH av AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         wv AS (SELECT CAST(floor((MAX(vec_id) + 1) * 0.8) AS BIGINT) AS w
-                FROM av),
-         qv AS (SELECT vec_id, iv FROM av, wv WHERE vec_id < w),
-         seeds AS (
-           SELECT vec_id, iv FROM qv
-           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT ${graft.operators.Similarity.IvfCells}),
-         c0 AS (
-           SELECT ROW_NUMBER() OVER (
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
-             iv AS c
-           FROM seeds),
-         ${(0 until graft.operators.Similarity.KmeansIters)
-             .map(i => lloydIterSql(i, graft.operators.Similarity.Dim))
-             .mkString(",\n         ")},
-         delta AS (SELECT vec_id, iv FROM av, wv WHERE vec_id >= w),
-         assign AS (
-           SELECT vec_id, cell FROM (
-             SELECT d.vec_id, c.cell,
-               ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-                 ${d2Sql("d.iv", "c.c", graft.operators.Similarity.Dim)},
-                 c.cell) AS rn
-             FROM delta d, c${graft.operators.Similarity.KmeansIters} c) t
-           WHERE rn = 1)
-         SELECT vec_id, CAST(cell AS BIGINT) AS cell
-         FROM assign ORDER BY vec_id""",
-
-    // PQ codes, replayed off-engine INCLUDING THE TRAINER — the same
-    // Lloyd replay as q_ann_ivf's, run per subspace (pqIterSql keyed
-    // by m): MD5-ordered seeds sliced per subspace, 3 integer-exact
-    // iterations, then every vector's argmin code per subspace. The
-    // code table (the artifact a 100 TB pipeline persists) is pinned
-    // value for value, not rows-only.
-    "q_pq_codes" ->
-      s"""WITH qv AS (
-           SELECT vec_id, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         ms AS (SELECT unnest(generate_series(0,
-           ${graft.operators.Similarity.PqM - 1})) AS m),
-         sv AS (
-           SELECT vec_id, m, list_transform(
-             generate_series(1, ${graft.operators.Similarity.PqSubDim}),
-             j -> iv[m * ${graft.operators.Similarity.PqSubDim} + j]) AS sub
-           FROM qv, ms),
-         pseeds AS (
-           SELECT vec_id, iv FROM qv
-           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-           LIMIT ${graft.operators.Similarity.PqK}),
-         b0 AS (
-           SELECT m, ROW_NUMBER() OVER (PARTITION BY m
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
-             list_transform(
-               generate_series(1, ${graft.operators.Similarity.PqSubDim}),
-               j -> iv[m * ${graft.operators.Similarity.PqSubDim} + j]) AS c
-           FROM pseeds, ms),
-         ${(0 until graft.operators.Similarity.PqIters)
-             .map(i => pqIterSql(i, graft.operators.Similarity.PqSubDim))
-             .mkString(",\n         ")},
-         codes AS (
-           SELECT vec_id, m, cell FROM (
-             SELECT s.vec_id, s.m, b.cell,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 ${d2Sql("s.sub", "b.c", graft.operators.Similarity.PqSubDim)},
-                 b.cell) AS rn
-             FROM sv s JOIN b${graft.operators.Similarity.PqIters} b
-               ON s.m = b.m) t
-           WHERE rn = 1)
-         SELECT vec_id, CAST(m AS BIGINT) AS subspace,
-           CAST(cell AS BIGINT) AS code
-         FROM codes
-         ORDER BY vec_id, subspace""",
-
-    // BPE merge table, replayed off-engine INCLUDING THE TRAINER: the
-    // greedy merge recurrence unrolls as BpeNMerges materialized CTE
-    // stages (bpeStageSql) over the same frequency-floored, top-capped
-    // word vocabulary the engine trains on. Counts are exact integers,
-    // the argmax tie-break is the trainer's (count desc, left, right),
-    // and the wrapped-string replace reproduces applyMerge exactly —
-    // so every (rank, left, right, merged, pair_count) row is pinned
-    // value for value. A drifted tie-break, an overlap-greedy merge,
-    // or a miscounted pair is a row diff at the driver gate.
-    // Unigram-LM tokenizer: the oracle replays the ENTIRE trainer
-    // (seed census, unrolled Viterbi chains, backtrack, recount,
-    // deterministic prune) and the encode replays one more Viterbi
-    // chain under the final table — all integer-exact, hash-pinned.
-    "q_unigram_train" -> operators.Corpus.unigramTrainOracle,
-    "q_unigram_encode" -> operators.Corpus.unigramEncodeOracle,
-    "q_unigram_fertility" -> operators.Corpus.unigramFertilityOracle,
-
-    "q_bpe_merges" ->
-      s"""$bpeChainSql
-         SELECT CAST(rank AS BIGINT) AS rank, l AS "left", r AS "right",
-           merged, CAST(pc AS BIGINT) AS pair_count
-         FROM (${(0 until graft.operators.Corpus.BpeNMerges)
-             .map(i => s"SELECT * FROM b$i").mkString(" UNION ALL ")})
-         ORDER BY rank""",
-
-    // BPE corpus sizing, replayed off-engine: per-word token counts
-    // are the replay chain's end-state symbol counts (the CorpusSpec
-    // invariant, now driver-checked), re-joined onto the exploded
-    // corpus word stream exactly as the engine does — LEFT join from
-    // documents so no-word docs report zero. Under the default
-    // trainer bounds (minCount 1, cap non-binding at fixture scale)
-    // the trainer vocabulary IS the corpus's distinct word set, so
-    // both sides tokenize identical word sets.
-    "q_bpe_encode" -> bpeEncodeSql,
-    // Merge-count ablation: corpus token mass at each prefix of the
-    // one trained merge table — the oracle reads the SAME
-    // intermediate vK states its trainer-replay chain materializes
-    // (prefix-closure on the engine side, literal stage reuse here).
-    "q_bpe_curve" -> {
-      val arms = operators.Corpus.BpeCurvePoints.map { p =>
-        s"""SELECT CAST($p AS BIGINT) AS n_merges,
-              CAST(COUNT(*) AS BIGINT) AS n_words,
-              CAST(SUM(CAST(len(string_split(trim(s, '|'), '||'))
-                AS BIGINT)) AS BIGINT) AS total_tokens,
-              CAST(SUM(len(w)) AS BIGINT) AS total_alpha_chars
-            FROM dw JOIN v$p USING (w)"""
-      }.mkString("\n            UNION ALL ")
-      s"""$bpeChainSql,
-         dw AS (SELECT doc_id,
-                  unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-                FROM documents),
-         pts AS ($arms)
-         SELECT n_merges, n_words, total_tokens, total_alpha_chars,
-           CAST(COALESCE(CASE WHEN total_tokens > 0
-             THEN (total_alpha_chars * 1000) // total_tokens END, 0)
-             AS BIGINT) AS chars_per_tok_pm
-         FROM pts ORDER BY n_merges"""
-    },
-    // encoded with the LOADED merge-table artifact (train -> publish
-    // -> load -> encode): same oracle, so a round-trip bit-flip or a
-    // version mispin changes a token count and fails the hash — the
-    // q_nb_classify_saved pattern for the tokenizer artifact.
-    "q_bpe_encode_saved" -> bpeEncodeSql,
-    "q_unigram_encode_saved" -> operators.Corpus.unigramEncodeOracle,
-
-    // Per-language tokenizer fertility: the q_bpe_encode replay
-    // aggregated by lang — integer per-mille ratios, engine-exact.
-    "q_bpe_fertility" ->
-      s"""$bpeChainSql,
-         $bpeEncodeCtes,
-         pl AS (
-           SELECT lang, COUNT(*) AS n_docs,
-             SUM(COALESCE(n_words, 0)) AS n_words,
-             SUM(COALESCE(n_bpe_tokens, 0)) AS n_bpe_tokens,
-             SUM(COALESCE(n_alpha_chars, 0)) AS n_alpha_chars
-           FROM documents d LEFT JOIN pd USING (doc_id) GROUP BY lang)
-         SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_words AS BIGINT) AS n_words,
-           CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens,
-           CAST(n_alpha_chars AS BIGINT) AS n_alpha_chars,
-           CAST(COALESCE(CASE WHEN n_words > 0
-             THEN (n_bpe_tokens * 1000) // n_words END, 0) AS BIGINT)
-             AS toks_per_word_pm,
-           CAST(COALESCE(CASE WHEN n_bpe_tokens > 0
-             THEN (n_alpha_chars * 1000) // n_bpe_tokens END, 0) AS BIGINT)
-             AS chars_per_tok_pm
-         FROM pl ORDER BY lang""",
-
-    // Multinomial Naive Bayes source classifier, MDL form: priors and
-    // per-class token counts replay as two GROUP BYs over the 80%
-    // train split; scoring is argmin of integer add-one-smoothed bit
-    // costs — the same length(bin(a // b)) no-float-log trick as
-    // q_surprisal, so the trained model replays bit-for-bit.
-    "q_nb_classify" -> NbClassifySql,
-    // scored against the LOADED model artifact (train -> publish ->
-    // load -> score): same oracle, so a round-trip bit-flip fails
-    "q_nb_classify_saved" -> NbClassifySql,
-
-    // The SAME oracle pins the streaming twin: per-delivery scoring
-    // against the frozen model must agree with the batch pass
-    // row-for-row.
-    "q_stream_nb_classify" -> NbClassifySql,
-
-    // Confusion matrix over the held-out predictions — the shared
-    // NbPredCtes replay bucketed by (true, predicted).
-    "q_nb_confusion" ->
-      s"""$NbPredCtes
-         SELECT true_source, pred_source, CAST(COUNT(*) AS BIGINT) AS n
-         FROM pred GROUP BY 1, 2
-         ORDER BY true_source, pred_source""",
-
-    // Per-class precision/recall/F1 in integer basis points — F1 in
-    // its exact integer form 2·tp/(support+predicted); every value a
-    // BIGINT on both engines.
-    "q_nb_eval" ->
-      s"""$NbPredCtes,
-         sup AS (SELECT true_source AS cls, CAST(COUNT(*) AS BIGINT)
-                   AS support, CAST(SUM(is_correct) AS BIGINT) AS tp
-                 FROM pred GROUP BY 1),
-         prd AS (SELECT pred_source AS cls, CAST(COUNT(*) AS BIGINT)
-                   AS predicted
-                 FROM pred GROUP BY 1),
-         m AS (SELECT cls,
-                 COALESCE(support, 0) AS support,
-                 COALESCE(predicted, 0) AS predicted,
-                 COALESCE(tp, 0) AS tp
-               FROM sup FULL JOIN prd USING (cls))
-         SELECT cls, CAST(support AS BIGINT) AS support,
-           CAST(predicted AS BIGINT) AS predicted,
-           CAST(tp AS BIGINT) AS tp,
-           CAST(CASE WHEN predicted > 0
-             THEN (tp * 10000) // predicted ELSE 0 END AS BIGINT)
-             AS precision_bp,
-           CAST(CASE WHEN support > 0
-             THEN (tp * 10000) // support ELSE 0 END AS BIGINT)
-             AS recall_bp,
-           CAST(CASE WHEN support + predicted > 0
-             THEN (2 * tp * 10000) // (support + predicted)
-             ELSE 0 END AS BIGINT) AS f1_bp
-         FROM m ORDER BY cls""",
-
-    // Calibration deciles off the SAME scored bit grid: margin =
-    // runner-up bits − winning bits (integers), NTILE(10) over the
-    // total (margin DESC, doc_id) order, per-decile accuracy in
-    // integer basis points.
-    "q_nb_reliability" ->
-      s"""$NbScoredCtes,
-         ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                      ORDER BY bits, cls) AS rk FROM scored),
-         m AS (SELECT w.doc_id,
-                 CAST(w.cls = w.true_source AS BIGINT) AS is_correct,
-                 CAST(r.bits - w.bits AS BIGINT) AS margin
-               FROM (SELECT * FROM ranked WHERE rk = 1) w
-               JOIN (SELECT doc_id, bits FROM ranked WHERE rk = 2) r
-                 USING (doc_id)),
-         tiles AS (SELECT *, NTILE(10) OVER (ORDER BY margin DESC, doc_id)
-                     AS tile FROM m)
-         SELECT CAST(tile AS BIGINT) AS tile,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(is_correct) AS BIGINT) AS n_correct,
-           CAST((SUM(is_correct) * 10000) // COUNT(*) AS BIGINT)
-             AS accuracy_bp,
-           CAST(MIN(margin) AS BIGINT) AS min_margin,
-           CAST(MAX(margin) AS BIGINT) AS max_margin
-         FROM tiles GROUP BY tile ORDER BY tile""",
-
-    // Learning curve: the same trainer fit on nested 25/50/75/100%
-    // block-tag prefixes of the train split (fraction as a dimension —
-    // cumulative (k, cls, w) counts — not a retrain loop), each model
-    // scored on the same holdout; all-integer so the curve replays
-    // exactly.
-    "q_learning_curve" ->
-      s"""WITH docs AS (
-           SELECT doc_id, source,
-             regexp_extract_all(lower(text), '[a-z]+') AS t
-           FROM documents),
-         train AS (SELECT *,
-                     (doc_id // ${Text.NbSplitBlock})
-                       % ${Text.NbCurveFractions} AS f
-                   FROM docs
-                   WHERE (doc_id // ${Text.NbSplitBlock})
-                     % ${Text.NbSplitMod} != 0),
-         test AS (SELECT doc_id, source AS true_source, t FROM docs
-                  WHERE (doc_id // ${Text.NbSplitBlock})
-                    % ${Text.NbSplitMod} = 0),
-         ks AS (SELECT unnest(generate_series(1, ${Text.NbCurveFractions}))
-                  AS k),
-         tt AS (SELECT f, source AS cls, unnest(t) AS w FROM train),
-         cntf AS (SELECT f, cls, w, COUNT(*) AS cnt FROM tt GROUP BY 1, 2, 3),
-         cntk AS (SELECT k, cls, w, SUM(cnt) AS cnt
-                  FROM cntf JOIN ks ON f < k GROUP BY 1, 2, 3),
-         ctok AS (SELECT k, cls, CAST(SUM(cnt) AS BIGINT) AS class_tokens
-                  FROM cntk GROUP BY 1, 2),
-         voc AS (SELECT k, CAST(COUNT(DISTINCT w) AS BIGINT) AS v
-                 FROM cntk GROUP BY 1),
-         cd AS (SELECT k, source AS cls, SUM(nd) AS class_docs
-                FROM (SELECT f, source, COUNT(*) AS nd FROM train
-                      GROUP BY 1, 2) d
-                JOIN ks ON f < k GROUP BY 1, 2),
-         tot AS (SELECT k, SUM(class_docs) AS total_docs FROM cd GROUP BY 1),
-         classes AS (
-           SELECT ctok.k, ctok.cls, class_tokens,
-             CAST(length(bin(total_docs // class_docs)) AS BIGINT)
-               AS prior_bits, v
-           FROM ctok JOIN cd USING (k, cls) JOIN voc USING (k)
-           JOIN tot USING (k)),
-         tok AS (SELECT doc_id, unnest(t) AS w FROM test),
-         tb AS (
-           SELECT doc_id, classes.k AS k, classes.cls AS cls,
-             CAST(SUM(length(bin(
-               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
-               AS token_bits
-           FROM tok CROSS JOIN classes
-           LEFT JOIN cntk ON cntk.k = classes.k
-             AND cntk.cls = classes.cls AND cntk.w = tok.w
-           GROUP BY 1, 2, 3),
-         grid AS (SELECT doc_id, true_source, k, cls, prior_bits
-                  FROM test CROSS JOIN classes),
-         scored AS (
-           SELECT doc_id, true_source, k, cls,
-             prior_bits + COALESCE(token_bits, 0) AS bits
-           FROM grid LEFT JOIN tb USING (doc_id, k, cls)),
-         pred AS (
-           SELECT k, CAST(cls = true_source AS BIGINT) AS is_correct
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id, k
-                   ORDER BY bits, cls) AS rk FROM scored)
-           WHERE rk = 1),
-         acc AS (SELECT k, COUNT(*) AS n_test, SUM(is_correct) AS n_correct
-                 FROM pred GROUP BY 1),
-         ttok AS (SELECT k, CAST(SUM(class_tokens) AS BIGINT) AS train_tokens
-                  FROM ctok GROUP BY 1)
-         SELECT CAST(k * ${Text.NbCurveStepPct} AS BIGINT) AS frac_pct,
-           CAST(total_docs AS BIGINT) AS train_docs, train_tokens,
-           v AS vocab_size, CAST(n_test AS BIGINT) AS n_test,
-           CAST(n_correct AS BIGINT) AS n_correct,
-           CAST((n_correct * 10000) // n_test AS BIGINT) AS accuracy_bp
-         FROM acc JOIN tot USING (k) JOIN ttok USING (k) JOIN voc USING (k)
-         ORDER BY frac_pct""",
-
-    // Prototypicality (Sorscher et al. data-pruning metric): cosine of
-    // every vector against its class's raw SUM vector (cosine is
-    // scale-invariant) on the 2^13 integer grid — every aggregate is
-    // an exact BIGINT, the one double division is IEEE-identical.
-    "q_prototypicality" ->
-      s"""WITH q AS (
-           SELECT vec_id, CAST(label AS BIGINT) AS label,
-             CAST(i - 1 AS BIGINT) AS pos,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-         cent AS (SELECT label, pos, CAST(SUM(q) AS BIGINT) AS q_sum
-                  FROM q GROUP BY 1, 2),
-         cnorm AS (SELECT label,
-                     sqrt(CAST(CAST(SUM(q_sum * q_sum) AS BIGINT) AS DOUBLE))
-                       AS c_norm
-                   FROM cent GROUP BY 1),
-         dots AS (SELECT vec_id, q.label,
-                    CAST(SUM(q * q_sum) AS BIGINT) AS dot_qc,
-                    CAST(SUM(q * q) AS BIGINT) AS v_sq
-                  FROM q JOIN cent USING (label, pos) GROUP BY 1, 2)
-         SELECT vec_id, label, proto_cos,
-           CAST(ROW_NUMBER() OVER (PARTITION BY label
-             ORDER BY proto_cos DESC, vec_id) AS BIGINT) AS proto_rank
-         FROM (SELECT vec_id, dots.label,
-                 CAST(dot_qc AS DOUBLE)
-                   / (sqrt(CAST(v_sq AS DOUBLE)) * c_norm) AS proto_cos
-               FROM dots JOIN cnorm USING (label)
-               WHERE v_sq > 0 AND c_norm > 0)
-         ORDER BY vec_id""",
-
-    // Streaming drift monitor: per-delivery centroid cosine against
-    // the frozen corpus centroid — exact 2^13-grid sums, deliveries
-    // keyed by vec_id parity (data-derived, trigger-invariant).
-    "q_stream_embed_drift" ->
-      s"""WITH q AS (
-           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-         ref AS (SELECT pos, CAST(SUM(q) AS BIGINT) AS rs FROM q GROUP BY 1),
-         bat AS (SELECT vec_id % 2 AS delivery, pos,
-                   CAST(SUM(q) AS BIGINT) AS bs
-                 FROM q GROUP BY 1, 2),
-         dots AS (SELECT delivery, CAST(SUM(bs * rs) AS BIGINT) AS d,
-                    CAST(SUM(bs * bs) AS BIGINT) AS bn
-                  FROM bat JOIN ref USING (pos) GROUP BY 1),
-         rn AS (SELECT sqrt(CAST(CAST(SUM(rs * rs) AS BIGINT) AS DOUBLE))
-                  AS rnorm FROM ref),
-         cnt AS (SELECT vec_id % 2 AS delivery,
-                   CAST(COUNT(*) AS BIGINT) AS n_vecs
-                 FROM embeddings GROUP BY 1)
-         SELECT CAST(dots.delivery AS BIGINT) AS delivery, cnt.n_vecs,
-           CAST(d AS DOUBLE) / (sqrt(CAST(bn AS DOUBLE)) * rnorm) AS drift_cos
-         FROM dots JOIN cnt USING (delivery) CROSS JOIN rn
-         ORDER BY delivery""",
-
-    // Embedding-space diagnostics: per-dimension integer moments
-    // (n·Σ-form variance/covariance on the 2^13 grid) plus each
-    // dimension's most-|corr| partner — every aggregate an exact
-    // BIGINT, the one double division IEEE-identical.
-    "q_embed_diag" ->
-      s"""WITH q AS (
-           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-         dims AS (SELECT pos, CAST(COUNT(*) AS BIGINT) AS n,
-                    CAST(SUM(q) AS BIGINT) AS s,
-                    CAST(SUM(q * q) AS BIGINT) AS ss
-                  FROM q GROUP BY 1),
-         co AS (SELECT a.pos AS pos, b.pos AS pos_b,
-                  CAST(SUM(a.q * b.q) AS BIGINT) AS sxy
-                FROM q a JOIN q b
-                  ON a.vec_id = b.vec_id AND a.pos < b.pos
-                GROUP BY 1, 2),
-         sc AS (SELECT co.pos, co.pos_b,
-                  CAST(dx.n * sxy - dx.s * dy.s AS BIGINT) AS cov_num,
-                  CAST(dx.n * dx.ss - dx.s * dx.s AS BIGINT) AS var_x,
-                  CAST(dx.n * dy.ss - dy.s * dy.s AS BIGINT) AS var_y
-                FROM co JOIN dims dx ON dx.pos = co.pos
-                  JOIN dims dy ON dy.pos = co.pos_b),
-         sym AS (SELECT pos, pos_b, cov_num, var_x, var_y FROM sc
-                 UNION ALL
-                 SELECT pos_b, pos, cov_num, var_y, var_x FROM sc),
-         corr AS (SELECT pos, pos_b,
-                    CAST(cov_num AS DOUBLE)
-                      / (sqrt(CAST(var_x AS DOUBLE))
-                         * sqrt(CAST(var_y AS DOUBLE))) AS corr
-                  FROM sym),
-         best AS (SELECT pos, pos_b AS top_corr_dim, corr AS top_corr
-                  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY pos
-                          ORDER BY abs(corr) DESC, pos_b) AS rk FROM corr)
-                  WHERE rk = 1)
-         SELECT d.pos, d.n, d.s AS q_sum,
-           CAST(d.n * d.ss - d.s * d.s AS BIGINT) AS var_num,
-           b.top_corr_dim, b.top_corr
-         FROM dims d JOIN best b USING (pos)
-         ORDER BY d.pos""",
-
-    // MMR diversified selection: the greedy argmax chain replays as a
-    // recursive CTE — relevance on the 2^13 grid, pairwise cosines on
-    // the 2^26 grid (both exact-long), the mixing weight interpolated
-    // from Similarity.MmrLambda and written as CAST(λ AS DOUBLE) over
-    // DOUBLE casts so both engines compute IDENTICAL doubles (DuckDB
-    // parses a bare 0.7 as DECIMAL, making 1.0 - 0.7 exactly 0.3 —
-    // one ulp away from the 0.30000000000000004 the engine's double
-    // arithmetic produces). k and c interpolate from MmrK/MmrC.
-    "q_mmr_select" ->
-      s"""WITH RECURSIVE
-         q13 AS (
-           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
-             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
-           FROM embeddings,
-                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-         qsum AS (SELECT pos, CAST(SUM(q) AS BIGINT) AS q_sum
-                  FROM q13 GROUP BY 1),
-         qn AS (SELECT sqrt(CAST(CAST(SUM(q_sum * q_sum) AS BIGINT) AS DOUBLE))
-                  AS q_norm FROM qsum),
-         relt AS (
-           SELECT vec_id,
-             CAST(CAST(SUM(q * q_sum) AS BIGINT) AS DOUBLE)
-               / (sqrt(CAST(CAST(SUM(q * q) AS BIGINT) AS DOUBLE)) * q_norm)
-               AS rel
-           FROM q13 JOIN qsum USING (pos) CROSS JOIN qn
-           GROUP BY vec_id, q_norm
-           HAVING CAST(SUM(q * q) AS BIGINT) > 0),
-         short AS (SELECT vec_id, rel FROM relt
-                   ORDER BY rel DESC, vec_id
-                   LIMIT ${graft.operators.Similarity.MmrC}),
-         iv AS (SELECT vec_id, list_transform(embedding,
-                  x -> CAST(floor(CAST(x AS DOUBLE) * $QLit) AS BIGINT)) AS iv
-                FROM embeddings
-                WHERE vec_id IN (SELECT vec_id FROM short)),
-         sim AS (
-           SELECT a.vec_id AS va, b.vec_id AS vb,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
-                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cos
-           FROM iv a, iv b WHERE a.vec_id <> b.vec_id),
-         sel(step, ids) AS (
-           SELECT CAST(1 AS BIGINT),
-             [(SELECT vec_id FROM short ORDER BY rel DESC, vec_id LIMIT 1)]
-           UNION ALL
-           SELECT step + 1, list_append(ids, (
-               SELECT s.vec_id FROM short s
-               WHERE NOT list_contains(ids, s.vec_id)
-               ORDER BY CAST($MmrLambdaLit AS DOUBLE) * s.rel
-                   - (CAST(1.0 AS DOUBLE) - CAST($MmrLambdaLit AS DOUBLE)) * (
-                   SELECT MAX(m.cos) FROM sim m
-                   WHERE m.va = s.vec_id AND list_contains(ids, m.vb)) DESC,
-                 s.vec_id
-               LIMIT 1))
-           FROM sel WHERE step < ${graft.operators.Similarity.MmrK}
-             AND EXISTS (SELECT 1 FROM short s
-                         WHERE NOT list_contains(ids, s.vec_id))),
-         fin AS (SELECT ids FROM sel ORDER BY step DESC LIMIT 1),
-         st AS (SELECT CAST(i AS BIGINT) AS step, ids[i] AS vec_id,
-                  list_slice(ids, 1, i - 1) AS prev
-                FROM fin,
-                     LATERAL (SELECT unnest(generate_series(1, len(ids))) AS i) g),
-         ms AS (SELECT st.step, st.vec_id,
-                  COALESCE((SELECT MAX(m.cos) FROM sim m
-                    WHERE m.va = st.vec_id
-                      AND list_contains(st.prev, m.vb)), 0.0) AS max_sim
-                FROM st)
-         SELECT ms.step, ms.vec_id, r.rel, ms.max_sim,
-           CAST($MmrLambdaLit AS DOUBLE) * r.rel
-             - (CAST(1.0 AS DOUBLE) - CAST($MmrLambdaLit AS DOUBLE))
-               * ms.max_sim AS mmr
-         FROM ms JOIN relt r USING (vec_id)
-         ORDER BY ms.step""",
-
-    // Cluster-balanced curation: the SAME transitive-closure cluster
-    // oracle as q_semantic_clusters, with the survivor picked by the
-    // q_quality composite instead of norm² — rank and keep flag replay
-    // through one window.
-    "q_cluster_balance" -> ClusterBalanceSql,
-
-    // Cell-fed curation: same candidate-completeness pinning as
-    // q_semantic_clusters_lsh (SimilaritySpec asserts cellPairs ==
-    // exact edge set edge-for-edge); quality/rank/keep is one shared
-    // clusterBalancedFrom code path with the exact twin.
-    "q_cluster_balance_lsh" -> ClusterBalanceSql,
-
-    // Inverse-frequency class weights (the sklearn "balanced"
-    // heuristic) in integer basis points
-    "q_class_weights" ->
-      """WITH c AS (
-           SELECT CAST(label AS BIGINT) AS label,
-             CAST(COUNT(*) AS BIGINT) AS n
-           FROM embeddings GROUP BY 1),
-         t AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-                 CAST(COUNT(*) AS BIGINT) AS n_classes FROM c)
-         SELECT label, n,
-           (t.n_total * 10000) // (t.n_classes * n) AS weight_bp
-         FROM c CROSS JOIN t
-         ORDER BY label""",
-
-    // Leave-one-out kNN classification over the same exact-integer
-    // cosine: majority of the top-5 neighbor labels, ties broken
-    // (count desc, label asc)
-    "q_label_knn" ->
-      """WITH q AS (
-           SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             b.label AS n_label,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
-                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM q a, q b WHERE a.vec_id <> b.vec_id),
-         knn AS (
-           SELECT query_id, n_label
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
-           WHERE rk <= 5),
-         votes AS (
-           SELECT query_id, n_label, COUNT(*) AS n_votes
-           FROM knn GROUP BY 1, 2),
-         pred AS (
-           SELECT query_id AS vec_id, n_label AS pred_label
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY n_votes DESC, n_label) AS vrk FROM votes)
-           WHERE vrk = 1)
-         SELECT q.vec_id, q.label, pred.pred_label,
-           CAST(q.label = pred.pred_label AS BIGINT) AS correct
-         FROM pred JOIN q ON q.vec_id = pred.vec_id
-         ORDER BY q.vec_id""",
-
-    // Hard-mined contrastive triplets: per anchor, the most-similar
-    // same-label vector (positive) and most-similar other-label vector
-    // (hard negative), ties on smaller id — the same exact-integer
-    // cosine as q_knn_brute, so the doubles agree bit-for-bit.
-    "q_triplets" ->
-      """WITH q AS (
-           SELECT vec_id, CAST(label AS BIGINT) AS label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
-           FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS anchor_id, b.vec_id AS cand_id,
-             (a.label = b.label) AS same,
-             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
-             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
-                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
-                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
-                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
-           FROM q a, q b WHERE a.vec_id <> b.vec_id),
-         pos AS (
-           SELECT anchor_id, cand_id AS pos_id, cosine AS pos_cos
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                   ORDER BY cosine DESC, cand_id) AS rk
-                 FROM p WHERE same) WHERE rk = 1),
-         neg AS (
-           SELECT anchor_id, cand_id AS neg_id, cosine AS neg_cos
-           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                   ORDER BY cosine DESC, cand_id) AS rk
-                 FROM p WHERE NOT same) WHERE rk = 1)
-         SELECT pos.anchor_id, pos_id, pos_cos, neg_id, neg_cos,
-           pos_cos - neg_cos AS margin
-         FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
-         ORDER BY pos.anchor_id""",
-
-    // documents.text is pure ASCII, so DuckDB's VARCHAR md5/substring
-    // operate on the same bytes Spark's binary md5/substr see.
-    "q_binary_meta" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         md5(text) AS digest,
-         substring(text, 1, 4) AS magic
-         FROM documents
-         ORDER BY doc_id""",
-
-    "q_frame_sample" ->
-      """SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
-         md5(substring(text, CAST(i AS INT) * 64 + 1, 64)) AS frame_digest
-         FROM (SELECT doc_id, text,
-                 octet_length(encode(text)) AS nb FROM documents
-               WHERE octet_length(encode(text)) > 0) t,
-              LATERAL (SELECT unnest(generate_series(0,
-                CAST(floor((nb - 1) / 64) AS BIGINT))) AS i) g
-         ORDER BY doc_id, frame_idx""",
-
-    // Scene cuts: integer mean-byte frame features, lag deltas, the
-    // threshold verdict, and the running scene index all replay —
-    // a drifted window boundary or a biased tail frame flips rows
-    "q_scene_cuts" -> operators.Multimodal.sceneCutsOracle,
-    "q_scene_cuts_decoded" ->
-      operators.Multimodal.sceneCutsDecodedOracle,
-    "q_keyframes" -> operators.Multimodal.keyframesOracle,
-    "q_video_neardup" -> operators.Multimodal.videoNearDupOracle,
-    "q_audio_vad" -> operators.Multimodal.audioVadOracle,
-
-    // REAL-DECODE twin: Spark PNG-encodes a deterministic gray image
-    // per doc (gray(x,y) = (doc_id*31 + x*7 + y*13) % 256, w=8+id%8,
-    // h=8+id%5) and decodes it back with javax.imageio; the oracle
-    // recomputes the 16-bin gray histogram straight from the pixel
-    // formula — a codec round-trip that corrupts any pixel, dimension,
-    // or bin breaks the hash.
-    "q_decode_features" ->
-      """WITH px AS (
-           SELECT d.doc_id,
-                  ((d.doc_id * 31 + x.x * 7 + y.y * 13) % 256) // 16 AS b
-           FROM documents d,
-                LATERAL (SELECT unnest(generate_series(0,
-                  CAST(7 + d.doc_id % 8 AS BIGINT))) AS x) x,
-                LATERAL (SELECT unnest(generate_series(0,
-                  CAST(7 + d.doc_id % 5 AS BIGINT))) AS y) y
-         )
-         SELECT d.doc_id AS doc_id,
-           CAST(8 + d.doc_id % 8 AS INTEGER) AS width,
-           CAST(8 + d.doc_id % 5 AS INTEGER) AS height,
-           CAST(g.b AS BIGINT) AS bin_idx,
-           CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_in_bin
-         FROM documents d
-         CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS b) g
-         LEFT JOIN (SELECT doc_id, b, COUNT(*) AS n
-                    FROM px GROUP BY doc_id, b) cnt
-           ON cnt.doc_id = d.doc_id AND cnt.b = g.b
-         ORDER BY d.doc_id, bin_idx""",
-
-    // Audio features recomputed from the closed-form triangle wave —
-    // the Spark side derives them from REAL WAV bytes decoded by
-    // javax.sound, so equality here pins the synthesize → RIFF encode
-    // → container parse → PCM16LE decode → windowed-feature loop
-    // end-to-end (triangle, not sine: pure integer arithmetic, no
-    // engine-varying libm).
-    "q_audio_features" ->
-      """WITH d AS (
-           SELECT doc_id,
-             512 + (doc_id % 7) * 64 AS n,
-             16 + (doc_id % 32) AS p,
-             8192 + (doc_id % 4) * 4096 AS a
-           FROM documents),
-         s AS (
-           SELECT doc_id, i,
-             a - (2 * a * abs(2 * (i % p) - p)) // p AS smp,
-             i // 128 AS w
-           FROM d,
-                LATERAL (SELECT unnest(generate_series(0, n - 1)) AS i) g),
-         sl AS (
-           SELECT doc_id, w, i, smp,
-             lag(smp) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-           FROM s)
-         SELECT doc_id, CAST(w AS BIGINT) AS window_idx,
-           CAST(COUNT(*) AS BIGINT) AS n_samples,
-           CAST(SUM(smp * smp) AS BIGINT) AS energy,
-           CAST(SUM(CASE WHEN i % 128 <> 0 AND prev * smp < 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
-           CAST(MAX(abs(smp)) AS BIGINT) AS peak
-         FROM sl GROUP BY doc_id, w
-         ORDER BY doc_id, window_idx""",
-
-    // Perceptual dHash (56-bit, 7×8 gradient grid) recomputed from the
-    // closed-form pixel formula — the Spark side hashes the REAL
-    // decoded raster, so equality here pins the whole decode path.
-    "q_image_phash" ->
-      """WITH geo AS (
-           SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-           FROM documents),
-         bits AS (
-           SELECT g.doc_id,
-             SUM(CASE WHEN
-                 ((g.doc_id * 31 + 7 * (((i.i + 1) * g.w) // 8)
-                   + 13 * ((j.j * g.h) // 8)) % 256)
-               > ((g.doc_id * 31 + 7 * ((i.i * g.w) // 8)
-                   + 13 * ((j.j * g.h) // 8)) % 256)
-               THEN (CAST(1 AS BIGINT) << (j.j * 7 + i.i)) ELSE 0 END)
-               AS phash
-           FROM geo g,
-                (SELECT unnest(generate_series(0, 6)) AS i) i,
-                (SELECT unnest(generate_series(0, 7)) AS j) j
-           GROUP BY g.doc_id),
-         grp AS (
-           SELECT phash, MIN(doc_id) AS group_id, COUNT(*) AS group_size
-           FROM bits GROUP BY phash)
-         SELECT b.doc_id, CAST(b.phash AS BIGINT) AS phash,
-           CAST(g.group_id AS BIGINT) AS group_id,
-           CAST(g.group_size AS BIGINT) AS group_size
-         FROM bits b JOIN grp g USING (phash)
-         ORDER BY b.doc_id""",
-
-    // Resize = exact integer area-pooling of the decoded histogram
-    // (16 bins → 4, i.e. pool = gray // 64) with halved dimensions.
-    "q_resize_pool" ->
-      """WITH px AS (
-           SELECT d.doc_id,
-                  ((d.doc_id * 31 + x.x * 7 + y.y * 13) % 256) // 64 AS p
-           FROM documents d,
-                LATERAL (SELECT unnest(generate_series(0,
-                  CAST(7 + d.doc_id % 8 AS BIGINT))) AS x) x,
-                LATERAL (SELECT unnest(generate_series(0,
-                  CAST(7 + d.doc_id % 5 AS BIGINT))) AS y) y
-         )
-         SELECT d.doc_id AS doc_id,
-           CAST((8 + d.doc_id % 8) // 2 AS INTEGER) AS out_width,
-           CAST((8 + d.doc_id % 5) // 2 AS INTEGER) AS out_height,
-           CAST(g.p AS BIGINT) AS pool_idx,
-           CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_pooled
-         FROM documents d
-         CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS p) g
-         LEFT JOIN (SELECT doc_id, p, COUNT(*) AS n
-                    FROM px GROUP BY doc_id, p) cnt
-           ON cnt.doc_id = d.doc_id AND cnt.p = g.p
-         ORDER BY d.doc_id, pool_idx""",
-
-    "q_roundtrip" ->
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate",
-
-    "q_table_exists_append" ->
-      "SELECT * FROM nation UNION ALL SELECT * FROM nation ORDER BY n_nationkey",
-
-    "q_table_exists_skip" ->
-      "SELECT * FROM nation ORDER BY n_nationkey",
-
-    "q_estimate_only" ->
-      "SELECT COUNT(*) AS n_rows FROM lineitem",
-
-    // Snapshot diff: the oracle replays only the two slice predicates
-    // and the key diff — the ledger append, SCN pin resolution, and
-    // per-version import on the Spark side must reproduce exactly
-    // these key sets or the hash fails.
-    "q_snapshot_diff" ->
-      s"""WITH v1 AS (SELECT o_orderkey FROM orders
-           WHERE ${graft.operators.JobQueries.SnapV1Pred}),
-         v2 AS (SELECT o_orderkey FROM orders
-           WHERE ${graft.operators.JobQueries.SnapV2Pred})
-         SELECT COALESCE(a.o_orderkey, b.o_orderkey) AS o_orderkey,
-           CASE WHEN b.o_orderkey IS NULL THEN 'removed'
-                ELSE 'added' END AS change
-         FROM v1 a FULL JOIN v2 b ON a.o_orderkey = b.o_orderkey
-         WHERE a.o_orderkey IS NULL OR b.o_orderkey IS NULL
-         ORDER BY o_orderkey""",
-
-    "q_remap_data" ->
-      """SELECT c_custkey,
-         'ANON-' || CAST(c_custkey AS VARCHAR) AS c_name, c_mktsegment
-         FROM customer
-         ORDER BY c_custkey""",
-
-    // REMAP_SCHEMA: same rows, new identity — the Spark side derives
-    // schema_name from the imported files' physical path, so a remap
-    // that didn't rewrite the namespace hashes as 'main', not
-    // 'archive', and fails here
-    "q_remap_schema" ->
-      """SELECT 'archive' AS schema_name, r_regionkey, r_name
-         FROM region
-         ORDER BY r_regionkey"""
-  )
+  /** For each key in queries, the equivalent SQL DuckDB runs on the same
+    * parquet tables (rendered on every read). */
+  def oracleSql: Map[String, String] =
+    registry.map { case (name, r) => name -> r.oracleSql }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QueryRow
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -65,4 +66,20 @@ object AsOf {
         col("ref_event_id"), col("ref_ts"), col("ref_value"))
       .orderBy(col("event_id"))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    QueryRow("q_asof_join", eventAttribution)(
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
+                     event_type, value FROM events),
+         rights AS (SELECT user_id, ts, arg_max(value, event_id) AS ref_value,
+                      MAX(event_id) AS ref_event_id
+                    FROM e WHERE event_type = 'signup' GROUP BY 1, 2),
+         lefts AS (SELECT * FROM e WHERE event_type <> 'signup')
+         SELECT l.event_id, l.user_id, l.event_type,
+           r.ref_event_id, r.ts AS ref_ts, r.ref_value
+         FROM lefts l ASOF LEFT JOIN rights r
+           ON l.user_id = r.user_id AND l.ts >= r.ts
+         ORDER BY event_id""")
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -105,4 +105,19 @@ object Bucketing {
     spark.table(liName)
       .join(spark.table(oName), col("l_orderkey") === col("o_orderkey"))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // The bucketed-layout join: values must equal the plain parquet
+    // join (this oracle); the LAYOUT claim — zero Exchange, zero Sort,
+    // bucket-pruned scans — is asserted from executed plans in
+    // BucketingSpec.
+    QueryRow("q_bucketed_join", bucketedRevenue(_, _))(
+      """SELECT o_orderpriority,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
+         COUNT(*) AS n_items
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         GROUP BY o_orderpriority
+         ORDER BY o_orderpriority""")
+  )
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.DuckSql.Norm
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2669,4 +2670,1046 @@ object Corpus {
            AS diversity_ppm
        FROM grams GROUP BY source, n
        ORDER BY source, n"""
+
+  // ---- BPE trainer replay (the q_bpe_merges / q_bpe_encode oracles) --
+  /** One unrolled BPE trainer stage. Word state is a `|tok||tok|`
+    * wrapped string: adjacent tokens never share a delimiter char, so
+    * plain string `replace` of `|l||r|` → `|lr|` is EXACTLY the
+    * engine's leftmost non-overlapping [[applyMerge]] pass (a shared
+    * boundary would let one 'a' serve two overlapping `a a` matches —
+    * the classic greedy-BPE trap a space-delimited encoding falls
+    * into). Stage shape: count adjacent
+    * pairs over the vocabulary weighted by word frequency, take the
+    * argmax by (count desc, left, right) — the trainer's exact
+    * tie-break — then rewrite every word state. `v`/`b` are
+    * MATERIALIZED: each is referenced twice (next stage + final
+    * union), and DuckDB's default CTE inlining would make a 30-stage
+    * chain exponential. */
+  private def bpeStageSql(i: Int): String =
+    s"""p$i AS (
+           SELECT pr[1] AS l, pr[2] AS r, SUM(c) AS pc FROM (
+             SELECT unnest(list_transform(generate_series(1, len(t)-1),
+                      j -> [t[j], t[j+1]])) AS pr, c
+             FROM (SELECT string_split(trim(s, '|'), '||') AS t, c FROM v$i))
+           GROUP BY 1, 2),
+         b$i AS MATERIALIZED (
+           SELECT $i AS rank, l, r, l || r AS merged, pc
+           FROM p$i ORDER BY pc DESC, l, r LIMIT 1),
+         v${i + 1} AS MATERIALIZED (
+           SELECT w, replace(s, '|' || b.l || '||' || b.r || '|',
+                             '|' || b.l || b.r || '|') AS s, c
+           FROM v$i, b$i b)"""
+
+  /** Shared replay prefix: the trainer vocabulary (same frequency
+    * floor + deterministic top-cap as `trainerVocab`) exploded
+    * into per-char wrapped states, then all [[BpeNMerges]] stages. */
+  private def bpeChainSql: String =
+    s"""WITH wc AS (
+           SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
+             SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+             FROM documents)
+           GROUP BY w HAVING COUNT(*) >= ${BpeMinCount}
+           ORDER BY c DESC, w LIMIT ${BpeMaxVocab}),
+         v0 AS MATERIALIZED (
+           SELECT w, regexp_replace(w, '(.)', '|\\1|', 'g') AS s, c FROM wc),
+         ${(0 until BpeNMerges)
+             .map(bpeStageSql).mkString(",\n         ")}"""
+
+  /** The full-rescan dataset-card replay — ONE definition for
+    * q_dataset_card and its incremental twin q_delta_card (state
+    * merging must reproduce the full-rescan card exactly). */
+  private lazy val DatasetCardSql: String =
+    """WITH b AS (SELECT
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT)
+               AS n_tokens,
+             CAST(sum(length(text)) AS BIGINT) AS n_chars,
+             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+             CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique_docs,
+             CAST(max(len(string_split(lower(text), ' '))) AS BIGINT)
+               AS max_tokens,
+             CAST(min(len(string_split(lower(text), ' '))) AS BIGINT)
+               AS min_tokens
+           FROM documents),
+         v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS vocab_size
+           FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
+             AS w FROM documents))
+         SELECT metric, value FROM (
+           SELECT 'n_docs' AS metric, n_docs AS value FROM b
+           UNION ALL SELECT 'n_tokens', n_tokens FROM b
+           UNION ALL SELECT 'n_chars', n_chars FROM b
+           UNION ALL SELECT 'n_langs', n_langs FROM b
+           UNION ALL SELECT 'n_sources', n_sources FROM b
+           UNION ALL SELECT 'n_unique_docs', n_unique_docs FROM b
+           UNION ALL SELECT 'n_exact_dups', n_docs - n_unique_docs FROM b
+           UNION ALL SELECT 'max_tokens', max_tokens FROM b
+           UNION ALL SELECT 'min_tokens', min_tokens FROM b
+           UNION ALL SELECT 'vocab_size', vocab_size FROM v)
+         ORDER BY metric"""
+
+  /** Shared encode suffix over the replayed chain: end-state per-word
+    * token counts (wt), the exploded corpus word stream (dw), per-doc
+    * sums (pd). One definition for q_bpe_encode and q_bpe_fertility —
+    * an encode-shape tweak cannot desynchronize the two oracles. */
+  private def bpeEncodeCtes: String =
+    s"""wt AS (SELECT w, CAST(len(string_split(trim(s, '|'), '||')) AS BIGINT)
+                  AS n_toks
+                FROM v${BpeNMerges}),
+         dw AS (SELECT doc_id,
+                  unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+                FROM documents),
+         pd AS (
+           SELECT doc_id, COUNT(*) AS n_words, SUM(n_toks) AS n_bpe_tokens,
+             SUM(len(w)) AS n_alpha_chars
+           FROM dw JOIN wt USING (w) GROUP BY doc_id)"""
+
+  /** The BPE corpus-sizing replay — shared verbatim by q_bpe_encode
+    * and its artifact-served twin q_bpe_encode_saved (per-word token
+    * counts are the replay chain's end-state symbol counts; LEFT join
+    * from documents so no-word docs report zero). */
+  private def bpeEncodeSql: String =
+    s"""$bpeChainSql,
+         $bpeEncodeCtes
+         SELECT d.doc_id,
+           CAST(COALESCE(n_words, 0) AS BIGINT) AS n_words,
+           CAST(COALESCE(n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens,
+           CAST(COALESCE(n_alpha_chars, 0) AS BIGINT) AS n_alpha_chars,
+           CAST(COALESCE(CASE WHEN n_bpe_tokens > 0
+             THEN (n_alpha_chars * 1000) // n_bpe_tokens END, 0) AS BIGINT)
+             AS chars_per_tok_pm
+         FROM documents d LEFT JOIN pd USING (doc_id) ORDER BY d.doc_id"""
+
+  /** The mixture CASE expression, generated from
+    * MixtureTargets — shared by q_mixture_sample and
+    * q_curate_v2 (one recipe, two oracles). */
+  private lazy val MixtureCaseSql: String =
+    "CASE lang " + MixtureTargets
+      .map { case (l, p) => s"WHEN '$l' THEN $p" }.mkString(" ") +
+      " ELSE 0 END"
+
+  /** q_curate_v2: the four verified stage oracles composed in one
+    * statement — semantic closure ([[Similarity.SemanticClustersCtes]]),
+    * NB model replay ([[Text.NbModelCtes]]), quality scoring
+    * ([[Text.QualityScoreSql]]) and the water-filling mixture
+    * ([[MixtureCaseSql]]) — so the
+    * composed pipeline is pinned value for value end to end, not
+    * stage by stage. */
+  private lazy val CurateV2Sql: String = {
+    val allow = CurateAllowSources
+      .map(s => s"'$s'").mkString(", ")
+    s"""${Similarity.SemanticClustersCtes},
+         ${Text.NbModelCtes},
+         sq AS (
+           SELECT doc_id, lang,
+             ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS bucket,
+             ${Text.QualityScoreSql} AS quality_score
+           FROM (SELECT doc_id, lang, text,
+                   string_split(lower(text), ' ') AS t FROM documents)),
+         thr AS (SELECT quantile_cont(quality_score, 0.25) AS cut FROM sq),
+         gate AS (SELECT sq.* FROM sq, thr WHERE quality_score > cut),
+         gtest AS (SELECT d.doc_id, d.t FROM docs d JOIN gate USING (doc_id)),
+         gtok AS (SELECT doc_id, unnest(t) AS w FROM gtest),
+         gtb AS (
+           SELECT doc_id, cls,
+             CAST(SUM(length(bin(
+               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
+               AS token_bits
+           FROM gtok CROSS JOIN classes
+           LEFT JOIN counts ON counts.source = classes.cls
+             AND counts.w = gtok.w
+           GROUP BY 1, 2),
+         ggrid AS (SELECT g.doc_id, cls, prior_bits
+                   FROM gtest g CROSS JOIN classes),
+         gscored AS (
+           SELECT doc_id, cls, prior_bits + COALESCE(token_bits, 0) AS bits
+           FROM ggrid LEFT JOIN gtb USING (doc_id, cls)),
+         gpred AS (
+           SELECT doc_id, cls AS pred_source
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+                   ORDER BY bits, cls) AS rk FROM gscored)
+           WHERE rk = 1),
+         nbkeep AS (
+           SELECT g.doc_id, g.lang, g.bucket, g.quality_score,
+             p.pred_source
+           FROM gate g JOIN gpred p USING (doc_id)
+           WHERE p.pred_source IN ($allow)),
+         rq AS (SELECT l.vec_id, CAST(l.cluster_id AS BIGINT) AS cluster_id,
+                  s.quality_score
+                FROM labeled l JOIN sq s ON s.doc_id = l.vec_id),
+         surv AS (
+           SELECT vec_id AS doc_id, cluster_id
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster_id
+                   ORDER BY quality_score DESC, vec_id) AS qrank FROM rq)
+           WHERE qrank = 1),
+         sem AS (SELECT n.*, v.cluster_id
+                 FROM nbkeep n JOIN surv v USING (doc_id)),
+         mc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+                FROM sem GROUP BY 1),
+         mt AS (SELECT lang, n_docs,
+                  CAST($MixtureCaseSql AS BIGINT) AS tp
+                FROM mc),
+         mm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total
+                FROM mt WHERE tp > 0),
+         mr AS (SELECT lang,
+                  LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
+                    AS rate_permille
+                FROM mt, mm WHERE tp > 0)
+         SELECT s.doc_id, s.lang, s.quality_score, s.pred_source,
+           s.cluster_id, r.rate_permille
+         FROM sem s JOIN mr r USING (lang)
+         WHERE s.bucket < r.rate_permille
+         ORDER BY s.doc_id"""
+  }
+
+  /** q_curate_v3: the r15-stage production stack composed in one
+    * statement — the Gopher battery replay ([[Text.gopherRulesSql]]),
+    * the trigram Stupid-Backoff model + per-doc scores
+    * ([[Text.backoffCtes]] — the IDENTICAL CTEs
+    * q_backoff_score pins), the brute-force exact pair set (which the
+    * verified LSH pipeline must equal — the q_minhash_lsh argument),
+    * and the water-filling mixture ([[MixtureCaseSql]]) — so the
+    * composed pipeline is pinned value for value end to end. */
+  private lazy val CurateV3Sql: String =
+    s"""WITH $CurateV3Ctes
+       SELECT s.doc_id, s.lang, s.mean_millibits, r.rate_permille
+       FROM s3 s JOIN mr r USING (lang)
+       WHERE s.bucket < r.rate_permille
+       ORDER BY s.doc_id"""
+
+  /** q_curate_v3_funnel: the same stage CTEs counted per stage — the
+    * attrition table cannot drift from the pipeline it describes. */
+  private lazy val CurateV3FunnelSql: String =
+    s"""WITH $CurateV3Ctes,
+         fin AS (SELECT s.doc_id
+                 FROM s3 s JOIN mr r USING (lang)
+                 WHERE s.bucket < r.rate_permille),
+         f AS (
+           SELECT 0 AS i, 'corpus' AS stage,
+             (SELECT COUNT(*) FROM documents) AS n
+           UNION ALL SELECT 1, 'gopher_pass', COUNT(*) FROM s2pre
+           UNION ALL SELECT 2, 'lm_quartile', COUNT(*) FROM k2
+           UNION ALL SELECT 3, 'neardup_survivor', COUNT(*) FROM s3
+           UNION ALL SELECT 4, 'mixture', COUNT(*) FROM fin)
+       SELECT CAST(i AS BIGINT) AS stage_idx, stage,
+         CAST(n AS BIGINT) AS n_docs,
+         CAST(COALESCE(lag(n) OVER (ORDER BY i) - n, 0) AS BIGINT)
+           AS n_dropped_here
+       FROM f ORDER BY stage_idx"""
+
+  private lazy val CurateV3Ctes: String =
+    s"""${graft.operators.Text.backoffCtes},
+         g AS (SELECT doc_id FROM (${Text.gopherRulesSql}) WHERE gopher_pass = 1),
+         dl AS (SELECT doc_id, lang,
+                  ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000
+                    AS bucket
+                FROM documents),
+         s2pre AS (
+           SELECT g.doc_id, dl.lang, dl.bucket, b.mean_millibits
+           FROM g JOIN bsc b USING (doc_id) JOIN dl USING (doc_id)),
+         cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM s2pre),
+         k2 AS (SELECT doc_id, lang, bucket, mean_millibits FROM (
+                  SELECT s2pre.*, ROW_NUMBER() OVER
+                    (ORDER BY mean_millibits, doc_id) AS rk
+                  FROM s2pre), cnt
+                WHERE rk * 4 <= n_total * 3),
+         jp AS (SELECT doc_a, doc_b FROM (${Dedup.NgramJaccardSql})),
+         dropd AS (SELECT DISTINCT p.doc_b AS doc_id FROM jp p
+                   JOIN k2 a ON a.doc_id = p.doc_a
+                   JOIN k2 b ON b.doc_id = p.doc_b),
+         s3 AS (SELECT * FROM k2
+                WHERE doc_id NOT IN (SELECT doc_id FROM dropd)),
+         mc AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+                FROM s3 GROUP BY 1),
+         mt AS (SELECT lang, n_docs, CAST($MixtureCaseSql AS BIGINT) AS tp
+                FROM mc),
+         mm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total
+                FROM mt WHERE tp > 0),
+         mr AS (SELECT lang,
+                  LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
+                    AS rate_permille
+                FROM mt, mm WHERE tp > 0)"""
+
+  /** The q_heavy_hitters oracle, shared verbatim by its streaming twin. */
+  private[graft] lazy val HeavyHittersSql: String =
+    s"""WITH tok AS (
+           SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+           FROM documents),
+         tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM tok)
+         SELECT w, CAST(count(*) AS BIGINT) AS cnt
+         FROM tok CROSS JOIN tot GROUP BY w, total
+         HAVING count(*) * ${HeavyHittersK} > total
+         ORDER BY cnt DESC, w"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Per-source n-gram diversity: exact distinct counts + integer
+    // ppm ratio replay directly
+    QueryRow("q_ngram_diversity", ngramDiversity)(ngramDiversityOracle),
+    // Exact heavy hitters: the oracle is the definition (count > n/k);
+    // the Spark side reaches the same rows via the two-pass
+    // Misra-Gries reduction without shuffling the token stream. The
+    // threshold derives from the operator's own k constant, so the
+    // two sides cannot drift.
+    QueryRow("q_heavy_hitters", heavyHitters(_, _))(HeavyHittersSql),
+    // Count-Min Sketch: the md5 row hashes, the depth×width grid,
+    // the min-over-rows estimate, and the overcount flag all replay
+    // deterministically — a ge_flag of 0 anywhere means a broken grid
+    QueryRow("q_cms_heavy_hitters", cmsHeavyHitters(_, _))(cmsHeavyHittersOracle),
+    // --- corpus preparation (split/sample/pack/stats)
+    QueryRow("q_split_assign", splitAssign)(
+      """SELECT doc_id,
+         CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
+         CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
+              WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
+              ELSE 'test' END AS split
+         FROM documents
+         ORDER BY doc_id"""),
+    QueryRow("q_domain_cap", domainCap(_, _))(
+      """SELECT doc_id, source, rn FROM (
+           SELECT doc_id, source,
+             CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
+           FROM documents)
+         WHERE rn <= 50
+         ORDER BY source, rn"""),
+    QueryRow("q_pack_chunks", packChunks(_, _))(
+      """SELECT doc_id,
+         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+         CAST(COALESCE(SUM(CAST(len(string_split(lower(text), ' ')) AS BIGINT))
+             OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+           0) AS BIGINT) // 512 AS chunk
+         FROM documents
+         ORDER BY doc_id"""),
+    QueryRow("q_tfidf_top", tfidfTop(_, _))(
+      """WITH w AS (
+           SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+           FROM documents),
+         tf AS (SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
+                FROM w GROUP BY doc_id, word),
+         dfreq AS (SELECT word, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+                   FROM w GROUP BY word),
+         n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
+         SELECT doc_id, word, tf, score, rk FROM (
+           SELECT doc_id, word, tf,
+             CAST(tf * ((n_docs * 1000) // df) AS BIGINT) AS score,
+             CAST(row_number() OVER (PARTITION BY doc_id
+               ORDER BY tf * ((n_docs * 1000) // df) DESC, word) AS BIGINT) AS rk
+           FROM tf JOIN dfreq USING (word) CROSS JOIN n)
+         WHERE rk <= 3
+         ORDER BY doc_id, rk"""),
+    QueryRow("q_bigram_top", bigramTop(_, _))(
+      """WITH b AS (
+           SELECT unnest(CASE WHEN len(ws) >= 2
+             THEN list_transform(generate_series(1, len(ws) - 1),
+               i -> ws[i] || ' ' || ws[i + 1])
+             ELSE [] END) AS bigram
+           FROM (SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws
+                 FROM documents))
+         SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
+         FROM b GROUP BY bigram
+         ORDER BY n DESC, bigram
+         LIMIT 20"""),
+    // Collocations by integer-scaled lift (rank-identical to PMI; see
+    // pmiTop). N is computed as sum(len-1), never a re-explode.
+    QueryRow("q_pmi_top", pmiTop(_, _))(
+      """WITH d AS (
+           SELECT regexp_extract_all(lower(text), '[a-z]+') AS ws
+           FROM documents),
+         dd AS (SELECT ws FROM d WHERE len(ws) >= 2),
+         uni AS (
+           SELECT w, COUNT(*) AS c FROM
+             (SELECT unnest(ws) AS w FROM dd) GROUP BY w),
+         bi AS (
+           SELECT bigram, COUNT(*) AS c_xy FROM
+             (SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
+                i -> ws[i] || ' ' || ws[i + 1])) AS bigram FROM dd)
+           GROUP BY bigram HAVING COUNT(*) >= 5),
+         t AS (SELECT SUM(len(ws) - 1) AS n_total FROM dd)
+         SELECT bigram, CAST(c_xy AS BIGINT) AS c_xy,
+           CAST((t.n_total * c_xy * 10000)
+             // (u1.c * u2.c) AS BIGINT) AS lift_bp
+         FROM bi, t
+         JOIN uni u1 ON u1.w = string_split(bigram, ' ')[1]
+         JOIN uni u2 ON u2.w = string_split(bigram, ' ')[2]
+         ORDER BY lift_bp DESC, bigram
+         LIMIT 30"""),
+    // BPE merge table, replayed off-engine INCLUDING THE TRAINER: the
+    // greedy merge recurrence unrolls as BpeNMerges materialized CTE
+    // stages (bpeStageSql) over the same frequency-floored, top-capped
+    // word vocabulary the engine trains on. Counts are exact integers,
+    // the argmax tie-break is the trainer's (count desc, left, right),
+    // and the wrapped-string replace reproduces applyMerge exactly —
+    // so every (rank, left, right, merged, pair_count) row is pinned
+    // value for value. A drifted tie-break, an overlap-greedy merge,
+    // or a miscounted pair is a row diff at the oracle gate.
+    QueryRow("q_bpe_merges", bpeMerges(_, _))(
+      s"""$bpeChainSql
+         SELECT CAST(rank AS BIGINT) AS rank, l AS "left", r AS "right",
+           merged, CAST(pc AS BIGINT) AS pair_count
+         FROM (${(0 until BpeNMerges)
+             .map(i => s"SELECT * FROM b$i").mkString(" UNION ALL ")})
+         ORDER BY rank"""),
+    // Unigram-LM tokenizer: the oracle replays the ENTIRE trainer
+    // (seed census, unrolled Viterbi chains, backtrack, recount,
+    // deterministic prune) and the encode replays one more Viterbi
+    // chain under the final table — all integer-exact, hash-pinned.
+    QueryRow("q_unigram_train", unigramTrain)(unigramTrainOracle),
+    QueryRow("q_unigram_encode", unigramEncode)(unigramEncodeOracle),
+    QueryRow("q_unigram_fertility", unigramFertility)(unigramFertilityOracle),
+    // BPE corpus sizing, replayed off-engine: per-word token counts
+    // are the replay chain's end-state symbol counts (the CorpusSpec
+    // invariant, now oracle-checked), re-joined onto the exploded
+    // corpus word stream exactly as the engine does — LEFT join from
+    // documents so no-word docs report zero. Under the default
+    // trainer bounds (minCount 1, cap non-binding at fixture scale)
+    // the trainer vocabulary IS the corpus's distinct word set, so
+    // both sides tokenize identical word sets.
+    QueryRow("q_bpe_encode", bpeEncode(_, _))(bpeEncodeSql),
+    // Merge-count ablation: corpus token mass at each prefix of the
+    // one trained merge table — the oracle reads the SAME
+    // intermediate vK states its trainer-replay chain materializes
+    // (prefix-closure on the engine side, literal stage reuse here).
+    QueryRow("q_bpe_curve", bpeCurve) {
+      val arms = BpeCurvePoints.map { p =>
+        s"""SELECT CAST($p AS BIGINT) AS n_merges,
+              CAST(COUNT(*) AS BIGINT) AS n_words,
+              CAST(SUM(CAST(len(string_split(trim(s, '|'), '||'))
+                AS BIGINT)) AS BIGINT) AS total_tokens,
+              CAST(SUM(len(w)) AS BIGINT) AS total_alpha_chars
+            FROM dw JOIN v$p USING (w)"""
+      }.mkString("\n            UNION ALL ")
+      s"""$bpeChainSql,
+         dw AS (SELECT doc_id,
+                  unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+                FROM documents),
+         pts AS ($arms)
+         SELECT n_merges, n_words, total_tokens, total_alpha_chars,
+           CAST(COALESCE(CASE WHEN total_tokens > 0
+             THEN (total_alpha_chars * 1000) // total_tokens END, 0)
+             AS BIGINT) AS chars_per_tok_pm
+         FROM pts ORDER BY n_merges"""
+    },
+    // encoded with the LOADED merge-table artifact (train -> publish
+    // -> load -> encode): same oracle, so a round-trip bit-flip or a
+    // version mispin changes a token count and fails the hash — the
+    // q_nb_classify_saved pattern for the tokenizer artifact.
+    QueryRow("q_bpe_encode_saved", bpeEncodeSaved)(bpeEncodeSql),
+    QueryRow("q_unigram_encode_saved", unigramEncodeSaved)(unigramEncodeOracle),
+    // Per-language tokenizer fertility: the q_bpe_encode replay
+    // aggregated by lang — integer per-mille ratios, engine-exact.
+    QueryRow("q_bpe_fertility", bpeFertility)(
+      s"""$bpeChainSql,
+         $bpeEncodeCtes,
+         pl AS (
+           SELECT lang, COUNT(*) AS n_docs,
+             SUM(COALESCE(n_words, 0)) AS n_words,
+             SUM(COALESCE(n_bpe_tokens, 0)) AS n_bpe_tokens,
+             SUM(COALESCE(n_alpha_chars, 0)) AS n_alpha_chars
+           FROM documents d LEFT JOIN pd USING (doc_id) GROUP BY lang)
+         SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
+           CAST(n_words AS BIGINT) AS n_words,
+           CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens,
+           CAST(n_alpha_chars AS BIGINT) AS n_alpha_chars,
+           CAST(COALESCE(CASE WHEN n_words > 0
+             THEN (n_bpe_tokens * 1000) // n_words END, 0) AS BIGINT)
+             AS toks_per_word_pm,
+           CAST(COALESCE(CASE WHEN n_bpe_tokens > 0
+             THEN (n_alpha_chars * 1000) // n_bpe_tokens END, 0) AS BIGINT)
+             AS chars_per_tok_pm
+         FROM pl ORDER BY lang"""),
+    // Term search: integer tf·idf ranking (idf floor basis points)
+    QueryRow("q_search", search(_, _))(
+      """WITH d AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+           FROM documents),
+         n AS (SELECT COUNT(*) AS n_docs FROM d),
+         tf AS (
+           SELECT doc_id, w, COUNT(*) AS tf FROM
+             (SELECT doc_id, unnest(ws) AS w FROM d)
+           WHERE w IN ('spark', 'join', 'stream', 'window')
+           GROUP BY doc_id, w),
+         idf AS (
+           SELECT w, (n.n_docs * 10000) // COUNT(DISTINCT doc_id) AS idf_bp
+           FROM tf, n GROUP BY w, n.n_docs)
+         SELECT doc_id,
+           CAST(SUM(tf * idf_bp) AS BIGINT) AS score,
+           CAST(COUNT(*) AS BIGINT) AS n_terms_hit
+         FROM tf JOIN idf USING (w)
+         GROUP BY doc_id
+         ORDER BY score DESC, doc_id
+         LIMIT 15"""),
+    // BM25 (k1=1.2, b=0.75): idf as the bit cost of the doubled
+    // Robertson ratio, saturation cross-multiplied into one HUGEINT
+    // quotient in basis points — mirrors bm25's DECIMAL(38,0)
+    // arithmetic term for term, so scores are integer-identical
+    QueryRow("q_bm25", bm25(_, _))(
+      s"""WITH d AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+           FROM documents),
+         dd AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl, ws FROM d),
+         st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                  CAST(SUM(dl) AS BIGINT) AS total_len FROM dd),
+         tf AS (
+           SELECT doc_id, dl, w, CAST(COUNT(*) AS BIGINT) AS tf FROM
+             (SELECT doc_id, dl, unnest(ws) AS w FROM dd)
+           WHERE w IN ('spark', 'join', 'stream', 'window')
+           GROUP BY doc_id, dl, w),
+         dfreq AS (SELECT w, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+                   FROM tf GROUP BY w)
+         SELECT doc_id,
+           CAST(SUM(
+             CAST(length(bin((2 * st.n_docs + 2) // (2 * df + 1))) AS BIGINT) *
+             CAST((CAST(tf AS HUGEINT) * ${Bm25NumCoef}
+                     * CAST(st.total_len AS HUGEINT)) //
+                  (CAST(tf AS HUGEINT) * 1000000
+                     * CAST(st.total_len AS HUGEINT)
+                   + ${Bm25ConstCoef} * CAST(st.total_len AS HUGEINT)
+                   + ${Bm25DlCoef} * CAST(dl AS HUGEINT)
+                            * CAST(st.n_docs AS HUGEINT)) AS BIGINT))
+             AS BIGINT) AS score,
+           CAST(COUNT(*) AS BIGINT) AS n_terms_hit
+         FROM tf JOIN dfreq USING (w) CROSS JOIN st
+         GROUP BY doc_id
+         ORDER BY score DESC, doc_id
+         LIMIT 15"""),
+    // Skip-gram co-occurrence (window ±2), symmetric: both offset
+    // generators mirror the Spark transform(sequence) pass exactly
+    QueryRow("q_skipgrams", skipgrams(_, _))(
+      """WITH d AS (
+           SELECT regexp_extract_all(lower(text), '[a-z]+') AS t
+           FROM documents),
+         p AS (
+           SELECT t[i] AS center, t[i+1] AS context
+           FROM d, unnest(range(1, len(t))) AS u(i) WHERE len(t) >= 2
+           UNION ALL
+           SELECT t[i] AS center, t[i+2] AS context
+           FROM d, unnest(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3),
+         s AS (SELECT center, context FROM p
+               UNION ALL
+               SELECT context AS center, center AS context FROM p)
+         SELECT center, context, CAST(COUNT(*) AS BIGINT) AS n
+         FROM s GROUP BY 1, 2
+         ORDER BY n DESC, center, context
+         LIMIT 30"""),
+    // Reciprocal-rank fusion: the integer tf·idf lexical ranking and
+    // the quantized-cosine vector ranking (both top-100), fused by
+    // pre-floored reciprocal weights 10⁹ // (60 + rank). The cosine is
+    // the exact-integer-grid expression of q_knn_brute, so both legs'
+    // ranks — and therefore the fused scores — are bit-identical.
+    QueryRow("q_rrf", rrfFusion(_, _))(
+      s"""WITH d AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
+           FROM documents),
+         n AS (SELECT COUNT(*) AS n_docs FROM d),
+         tf AS (
+           SELECT doc_id, w, COUNT(*) AS tf FROM
+             (SELECT doc_id, unnest(ws) AS w FROM d)
+           WHERE w IN ('spark', 'join', 'stream', 'window')
+           GROUP BY doc_id, w),
+         idf AS (
+           SELECT w, (n.n_docs * 10000) // COUNT(DISTINCT doc_id) AS idf_bp
+           FROM tf, n GROUP BY w, n.n_docs),
+         lexs AS (
+           SELECT doc_id, SUM(tf * idf_bp) AS score
+           FROM tf JOIN idf USING (w) GROUP BY doc_id
+           ORDER BY score DESC, doc_id LIMIT ${RrfDepth}),
+         lex AS (
+           SELECT doc_id, CAST(row_number() OVER
+             (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rk
+           FROM lexs),
+         q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         qv AS (SELECT iv FROM q WHERE vec_id = 0),
+         vs AS (
+           SELECT c.vec_id,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(c.iv)),
+               i -> c.iv[i] * qv.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(c.iv)),
+                 i -> c.iv[i] * c.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(qv.iv)),
+                 i -> qv.iv[i] * qv.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM q c, qv WHERE c.vec_id <> 0
+           ORDER BY cosine DESC, vec_id LIMIT ${RrfDepth}),
+         vec AS (
+           SELECT vec_id, CAST(row_number() OVER
+             (ORDER BY cosine DESC, vec_id) AS BIGINT) AS vec_rk
+           FROM vs)
+         SELECT CAST(COALESCE(lex.doc_id, vec.vec_id) AS BIGINT) AS doc_id,
+           COALESCE(lex_rk, 0) AS lex_rk,
+           COALESCE(vec_rk, 0) AS vec_rk,
+           CAST(CASE WHEN lex_rk IS NULL THEN 0
+                  ELSE 1000000000 // (${RrfSmoothK} + lex_rk) END
+              + CASE WHEN vec_rk IS NULL THEN 0
+                  ELSE 1000000000 // (${RrfSmoothK} + vec_rk) END
+             AS BIGINT) AS rrf_score
+         FROM lex FULL JOIN vec ON lex.doc_id = vec.vec_id
+         ORDER BY rrf_score DESC, doc_id
+         LIMIT 20"""),
+    QueryRow("q_pii_scrub", piiScrub)(
+      """SELECT doc_id,
+         md5(regexp_replace(
+           regexp_replace(text,
+             '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
+           '[0-9]+', '<NUM>', 'g')) AS scrub_md5,
+         CAST(len(regexp_extract_all(text,
+           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
+         CAST(len(regexp_extract_all(regexp_replace(text,
+           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
+           '[0-9]+')) AS BIGINT) AS n_numbers
+         FROM documents
+         ORDER BY doc_id"""),
+    // Stratified sampling: same content-hash bucket as q_split_assign,
+    // per-language keep rate (en downsampled to 500‰).
+    QueryRow("q_stratified_sample", stratifiedSample(_, _))(
+      """SELECT doc_id, lang,
+         CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
+         CAST(CASE WHEN lang = 'en' THEN 500 ELSE 1000 END AS BIGINT) AS rate_permille
+         FROM documents
+         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 <
+               CASE WHEN lang = 'en' THEN 500 ELSE 1000 END
+         ORDER BY doc_id"""),
+    // exact mode: the DuckDB quantile_cont oracle needs the exact cut;
+    // the default (approx_percentile) is the scale path, pinned by a
+    // CorpusSpec tolerance case against this mode
+    // Quality gate: drop the worst quartile by the composite score
+    // (Spark exact `percentile` ↔ DuckDB `quantile_cont` — the
+    // interpolation parity q_percentiles already pins).
+    QueryRow("q_quality_gate", qualityGate(_, _, exact = true))(
+      s"""WITH s AS (
+           SELECT doc_id,
+             ${Text.QualityScoreSql} AS quality_score
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents))
+         SELECT doc_id, quality_score FROM s
+         WHERE quality_score > (SELECT quantile_cont(quality_score, 0.25) FROM s)
+         ORDER BY doc_id"""),
+    // Quality-gate knob-tuning curve: one scored scan fanned to the
+    // fixed per-mille thresholds; doc/token keep censuses + integer-bp
+    // shares. The score and the IEEE pm/1000 comparison are the same
+    // expressions q_quality_gate already pins cross-engine.
+    QueryRow("q_quality_sweep", qualityThresholdSweep) {
+      val ts = QualitySweepThresholdsPm
+        .map(t => s"($t)").mkString(", ")
+      s"""WITH s AS (
+           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
+             ${Text.QualityScoreSql} AS q
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t
+                 FROM documents)),
+         tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS total_tokens FROM s),
+         ts AS (SELECT CAST(v AS BIGINT) AS threshold_pm
+                FROM (VALUES $ts) x(v)),
+         k AS (SELECT t.threshold_pm, CAST(COUNT(*) AS BIGINT) AS n_kept,
+                 CAST(SUM(s.n_tokens) AS BIGINT) AS kept_tokens
+               FROM s, ts t
+               WHERE s.q >= CAST(t.threshold_pm AS DOUBLE) / 1000.0
+               GROUP BY 1)
+         SELECT t.threshold_pm,
+           CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
+           CAST(tot.total_docs - COALESCE(k.n_kept, 0) AS BIGINT) AS n_dropped,
+           CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens,
+           CAST((COALESCE(k.n_kept, 0) * 10000) // tot.total_docs AS BIGINT)
+             AS kept_docs_bp,
+           CAST((COALESCE(k.kept_tokens, 0) * 10000) // tot.total_tokens
+             AS BIGINT) AS kept_tokens_bp
+         FROM ts t CROSS JOIN tot LEFT JOIN k USING (threshold_pm)
+         ORDER BY t.threshold_pm"""
+    },
+    QueryRow("q_repetition", repetition)(
+      """WITH tf AS (
+           SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
+           FROM (SELECT doc_id,
+                   unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+                 FROM documents)
+           GROUP BY doc_id, word)
+         SELECT doc_id,
+           CAST(SUM(tf) AS BIGINT) AS n_words,
+           CAST(COUNT(*) AS BIGINT) AS n_distinct,
+           CAST(MAX(tf) AS BIGINT) AS top_tf,
+           CAST(MAX(tf) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE) AS rep_ratio
+         FROM tf GROUP BY doc_id
+         ORDER BY doc_id"""),
+    QueryRow("q_dup_ngram_frac", dupNgramFrac(_, _))(dupNgramFracOracle),
+    // exact gram-keyed mode (buckets = None) for the oracle; the
+    // hashed fixed-size feature table is the scale default
+    // DSIR importance weights: one gram explode feeds both corpus
+    // counts; add-one-smoothed count ratios in integer basis points
+    // (// is DuckDB floor division — both operand signs are positive,
+    // so it matches Spark's `div` exactly)
+    QueryRow("q_dsir_weights", dsirWeights(_, _))(
+      """WITH d AS (
+           SELECT doc_id, lang,
+             regexp_extract_all(lower(text), '[a-z]+') AS ws
+           FROM documents),
+         g AS (
+           SELECT doc_id, lang,
+             unnest(list_transform(generate_series(1, len(ws) - 1),
+               i -> ws[i] || ' ' || ws[i + 1])) AS gram
+           FROM d WHERE len(ws) >= 2),
+         c AS (
+           SELECT gram, COUNT(*) AS rc,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS tc
+           FROM g GROUP BY gram),
+         w AS (
+           SELECT g.doc_id, COUNT(*) AS n_grams,
+             SUM(((c.tc + 1) * 10000) // (c.rc + 1)) // COUNT(*) AS weight_bp
+           FROM g JOIN c USING (gram) GROUP BY g.doc_id),
+         t AS (SELECT SUM(weight_bp) AS tot, COUNT(*) AS n FROM w)
+         SELECT w.doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+           CAST(weight_bp AS BIGINT) AS weight_bp,
+           CAST(weight_bp * t.n > t.tot AS BIGINT) AS keep
+         FROM w, t ORDER BY doc_id"""),
+    QueryRow("q_curate", curate)(
+      s"""WITH q AS (
+           SELECT doc_id, text, lang,
+             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+             CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct
+           FROM documents),
+         f AS (SELECT doc_id, text, lang, n_tokens, md5($Norm) AS fp
+               FROM q
+               WHERE n_tokens >= 10
+                 AND CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) >= 0.3),
+         c AS (SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS canonical FROM f)
+         SELECT CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
+                WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
+                ELSE 'test' END AS split,
+           lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
+         FROM c WHERE doc_id = canonical
+         GROUP BY 1, 2
+         ORDER BY split, lang"""),
+    // exact mode: the composed oracle replays the stage-1 cut with
+    // DuckDB quantile_cont; the default (approx_percentile t-digest)
+    // is the scale path, pinned plan-level by a CorpusSpec case
+    // Composed curation pipeline: quality gate ∘ NB source gate ∘
+    // semantic survivor ∘ mixture rebalance, one end-to-end value-
+    // exact replay (the four stage oracles composed as one statement)
+    QueryRow("q_curate_v2", curateV2(_, _, exact = true))(CurateV2Sql),
+    // The composed v3 stack — ONE row, fully integer-exact: the
+    // stage-2 quartile is a RANK rule (no percentile interpolation,
+    // no sketch), so the single row is simultaneously the oracle
+    // replay AND the scale path (two-phase bucketed rank). The
+    // funnel census counts the SAME stage CTEs.
+    QueryRow("q_curate_v3", curateV3)(CurateV3Sql),
+    QueryRow("q_curate_v3_funnel", curateV3Funnel)(CurateV3FunnelSql),
+    // Per-feed attrition: the same stage CTEs censused by source.
+    QueryRow("q_curate_v3_by_source", curateV3BySource)(
+      s"""WITH $CurateV3Ctes,
+         fin AS (SELECT s.doc_id
+                 FROM s3 s JOIN mr r USING (lang)
+                 WHERE s.bucket < r.rate_permille),
+         ds AS (SELECT doc_id, source FROM documents),
+         base AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+                  FROM ds GROUP BY 1),
+         c1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_gopher
+                FROM s2pre JOIN ds USING (doc_id) GROUP BY 1),
+         c2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quartile
+                FROM k2 JOIN ds USING (doc_id) GROUP BY 1),
+         c3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_neardup
+                FROM s3 JOIN ds USING (doc_id) GROUP BY 1),
+         c4 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept
+                FROM fin JOIN ds USING (doc_id) GROUP BY 1)
+       SELECT base.source, n_docs,
+         CAST(COALESCE(n_gopher, 0) AS BIGINT) AS n_gopher,
+         CAST(COALESCE(n_quartile, 0) AS BIGINT) AS n_quartile,
+         CAST(COALESCE(n_neardup, 0) AS BIGINT) AS n_neardup,
+         CAST(COALESCE(n_kept, 0) AS BIGINT) AS n_kept,
+         CAST((COALESCE(n_kept, 0) * 10000) // n_docs AS BIGINT) AS kept_bp
+       FROM base
+       LEFT JOIN c1 USING (source) LEFT JOIN c2 USING (source)
+       LEFT JOIN c3 USING (source) LEFT JOIN c4 USING (source)
+       ORDER BY base.source"""),
+    // The rank-cut knob curve off the same stage CTEs: the global
+    // (mean_millibits, doc_id) rank crossed with the candidate cuts,
+    // keep-first drops recounted per cut over the exact pair set —
+    // the engine's one-rank-pass fan-out must agree knob for knob.
+    QueryRow("q_curate_v3_sweep", curateV3Sweep)(
+      s"""WITH $CurateV3Ctes,
+         cuts(cut_bp) AS (VALUES (CAST(5000 AS BIGINT)), (6250), (7500), (8750)),
+         rkt AS (SELECT doc_id,
+                   CAST(ROW_NUMBER() OVER
+                     (ORDER BY mean_millibits, doc_id) AS BIGINT) AS rk
+                 FROM s2pre),
+         n2 AS (SELECT cut_bp, CAST(COUNT(*) AS BIGINT) AS n_rank_kept
+                FROM rkt CROSS JOIN cnt CROSS JOIN cuts
+                WHERE rk * 10000 <= cut_bp * n_total GROUP BY 1),
+         dr AS (SELECT cut_bp, CAST(COUNT(DISTINCT p.doc_b) AS BIGINT)
+                  AS n_dup_dropped
+                FROM jp p
+                JOIN rkt a ON a.doc_id = p.doc_a
+                JOIN rkt b ON b.doc_id = p.doc_b
+                CROSS JOIN cnt CROSS JOIN cuts
+                WHERE a.rk * 10000 <= cut_bp * n_total
+                  AND b.rk * 10000 <= cut_bp * n_total
+                GROUP BY 1)
+       SELECT cuts.cut_bp,
+         CAST(COALESCE(n_rank_kept, 0) AS BIGINT) AS n_rank_kept,
+         CAST(COALESCE(n_dup_dropped, 0) AS BIGINT) AS n_dup_dropped,
+         CAST(COALESCE(n_rank_kept, 0) - COALESCE(n_dup_dropped, 0)
+           AS BIGINT) AS n_survivors
+       FROM cuts
+       LEFT JOIN n2 USING (cut_bp) LEFT JOIN dr USING (cut_bp)
+       ORDER BY cuts.cut_bp"""),
+    // the DEFAULT (approx) path, oracle-checked against the SAME
+    // exact-replay oracle: at verification scale the corpus is
+    // smaller than the t-digest accuracy knob, so the sketch cut is
+    // value-identical to the exact percentile and the production
+    // wiring must reproduce the exact kept set bit-for-bit — a
+    // drifted estimator or a boundary-doc flip goes red here, not
+    // just in the spec's tolerance band
+    QueryRow("q_curate_v2_approx", curateV2(_, _))(CurateV2Sql),
+    QueryRow("q_contamination", contamination)(
+      s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         jp AS (SELECT doc_a, doc_b,
+                  CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
+                FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b
+                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
+         sp AS (SELECT doc_id,
+                  CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
+                       WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
+                       ELSE 'test' END AS split
+                FROM documents)
+         SELECT doc_a, doc_b, jaccard, sa.split AS split_a, sb.split AS split_b
+         FROM jp
+         JOIN sp sa ON sa.doc_id = doc_a
+         JOIN sp sb ON sb.doc_id = doc_b
+         WHERE sa.split <> sb.split
+         ORDER BY doc_a, doc_b"""),
+    // LSH-fed leakage screen: pair SET must equal the exact-edge
+    // contamination audit (no similarity column — the signature
+    // estimate is not the exact Jaccard).
+    QueryRow("q_contamination_lsh", contaminationLsh)(
+      s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         jp AS (SELECT doc_a, doc_b
+                FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b
+                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
+         sp AS (SELECT doc_id,
+                  CASE WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 800 THEN 'train'
+                       WHEN ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < 900 THEN 'val'
+                       ELSE 'test' END AS split
+                FROM documents)
+         SELECT doc_a, doc_b, sa.split AS split_a, sb.split AS split_b
+         FROM jp
+         JOIN sp sa ON sa.doc_id = doc_a
+         JOIN sp sb ON sb.doc_id = doc_b
+         WHERE sa.split <> sb.split
+         ORDER BY doc_a, doc_b"""),
+    // Deterministic epoch shuffle: the oracle is the bare global
+    // row_number over the same md5 key — Spark's two-phase
+    // bucket-offset construction must produce the identical total order
+    QueryRow("q_epoch_shuffle", epochShuffle(_, _))(
+      """SELECT doc_id,
+         CAST(ROW_NUMBER() OVER (
+           ORDER BY md5('epoch1:' || CAST(doc_id AS VARCHAR)), doc_id) - 1
+           AS BIGINT) AS shuffle_rank
+         FROM documents
+         ORDER BY doc_id"""),
+    // sqrt/mult/div are correctly-rounded IEEE in both engines, so the
+    // derived per-language rates are bit-identical and the content-hash
+    // keep decision matches row-for-row
+    QueryRow("q_temperature_sample", temperatureSample)(
+      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+                    FROM documents GROUP BY lang),
+         m AS (SELECT MAX(n_docs) AS mx FROM c),
+         r AS (SELECT lang,
+                 LEAST(1000, CAST(floor(1000.0 * sqrt(CAST(n_docs AS DOUBLE))
+                   / sqrt(CAST(mx AS DOUBLE))) AS BIGINT)) AS rate_permille
+               FROM c, m)
+         SELECT doc_id, d.lang,
+           CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
+           rate_permille
+         FROM documents d JOIN r ON d.lang = r.lang
+         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < rate_permille
+         ORDER BY doc_id"""),
+    // The temperature knob curve: alpha in {0, 1/4, 1/2, 1} expressed
+    // through correctly-rounded IEEE primitives only (keep-all,
+    // sqrt-of-sqrt, sqrt, integer ratio) — rates and kept censuses
+    // must agree knob for knob, language for language
+    QueryRow("q_temperature_sweep", temperatureSweep)(
+      """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+                    FROM documents GROUP BY lang),
+         m AS (SELECT MAX(n_docs) AS mx FROM c),
+         a(alpha_bp) AS (VALUES (CAST(0 AS BIGINT)), (2500), (5000), (10000)),
+         r AS (SELECT alpha_bp, lang,
+                 CASE WHEN alpha_bp = 0 THEN CAST(1000 AS BIGINT)
+                   WHEN alpha_bp = 2500 THEN LEAST(CAST(1000 AS BIGINT),
+                     CAST(floor(1000.0 * sqrt(sqrt(CAST(n_docs AS DOUBLE)))
+                       / sqrt(sqrt(CAST(mx AS DOUBLE)))) AS BIGINT))
+                   WHEN alpha_bp = 5000 THEN LEAST(CAST(1000 AS BIGINT),
+                     CAST(floor(1000.0 * sqrt(CAST(n_docs AS DOUBLE))
+                       / sqrt(CAST(mx AS DOUBLE))) AS BIGINT))
+                   ELSE (n_docs * 1000) // mx END AS rate_permille
+               FROM c, m, a),
+         k AS (SELECT r.alpha_bp, d.lang, CAST(COUNT(*) AS BIGINT) AS n_kept
+               FROM documents d
+               JOIN r ON d.lang = r.lang
+               WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000
+                 < r.rate_permille
+               GROUP BY 1, 2)
+         SELECT r.alpha_bp, r.lang, r.rate_permille,
+           CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept
+         FROM r
+         LEFT JOIN k ON r.alpha_bp = k.alpha_bp AND r.lang = k.lang
+         ORDER BY r.alpha_bp, r.lang"""),
+    // Token-budget curation: oracle is the bare global ordered cumsum
+    // over (quality DESC, doc_id) — the two-phase quality-range
+    // construction must reproduce the identical running totals (token
+    // counts are integers, so the sums are exact in both engines; the
+    // quality composite is the bit-identical q_quality arithmetic)
+    QueryRow("q_token_budget", tokenBudget(_, _))(
+      """WITH s AS (
+           SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
+             (CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
+             + (CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+                / CAST(len(t) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
+             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE) AS quality_score
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
+         c AS (SELECT doc_id, n_tokens, quality_score,
+           CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+           FROM s)
+         SELECT doc_id, n_tokens, quality_score, cum_tokens FROM c
+         WHERE cum_tokens <= 10000
+         ORDER BY doc_id"""),
+    // Balanced shard layout: oracle is the bare global size rank —
+    // round-robin modulo must agree rank-for-rank with the two-phase
+    // token-range construction
+    QueryRow("q_shard_assign", shardAssign(_, _))(
+      """SELECT doc_id, n_tokens,
+         CAST((ROW_NUMBER() OVER (ORDER BY n_tokens DESC, doc_id) - 1) % 8
+           AS BIGINT) AS shard
+         FROM (SELECT doc_id,
+                 CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
+               FROM documents)
+         ORDER BY doc_id"""),
+    // Explicit-target mixture: all rate arithmetic is integer
+    // multiply/floor-divide, so the derived rates are identical in both
+    // engines and the content-hash keep decision matches row-for-row
+    QueryRow("q_mixture_sample", mixtureSample(_, _))(
+      s"""WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
+                    FROM documents GROUP BY lang),
+         t AS (SELECT lang, n_docs,
+                 CAST($MixtureCaseSql AS BIGINT) AS tp
+               FROM c),
+         tm AS (SELECT MIN(n_docs * 1000 // tp) AS t_total FROM t WHERE tp > 0),
+         r AS (SELECT lang, LEAST(CAST(1000 AS BIGINT), (tp * t_total) // n_docs)
+                 AS rate_permille
+               FROM t, tm WHERE tp > 0)
+         SELECT doc_id, d.lang,
+           CAST(('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS BIGINT) AS bucket,
+           rate_permille
+         FROM documents d JOIN r ON d.lang = r.lang
+         WHERE ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 < rate_permille
+         ORDER BY doc_id"""),
+    // Token-mass mixture: the same integer water-filling over the
+    // per-language TOKEN census (the mass a training run budgets);
+    // same content-hash keep decision, row-for-row.
+    QueryRow("q_token_mixture", tokenMixture(_, _))(
+      s"""WITH d AS (SELECT doc_id, lang,
+             ('0x' || substring(md5(text), 1, 8))::BIGINT % 1000 AS bucket,
+             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS tt
+               FROM d GROUP BY lang),
+         t AS (SELECT lang, tt, CAST($MixtureCaseSql AS BIGINT) AS tp
+               FROM c),
+         tm AS (SELECT MIN(tt * 1000 // tp) AS t_total FROM t WHERE tp > 0),
+         r AS (SELECT lang, LEAST(CAST(1000 AS BIGINT), (tp * t_total) // tt)
+                 AS rate_permille
+               FROM t, tm WHERE tp > 0)
+         SELECT doc_id, d.lang, n_tokens,
+           CAST(bucket AS BIGINT) AS bucket, rate_permille
+         FROM d JOIN r ON d.lang = r.lang
+         WHERE bucket < rate_permille
+         ORDER BY doc_id"""),
+    // Sliding-window chunking: pure integer span arithmetic — the
+    // explode/unnest row multiplication must agree row-for-row
+    QueryRow("q_chunk_stride", chunkStride(_, _))(
+      """WITH d AS (SELECT doc_id,
+             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (SELECT doc_id, n_tokens,
+             unnest(generate_series(0,
+               1 + greatest(0, (n_tokens - 32 + 23) // 24) - 1)) AS chunk_idx
+           FROM d)
+         SELECT doc_id, n_tokens, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+           CAST(chunk_idx * 24 AS BIGINT) AS start_tok,
+           CAST(LEAST(chunk_idx * 24 + 32, n_tokens) AS BIGINT) AS end_tok,
+           CAST(LEAST(chunk_idx * 24 + 32, n_tokens) - chunk_idx * 24 AS BIGINT)
+             AS chunk_tokens
+         FROM c
+         ORDER BY doc_id, chunk_idx"""),
+    // Systematic sampling over cumulative token mass: the oracle
+    // states the running sum as one window in hash order; the Spark
+    // side must reach the identical cumsum through the two-phase
+    // bucketed prefix sum
+    QueryRow("q_systematic_sample", systematicSample(_, _))(
+      """WITH d AS (SELECT doc_id,
+             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
+             ('0x' || substring(md5(text), 1, 8))::BIGINT AS hkey
+           FROM documents),
+         c AS (SELECT doc_id, n_tokens,
+             sum(n_tokens) OVER (ORDER BY hkey, doc_id
+               ROWS UNBOUNDED PRECEDING) - n_tokens AS excl
+           FROM d)
+         SELECT doc_id, n_tokens FROM c
+         WHERE (excl + n_tokens) // 100 > excl // 100
+         ORDER BY doc_id"""),
+    // Stratified k-fold: the oracle is the bare per-stratum
+    // ROW_NUMBER over (content hash, doc_id) round-robin-dealt into
+    // folds; the two-phase hash-range construction must reproduce
+    // the identical per-stratum total order
+    QueryRow("q_stratified_kfold", stratifiedKfold(_, _))(stratifiedKfoldOracle),
+    // Vocabulary coverage: all-integer basis-point coverage so the
+    // table is bit-identical cross-engine; ties in count break by term
+    QueryRow("q_vocab_coverage", vocabCoverage(_, _))(
+      """WITH w AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
+             AS term FROM documents),
+         c AS (SELECT term, count(*) AS cnt FROM w GROUP BY term),
+         t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
+         r AS (SELECT term, cnt,
+             row_number() OVER (ORDER BY cnt DESC, term) AS rank FROM c)
+         SELECT CAST(rank AS BIGINT) AS rank, term, CAST(cnt AS BIGINT) AS cnt,
+           CAST(sum(cnt) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)
+             AS BIGINT) AS cum_cnt,
+           CAST(CAST(sum(cnt) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING)
+             AS BIGINT) * 10000 // t.total AS BIGINT) AS coverage_bp
+         FROM r, t WHERE rank <= 100 ORDER BY rank"""),
+    // Dataset card: long-format corpus summary, every metric an
+    // integer count/sum/distinct (no float means — order-dependent).
+    // The SAME oracle pins q_delta_card: merging per-delivery state
+    // must land on the full-rescan card bit for bit.
+    QueryRow("q_dataset_card", datasetCard)(DatasetCardSql),
+    QueryRow("q_delta_card", deltaCard)(DatasetCardSql)
+  )
 }

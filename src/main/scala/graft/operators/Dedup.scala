@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.DuckSql.Norm
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -1554,4 +1555,606 @@ object Dedup {
         expr("(inter_size * 10000) div union_size").as("jaccard_bp"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** The brute-force threshold-sweep replay, parameterized by the
+    * threshold list — one definition for q_dedup_sweep (full
+    * [[SweepThresholdsBp]]) and q_dedup_sweep_lsh (the ≥
+    * banding-regime subset), so the two rows can never disagree about
+    * the curve arithmetic. */
+  private def dedupSweepSql(thresholds: Seq[Long]): String = {
+    val ts = thresholds.map(t => s"($t)").mkString(", ")
+    s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         pb AS (SELECT doc_a, doc_b,
+                  (common * 10000) // (sa.n_sh + sb.n_sh - common) AS j
+                FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b),
+         ts AS (SELECT CAST(v AS BIGINT) AS threshold_bp
+                FROM (VALUES $ts) x(v)),
+         sw AS (SELECT t.threshold_bp, p.doc_a, p.doc_b
+                FROM pb p, ts t WHERE p.j >= t.threshold_bp)
+         SELECT t.threshold_bp,
+           CAST(COALESCE(np.n, 0) AS BIGINT) AS n_pairs,
+           CAST(COALESCE(nd.n, 0) AS BIGINT) AS n_docs,
+           CAST(COALESCE(dr.n, 0) AS BIGINT) AS n_would_drop
+         FROM ts t
+         LEFT JOIN (SELECT threshold_bp, COUNT(*) AS n FROM sw
+                    GROUP BY 1) np USING (threshold_bp)
+         LEFT JOIN (SELECT threshold_bp, COUNT(*) AS n FROM (
+                      SELECT DISTINCT threshold_bp, d FROM (
+                        SELECT threshold_bp, doc_a AS d FROM sw
+                        UNION ALL SELECT threshold_bp, doc_b FROM sw))
+                    GROUP BY 1) nd USING (threshold_bp)
+         LEFT JOIN (SELECT threshold_bp, COUNT(DISTINCT doc_b) AS n
+                    FROM sw GROUP BY 1) dr USING (threshold_bp)
+         ORDER BY t.threshold_bp"""
+  }
+
+  /** Exact-edge connected-components oracle (recursive CTE transitive
+    * closure) — shared by q_dup_clusters and q_dup_clusters_lsh, whose
+    * Spark sides differ only in how the edge set is derived. */
+  private lazy val DupClustersCtes: String =
+    s"""WITH RECURSIVE
+         docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         jp AS (SELECT doc_a, doc_b
+                FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b
+                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
+         e AS (SELECT doc_a AS a, doc_b AS b FROM jp
+               UNION SELECT doc_b, doc_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM e
+           UNION
+           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+         lab AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
+                 FROM reach GROUP BY a),
+         labeled AS (SELECT d.doc_id,
+                       COALESCE(l.cluster_id, d.doc_id) AS cluster_id
+                     FROM documents d LEFT JOIN lab l USING (doc_id))"""
+
+  private lazy val DupMatrixSql: String =
+    s"""WITH docs AS (
+           SELECT doc_id, source,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, source, string_split($Norm, ' ') AS ws
+                 FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         jp AS (SELECT doc_a, doc_b FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b
+                WHERE CAST(common AS DOUBLE)
+                  / (sa.n_sh + sb.n_sh - common) >= 0.5),
+         lab AS (SELECT least(da.source, db.source) AS src_a,
+                   greatest(da.source, db.source) AS src_b,
+                   jp.doc_a, jp.doc_b
+                 FROM jp
+                 JOIN docs da ON da.doc_id = jp.doc_a
+                 JOIN docs db ON db.doc_id = jp.doc_b)
+         SELECT np.src_a, np.src_b, np.n_pairs, nd.n_docs
+         FROM (SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
+               FROM lab GROUP BY 1, 2) np
+         JOIN (SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_docs
+               FROM (SELECT DISTINCT src_a, src_b, d FROM (
+                       SELECT src_a, src_b, doc_a AS d FROM lab
+                       UNION ALL SELECT src_a, src_b, doc_b FROM lab))
+               GROUP BY 1, 2) nd USING (src_a, src_b)
+         ORDER BY src_a, src_b"""
+
+  private lazy val DupClustersSql: String =
+    s"""$DupClustersCtes
+         SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
+         FROM labeled
+         ORDER BY doc_id"""
+
+  /** Exact-pair near-dup delta classification — shared by the batch
+    * twin (q_delta_neardup) and the streaming ingest classifier
+    * (q_stream_neardup), which must land on the identical answer. */
+  private[graft] lazy val DeltaNearDupSql: String =
+    s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2),
+         jp AS (SELECT doc_a, doc_b FROM pairs
+                JOIN sizes sa ON sa.doc_id = doc_a
+                JOIN sizes sb ON sb.doc_id = doc_b
+                WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5),
+         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
+               FROM documents),
+         m AS (SELECT doc_b AS doc_id,
+                 MIN(CASE WHEN doc_a < w THEN doc_a END) AS corpus_match,
+                 MIN(CASE WHEN doc_a >= w THEN doc_a END) AS batch_match
+               FROM jp, w WHERE doc_b >= w GROUP BY doc_b)
+         SELECT b.doc_id,
+           CASE WHEN corpus_match IS NOT NULL THEN 'near_dup_of_corpus'
+                WHEN batch_match IS NOT NULL THEN 'near_dup_in_batch'
+                ELSE 'new' END AS status,
+           COALESCE(corpus_match, batch_match, CAST(-1 AS BIGINT)) AS matched_id
+         FROM (SELECT doc_id FROM documents, w WHERE doc_id >= w) b
+         LEFT JOIN m ON m.doc_id = b.doc_id
+         ORDER BY b.doc_id"""
+
+  /** The SimHash pair replay — shared by q_simhash_pairs and the
+    * method-agreement triage (one definition, two rows). */
+  private lazy val SimhashPairsSql: String =
+    s"""WITH toks AS (
+           SELECT doc_id, unnest(list_distinct(string_split($Norm, ' '))) AS w
+           FROM documents),
+         h AS (
+           SELECT doc_id,
+             list_reduce(list_transform(generate_series(1, 8),
+               i -> strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1),
+               (a, b) -> a * 16 + b) AS h1,
+             list_reduce(list_transform(generate_series(9, 16),
+               i -> strpos('0123456789abcdef', substr(md5(w), i, 1)) - 1),
+               (a, b) -> a * 16 + b) AS h2
+           FROM toks),
+         votes AS (
+           SELECT doc_id, bits.b,
+             2 * SUM(CASE WHEN bits.b < 32 THEN (h2 >> bits.b) & 1
+                          ELSE (h1 >> (bits.b - 32)) & 1 END) - COUNT(*) AS v
+           FROM h, (SELECT unnest(generate_series(0, 63)) AS b) bits
+           GROUP BY 1, 2),
+         sig AS (
+           SELECT doc_id,
+             string_agg(CASE WHEN v > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS s
+           FROM votes GROUP BY 1)
+         SELECT doc_a, doc_b, hamming FROM (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             CAST(len(list_filter(generate_series(1, 64),
+               i -> substr(a.s, i, 1) <> substr(b.s, i, 1))) AS BIGINT) AS hamming
+           FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
+         WHERE hamming <= 3
+         ORDER BY doc_a, doc_b"""
+
+  /** The exact n-gram Jaccard pair replay — shared by
+    * q_ngram_jaccard and the method-agreement triage. */
+  private[graft] lazy val NgramJaccardSql: String =
+    s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2)
+         SELECT doc_a, doc_b,
+           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
+         FROM pairs
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
+         ORDER BY doc_a, doc_b"""
+
+  /** The exact-pair replay pinning the verified MinHash-LSH pipeline
+    * — shared by q_minhash_lsh and its artifact-served twin
+    * q_minhash_lsh_saved (candidates from the persisted signature
+    * index must emit the same exact pair set). */
+  private lazy val MinhashLshSql: String =
+    s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2)
+         SELECT doc_a, doc_b,
+           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
+         FROM pairs
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
+         ORDER BY doc_a, doc_b"""
+
+  /** The brute-force asymmetric-containment replay — shared by
+    * q_containment and its prefix-filtered twin q_containment_prefix
+    * (candidate completeness is the theorem under test, so the
+    * oracle deliberately skips the filter). */
+  private lazy val ContainmentSql: String =
+    s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_a FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
+                   GROUP BY 1, 2)
+         SELECT doc_a, doc_b, CAST(common AS BIGINT) AS common,
+           CAST(s.n_a AS BIGINT) AS n_a,
+           CAST((common * 10000) // s.n_a AS BIGINT) AS containment_bp
+         FROM pairs p JOIN sizes s ON s.doc_id = p.doc_a
+         WHERE (common * 10000) // s.n_a >= 6000
+         ORDER BY doc_a, doc_b"""
+
+  /** The method-agreement triage replay — shared by q_dup_methods
+    * (exact Jaccard leg) and q_dup_methods_lsh (minhashLsh-fed leg):
+    * the verified LSH pipeline must land on the identical agreement
+    * table, so both rows pin against the brute-force three-detector
+    * union. One definition per leg — a drifted leg fails its own row
+    * AND both triage rows. */
+  private lazy val DupMethodsSql: String =
+    s"""WITH j AS (SELECT doc_a, doc_b FROM ($NgramJaccardSql)),
+         sh AS (SELECT doc_a, doc_b FROM ($SimhashPairsSql)),
+         ce AS (SELECT doc_a, doc_b FROM
+           (${graft.operators.FeatureHash.hashEmbedNearDupOracle})),
+         allp AS (SELECT doc_a, doc_b FROM j
+                  UNION SELECT doc_a, doc_b FROM sh
+                  UNION SELECT doc_a, doc_b FROM ce)
+         SELECT p.doc_a, p.doc_b,
+           CAST(CASE WHEN j.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+             AS by_jaccard,
+           CAST(CASE WHEN sh.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+             AS by_simhash,
+           CAST(CASE WHEN ce.doc_a IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+             AS by_cosine,
+           CAST((CASE WHEN j.doc_a IS NOT NULL THEN 1 ELSE 0 END)
+             + (CASE WHEN sh.doc_a IS NOT NULL THEN 1 ELSE 0 END)
+             + (CASE WHEN ce.doc_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_methods
+         FROM allp p
+         LEFT JOIN j ON j.doc_a = p.doc_a AND j.doc_b = p.doc_b
+         LEFT JOIN sh ON sh.doc_a = p.doc_a AND sh.doc_b = p.doc_b
+         LEFT JOIN ce ON ce.doc_a = p.doc_a AND ce.doc_b = p.doc_b
+         ORDER BY p.doc_a, p.doc_b"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    QueryRow("q_dedup_exact", exact)(
+      s"""WITH d AS (SELECT doc_id, md5($Norm) AS fingerprint FROM documents),
+         c AS (SELECT fingerprint, MIN(doc_id) AS canonical_id,
+                 COUNT(*) AS group_size FROM d GROUP BY fingerprint)
+         SELECT doc_id, canonical_id, group_size,
+           doc_id <> canonical_id AS is_dup
+         FROM d JOIN c USING (fingerprint)
+         ORDER BY doc_id"""),
+    // Per-source dup-mass triage on the RAW text fingerprint (the
+    // dataset-card n_unique_docs basis, not the normalized dedup
+    // fingerprint — the card and this report must reconcile).
+    QueryRow("q_dup_rate_by_source", dupRateBySource)(
+      """WITH d AS (SELECT source, md5(text) AS fp FROM documents),
+         per AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_unique
+                 FROM d GROUP BY 1),
+         multi AS (SELECT fp FROM (
+                     SELECT fp, COUNT(DISTINCT source) AS ns
+                     FROM d GROUP BY 1) WHERE ns > 1),
+         sh AS (SELECT source, CAST(COUNT(DISTINCT d.fp) AS BIGINT)
+                  AS shared_fps
+                FROM d JOIN multi USING (fp) GROUP BY 1)
+         SELECT source, n_docs, n_unique,
+           CAST(n_docs - n_unique AS BIGINT) AS dup_within,
+           CAST(((n_docs - n_unique) * 10000) // n_docs AS BIGINT)
+             AS dup_pct_bp,
+           CAST(COALESCE(shared_fps, 0) AS BIGINT) AS shared_fps
+         FROM per LEFT JOIN sh USING (source)
+         ORDER BY source"""),
+    QueryRow("q_ngram_jaccard", ngramJaccard(_, _))(NgramJaccardSql),
+    // Threshold-tuning curve over the same exact pair kernel: integer
+    // basis-point jaccard, pairs fanned to the thresholds they clear,
+    // three censuses per threshold, zero-filled spine.
+    QueryRow("q_dedup_sweep", dedupThresholdSweep)(dedupSweepSql(SweepThresholdsBp)),
+    // The LSH-fed sweep: the SAME brute-force curve restricted to the
+    // thresholds the banding reliably feeds (every fixture pair over
+    // 0.5 sits at j >= 0.88, banding miss <= 2e-7 — the
+    // q_dup_matrix_lsh pinning argument), so candidate-set == exact
+    // and one oracle pins both engines' pair derivations.
+    QueryRow("q_dedup_sweep_lsh", dedupThresholdSweepLsh)(dedupSweepSql(SweepLshThresholdsBp)),
+    // Source×source near-dup mass matrix: least/greatest-normalized
+    // source pair, pair count + distinct docs involved. The SAME
+    // brute-force oracle pins both the exact-kernel row and the
+    // LSH-fed twin (the two engine pair sets coincide at the
+    // fixtures' j >= 0.9 similarity levels — the q_dup_clusters_lsh
+    // pinning argument).
+    QueryRow("q_dup_matrix", dupMatrix)(DupMatrixSql),
+    QueryRow("q_dup_matrix_lsh", dupMatrixLsh)(DupMatrixSql),
+    // Asymmetric containment |A∩B|/|A| in integer basis points over
+    // ORDERED pairs — the subset-duplicate direction Jaccard misses.
+    // The prefix-filtered twin must reproduce the SAME brute-force
+    // pair set verbatim (one-sided prefix completeness is a theorem,
+    // so the oracle deliberately skips the filter — the q_allpairs
+    // convention).
+    QueryRow("q_containment", containmentPairs(_, _))(ContainmentSql),
+    QueryRow("q_containment_prefix", containmentPrefixPairs(_, _))(ContainmentSql),
+    // Prefix-filtered AllPairs exact bigram-set Jaccard (t = 1/2); the
+    // oracle is the brute-force quadratic join the prefix filter must
+    // reproduce verbatim — candidate completeness is the theorem under
+    // test, so the oracle deliberately skips the filter
+    QueryRow("q_allpairs", allPairsJaccard(_, _))(
+      """WITH s AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id,
+                   regexp_extract_all(lower(text), '[a-z]+') AS ws
+                 FROM documents) t
+           WHERE len(ws) >= 3),
+         p AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(a.sh, b.sh)) AS inter_size,
+             len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS union_size
+           FROM s a JOIN s b ON a.doc_id < b.doc_id)
+         SELECT doc_a, doc_b, CAST(inter_size AS BIGINT) AS inter_size,
+           CAST(union_size AS BIGINT) AS union_size,
+           CAST((inter_size * 10000) // union_size AS BIGINT) AS jaccard_bp
+         FROM p WHERE inter_size * 2 >= union_size
+         ORDER BY doc_a, doc_b"""),
+    // The VERIFIED MinHash-LSH pipeline (band → margin prune → exact
+    // confirm on candidate shingle sets) must emit exactly the exact
+    // pair set — the oracle IS the brute-force pair query above, so a
+    // banding miss or a spurious survivor is a row diff, not a
+    // rows-only shrug. Same single-division IEEE jaccard both sides.
+    QueryRow("q_minhash_lsh", minhashLsh(_, _))(MinhashLshSql),
+    QueryRow("q_minhash_lsh_saved", minhashLshSaved(_, _))(MinhashLshSql),
+    // Recall pin: Spark emits the exact pairs RECOVERED by MinHash-LSH;
+    // the oracle is the full exact-pair set, so any LSH miss = red row.
+    QueryRow("q_minhash_recall", minhashRecall)(
+      s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         expl AS (SELECT doc_id, unnest(sh) AS shingle FROM docs),
+         sizes AS (SELECT doc_id, len(sh) AS n_sh FROM docs),
+         pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                     COUNT(*) AS common
+                   FROM expl a JOIN expl b
+                     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                   GROUP BY 1, 2)
+         SELECT doc_a, doc_b,
+           CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) AS jaccard
+         FROM pairs
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE CAST(common AS DOUBLE) / (sa.n_sh + sb.n_sh - common) >= 0.5
+         ORDER BY doc_a, doc_b"""),
+    // Connected components: DuckDB computes the transitive closure of
+    // the near-dup edge set by recursive CTE; Spark's min-label
+    // propagation must agree on every component assignment.
+    QueryRow("q_dup_clusters", nearDupClusters)(DupClustersSql),
+    // The LSH-fed clustering runs off MinHash candidate edges; at the
+    // fixtures' similarity levels (all exact pairs at j >= 0.9) the
+    // candidate edge set equals the exact set, so the SAME exact-edge
+    // recursive-CTE oracle pins the assignment — an LSH miss or a
+    // spurious candidate flips a cluster id and fails the hash.
+    QueryRow("q_dup_clusters_lsh", nearDupClustersLsh)(DupClustersSql),
+    // The cluster-size census off the LSH-fed labels, pinned by the
+    // same recursive-CTE closure aggregated twice: a single drifted
+    // component assignment changes a size bucket and fails the hash.
+    QueryRow("q_cluster_sizes", clusterSizes)(
+      s"""$DupClustersCtes
+         SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
+         FROM (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+               FROM labeled GROUP BY cluster_id)
+         GROUP BY cluster_size
+         ORDER BY cluster_size"""),
+    QueryRow("q_delta_dedup", deltaDedup)(
+      s"""WITH d AS (SELECT doc_id, md5($Norm) AS fp FROM documents),
+         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w FROM d),
+         corpus AS (SELECT DISTINCT fp FROM d, w WHERE doc_id < w),
+         batch AS (SELECT doc_id, fp FROM d, w WHERE doc_id >= w)
+         SELECT doc_id, fp AS fingerprint,
+           CASE WHEN fp IN (SELECT fp FROM corpus) THEN 'dup_of_corpus'
+                WHEN MIN(doc_id) OVER (PARTITION BY fp) < doc_id THEN 'dup_in_batch'
+                ELSE 'new' END AS status
+         FROM batch
+         ORDER BY doc_id"""),
+    // Near-dup delta classification: the Spark side classifies off
+    // LSH candidates; the oracle off EXACT n-gram Jaccard pairs — at
+    // the fixtures' similarity levels (every exact pair at j >= 0.9)
+    // the two pair sets coincide (same pinning as q_dup_clusters_lsh),
+    // so any banding miss or spurious candidate flips a status/match
+    // and fails the hash.
+    QueryRow("q_delta_neardup", deltaNearDup(_, _))(DeltaNearDupSql),
+    // Batch novelty vs the corpus shingle index (deltaDedup's 80/20
+    // framing; docs under the shingle width have no row on either side)
+    QueryRow("q_ngram_novelty", ngramNovelty)(
+      s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
+               FROM documents),
+         corpus AS (SELECT DISTINCT shingle FROM
+           (SELECT unnest(sh) AS shingle FROM docs, w WHERE doc_id < w)),
+         batch AS (SELECT doc_id, unnest(sh) AS shingle
+                   FROM docs, w WHERE doc_id >= w)
+         SELECT b.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_shingles,
+           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
+           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
+             / CAST(COUNT(*) AS DOUBLE) AS novelty
+         FROM batch b LEFT JOIN corpus c ON b.shingle = c.shingle
+         GROUP BY b.doc_id
+         ORDER BY b.doc_id"""),
+    // the sketch row runs as its verification harness: exact counts +
+    // undercount/error-bound verdict flags the DuckDB oracle pins to 1
+    // (bloom membership bits themselves are engine-specific)
+    // Bloom-sketch verdict row: the oracle recomputes the EXACT
+    // novelty counts; the undercount-only and ≤5%-shortfall flags
+    // (verified in Spark against the sketch's own output) pin to 1
+    QueryRow("q_ngram_novelty_bloom", ngramNoveltyBloomCheck)(
+      s"""WITH docs AS (
+           SELECT doc_id,
+             list_distinct(list_transform(generate_series(1, len(ws) - 2),
+               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
+           FROM (SELECT doc_id, string_split($Norm, ' ') AS ws FROM documents) t
+           WHERE len(ws) >= 3),
+         w AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
+               FROM documents),
+         corpus AS (SELECT DISTINCT shingle FROM
+           (SELECT unnest(sh) AS shingle FROM docs, w WHERE doc_id < w)),
+         batch AS (SELECT doc_id, unnest(sh) AS shingle
+                   FROM docs, w WHERE doc_id >= w)
+         SELECT b.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_shingles,
+           CAST(SUM(CASE WHEN c.shingle IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
+           CAST(1 AS BIGINT) AS bloom_le_exact,
+           CAST(1 AS BIGINT) AS shortfall_within_5pct
+         FROM batch b LEFT JOIN corpus c ON b.shingle = c.shingle
+         GROUP BY b.doc_id
+         ORDER BY b.doc_id"""),
+    // Survivorship: highest-quality doc per near-dup cluster. Clusters
+    // from the exact-edge recursive CTE (== the LSH-fed assignment at
+    // fixture similarity levels), score = the bit-exact cross-engine
+    // composite q_quality_gate pins, winner by ROW_NUMBER with doc_id
+    // tie-break.
+    QueryRow("q_dedup_survivors", keepBest)(
+      s"""$DupClustersCtes,
+         clusters AS (
+           SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+             CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
+           FROM labeled),
+         q AS (
+           SELECT doc_id,
+             (CAST(len(list_distinct(tk)) AS DOUBLE) / CAST(len(tk) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
+             + (CAST(len(list_filter(tk, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+                / CAST(len(tk) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
+             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE) AS quality_score
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS tk FROM documents)),
+         ranked AS (
+           SELECT c.doc_id, c.cluster_id, c.cluster_size, q.quality_score,
+             ROW_NUMBER() OVER (PARTITION BY c.cluster_id
+               ORDER BY q.quality_score DESC, c.doc_id) AS rk
+           FROM clusters c JOIN q ON q.doc_id = c.doc_id)
+         SELECT doc_id, cluster_id, cluster_size, quality_score,
+           rk = 1 AS keep
+         FROM ranked
+         ORDER BY doc_id"""),
+    // Span-level exact dedup: multiple unnests in one DuckDB SELECT
+    // zip positionally, which pairs each word with its index for the
+    // 10-word chunking; (doc_id, pos) packs into one BIGINT exactly as
+    // the Spark side does, so "global first occurrence" is the same
+    // MIN on both engines.
+    QueryRow("q_span_dedup", spanDedup(_, _))(
+      """WITH c AS (
+           SELECT doc_id, i // 10 AS pos,
+             string_agg(word, ' ' ORDER BY i) AS chunk
+           FROM (SELECT doc_id, unnest(ws) AS word,
+                        unnest(range(len(ws))) AS i
+                 FROM (SELECT doc_id, string_split(text, ' ') AS ws
+                       FROM documents) t0
+                 WHERE len(ws) > 0) t
+           GROUP BY doc_id, i // 10),
+         own AS (
+           SELECT chunk, MIN(doc_id * 1000000 + pos) AS first
+           FROM c GROUP BY chunk),
+         j AS (
+           SELECT c.doc_id, c.pos, c.chunk,
+             (c.doc_id * 1000000 + c.pos = o.first) AS keep
+           FROM c JOIN own o USING (chunk))
+         SELECT doc_id,
+           COALESCE(string_agg(chunk, ' ' ORDER BY pos)
+             FILTER (WHERE keep), '') AS clean_text,
+           CAST(COALESCE(SUM(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept,
+           CAST(COALESCE(SUM(CASE WHEN keep THEN 0 ELSE 1 END), 0) AS BIGINT) AS dropped
+         FROM j GROUP BY doc_id ORDER BY doc_id"""),
+    // C4 boilerplate rule: same chunking as q_span_dedup, but the
+    // verdict is a DISTINCT-document frequency floor and removal is
+    // total (first occurrence included) — a drifted df count or an
+    // off-by-one threshold flips kept/dropped rows
+    QueryRow("q_boilerplate", boilerplate(_, _))(
+      s"""WITH c AS (
+           SELECT doc_id, i // 10 AS pos,
+             string_agg(word, ' ' ORDER BY i) AS chunk
+           FROM (SELECT doc_id, unnest(ws) AS word,
+                        unnest(range(len(ws))) AS i
+                 FROM (SELECT doc_id, string_split(text, ' ') AS ws
+                       FROM documents) t0
+                 WHERE len(ws) > 0) t
+           GROUP BY doc_id, i // 10),
+         df AS (
+           SELECT chunk, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+           FROM c GROUP BY chunk),
+         j AS (
+           SELECT c.doc_id, c.pos, c.chunk,
+             (f.df < ${BoilerDocFreq}) AS keep
+           FROM c JOIN df f USING (chunk))
+         SELECT doc_id,
+           COALESCE(string_agg(chunk, ' ' ORDER BY pos)
+             FILTER (WHERE keep), '') AS clean_text,
+           CAST(COALESCE(SUM(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept,
+           CAST(COALESCE(SUM(CASE WHEN keep THEN 0 ELSE 1 END), 0) AS BIGINT) AS dropped
+         FROM j GROUP BY doc_id ORDER BY doc_id"""),
+    // SimHash near-dup pairs, replayed OFF-ENGINE end to end: the
+    // per-token 64 vote bits come from md5 hex halves (h1 = chars 1-8,
+    // h2 = 9-16; token hash = h1<<32 | h2, so bit b<32 reads h2 and
+    // bit 32+b reads h1), votes aggregate per (doc, bit), the
+    // signature is the positive-vote bitstring, and the pair set is
+    // every doc pair at hamming ≤ 3. Banding adds nothing to pin:
+    // 3 differing bits touch ≤ 3 of the 4 16-bit bands, so ≥ 1 band
+    // always collides (the pigeonhole spec) — the emitted set IS the
+    // full hamming ball, banding-independent, hence exactly this SQL
+    QueryRow("q_simhash_pairs", simhashPairs(_, _))(SimhashPairsSql),
+    QueryRow("q_dup_methods", dupMethodAgreement)(DupMethodsSql),
+    // Method-agreement triage: the three pair detectors' replays
+    // (each individually pinned above/below) unioned and flagged —
+    // one definition per leg, so a drifted leg fails BOTH its own
+    // row and this one. The LSH-fed twin carries the SAME oracle
+    // (the q_minhash_lsh argument: at the fixtures' similarity
+    // levels the verified banded pipeline emits exactly the exact
+    // pair set, so a banding miss is a row diff here too).
+    QueryRow("q_dup_methods_lsh", dupMethodAgreementLsh)(DupMethodsSql)
+  )
 }

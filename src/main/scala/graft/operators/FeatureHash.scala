@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 
 /** Feature-hash ("hashing trick") document embeddings — the model-free
   * fallback every curation pipeline keeps for corpora where no neural
@@ -200,4 +200,14 @@ object FeatureHash {
          AND d.dot * d.dot * ${CosDen * CosDen} >=
              na.n2 * nb.n2 * ${CosNum * CosNum}
        ORDER BY d.doc_a, d.doc_b"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Feature-hash embeddings: md5-derived dim/sign, integer values —
+    // the whole representation replays bit-for-bit
+    QueryRow("q_hash_embed", hashEmbed)(hashEmbedOracle),
+    // ... and the near-dup screen over them: same top-two-dim
+    // blocking, same integer square-comparison cosine gate
+    QueryRow("q_hash_embed_neardup", hashEmbedNearDup)(hashEmbedNearDupOracle)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -583,4 +583,20 @@ object Graph {
        FROM l$LpaRounds l JOIN sz USING (label)
        ORDER BY partkey"""
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Fixed-iteration integer PageRank, unrolled to 10 CTE layers
+    QueryRow("q_pagerank", pageRank(_, _))(pageRankOracle()),
+    // Triangle census: pair explosion, weight floor, degree-ordered
+    // orientation, wedge close, and the integer ppm clustering
+    // coefficient all replay verbatim — a wrong orientation tie-break
+    // or a double-counted triangle flips rows
+    QueryRow("q_triangles", triangles)(trianglesOracle),
+    // K-core peel: the same co-occurrence graph, the fixed-round
+    // degree-peel unrolled as CTE layers — a wrong degree count or a
+    // non-fixpoint round count splits the engines
+    QueryRow("q_kcore", kcore(_, _))(kcoreOracle),
+    QueryRow("q_lpa_communities", lpaCommunities(_, _))(lpaOracle)
+  )
 }

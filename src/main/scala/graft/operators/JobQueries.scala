@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import graft.directives._
 import graft.job.DataPumpJob
 import graft.model.{JobState, Operation, JobMode}
@@ -175,4 +175,43 @@ object JobQueries {
         concat(lit("ANON-"), col("c_custkey").cast("string")).as("c_name"),
         col("c_mktsegment"))
       .orderBy(col("c_custkey"))
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // --- job engine end-to-end (SURVEY §2.1, §2.3, §2.4)
+    QueryRow("q_roundtrip", roundtrip)(
+      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate"),
+    QueryRow("q_table_exists_append", appendSemantics)(
+      "SELECT * FROM nation UNION ALL SELECT * FROM nation ORDER BY n_nationkey"),
+    QueryRow("q_table_exists_skip", skipSemantics)("SELECT * FROM nation ORDER BY n_nationkey"),
+    QueryRow("q_estimate_only", estimateOnly)("SELECT COUNT(*) AS n_rows FROM lineitem"),
+    // Snapshot diff: the oracle replays only the two slice predicates
+    // and the key diff — the ledger append, SCN pin resolution, and
+    // per-version import on the Spark side must reproduce exactly
+    // these key sets or the hash fails.
+    QueryRow("q_snapshot_diff", snapshotDiff)(
+      s"""WITH v1 AS (SELECT o_orderkey FROM orders
+           WHERE ${SnapV1Pred}),
+         v2 AS (SELECT o_orderkey FROM orders
+           WHERE ${SnapV2Pred})
+         SELECT COALESCE(a.o_orderkey, b.o_orderkey) AS o_orderkey,
+           CASE WHEN b.o_orderkey IS NULL THEN 'removed'
+                ELSE 'added' END AS change
+         FROM v1 a FULL JOIN v2 b ON a.o_orderkey = b.o_orderkey
+         WHERE a.o_orderkey IS NULL OR b.o_orderkey IS NULL
+         ORDER BY o_orderkey"""),
+    QueryRow("q_remap_data", remapData)(
+      """SELECT c_custkey,
+         'ANON-' || CAST(c_custkey AS VARCHAR) AS c_name, c_mktsegment
+         FROM customer
+         ORDER BY c_custkey"""),
+    // REMAP_SCHEMA: same rows, new identity — the Spark side derives
+    // schema_name from the imported files' physical path, so a remap
+    // that didn't rewrite the namespace hashes as 'main', not
+    // 'archive', and fails here
+    QueryRow("q_remap_schema", remapSchema)(
+      """SELECT 'archive' AS schema_name, r_regionkey, r_name
+         FROM region
+         ORDER BY r_regionkey""")
+  )
 }

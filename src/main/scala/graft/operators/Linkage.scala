@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 
 /** Entity resolution (record linkage): collapse multiple records that
   * describe the same real-world entity into one canonical cluster —
@@ -53,7 +53,7 @@ object Linkage {
 
   /** Max edit distance for two same-block records to be declared the
     * same entity — interpolated into BOTH the Spark gate and the
-    * DuckDB oracle (SparkEntry.EntityResolutionSql) from this one val.
+    * DuckDB oracle ([[EntityResolutionSql]]) from this one val.
     */
   val NameEditMax = 2
 
@@ -264,4 +264,92 @@ object Linkage {
     resolve(recs, matchedPairs(recs, recs, censusOver = Some(recs),
       cap = SkewCap))
   }
+
+  /** Record-linkage replay: the same seeded records (dirty twins,
+    * reversed-name decoys), the same blocking key, the same
+    * levenshtein gate (threshold interpolated from [[NameEditMax]]),
+    * and the same recursive-CTE transitive closure as
+    * [[Dedup.DupClustersCtes]] — an LSH-style blocking miss, a gate
+    * off-by-one, or a CC mislabel all flip the hash. */
+  private[graft] lazy val EntityResolutionSql: String =
+    entityResolutionSqlOver(
+      s"""SELECT c_custkey AS k, c_name AS name,
+           CAST(c_nationkey AS BIGINT) AS nat,
+           CAST(floor(c_acctbal) AS BIGINT) AS bal
+         FROM customer""", cap = 0)
+
+  /** The skew twin: 10% of customers collapse onto the placeholder
+    * blocking key and the purge cap is armed — census + purge replayed
+    * in SQL (blocks strictly over [[SkewCap]] records leave
+    * matching; their members resolve as singletons). */
+  private lazy val EntityResolutionSkewSql: String =
+    entityResolutionSqlOver(
+      s"""SELECT c_custkey AS k, c_name AS name,
+           CASE WHEN c_custkey % ${SkewMod} = 0
+             THEN ${SkewNat}
+             ELSE CAST(c_nationkey AS BIGINT) END AS nat,
+           CASE WHEN c_custkey % ${SkewMod} = 0
+             THEN ${SkewBal}
+             ELSE CAST(floor(c_acctbal) AS BIGINT) END AS bal
+         FROM customer""", cap = SkewCap)
+
+  private def entityResolutionSqlOver(cSelect: String, cap: Int): String = {
+    // cap = 0 replays the unguarded form (m = recs verbatim); cap > 0
+    // replays the Hernández/Stolfo purge: a block census over the full
+    // record set, blocks above the cap excluded from matching entirely
+    val matchable =
+      if (cap <= 0) "SELECT * FROM recs"
+      else s"""SELECT r.* FROM recs r
+               JOIN blocks b ON r.nat = b.nat AND r.bal = b.bal
+               WHERE b.block_n <= $cap"""
+    s"""WITH RECURSIVE c AS ($cSelect),
+         recs AS (
+           SELECT k AS entity_id, name, nat, bal, 'orig' AS kind FROM c
+           UNION ALL
+           SELECT k + ${DirtyOffset},
+             ${DirtyNameSql}, nat, bal, 'dirty'
+           FROM c WHERE k % ${DirtyMod} = 0
+           UNION ALL
+           SELECT k + ${DecoyOffset},
+             ${DecoyNameSql}, nat, bal, 'decoy'
+           FROM c WHERE k % ${DecoyMod} = 0),
+         blocks AS (SELECT nat, bal, COUNT(*) AS block_n
+                    FROM recs GROUP BY 1, 2),
+         m AS ($matchable),
+         p AS (
+           SELECT a.entity_id AS ea, b.entity_id AS eb
+           FROM m a JOIN m b
+             ON a.nat = b.nat AND a.bal = b.bal AND a.entity_id < b.entity_id
+           WHERE levenshtein(a.name, b.name) <= ${NameEditMax}),
+         e AS (SELECT ea AS a, eb AS b FROM p UNION SELECT eb, ea FROM p),
+         reach(a, b) AS (
+           SELECT a, b FROM e
+           UNION
+           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+         lab AS (SELECT a AS entity_id, LEAST(a, MIN(b)) AS cluster_id
+                 FROM reach GROUP BY a),
+         labeled AS (SELECT r.entity_id, r.kind,
+                       COALESCE(l.cluster_id, r.entity_id) AS cluster_id
+                     FROM recs r LEFT JOIN lab l USING (entity_id))
+         SELECT CAST(entity_id AS BIGINT) AS entity_id, kind,
+           CAST(cluster_id AS BIGINT) AS cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+             AS cluster_size
+         FROM labeled
+         ORDER BY entity_id"""
+  }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Entity resolution: blocking + edit-distance gate + transitive
+    // closure, replayed end to end (seeded dirty/decoy records
+    // included) — see EntityResolutionSql's doc for what a mismatch
+    // catches.
+    QueryRow("q_entity_resolution", entityResolution(_, _))(EntityResolutionSql),
+    // Degenerate-block skew + armed purge cap: the census and the
+    // over-cap exclusion replay in SQL, so a guard that purges the
+    // wrong blocks (or silently drops records instead of edges)
+    // flips rows, not just timings.
+    QueryRow("q_entity_resolution_skew", entityResolutionSkew)(EntityResolutionSkewSql)
+  )
 }

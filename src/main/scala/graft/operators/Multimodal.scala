@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -823,4 +823,144 @@ object Multimodal {
          CAST(SUM(energy) AS BIGINT) AS total_energy
        FROM act GROUP BY doc_id, island
        ORDER BY doc_id, start_window"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // --- multimodal binary plumbing
+    // documents.text is pure ASCII, so DuckDB's VARCHAR md5/substring
+    // operate on the same bytes Spark's binary md5/substr see.
+    QueryRow("q_binary_meta", binaryMeta)(
+      """SELECT doc_id,
+         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+         md5(text) AS digest,
+         substring(text, 1, 4) AS magic
+         FROM documents
+         ORDER BY doc_id"""),
+    // REAL-DECODE twin: Spark PNG-encodes a deterministic gray image
+    // per doc (gray(x,y) = (doc_id*31 + x*7 + y*13) % 256, w=8+id%8,
+    // h=8+id%5) and decodes it back with javax.imageio; the oracle
+    // recomputes the 16-bin gray histogram straight from the pixel
+    // formula — a codec round-trip that corrupts any pixel, dimension,
+    // or bin breaks the hash.
+    QueryRow("q_decode_features", decodeFeatures)(
+      """WITH px AS (
+           SELECT d.doc_id,
+                  ((d.doc_id * 31 + x.x * 7 + y.y * 13) % 256) // 16 AS b
+           FROM documents d,
+                LATERAL (SELECT unnest(generate_series(0,
+                  CAST(7 + d.doc_id % 8 AS BIGINT))) AS x) x,
+                LATERAL (SELECT unnest(generate_series(0,
+                  CAST(7 + d.doc_id % 5 AS BIGINT))) AS y) y
+         )
+         SELECT d.doc_id AS doc_id,
+           CAST(8 + d.doc_id % 8 AS INTEGER) AS width,
+           CAST(8 + d.doc_id % 5 AS INTEGER) AS height,
+           CAST(g.b AS BIGINT) AS bin_idx,
+           CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_in_bin
+         FROM documents d
+         CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS b) g
+         LEFT JOIN (SELECT doc_id, b, COUNT(*) AS n
+                    FROM px GROUP BY doc_id, b) cnt
+           ON cnt.doc_id = d.doc_id AND cnt.b = g.b
+         ORDER BY d.doc_id, bin_idx"""),
+    // Audio features recomputed from the closed-form triangle wave —
+    // the Spark side derives them from REAL WAV bytes decoded by
+    // javax.sound, so equality here pins the synthesize → RIFF encode
+    // → container parse → PCM16LE decode → windowed-feature loop
+    // end-to-end (triangle, not sine: pure integer arithmetic, no
+    // engine-varying libm).
+    QueryRow("q_audio_features", audioFeatures(_, _))(
+      """WITH d AS (
+           SELECT doc_id,
+             512 + (doc_id % 7) * 64 AS n,
+             16 + (doc_id % 32) AS p,
+             8192 + (doc_id % 4) * 4096 AS a
+           FROM documents),
+         s AS (
+           SELECT doc_id, i,
+             a - (2 * a * abs(2 * (i % p) - p)) // p AS smp,
+             i // 128 AS w
+           FROM d,
+                LATERAL (SELECT unnest(generate_series(0, n - 1)) AS i) g),
+         sl AS (
+           SELECT doc_id, w, i, smp,
+             lag(smp) OVER (PARTITION BY doc_id ORDER BY i) AS prev
+           FROM s)
+         SELECT doc_id, CAST(w AS BIGINT) AS window_idx,
+           CAST(COUNT(*) AS BIGINT) AS n_samples,
+           CAST(SUM(smp * smp) AS BIGINT) AS energy,
+           CAST(SUM(CASE WHEN i % 128 <> 0 AND prev * smp < 0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
+           CAST(MAX(abs(smp)) AS BIGINT) AS peak
+         FROM sl GROUP BY doc_id, w
+         ORDER BY doc_id, window_idx"""),
+    // Resize = exact integer area-pooling of the decoded histogram
+    // (16 bins → 4, i.e. pool = gray // 64) with halved dimensions.
+    QueryRow("q_resize_pool", resizePool(_, _))(
+      """WITH px AS (
+           SELECT d.doc_id,
+                  ((d.doc_id * 31 + x.x * 7 + y.y * 13) % 256) // 64 AS p
+           FROM documents d,
+                LATERAL (SELECT unnest(generate_series(0,
+                  CAST(7 + d.doc_id % 8 AS BIGINT))) AS x) x,
+                LATERAL (SELECT unnest(generate_series(0,
+                  CAST(7 + d.doc_id % 5 AS BIGINT))) AS y) y
+         )
+         SELECT d.doc_id AS doc_id,
+           CAST((8 + d.doc_id % 8) // 2 AS INTEGER) AS out_width,
+           CAST((8 + d.doc_id % 5) // 2 AS INTEGER) AS out_height,
+           CAST(g.p AS BIGINT) AS pool_idx,
+           CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_pooled
+         FROM documents d
+         CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS p) g
+         LEFT JOIN (SELECT doc_id, p, COUNT(*) AS n
+                    FROM px GROUP BY doc_id, p) cnt
+           ON cnt.doc_id = d.doc_id AND cnt.p = g.p
+         ORDER BY d.doc_id, pool_idx"""),
+    // Perceptual dHash (56-bit, 7×8 gradient grid) recomputed from the
+    // closed-form pixel formula — the Spark side hashes the REAL
+    // decoded raster, so equality here pins the whole decode path.
+    QueryRow("q_image_phash", imagePhash)(
+      """WITH geo AS (
+           SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
+           FROM documents),
+         bits AS (
+           SELECT g.doc_id,
+             SUM(CASE WHEN
+                 ((g.doc_id * 31 + 7 * (((i.i + 1) * g.w) // 8)
+                   + 13 * ((j.j * g.h) // 8)) % 256)
+               > ((g.doc_id * 31 + 7 * ((i.i * g.w) // 8)
+                   + 13 * ((j.j * g.h) // 8)) % 256)
+               THEN (CAST(1 AS BIGINT) << (j.j * 7 + i.i)) ELSE 0 END)
+               AS phash
+           FROM geo g,
+                (SELECT unnest(generate_series(0, 6)) AS i) i,
+                (SELECT unnest(generate_series(0, 7)) AS j) j
+           GROUP BY g.doc_id),
+         grp AS (
+           SELECT phash, MIN(doc_id) AS group_id, COUNT(*) AS group_size
+           FROM bits GROUP BY phash)
+         SELECT b.doc_id, CAST(b.phash AS BIGINT) AS phash,
+           CAST(g.group_id AS BIGINT) AS group_id,
+           CAST(g.group_size AS BIGINT) AS group_size
+         FROM bits b JOIN grp g USING (phash)
+         ORDER BY b.doc_id"""),
+    QueryRow("q_frame_sample", frameSample(_, _))(
+      """SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
+         md5(substring(text, CAST(i AS INT) * 64 + 1, 64)) AS frame_digest
+         FROM (SELECT doc_id, text,
+                 octet_length(encode(text)) AS nb FROM documents
+               WHERE octet_length(encode(text)) > 0) t,
+              LATERAL (SELECT unnest(generate_series(0,
+                CAST(floor((nb - 1) / 64) AS BIGINT))) AS i) g
+         ORDER BY doc_id, frame_idx"""),
+    // Scene cuts: integer mean-byte frame features, lag deltas, the
+    // threshold verdict, and the running scene index all replay —
+    // a drifted window boundary or a biased tail frame flips rows
+    QueryRow("q_scene_cuts", sceneCuts)(sceneCutsOracle),
+    QueryRow("q_scene_cuts_decoded", sceneCutsDecoded)(sceneCutsDecodedOracle),
+    QueryRow("q_keyframes", keyframes)(keyframesOracle),
+    QueryRow("q_video_neardup", videoNearDup)(videoNearDupOracle),
+    QueryRow("q_audio_vad", audioVad)(audioVadOracle)
+  )
 }

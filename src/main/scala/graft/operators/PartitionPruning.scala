@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.QueryRow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -72,4 +73,20 @@ object PartitionPruning {
           .as("sum_value"))
       .orderBy(col("event_type"))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Dynamic partition pruning: values must equal the plain WHERE
+    // filter (this oracle); the ACCESS-PATH claim — a dynamicpruning
+    // subquery on the fact scan reading 7 of 30 date partitions — is
+    // asserted from the executed plan + scan metrics in DppSpec.
+    QueryRow("q_dpp_join", dppWeekStats)(
+      """SELECT event_type, COUNT(*) AS n,
+         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events
+         WHERE CAST(ts AS DATE) <
+           (SELECT MIN(CAST(ts AS DATE)) FROM events) + 7
+         GROUP BY event_type
+         ORDER BY event_type""")
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,4 +94,20 @@ object RangeJoin {
         coalesce(col("n"), lit(0L)).cast("long").as("n_shipped"))
       .orderBy(col("o_orderkey"))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Keyless range join: the oracle states the predicate directly
+    // (DuckDB plans inequality joins natively via IEJoin); the Spark
+    // side must reach the same pair set through the bucketed
+    // equality-join rewrite
+    QueryRow("q_interval_join", intervalJoin(_, _))(
+      """SELECT o_orderkey, o_orderpriority,
+         CAST(count(l.l_shipdate) AS BIGINT) AS n_shipped
+         FROM orders o LEFT JOIN lineitem l
+           ON l.l_shipdate >= o.o_orderdate
+          AND l.l_shipdate < o.o_orderdate + INTERVAL 7 DAY
+         GROUP BY o_orderkey, o_orderpriority
+         ORDER BY o_orderkey""")
+  )
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.DuckSql.{d2Sql, floorDivSql, dlit}
+import graft.{QueryRow, Tables}
 import graft.functions.ArrayOps.dot_long
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1963,4 +1964,854 @@ object Similarity {
       .select(col("query_id"), col("best.neighbor_id").as("neighbor_id"))
       .orderBy(col("query_id"))
   }
+
+  /** One unrolled Lloyd iteration over full vectors — assignment
+    * (argmin, ties on cell) + floor-division centroid update (emptied
+    * cells keep their previous centroid). Mirrors kmeansCentroidsQ
+    * statement for statement; the engine's trainer seeds from
+    * MD5-of-id order precisely so this replay is possible in any
+    * engine with md5(). */
+  private def lloydIterSql(i: Int, dim: Int): String =
+    s"""a$i AS (
+           SELECT vec_id, iv, cell FROM (
+             SELECT q.vec_id, q.iv, c.cell,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+                 ${d2Sql("q.iv", "c.c", dim)},
+                 c.cell) AS rn
+             FROM qv q, c$i c) t
+           WHERE rn = 1),
+         u$i AS (
+           SELECT cell, list(${floorDivSql("s", "n")} ORDER BY pos) AS c FROM (
+             SELECT cell, p.j AS pos, SUM(iv[p.j]) AS s, COUNT(*) AS n
+             FROM a$i, (SELECT unnest(generate_series(1, $dim)) AS j) p
+             GROUP BY 1, 2) t
+           GROUP BY cell),
+         c${i + 1} AS (
+           SELECT pr.cell, COALESCE(u.c, pr.c) AS c
+           FROM c$i pr LEFT JOIN u$i u ON pr.cell = u.cell)"""
+
+  /** One unrolled per-subspace Lloyd iteration (the PQ trainer): same
+    * contract as [[lloydIterSql]] with every stage keyed by subspace
+    * `m` — all 8 subspaces train in the same pass, like the engine. */
+  private def pqIterSql(i: Int, subDim: Int): String =
+    s"""pa$i AS (
+           SELECT vec_id, m, sub, cell FROM (
+             SELECT s.vec_id, s.m, s.sub, b.cell,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
+                 ${d2Sql("s.sub", "b.c", subDim)},
+                 b.cell) AS rn
+             FROM sv s JOIN b$i b ON s.m = b.m) t
+           WHERE rn = 1),
+         pu$i AS (
+           SELECT m, cell, list(${floorDivSql("s", "n")} ORDER BY pos) AS c FROM (
+             SELECT m, cell, p.j AS pos, SUM(sub[p.j]) AS s, COUNT(*) AS n
+             FROM pa$i, (SELECT unnest(generate_series(1, $subDim)) AS j) p
+             GROUP BY 1, 2, 3) t
+           GROUP BY m, cell),
+         b${i + 1} AS (
+           SELECT pr.m, pr.cell, COALESCE(u.c, pr.c) AS c
+           FROM b$i pr LEFT JOIN pu$i u ON pr.m = u.m AND pr.cell = u.cell)"""
+
+  /** The replayed IVF candidate chain — quantize, seed from
+    * MD5-of-id order, unroll KmeansIters Lloyd iterations
+    * ([[lloydIterSql]]), index each vector in its argmin cell, probe
+    * the NProbe nearest cells, and score candidates on cell equality
+    * with the shared exact quantized cosine. Ends at CTE `cand`
+    * (query_id, neighbor_id, cosine) — shared prefix of q_ann_ivf,
+    * q_label_knn_ivf and q_triplets_ivf, so the three consumers of
+    * the engine's ivfCandidatePairs replay ONE oracle candidate
+    * definition (they cannot desynchronize). */
+  private lazy val IvfCandCtes: String =
+    s"""WITH qv AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         seeds AS (
+           SELECT vec_id, iv FROM qv
+           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+           LIMIT ${IvfCells}),
+         c0 AS (
+           SELECT ROW_NUMBER() OVER (
+               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
+             iv AS c
+           FROM seeds),
+         ${(0 until KmeansIters)
+             .map(i => lloydIterSql(i, Dim))
+             .mkString(",\n         ")},
+         rank_cells AS (
+           SELECT q.vec_id, q.iv, c.cell,
+             ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+               ${d2Sql("q.iv", "c.c", Dim)},
+               c.cell) AS rn
+           FROM qv q, c${KmeansIters} c),
+         indexed AS (SELECT vec_id, iv, cell FROM rank_cells WHERE rn = 1),
+         probes AS (SELECT vec_id, iv, cell FROM rank_cells
+           WHERE rn <= ${NProbe}),
+         cand AS (
+           SELECT pr.vec_id AS query_id, ix.vec_id AS neighbor_id,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(pr.iv)),
+               i -> pr.iv[i] * ix.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(pr.iv)),
+                 i -> pr.iv[i] * pr.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(ix.iv)),
+                 i -> ix.iv[i] * ix.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM probes pr JOIN indexed ix
+             ON pr.cell = ix.cell AND pr.vec_id <> ix.vec_id)"""
+
+  // the engine-side constants as oracle SQL literals
+  private lazy val QLit = dlit(Q)
+  private[graft] lazy val ProtoQLit = dlit(ProtoQ)
+  private lazy val MmrLambdaLit = dlit(MmrLambda)
+
+  private lazy val AnnIvfSql: String =
+    s"""$IvfCandCtes
+         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY cosine DESC, neighbor_id) AS rk FROM cand)
+         WHERE rk <= 3 ORDER BY query_id, rk"""
+
+  /** Exact-edge semantic-clustering oracle (recursive CTE transitive
+    * closure over the 0.35-cosine pair set on the 2²⁶ quantized grid)
+    * — shared by q_semantic_clusters and q_semantic_clusters_lsh,
+    * whose Spark sides differ only in the candidate edge derivation. */
+  private[graft] lazy val SemanticClustersCtes: String =
+    """WITH RECURSIVE
+         q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         n AS (
+           SELECT vec_id, iv,
+             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
+               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm,
+             CAST(list_sum(list_transform(generate_series(1, len(iv)),
+               i -> iv[i] * iv[i])) AS BIGINT) AS n2
+           FROM q),
+         jp AS (
+           SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+           FROM n a, n b
+           WHERE a.vec_id < b.vec_id
+             AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+               / (a.nrm * b.nrm) >= 0.35),
+         e AS (SELECT doc_a AS a, doc_b AS b FROM jp
+               UNION SELECT doc_b, doc_a FROM jp),
+         reach(a, b) AS (
+           SELECT a, b FROM e
+           UNION
+           SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+         lab AS (SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
+                 FROM reach GROUP BY a),
+         labeled AS (SELECT v.vec_id,
+                       COALESCE(l.cluster_id, v.vec_id) AS cluster_id,
+                       v.n2
+                     FROM n v LEFT JOIN lab l USING (vec_id))"""
+
+  private lazy val SemanticClustersSql: String =
+    s"""$SemanticClustersCtes
+         SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
+         FROM labeled
+         ORDER BY vec_id"""
+
+  /** The closure plus the norm²-argmax survivor rule (ties to the
+    * smaller vec_id) the Spark side computes as a partial-aggregable
+    * max(struct(n2, -vec_id)) — shared by q_semdedup and
+    * q_semdedup_lsh. */
+  private lazy val SemDedupSql: String =
+    s"""$SemanticClustersCtes
+         SELECT vec_id, cluster_id, survivor_id,
+           CAST(vec_id = survivor_id AS BIGINT) AS keep
+         FROM (
+           SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+             CAST(FIRST_VALUE(vec_id) OVER (PARTITION BY cluster_id
+               ORDER BY n2 DESC, vec_id) AS BIGINT) AS survivor_id
+           FROM labeled) t
+         ORDER BY vec_id"""
+
+  /** The closure plus the quality-argmax curation rule (rank by the
+    * q_quality composite desc, ties to the smaller vec_id) — shared by
+    * q_cluster_balance and q_cluster_balance_lsh, whose Spark sides
+    * differ only in the candidate edge derivation (one shared
+    * clusterBalancedFrom code path engine-side). */
+  private lazy val ClusterBalanceSql: String =
+    s"""$SemanticClustersCtes,
+         qual AS (
+           SELECT doc_id AS vec_id,
+             ${Text.QualityScoreSql} AS quality_score
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)),
+         cl AS (
+           SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+             CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
+           FROM labeled)
+         SELECT vec_id, cluster_id, cluster_size, quality_score,
+           CAST(qrank AS BIGINT) AS qrank,
+           CAST(qrank <= 1 AS BIGINT) AS keep
+         FROM (SELECT vec_id, cluster_id, cluster_size, quality_score,
+                 ROW_NUMBER() OVER (PARTITION BY cluster_id
+                   ORDER BY quality_score DESC, vec_id) AS qrank
+               FROM cl JOIN qual USING (vec_id))
+         ORDER BY vec_id"""
+
+  /** The planted ground truth (every vector's id+1e6 twin) — the
+    * one oracle of all ten planted-recall rows. */
+  private val PlantedRecallSql: String =
+    """SELECT CAST(vec_id AS BIGINT) AS query_id,
+         CAST(vec_id + 1000000 AS BIGINT) AS neighbor_id
+         FROM embeddings ORDER BY query_id"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Semantic clustering: recursive-CTE transitive closure over the
+    // exact cosine pair set (same closure construction as
+    // q_dup_clusters, edges from the q_cosine_pairs kernel at 0.35)
+    QueryRow("q_semantic_clusters", semanticClusters(_, _))(SemanticClustersSql),
+    // The cell-fed clustering runs off k-means-cell candidate edges;
+    // at the fixtures' geometry the candidate set equals the exact
+    // pair set (every 0.35-cosine pair has an endpoint probing the
+    // other's home cell — SimilaritySpec pins edge-for-edge
+    // equality), so the SAME exact-edge recursive-CTE oracle pins the
+    // assignment — a cell miss or spurious candidate flips a cluster
+    // id and fails the hash.
+    QueryRow("q_semantic_clusters_lsh", semanticClustersLsh(_, _))(SemanticClustersSql),
+    // SemDeDup: the same transitive closure, plus the norm²-argmax
+    // survivor rule (ties to the smaller vec_id) the Spark side
+    // computes as a partial-aggregable max(struct(n2, -vec_id)).
+    QueryRow("q_semdedup", semDedup(_, _))(SemDedupSql),
+    // Cell-fed SemDeDup: same candidate-completeness pinning as
+    // q_semantic_clusters_lsh; survivor rule is one shared code path
+    // with the exact twin.
+    QueryRow("q_semdedup_lsh", semDedupLsh(_, _))(SemDedupSql),
+    QueryRow("q_label_centroids", labelCentroids)(
+      """SELECT label, pos, n_vecs,
+         CAST(q_sum AS DOUBLE) / (CAST(n_vecs AS DOUBLE) * 67108864.0) AS centroid
+         FROM (
+           SELECT CAST(label AS BIGINT) AS label, CAST(i - 1 AS BIGINT) AS pos,
+             CAST(COUNT(*) AS BIGINT) AS n_vecs,
+             CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT)) AS BIGINT) AS q_sum
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g
+           GROUP BY 1, 2)
+         ORDER BY label, pos"""),
+    // Prototypicality (Sorscher et al. data-pruning metric): cosine of
+    // every vector against its class's raw SUM vector (cosine is
+    // scale-invariant) on the 2^13 integer grid — every aggregate is
+    // an exact BIGINT, the one double division is IEEE-identical.
+    QueryRow("q_prototypicality", prototypicality)(
+      s"""WITH q AS (
+           SELECT vec_id, CAST(label AS BIGINT) AS label,
+             CAST(i - 1 AS BIGINT) AS pos,
+             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
+         cent AS (SELECT label, pos, CAST(SUM(q) AS BIGINT) AS q_sum
+                  FROM q GROUP BY 1, 2),
+         cnorm AS (SELECT label,
+                     sqrt(CAST(CAST(SUM(q_sum * q_sum) AS BIGINT) AS DOUBLE))
+                       AS c_norm
+                   FROM cent GROUP BY 1),
+         dots AS (SELECT vec_id, q.label,
+                    CAST(SUM(q * q_sum) AS BIGINT) AS dot_qc,
+                    CAST(SUM(q * q) AS BIGINT) AS v_sq
+                  FROM q JOIN cent USING (label, pos) GROUP BY 1, 2)
+         SELECT vec_id, label, proto_cos,
+           CAST(ROW_NUMBER() OVER (PARTITION BY label
+             ORDER BY proto_cos DESC, vec_id) AS BIGINT) AS proto_rank
+         FROM (SELECT vec_id, dots.label,
+                 CAST(dot_qc AS DOUBLE)
+                   / (sqrt(CAST(v_sq AS DOUBLE)) * c_norm) AS proto_cos
+               FROM dots JOIN cnorm USING (label)
+               WHERE v_sq > 0 AND c_norm > 0)
+         ORDER BY vec_id"""),
+    // MMR diversified selection: the greedy argmax chain replays as a
+    // recursive CTE — relevance on the 2^13 grid, pairwise cosines on
+    // the 2^26 grid (both exact-long), the mixing weight interpolated
+    // from MmrLambda and written as CAST(λ AS DOUBLE) over
+    // DOUBLE casts so both engines compute IDENTICAL doubles (DuckDB
+    // parses a bare 0.7 as DECIMAL, making 1.0 - 0.7 exactly 0.3 —
+    // one ulp away from the 0.30000000000000004 the engine's double
+    // arithmetic produces). k and c interpolate from MmrK/MmrC.
+    QueryRow("q_mmr_select", mmrSelect(_, _))(
+      s"""WITH RECURSIVE
+         q13 AS (
+           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
+             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
+         qsum AS (SELECT pos, CAST(SUM(q) AS BIGINT) AS q_sum
+                  FROM q13 GROUP BY 1),
+         qn AS (SELECT sqrt(CAST(CAST(SUM(q_sum * q_sum) AS BIGINT) AS DOUBLE))
+                  AS q_norm FROM qsum),
+         relt AS (
+           SELECT vec_id,
+             CAST(CAST(SUM(q * q_sum) AS BIGINT) AS DOUBLE)
+               / (sqrt(CAST(CAST(SUM(q * q) AS BIGINT) AS DOUBLE)) * q_norm)
+               AS rel
+           FROM q13 JOIN qsum USING (pos) CROSS JOIN qn
+           GROUP BY vec_id, q_norm
+           HAVING CAST(SUM(q * q) AS BIGINT) > 0),
+         short AS (SELECT vec_id, rel FROM relt
+                   ORDER BY rel DESC, vec_id
+                   LIMIT ${MmrC}),
+         iv AS (SELECT vec_id, list_transform(embedding,
+                  x -> CAST(floor(CAST(x AS DOUBLE) * $QLit) AS BIGINT)) AS iv
+                FROM embeddings
+                WHERE vec_id IN (SELECT vec_id FROM short)),
+         sim AS (
+           SELECT a.vec_id AS va, b.vec_id AS vb,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
+                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cos
+           FROM iv a, iv b WHERE a.vec_id <> b.vec_id),
+         sel(step, ids) AS (
+           SELECT CAST(1 AS BIGINT),
+             [(SELECT vec_id FROM short ORDER BY rel DESC, vec_id LIMIT 1)]
+           UNION ALL
+           SELECT step + 1, list_append(ids, (
+               SELECT s.vec_id FROM short s
+               WHERE NOT list_contains(ids, s.vec_id)
+               ORDER BY CAST($MmrLambdaLit AS DOUBLE) * s.rel
+                   - (CAST(1.0 AS DOUBLE) - CAST($MmrLambdaLit AS DOUBLE)) * (
+                   SELECT MAX(m.cos) FROM sim m
+                   WHERE m.va = s.vec_id AND list_contains(ids, m.vb)) DESC,
+                 s.vec_id
+               LIMIT 1))
+           FROM sel WHERE step < ${MmrK}
+             AND EXISTS (SELECT 1 FROM short s
+                         WHERE NOT list_contains(ids, s.vec_id))),
+         fin AS (SELECT ids FROM sel ORDER BY step DESC LIMIT 1),
+         st AS (SELECT CAST(i AS BIGINT) AS step, ids[i] AS vec_id,
+                  list_slice(ids, 1, i - 1) AS prev
+                FROM fin,
+                     LATERAL (SELECT unnest(generate_series(1, len(ids))) AS i) g),
+         ms AS (SELECT st.step, st.vec_id,
+                  COALESCE((SELECT MAX(m.cos) FROM sim m
+                    WHERE m.va = st.vec_id
+                      AND list_contains(st.prev, m.vb)), 0.0) AS max_sim
+                FROM st)
+         SELECT ms.step, ms.vec_id, r.rel, ms.max_sim,
+           CAST($MmrLambdaLit AS DOUBLE) * r.rel
+             - (CAST(1.0 AS DOUBLE) - CAST($MmrLambdaLit AS DOUBLE))
+               * ms.max_sim AS mmr
+         FROM ms JOIN relt r USING (vec_id)
+         ORDER BY ms.step"""),
+    // Embedding-space diagnostics: per-dimension integer moments
+    // (n·Σ-form variance/covariance on the 2^13 grid) plus each
+    // dimension's most-|corr| partner — every aggregate an exact
+    // BIGINT, the one double division IEEE-identical.
+    QueryRow("q_embed_diag", embedDiagnostics)(
+      s"""WITH q AS (
+           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
+             CAST(floor(CAST(embedding[i] AS DOUBLE) * $ProtoQLit) AS BIGINT) AS q
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
+         dims AS (SELECT pos, CAST(COUNT(*) AS BIGINT) AS n,
+                    CAST(SUM(q) AS BIGINT) AS s,
+                    CAST(SUM(q * q) AS BIGINT) AS ss
+                  FROM q GROUP BY 1),
+         co AS (SELECT a.pos AS pos, b.pos AS pos_b,
+                  CAST(SUM(a.q * b.q) AS BIGINT) AS sxy
+                FROM q a JOIN q b
+                  ON a.vec_id = b.vec_id AND a.pos < b.pos
+                GROUP BY 1, 2),
+         sc AS (SELECT co.pos, co.pos_b,
+                  CAST(dx.n * sxy - dx.s * dy.s AS BIGINT) AS cov_num,
+                  CAST(dx.n * dx.ss - dx.s * dx.s AS BIGINT) AS var_x,
+                  CAST(dx.n * dy.ss - dy.s * dy.s AS BIGINT) AS var_y
+                FROM co JOIN dims dx ON dx.pos = co.pos
+                  JOIN dims dy ON dy.pos = co.pos_b),
+         sym AS (SELECT pos, pos_b, cov_num, var_x, var_y FROM sc
+                 UNION ALL
+                 SELECT pos_b, pos, cov_num, var_y, var_x FROM sc),
+         corr AS (SELECT pos, pos_b,
+                    CAST(cov_num AS DOUBLE)
+                      / (sqrt(CAST(var_x AS DOUBLE))
+                         * sqrt(CAST(var_y AS DOUBLE))) AS corr
+                  FROM sym),
+         best AS (SELECT pos, pos_b AS top_corr_dim, corr AS top_corr
+                  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY pos
+                          ORDER BY abs(corr) DESC, pos_b) AS rk FROM corr)
+                  WHERE rk = 1)
+         SELECT d.pos, d.n, d.s AS q_sum,
+           CAST(d.n * d.ss - d.s * d.s AS BIGINT) AS var_num,
+           b.top_corr_dim, b.top_corr
+         FROM dims d JOIN best b USING (pos)
+         ORDER BY d.pos"""),
+    // Cluster-balanced curation: the SAME transitive-closure cluster
+    // oracle as q_semantic_clusters, with the survivor picked by the
+    // q_quality composite instead of norm² — rank and keep flag replay
+    // through one window.
+    QueryRow("q_cluster_balance", clusterBalancedCurate(_, _))(ClusterBalanceSql),
+    // Cell-fed curation: same candidate-completeness pinning as
+    // q_semantic_clusters_lsh (SimilaritySpec asserts cellPairs ==
+    // exact edge set edge-for-edge); quality/rank/keep is one shared
+    // clusterBalancedFrom code path with the exact twin.
+    QueryRow("q_cluster_balance_lsh", clusterBalancedCurateLsh(_, _))(ClusterBalanceSql),
+    // --- similarity search
+    // Embedding numerics: floats quantized by floor(x * 2^26) (exact in
+    // every engine), then exact BIGINT dot products — see Q.
+    QueryRow("q_embed_norms", norms)(
+      """SELECT vec_id, CAST(label AS BIGINT) AS label,
+         CAST(len(embedding) AS BIGINT) AS dim,
+         CAST(list_sum(list_transform(generate_series(1, len(embedding)),
+           i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT)
+              * CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT))) AS BIGINT) AS norm_sq
+         FROM embeddings
+         ORDER BY vec_id"""),
+    QueryRow("q_knn_brute", knnBruteForce(_, _))(
+      """WITH q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         p AS (
+           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
+                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM q a, q b WHERE a.vec_id <> b.vec_id)
+         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
+         WHERE rk <= 5 ORDER BY query_id, rk"""),
+    // Leave-one-out kNN classification over the same exact-integer
+    // cosine: majority of the top-5 neighbor labels, ties broken
+    // (count desc, label asc)
+    QueryRow("q_label_knn", labelKnn(_, _))(
+      """WITH q AS (
+           SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         p AS (
+           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+             b.label AS n_label,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
+                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM q a, q b WHERE a.vec_id <> b.vec_id),
+         knn AS (
+           SELECT query_id, n_label
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
+           WHERE rk <= 5),
+         votes AS (
+           SELECT query_id, n_label, COUNT(*) AS n_votes
+           FROM knn GROUP BY 1, 2),
+         pred AS (
+           SELECT query_id AS vec_id, n_label AS pred_label
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY n_votes DESC, n_label) AS vrk FROM votes)
+           WHERE vrk = 1)
+         SELECT q.vec_id, q.label, pred.pred_label,
+           CAST(q.label = pred.pred_label AS BIGINT) AS correct
+         FROM pred JOIN q ON q.vec_id = pred.vec_id
+         ORDER BY q.vec_id"""),
+    // IVF-served leave-one-out kNN classification: the SAME replayed
+    // candidate chain as q_ann_ivf, topped at 5 and majority-voted
+    // (count desc, label asc) — value-exact against the engine's
+    // labelKnnIvf, which shares its vote code path with the exact
+    // q_label_knn. Queries whose probed cells hold no other vector
+    // drop on both sides.
+    QueryRow("q_label_knn_ivf", labelKnnIvf(_, _))(
+      s"""$IvfCandCtes,
+         knn AS (
+           SELECT query_id, neighbor_id
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY cosine DESC, neighbor_id) AS rk FROM cand)
+           WHERE rk <= 5),
+         lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label
+                 FROM embeddings),
+         votes AS (
+           SELECT k.query_id, l.label AS n_label, COUNT(*) AS n_votes
+           FROM knn k JOIN lab l ON l.vec_id = k.neighbor_id
+           GROUP BY 1, 2),
+         pred AS (
+           SELECT query_id AS vec_id, n_label AS pred_label
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY n_votes DESC, n_label) AS vrk FROM votes)
+           WHERE vrk = 1)
+         SELECT p.vec_id, l.label, p.pred_label,
+           CAST(l.label = p.pred_label AS BIGINT) AS correct
+         FROM pred p JOIN lab l ON l.vec_id = p.vec_id
+         ORDER BY p.vec_id"""),
+    // Inverse-frequency class weights (the sklearn "balanced"
+    // heuristic) in integer basis points
+    QueryRow("q_class_weights", classWeights)(
+      """WITH c AS (
+           SELECT CAST(label AS BIGINT) AS label,
+             CAST(COUNT(*) AS BIGINT) AS n
+           FROM embeddings GROUP BY 1),
+         t AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total,
+                 CAST(COUNT(*) AS BIGINT) AS n_classes FROM c)
+         SELECT label, n,
+           (t.n_total * 10000) // (t.n_classes * n) AS weight_bp
+         FROM c CROSS JOIN t
+         ORDER BY label"""),
+    // LSH-bucketed ANN, replayed off-engine END TO END: the 12
+    // hyperplanes are DATA-INDEPENDENT deterministic constants
+    // (planeQ — interpolated below from the ONE definition
+    // the engine's plan literals come from, so the two sides cannot
+    // desynchronize), the bucket key is the packed sign-bit sum, and
+    // the in-bucket exact-cosine top-3 is the same kernel as
+    // q_knn_brute's oracle. A bucketing bug, plane drift, or ranking
+    // tie-break slip is a row diff at the oracle gate.
+    QueryRow("q_ann_lsh", annLsh(_, _))(
+      s"""WITH q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         planes(p, pl) AS (VALUES ${(0 until SignBits)
+             .map(p => s"(${p}, ${planeQ(p)
+               .mkString("[", ", ", "]")})").mkString(",\n           ")}),
+         b AS (
+           SELECT vec_id, iv,
+             CAST(SUM(CASE WHEN list_sum(list_transform(
+                 generate_series(1, len(iv)), i -> iv[i] * pl[i])) >= 0
+               THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS BIGINT) AS bucket
+           FROM q, planes GROUP BY vec_id, iv),
+         p AS (
+           SELECT a.vec_id AS query_id, b2.vec_id AS neighbor_id,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b2.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b2.iv)),
+                 i -> b2.iv[i] * b2.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM b a JOIN b b2
+             ON a.bucket = b2.bucket AND a.vec_id <> b2.vec_id)
+         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY cosine DESC, neighbor_id) AS rk FROM p)
+         WHERE rk <= 3 ORDER BY query_id, rk"""),
+    // Embedding near-dup pairs at the production threshold (0.95):
+    // the oracle is the full EXACT pair scan, so the LSH-bucketed
+    // path must emit exactly the exact set — empty on the natural
+    // fixture (max pairwise cosine ≈ 0.51), which the oracle now
+    // proves instead of a rows-only shrug; any spurious bucket pair
+    // or missed true pair goes red
+    QueryRow("q_cosine_near_dup", cosineNearDup(_, _))(
+      """WITH q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         n AS (
+           SELECT vec_id, iv,
+             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
+               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm
+           FROM q)
+         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+           CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cosine
+         FROM n a, n b
+         WHERE a.vec_id < b.vec_id
+           AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) >= 0.95
+         ORDER BY vec_a, vec_b"""),
+    // IVF ANN, replayed off-engine INCLUDING THE TRAINER: the engine's
+    // k-means is integer-exact end to end (floor(x·2^26) quantization,
+    // exact long sums, floor-division updates, argmin ties on cell)
+    // and seeds from MD5-of-id order — so the whole 3-iteration Lloyd
+    // loop unrolls here as CTEs (lloydIterSql, interpolated from the
+    // SAME IvfCells/NProbe/KmeansIters/Dim constants the engine
+    // trains with), then the index/probe/top-3 phases replay over the
+    // replayed centroids. Any trainer drift — a changed seed order, a
+    // truncating division, a tie broken differently — moves a vector
+    // across cells and shows as a row diff at the oracle gate.
+    QueryRow("q_ann_ivf", annIvf(_, _))(AnnIvfSql),
+    // served from the persisted centroid artifact (train -> publish ->
+    // drop the trainer memo -> load -> serve): the oracle is the SAME
+    // trainer replay, so a save/load bit-flip fails the hash
+    QueryRow("q_ann_ivf_saved", annIvfSaved(_, _))(AnnIvfSql),
+    // Filtered vector search: the SAME replayed candidate chain with
+    // the metadata predicate applied before ranking (post-filter form)
+    // — value-exact against the engine's post-filtered IVF stream.
+    QueryRow("q_ann_filtered", annIvfFiltered(_, _))(
+      s"""$IvfCandCtes,
+         allowed AS (SELECT doc_id FROM documents
+                     WHERE lang = '${FilterLang}'),
+         fc AS (SELECT c.query_id, c.neighbor_id, c.cosine
+                FROM cand c JOIN allowed a ON a.doc_id = c.neighbor_id)
+         SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rk, cosine
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY cosine DESC, neighbor_id) AS rk FROM fc)
+         WHERE rk <= 3 ORDER BY query_id, rk"""),
+    // Incremental IVF maintenance: the SAME unrolled Lloyd replay as
+    // q_ann_ivf but trained on the indexed 80% slice only; the delta
+    // slice then assigns into the replayed frozen centroids — one
+    // integer argmin per new vector, pinned value for value.
+    QueryRow("q_delta_ivf", deltaIvfAssign)(
+      s"""WITH av AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         wv AS (SELECT CAST(floor((MAX(vec_id) + 1) * 0.8) AS BIGINT) AS w
+                FROM av),
+         qv AS (SELECT vec_id, iv FROM av, wv WHERE vec_id < w),
+         seeds AS (
+           SELECT vec_id, iv FROM qv
+           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+           LIMIT ${IvfCells}),
+         c0 AS (
+           SELECT ROW_NUMBER() OVER (
+               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
+             iv AS c
+           FROM seeds),
+         ${(0 until KmeansIters)
+             .map(i => lloydIterSql(i, Dim))
+             .mkString(",\n         ")},
+         delta AS (SELECT vec_id, iv FROM av, wv WHERE vec_id >= w),
+         assign AS (
+           SELECT vec_id, cell FROM (
+             SELECT d.vec_id, c.cell,
+               ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
+                 ${d2Sql("d.iv", "c.c", Dim)},
+                 c.cell) AS rn
+             FROM delta d, c${KmeansIters} c) t
+           WHERE rn = 1)
+         SELECT vec_id, CAST(cell AS BIGINT) AS cell
+         FROM assign ORDER BY vec_id"""),
+    // Recall pin: every planted near-identical twin (id+1e6) the
+    // multi-probe LSH index recovered; oracle = the full planted list.
+    QueryRow("q_ann_recall", annPlantedRecall)(PlantedRecallSql),
+    // Same planted ground truth pins the MATRYOSHKA funnel: green iff
+    // the 16-dim-prefix coarse shortlist never drops a twin AND the
+    // full-dim rescore ranks it back to top-1 — both funnel stages,
+    // end-to-end.
+    QueryRow("q_mrl_recall", mrlPlantedRecall(_, _))(PlantedRecallSql),
+    // Same planted ground truth pins the k-means IVF index: green iff
+    // NProbe=2 cell probing recovers every twin.
+    QueryRow("q_ivf_recall", ivfPlantedRecall)(PlantedRecallSql),
+    // nprobe recall curve: the shared trainer-replay chain's
+    // rank_cells already orders every cell per query, so each swept
+    // depth is a prefix predicate; truth = the exact brute-force
+    // top-k replay (q_knn_brute's formula at k=3), counts and
+    // integer-bp recall per depth.
+    QueryRow("q_ivf_sweep", ivfProbeSweep) {
+      val ts = ProbeSweepPoints
+        .map(t => s"($t)").mkString(", ")
+      val maxP = ProbeSweepPoints.max
+      val k = SweepTrueK
+      s"""$IvfCandCtes,
+         cf AS (SELECT r.vec_id AS query_id, ix.vec_id AS neighbor_id,
+                  CAST(MIN(r.rn) AS BIGINT) AS first_rank
+                FROM rank_cells r JOIN indexed ix
+                  ON r.cell = ix.cell AND r.vec_id <> ix.vec_id
+                WHERE r.rn <= $maxP GROUP BY 1, 2),
+         pc AS (
+           SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
+                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM qv a, qv b WHERE a.vec_id <> b.vec_id),
+         knn AS (SELECT query_id, neighbor_id FROM
+                   (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                      ORDER BY cosine DESC, neighbor_id) AS rk FROM pc)
+                 WHERE rk <= $k),
+         tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true_total FROM knn),
+         ts AS (SELECT CAST(v AS BIGINT) AS nprobe FROM (VALUES $ts) x(v)),
+         sw AS (SELECT t.nprobe,
+                  CAST(COUNT(*) AS BIGINT) AS n_candidates,
+                  CAST(SUM(CASE WHEN kn.query_id IS NOT NULL
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_true_hits
+                FROM cf c
+                JOIN ts t ON c.first_rank <= t.nprobe
+                LEFT JOIN knn kn ON kn.query_id = c.query_id
+                  AND kn.neighbor_id = c.neighbor_id
+                GROUP BY 1)
+         SELECT t.nprobe,
+           CAST(COALESCE(sw.n_candidates, 0) AS BIGINT) AS n_candidates,
+           CAST(COALESCE(sw.n_true_hits, 0) AS BIGINT) AS n_true_hits,
+           CAST((COALESCE(sw.n_true_hits, 0) * 10000) // tot.n_true_total
+             AS BIGINT) AS recall_bp
+         FROM ts t CROSS JOIN tot LEFT JOIN sw USING (nprobe)
+         ORDER BY t.nprobe"""
+    },
+    // Same planted ground truth through the SAMPLE-TRAINED centroid
+    // set (deterministic 1/8 hash sample — the bounded 100 TB trainer):
+    // green iff the cheaper trainer costs zero twin recall.
+    QueryRow("q_ivf_sampled_recall", ivfSampledPlantedRecall)(PlantedRecallSql),
+    // Same planted ground truth pins the cosine NEAR-DUP pair kernel
+    // (q_cosine_near_dup's multi-probe bucket join at threshold 0.95,
+    // which is empty on the natural fixtures): green iff the bucketed
+    // pair join recovers every (original, twin) pair.
+    QueryRow("q_cosine_recall", cosinePlantedRecall(_, _))(PlantedRecallSql),
+    // PQ codes, replayed off-engine INCLUDING THE TRAINER — the same
+    // Lloyd replay as q_ann_ivf's, run per subspace (pqIterSql keyed
+    // by m): MD5-ordered seeds sliced per subspace, 3 integer-exact
+    // iterations, then every vector's argmin code per subspace. The
+    // code table (the artifact a 100 TB pipeline persists) is pinned
+    // value for value, not rows-only.
+    QueryRow("q_pq_codes", pqCodes)(
+      s"""WITH qv AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         ms AS (SELECT unnest(generate_series(0,
+           ${PqM - 1})) AS m),
+         sv AS (
+           SELECT vec_id, m, list_transform(
+             generate_series(1, ${PqSubDim}),
+             j -> iv[m * ${PqSubDim} + j]) AS sub
+           FROM qv, ms),
+         pseeds AS (
+           SELECT vec_id, iv FROM qv
+           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+           LIMIT ${PqK}),
+         b0 AS (
+           SELECT m, ROW_NUMBER() OVER (PARTITION BY m
+               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell,
+             list_transform(
+               generate_series(1, ${PqSubDim}),
+               j -> iv[m * ${PqSubDim} + j]) AS c
+           FROM pseeds, ms),
+         ${(0 until PqIters)
+             .map(i => pqIterSql(i, PqSubDim))
+             .mkString(",\n         ")},
+         codes AS (
+           SELECT vec_id, m, cell FROM (
+             SELECT s.vec_id, s.m, b.cell,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
+                 ${d2Sql("s.sub", "b.c", PqSubDim)},
+                 b.cell) AS rn
+             FROM sv s JOIN b${PqIters} b
+               ON s.m = b.m) t
+           WHERE rn = 1)
+         SELECT vec_id, CAST(m AS BIGINT) AS subspace,
+           CAST(cell AS BIGINT) AS code
+         FROM codes
+         ORDER BY vec_id, subspace"""),
+    // Same planted ground truth pins the PRODUCT-QUANTIZED index:
+    // green iff every query's top-1 by codegen ADC distance over the
+    // 8-byte code index is its own cosine-0.999 twin — the whole PQ
+    // train→encode→score loop, end-to-end.
+    QueryRow("q_pq_recall", pqPlantedRecall)(PlantedRecallSql),
+    // Same planted ground truth through SAMPLE-TRAINED codebooks
+    // (deterministic 1/8 hash sample — the bounded 100 TB trainer):
+    // green iff the cheaper trainer costs zero twin recall.
+    QueryRow("q_pq_sampled_recall", pqSampledPlantedRecall)(PlantedRecallSql),
+    // Same planted ground truth through BOTH approximations composed
+    // (IVF cell probing bounds the candidates, PQ ADC scores them):
+    // green iff no twin is lost to an unprobed cell OR out-ranked by a
+    // co-cell stranger under 8-byte codes.
+    QueryRow("q_ivfpq_recall", ivfPqPlantedRecall)(PlantedRecallSql),
+    // SQ8 encode is fully SQL-derivable (per-dim min/max grid + integer
+    // floor-div — no k-means), so unlike q_pq_codes this code dump is
+    // oracle-EXACT end-to-end: DuckDB recomputes the same grid and the
+    // same byte codes from the raw embeddings.
+    QueryRow("q_sq_codes", sqCodes)(
+      """WITH iv AS (
+           SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
+             CAST(floor(CAST(embedding[i] AS DOUBLE) * 67108864.0) AS BIGINT) AS v
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
+         st AS (
+           SELECT dim, MIN(v) AS lo,
+             GREATEST(1, (MAX(v) - MIN(v) + 254) // 255) AS step
+           FROM iv GROUP BY dim)
+         SELECT iv.vec_id, iv.dim,
+           CAST(GREATEST(0, LEAST(255, (iv.v - st.lo) // st.step)) AS BIGINT)
+             AS code
+         FROM iv JOIN st USING (dim)
+         ORDER BY vec_id, dim"""),
+    // Same planted ground truth pins the SCALAR-QUANTIZED (1 byte/dim)
+    // index: green iff every query's top-1 by the codegen sq_wdot
+    // kernel over packed int8 codes is its own cosine-0.999 twin.
+    QueryRow("q_sq_recall", sqPlantedRecall)(PlantedRecallSql),
+    // IVF ∘ SQ8 composed (the FAISS IndexIVFScalarQuantizer layout):
+    // green iff no twin is lost to an unprobed cell OR out-ranked by a
+    // co-cell stranger under packed byte codes.
+    QueryRow("q_ivfsq_recall", ivfSqPlantedRecall)(PlantedRecallSql),
+    QueryRow("q_cosine_pairs", cosinePairsExact(_, _))(
+      """WITH q AS (
+           SELECT vec_id, list_transform(embedding,
+             x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         n AS (
+           SELECT vec_id, iv,
+             sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(iv)),
+               i -> iv[i] * iv[i])) AS BIGINT) AS DOUBLE)) AS nrm
+           FROM q)
+         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+           CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cosine
+         FROM n a, n b
+         WHERE a.vec_id < b.vec_id
+           AND CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+             i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) >= 0.25
+         ORDER BY vec_a, vec_b"""),
+    // Hard-mined contrastive triplets: per anchor, the most-similar
+    // same-label vector (positive) and most-similar other-label vector
+    // (hard negative), ties on smaller id — the same exact-integer
+    // cosine as q_knn_brute, so the doubles agree bit-for-bit.
+    QueryRow("q_triplets", tripletMine)(
+      """WITH q AS (
+           SELECT vec_id, CAST(label AS BIGINT) AS label,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * 67108864.0) AS BIGINT)) AS iv
+           FROM embeddings),
+         p AS (
+           SELECT a.vec_id AS anchor_id, b.vec_id AS cand_id,
+             (a.label = b.label) AS same,
+             CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+               i -> a.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE)
+             / (sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(a.iv)),
+                 i -> a.iv[i] * a.iv[i])) AS BIGINT) AS DOUBLE))
+                * sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(b.iv)),
+                 i -> b.iv[i] * b.iv[i])) AS BIGINT) AS DOUBLE))) AS cosine
+           FROM q a, q b WHERE a.vec_id <> b.vec_id),
+         pos AS (
+           SELECT anchor_id, cand_id AS pos_id, cosine AS pos_cos
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
+                   ORDER BY cosine DESC, cand_id) AS rk
+                 FROM p WHERE same) WHERE rk = 1),
+         neg AS (
+           SELECT anchor_id, cand_id AS neg_id, cosine AS neg_cos
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
+                   ORDER BY cosine DESC, cand_id) AS rk
+                 FROM p WHERE NOT same) WHERE rk = 1)
+         SELECT pos.anchor_id, pos_id, pos_cos, neg_id, neg_cos,
+           pos_cos - neg_cos AS margin
+         FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
+         ORDER BY pos.anchor_id"""),
+    // IVF-served hard-triplet mining: the SAME replayed candidate
+    // chain, arg-maxed per (anchor, same-label) side with ties to the
+    // smaller id — value-exact against tripletMineIvf, which shares
+    // its selection code path with the exact q_triplets. Anchors
+    // lacking a same-label or other-label candidate drop on both
+    // sides.
+    QueryRow("q_triplets_ivf", tripletMineIvf)(
+      s"""$IvfCandCtes,
+         lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label
+                 FROM embeddings),
+         scored AS (
+           SELECT c.query_id AS anchor_id, c.neighbor_id AS cand_id,
+             c.cosine, (la.label = lc.label) AS same
+           FROM cand c JOIN lab la ON la.vec_id = c.query_id
+             JOIN lab lc ON lc.vec_id = c.neighbor_id),
+         pos AS (
+           SELECT anchor_id, cand_id AS pos_id, cosine AS pos_cos
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
+                   ORDER BY cosine DESC, cand_id) AS rk
+                 FROM scored WHERE same) WHERE rk = 1),
+         neg AS (
+           SELECT anchor_id, cand_id AS neg_id, cosine AS neg_cos
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
+                   ORDER BY cosine DESC, cand_id) AS rk
+                 FROM scored WHERE NOT same) WHERE rk = 1)
+         SELECT pos.anchor_id, pos_id, pos_cos, neg_id, neg_cos,
+           pos_cos - neg_cos AS margin
+         FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
+         ORDER BY pos.anchor_id""")
+  )
 }

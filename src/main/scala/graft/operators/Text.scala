@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.DuckSql.Norm
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -954,7 +955,7 @@ object Text {
 
   /** Block-stratified split shared by trainer, both scoring twins,
     * the streaming twin, and the oracle SQL (interpolated into
-    * SparkEntry.NbScoredCtes from these vals): ids are cut into
+    * [[NbScoredCtes]] from these vals): ids are cut into
     * blocks of [[NbSplitBlock]] consecutive ids — one per fixture
     * source, so every class appears on both sides of the split — and
     * one block in [[NbSplitMod]] is held out. */
@@ -2194,6 +2195,515 @@ object Text {
        GROUP BY 1, 2
        HAVING COUNT(*) >= $WinnowMinShared
        ORDER BY doc_a, doc_b"""
+
+  /** The q_quality composite score over a `(doc_id, text, t)` scope
+    * (t = whitespace-split lowered tokens) — ONE definition for the
+    * three oracles that rank by it (q_quality, q_quality_gate,
+    * q_cluster_balance), mirroring the single engine-side
+    * `qualityScoredDf`. */
+  private[graft] lazy val QualityScoreSql: String =
+    """(CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)) * CAST(0.5 AS DOUBLE)
+             + (CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+                / CAST(len(t) AS DOUBLE)) * CAST(0.3 AS DOUBLE)
+             - (CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+                / CAST(greatest(length(text), 1) AS DOUBLE)) * CAST(0.2 AS DOUBLE)"""
+
+  /** The trained-NB-model CTE block (docs→classes, no WITH prefix) —
+    * shared by [[NbScoredCtes]] (holdout scoring) and the q_curate_v2
+    * oracle (gate-survivor scoring): one model replay, two test
+    * slices, zero drift. */
+  private[graft] lazy val NbModelCtes: String =
+    s"""docs AS (
+           SELECT doc_id, source,
+             regexp_extract_all(lower(text), '[a-z]+') AS t
+           FROM documents),
+         train AS (SELECT * FROM docs
+                   WHERE (doc_id // ${NbSplitBlock})
+                     % ${NbSplitMod} != 0),
+         tt AS (SELECT source, unnest(t) AS w FROM train),
+         counts AS (SELECT source, w, COUNT(*) AS cnt FROM tt GROUP BY 1, 2),
+         ctok AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS class_tokens
+                  FROM counts GROUP BY 1),
+         voc AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM counts),
+         pri AS (SELECT source, COUNT(*) AS class_docs FROM train GROUP BY 1),
+         tot AS (SELECT COUNT(*) AS total_docs FROM train),
+         classes AS (
+           SELECT ctok.source AS cls, class_tokens,
+             CAST(length(bin(total_docs // class_docs)) AS BIGINT)
+               AS prior_bits, v
+           FROM ctok JOIN pri USING (source) CROSS JOIN tot CROSS JOIN voc)"""
+
+  /** Naive Bayes trained-model replay up to the per-(doc, class) bit
+    * grid (`scored`) — the shared prefix of the argmin oracles
+    * ([[NbPredCtes]]) and the margin-calibration oracle
+    * (q_nb_reliability): one model, six oracles, zero drift. */
+  private lazy val NbScoredCtes: String =
+    s"""WITH $NbModelCtes,
+         test AS (SELECT doc_id, source AS true_source, t FROM docs
+                  WHERE (doc_id // ${NbSplitBlock})
+                    % ${NbSplitMod} = 0),
+         tok AS (SELECT doc_id, unnest(t) AS w FROM test),
+         tb AS (
+           SELECT doc_id, cls,
+             CAST(SUM(length(bin(
+               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
+               AS token_bits
+           FROM tok CROSS JOIN classes
+           LEFT JOIN counts ON counts.source = classes.cls
+             AND counts.w = tok.w
+           GROUP BY 1, 2),
+         grid AS (SELECT doc_id, true_source, cls, prior_bits
+                  FROM test CROSS JOIN classes),
+         scored AS (
+           SELECT doc_id, true_source, cls,
+             prior_bits + COALESCE(token_bits, 0) AS bits
+           FROM grid LEFT JOIN tb USING (doc_id, cls))"""
+
+  /** The per-doc argmin (`pred`) over the shared bit grid — shared by
+    * q_nb_classify, its streaming twin q_stream_nb_classify, and the
+    * two eval views q_nb_confusion / q_nb_eval. */
+  private lazy val NbPredCtes: String =
+    s"""$NbScoredCtes,
+         pred AS (
+           SELECT doc_id, true_source, cls AS pred_source,
+             CAST(bits AS BIGINT) AS total_bits,
+             CAST(cls = true_source AS BIGINT) AS is_correct
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+                   ORDER BY bits, cls) AS rk FROM scored)
+           WHERE rk = 1)"""
+
+  private[graft] lazy val NbClassifySql: String =
+    s"""$NbPredCtes
+         SELECT doc_id, true_source, pred_source, total_bits, is_correct
+         FROM pred ORDER BY doc_id"""
+
+  /** The per-doc Gopher battery replay — shared by q_gopher_rules
+    * and the per-source triage aggregate q_gopher_by_source. */
+  private[graft] def gopherRulesSql: String = {
+      val stops = GopherStops.map(s => s"'$s'").mkString("[", ", ", "]")
+      s"""WITH c AS (
+           SELECT doc_id,
+             len(t) AS n_words, len(l) AS n_lines,
+             length(replace(text, ' ', '')) AS sum_len,
+             (length(text) - length(replace(text, '#', '')))
+               + (length(text) - length(replace(text, '...', ''))) // 3
+               + (length(text) - length(replace(text, '…', ''))) AS n_symbols,
+             len(list_filter(t, x -> regexp_matches(x, '[a-z]'))) AS n_alpha,
+             len(list_filter(l, x -> regexp_matches(x, '^\\s*[-•*] ')))
+               AS n_bullet,
+             len(list_filter(l, x -> regexp_matches(x, '(\\.\\.\\.|…)\\s*$$')))
+               AS n_ellipsis_end,
+             len(list_filter($stops, s -> list_contains(t, s))) AS stop_hits
+           FROM (SELECT doc_id, text,
+                   string_split(lower(text), ' ') AS t,
+                   string_split(text, chr(10)) AS l FROM documents)),
+         r AS (
+           SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
+             CAST((sum_len * 1000) // n_words AS BIGINT) AS word_len_pm,
+             CAST((n_symbols * 10000) // n_words AS BIGINT) AS symbol_bp,
+             CAST((n_alpha * 10000) // n_words AS BIGINT) AS alpha_word_bp,
+             CAST((n_bullet * 10000) // n_lines AS BIGINT) AS bullet_bp,
+             CAST((n_ellipsis_end * 10000) // n_lines AS BIGINT)
+               AS ellipsis_bp,
+             CAST(stop_hits AS BIGINT) AS stop_hits
+           FROM c)
+         SELECT *, CAST((n_words >= $GopherMinWords
+             AND n_words <= $GopherMaxWords
+             AND word_len_pm >= $GopherMinWordLenPm
+             AND word_len_pm <= $GopherMaxWordLenPm
+             AND symbol_bp <= $GopherMaxSymbolBp
+             AND alpha_word_bp >= $GopherMinAlphaBp
+             AND bullet_bp <= $GopherMaxBulletBp
+             AND ellipsis_bp <= $GopherMaxEllipsisBp
+             AND stop_hits >= $GopherMinStops) AS BIGINT) AS gopher_pass
+         FROM r ORDER BY doc_id"""
+  }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    QueryRow("q_regex_extract", regexExtract)(
+      """SELECT event_id, event_type,
+         CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
+         FROM events WHERE event_type = 'error'
+         ORDER BY event_id"""),
+    QueryRow("q_json_extract", jsonExtract)(
+      """SELECT event_id, event_type,
+         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+         FROM events
+         ORDER BY event_id"""),
+    // --- text analysis (north-star training-data ops)
+    QueryRow("q_fingerprint", fingerprint)(
+      s"""SELECT doc_id, md5($Norm) AS fingerprint,
+         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
+         FROM documents
+         ORDER BY doc_id"""),
+    // Winnowing fingerprints: the oracle re-derives every rolling
+    // Rabin-Karp gram hash in closed form (Σ ord·Bᵉ mod M), replays
+    // the frame-window minima and the rightmost-tie argmin per window
+    // start — a drifted rolling update, window boundary, or tie-break
+    // flips rows
+    QueryRow("q_winnow", winnow)(winnowOracle),
+    // Overlap verdicts off the same selection CTEs: df-cap purge
+    // (boilerplate AND skew keys) + the shared-count floor
+    QueryRow("q_winnow_overlap", winnowOverlap)(winnowOverlapOracle()),
+    // the artifact-served twin: the overlap join over the LOADED
+    // fingerprint index must equal the in-place kernel bit-for-bit
+    // (exact-integer round-trip) — SAME oracle
+    QueryRow("q_winnow_overlap_saved", winnowOverlapSaved)(winnowOverlapOracle()),
+    QueryRow("q_winnow_skew", winnowOverlapSkew)(
+      winnowOverlapOracle(
+      s"(SELECT doc_id, ${winnowSkewTextSql} AS text " +
+        "FROM documents) sd")),
+    // the seeded-boilerplate skew receipt: the SAME overlap oracle
+    // over the seeded corpus (one seeding expression, two engines)
+    // Exact-substring dedup: the oracle replays the DEFINITION
+    // (brute-force L-gram join + island merge); the engine's
+    // winnow-anchored extend-and-verify must land on the same spans —
+    // the winnowing guarantee, oracle-pinned.
+    QueryRow("q_substr_dedup", substrDedup)(substrDedupOracle),
+    QueryRow("q_substr_scrub", substrScrub)(substrScrubOracle),
+    // keep-one-copy semantics: cut-eligible iff a smaller-id doc holds
+    // the substring; the first-occurrence holder stays byte-identical
+    QueryRow("q_substr_keep_first", substrKeepFirst)(substrKeepFirstOracle),
+    QueryRow("q_substr_scrub_first", substrScrubFirst)(substrScrubFirstOracle),
+    // benchmark decontamination: the same definition restricted to
+    // train x test (the shared content-hash split), spans + applied
+    // scrub both hash-pinned
+    QueryRow("q_decontaminate", decontaminate)(decontaminateOracle),
+    QueryRow("q_delta_substr", deltaSubstr)(deltaSubstrOracle),
+    QueryRow("q_decontaminate_scrub", decontaminateScrub)(decontaminateScrubOracle),
+    // Incremental ingest classification against the corpus-slice
+    // fingerprint index: corpus-side df purge, fp-equality probe,
+    // best-partner (most shared, ties to smaller id)
+    QueryRow("q_delta_winnow", deltaWinnow)(deltaWinnowOracle),
+    // Text-feature drift: the bit-identical quality composite bucketed
+    // (floor ×20), both sides' counts and integer per-mille shares,
+    // full-outer so one-sided buckets report novel mass explicitly
+    QueryRow("q_text_drift", textDrift)(
+      s"""WITH s AS (
+           SELECT doc_id,
+             CAST(floor(($QualityScoreSql) *
+               ${DriftBucketScale}) AS BIGINT) AS bucket
+           FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t
+                 FROM documents)),
+         wsp AS (SELECT CAST(floor((MAX(doc_id) + 1) * 0.8) AS BIGINT) AS w
+                 FROM documents),
+         ref AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_ref
+                 FROM s, wsp WHERE doc_id < w GROUP BY bucket),
+         nw AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_new
+                FROM s, wsp WHERE doc_id >= w GROUP BY bucket),
+         rt AS (SELECT COALESCE(SUM(n_ref), 1) AS t FROM ref),
+         nt AS (SELECT COALESCE(SUM(n_new), 1) AS t FROM nw)
+         SELECT COALESCE(r.bucket, n.bucket) AS bucket,
+           COALESCE(r.n_ref, 0) AS n_ref,
+           COALESCE(n.n_new, 0) AS n_new,
+           CAST(COALESCE(r.n_ref, 0) * 1000 // greatest(rt.t, 1)
+             AS BIGINT) AS share_ref_pm,
+           CAST(COALESCE(n.n_new, 0) * 1000 // greatest(nt.t, 1)
+             AS BIGINT) AS share_new_pm,
+           CAST(abs(COALESCE(r.n_ref, 0) * 1000 // greatest(rt.t, 1)
+             - COALESCE(n.n_new, 0) * 1000 // greatest(nt.t, 1))
+             AS BIGINT) AS delta_pm
+         FROM ref r FULL OUTER JOIN nw n ON r.bucket = n.bucket
+         CROSS JOIN rt CROSS JOIN nt
+         ORDER BY bucket"""),
+    QueryRow("q_token_count", tokenCount)(
+      """SELECT doc_id,
+         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_ws_tokens,
+         CAST(len(list_distinct(string_split(lower(text), ' '))) AS BIGINT) AS n_distinct,
+         CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha_runs,
+         CAST(length(text) AS BIGINT) AS n_chars_measured
+         FROM documents
+         ORDER BY doc_id"""),
+    QueryRow("q_langid", langId)(
+      """SELECT doc_id, lang AS lang_label,
+         CASE WHEN en >= es AND en >= de AND en > 0 THEN 'en'
+              WHEN es >= de AND es > 0 THEN 'es'
+              WHEN de > 0 THEN 'de'
+              ELSE 'unknown' END AS lang_pred
+         FROM (SELECT doc_id, lang,
+           len(list_filter(string_split(lower(text), ' '),
+             t -> t IN ('the','a','of','and','to'))) AS en,
+           len(list_filter(string_split(lower(text), ' '),
+             t -> t IN ('el','la','de','y','que'))) AS es,
+           len(list_filter(string_split(lower(text), ' '),
+             t -> t IN ('der','die','das','und','ist'))) AS de
+           FROM documents)
+         ORDER BY doc_id"""),
+    QueryRow("q_quality", quality)(
+      s"""SELECT doc_id,
+         CAST(len(t) AS BIGINT) AS n_tokens,
+         CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE) AS distinct_ratio,
+         CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
+           / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
+         CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)
+           / CAST(len(t) AS DOUBLE) AS stopword_ratio,
+         $QualityScoreSql AS quality_score
+         FROM (SELECT doc_id, text, string_split(lower(text), ' ') AS t FROM documents)
+         ORDER BY doc_id"""),
+    // Gopher rule battery: every signal an integer count or div ratio
+    // (per-mille / bp), thresholds interpolated from the shared
+    // constants — the composed pass verdict replays BIGINT-exact.
+    QueryRow("q_gopher_rules", gopherRules)(gopherRulesSql),
+    // The frozen-artifact LM gate: ONE oracle pins the batch gate and
+    // its streaming twin (model + cut ship together; the two paths
+    // must admit the identical set).
+    QueryRow("q_lm_gate", lmQualityGate)(lmGateOracle),
+    // the same model + frozen cut grouped per feed — admission census
+    QueryRow("q_lm_gate_by_source", lmGateBySource)(lmGateBySourceOracle),
+    // Per-source triage: the battery replay aggregated by source with
+    // per-rule fail censuses — every census an integer comparison on
+    // the battery's own columns.
+    QueryRow("q_gopher_by_source", gopherBySource) {
+      s"""WITH g AS (SELECT * FROM ($gopherRulesSql)),
+         d AS (SELECT doc_id, source FROM documents),
+         a AS (
+           SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(g.gopher_pass) AS BIGINT) AS n_pass,
+             CAST(SUM(CASE WHEN g.n_words >= $GopherMinWords
+               AND g.n_words <= $GopherMaxWords THEN 0 ELSE 1 END)
+               AS BIGINT) AS fail_words,
+             CAST(SUM(CASE WHEN g.word_len_pm >= $GopherMinWordLenPm
+               AND g.word_len_pm <= $GopherMaxWordLenPm THEN 0 ELSE 1 END)
+               AS BIGINT) AS fail_word_len,
+             CAST(SUM(CASE WHEN g.symbol_bp <= $GopherMaxSymbolBp
+               THEN 0 ELSE 1 END) AS BIGINT) AS fail_symbol,
+             CAST(SUM(CASE WHEN g.alpha_word_bp >= $GopherMinAlphaBp
+               THEN 0 ELSE 1 END) AS BIGINT) AS fail_alpha,
+             CAST(SUM(CASE WHEN g.bullet_bp <= $GopherMaxBulletBp
+               THEN 0 ELSE 1 END) AS BIGINT) AS fail_bullet,
+             CAST(SUM(CASE WHEN g.ellipsis_bp <= $GopherMaxEllipsisBp
+               THEN 0 ELSE 1 END) AS BIGINT) AS fail_ellipsis,
+             CAST(SUM(CASE WHEN g.stop_hits >= $GopherMinStops
+               THEN 0 ELSE 1 END) AS BIGINT) AS fail_stops
+           FROM g JOIN d USING (doc_id) GROUP BY d.source)
+         SELECT source, n_docs, n_pass,
+           CAST((n_pass * 10000) // n_docs AS BIGINT) AS pass_bp,
+           fail_words, fail_word_len, fail_symbol, fail_alpha,
+           fail_bullet, fail_ellipsis, fail_stops
+         FROM a ORDER BY source"""
+    },
+    // Unigram surprisal: integer-exact bits via length(bin(total div
+    // cnt)) = floor(log2)+1 — both engines compute the identical
+    // binary-string length, no float log in either plan
+    QueryRow("q_surprisal", surprisal)(
+      """WITH tok AS (
+           SELECT doc_id,
+             unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+           FROM documents),
+         counts AS (SELECT w, count(*) AS cnt FROM tok GROUP BY w),
+         tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM counts),
+         scored AS (
+           SELECT doc_id, length(bin(total // cnt)) AS bits
+           FROM tok JOIN counts USING (w) CROSS JOIN tot)
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+           CAST(sum(bits) AS BIGINT) AS total_bits,
+           CAST((sum(bits) * 1000) // count(*) AS BIGINT) AS mean_millibits
+         FROM scored GROUP BY doc_id ORDER BY doc_id"""),
+    // Bigram surprisal: prefix counts derive from the bigram counts
+    // (cnt1 = sum of cnt2 over w1), so cnt1 >= cnt2 and the integer
+    // bit cost length(bin(cnt1 // cnt2)) is always >= 1
+    QueryRow("q_bigram_surprisal", bigramSurprisal)(
+      """WITH docs AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+           FROM documents),
+         big AS (
+           SELECT doc_id, t[i] AS w1, t[i+1] AS w2
+           FROM docs, unnest(range(1, len(t))) AS u(i)
+           WHERE len(t) >= 2),
+         bi AS (SELECT w1, w2, count(*) AS cnt2 FROM big GROUP BY w1, w2),
+         pre AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1 FROM bi GROUP BY w1),
+         scored AS (
+           SELECT doc_id, length(bin(cnt1 // cnt2)) AS bits
+           FROM big JOIN bi USING (w1, w2) JOIN pre USING (w1))
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(sum(bits) AS BIGINT) AS total_bits,
+           CAST((sum(bits) * 1000) // count(*) AS BIGINT) AS mean_millibits
+         FROM scored GROUP BY doc_id ORDER BY doc_id"""),
+    // Trigram Stupid Backoff against the train-split model: the
+    // three-level CASE, integer bit costs, and per-level censuses all
+    // replay off the shared content-hash split definition.
+    QueryRow("q_backoff_score", backoffScore)(backoffScoreOracle),
+    // scored from the LOADED count tables (train -> publish -> load
+    // -> score): same oracle, so a round-trip bit-flip fails
+    QueryRow("q_backoff_score_saved", backoffScoreSaved)(backoffScoreOracle),
+    // CCNet head/middle/tail: the bigram model replays as above, then
+    // the per-source tercile is plain ROW_NUMBER + integer arithmetic
+    // — pinning the Spark side's two-phase bucketed rank equal to the
+    // single-window total order (same receipt as exact skewProfile)
+    QueryRow("q_ppl_buckets", pplBuckets)(
+      """WITH docs AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+           FROM documents),
+         big AS (
+           SELECT doc_id, t[i] AS w1, t[i+1] AS w2
+           FROM docs, unnest(range(1, len(t))) AS u(i)
+           WHERE len(t) >= 2),
+         bi AS (SELECT w1, w2, count(*) AS cnt2 FROM big GROUP BY w1, w2),
+         pre AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1 FROM bi GROUP BY w1),
+         sc AS (
+           SELECT doc_id,
+             CAST((sum(length(bin(cnt1 // cnt2))) * 1000) // count(*) AS BIGINT)
+               AS mean_millibits
+           FROM big JOIN bi USING (w1, w2) JOIN pre USING (w1)
+           GROUP BY doc_id),
+         j AS (
+           SELECT sc.doc_id, d.source, sc.mean_millibits
+           FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
+         n AS (SELECT source, CAST(count(*) AS BIGINT) AS ns FROM j GROUP BY source),
+         r AS (
+           SELECT doc_id, source, mean_millibits,
+             ROW_NUMBER() OVER (PARTITION BY source
+               ORDER BY mean_millibits, doc_id) AS rk
+           FROM j)
+         SELECT r.doc_id, r.source, r.mean_millibits,
+           CASE (3 * (rk - 1)) // ns
+             WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail'
+           END AS ppl_bucket
+         FROM r JOIN n USING (source)
+         ORDER BY doc_id"""),
+    // Multinomial Naive Bayes source classifier, MDL form: priors and
+    // per-class token counts replay as two GROUP BYs over the 80%
+    // train split; scoring is argmin of integer add-one-smoothed bit
+    // costs — the same length(bin(a // b)) no-float-log trick as
+    // q_surprisal, so the trained model replays bit-for-bit.
+    QueryRow("q_nb_classify", nbClassify)(NbClassifySql),
+    // scored against the LOADED model artifact (train -> publish ->
+    // load -> score): same oracle, so a round-trip bit-flip fails
+    QueryRow("q_nb_classify_saved", nbClassifySaved)(NbClassifySql),
+    // Confusion matrix over the held-out predictions — the shared
+    // NbPredCtes replay bucketed by (true, predicted).
+    QueryRow("q_nb_confusion", nbConfusion)(
+      s"""$NbPredCtes
+         SELECT true_source, pred_source, CAST(COUNT(*) AS BIGINT) AS n
+         FROM pred GROUP BY 1, 2
+         ORDER BY true_source, pred_source"""),
+    // Per-class precision/recall/F1 in integer basis points — F1 in
+    // its exact integer form 2·tp/(support+predicted); every value a
+    // BIGINT on both engines.
+    QueryRow("q_nb_eval", nbEval)(
+      s"""$NbPredCtes,
+         sup AS (SELECT true_source AS cls, CAST(COUNT(*) AS BIGINT)
+                   AS support, CAST(SUM(is_correct) AS BIGINT) AS tp
+                 FROM pred GROUP BY 1),
+         prd AS (SELECT pred_source AS cls, CAST(COUNT(*) AS BIGINT)
+                   AS predicted
+                 FROM pred GROUP BY 1),
+         m AS (SELECT cls,
+                 COALESCE(support, 0) AS support,
+                 COALESCE(predicted, 0) AS predicted,
+                 COALESCE(tp, 0) AS tp
+               FROM sup FULL JOIN prd USING (cls))
+         SELECT cls, CAST(support AS BIGINT) AS support,
+           CAST(predicted AS BIGINT) AS predicted,
+           CAST(tp AS BIGINT) AS tp,
+           CAST(CASE WHEN predicted > 0
+             THEN (tp * 10000) // predicted ELSE 0 END AS BIGINT)
+             AS precision_bp,
+           CAST(CASE WHEN support > 0
+             THEN (tp * 10000) // support ELSE 0 END AS BIGINT)
+             AS recall_bp,
+           CAST(CASE WHEN support + predicted > 0
+             THEN (2 * tp * 10000) // (support + predicted)
+             ELSE 0 END AS BIGINT) AS f1_bp
+         FROM m ORDER BY cls"""),
+    // Calibration deciles off the SAME scored bit grid: margin =
+    // runner-up bits − winning bits (integers), NTILE(10) over the
+    // total (margin DESC, doc_id) order, per-decile accuracy in
+    // integer basis points.
+    QueryRow("q_nb_reliability", nbReliability)(
+      s"""$NbScoredCtes,
+         ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+                      ORDER BY bits, cls) AS rk FROM scored),
+         m AS (SELECT w.doc_id,
+                 CAST(w.cls = w.true_source AS BIGINT) AS is_correct,
+                 CAST(r.bits - w.bits AS BIGINT) AS margin
+               FROM (SELECT * FROM ranked WHERE rk = 1) w
+               JOIN (SELECT doc_id, bits FROM ranked WHERE rk = 2) r
+                 USING (doc_id)),
+         tiles AS (SELECT *, NTILE(10) OVER (ORDER BY margin DESC, doc_id)
+                     AS tile FROM m)
+         SELECT CAST(tile AS BIGINT) AS tile,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(is_correct) AS BIGINT) AS n_correct,
+           CAST((SUM(is_correct) * 10000) // COUNT(*) AS BIGINT)
+             AS accuracy_bp,
+           CAST(MIN(margin) AS BIGINT) AS min_margin,
+           CAST(MAX(margin) AS BIGINT) AS max_margin
+         FROM tiles GROUP BY tile ORDER BY tile"""),
+    // Learning curve: the same trainer fit on nested 25/50/75/100%
+    // block-tag prefixes of the train split (fraction as a dimension —
+    // cumulative (k, cls, w) counts — not a retrain loop), each model
+    // scored on the same holdout; all-integer so the curve replays
+    // exactly.
+    QueryRow("q_learning_curve", nbLearningCurve)(
+      s"""WITH docs AS (
+           SELECT doc_id, source,
+             regexp_extract_all(lower(text), '[a-z]+') AS t
+           FROM documents),
+         train AS (SELECT *,
+                     (doc_id // ${NbSplitBlock})
+                       % ${NbCurveFractions} AS f
+                   FROM docs
+                   WHERE (doc_id // ${NbSplitBlock})
+                     % ${NbSplitMod} != 0),
+         test AS (SELECT doc_id, source AS true_source, t FROM docs
+                  WHERE (doc_id // ${NbSplitBlock})
+                    % ${NbSplitMod} = 0),
+         ks AS (SELECT unnest(generate_series(1, ${NbCurveFractions}))
+                  AS k),
+         tt AS (SELECT f, source AS cls, unnest(t) AS w FROM train),
+         cntf AS (SELECT f, cls, w, COUNT(*) AS cnt FROM tt GROUP BY 1, 2, 3),
+         cntk AS (SELECT k, cls, w, SUM(cnt) AS cnt
+                  FROM cntf JOIN ks ON f < k GROUP BY 1, 2, 3),
+         ctok AS (SELECT k, cls, CAST(SUM(cnt) AS BIGINT) AS class_tokens
+                  FROM cntk GROUP BY 1, 2),
+         voc AS (SELECT k, CAST(COUNT(DISTINCT w) AS BIGINT) AS v
+                 FROM cntk GROUP BY 1),
+         cd AS (SELECT k, source AS cls, SUM(nd) AS class_docs
+                FROM (SELECT f, source, COUNT(*) AS nd FROM train
+                      GROUP BY 1, 2) d
+                JOIN ks ON f < k GROUP BY 1, 2),
+         tot AS (SELECT k, SUM(class_docs) AS total_docs FROM cd GROUP BY 1),
+         classes AS (
+           SELECT ctok.k, ctok.cls, class_tokens,
+             CAST(length(bin(total_docs // class_docs)) AS BIGINT)
+               AS prior_bits, v
+           FROM ctok JOIN cd USING (k, cls) JOIN voc USING (k)
+           JOIN tot USING (k)),
+         tok AS (SELECT doc_id, unnest(t) AS w FROM test),
+         tb AS (
+           SELECT doc_id, classes.k AS k, classes.cls AS cls,
+             CAST(SUM(length(bin(
+               (class_tokens + v) // (COALESCE(cnt, 0) + 1)))) AS BIGINT)
+               AS token_bits
+           FROM tok CROSS JOIN classes
+           LEFT JOIN cntk ON cntk.k = classes.k
+             AND cntk.cls = classes.cls AND cntk.w = tok.w
+           GROUP BY 1, 2, 3),
+         grid AS (SELECT doc_id, true_source, k, cls, prior_bits
+                  FROM test CROSS JOIN classes),
+         scored AS (
+           SELECT doc_id, true_source, k, cls,
+             prior_bits + COALESCE(token_bits, 0) AS bits
+           FROM grid LEFT JOIN tb USING (doc_id, k, cls)),
+         pred AS (
+           SELECT k, CAST(cls = true_source AS BIGINT) AS is_correct
+           FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id, k
+                   ORDER BY bits, cls) AS rk FROM scored)
+           WHERE rk = 1),
+         acc AS (SELECT k, COUNT(*) AS n_test, SUM(is_correct) AS n_correct
+                 FROM pred GROUP BY 1),
+         ttok AS (SELECT k, CAST(SUM(class_tokens) AS BIGINT) AS train_tokens
+                  FROM ctok GROUP BY 1)
+         SELECT CAST(k * ${NbCurveStepPct} AS BIGINT) AS frac_pct,
+           CAST(total_docs AS BIGINT) AS train_docs, train_tokens,
+           v AS vocab_size, CAST(n_test AS BIGINT) AS n_test,
+           CAST(n_correct AS BIGINT) AS n_correct,
+           CAST((n_correct * 10000) // n_test AS BIGINT) AS accuracy_bp
+         FROM acc JOIN tot USING (k) JOIN ttok USING (k) JOIN voc USING (k)
+         ORDER BY frac_pct""")
+  )
 }
 
 /** `events` loader, tolerant of either physical timestamp layout the
@@ -2551,6 +3061,187 @@ object Events {
         last(col("v"), ignoreNulls = true).over(fill).as("filled_value"))
       .orderBy(col("user_id"), col("hour"))
   }
+
+  /** The q_hourly_events oracle, shared verbatim by its streaming twin. */
+  private[graft] val HourlyEventsSql: String =
+    """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
+         COUNT(*) AS n,
+         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1, 2
+         ORDER BY hour, event_type"""
+
+  /** The q_sessionize oracle, shared verbatim by its streaming twin. */
+  private[graft] val SessionizeSql: String =
+    """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+         w AS (SELECT user_id, event_id, ts,
+                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+               FROM e),
+         s AS (SELECT *, CASE WHEN prev_ts IS NULL
+                 OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
+                 THEN 1 ELSE 0 END AS new_session FROM w),
+         c AS (SELECT *, SUM(new_session) OVER (PARTITION BY user_id
+                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+               FROM s)
+         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+           COUNT(*) AS n_events, MIN(ts) AS session_start, MAX(ts) AS session_end
+         FROM c GROUP BY 1, 2 ORDER BY user_id, session_id"""
+
+  /** The q_scd2 oracle, shared verbatim by its streaming twin. */
+  private[graft] val Scd2Sql: String =
+    """WITH e AS (SELECT user_id, event_id, event_type,
+                 CAST(ts AS TIMESTAMP) AS ts FROM events),
+         w AS (SELECT *, LAG(event_type) OVER
+                 (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+               FROM e),
+         m AS (SELECT *, CASE WHEN prev IS NULL OR prev <> event_type
+                 THEN 1 ELSE 0 END AS chg FROM w),
+         v AS (SELECT *, SUM(chg) OVER (PARTITION BY user_id
+                 ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS version
+               FROM m),
+         i AS (SELECT user_id, CAST(version AS BIGINT) AS version,
+                 event_type, MIN(ts) AS valid_from,
+                 CAST(COUNT(*) AS BIGINT) AS n_events
+               FROM v GROUP BY 1, 2, 3)
+         SELECT user_id, version, event_type, valid_from,
+           LEAD(valid_from) OVER
+               (PARTITION BY user_id ORDER BY version) AS valid_to,
+           n_events,
+           CAST(LEAD(valid_from) OVER
+               (PARTITION BY user_id ORDER BY version)
+             IS NULL AS BIGINT) AS is_current
+         FROM i ORDER BY user_id, version"""
+
+  /** The q_outliers oracle, shared verbatim by its streaming twin. */
+  private[graft] val OutliersSql: String =
+    """WITH e AS (
+           SELECT event_id, event_type,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+           FROM events),
+         st AS (
+           SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
+             CAST(sum(c) AS HUGEINT) AS s,
+             sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss
+           FROM e GROUP BY event_type)
+         SELECT event_id, event_type, c AS value_cents
+         FROM e JOIN st USING (event_type)
+         WHERE (n*c - s) * (n*c - s) > 9 * (n*ss - s*s)
+         ORDER BY event_id"""
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // --- events / time (SURVEY §2.8, §2.10)
+    QueryRow("q_hourly_events", hourlyStats)(HourlyEventsSql),
+    QueryRow("q_sessionize", sessionize)(SessionizeSql),
+    // SCD2: gaps-and-islands over event_type changes; valid_to chains
+    // to the next version's valid_from, NULL on the current row (a
+    // far-future sentinel overflows int64-ns timestamp consumers)
+    QueryRow("q_scd2", scd2)(Scd2Sql),
+    // Hourly resample + forward fill: the value doubles pass through
+    // untouched (deterministic last = max event_id), so parity needs
+    // no float rule at all
+    QueryRow("q_resample", resample)(
+      """WITH e AS (SELECT user_id, event_id, value,
+                 date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour
+               FROM events),
+         h AS (SELECT user_id, hour, CAST(COUNT(*) AS BIGINT) AS n_events,
+                 arg_max(value, event_id) AS v
+               FROM e GROUP BY 1, 2),
+         s AS (SELECT user_id, MIN(hour) AS h0, MAX(hour) AS h1
+               FROM e GROUP BY 1),
+         g AS (SELECT user_id,
+                 unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+               FROM s)
+         SELECT g.user_id, g.hour,
+           COALESCE(h.n_events, 0) AS n_events,
+           last_value(h.v IGNORE NULLS) OVER (PARTITION BY g.user_id
+             ORDER BY g.hour ROWS UNBOUNDED PRECEDING) AS filled_value
+         FROM g LEFT JOIN h ON g.user_id = h.user_id AND g.hour = h.hour
+         ORDER BY g.user_id, g.hour"""),
+    QueryRow("q_funnel", funnel)(
+      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
+         v AS (SELECT user_id, MIN(ts) AS t_view FROM e
+               WHERE event_type = 'view' GROUP BY user_id),
+         c AS (SELECT e.user_id, MIN(e.ts) AS t_click FROM e
+               JOIN v ON e.user_id = v.user_id
+               WHERE e.event_type = 'click' AND e.ts > v.t_view
+               GROUP BY e.user_id),
+         p AS (SELECT e.user_id, MIN(e.ts) AS t_purchase FROM e
+               JOIN c ON e.user_id = c.user_id
+               WHERE e.event_type = 'purchase' AND e.ts > c.t_click
+               GROUP BY e.user_id)
+         SELECT u.user_id, v.t_view, c.t_click, p.t_purchase,
+           CAST(CASE WHEN p.t_purchase IS NOT NULL THEN 3
+                WHEN c.t_click IS NOT NULL THEN 2
+                WHEN v.t_view IS NOT NULL THEN 1
+                ELSE 0 END AS BIGINT) AS stage
+         FROM (SELECT DISTINCT user_id FROM e) u
+         LEFT JOIN v USING (user_id)
+         LEFT JOIN c USING (user_id)
+         LEFT JOIN p USING (user_id)
+         ORDER BY user_id"""),
+    QueryRow("q_retention", retention)(
+      """WITH e AS (SELECT DISTINCT user_id,
+               CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS d
+             FROM events),
+         f AS (SELECT user_id, MIN(d) AS cohort_day FROM e GROUP BY user_id)
+         SELECT cohort_day,
+           CAST(date_diff('day', cohort_day, d) AS BIGINT) AS day_offset,
+           CAST(COUNT(*) AS BIGINT) AS n_users
+         FROM e JOIN f USING (user_id)
+         GROUP BY 1, 2
+         ORDER BY 1, 2"""),
+    // CDC latest-wins compaction: newest row per (user_id, event_type),
+    // ties by event_id — total order, engine-independent winner
+    QueryRow("q_latest_version", latestVersion)(
+      """WITH r AS (SELECT user_id, event_type, event_id,
+             row_number() OVER (PARTITION BY user_id, event_type
+               ORDER BY ts DESC, event_id DESC) AS rn,
+             count(*) OVER (PARTITION BY user_id, event_type) AS n_versions
+           FROM events)
+         SELECT user_id, event_type, event_id AS latest_event_id,
+           CAST(n_versions AS BIGINT) AS n_versions
+         FROM r WHERE rn = 1
+         ORDER BY user_id, event_type"""),
+    // Integer-exact 3-sigma outliers: (n*x - s)^2 > 9*(n*ss - s^2)
+    // over integer cents, HUGEINT on the DuckDB side mirroring the
+    // Spark DECIMAL(38,0) accumulators
+    QueryRow("q_outliers", outliers)(OutliersSql),
+    // Robust (median/MAD) outliers: medians over integers are exact
+    // halves, so doubled units make med2/mad4 exact BIGINTs and the
+    // 3.5-modified-z gate cross-multiplies to pure integers
+    QueryRow("q_robust_outliers", robustOutliers)(
+      """WITH e AS (
+           SELECT event_id, event_type,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+           FROM events),
+         med AS (
+           SELECT event_type,
+             CAST(quantile_cont(c, 0.5) * 2 AS BIGINT) AS med2
+           FROM e GROUP BY event_type),
+         dev AS (
+           SELECT e.*, abs(e.c * 2 - med.med2) AS adev2
+           FROM e JOIN med USING (event_type)),
+         mad AS (
+           SELECT event_type,
+             CAST(quantile_cont(adev2, 0.5) * 2 AS BIGINT) AS mad4
+           FROM dev GROUP BY event_type)
+         SELECT event_id, event_type, c AS value_cents,
+           (13490 * adev2) // mad4 AS mz_bp
+         FROM dev JOIN mad USING (event_type)
+         WHERE mad4 > 0 AND adev2 * 1349 > mad4 * 3500
+         ORDER BY event_id"""),
+    QueryRow("q_event_paths", eventPaths(_, _))(
+      """WITH seq AS (
+           SELECT event_type AS e1,
+             lead(event_type, 1) OVER w AS e2,
+             lead(event_type, 2) OVER w AS e3
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+         SELECT e1 || '>' || e2 || '>' || e3 AS path,
+           CAST(count(*) AS BIGINT) AS n
+         FROM seq WHERE e2 IS NOT NULL AND e3 IS NOT NULL
+         GROUP BY 1 ORDER BY n DESC, path LIMIT 20""")
+  )
 }
 
 /** Client-side scalar/serialization functions from the reference
@@ -2576,4 +3267,18 @@ object Scalar {
         decode(unbase64(base64(encode(col("props"), "UTF-8"))), "UTF-8")
           .as("props_roundtrip"))
       .orderBy(col("event_id"))
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    QueryRow("q_date_format", jobDateFormat)(
+      """SELECT o_orderkey,
+         strftime(o_orderdate, '%Y%m%d%H%M%S%f') AS job_date_str
+         FROM orders
+         ORDER BY o_orderkey"""),
+    QueryRow("q_base64", base64Envelope)(
+      """SELECT event_id, base64(encode(props)) AS props_b64,
+         decode(from_base64(base64(encode(props)))) AS props_roundtrip
+         FROM events
+         ORDER BY event_id""")
+  )
 }

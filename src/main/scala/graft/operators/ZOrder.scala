@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryRow, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,4 +75,29 @@ object ZOrder {
       .withColumn("z", expr(mortonExpr("ck", "dy")).cast("long"))
       .drop("ck_raw", "dy_raw", "ck_min", "ck_max", "dy_min", "dy_max")
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Z-order layout: the SAME unrolled shift/mask interleave text is
+    // the oracle arithmetic (mortonExpr) — bit-identical by
+    // construction, so the whole curve is hash-pinned
+    QueryRow("q_zorder", zorderLayout(_, _))(
+      s"""WITH raw AS (SELECT o_orderkey,
+             CAST(o_custkey AS BIGINT) AS ck_raw,
+             CAST(date_diff('day', DATE '1970-01-01',
+               CAST(o_orderdate AS DATE)) AS BIGINT) AS dy_raw
+           FROM orders),
+         ext AS (SELECT min(ck_raw) AS ck_min, max(ck_raw) AS ck_max,
+             min(dy_raw) AS dy_min, max(dy_raw) AS dy_max FROM raw),
+         k AS (SELECT o_orderkey,
+             ((ck_raw - ck_min) * 65535) // greatest(1, ck_max - ck_min) AS ck,
+             ((dy_raw - dy_min) * 65535) // greatest(1, dy_max - dy_min) AS dy
+           FROM raw, ext),
+         z AS (SELECT o_orderkey, ck, dy,
+             CAST(${mortonExpr("ck", "dy")} AS BIGINT) AS z
+           FROM k)
+         SELECT o_orderkey, CAST(ck AS BIGINT) AS ck, CAST(dy AS BIGINT) AS dy,
+           z, CAST(z >> 28 AS BIGINT) AS zgroup
+         FROM z ORDER BY o_orderkey""")
+  )
 }

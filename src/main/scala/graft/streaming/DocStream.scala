@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.Tables
-import graft.operators.{Dedup, TwoPhase}
+import graft.{QueryRow, Tables}
+import graft.operators.{Corpus, Dedup, Text, TwoPhase}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -682,4 +682,54 @@ object DocStream {
        WHERE del.d >= 1
        ORDER BY del.doc_id"""
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // the SAME oracle pins the streaming twin: per-delivery span
+    // audit against the persistent anchor index must agree with the
+    // batch delta pass row-for-row
+    QueryRow("q_stream_substr", substrViaStream)(Text.deltaSubstrOracle),
+    // the long-ingest twin with live two-store compaction: the oracle
+    // replays the per-delivery incremental semantics brute-force —
+    // compaction must be a pure layout change, bit-for-bit
+    QueryRow("q_stream_substr_compact", substrCompactViaStream(_, _))(substrCompactOracle),
+    // the streaming twin shares the batch oracle: a delivery
+    // classified against the persisted index must equal the one-shot
+    // corpus-slice classification row-for-row
+    QueryRow("q_stream_winnow", winnowViaStream)(Text.deltaWinnowOracle),
+    QueryRow("q_stream_winnow_compact", winnowCompactViaStream(_, _))(winnowCompactOracle),
+    QueryRow("q_stream_lm_gate", lmGateViaStream)(Text.lmGateOracle),
+    // the SAME oracle pins the streaming twin: per-delivery scoring
+    // against the frozen persisted LM must equal the batch pass
+    QueryRow("q_stream_backoff", backoffViaStream)(Text.backoffScoreOracle),
+    // The SAME oracle pins the streaming twin: per-delivery scoring
+    // against the frozen model must agree with the batch pass
+    // row-for-row.
+    QueryRow("q_stream_nb_classify", nbClassifyViaStream)(Text.NbClassifySql),
+    // the streaming Complete-mode aggregation twin shares the exact
+    // batch oracle: the state-store counts must equal a one-shot
+    // groupBy to the row
+    QueryRow("q_stream_heavy_hitters", heavyHittersViaStream(_, _))(Corpus.HeavyHittersSql),
+    // The streaming ingest classifier replays corpus-then-delivery
+    // through the engine and must land on the batch twin's exact
+    // answer — SAME oracle.
+    QueryRow("q_stream_neardup", nearDupViaStream(_, _))(Dedup.DeltaNearDupSql),
+    // Streaming budget admission: the oracle is the one-shot prefix
+    // rule over doc_id order — the per-delivery two-phase prefix sums
+    // plus the carried scalar must reproduce the identical running
+    // totals and the identical mid-second-delivery cutoff
+    QueryRow("q_stream_token_budget", tokenBudgetViaStream(_, _))(
+      s"""WITH s AS (
+           SELECT doc_id,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (SELECT doc_id, n_tokens,
+           CAST(SUM(n_tokens) OVER (ORDER BY doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) AS cum_tokens
+           FROM s)
+         SELECT doc_id, n_tokens, cum_tokens FROM c
+         WHERE cum_tokens <= ${StreamTokenBudget}
+         ORDER BY doc_id""")
+  )
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{QueryRow, Tables}
+import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,4 +73,33 @@ object EmbedStream {
     StreamState.read(spark, outDir, drift(vecs).schema)
       .orderBy(col("delivery"))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // Streaming drift monitor: per-delivery centroid cosine against
+    // the frozen corpus centroid — exact 2^13-grid sums, deliveries
+    // keyed by vec_id parity (data-derived, trigger-invariant).
+    QueryRow("q_stream_embed_drift", embedDriftViaStream)(
+      s"""WITH q AS (
+           SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
+             CAST(floor(CAST(embedding[i] AS DOUBLE) * ${Similarity.ProtoQLit}) AS BIGINT) AS q
+           FROM embeddings,
+                LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
+         ref AS (SELECT pos, CAST(SUM(q) AS BIGINT) AS rs FROM q GROUP BY 1),
+         bat AS (SELECT vec_id % 2 AS delivery, pos,
+                   CAST(SUM(q) AS BIGINT) AS bs
+                 FROM q GROUP BY 1, 2),
+         dots AS (SELECT delivery, CAST(SUM(bs * rs) AS BIGINT) AS d,
+                    CAST(SUM(bs * bs) AS BIGINT) AS bn
+                  FROM bat JOIN ref USING (pos) GROUP BY 1),
+         rn AS (SELECT sqrt(CAST(CAST(SUM(rs * rs) AS BIGINT) AS DOUBLE))
+                  AS rnorm FROM ref),
+         cnt AS (SELECT vec_id % 2 AS delivery,
+                   CAST(COUNT(*) AS BIGINT) AS n_vecs
+                 FROM embeddings GROUP BY 1)
+         SELECT CAST(dots.delivery AS BIGINT) AS delivery, cnt.n_vecs,
+           CAST(d AS DOUBLE) / (sqrt(CAST(bn AS DOUBLE)) * rnorm) AS drift_cos
+         FROM dots JOIN cnt USING (delivery) CROSS JOIN rn
+         ORDER BY delivery""")
+  )
 }

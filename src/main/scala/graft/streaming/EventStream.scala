@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{QueryRow, Tables}
+import graft.operators.Events
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -503,4 +504,44 @@ object EventStream {
     graft.operators.Events.scd2Dimension(runToCompletion(spark, assigned,
       OutputMode.Append(), Seq("event_id"), RocksDbConfs))
   }
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    QueryRow("q_stream_hourly", hourlyViaStream)(Events.HourlyEventsSql),
+    // Streaming ingest dedup: the engine emits the distinct key set
+    // (which duplicate row survives is arrival-order-dependent; the key
+    // set is deterministic and hash-checkable).
+    QueryRow("q_stream_dedup", dedupViaStream)(
+      """SELECT DISTINCT user_id, event_type FROM events
+         ORDER BY user_id, event_type"""),
+    // Stream-static enrichment join (events stream × customer dim)
+    // aggregated per segment.
+    QueryRow("q_stream_enrich", enrichViaStream)(
+      """SELECT c.c_mktsegment, COUNT(*) AS n,
+         CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events e JOIN customer c ON e.user_id = c.c_custkey
+         GROUP BY 1 ORDER BY 1"""),
+    // Stream-stream event-time interval join: per purchase, the same
+    // user's views in the trailing 24h. The streaming engine produces
+    // the pair set; the rollup is deterministic on either engine.
+    QueryRow("q_stream_interval", intervalJoinViaStream(_, _))(
+      """SELECT p.event_id, p.user_id, CAST(COUNT(*) AS BIGINT) AS n_views
+         FROM (SELECT event_id, user_id, ts FROM events
+               WHERE event_type = 'purchase') p
+         JOIN (SELECT user_id, ts FROM events
+               WHERE event_type = 'view') v
+           ON p.user_id = v.user_id
+          AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 24 HOUR
+         GROUP BY p.event_id, p.user_id
+         ORDER BY p.event_id"""),
+    // Streaming twin: the stream must land exactly the batch rows
+    QueryRow("q_stream_outliers", outliersViaStream)(Events.OutliersSql),
+    // the transformWithState/RocksDB streaming twin reproduces the
+    // batch session aggregate exactly, so it shares the window oracle
+    QueryRow("q_stream_sessions", sessionsViaTws)(Events.SessionizeSql),
+    // the transformWithState streaming twin stamps versions with
+    // carried RocksDB state and rebuilds the same dimension rows from
+    // its own output, so it shares the batch SCD2 oracle verbatim
+    QueryRow("q_stream_scd2", scd2ViaTws)(Events.Scd2Sql)
+  )
 }

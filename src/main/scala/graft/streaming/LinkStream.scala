@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.QueryRow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -136,4 +137,13 @@ object LinkStream {
     (StreamState.compactState(spark, indexDir, RecordSchema,
         targetFileBytes),
       StreamState.compactState(spark, edgeDir, EdgeSchema, targetFileBytes))
+
+  /** This family's rows, each beside its DuckDB oracle. */
+  val rows: Seq[QueryRow] = Seq(
+    // The streaming twin's incremental edge emission (within-batch +
+    // batch-vs-index) unions to the one-shot pair set, and CC is
+    // edge-order-insensitive — same oracle, row-for-row.
+    QueryRow("q_stream_entity_resolution", entityResolutionViaStream(_, _))(
+      Linkage.EntityResolutionSql)
+  )
 }

@@ -15,6 +15,24 @@ class OperatorSpec extends AnyFunSuite {
   test("every SparkEntry query runs and every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet),
       s"orphan oracle keys: ${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
+    // both views derive from one registry: the same 252 rows, each
+    // declared once, in exactly one family
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
+      s"queries without oracle: ${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}")
+    assert(SparkEntry.queries.size == 252)
+    val declared = SparkEntry.families.flatMap { case (f, rows) => rows.map(_.name -> f) }
+    val families = declared.groupBy(_._1).map { case (n, fs) => n -> fs.map(_._2) }
+    assert(families.filter(_._2.size != 1).isEmpty,
+      s"rows not in exactly one family: ${families.filter(_._2.size != 1)}")
+    assert(declared.size == 252 && families.keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.families.map(_._1).distinct.size == SparkEntry.families.size)
+    // a second declaration of a name fails construction instead of
+    // replacing the first; building the index renders no oracle
+    val r = QueryRow("q_x", (s, _) => s.emptyDataFrame)(sys.error("oracle rendered"))
+    assert(SparkEntry.index(Seq("a" -> Seq(r))).keySet == Set("q_x"))
+    intercept[IllegalArgumentException](SparkEntry.index(Seq("a" -> Seq(r), "b" -> Seq(r))))
+    intercept[IllegalArgumentException](SparkEntry.index(Seq("a" -> Seq(r, r))))
+    intercept[IllegalArgumentException](SparkEntry.index(Seq("a" -> Seq(r), "a" -> Nil)))
   }
 
   test("entry returns rows (driver smoke contract)") {

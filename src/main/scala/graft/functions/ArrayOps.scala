@@ -1,47 +1,54 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.Kernel
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for hot array kernels.
   *
   * Spark's higher-order functions (`zip_with` + `aggregate`) evaluate
   * interpreted, one boxed lambda call per element — fine for a few
-  * rows, ruinous inside an n×m similarity scan. These expressions
-  * generate a tight primitive loop inside whole-stage codegen, which
-  * is the documented escalation path when built-in operators can't
+  * rows, ruinous inside an n×m similarity scan. Each kernel here is a
+  * primitive JVM loop that whole-stage codegen calls inline, which is
+  * the documented escalation path when built-in operators can't
   * express the kernel efficiently (custom Expression > UDF).
+  *
+  * The kernel contract, shared by every kernel through one expression
+  * shape ([[org.apache.spark.sql.graftbridge.Kernel]]):
+  *  - input types are declared (`ExpectsInputTypes`): a mismatch fails
+  *    analysis with `UNEXPECTED_INPUT_TYPE`, nothing is cast;
+  *  - null in gives null out: any null column argument makes the result
+  *    null, and the body never sees a null argument;
+  *  - one Scala body serves both paths: `ArrayOps.<name>` over Catalyst
+  *    values (`ArrayData`, `UTF8String`, primitives) is what interpreted
+  *    `eval` and the generated code both call. Parameters fixed per
+  *    query (`k`, `w`, the MinHash `as`/`bs`) travel as literals, JVM
+  *    arrays as JVM arrays, so nothing converts per row.
+  *
+  * Below, each kernel is a column wrapper followed by its body of the
+  * same name.
   */
+object ArrayOps {
+  // accepted types of one argument
+  private val LongsIn = Seq(ArrayType(LongType))
+  private val StringsIn = Seq(ArrayType(StringType))
+  private val StringIn = Seq(StringType)
+  private val LongIn = Seq(LongType)
+  // result types
+  private val LongsOut = ArrayType(LongType, containsNull = false)
+  private val StringsOut = ArrayType(StringType, containsNull = false)
 
-/** Integer dot product of two `array<bigint>` columns:
-  * `Σ a[i]*b[i]` over the common prefix. Null if either side is null.
-  */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+  import Kernel.column
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_long"
+  /** Integer dot product of two `array<bigint>` columns:
+    * `Σ a[i]*b[i]` over the common prefix. */
+  def dot_long(a: Column, b: Column): Column =
+    column("dot_long", LongType, LongsIn, LongsIn)(a, b)()
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckSuccess
-    else TypeCheckFailure(
-      s"dot_long requires array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def dot_long(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -49,56 +56,18 @@ case class DotLong(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** Count of positions where two `array<bigint>` columns agree over
+    * their common prefix — the MinHash signature-agreement kernel
+    * (estimated Jaccard = agree_count / k). Replaces the interpreted
+    * `size(filter(zip_with(a, b, ==), x => x))` HOF chain: one boxed
+    * lambda call per slot per candidate pair becomes a primitive loop
+    * inside whole-stage codegen, and the post-banding candidate set is
+    * the big intermediate at corpus scale.
+    */
+  def agree_count(a: Column, b: Column): Column =
+    column("agree_count", LongType, LongsIn, LongsIn)(a, b)()
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Count of positions where two `array<bigint>` columns agree over
-  * their common prefix — the MinHash signature-agreement kernel
-  * (estimated Jaccard = agree_count / k). Replaces the interpreted
-  * `size(filter(zip_with(a, b, ==), x => x))` HOF chain: one boxed
-  * lambda call per slot per candidate pair becomes a primitive loop
-  * inside whole-stage codegen, and the post-banding candidate set is
-  * the big intermediate at corpus scale. Null if either side is null.
-  */
-case class AgreeCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "agree_count"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckSuccess
-    else TypeCheckFailure(
-      s"agree_count requires array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def agree_count(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -106,59 +75,20 @@ case class AgreeCount(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $acc++;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** Asymmetric-distance (ADC) lookup for product-quantized vectors:
+    * `lut` is a query's flattened per-subspace distance table
+    * (M·K entries, entry m·K+k = the query's exact squared distance term
+    * against centroid k of subspace m) and `codes` a candidate's M PQ
+    * codes; the result is Σₘ lut[m·K + codes[m]] — the 100 TB scoring
+    * kernel: M table lookups per candidate instead of a full-dimension
+    * dot product (the candidate scan is the big intermediate; a HOF
+    * here would pay a boxed lambda per subspace per candidate). K is
+    * the per-subspace codebook size.
+    */
+  def pq_adc(lut: Column, codes: Column, k: Int): Column =
+    column("pq_adc", LongType, LongsIn, LongsIn)(lut, codes)(k)
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AgreeCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Asymmetric-distance (ADC) lookup for product-quantized vectors:
-  * `lut` is a query's flattened per-subspace distance table
-  * (M·K entries, entry m·K+k = the query's exact squared distance term
-  * against centroid k of subspace m) and `codes` a candidate's M PQ
-  * codes; the result is Σₘ lut[m·K + codes[m]] — the 100 TB scoring
-  * kernel: M table lookups per candidate instead of a full-dimension
-  * dot product. Codegen'd primitive loop (the candidate scan is the
-  * big intermediate; a HOF here would pay a boxed lambda per subspace
-  * per candidate). K is the per-subspace codebook size. Null if either
-  * side is null.
-  */
-case class PqAdc(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pq_adc"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckSuccess
-    else TypeCheckFailure(
-      s"pq_adc requires array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val lut = a.asInstanceOf[ArrayData]
-    val codes = b.asInstanceOf[ArrayData]
+  def pq_adc(lut: ArrayData, codes: ArrayData, k: Int): Long = {
     val m = codes.numElements()
     val n = lut.numElements()
     var acc = 0L
@@ -168,97 +98,50 @@ case class PqAdc(left: Expression, right: Expression, k: Int)
       // UnsafeArrayData.getLong does no bounds check: a malformed code
       // would silently read out-of-bounds memory, so validate here
       if (c < 0 || c >= k || i * k + c >= n)
-        throw PqAdc.badCode(c, i, k, n)
+        throw new IllegalArgumentException(
+          s"pq_adc: code $c at subspace $i out of range (codebook size $k, " +
+            s"lut entries $n) — codes must be in [0, $k) and the lut " +
+            "must carry M*K entries")
       acc += lut.getLong(i * k + c.toInt); i += 1
     }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val c = ctx.freshName("c")
-      val n = ctx.freshName("n")
-      val cls = PqAdc.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |int $m = $b.numElements();
-         |int $n = $a.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  long $c = $b.getLong($i);
-         |  if ($c < 0 || $c >= $k || $i * $k + $c >= $n) {
-         |    throw $cls.badCode($c, $i, $k, $n);
-         |  }
-         |  $acc += $a.getLong($i * $k + (int) $c);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** SQ8 asymmetric scoring kernel: `packed` is a vector's 64 int8
+    * scalar-quantization codes packed little-endian 8-per-long (the
+    * 1-byte-per-dimension index layout — an 8× cut vs float32 and the
+    * reason SQ8 is the default billion-vector compression tier);
+    * `w` is the query's per-dimension weight table w_i = q_i·step_i.
+    * Returns Σ w[i]·code[i] in exact long arithmetic — for a unit-norm
+    * corpus argmax of this is argmax reconstructed inner product (the
+    * per-query Σ q_i·lo_i constant drops out of the argmax). Codes are
+    * unpacked with shifts in the hot loop: no per-pair array
+    * materialization. */
+  def sq_wdot(w: Column, packed: Column): Column =
+    column("sq_wdot", LongType, LongsIn, LongsIn)(w, packed)()
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdc =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqAdc {
-  /** Shared by the interpreted and generated paths (codegen calls it
-    * via MODULE$, keeping the hot-loop bytecode small). */
-  def badCode(c: Long, i: Int, k: Int, lutLen: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"pq_adc: code $c at subspace $i out of range (codebook size $k, " +
-        s"lut entries $lutLen) — codes must be in [0, $k) and the lut " +
-        "must carry M*K entries")
-}
-
-/** SQ8 asymmetric scoring kernel: `right` is a vector's 64 int8
-  * scalar-quantization codes packed little-endian 8-per-long (the
-  * 1-byte-per-dimension index layout — an 8× cut vs float32 and the
-  * reason SQ8 is the default billion-vector compression tier);
-  * `left` is the query's per-dimension weight table w_i = q_i·step_i.
-  * Returns Σ w[i]·code[i] in exact long arithmetic — for a unit-norm
-  * corpus argmax of this is argmax reconstructed inner product (the
-  * per-query Σ q_i·lo_i constant drops out of the argmax). Codes are
-  * unpacked with shifts in the hot loop: no per-pair array
-  * materialization, stays inside whole-stage codegen. */
-case class SqWdot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sq_wdot"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckSuccess
-    else TypeCheckFailure(
-      s"sq_wdot requires array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val w = a.asInstanceOf[ArrayData]
-    val packed = b.asInstanceOf[ArrayData]
+  def sq_wdot(w: ArrayData, packed: ArrayData): Long = {
     val m = packed.numElements()
     if (w.numElements() != m * 8)
-      throw SqWdot.badShape(w.numElements(), m)
+      throw new IllegalArgumentException(
+        s"sq_wdot: weight table has ${w.numElements()} entries but packed codes carry " +
+          s"$m longs (= ${m * 8} codes) — the weight table " +
+          "must have exactly 8 entries per packed long")
+    def nullSlot(side: String, i: Int) = new IllegalArgumentException(
+      s"sq_wdot: null element at $side[$i] — weight tables and packed " +
+        "codes must be null-free (getLong would silently read 0)")
     var acc = 0L
     var j = 0
     while (j < m) {
       // getLong on a null slot silently reads 0 — fail fast instead
       // (a bitmap check, cheap; the SQL surface accepts nullable
       // arrays, so this is the only place the hole can be closed)
-      if (packed.isNullAt(j)) throw SqWdot.nullSlot("packed", j)
+      if (packed.isNullAt(j)) throw nullSlot("packed", j)
       val p = packed.getLong(j)
       var b8 = 0
       while (b8 < 8) {
         val wi = j * 8 + b8
-        if (w.isNullAt(wi)) throw SqWdot.nullSlot("weights", wi)
+        if (w.isNullAt(wi)) throw nullSlot("weights", wi)
         acc += w.getLong(wi) * ((p >>> (8 * b8)) & 0xFFL)
         b8 += 1
       }
@@ -267,112 +150,44 @@ case class SqWdot(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val b8 = ctx.freshName("b8")
-      val acc = ctx.freshName("acc")
-      val p = ctx.freshName("p")
-      val wi = ctx.freshName("wi")
-      val cls = SqWdot.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |int $m = $b.numElements();
-         |if ($a.numElements() != $m * 8) {
-         |  throw $cls.badShape($a.numElements(), $m);
-         |}
-         |long $acc = 0L;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  if ($b.isNullAt($j)) {
-         |    throw $cls.nullSlot("packed", $j);
-         |  }
-         |  long $p = $b.getLong($j);
-         |  for (int $b8 = 0; $b8 < 8; $b8++) {
-         |    int $wi = $j * 8 + $b8;
-         |    if ($a.isNullAt($wi)) {
-         |      throw $cls.nullSlot("weights", $wi);
-         |    }
-         |    $acc += $a.getLong($wi) * (($p >>> (8 * $b8)) & 0xFFL);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003
+    * — the MOSS algorithm): a rolling Rabin–Karp polynomial hash over
+    * every k-char gram of the input string, then a RIGHTMOST-MIN
+    * winnowing selection — each w-wide window of consecutive gram
+    * hashes contributes its minimum, ties ALWAYS to the rightmost
+    * position, and consecutive windows re-selecting the same position
+    * collapse to one fingerprint. (This is a deterministic variant of
+    * the paper's "robust winnowing", which re-selects the PREVIOUS
+    * window's hash on ties; on repeated grams the rightmost rule emits
+    * a few extra fingerprints. Engine, oracle, and specs all implement
+    * this same rule.) The guarantee is unchanged: any shared substring
+    * of length ≥ k+w−1 between two documents yields at least one SHARED
+    * fingerprint, while only ~2/(w+1) of positions are kept.
+    *
+    * One O(n) primitive JVM loop riding the scan (the rolling update
+    * `h' = (h − c·B^{k−1})·B + c_new mod M` — never a per-gram
+    * rescan), emitting `(pos << 31) | hash` packed longs so the output
+    * stays a flat `array<bigint>` (M < 2³¹ keeps the hash in the low
+    * bits; positions are document offsets, far under 2³²). Character
+    * basis is UNICODE CODE POINTS: positions and gram hashes are
+    * computed over the codepoint sequence, not UTF-16 code units, so
+    * anchor offsets agree with Spark `substring` and DuckDB
+    * `substr`/`ord(substr(…))` on ALL text — an emoji or supplementary
+    * CJK char before a match shifts both sides identically instead of
+    * silently desyncing the substring family's span arithmetic.
+    *
+    * Documents shorter than k emit no fingerprints; documents with
+    * fewer than w grams winnow a single window over what exists.
+    */
+  def winnow_pack(text: Column, k: Int, w: Int, base: Long, mod: Long): Column =
+    column("winnow_pack", LongsOut, StringIn)(text)(k, w, base, mod)
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SqWdot =
-    copy(left = newLeft, right = newRight)
-}
-
-object SqWdot {
-  /** Shared by the interpreted and generated paths. */
-  def badShape(wLen: Int, packedLen: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"sq_wdot: weight table has $wLen entries but packed codes carry " +
-        s"$packedLen longs (= ${packedLen * 8} codes) — the weight table " +
-        "must have exactly 8 entries per packed long")
-
-  /** Shared by the interpreted and generated paths. */
-  def nullSlot(side: String, i: Int): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"sq_wdot: null element at $side[$i] — weight tables and packed " +
-        "codes must be null-free (getLong would silently read 0)")
-}
-
-/** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003
-  * — the MOSS algorithm): a rolling Rabin–Karp polynomial hash over
-  * every k-char gram of the input string, then a RIGHTMOST-MIN
-  * winnowing selection — each w-wide window of consecutive gram
-  * hashes contributes its minimum, ties ALWAYS to the rightmost
-  * position, and consecutive windows re-selecting the same position
-  * collapse to one fingerprint. (This is a deterministic variant of
-  * the paper's "robust winnowing", which re-selects the PREVIOUS
-  * window's hash on ties; on repeated grams the rightmost rule emits
-  * a few extra fingerprints. Engine, oracle, and specs all implement
-  * this same rule.) The guarantee is unchanged: any shared substring
-  * of length ≥ k+w−1 between two documents yields at least one SHARED
-  * fingerprint, while only ~2/(w+1) of positions are kept.
-  *
-  * One O(n) primitive JVM loop riding the scan — codegen-capable via
-  * doGenCode, and JIT-tight either way, the [[MinHashSig]] note (the rolling
-  * update `h' = (h − c·B^{k−1})·B + c_new mod M` — never a per-gram
-  * rescan), emitting `(pos << 31) | hash` packed longs so the output
-  * stays a flat `array<bigint>` (M < 2³¹ keeps the hash in the low
-  * bits; positions are document offsets, far under 2³²). Character
-  * basis is UNICODE CODE POINTS (r15): positions and gram hashes are
-  * computed over the codepoint sequence, not UTF-16 code units, so
-  * anchor offsets agree with Spark `substring` and DuckDB
-  * `substr`/`ord(substr(…))` on ALL text — an emoji or supplementary
-  * CJK char before a match shifts both sides identically instead of
-  * silently desyncing the substring family's span arithmetic.
-  *
-  * Documents shorter than k emit no fingerprints; documents with
-  * fewer than w grams winnow a single window over what exists.
-  */
-case class WinnowPack(child: Expression, k: Int, w: Int, base: Long, mod: Long)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_pack"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"winnow_pack requires string, got ${other.simpleString}")
-    }
-  }
-
-  private def compute(s: org.apache.spark.unsafe.types.UTF8String): Array[Long] = {
-    // codepoint basis: one int per character as SQL substr counts
-    // them — identical to the old UTF-16 loop on BMP text, correct
-    // (instead of silently desynced) beyond it
+  def winnow_pack(s: UTF8String, k: Int, w: Int, base: Long, mod: Long): ArrayData = {
+    // codepoint basis: one int per character as SQL substr counts them
     val cp = s.toString.codePoints().toArray
     val n = cp.length
     val m = n - k + 1
-    if (m <= 0) return Array.emptyLongArray
+    if (m <= 0) return new GenericArrayData(Array.emptyLongArray)
     // gram hashes by one rolling pass
     val hs = new Array[Long](m)
     var bk1 = 1L // B^{k-1} mod M
@@ -407,248 +222,45 @@ case class WinnowPack(child: Expression, k: Int, w: Int, base: Long, mod: Long)
       }
       s0 += 1
     }
-    java.util.Arrays.copyOf(out, nOut)
+    new GenericArrayData(java.util.Arrays.copyOf(out, nOut))
   }
 
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("winnowSelf", this, classOf[WinnowPack].getName)
-    nullSafeCodeGen(ctx, ev, s => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $self.computePublic($s));
-       """.stripMargin
-    })
-  }
-
-  /** Codegen entry point. */
-  def computePublic(s: org.apache.spark.unsafe.types.UTF8String): Array[Long] =
-    compute(s)
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowPack =
-    copy(child = newChild)
-}
-
-object ArrayOps {
-  /** Column wrapper: exact integer dot product. */
-  def dot_long(a: Column, b: Column): Column =
-    Bridge.column(DotLong(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Column wrapper: winnowing fingerprints, packed (pos<<31)|hash. */
-  def winnow_pack(text: Column, k: Int, w: Int, base: Long, mod: Long): Column =
-    Bridge.column(WinnowPack(Bridge.expression(text), k, w, base, mod))
-
-  /** Column wrapper: PQ asymmetric-distance lookup (k = codebook size
-    * per subspace). */
-  def pq_adc(lut: Column, codes: Column, k: Int): Column =
-    Bridge.column(PqAdc(Bridge.expression(lut), Bridge.expression(codes), k))
-
-  /** Column wrapper: Σ w[i]·code[i] over packed SQ8 codes. */
-  def sq_wdot(w: Column, packed: Column): Column =
-    Bridge.column(SqWdot(Bridge.expression(w), Bridge.expression(packed)))
-
-  /** Column wrapper: count of agreeing slots of two long arrays. */
-  def agree_count(a: Column, b: Column): Column =
-    Bridge.column(AgreeCount(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Column wrapper: k-component MinHash signature. */
+  /** MinHash signature of an array of non-negative base hashes:
+    * `out[i] = min over h of (as(i)*h + bs(i)) mod p`. One primitive
+    * double loop instead of k interpreted lambda passes. Inputs must
+    * satisfy as(i) < 2³¹ and h < 2³¹ so products stay in long range.
+    */
   def minhash_sig(hashes: Column, as: Seq[Long], bs: Seq[Long], p: Long): Column =
-    Bridge.column(MinHashSig(Bridge.expression(hashes),
-      as.toArray, bs.toArray, p))
+    column("minhash_sig", LongsOut, LongsIn)(hashes)(as.toArray, bs.toArray, p)
 
-  /** Column wrapper: 64-bit SimHash. */
-  def simhash_sig(hashes: Column): Column =
-    Bridge.column(SimHashSig(Bridge.expression(hashes)))
+  def minhash_sig(hs: ArrayData, as: Array[Long], bs: Array[Long], p: Long): ArrayData =
+    minhash(hs.numElements(), hs.getLong, as, bs, p)
 
-  /** Column wrapper: distinct k-word shingles of a word array. */
-  def shingles(ws: Column, k: Int): Column =
-    Bridge.column(Shingles(Bridge.expression(ws), k))
-
-  /** Non-distinct shingles — every occurrence, document order (corpus
-    * n-gram counting). */
-  def shinglesAll(ws: Column, k: Int): Column =
-    Bridge.column(Shingles(Bridge.expression(ws), k, distinct = false))
-
-  /** Column wrapper: power-of-two grid quantization to array<bigint>. */
-  def quantize_q(xs: Column, scale: Double): Column =
-    Bridge.column(QuantizeQ(Bridge.expression(xs), scale))
-
-  /** Column wrapper: fused hash+MinHash signature from shingle strings. */
+  /** MinHash signature computed DIRECTLY from the shingle strings: fuses
+    * the per-shingle base hash (Spark's xxhash64, seed 42 — bit-identical
+    * to the `xxhash64()` builtin on strings), the positive mod-2³¹, and
+    * the k-component running min into one primitive double loop. The
+    * unfused form paid an interpreted `transform()` lambda per shingle
+    * before the signature aggregate even started.
+    */
   def minhash_sig_str(ss: Column, as: Seq[Long], bs: Seq[Long], p: Long): Column =
-    Bridge.column(MinHashSigStr(Bridge.expression(ss),
-      as.toArray, bs.toArray, p))
+    column("minhash_sig_str", LongsOut, StringsIn)(ss)(as.toArray, bs.toArray, p)
 
-  /** Column wrapper: fused hash+SimHash from token strings. */
-  def simhash_sig_str(ss: Column): Column =
-    Bridge.column(SimHashSigStr(Bridge.expression(ss)))
-
-  /** Column wrapper: fused MD5-bit SimHash from token strings (the
-    * externally-replayable variant — see [[SimHashSigMd5]]). */
-  def simhash_sig_md5(ss: Column): Column =
-    Bridge.column(SimHashSigMd5(Bridge.expression(ss)))
-
-  /** Column wrapper: per-band LSH bucket keys of a signature array. */
-  def band_keys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    Bridge.column(BandKeys(Bridge.expression(sig), bands, rowsPerBand))
-
-  /** Column wrapper: maximal common substring extent around a
-    * k-char anchor collision — `[start_a, start_b, len]`. */
-  def substr_extent(ta: Column, tb: Column, pa: Column, pb: Column,
-      k: Int): Column =
-    Bridge.column(SubstrExtent(Bridge.expression(ta), Bridge.expression(tb),
-      Bridge.expression(pa), Bridge.expression(pb), k))
-}
-
-/** MinHash signature of an array of non-negative base hashes:
-  * `out[i] = min over h of (as(i)*h + bs(i)) mod p`. One primitive
-  * double loop in codegen instead of k interpreted lambda passes.
-  * Inputs must satisfy as(i) < 2³¹ and h < 2³¹ so products stay in
-  * long range.
-  */
-case class MinHashSig(child: Expression, as: Array[Long], bs: Array[Long],
-    p: Long) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"minhash_sig requires array<bigint>, got ${other.simpleString}")
-    }
-  }
-
-  private def compute(hs: ArrayData): Array[Long] = {
-    val k = as.length
-    val out = Array.fill(k)(Long.MaxValue)
-    val n = hs.numElements()
-    var j = 0
-    while (j < n) {
-      val h = hs.getLong(j)
-      var i = 0
-      while (i < k) {
-        val v = (as(i) * h + bs(i)) % p
-        if (v < out(i)) out(i) = v
-        i += 1
-      }
-      j += 1
-    }
-    out
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      compute(input.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashSelf", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, hs => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $self.computePublic($hs));
-       """.stripMargin
-    })
-  }
-
-  /** Codegen entry point (doGenCode calls back into the JVM loop —
-    * the loop itself is primitive and JIT-friendly either way). */
-  def computePublic(hs: ArrayData): Array[Long] = compute(hs)
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash from an array of token hashes: per-bit ±1 votes,
-  * positive-vote bits set. Single primitive loop.
-  */
-case class SimHashSig(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_sig"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"simhash_sig requires array<bigint>, got ${other.simpleString}")
-    }
-  }
-
-  def computePublic(hs: ArrayData): Long = {
-    val votes = new Array[Int](64)
-    val n = hs.numElements()
-    var j = 0
-    while (j < n) {
-      val h = hs.getLong(j)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      j += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhashSelf", this, classOf[SimHashSig].getName)
-    nullSafeCodeGen(ctx, ev, hs => s"${ev.value} = $self.computePublic($hs);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
-}
-
-/** MinHash signature computed DIRECTLY from the shingle strings: fuses
-  * the per-shingle base hash (Spark's xxhash64, seed 42 — bit-identical
-  * to the `xxhash64()` builtin on strings), the positive mod-2³¹, and
-  * the k-component running min into one primitive double loop. The
-  * unfused form paid an interpreted `transform()` lambda per shingle
-  * before the signature aggregate even started.
-  */
-case class MinHashSigStr(child: Expression, as: Array[Long], bs: Array[Long],
-    p: Long) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig_str"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"minhash_sig_str requires array<string>, got ${other.simpleString}")
-    }
-  }
+  def minhash_sig_str(ss: ArrayData, as: Array[Long], bs: Array[Long], p: Long): ArrayData =
+    minhash(ss.numElements(), { j =>
+      val h0 = XxHash64Function.hash(ss.getUTF8String(j), StringType, 42L)
+      ((h0 % M31) + M31) % M31 // pmod: same as pmod(xxhash64(s), 2^31)
+    }, as, bs, p)
 
   private val M31 = 1L << 31
 
-  def computePublic(ss: ArrayData): ArrayData = {
+  private def minhash(n: Int, hashAt: Int => Long, as: Array[Long],
+      bs: Array[Long], p: Long): ArrayData = {
     val k = as.length
     val out = Array.fill(k)(Long.MaxValue)
-    val n = ss.numElements()
     var j = 0
     while (j < n) {
-      val s = ss.getUTF8String(j)
-      val h0 = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(s, org.apache.spark.sql.types.StringType, 42L)
-      val h = ((h0 % M31) + M31) % M31 // pmod: same as pmod(xxhash64(s), 2^31)
+      val h = hashAt(j)
       var i = 0
       while (i < k) {
         val v = (as(i) * h + bs(i)) % p
@@ -657,123 +269,43 @@ case class MinHashSigStr(child: Expression, as: Array[Long], bs: Array[Long],
       }
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** 64-bit SimHash from an array of token hashes: per-bit ±1 votes,
+    * positive-vote bits set. Single primitive loop. */
+  def simhash_sig(hashes: Column): Column =
+    column("simhash_sig", LongType, LongsIn)(hashes)()
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashStrSelf", this,
-      classOf[MinHashSigStr].getName)
-    nullSafeCodeGen(ctx, ev, ss => s"${ev.value} = $self.computePublic($ss);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigStr =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash computed directly from the token strings — same
-  * fusion as [[MinHashSigStr]]: xxhash64 (seed 42) per token feeds the
-  * per-bit vote loop without an interpreted hashing pass.
-  */
-case class SimHashSigStr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_sig_str"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"simhash_sig_str requires array<string>, got ${other.simpleString}")
-    }
-  }
-
-  def computePublic(ss: ArrayData): Long = {
+  def simhash_sig(hs: ArrayData): Long = {
     val votes = new Array[Int](64)
-    val n = ss.numElements()
     var j = 0
-    while (j < n) {
-      val s = ss.getUTF8String(j)
-      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(s, org.apache.spark.sql.types.StringType, 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      j += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
+    while (j < hs.numElements()) { vote(votes, hs.getLong(j)); j += 1 }
+    majority(votes)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** 64-bit SimHash fused from token strings, with the per-token 64
+    * vote bits derived from the token's MD5 — the one string hash
+    * every SQL engine exposes verbatim, which makes the WHOLE signature
+    * replayable as plain SQL in an independent engine: `(h1 << 32) | h2`
+    * where h1/h2 are the first/second 8 hex chars of `md5(token)` parsed
+    * as integers (so bit b < 32 is bit b of h2 and bit 32+b is bit b of
+    * h1 — exactly the bits `conv(substring(md5(w), 1|9, 8), 16, 10)`
+    * yields in any dialect). This is what turns the simhash near-dup
+    * surface from "pinned-by-spec" into a row-for-row external oracle:
+    * signatures, hamming distances, and the pair set all recompute
+    * bit-identically off engine. MD5 per token costs ~4× xxhash64 but
+    * token hashing is a vanishing fraction of the pair-join query, and
+    * the digest instance is thread-local — no per-row allocation.
+    */
+  def simhash_sig_md5(ss: Column): Column =
+    column("simhash_sig_md5", LongType, StringsIn)(ss)()
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhashStrSelf", this,
-      classOf[SimHashSigStr].getName)
-    nullSafeCodeGen(ctx, ev, ss => s"${ev.value} = $self.computePublic($ss);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSigStr =
-    copy(child = newChild)
-}
-
-object SimHashSigMd5 {
-  /** MD5 is stateful — one digest instance per thread, reset per
-    * token, so the fused loop never re-allocates the engine. */
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private[functions] def digest: java.security.MessageDigest = digests.get()
-}
-
-/** 64-bit SimHash fused from token strings like [[SimHashSigStr]],
-  * but the per-token 64 vote bits derive from the token's MD5 — the
-  * one string hash every SQL engine exposes verbatim, which makes the
-  * WHOLE signature replayable as plain SQL in an independent engine:
-  * `(h1 << 32) | h2` where h1/h2 are the first/second 8 hex chars of
-  * `md5(token)` parsed as integers (so bit b < 32 is bit b of h2 and
-  * bit 32+b is bit b of h1 — exactly the bits
-  * `conv(substring(md5(w), 1|9, 8), 16, 10)` yields in any dialect).
-  * This is what turns the simhash near-dup surface from
-  * "pinned-by-spec" into a row-for-row external oracle: signatures,
-  * hamming distances, and the pair set all recompute bit-identically
-  * off engine. MD5 per token costs ~4× xxhash64 but token hashing is
-  * a vanishing fraction of the pair-join query, and the digest
-  * instance is thread-local — no per-row allocation.
-  */
-case class SimHashSigMd5(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_sig_md5"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"simhash_sig_md5 requires array<string>, got ${other.simpleString}")
-    }
-  }
-
-  def computePublic(ss: ArrayData): Long = {
-    val md = SimHashSigMd5.digest
+  def simhash_sig_md5(ss: ArrayData): Long = {
+    val md = digests.get()
     val votes = new Array[Int](64)
-    val n = ss.numElements()
     var j = 0
-    while (j < n) {
+    while (j < ss.numElements()) {
       md.reset()
       val d = md.digest(ss.getUTF8String(j).getBytes)
       // hex chars 1-8 = digest bytes 0-3 big-endian (h1), 9-16 = bytes
@@ -782,253 +314,150 @@ case class SimHashSigMd5(child: Expression)
         ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
       val h2 = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
         ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-      val h = (h1 << 32) | h2
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
+      vote(votes, (h1 << 32) | h2)
       j += 1
     }
+    majority(votes)
+  }
+
+  /** MD5 is stateful — one digest instance per thread, reset per
+    * token, so the fused loop never re-allocates the engine. */
+  private val digests = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** One SimHash vote: +1 for each set bit of `h`, −1 for each clear one. */
+  private def vote(votes: Array[Int], h: Long): Unit = {
+    var b = 0
+    while (b < 64) {
+      if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+      b += 1
+    }
+  }
+
+  /** The signature: bit b set where the votes for b are positive. */
+  private def majority(votes: Array[Int]): Long = {
     var out = 0L
     var b = 0
     while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
     out
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** LSH band keys of a signature: `out[b] = xxhash64(b, sig[b*r .. b*r+r))`
+    * for each of `bands` bands — bit-identical to the builtin
+    * `xxhash64(b, slice(sig, b*r+1, r))` (seed 42; int seed-fold then
+    * per-element long fold, matching Spark's multi-arg hash semantics),
+    * but one primitive loop instead of an interpreted transform+slice
+    * lambda allocating a sub-array per band per row.
+    */
+  def band_keys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    column("band_keys", LongsOut, LongsIn)(sig)(bands, rowsPerBand)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhashMd5Self", this,
-      classOf[SimHashSigMd5].getName)
-    nullSafeCodeGen(ctx, ev, ss => s"${ev.value} = $self.computePublic($ss);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSigMd5 =
-    copy(child = newChild)
-}
-
-/** LSH band keys of a signature: `out[b] = xxhash64(b, sig[b*r .. b*r+r))`
-  * for each of `bands` bands — bit-identical to the builtin
-  * `xxhash64(b, slice(sig, b*r+1, r))` (seed 42; int seed-fold then
-  * per-element long fold, matching Spark's multi-arg hash semantics),
-  * but one primitive loop instead of an interpreted transform+slice
-  * lambda allocating a sub-array per band per row.
-  */
-case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "band_keys"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"band_keys requires array<bigint>, got ${other.simpleString}")
-    }
-  }
-
-  def computePublic(sig: ArrayData): ArrayData = {
-    val fn = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+  def band_keys(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val n = sig.numElements()
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
-      var h = fn.hash(b, org.apache.spark.sql.types.IntegerType, 42L)
+      var h = XxHash64Function.hash(b, IntegerType, 42L)
       var i = b * rowsPerBand
       val end = math.min(i + rowsPerBand, n)
       while (i < end) {
-        h = fn.hash(sig.getLong(i), LongType, h); i += 1
+        h = XxHash64Function.hash(sig.getLong(i), LongType, h); i += 1
       }
       out(b) = h
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** Power-of-two grid quantization of a float/double array:
+    * `out[i] = floor(x[i] * scale)` as longs, one primitive loop. The
+    * HOF form (`transform(arr, x -> ...)`) evaluates an interpreted boxed
+    * lambda per element — this appears on EVERY similarity-query input
+    * row. Multiplying by a power of two is an exponent shift (exact) and
+    * floor is exact, preserving the cross-engine bit-for-bit contract of
+    * `Similarity.Q`.
+    */
+  def quantize_q(xs: Column, scale: Double): Column =
+    column("quantize_q", LongsOut,
+      Seq(ArrayType(FloatType), ArrayType(DoubleType)))(xs)(
+      Kernel.FloatElements, scale)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bandKeysSelf", this, classOf[BandKeys].getName)
-    nullSafeCodeGen(ctx, ev, sig => s"${ev.value} = $self.computePublic($sig);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BandKeys =
-    copy(child = newChild)
-}
-
-/** Power-of-two grid quantization of a float/double array:
-  * `out[i] = floor(x[i] * scale)` as longs, one primitive loop. The
-  * HOF form (`transform(arr, x -> ...)`) evaluates an interpreted boxed
-  * lambda per element — this appears on EVERY similarity-query input
-  * row, so it codegens. Multiplying by a power of two is an exponent
-  * shift (exact) and floor is exact, preserving the cross-engine
-  * bit-for-bit contract of `Similarity.Q`.
-  */
-case class QuantizeQ(child: Expression, scale: Double)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "quantize_q"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.FloatType, _) |
-           ArrayType(org.apache.spark.sql.types.DoubleType, _) =>
-        TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"quantize_q requires array<float|double>, got ${other.simpleString}")
-    }
-  }
-
-  // lazy: child.dataType is unavailable until the child resolves
-  private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
-
-  def computePublic(xs: ArrayData): ArrayData = {
+  def quantize_q(xs: ArrayData, floats: Boolean, scale: Double): ArrayData = {
     val n = xs.numElements()
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val d = if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i)
+      val d = if (floats) xs.getFloat(i).toDouble else xs.getDouble(i)
       out(i) = math.floor(d * scale).toLong
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** Distinct k-word shingles of a word array, in first-occurrence
+    * order: one primitive loop, replacing
+    * array_distinct(transform(sequence, slice, concat_ws)) whose
+    * interpreted lambda re-evaluates per element (and gets duplicated
+    * into optimizer-inferred generate filters). */
+  def shingles(ws: Column, k: Int): Column =
+    column("shingles", StringsOut, StringsIn)(ws)(k, true)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("quantizeSelf", this, classOf[QuantizeQ].getName)
-    nullSafeCodeGen(ctx, ev, xs => s"${ev.value} = $self.computePublic($xs);")
-  }
+  /** Non-distinct shingles — every occurrence, document order (corpus
+    * n-gram counting). */
+  def shinglesAll(ws: Column, k: Int): Column =
+    column("shingles", StringsOut, StringsIn)(ws)(k, false)
 
-  override protected def withNewChildInternal(newChild: Expression): QuantizeQ =
-    copy(child = newChild)
-}
-
-/** k-word shingles of a word array: one primitive loop, replacing
-  * array_distinct(transform(sequence, slice, concat_ws)) whose
-  * interpreted lambda re-evaluates per element (and gets duplicated
-  * into optimizer-inferred generate filters).
-  * `distinct=true` (dedup paths): first-occurrence order, set
-  * semantics. `distinct=false` (corpus n-gram counting): every
-  * occurrence, document order.
-  */
-case class Shingles(child: Expression, k: Int, distinct: Boolean = true)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "shingles"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StringType, _) => TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"shingles requires array<string>, got ${other.simpleString}")
-    }
-  }
-
-  def computePublic(ws: ArrayData): ArrayData = {
+  def shingles(ws: ArrayData, k: Int, distinct: Boolean): ArrayData = {
     val n = ws.numElements()
-    val out: java.util.Collection[org.apache.spark.unsafe.types.UTF8String] =
-      if (distinct)
-        new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-      else
-        new java.util.ArrayList[org.apache.spark.unsafe.types.UTF8String](
-          math.max(0, n - k + 1))
-    val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+    val out: java.util.Collection[UTF8String] =
+      if (distinct) new java.util.LinkedHashSet[UTF8String]()
+      else new java.util.ArrayList[UTF8String](math.max(0, n - k + 1))
+    val sep = UTF8String.fromString(" ")
     var i = 0
     while (i + k <= n) {
-      val parts = new Array[org.apache.spark.unsafe.types.UTF8String](k)
+      val parts = new Array[UTF8String](k)
       var j = 0
       while (j < k) { parts(j) = ws.getUTF8String(i + j); j += 1 }
-      out.add(org.apache.spark.unsafe.types.UTF8String.concatWs(sep, parts: _*))
+      out.add(UTF8String.concatWs(sep, parts: _*))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.toArray.asInstanceOf[Array[AnyRef]])
+    new GenericArrayData(out.toArray.asInstanceOf[Array[AnyRef]])
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computePublic(input.asInstanceOf[ArrayData])
+  /** Maximal common substring extent around a fingerprint-collision
+    * anchor — the EXTEND-AND-VERIFY kernel of exact-substring dedup
+    * (Lee et al. 2022's rule, seeded by winnowing anchors instead of a
+    * suffix array): given two texts and the anchor gram positions
+    * (pa, pb) of a k-char fingerprint collision, verify the anchor
+    * grams char-by-char (a 31-bit rolling-hash collision dies here),
+    * then extend left and right while characters agree. Returns
+    * `[start_a, start_b, len]` of the maximal common run containing
+    * the anchor, or `[0, 0, 0]` for a false-positive anchor. One
+    * primitive loop per anchor, O(match length), never a boxed lambda
+    * per character. Offsets and lengths are CODE POINTS (the
+    * [[winnow_pack]] anchor basis), so they feed SQL
+    * `substring`/`substr` arithmetic exactly on any text.
+    */
+  def substr_extent(ta: Column, tb: Column, pa: Column, pb: Column,
+      k: Int): Column =
+    column("substr_extent", LongsOut, StringIn, StringIn, LongIn,
+      LongIn)(ta, tb, pa, pb)(k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("shinglesSelf", this, classOf[Shingles].getName)
-    nullSafeCodeGen(ctx, ev, ws => s"${ev.value} = $self.computePublic($ws);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-}
-
-/** Maximal common substring extent around a fingerprint-collision
-  * anchor — the EXTEND-AND-VERIFY kernel of exact-substring dedup
-  * (Lee et al. 2022's rule, seeded by winnowing anchors instead of a
-  * suffix array): given two texts and the anchor gram positions
-  * (pa, pb) of a k-char fingerprint collision, verify the anchor
-  * grams char-by-char (a 31-bit rolling-hash collision dies here),
-  * then extend left and right while characters agree. Returns
-  * `[start_a, start_b, len]` of the maximal common run containing
-  * the anchor, or `[0, 0, 0]` for a false-positive anchor. One
-  * primitive loop per anchor, O(match length) — inside whole-stage
-  * codegen, never a boxed lambda per character. Offsets and lengths
-  * are CODE POINTS (the [[WinnowPack]] anchor basis), so they feed
-  * SQL `substring`/`substr` arithmetic exactly on any text.
-  */
-case class SubstrExtent(ta: Expression, tb: Expression,
-    pa: Expression, pb: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def first: Expression = ta
-  override def second: Expression = tb
-  override def third: Expression = pa
-  override def fourth: Expression = pb
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "substr_extent"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    (ta.dataType, tb.dataType, pa.dataType, pb.dataType) match {
-      case (org.apache.spark.sql.types.StringType,
-            org.apache.spark.sql.types.StringType, LongType, LongType) =>
-        TypeCheckSuccess
-      case other => TypeCheckFailure(
-        s"substr_extent requires (string, string, bigint, bigint), got $other")
-    }
-  }
-
-  private def compute(a: org.apache.spark.unsafe.types.UTF8String,
-      b: org.apache.spark.unsafe.types.UTF8String,
-      paV: Long, pbV: Long): Array[Long] = {
-    // codepoint basis, matching WinnowPack's anchor positions and the
+  def substr_extent(a: UTF8String, b: UTF8String, pa: Long, pb: Long,
+      k: Int): ArrayData = {
+    // codepoint basis, matching winnow_pack's anchor positions and the
     // SQL substr/substring offset arithmetic downstream (scrub cuts,
     // oracle replay) — UTF-16 charAt would desync on non-BMP text
     val sa = a.toString.codePoints().toArray
     val sb = b.toString.codePoints().toArray
-    val ia = paV.toInt
-    val ib = pbV.toInt
+    val ia = pa.toInt
+    val ib = pb.toInt
     // verify the anchor gram (hash equality is necessary, not
     // sufficient)
     var i = 0
     while (i < k && ia + i < sa.length && ib + i < sb.length &&
         sa(ia + i) == sb(ib + i)) i += 1
-    if (i < k) return Array(0L, 0L, 0L)
+    if (i < k) return new GenericArrayData(Array(0L, 0L, 0L))
     // extend right
     var ra = ia + k
     var rb = ib + k
@@ -1040,34 +469,6 @@ case class SubstrExtent(ta: Expression, tb: Expression,
     while (la > 0 && lb > 0 && sa(la - 1) == sb(lb - 1)) {
       la -= 1; lb -= 1
     }
-    Array(la.toLong, lb.toLong, (ra - la).toLong)
+    new GenericArrayData(Array(la.toLong, lb.toLong, (ra - la).toLong))
   }
-
-  override def nullSafeEval(a: Any, b: Any, p: Any, q: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      compute(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        p.asInstanceOf[Long], q.asInstanceOf[Long]))
-
-  /** Codegen entry point. */
-  def computePublic(a: org.apache.spark.unsafe.types.UTF8String,
-      b: org.apache.spark.unsafe.types.UTF8String,
-      p: Long, q: Long): Array[Long] = compute(a, b, p, q)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("substrExtentSelf", this,
-      classOf[SubstrExtent].getName)
-    nullSafeCodeGen(ctx, ev, (a, b, p, q) => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $self.computePublic($a, $b, $p, $q));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): SubstrExtent =
-    copy(ta = newFirst, tb = newSecond, pa = newThird, pb = newFourth)
 }

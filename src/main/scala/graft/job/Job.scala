@@ -397,6 +397,8 @@ case class DataPumpJob(
                   s"existing ${existing.simpleString} vs ${incoming.simpleString}")
             }
           }
+          def skipExisting(outP: String): Boolean =
+            saveMode == SaveMode.Ignore && exists(spark, outP)
           if (departition && partitionColumnsOf(df0).nonEmpty) {
             // DEPARTITION (directives.py:346-349): each source partition
             // becomes its own table `<table>_<col>_<value>`. Partition
@@ -438,8 +440,14 @@ case class DataPumpJob(
                   partsFor(sz, b)
                 case None => parallel
               }
+            def comboOut(combo: Seq[(String, String)]): String =
+              s"$storageTarget/$targetSchema/${targetTable}_" +
+                combo.map { case (k, v) => s"${k}_${sanitizeName(v)}" }.mkString("_")
+            // TABLE_EXISTS_ACTION=SKIP skips each promoted table that
+            // exists, as the plain path below skips the whole table
+            val toWrite = combos.filterNot(c => skipExisting(comboOut(c)))
             var rows = 0L; var bytes = 0L
-            combos.foreach { combo =>
+            toWrite.foreach { combo =>
               // Select the combo by FILTERING on the partition columns:
               // Catalyst partition pruning reduces each job to exactly
               // that combo's directory, so the source is still read
@@ -451,20 +459,19 @@ case class DataPumpJob(
                   else org.apache.spark.sql.functions.col(k) === lit(v))
               }
               val part = part0.drop(pcols: _*)
-              val suffix = combo.map { case (k, v) =>
-                s"${k}_${sanitizeName(v)}" }.mkString("_")
               val obs = Observation()
-              val comboOut = s"$storageTarget/$targetSchema/${targetTable}_$suffix"
-              guardInPlaceWrite(comboOut, part.schema)
+              val out = comboOut(combo)
+              guardInPlaceWrite(out, part.schema)
               val shape = layout(part, comboParts(combo))
               writeTable(shape(part.observe(obs, count(lit(1)).as("rows"))),
-                comboOut, saveMode, writerOpts, writeFormat)
+                out, saveMode, writerOpts, writeFormat)
               rows += obs.get("rows").asInstanceOf[Long]
-              bytes += pathBytes(spark, comboOut)
+              bytes += pathBytes(spark, out)
             }
-            ObjectStatus(table, "COMPLETED", rows, bytes,
-              secsSince(t0), None, srcSchema)
-          } else if (saveMode == SaveMode.Ignore && exists(spark, outPath)) {
+            ObjectStatus(table,
+              if (combos.nonEmpty && toWrite.isEmpty) "SKIPPED" else "COMPLETED",
+              rows, bytes, secsSince(t0), None, srcSchema)
+          } else if (skipExisting(outPath)) {
             ObjectStatus(table, "SKIPPED", 0, 0, secsSince(t0), None, srcSchema)
           } else {
             guardInPlaceWrite(outPath, df.schema)

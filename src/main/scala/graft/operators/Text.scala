@@ -1228,7 +1228,7 @@ object Text {
 
   /** q_winnow: rolling-hash document fingerprints by WINNOWING
     * (Schleimer–Wilkerson–Aiken 2003, the MOSS kernel): one
-    * [[graft.functions.WinnowPack]] codegen pass per document — an
+    * [[graft.functions.ArrayOps.winnow_pack]] pass per document — an
     * O(n) rolling Rabin–Karp over k-char grams with the
     * rightmost-min window selection — then a flat posexplode of the
     * packed (pos << 31 | hash) longs. Fingerprinting is a pure MAP:
@@ -1287,7 +1287,7 @@ object Text {
     * only differ through their index bytes. */
   private[graft] def winnowOverlapFromFps(fpSet: DataFrame): DataFrame = {
     // persisted: the fingerprint set feeds the df census and both
-    // sides of the pair self-join — unpinned, the whole WinnowPack
+    // sides of the pair self-join — unpinned, the whole winnow_pack
     // scan re-ran per reference (plan-audited)
     val fps = graft.CachePool.swapOne("winnow-overlap-fps", fpSet)
     val df = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -1407,7 +1407,7 @@ object Text {
 
   /** Corpus-level positioned fingerprint census, SESSION-POOLED
     * (r17): q_substr_dedup, q_substr_scrub, q_substr_keep_first and
-    * q_substr_scrub_first each derived the same WinnowPack census
+    * q_substr_scrub_first each derived the same winnow_pack census
     * over the full corpus — one pass per (dataset, session), each
     * kernel's anchor self-join (its own measurement) reads the
     * checkpointed (doc_id, pos, fp) longs. Safe to share one key
@@ -1639,7 +1639,7 @@ object Text {
     * q_substr_scrub_first rewrites by EXACTLY the spans
     * q_substr_keep_first reports — one cross-kernel pass per
     * (dataset, session) serves both rows. Census side: one
-    * WinnowPack pass ([[substrFpSetCached]]) serves both sides of
+    * winnow_pack pass ([[substrFpSetCached]]) serves both sides of
     * the anchor join instead of fingerprinting the corpus twice. */
   private def substrKeepFirstSpansCached(spark: SparkSession,
       sf: String): DataFrame =

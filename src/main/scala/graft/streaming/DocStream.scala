@@ -395,7 +395,7 @@ object DocStream {
     StreamState.before(spark, indexDir, WinnowIndexSchema, batchId)
 
   /** The winnowing ingest both winnow twins run: each micro-batch
-    * fingerprints its documents with the shared `WinnowPack` codegen
+    * fingerprints its documents with the shared `winnow_pack` kernel
     * pass, classifies them against the index of strictly earlier
     * deliveries through the SAME `Text.classifyAgainstIndex` kernel as
     * the batch twin (one fp-equality probe — O(collisions), never a
@@ -460,7 +460,7 @@ object DocStream {
     * storage-resident stores — the (doc_id, pos, fp) anchor index and
     * the (doc_id, text) store the extend-and-verify step reads. Each
     * micro-batch after the bootstrap fingerprints its documents with
-    * the shared `WinnowPack` pass and probes both stores as of
+    * the shared `winnow_pack` pass and probes both stores as of
     * strictly earlier deliveries through the SAME
     * `Text.substrSpansAgainstIndex` kernel as the batch twin (anchor
     * join = fp equality, O(collisions); the extension join touches
@@ -479,7 +479,7 @@ object DocStream {
     DeliveryHarness.replay(spark, root, parts) { (batch, batchId) =>
       val fps = Text.substrFpSet(batch)
       // bootstrap (batch 0) only seeds the two stores: probing the
-      // still-empty index would pay a full WinnowPack fingerprint +
+      // still-empty index would pay a full winnow_pack fingerprint +
       // join pass for an output nobody reads
       if (batchId > 0)
         StreamState.append(outDir, Text.substrSpansAgainstIndex(batch, fps,

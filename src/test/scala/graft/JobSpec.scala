@@ -1202,6 +1202,37 @@ class JobSpec extends AnyFunSuite {
     assert(!cols.contains("event_type"))
   }
 
+  test("DEPARTITION with TABLE_EXISTS_ACTION=SKIP skips each promoted table that exists") {
+    val srcRoot = tmp("jobspec-depskip-src")
+    graft.operators.Events.load(spark, sf)
+      .write.partitionBy("event_type").parquet(s"$srcRoot/events.parquet")
+    val out = tmp("jobspec-depskip-out")
+    def run() = DataPumpJob(Operation.Export, JobMode.Table, srcRoot, out,
+      directives = Seq(IncludeTable(Seq("events")),
+        PartitionOptions("DEPARTITION"), TableExistsAction("SKIP"))).run(spark)
+    val first = run()
+    assert(first.state == JobState.Completed, first.errors)
+    assert(first.objects.map(_.state) == Seq("COMPLETED"))
+    assert(first.totalRows == 1000)
+    val tables = new java.io.File(s"$out/main").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted
+    assert(tables.length == 5, tables.toSeq)
+    // the second run finds every promoted table: the object is
+    // SKIPPED with no rows or bytes, as on the plain path
+    val again = run()
+    assert(again.state == JobState.Completed, again.errors)
+    assert(again.objects.map(o => (o.state, o.rows, o.bytes)) ==
+      Seq(("SKIPPED", 0L, 0L)))
+    // with one promoted table gone, only that one is written
+    val gone = s"$out/main/${tables.head}"
+    val goneRows = spark.read.parquet(gone).count()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(gone))
+    val third = run()
+    assert(third.objects.map(o => (o.state, o.rows)) ==
+      Seq(("COMPLETED", goneRows)))
+    assert(spark.read.parquet(gone).count() == goneRows)
+  }
+
   test("DEPARTITION APPEND runs the same on-disk schema guard per promoted table") {
     val srcRoot = tmp("jobspec-depapp-src")
     graft.operators.Events.load(spark, sf)

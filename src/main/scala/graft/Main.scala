@@ -36,6 +36,26 @@ object Main {
     sys.exit(2)
   }
 
+  /** Flags that each send one directive of their value. */
+  private val valueFlags = Map(
+    "--parallel" -> "PARALLEL",
+    "--compression" -> "COMPRESSION",
+    "--compression-algorithm" -> "COMPRESSION_ALGORITHM",
+    "--estimate" -> "ESTIMATE",
+    "--include-metadata" -> "INCLUDE_METADATA",
+    "--query" -> "QUERY",
+    "--dump-format" -> "DUMP_FORMAT",
+    "--flashback-scn" -> "FLASHBACK_SCN",
+    "--flashback-time" -> "FLASHBACK_TIME",
+    "--table-exists-action" -> "TABLE_EXISTS_ACTION",
+    "--exclude" -> "EXCLUDE_OBJECT_TYPE")
+
+  /** Flags that each send one directive set to "1". */
+  private val switches = Map(
+    "--keep-master" -> "KEEP_MASTER",
+    "--estimate-only" -> "ESTIMATE_ONLY",
+    "--delete-files" -> "DELETE_FILES")
+
   /** Flatten CLI flags into protocol directive dicts (cli.py:152-226). */
   private[graft] def parseArgs(args: Array[String])
       : (String, Map[String, String], Seq[Map[String, String]], Boolean) = {
@@ -69,36 +89,12 @@ object Main {
           opts += "mode" -> "TABLESPACE"
           directives :+= Map("name" -> "INCLUDE_TABLESPACE", "value" -> args(i + 1))
           i += 2
-        case "--parallel" =>
-          directives :+= Map("name" -> "PARALLEL", "value" -> args(i + 1)); i += 2
-        case "--compression" =>
-          directives :+= Map("name" -> "COMPRESSION", "value" -> args(i + 1)); i += 2
-        case "--estimate" =>
-          directives :+= Map("name" -> "ESTIMATE", "value" -> args(i + 1)); i += 2
-        case "--keep-master" =>
-          directives :+= Map("name" -> "KEEP_MASTER", "value" -> "1"); i += 1
-        case "--include-metadata" =>
-          directives :+= Map("name" -> "INCLUDE_METADATA", "value" -> args(i + 1)); i += 2
-        case "--query" =>
-          directives :+= Map("name" -> "QUERY", "value" -> args(i + 1)); i += 2
-        case "--dump-format" =>
-          directives :+= Map("name" -> "DUMP_FORMAT", "value" -> args(i + 1)); i += 2
-        case "--flashback-scn" =>
-          directives :+= Map("name" -> "FLASHBACK_SCN", "value" -> args(i + 1)); i += 2
-        case "--compression-algorithm" =>
-          directives :+= Map("name" -> "COMPRESSION_ALGORITHM", "value" -> args(i + 1)); i += 2
-        case "--table-exists-action" =>
-          directives :+= Map("name" -> "TABLE_EXISTS_ACTION", "value" -> args(i + 1)); i += 2
+        case f if valueFlags.contains(f) =>
+          directives :+= Map("name" -> valueFlags(f), "value" -> args(i + 1)); i += 2
+        case f if switches.contains(f) =>
+          directives :+= Map("name" -> switches(f), "value" -> "1"); i += 1
         case "--remap-schema" => directives :+= remap("REMAP_SCHEMA", args(i + 1)); i += 2
         case "--remap-tablespace" => directives :+= remap("REMAP_TABLESPACE", args(i + 1)); i += 2
-        case "--exclude" =>
-          directives :+= Map("name" -> "EXCLUDE_OBJECT_TYPE", "value" -> args(i + 1)); i += 2
-        case "--estimate-only" =>
-          directives :+= Map("name" -> "ESTIMATE_ONLY", "value" -> "1"); i += 1
-        case "--delete-files" =>
-          directives :+= Map("name" -> "DELETE_FILES", "value" -> "1"); i += 1
-        case "--flashback-time" =>
-          directives :+= Map("name" -> "FLASHBACK_TIME", "value" -> args(i + 1)); i += 2
         case "--tag" => opts += "tag" -> args(i + 1); i += 2
         case "--no-wait" => wait = false; i += 1
         // generic escape hatch (cli.py:77-79): NAME:VALUE, or

@@ -1,15 +1,15 @@
 package graft.directives
 
-import graft.model.{Stage, Util}
+import graft.model.Util
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Declarative job directives — the reference's central extension point
   * (/root/reference/src/oracledb_datapump/directives.py:31-691). There,
   * each directive issues a PL/SQL call (METADATA_FILTER / SET_PARAMETER /
-  * METADATA_REMAP / METADATA_TRANSFORM); here each *compiles* to a pure
-  * description of how it alters the Spark job plan: which tables are
-  * selected, how each DataFrame is transformed, reader/writer options,
-  * save mode, output identity remaps, or post-commit actions.
+  * METADATA_REMAP / METADATA_TRANSFORM); here a job's directives
+  * *compile*, once, into the [[JobSettings]] the job reads: which tables
+  * are selected, how each DataFrame is transformed, reader/writer
+  * options, save mode, output identity remaps and the job's switches.
   *
   * Five families, mirroring directives.py:
   *   Filter (88-184), Parameter (186-409), Remap (412-458),
@@ -17,51 +17,81 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 sealed trait Directive {
   def name: String
-  def stage: Stage
   /** Human-readable value for metadata sidecars / logs. */
   def valueRepr: String
 }
 
-/** What a directive contributes to the compiled job plan. A single
-  * directive may contribute several effects.
-  */
-sealed trait Effect
-object Effect {
-  /** Restrict/transform the set of selected table names. */
-  case class ObjectSelection(f: Seq[String] => Seq[String]) extends Effect
-  /** Per-table DataFrame rewrite applied before the sink. */
-  case class PlanTransform(f: DataFrame => DataFrame) extends Effect
-  /** Option passed to every reader. */
-  case class ReaderOption(key: String, value: String) extends Effect
-  /** Option passed to every writer (e.g. compression codec). */
-  case class WriterOption(key: String, value: String) extends Effect
-  /** Save-mode override (TABLE_EXISTS_ACTION). */
-  case class SetSaveMode(mode: SaveMode, truncate: Boolean) extends Effect
-  /** Output parallelism → number of part files per table (%U set). */
-  case class SetParallel(n: Int) extends Effect
-  /** Dump-set file format (EXPORT side): parquet/orc/json/csv. */
-  case class SetFormat(format: String) extends Effect
-  /** Rename output identity: (kind, from, to), kind ∈ SCHEMA/TABLESPACE/
-    * DATAFILE/TABLE. */
-  case class IdentityRemap(kind: String, from: String, to: String) extends Effect
-  /** Snapshot pin: resolve reads against a fixed version/timestamp. */
-  case class SnapshotPin(asOf: String) extends Effect
-  /** Dry-run: estimate sizes, move no data. */
-  case object EstimateOnly extends Effect
-  /** Skip data movement, emit DDL/metadata only — or the inverse. */
-  case class ContentSelection(data: Boolean, metadata: Boolean) extends Effect
-  /** Promote each source partition to its own output table
-    * (PARTITION_OPTIONS=DEPARTITION, directives.py:346-349). */
-  case object Departition extends Effect
-  /** Runs after a successful job with the final metadata. */
-  case class PostAction(run: graft.job.JobContext => Unit) extends Effect
-  /** Bound imported-table file sizes: part-file count derives from
-    * measured source bytes / target instead of PARALLEL. */
-  case class TargetFileBytes(bytes: Long) extends Effect
-  /** KEEP_MASTER: retain the job's registry entry past orphan GC. */
-  case object RetainMaster extends Effect
-  /** Accepted for API parity; no Spark analog. Logged, never fails. */
-  case class Ignored(reason: String) extends Effect
+/** A job's directives compiled into one value (`DirectiveCompiler.
+  * compile`): each field holds what the directives set, or its default.
+  * Repeated directives resolve per field: the first PARALLEL,
+  * DUMP_FORMAT, TABLE_EXISTS_ACTION, FLASHBACK_*, TARGET_FILE_SIZE and
+  * INCLUDE_METADATA win; a later reader or writer option replaces an
+  * earlier one of the same key; transforms apply in directive order;
+  * INCLUDE_TABLE lists unite; the switches hold when any directive sets
+  * them. */
+final case class JobSettings(
+    /** INCLUDE_SCHEMA names, in directive order; empty scopes none. */
+    schemas: Seq[String] = Nil,
+    /** The union of every INCLUDE_TABLE list, lower case; None without one. */
+    tables: Option[Set[String]] = None,
+    /** INCLUDE_TABLESPACE path prefixes (TABLESPACE/TRANSPORTABLE mode). */
+    tablespaces: Seq[String] = Nil,
+    /** EXCLUDE_OBJECT_TYPE=TABLE: no table is selected. */
+    tablesExcluded: Boolean = false,
+    /** Per-table DataFrame rewrites applied before the sink. */
+    transforms: Seq[DataFrame => DataFrame] = Nil,
+    readerOptions: Map[String, String] = Map.empty,
+    writerOptions: Map[String, String] = Map.empty,
+    saveMode: SaveMode = SaveMode.ErrorIfExists,
+    truncate: Boolean = false,
+    /** Part files per table (the %U dump set) and the worker count. */
+    parallel: Int = 1,
+    /** The file format an EXPORT writes its dump set in. */
+    dumpFormat: String = "parquet",
+    /** (from, to) remaps in directive order; a later one of the same
+      * name wins. */
+    schemaRemaps: Seq[(String, String)] = Nil,
+    tableRemaps: Seq[(String, String)] = Nil,
+    tablespaceRemaps: Seq[(String, String)] = Nil,
+    datafileRemaps: Seq[(String, String)] = Nil,
+    /** FLASHBACK_SCN/TIME: reads resolve against this version/time. */
+    snapshotPin: Option[String] = None,
+    /** ESTIMATE_ONLY / MASTER_ONLY: estimate sizes, move no data. */
+    estimateOnly: Boolean = false,
+    includeMetadata: Boolean = true,
+    /** PARTITION_OPTIONS=DEPARTITION: each source partition becomes
+      * its own table. */
+    departition: Boolean = false,
+    /** TARGET_FILE_SIZE: part-file count from measured source bytes. */
+    targetFileBytes: Option[Long] = None,
+    /** KEEP_MASTER: the registry entry outlives orphan GC. */
+    keepMaster: Boolean = false,
+    /** DELETE_FILES: an import removes the dumps of the objects it moved. */
+    deleteFiles: Boolean = false) {
+
+  /** REMAP_SCHEMA applies per source schema, exact name match
+    * (directives.py:449-450): only objects OF the remapped schema move. */
+  def schemaOf(source: String): String =
+    schemaRemaps.findLast(_._1.toLowerCase == source.toLowerCase).fold(source)(_._2)
+
+  /** REMAP_TABLE: the target table name, lower case. */
+  def tableOf(source: String): String =
+    tableRemaps.findLast(_._1.toLowerCase == source).fold(source)(_._2.toLowerCase)
+
+  /** REMAP_TABLESPACE (directives.py:453-454): a tablespace is physical
+    * placement; on a file store that's the output root, so the remap
+    * rewrites matching path SEGMENTS of the root. REMAP_DATAFILE
+    * (directives.py:457-458) rewrites a full path PREFIX (a datafile is
+    * a concrete file path). */
+  def storageOf(root: String): String = {
+    val bySegment =
+      if (tablespaceRemaps.isEmpty) root
+      else root.split('/').map(seg =>
+        tablespaceRemaps.findLast(_._1 == seg).fold(seg)(_._2)).mkString("/")
+    datafileRemaps.foldLeft(bySegment) { case (r, (f, t)) =>
+      if (r == f || r.startsWith(f + "/")) t + r.drop(f.length) else r
+    }
+  }
 }
 
 // ---------------------------------------------------------------- filters
@@ -71,11 +101,11 @@ object Effect {
   * filters, the analog of pushing predicates below the scan.
   */
 final case class IncludeSchema(schema: String) extends Directive {
-  val name = "INCLUDE_SCHEMA"; val stage = Stage.DataPump
+  val name = "INCLUDE_SCHEMA"
   def valueRepr = schema
 }
 final case class IncludeTable(tables: Seq[String]) extends Directive {
-  val name = "INCLUDE_TABLE"; val stage = Stage.DataPump
+  val name = "INCLUDE_TABLE"
   def valueRepr = tables.mkString(",")
 }
 /** TABLESPACE_LIST filter analog (directives.py:66-86): a tablespace on
@@ -83,11 +113,11 @@ final case class IncludeTable(tables: Seq[String]) extends Directive {
   * selection is a PATH-PREFIX match on each table's resolved source
   * path (SURVEY §1.1). Prefixes may be absolute or source-dir-relative. */
 final case class IncludeTablespace(prefixes: Seq[String]) extends Directive {
-  val name = "INCLUDE_TABLESPACE"; val stage = Stage.DataPump
+  val name = "INCLUDE_TABLESPACE"
   def valueRepr = prefixes.mkString(",")
 }
 final case class ExcludeObjectType(objectType: String) extends Directive {
-  val name = "EXCLUDE_OBJECT_TYPE"; val stage = Stage.DataPump
+  val name = "EXCLUDE_OBJECT_TYPE"
   def valueRepr = objectType
 }
 /** Row-level subset — Data Pump's QUERY parameter
@@ -97,7 +127,7 @@ final case class ExcludeObjectType(objectType: String) extends Directive {
   * filter, so it PUSHES DOWN to the parquet scan — rows outside the
   * subset are never read at scale. */
 final case class Query(predicate: String) extends Directive {
-  val name = "QUERY"; val stage = Stage.DataPump
+  val name = "QUERY"
   def valueRepr = predicate
 }
 
@@ -109,7 +139,7 @@ final case class Query(predicate: String) extends Directive {
   * rows — the property a verifiable pipeline actually wants. Pure
   * per-row predicate: no shuffle, any scale. */
 final case class Sample(percent: Double) extends Directive {
-  val name = "SAMPLE"; val stage = Stage.DataPump
+  val name = "SAMPLE"
   def valueRepr = percent.toString
   require(percent > 0 && percent <= 100,
     s"SAMPLE percent must be in (0, 100]; got $percent")
@@ -118,7 +148,7 @@ final case class Sample(percent: Double) extends Directive {
 // ------------------------------------------------------------- parameters
 
 final case class Compression(value: String) extends Directive {
-  val name = "COMPRESSION"; val stage = Stage.DataPump
+  val name = "COMPRESSION"
   def valueRepr = value
   require(Compression.valid(value.toUpperCase),
     s"COMPRESSION must be one of ${Compression.domain}; got $value")
@@ -129,7 +159,7 @@ object Compression {
 }
 
 final case class CompressionAlgorithm(value: String) extends Directive {
-  val name = "COMPRESSION_ALGORITHM"; val stage = Stage.DataPump
+  val name = "COMPRESSION_ALGORITHM"
   def valueRepr = value
   require(CompressionAlgorithm.codec.contains(value.toUpperCase),
     s"COMPRESSION_ALGORITHM must be one of ${CompressionAlgorithm.codec.keys}")
@@ -141,7 +171,7 @@ object CompressionAlgorithm {
 }
 
 final case class Parallel(degree: Int) extends Directive {
-  val name = "PARALLEL"; val stage = Stage.DataPump
+  val name = "PARALLEL"
   def valueRepr = degree.toString
   require(degree >= 1, s"PARALLEL must be >= 1; got $degree")
 }
@@ -153,7 +183,7 @@ final case class Parallel(degree: Int) extends Directive {
   * handoff to non-columnar consumers). IMPORT sniffs the format from
   * the part files, so mixed-format dump roots just work. */
 final case class DumpFormat(format: String) extends Directive {
-  val name = "DUMP_FORMAT"; val stage = Stage.DataPump
+  val name = "DUMP_FORMAT"
   def valueRepr = format
   require(DumpFormat.domain.contains(format.toLowerCase),
     s"DUMP_FORMAT must be one of ${DumpFormat.domain}; got $format")
@@ -163,28 +193,28 @@ object DumpFormat {
 }
 
 final case class FlashbackScn(scn: Long) extends Directive {
-  val name = "FLASHBACK_SCN"; val stage = Stage.DataPump
+  val name = "FLASHBACK_SCN"
   def valueRepr = scn.toString
 }
 final case class FlashbackTime(iso: String) extends Directive {
-  val name = "FLASHBACK_TIME"; val stage = Stage.DataPump
+  val name = "FLASHBACK_TIME"
   def valueRepr = iso
   Util.parseDt(iso) // validate eagerly, like pydantic did
 }
 
 final case class Estimate(value: String) extends Directive {
-  val name = "ESTIMATE"; val stage = Stage.DataPump
+  val name = "ESTIMATE"
   def valueRepr = value
   require(Seq("BLOCKS", "STATISTICS").contains(value.toUpperCase))
 }
 final case class EstimateOnly(on: Boolean) extends Directive {
-  val name = "ESTIMATE_ONLY"; val stage = Stage.DataPump
+  val name = "ESTIMATE_ONLY"
   def valueRepr = if (on) "1" else "0"
 }
 
 /** TRUNCATE/REPLACE/APPEND/SKIP → SaveMode (directives.py:372-376). */
 final case class TableExistsAction(action: String) extends Directive {
-  val name = "TABLE_EXISTS_ACTION"; val stage = Stage.DataPump
+  val name = "TABLE_EXISTS_ACTION"
   def valueRepr = action
   require(TableExistsAction.modes.contains(action.toUpperCase),
     s"TABLE_EXISTS_ACTION must be one of ${TableExistsAction.modes.keys}")
@@ -200,36 +230,36 @@ object TableExistsAction {
 }
 
 final case class PartitionOptions(value: String) extends Directive {
-  val name = "PARTITION_OPTIONS"; val stage = Stage.DataPump
+  val name = "PARTITION_OPTIONS"
   def valueRepr = value
   require(Seq("NONE", "DEPARTITION", "MERGE").contains(value.toUpperCase))
 }
 
 final case class IncludeMetadata(on: Boolean) extends Directive {
-  val name = "INCLUDE_METADATA"; val stage = Stage.DataPump
+  val name = "INCLUDE_METADATA"
   def valueRepr = if (on) "1" else "0"
 }
 final case class Metrics(on: Boolean) extends Directive {
-  val name = "METRICS"; val stage = Stage.DataPump
+  val name = "METRICS"
   def valueRepr = if (on) "1" else "0"
 }
 final case class Logtime(value: String) extends Directive {
-  val name = "LOGTIME"; val stage = Stage.DataPump
+  val name = "LOGTIME"
   def valueRepr = value
   require(Seq("NONE", "STATUS", "LOGFILE", "ALL").contains(value.toUpperCase))
 }
 final case class KeepMaster(on: Boolean) extends Directive {
-  val name = "KEEP_MASTER"; val stage = Stage.DataPump
+  val name = "KEEP_MASTER"
   def valueRepr = if (on) "1" else "0"
 }
 final case class MasterOnly(on: Boolean) extends Directive {
-  val name = "MASTER_ONLY"; val stage = Stage.DataPump
+  val name = "MASTER_ONLY"
   def valueRepr = if (on) "1" else "0"
 }
 
 /** 11-bit flag set (directives.py:227-238) → permissive/failfast options. */
 final case class DataOptions(flags: Set[String]) extends Directive {
-  val name = "DATA_OPTIONS"; val stage = Stage.DataPump
+  val name = "DATA_OPTIONS"
   def valueRepr = flags.mkString("|")
 }
 object DataOptions {
@@ -241,7 +271,7 @@ object DataOptions {
 }
 
 final case class DataAccessMethod(value: String) extends Directive {
-  val name = "DATA_ACCESS_METHOD"; val stage = Stage.DataPump
+  val name = "DATA_ACCESS_METHOD"
   def valueRepr = value
   require(Seq("AUTOMATIC", "DIRECT_PATH", "EXTERNAL_TABLE")
     .contains(value.toUpperCase))
@@ -261,7 +291,7 @@ final case class DataAccessMethod(value: String) extends Directive {
   *  - NONE → no effects.
   */
 final case class Encryption(value: String) extends Directive {
-  val name = "ENCRYPTION"; val stage = Stage.DataPump
+  val name = "ENCRYPTION"
   def valueRepr = value
   require(Encryption.domain.contains(value.toUpperCase),
     s"ENCRYPTION must be one of ${Encryption.domain}; got $value")
@@ -273,7 +303,7 @@ object Encryption {
 
 /** AES128/AES192/AES256 → master/data key length. */
 final case class EncryptionAlgorithm(value: String) extends Directive {
-  val name = "ENCRYPTION_ALGORITHM"; val stage = Stage.DataPump
+  val name = "ENCRYPTION_ALGORITHM"
   def valueRepr = value
   require(graft.sources.ParquetCrypto.algorithmBits.contains(value.toUpperCase),
     s"ENCRYPTION_ALGORITHM must be one of " +
@@ -286,14 +316,14 @@ final case class EncryptionAlgorithm(value: String) extends Directive {
   * advisory here: key RESOLUTION order lives in [[graft.sources.GraftKms]]
   * (wallet entry first, then password), which serves all three. */
 final case class EncryptionMode(value: String) extends Directive {
-  val name = "ENCRYPTION_MODE"; val stage = Stage.DataPump
+  val name = "ENCRYPTION_MODE"
   def valueRepr = value
   require(Seq("PASSWORD", "TRANSPARENT", "DUAL").contains(value.toUpperCase),
     s"ENCRYPTION_MODE must be PASSWORD/TRANSPARENT/DUAL; got $value")
 }
 
 final case class EncryptionPassword(password: String) extends Directive {
-  val name = "ENCRYPTION_PASSWORD"; val stage = Stage.DataPump
+  val name = "ENCRYPTION_PASSWORD"
   /** Never echo the secret into sidecars/logs (the reference redacts
     * it from request logging the same way). */
   def valueRepr = "********"
@@ -306,7 +336,6 @@ final case class EncryptionPassword(password: String) extends Directive {
   * directives above.
   */
 final case class PhysicalSwitch(name: String, value: String) extends Directive {
-  val stage = Stage.DataPump
   def valueRepr = value
 }
 object PhysicalSwitch {
@@ -323,21 +352,21 @@ object PhysicalSwitch {
   * applied on import.
   */
 final case class RemapSchema(from: String, to: String) extends Directive {
-  val name = "REMAP_SCHEMA"; val stage = Stage.DataPump
+  val name = "REMAP_SCHEMA"
   def valueRepr = s"$from:$to"
 }
 final case class RemapTablespace(from: String, to: String) extends Directive {
-  val name = "REMAP_TABLESPACE"; val stage = Stage.DataPump
+  val name = "REMAP_TABLESPACE"
   def valueRepr = s"$from:$to"
 }
 final case class RemapDatafile(from: String, to: String) extends Directive {
-  val name = "REMAP_DATAFILE"; val stage = Stage.DataPump
+  val name = "REMAP_DATAFILE"
   def valueRepr = s"$from:$to"
 }
 /** Native extension: REMAP_TABLE (Data Pump supports it; the wrapper does
   * not expose it — directives.py:641-691 registry). */
 final case class RemapTable(from: String, to: String) extends Directive {
-  val name = "REMAP_TABLE"; val stage = Stage.DataPump
+  val name = "REMAP_TABLE"
   def valueRepr = s"$from:$to"
 }
 
@@ -349,7 +378,6 @@ final case class RemapTable(from: String, to: String) extends Directive {
   */
 final case class TransformDirective(name: String, value: String)
     extends Directive {
-  val stage = Stage.DataPump
   def valueRepr = value
   require(TransformDirective.names.contains(name),
     s"Unknown transform $name; valid: ${TransformDirective.names}")
@@ -363,11 +391,12 @@ object TransformDirective {
 
 // ------------------------------------------------------------------ extra
 
-/** POST-stage: delete source dump files after a synchronous import
-  * (directives.py:556-587, applied job.py:291-295).
+/** Delete the dumps an import consumed, once the job has recorded its
+  * outcome: "move" semantics (directives.py:556-587, applied
+  * job.py:291-295). Only the dumps of COMPLETED objects go.
   */
 final case class DeleteFiles() extends Directive {
-  val name = "DELETE_FILES"; val stage = Stage.Post
+  val name = "DELETE_FILES"
   def valueRepr = "1"
 }
 
@@ -392,7 +421,7 @@ final case class DeleteFiles() extends Directive {
   * files land under target, never over).
   */
 final case class TargetFileSize(bytes: Long) extends Directive {
-  val name = "TARGET_FILE_SIZE"; val stage = Stage.DataPump
+  val name = "TARGET_FILE_SIZE"
   def valueRepr = bytes.toString
   require(bytes > 0, s"TARGET_FILE_SIZE must be positive: $bytes")
 }
@@ -425,114 +454,125 @@ object TargetFileSize {
 // --------------------------------------------------------------- compiler
 
 object DirectiveCompiler {
-  import Effect._
 
-  /** Compile one directive into its plan effects. Pure. */
-  def compile(d: Directive): Seq[Effect] = d match {
-    case IncludeSchema(_) => Seq.empty // schema scoping handled by job source
-    case IncludeTablespace(_) => Seq.empty // path-prefix scoping in job source
-    case IncludeTable(ts) =>
-      val wanted = ts.map(_.toLowerCase).toSet
-      Seq(ObjectSelection(names => names.filter(n => wanted(n.toLowerCase))))
-    case Query(p) =>
-      Seq(PlanTransform(df => df.filter(org.apache.spark.sql.functions.expr(p))))
-    case Sample(pct) =>
-      // bucket = first 8 md5 hex digits of the row's JSON encoding →
-      // uniform in [0, 2^32); keep the low pct fraction
-      val cut = (pct / 100.0 * 4294967296.0).toLong
-      Seq(PlanTransform { df =>
-        import org.apache.spark.sql.functions._
-        df.filter(
-          expr("cast(conv(substring(md5(to_json(struct(*))), 1, 8), 16, 10) as bigint)")
-            < lit(cut))
-      })
-    case ExcludeObjectType(t) =>
-      // Data-vs-metadata object classes; TABLE excl. removes everything.
-      if (t.equalsIgnoreCase("TABLE")) Seq(ObjectSelection(_ => Nil))
-      else Seq(Ignored(s"object type $t not materialized in columnar store"))
-    case Compression(v) => v.toUpperCase match {
-      case "NONE" | "METADATA_ONLY" =>
-        Seq(WriterOption("compression", "none"))
-      case _ => Seq(WriterOption("compression", "snappy"))
-    }
-    case CompressionAlgorithm(v) =>
-      Seq(WriterOption("compression", CompressionAlgorithm.codec(v.toUpperCase)))
-    case Parallel(n) => Seq(SetParallel(n))
-    case DumpFormat(f) => Seq(SetFormat(f.toLowerCase))
-    case FlashbackScn(scn) => Seq(SnapshotPin(scn.toString))
-    case FlashbackTime(iso) => Seq(SnapshotPin(iso))
-    case Estimate(_) => Seq.empty // estimation source hint; stats-based either way
-    case graft.directives.EstimateOnly(on) =>
-      if (on) Seq(Effect.EstimateOnly) else Seq.empty
-    case TableExistsAction(a) =>
-      val (mode, truncate) = TableExistsAction.modes(a.toUpperCase)
-      Seq(SetSaveMode(mode, truncate))
-    case PartitionOptions(v) => v.toUpperCase match {
+  /** Fold a job's directives, in order, into its settings. Pure. */
+  def compile(directives: Seq[Directive]): JobSettings =
+    directives.foldLeft((JobSettings(), Set.empty[String])) {
+      case ((s, taken), d) =>
+        val slot = firstWins.lift(d)
+        if (slot.exists(taken)) (s, taken) else (step(s, d), taken ++ slot)
+    }._1
+
+  /** The directives of which only the first in a job counts, by slot. */
+  private val firstWins: PartialFunction[Directive, String] = {
+    case _: FlashbackScn | _: FlashbackTime => "FLASHBACK"
+    case d @ (_: Parallel | _: DumpFormat | _: TableExistsAction |
+        _: TargetFileSize | _: IncludeMetadata) => d.name
+  }
+
+  private def step(s: JobSettings, d: Directive): JobSettings = {
+    def transform(f: DataFrame => DataFrame) = s.copy(transforms = s.transforms :+ f)
+    def options(writer: Seq[(String, String)], reader: Seq[(String, String)]) =
+      s.copy(writerOptions = s.writerOptions ++ writer,
+        readerOptions = s.readerOptions ++ reader)
+    d match {
+      case IncludeSchema(n) => s.copy(schemas = s.schemas :+ n)
+      case IncludeTable(ts) =>
+        s.copy(tables = Some(s.tables.getOrElse(Set.empty) ++ ts.map(_.toLowerCase)))
+      case IncludeTablespace(ps) => s.copy(tablespaces = s.tablespaces ++ ps)
+      case ExcludeObjectType(t) =>
+        // Data-vs-metadata object classes: only TABLE is materialized in
+        // a columnar store, and excluding it removes everything
+        if (t.equalsIgnoreCase("TABLE")) s.copy(tablesExcluded = true) else s
+      case Query(p) =>
+        transform(df => df.filter(org.apache.spark.sql.functions.expr(p)))
+      case Sample(pct) =>
+        // bucket = first 8 md5 hex digits of the row's JSON encoding →
+        // uniform in [0, 2^32); keep the low pct fraction
+        val cut = (pct / 100.0 * 4294967296.0).toLong
+        transform { df =>
+          import org.apache.spark.sql.functions._
+          df.filter(
+            expr("cast(conv(substring(md5(to_json(struct(*))), 1, 8), 16, 10) as bigint)")
+              < lit(cut))
+        }
+      case Compression(v) =>
+        val codec = v.toUpperCase match {
+          case "NONE" | "METADATA_ONLY" => "none"
+          case _ => "snappy"
+        }
+        options(Seq("compression" -> codec), Nil)
+      case CompressionAlgorithm(v) =>
+        options(Seq("compression" -> CompressionAlgorithm.codec(v.toUpperCase)), Nil)
+      case Parallel(n) => s.copy(parallel = n)
+      case DumpFormat(f) => s.copy(dumpFormat = f.toLowerCase)
+      case FlashbackScn(scn) => s.copy(snapshotPin = Some(scn.toString))
+      case FlashbackTime(iso) => s.copy(snapshotPin = Some(iso))
+      case EstimateOnly(on) => s.copy(estimateOnly = s.estimateOnly || on)
+      case MasterOnly(on) => s.copy(estimateOnly = s.estimateOnly || on)
+      case TableExistsAction(a) =>
+        val (mode, truncate) = TableExistsAction.modes(a.toUpperCase)
+        s.copy(saveMode = mode, truncate = truncate)
       // MERGE ("combine all partitions into one table", directives.py:
       // 346-349) needs no plan transform: the job's non-partitionBy write
       // already folds every source partition into a single table, with
       // the partition columns materialized as data columns. A coalesce(1)
-      // here would force the entire upstream scan into ONE task — a
-      // single-threaded read of the whole source at scale.
-      case "MERGE" => Seq.empty
-      case "DEPARTITION" => Seq(Departition)
-      case _ => Seq.empty // NONE: layout preserved
-    }
-    case IncludeMetadata(on) => Seq(ContentSelection(data = true, metadata = on))
-    case Metrics(_) | Logtime(_) => Seq.empty // log-shaping only
-    case KeepMaster(on) =>
-      if (on) Seq(RetainMaster) else Seq.empty
-    case MasterOnly(on) => if (on) Seq(Effect.EstimateOnly) else Seq.empty
-    case DataOptions(flags) =>
-      if (flags.contains("SKIP_CONST_ERR") || flags.contains("CONT_LD_ON_FMT_ERR"))
-        Seq(ReaderOption("mode", "PERMISSIVE"))
-      else if (flags.contains("VALIDATE_TBL_DATA"))
-        Seq(ReaderOption("mode", "FAILFAST"))
-      else Seq.empty
-    case DataAccessMethod(_) => Seq.empty // Spark picks vectorized reader
-    case Encryption(v) => v.toUpperCase match {
-      case "NONE" => Seq.empty
-      case mode =>
+      // would force the entire upstream scan into ONE task — a
+      // single-threaded read of the whole source at scale. NONE keeps
+      // the layout.
+      case PartitionOptions(v) =>
+        s.copy(departition = s.departition || v.equalsIgnoreCase("DEPARTITION"))
+      case IncludeMetadata(on) => s.copy(includeMetadata = on)
+      case KeepMaster(on) => s.copy(keepMaster = s.keepMaster || on)
+      case DataOptions(flags) =>
+        if (flags.contains("SKIP_CONST_ERR") || flags.contains("CONT_LD_ON_FMT_ERR"))
+          options(Nil, Seq("mode" -> "PERMISSIVE"))
+        else if (flags.contains("VALIDATE_TBL_DATA"))
+          options(Nil, Seq("mode" -> "FAILFAST"))
+        else s
+      case Encryption(v) => v.toUpperCase match {
+        case "NONE" => s
+        case mode =>
+          import graft.sources.ParquetCrypto._
+          // Factory + KMS + uniform key ride BOTH sides: the writer
+          // encrypts the dump set, and a subsequent IMPORT job carrying
+          // the same directives can decrypt it (Spark merges these
+          // options into the per-query Hadoop conf — no session-global
+          // state, concurrent jobs keep separate keys).
+          val footer =
+            if (mode == "DATA_ONLY") Seq(PlaintextFooterKey -> "true") else Nil
+          val both = baseOptions ++ Seq(UniformKeyKey -> MasterKeyId) ++ footer
+          options(both, both)
+      }
+      case EncryptionAlgorithm(v) =>
         import graft.sources.ParquetCrypto._
-        // Factory + KMS + uniform key ride BOTH sides: the writer
-        // encrypts the dump set, and a subsequent IMPORT job carrying
-        // the same directives can decrypt it (Spark merges these
-        // options into the per-query Hadoop conf — no session-global
-        // state, concurrent jobs keep separate keys).
-        val both = baseOptions ++ Seq(UniformKeyKey -> MasterKeyId)
-        val footer =
-          if (mode == "DATA_ONLY") Seq(PlaintextFooterKey -> "true")
-          else Seq.empty
-        (both ++ footer).flatMap { case (k, vv) =>
-          Seq(WriterOption(k, vv), ReaderOption(k, vv)) }
-    }
-    case EncryptionAlgorithm(v) =>
-      import graft.sources.ParquetCrypto._
-      val bits = algorithmBits(v.toUpperCase).toString
-      Seq(WriterOption(DataKeyLengthKey, bits),
-        WriterOption(KeyBitsConf, bits), ReaderOption(KeyBitsConf, bits))
-    case EncryptionMode(_) => Seq.empty // resolution order fixed in GraftKms
-    case EncryptionPassword(pw) =>
-      import graft.sources.ParquetCrypto._
-      Seq(WriterOption(PasswordConf, pw), ReaderOption(PasswordConf, pw))
-    case PhysicalSwitch(n, _) => Seq(Ignored(s"$n has no Spark analog"))
-    case RemapSchema(f, t) => Seq(IdentityRemap("SCHEMA", f, t))
-    case RemapTablespace(f, t) => Seq(IdentityRemap("TABLESPACE", f, t))
-    case RemapDatafile(f, t) => Seq(IdentityRemap("DATAFILE", f, t))
-    case RemapTable(f, t) => Seq(IdentityRemap("TABLE", f, t))
-    case TransformDirective(n, v) => n match {
-      case "OID" if v == "0" || v.equalsIgnoreCase("false") =>
+        val bits = algorithmBits(v.toUpperCase).toString
+        options(Seq(DataKeyLengthKey -> bits, KeyBitsConf -> bits),
+          Seq(KeyBitsConf -> bits))
+      case EncryptionPassword(pw) =>
+        import graft.sources.ParquetCrypto._
+        options(Seq(PasswordConf -> pw), Seq(PasswordConf -> pw))
+      case RemapSchema(f, t) => s.copy(schemaRemaps = s.schemaRemaps :+ (f -> t))
+      case RemapTablespace(f, t) =>
+        s.copy(tablespaceRemaps = s.tablespaceRemaps :+ (f -> t))
+      case RemapDatafile(f, t) => s.copy(datafileRemaps = s.datafileRemaps :+ (f -> t))
+      case RemapTable(f, t) => s.copy(tableRemaps = s.tableRemaps :+ (f -> t))
+      case TransformDirective("OID", v) if v == "0" || v.equalsIgnoreCase("false") =>
         // Drop surrogate object-identifier columns on import
-        Seq(PlanTransform(df =>
-          df.columns.find(_.equalsIgnoreCase("oid"))
-            .map(df.drop).getOrElse(df)))
-      case "INMEMORY" if v == "1" || v.equalsIgnoreCase("true") =>
-        Seq(PlanTransform(df => df.cache()))
-      case _ => Seq(Ignored(s"transform $n=$v recorded as table property"))
+        transform(df =>
+          df.columns.find(_.equalsIgnoreCase("oid")).map(df.drop).getOrElse(df))
+      case TransformDirective("INMEMORY", v) if v == "1" || v.equalsIgnoreCase("true") =>
+        transform(df => df.cache())
+      case DeleteFiles() => s.copy(deleteFiles = true)
+      case TargetFileSize(b) => s.copy(targetFileBytes = Some(b))
+      // accepted for API parity, with no Spark analog: estimation source
+      // (stats-based either way), log shaping, the reader choice (Spark
+      // picks the vectorized reader), key resolution order (fixed in
+      // GraftKms), Oracle-physical switches and the other transforms
+      // (table properties on a columnar store)
+      case _: Estimate | _: Metrics | _: Logtime | _: DataAccessMethod |
+          _: EncryptionMode | _: PhysicalSwitch | _: TransformDirective => s
     }
-    case DeleteFiles() =>
-      Seq(PostAction(ctx => ctx.deleteSourceFiles()))
-    case TargetFileSize(b) => Seq(TargetFileBytes(b))
   }
 
   /** Registry for JSON-name instantiation — parity with the reflective

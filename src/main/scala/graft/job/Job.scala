@@ -3,7 +3,7 @@ package graft.job
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.Tables
-import graft.directives.{Directive, DirectiveCompiler, Effect}
+import graft.directives.{Directive, DirectiveCompiler, JobSettings}
 import graft.model._
 import graft.status.{JobRegistry, JobStatusInfo, ObjectStatus}
 import org.apache.hadoop.fs.Path
@@ -14,32 +14,12 @@ import org.apache.spark.sql.functions.{count, lit}
 import java.time.Instant
 import scala.util.control.NonFatal
 
-/** Execution-time context handed to POST-stage directives
-  * (reference Stage.POST application, job.py:288-295).
-  */
-case class JobContext(
-    spark: SparkSession,
-    jobName: String,
-    sourceDir: String,
-    targetDir: String,
-    sourceFiles: Seq[String]) {
-  /** DELETE_FILES post-action (directives.py:556-587): remove the
-    * consumed dump set — "move" semantics for import. */
-  def deleteSourceFiles(): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    sourceFiles.foreach { f =>
-      val p = new Path(f)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
-}
-
 /** A Data-Pump-style bulk ETL job, re-expressed as a Spark read→write
   * pipeline. Mirrors the reference lifecycle (job.py:195-308):
-  * validate → name synthesis → open (registry entry) → metadata
-  * assembly → file resolution → snapshot pin → staged directive
-  * application → start (Spark action) → status → post actions.
+  * directives compiled once into [[JobSettings]] → name synthesis →
+  * open (registry entry) → snapshot pin → object selection → each
+  * object's targets landed (Spark action or copy) → sidecar, ledger and
+  * log → DELETE_FILES.
   *
   * EXPORT: `sourceDir` tables → parquet dump set under
   * `targetDir/<schema>/<table>/` + `_metadata.json` sidecar.
@@ -67,7 +47,7 @@ case class DataPumpJob(
     jobOwner: String = "spark",
     explicitJobName: Option[String] = None,
     versioned: Boolean = false) {
-  import DataPumpJob.{CopyParts, Plan, Write}
+  import DataPumpJob.{CopyParts, Plan, Target, Write}
 
   private val mapper =
     new ObjectMapper().registerModule(DefaultScalaModule)
@@ -79,23 +59,22 @@ case class DataPumpJob(
     * (job.py:297-304); attach via JobRegistry/sidecar later.
     */
   def run(spark: SparkSession, wait: Boolean = true): JobStatusInfo = {
+    val settings = DirectiveCompiler.compile(directives)
     val date = jobDate
-    val remap = directives.collectFirst { case graft.directives.RemapSchema(f, t) => (f, t) }
-    val included = directives.collect {
-      case graft.directives.IncludeSchema(s) => s.toUpperCase }
     val name = explicitJobName.getOrElse(Util.jobName(
       operation, date,
       schemas =
         if (operation != Operation.Export) Nil
-        else if (included.nonEmpty) included
+        else if (settings.schemas.nonEmpty) settings.schemas.map(_.toUpperCase)
         else Seq(schema.toUpperCase),
-      remapSchema = remap.map { case (f, t) => (f.toUpperCase, t.toUpperCase) },
+      remapSchema = settings.schemaRemaps.headOption.map { case (f, t) =>
+        (f.toUpperCase, t.toUpperCase) },
       jobOwner = Some(jobOwner), tag = tag))
 
     def execute(): JobStatusInfo = {
       val started = Instant.now()
       val info =
-        try runStages(spark, name, date, started)
+        try runStages(spark, settings, name, date, started)
         catch {
           case NonFatal(e) =>
             JobStatusInfo(name, jobOwner, operation.name, mode.name,
@@ -122,23 +101,22 @@ case class DataPumpJob(
 
   private def runStages(
       spark: SparkSession,
+      s: JobSettings,
       name: String,
       date: Instant,
       started: Instant): JobStatusInfo = {
-    val effects = directives.flatMap(DirectiveCompiler.compile)
-    if (effects.contains(Effect.RetainMaster)) JobRegistry.retain(name)
+    if (s.keepMaster) JobRegistry.retain(name)
     spark.sparkContext.setJobGroup(name, s"${operation.name} ${mode.name}")
     // events.parquet carries nanosecond timestamps (Spark 4 refuses
     // them natively); read as long nanos so FULL jobs can move them
     graft.Sessions.ensureEventTimestampCompat(spark)
 
     // ---- snapshot resolution (FLASHBACK_SCN/TIME -> version dir) ----
-    val explicitPin = effects.collectFirst { case Effect.SnapshotPin(v) => v }
     val (importSource: String, sourceVersion: Long) = operation match {
       case Operation.Import
           if graft.sources.SnapshotStore.isVersioned(spark, sourceDir) =>
         val v = graft.sources.SnapshotStore
-          .resolvePin(spark, sourceDir, explicitPin).get
+          .resolvePin(spark, sourceDir, s.snapshotPin).get
         (graft.sources.SnapshotStore.versionDir(sourceDir, v), v)
       case Operation.Import => (sourceDir, 0L)
       case _ =>
@@ -157,12 +135,13 @@ case class DataPumpJob(
       .map(v => graft.sources.SnapshotStore.versionDir(targetDir, v))
       .getOrElse(targetDir)
 
+    val srcRoot = if (operation == Operation.Import) importSource else sourceDir
     def srcPathOf(srcSchema: String, table: String): String = operation match {
       case Operation.Import => s"$importSource/$srcSchema/$table"
       case _ => sourceTablePath(spark, sourceDir, srcSchema, table)
     }
 
-    // ---- object enumeration (mode scoping + metadata filters) ----
+    // ---- object selection: one rule in every mode ----
     // (schema, table) pairs. Source layouts: flat `dir/<table>.parquet`
     // under the job's constructor schema, nested `dir/<schema>/<table>
     // .parquet` for multi-schema sources, and import dump sets
@@ -171,80 +150,43 @@ case class DataPumpJob(
       case Operation.Import => listDumpTables(spark, importSource)
       case _ => listSourceTables(spark, sourceDir)
     }
-    // SCHEMA-mode scoping (job.py:142-158; INCLUDE_SCHEMA restricts the
-    // job to the named schemas, directives.py:148-164). An explicit
-    // INCLUDE_SCHEMA scopes any mode; bare SCHEMA mode scopes to the
-    // job's own schema.
-    val includedSchemas = directives.collect {
-      case graft.directives.IncludeSchema(s) => s.toLowerCase }.toSet
-    val schemaScoped =
-      if (includedSchemas.nonEmpty)
-        available.filter(p => includedSchemas(p._1.toLowerCase))
-      else mode match {
-        case JobMode.Schema => available.filter(_._1.equalsIgnoreCase(schema))
-        case _ => available
-      }
-    val modeScoped = mode match {
-      case JobMode.Table =>
-        val wanted = directives.collect {
-          case graft.directives.IncludeTable(ts) => ts.map(_.toLowerCase)
-        }.flatten.toSet
-        if (wanted.isEmpty) schemaScoped
-        else schemaScoped.filter(p => wanted(p._2.toLowerCase))
-      case JobMode.Tablespace | JobMode.Transportable =>
-        // Path-prefix selection (SURVEY §1.1): a tablespace on a file
-        // store is a storage root, so the mode keeps the tables whose
-        // resolved source path sits under one of the INCLUDE_TABLESPACE
-        // prefixes (absolute, or relative to the source dir).
-        val prefixes = directives.collect {
-          case graft.directives.IncludeTablespace(ps) => ps }.flatten
-        if (prefixes.isEmpty) schemaScoped
-        else {
-          val srcRoot = operation match {
-            case Operation.Import => importSource
-            case _ => sourceDir
-          }
-          def under(path: String, prefix: String): Boolean = {
-            val abs = if (prefix.startsWith("/")) prefix
-              else s"$srcRoot/$prefix"
-            path == abs || path.startsWith(abs + "/") ||
-              path.startsWith(abs + ".") // flat `<prefix>.parquet`
-          }
-          schemaScoped.filter { case (s, t) =>
-            prefixes.exists(p => under(srcPathOf(s, t), p)) }
-        }
-      case _ => schemaScoped
+    // TABLESPACE/TRANSPORTABLE: path-prefix selection (SURVEY §1.1): a
+    // tablespace on a file store is a storage root, so the mode keeps
+    // the tables whose resolved source path sits under one of the
+    // INCLUDE_TABLESPACE prefixes (absolute, or relative to the source
+    // dir).
+    val byPrefix = s.tablespaces.nonEmpty &&
+      (mode == JobMode.Tablespace || mode == JobMode.Transportable)
+    def under(path: String, prefix: String): Boolean = {
+      val abs = if (prefix.startsWith("/")) prefix else s"$srcRoot/$prefix"
+      path == abs || path.startsWith(abs + "/") ||
+        path.startsWith(abs + ".") // flat `<prefix>.parquet`
     }
-    val selected = effects.foldLeft(modeScoped) {
-      case (pairs, Effect.ObjectSelection(f)) =>
-        val keep = f(pairs.map(_._2)).toSet
-        pairs.filter(p => keep(p._2))
-      case (pairs, _) => pairs
+    // A table is selected when its schema is in scope (INCLUDE_SCHEMA
+    // scopes any mode, directives.py:148-164; else SCHEMA mode scopes to
+    // the job's own schema, job.py:142-158), its name is in the union
+    // of the INCLUDE_TABLE lists, it sits under an INCLUDE_TABLESPACE
+    // prefix, and EXCLUDE_OBJECT_TYPE=TABLE is not set.
+    val selected = available.filter { case (sch, t) =>
+      !s.tablesExcluded &&
+        (if (s.schemas.nonEmpty) s.schemas.exists(_.toLowerCase == sch.toLowerCase)
+         else mode != JobMode.Schema || sch.equalsIgnoreCase(schema)) &&
+        s.tables.forall(_(t.toLowerCase)) &&
+        (!byPrefix || s.tablespaces.exists(p => under(srcPathOf(sch, t), p)))
     }
 
-    // ---- effect resolution ----
-    val parallel = effects.collectFirst { case Effect.SetParallel(n) => n }.getOrElse(1)
     // TARGET_FILE_SIZE (engine extension): on IMPORT, part-file count
     // per table derives from measured source bytes / target instead of
     // PARALLEL — the write-time layout bound that needs no second
     // (compaction) pass. Export keeps the PARALLEL/%U coupling: the
     // dump-set contract names exactly `parallel` files.
-    val targetFileBytes: Option[Long] =
-      if (operation == Operation.Import)
-        effects.collectFirst { case Effect.TargetFileBytes(b) => b }
-      else None
+    val targetFileBytes = s.targetFileBytes.filter(_ => operation == Operation.Import)
     // DUMP_FORMAT governs the dump-set side: what an EXPORT writes.
     // IMPORT always lands in the engine's native parquet store and
     // SNIFFS the dump's format from its part files, so any-format dump
     // roots import without configuration.
-    val dumpFormat = effects.collectFirst {
-      case Effect.SetFormat(f) => f }.getOrElse("parquet")
     val writeFormat =
-      if (operation == Operation.Import) "parquet" else dumpFormat
-    val (saveMode, truncate) = effects.collectFirst {
-      case Effect.SetSaveMode(m, t) => (m, t)
-    }.getOrElse((SaveMode.ErrorIfExists, false))
-    val writerOpts = effects.collect { case Effect.WriterOption(k, v) => k -> v }.toMap
+      if (operation == Operation.Import) "parquet" else s.dumpFormat
     // ENCRYPTION is Parquet Modular Encryption: its writer options are
     // parquet.crypto.*/parquet.encryption.* keys that every OTHER
     // format writer silently IGNORES — combined with DUMP_FORMAT=csv/
@@ -252,59 +194,25 @@ case class DataPumpJob(
     // COMPLETED. A silently-unencrypted "encrypted" export is the one
     // failure mode a security directive must not have: fail the job up
     // front instead.
-    if (writeFormat != "parquet" && writerOpts.keys.exists(k =>
+    if (writeFormat != "parquet" && s.writerOptions.keys.exists(k =>
         k.startsWith("parquet.crypto") || k.startsWith("parquet.encryption")))
       throw new graft.model.Exceptions.BadRequest(
         s"ENCRYPTION requires the parquet dump format; DUMP_FORMAT=" +
           s"$writeFormat would silently write a cleartext dump")
-    val readerOpts = effects.collect { case Effect.ReaderOption(k, v) => k -> v }.toMap
-    val transforms = effects.collect { case Effect.PlanTransform(f) => f }
-    val estimateOnly = effects.contains(Effect.EstimateOnly)
-    val departition = effects.contains(Effect.Departition)
     // IMPORT may copy a dump table's part files instead of rewriting its
     // rows when nothing would change them: no row transform, no reader
     // or writer option, PARALLEL (not TARGET_FILE_SIZE) sets the file
     // count, and the write creates or replaces the target. `plan` makes
     // the per-object rest of the decision from the dump's files.
-    val copyable = operation == Operation.Import && transforms.isEmpty &&
-      readerOpts.isEmpty && writerOpts.isEmpty && targetFileBytes.isEmpty &&
-      !truncate &&
-      (saveMode == SaveMode.Overwrite || saveMode == SaveMode.ErrorIfExists)
-    val schemaRemaps = effects.collect {
-      case Effect.IdentityRemap("SCHEMA", f, t) => f.toLowerCase -> t
-    }.toMap
-    val tableRemaps = effects.collect {
-      case Effect.IdentityRemap("TABLE", f, t) => f.toLowerCase -> t.toLowerCase
-    }.toMap
-    // REMAP_TABLESPACE (directives.py:453-454): a tablespace is physical
-    // placement; on a file store that's the output root, so the remap
-    // rewrites matching path SEGMENTS of the target root. REMAP_DATAFILE
-    // (directives.py:457-458) rewrites a full path PREFIX (a datafile is
-    // a concrete file path). Exercised like tests/test_import.py:48-51.
-    val tablespaceRemaps = effects.collect {
-      case Effect.IdentityRemap("TABLESPACE", f, t) => f -> t }.toMap
-    val datafileRemaps = effects.collect {
-      case Effect.IdentityRemap("DATAFILE", f, t) => (f, t) }
-    def remapStorage(root: String): String = {
-      val bySegment =
-        if (tablespaceRemaps.isEmpty) root
-        else root.split('/')
-          .map(s => tablespaceRemaps.getOrElse(s, s)).mkString("/")
-      datafileRemaps.foldLeft(bySegment) { case (r, (f, t)) =>
-        if (r == f || r.startsWith(f + "/")) t + r.drop(f.length) else r
-      }
-    }
-    val storageTarget = remapStorage(effTarget)
-    val asOf = effects.collectFirst { case Effect.SnapshotPin(v) => v }
+    val copyable = operation == Operation.Import && s.transforms.isEmpty &&
+      s.readerOptions.isEmpty && s.writerOptions.isEmpty &&
+      targetFileBytes.isEmpty && !s.truncate &&
+      (s.saveMode == SaveMode.Overwrite || s.saveMode == SaveMode.ErrorIfExists)
+    val storageTarget = s.storageOf(effTarget)
+    val asOf = s.snapshotPin
       .getOrElse(Util.formatJobDate(date)) // auto snapshot pin, job.py:261-269
-    val includeMetadata = effects.collectFirst {
-      case Effect.ContentSelection(_, md) => md
-    }.getOrElse(true)
-
-    // REMAP_SCHEMA applies per source schema, exact-match semantics
-    // (directives.py:449-450): only objects OF the remapped schema move.
-    def targetSchemaOf(srcSchema: String): String =
-      schemaRemaps.getOrElse(srcSchema.toLowerCase, srcSchema)
+    def outPathOf(srcSchema: String, table: String): String =
+      s"$storageTarget/${s.schemaOf(srcSchema)}/${s.tableOf(table)}"
 
     // ---- per-object movement with error accumulation (tolerates
     //      partial failure → COMPLETED_WITH_ERRORS, status.py:38) ----
@@ -331,17 +239,69 @@ case class DataPumpJob(
     // each object's on-disk source bytes (driver-side FS metadata, no
     // scan): the live tier's expected input, TARGET_FILE_SIZE's measure
     // and the worker pool's start order
-    val srcBytes: IndexedSeq[Long] = selected.toIndexedSeq.map { case (s, t) =>
-      if (estimateOnly) 0L
-      else try pathBytes(spark, srcPathOf(s, t)) catch { case NonFatal(_) => 0L }
+    val srcBytes: IndexedSeq[Long] = selected.toIndexedSeq.map { case (sch, t) =>
+      if (s.estimateOnly) 0L
+      else try pathBytes(spark, srcPathOf(sch, t)) catch { case NonFatal(_) => 0L }
     }
+
+    // TRUNCATE preserves target schema; APPEND extends the existing
+    // table in place — BOTH require the incoming schema to equal what's
+    // on disk. An unchecked APPEND is the worse failure: Spark happily
+    // lands mismatched part files next to the old ones, and every later
+    // read resolves the union by footer merge — silently nulled columns
+    // instead of an error (the reference's loader raises ORA-31693 per
+    // object on structure mismatch; that is this guard, routed through
+    // the per-object error accumulation). Scope: self-describing formats
+    // only — a csv/json target's schema comes back through lossy
+    // inference (alphabetized columns, widened ints), so "existing !=
+    // incoming" there says nothing; those appends keep the historical
+    // unchecked behavior. The reader options ride along so an ENCRYPTED
+    // target's footer is readable.
+    def guardInPlaceWrite(table: String, outP: String,
+        incoming: => org.apache.spark.sql.types.StructType): Unit = {
+      val existingFormat =
+        if ((s.truncate || s.saveMode == SaveMode.Append) &&
+          exists(spark, outP)) Some(detectFormat(spark, outP))
+        else None
+      if (existingFormat.exists(f => f == "parquet" || f == "orc")) {
+        val action = if (s.truncate) "TRUNCATE" else "APPEND"
+        val existing = readTable(spark, outP, s.readerOptions,
+          existingFormat.get).schema
+        require(existing == incoming,
+          s"$action requires identical schema for $table at $outP: " +
+            s"existing ${existing.simpleString} vs ${incoming.simpleString}")
+      }
+    }
+
+    /** Land one of `table`'s targets: None when TABLE_EXISTS_ACTION=SKIP
+      * finds it, else its rows and on-disk bytes. */
+    def land(table: String, t: Target): Option[(Long, Long)] =
+      if (s.saveMode == SaveMode.Ignore && exists(spark, t.out)) None
+      else {
+        guardInPlaceWrite(table, t.out, t.df.schema)
+        // File count: PARALLEL (%U dump-set layout) unless
+        // TARGET_FILE_SIZE bounds it by measured source bytes
+        val n = targetFileBytes.fold(s.parallel)(partsFor(t.srcBytes, _))
+        val rows = plan(spark, t.df, n, t.copyFrom) match {
+          case CopyParts(files, footerRows) =>
+            copyParts(spark, files, t.out, s.saveMode)
+            footerRows
+          case Write(shape) =>
+            // Row count observed ON the write itself — a second full
+            // scan of what was just written would double read I/O
+            // (tens of redundant TB at the 100 TB design point).
+            val obs = Observation()
+            writeTable(shape(t.df.observe(obs, count(lit(1)).as("rows"))),
+              t.out, s.saveMode, s.writerOptions, writeFormat)
+            obs.get("rows").asInstanceOf[Long]
+        }
+        Some((rows, pathBytes(spark, t.out)))
+      }
 
     def moveOne(i: Int): ObjectStatus = {
       val (srcSchema, table) = selected(i)
       val t0 = System.nanoTime()
-      val targetTable = tableRemaps.getOrElse(table, table)
-      val targetSchema = targetSchemaOf(srcSchema)
-      val outPath = s"$storageTarget/$targetSchema/$targetTable"
+      val outPath = outPathOf(srcSchema, table)
       val srcPath = srcPathOf(srcSchema, table)
       try {
         // STOP cancels the job group's running and future Spark jobs; an
@@ -354,153 +314,28 @@ case class DataPumpJob(
           case _ => "parquet"
         }
         // built only by the paths that read rows: a copy reads footers
-        lazy val df0 = readTable(spark, srcPath, readerOpts, srcFormat)
-        lazy val df = transforms.foldLeft(df0)((d, f) => f(d))
-        if (estimateOnly || operation == Operation.SqlFile) {
+        lazy val df0 = readTable(spark, srcPath, s.readerOptions, srcFormat)
+        lazy val df = s.transforms.foldLeft(df0)((d, f) => f(d))
+        if (s.estimateOnly || operation == Operation.SqlFile) {
           // ESTIMATE_ONLY (directives.py:304-305): stats, no movement.
           val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
           if (operation == Operation.SqlFile)
-            writeString(spark, s"$storageTarget/$targetSchema/$targetTable.sql",
-              s"CREATE TABLE $targetSchema.$targetTable (${df.schema.toDDL});\n")
+            writeString(spark, s"$outPath.sql",
+              s"CREATE TABLE ${s.schemaOf(srcSchema)}.${s.tableOf(table)} " +
+                s"(${df.schema.toDDL});\n")
           ObjectStatus(table, "ESTIMATED", -1L,
             bytes.longValue, secsSince(t0), None, srcSchema)
         } else {
-          // TRUNCATE preserves target schema; APPEND extends the
-          // existing table in place — BOTH require the incoming schema
-          // to equal what's on disk. An unchecked APPEND is the worse
-          // failure: Spark happily lands mismatched part files next to
-          // the old ones, and every later read resolves the union by
-          // footer merge — silently nulled columns instead of an error
-          // (the reference's loader raises ORA-31693 per object on
-          // structure mismatch; that is this guard, routed through the
-          // per-object error accumulation). Scope: self-describing
-          // formats only — a csv/json target's schema comes back
-          // through lossy inference (alphabetized columns, widened
-          // ints), so "existing != incoming" there says nothing; those
-          // appends keep the historical unchecked behavior. readerOpts
-          // ride along so an ENCRYPTED target's footer is readable.
-          // ONE definition, called on BOTH write paths — the
-          // DEPARTITION combo writes append onto previously promoted
-          // tables through the very same hole otherwise.
-          def guardInPlaceWrite(outP: String,
-              incoming: => org.apache.spark.sql.types.StructType): Unit = {
-            val existingFormat =
-              if ((truncate || saveMode == SaveMode.Append) &&
-                exists(spark, outP)) Some(detectFormat(spark, outP))
-              else None
-            if (existingFormat.exists(f => f == "parquet" || f == "orc")) {
-              val action = if (truncate) "TRUNCATE" else "APPEND"
-              val existing = readTable(spark, outP, readerOpts,
-                existingFormat.get).schema
-              require(existing == incoming,
-                s"$action requires identical schema for $table at $outP: " +
-                  s"existing ${existing.simpleString} vs ${incoming.simpleString}")
-            }
-          }
-          def skipExisting(outP: String): Boolean =
-            saveMode == SaveMode.Ignore && exists(spark, outP)
-          if (departition && partitionColumnsOf(df0).nonEmpty) {
-            // DEPARTITION (directives.py:346-349): each source partition
-            // becomes its own table `<table>_<col>_<value>`. Partition
-            // combos come from the FILE INDEX (the `k=v` path segments
-            // Spark already discovered) — no distinct().collect() scan —
-            // and each combo is read from its own partition directory,
-            // so the source is scanned exactly once in total. Row counts
-            // ride the writes via Observation (no re-scan).
-            val pcols = partitionColumnsOf(df0)
-            val seg = "([A-Za-z_][A-Za-z0-9_]*)=(.+)".r
-            // Combo values are unescaped to the ACTUAL partition values
-            // (path segments are Hive/URL-escaped, %XX).
-            // inputFiles are URIs (their own %-encoding on top of the
-            // Hive escaping): strip the URI layer first, then Hive-decode.
-            val filesByCombo: Map[Seq[(String, String)], Seq[String]] =
-              df0.inputFiles.toSeq
-                .map { f =>
-                  (new java.net.URI(f).getPath.split('/').toSeq.collect {
-                    case seg(k, v) if pcols.contains(k) =>
-                      (k, unescapePathValue(v))
-                  }, f)
-                }
-                .filter(_._1.nonEmpty)
-                .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-            val combos: Seq[Seq[(String, String)]] =
-              filesByCombo.keys.toSeq.sortBy(_.map(_._2).mkString("/"))
-            // TARGET_FILE_SIZE per combo: each promoted table's byte
-            // share IS knowable from the file index (driver-side
-            // FileStatus per part file, no scan) — unlike the earlier
-            // caveat, which predated keeping the combo→files map.
-            def comboParts(combo: Seq[(String, String)]): Int =
-              targetFileBytes match {
-                case Some(b) =>
-                  val conf = spark.sparkContext.hadoopConfiguration
-                  val sz = filesByCombo(combo).map { f =>
-                    val p = new Path(f)
-                    p.getFileSystem(conf).getFileStatus(p).getLen
-                  }.sum
-                  partsFor(sz, b)
-                case None => parallel
-              }
-            def comboOut(combo: Seq[(String, String)]): String =
-              s"$storageTarget/$targetSchema/${targetTable}_" +
-                combo.map { case (k, v) => s"${k}_${sanitizeName(v)}" }.mkString("_")
-            // TABLE_EXISTS_ACTION=SKIP skips each promoted table that
-            // exists, as the plain path below skips the whole table
-            val toWrite = combos.filterNot(c => skipExisting(comboOut(c)))
-            var rows = 0L; var bytes = 0L
-            toWrite.foreach { combo =>
-              // Select the combo by FILTERING on the partition columns:
-              // Catalyst partition pruning reduces each job to exactly
-              // that combo's directory, so the source is still read
-              // exactly once in total — and no escaped-path juggling.
-              val part0 = combo.foldLeft(df) { case (d, (k, v)) =>
-                d.filter(
-                  if (v == "__HIVE_DEFAULT_PARTITION__")
-                    org.apache.spark.sql.functions.col(k).isNull
-                  else org.apache.spark.sql.functions.col(k) === lit(v))
-              }
-              val part = part0.drop(pcols: _*)
-              val obs = Observation()
-              val out = comboOut(combo)
-              guardInPlaceWrite(out, part.schema)
-              val shape = layout(part, comboParts(combo))
-              writeTable(shape(part.observe(obs, count(lit(1)).as("rows"))),
-                out, saveMode, writerOpts, writeFormat)
-              rows += obs.get("rows").asInstanceOf[Long]
-              bytes += pathBytes(spark, out)
-            }
-            ObjectStatus(table,
-              if (combos.nonEmpty && toWrite.isEmpty) "SKIPPED" else "COMPLETED",
-              rows, bytes, secsSince(t0), None, srcSchema)
-          } else if (skipExisting(outPath)) {
-            ObjectStatus(table, "SKIPPED", 0, 0, secsSince(t0), None, srcSchema)
-          } else {
-            guardInPlaceWrite(outPath, df.schema)
-            // File count: PARALLEL (%U dump-set layout) unless
-            // TARGET_FILE_SIZE bounds it by measured source bytes —
-            // driver-side FS metadata, no scan. (DEPARTITION combos
-            // above size per promoted table from the combo's own file
-            // index share.)
-            val nParts = targetFileBytes match {
-              case Some(b) => partsFor(srcBytes(i), b)
-              case None => parallel
-            }
-            val rows = plan(spark, df, nParts,
-                Option.when(copyable && srcFormat == "parquet")(srcPath)) match {
-              case CopyParts(files, footerRows) =>
-                copyParts(spark, files, outPath, saveMode)
-                footerRows
-              case Write(shape) =>
-                // Row count observed ON the write itself — a second full
-                // scan of what was just written would double read I/O
-                // (tens of redundant TB at the 100 TB design point).
-                val obs = Observation()
-                writeTable(shape(df.observe(obs, count(lit(1)).as("rows"))),
-                  outPath, saveMode, writerOpts, writeFormat)
-                obs.get("rows").asInstanceOf[Long]
-            }
-            ObjectStatus(table, "COMPLETED", rows,
-              pathBytes(spark, outPath), secsSince(t0), None, srcSchema)
-          }
+          val pcols = if (s.departition) partitionColumnsOf(df0) else Nil
+          val targets =
+            if (pcols.isEmpty) Seq(new Target(outPath, df, srcBytes(i),
+              Option.when(copyable && srcFormat == "parquet")(srcPath)))
+            else promoted(spark, df0.inputFiles.toSeq, df, pcols, outPath)
+          val landed = targets.flatMap(land(table, _))
+          ObjectStatus(table,
+            if (targets.nonEmpty && landed.isEmpty) "SKIPPED" else "COMPLETED",
+            landed.map(_._1).sum, landed.map(_._2).sum, secsSince(t0), None,
+            srcSchema)
         }
       } catch {
         case NonFatal(e) =>
@@ -524,42 +359,29 @@ case class DataPumpJob(
       // INSIDE each action is still the cluster scheduler's job.
       // Objects start largest first, so the longest one does not wait
       // for a worker to free up; results keep `selected` order.
-      val workers = math.max(1, math.min(parallel, math.max(1, selected.size)))
-      if (workers <= 1 || selected.size <= 1) {
-        selected.indices.foreach { i =>
-          resultByIdx.put(i, moveOne(i)); publishProgress()
-        }
-      } else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
-        try {
-          val futures = selected.indices.sortBy(i => -srcBytes(i)).map { i =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                resultByIdx.put(i, moveOne(i)); publishProgress()
-              }
-            })
-          }
-          futures.foreach(_.get()) // moveOne never throws; .get re-raises bugs
-        } finally pool.shutdown()
-      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(s.parallel, selected.size)))
+      try {
+        selected.indices.sortBy(i => -srcBytes(i)).map { i =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = { resultByIdx.put(i, moveOne(i)); publishProgress() }
+          })
+        }.foreach(_.get()) // moveOne never throws; .get re-raises bugs
+      } finally pool.shutdown()
     } finally {
       JobRegistry.detachLive(name)
       spark.sparkContext.removeSparkListener(liveTier)
     }
     val results = orderedResults
     spark.sparkContext.clearJobGroup()
-
-    // ---- metadata sidecar (commands.py:234-244) ----
     // Completion is tracked per (schema, table) pair — two schemas may
     // contain the same table name, and only the successful copy's target
     // path belongs in dumpFiles.
-    val pairOutcomes: Seq[((String, String), ObjectStatus)] =
-      selected.zip(results)
-    val dumpFiles = pairOutcomes.collect {
-      case ((s, t), r) if r.state == "COMPLETED" =>
-        s"$storageTarget/${targetSchemaOf(s)}/${tableRemaps.getOrElse(t, t)}"
-    }
-    if (includeMetadata && !estimateOnly) {
+    val completed = selected.zip(results).collect {
+      case (pair, r) if r.state == "COMPLETED" => pair }
+
+    // ---- metadata sidecar (commands.py:234-244) ----
+    if (s.includeMetadata && !s.estimateOnly) {
       // Per-schema metadata entries — parity with the reference's
       // SchemaHandler assembly (job.py:142-158,235-250): each schema
       // lists its tables, its storage root (tablespace analog), and
@@ -567,13 +389,13 @@ case class DataPumpJob(
       // job.py:246-250) so a dump consumer can tell which source
       // state it holds.
       val schemaMetas = selected.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (s, ps) =>
-          SchemaMeta(s, ps.map(_._2), tablespace = storageTarget,
+        .map { case (sch, ps) =>
+          SchemaMeta(sch, ps.map(_._2), tablespace = storageTarget,
             version = sourceVersion) }
       val meta = JobMetaData(name, jobOwner, operation.name, mode.name,
         Util.formatJobDate(date), selected.map(_._2),
         directives.map(d => Map("name" -> d.name, "value" -> d.valueRepr)),
-        dumpFiles, Some(asOf), tag, schemaMetas)
+        completed.map((outPathOf _).tupled), Some(asOf), tag, schemaMetas)
       writeString(spark, s"$storageTarget/_metadata.json",
         mapper.writerWithDefaultPrettyPrinter().writeValueAsString(meta))
     }
@@ -585,15 +407,6 @@ case class DataPumpJob(
     exportVersion.foreach { v =>
       if (anyCompleted)
         graft.sources.SnapshotStore.appendVersion(spark, targetDir, name, date)
-    }
-
-    // ---- POST-stage directives ----
-    val ctx = JobContext(spark, name, importSource, storageTarget,
-      sourceFiles = if (operation == Operation.Import)
-        selected.map { case (s, t) => s"$importSource/$s/$t" } else Nil)
-    effects.foreach {
-      case Effect.PostAction(runPost) => runPost(ctx)
-      case _ => ()
     }
 
     val failed = results.count(_.state == "FAILED")
@@ -609,7 +422,7 @@ case class DataPumpJob(
     // Written in the reference's dump-log line shapes, so the engine's
     // OWN LogParser (the strategy-2 status fallback) round-trips it:
     // finalState(readLines(log)) == this job's state.
-    if (includeMetadata && !estimateOnly) {
+    if (s.includeMetadata && !s.estimateOnly) {
       val verb = operation match {
         case Operation.Import => "imported"
         case _ => "exported"
@@ -636,6 +449,15 @@ case class DataPumpJob(
         (lines :+ finalLine).mkString("", "\n", "\n"))
       catch { case NonFatal(_) => () } // log write must not fail the job
     }
+
+    // ---- DELETE_FILES (directives.py:556-587): an import consumes the
+    //      dumps of the objects it moved, once their outcome is recorded ----
+    if (s.deleteFiles && operation == Operation.Import)
+      completed.foreach { case (sch, t) =>
+        val p = new Path(s"$importSource/$sch/$t")
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+
     JobStatusInfo(name, jobOwner, operation.name, mode.name, state,
       percentDone = if (results.isEmpty) 100.0
         else 100.0 * (results.size - failed) / results.size,
@@ -861,6 +683,46 @@ case class DataPumpJob(
     }
   }
 
+  /** DEPARTITION (directives.py:346-349): each source partition becomes
+    * its own table `<out>_<col>_<value>`. Partition combos come from the
+    * FILE INDEX (`files`, the `k=v` path segments Spark already
+    * discovered) — no distinct().collect() scan — and each combo's frame
+    * selects it by FILTERING `df` on the partition columns: Catalyst
+    * partition pruning reduces each write to exactly that combo's
+    * directory, so the source is scanned exactly once in total. Each
+    * combo's source bytes (TARGET_FILE_SIZE's measure) are its files'
+    * lengths, driver-side FileStatus, no scan. */
+  private def promoted(spark: SparkSession, files: Seq[String], df: DataFrame,
+      pcols: Seq[String], out: String): Seq[Target] = {
+    import org.apache.spark.sql.functions.col
+    val seg = "([A-Za-z_][A-Za-z0-9_]*)=(.+)".r
+    // Combo values are unescaped to the ACTUAL partition values (path
+    // segments are Hive/URL-escaped, %XX). inputFiles are URIs (their
+    // own %-encoding on top of the Hive escaping): strip the URI layer
+    // first, then Hive-decode.
+    files
+      .map { f =>
+        (new java.net.URI(f).getPath.split('/').toSeq.collect {
+          case seg(k, v) if pcols.contains(k) => (k, unescapePathValue(v))
+        }, f)
+      }
+      .filter(_._1.nonEmpty)
+      .groupBy(_._1).toSeq.sortBy(_._1.map(_._2).mkString("/"))
+      .map { case (combo, byCombo) =>
+        new Target(
+          s"${out}_" + combo.map { case (k, v) => s"${k}_${sanitizeName(v)}" }.mkString("_"),
+          combo.foldLeft(df) { case (d, (k, v)) =>
+            d.filter(if (v == "__HIVE_DEFAULT_PARTITION__") col(k).isNull
+              else col(k) === lit(v))
+          }.drop(pcols: _*),
+          byCombo.map { case (_, f) =>
+            val p = new Path(f)
+            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .getFileStatus(p).getLen
+          }.sum)
+      }
+  }
+
   /** Reverse Hive path escaping (`%XX`) so DEPARTITION sees the actual
     * partition values, not the escaped path segments; the Hive null
     * sentinel stays verbatim.
@@ -922,6 +784,17 @@ object DataPumpJob {
   private final case class CopyParts(files: Seq[Path], rows: Long) extends Plan
   /** Write the (observed) frame in `shape` (see `layout`). */
   private final case class Write(shape: DataFrame => DataFrame) extends Plan
+
+  /** One table an object lands as: the plain table, or one DEPARTITION
+    * partition. Its frame is built at most once, and only by a step that
+    * reads rows; its source bytes are measured only for
+    * TARGET_FILE_SIZE; `copyFrom` is the dump dir a copy may take the
+    * plain table's files from. */
+  private final class Target(val out: String, frame: => DataFrame,
+      bytes: => Long, val copyFrom: Option[String] = None) {
+    lazy val df: DataFrame = frame
+    lazy val srcBytes: Long = bytes
+  }
 
   /** Read a dump dir's `_metadata.json` sidecar (the attach recovery
     * source and the consumer-facing provenance record: tables,

@@ -2,9 +2,8 @@ package graft.model
 
 /** Core job algebra, re-expressed from the reference's enums.
   *
-  * Reference: Operation/JobMode at
-  * /root/reference/src/oracledb_datapump/base.py:5-31, Stage at
-  * base.py:34-37, JobState at status.py:32-47.
+  * Reference: Operation/JobMode at base.py:5-31, JobState at
+  * status.py:32-47.
   */
 sealed abstract class Operation(val name: String)
 object Operation {
@@ -38,16 +37,6 @@ object JobMode {
     values.find(_.name == s.toUpperCase)
       .getOrElse(throw new IllegalArgumentException(
         s"Unknown mode '$s'; valid: ${values.map(_.name).mkString(", ")}"))
-}
-
-/** Directive application phase (base.py:34-37; staged application at
-  * job.py:277-295).
-  */
-sealed abstract class Stage(val name: String)
-object Stage {
-  case object Pre extends Stage("PRE")        // plan-build phase
-  case object DataPump extends Stage("DATAPUMP") // execution phase
-  case object Post extends Stage("POST")      // post-commit callbacks
 }
 
 /** 12-state job lifecycle machine (status.py:32-47). */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.directives._
-import graft.model.Stage
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,8 +46,8 @@ class DirectiveSpec extends AnyFunSuite {
     assert(TargetFileSize.parse("2TB") == TargetFileSize(2L << 40))
     assert(DirectiveCompiler.fromJson("TARGET_FILE_SIZE", Some("128MB"), None) ==
       TargetFileSize(128L << 20))
-    assert(DirectiveCompiler.compile(TargetFileSize(7L)) ==
-      Seq(Effect.TargetFileBytes(7L)))
+    assert(DirectiveCompiler.compile(Seq(TargetFileSize(7L))).targetFileBytes ==
+      Some(7L))
     intercept[graft.model.Exceptions.BadRequest](TargetFileSize.parse("fast"))
     intercept[IllegalArgumentException](TargetFileSize(0L))
     // overflow is a rejected request, never a silently wrapped Long
@@ -59,35 +58,73 @@ class DirectiveSpec extends AnyFunSuite {
   }
 
   test("compile: filters restrict object selection") {
-    val effects = DirectiveCompiler.compile(IncludeTable(Seq("lineitem", "orders")))
-    val sel = effects.collectFirst { case Effect.ObjectSelection(f) => f }.get
-    assert(sel(Seq("lineitem", "orders", "customer")) == Seq("lineitem", "orders"))
+    val settings = DirectiveCompiler.compile(Seq(IncludeTable(Seq("lineitem", "orders"))))
+    assert(settings.tables == Some(Set("lineitem", "orders")))
+    assert(DirectiveCompiler.compile(Nil).tables.isEmpty)
+    assert(DirectiveCompiler.compile(Seq(ExcludeObjectType("TABLE"))).tablesExcluded)
+    assert(!DirectiveCompiler.compile(Seq(ExcludeObjectType("INDEX"))).tablesExcluded)
   }
 
   test("compile: compression maps to writer codec options") {
-    assert(DirectiveCompiler.compile(Compression("NONE"))
-      .contains(Effect.WriterOption("compression", "none")))
-    assert(DirectiveCompiler.compile(CompressionAlgorithm("HIGH"))
-      .contains(Effect.WriterOption("compression", "zstd")))
+    assert(DirectiveCompiler.compile(Seq(Compression("NONE")))
+      .writerOptions == Map("compression" -> "none"))
+    assert(DirectiveCompiler.compile(Seq(CompressionAlgorithm("HIGH")))
+      .writerOptions == Map("compression" -> "zstd"))
   }
 
   test("compile: physical switches are accepted-and-ignored, never fail") {
     PhysicalSwitch.names.foreach { n =>
-      val eff = DirectiveCompiler.compile(PhysicalSwitch(n, "whatever"))
-      assert(eff.exists { case Effect.Ignored(_) => true; case _ => false })
+      assert(DirectiveCompiler.compile(Seq(PhysicalSwitch(n, "whatever"))) ==
+        JobSettings())
     }
   }
 
-  test("DELETE_FILES is a POST-stage directive") {
-    assert(DeleteFiles().stage == Stage.Post)
-    assert(IncludeSchema("HR").stage == Stage.DataPump)
+  test("compile: parallel/flashback/estimate effects") {
+    assert(DirectiveCompiler.compile(Seq(Parallel(8))).parallel == 8)
+    assert(DirectiveCompiler.compile(Seq(FlashbackScn(12345L)))
+      .snapshotPin == Some("12345"))
+    assert(DirectiveCompiler.compile(Seq(EstimateOnly(true))).estimateOnly)
   }
 
-  test("compile: parallel/flashback/estimate effects") {
-    assert(DirectiveCompiler.compile(Parallel(8)).contains(Effect.SetParallel(8)))
-    assert(DirectiveCompiler.compile(FlashbackScn(12345L))
-      .contains(Effect.SnapshotPin("12345")))
-    assert(DirectiveCompiler.compile(EstimateOnly(true))
-      .contains(Effect.EstimateOnly))
+  test("compile: repeated directives resolve per field") {
+    val s = DirectiveCompiler.compile(Seq(
+      Parallel(2), Parallel(8),
+      DumpFormat("ORC"), DumpFormat("csv"),
+      TableExistsAction("APPEND"), TableExistsAction("TRUNCATE"),
+      FlashbackTime("2024-01-01T00:00:00Z"), FlashbackScn(7L),
+      TargetFileSize(64L), TargetFileSize(128L),
+      IncludeMetadata(false), IncludeMetadata(true),
+      Compression("ALL"), CompressionAlgorithm("HIGH"),
+      IncludeTable(Seq("Region")), IncludeTable(Seq("nation")),
+      IncludeSchema("hr"), IncludeSchema("FIN"),
+      EstimateOnly(false), MasterOnly(true), EstimateOnly(false),
+      KeepMaster(true), KeepMaster(false),
+      PartitionOptions("DEPARTITION"), PartitionOptions("NONE"),
+      RemapSchema("a", "b"), RemapSchema("A", "c"),
+      RemapTable("T", "U"), RemapTablespace("warm", "cold"),
+      Query("x > 1"), Sample(50.0),
+      DeleteFiles()))
+    // the first of each slot wins
+    assert(s.parallel == 2 && s.dumpFormat == "orc")
+    assert(s.saveMode == org.apache.spark.sql.SaveMode.Append && !s.truncate)
+    assert(s.snapshotPin == Some("2024-01-01T00:00:00Z"))
+    assert(s.targetFileBytes == Some(64L) && !s.includeMetadata)
+    // a later option of the same key replaces an earlier one
+    assert(s.writerOptions == Map("compression" -> "zstd"))
+    // INCLUDE_TABLE lists unite; INCLUDE_SCHEMA keeps directive order
+    assert(s.tables == Some(Set("region", "nation")))
+    assert(s.schemas == Seq("hr", "FIN"))
+    // the switches hold when any directive sets them
+    assert(s.estimateOnly && s.keepMaster && s.departition && s.deleteFiles)
+    // transforms in directive order; the later remap of a name wins
+    assert(s.transforms.size == 2)
+    assert(s.schemaOf("a") == "c" && s.schemaOf("other") == "other")
+    assert(s.tableOf("t") == "u")
+    assert(s.storageOf("/x/warm/y") == "/x/cold/y")
+    // defaults when nothing is set
+    val d = DirectiveCompiler.compile(Nil)
+    assert(d.parallel == 1 && d.dumpFormat == "parquet" && d.includeMetadata &&
+      d.saveMode == org.apache.spark.sql.SaveMode.ErrorIfExists &&
+      d.snapshotPin.isEmpty && !d.deleteFiles)
   }
 }

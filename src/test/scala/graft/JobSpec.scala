@@ -130,6 +130,49 @@ class JobSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dump/main/region").exists())
   }
 
+  test("DELETE_FILES deletes only the dumps of COMPLETED objects") {
+    val dump = tmp("jobspec-del-dump"); val tgt = tmp("jobspec-del-tgt")
+    assert(DataPumpJob(Operation.Export, JobMode.Table, sf, dump,
+      directives = Seq(IncludeTable(Seq("region", "nation")))).run(spark)
+      .state == JobState.Completed)
+    def held(t: String) = new java.io.File(s"$dump/main/$t").exists()
+    // an ESTIMATE_ONLY import moves nothing, so it consumes nothing
+    val est = DataPumpJob(Operation.Import, JobMode.Full, dump, tgt,
+      directives = Seq(EstimateOnly(true), DeleteFiles())).run(spark)
+    assert(est.objects.map(_.state).distinct == Seq("ESTIMATED"))
+    assert(held("region") && held("nation"))
+    // region's target exists (ErrorIfExists): region FAILS and keeps its
+    // dump, nation moves and its dump goes
+    DataPumpJob(Operation.Import, JobMode.Table, dump, tgt,
+      directives = Seq(IncludeTable(Seq("region")))).run(spark)
+    val imp = DataPumpJob(Operation.Import, JobMode.Full, dump, tgt,
+      directives = Seq(DeleteFiles())).run(spark)
+    assert(imp.state == JobState.CompletedWithErrors, imp.objects)
+    assert(imp.objects.map(o => o.objectName -> o.state).toMap ==
+      Map("region" -> "FAILED", "nation" -> "COMPLETED"))
+    assert(held("region") && !held("nation"))
+    assert(spark.read.parquet(s"$dump/main/region").count() == 5)
+    // the job log was written before the delete
+    assert(DataPumpJob.getLogfile(spark, tgt).exists(_.contains("ORA-31693")))
+  }
+
+  test("repeated INCLUDE_TABLE directives select every named table") {
+    // what `graft.Main export --table region --table nation` sends
+    val (_, _, flags, _) = Main.parseArgs(Array("export", "--source-dir", sf,
+      "--table", "region", "--table", "nation"))
+    val directives = flags.map(d =>
+      DirectiveCompiler.fromJson(d("name"), d.get("value"), d.get("old_value")))
+    assert(directives == Seq(IncludeTable(Seq("region")), IncludeTable(Seq("nation"))))
+    Seq(JobMode.Table, JobMode.Full).foreach { mode =>
+      val out = tmp("jobspec-tables")
+      val info = DataPumpJob(Operation.Export, mode, sf, out,
+        directives = directives).run(spark)
+      assert(info.state == JobState.Completed, info.errors)
+      assert(info.objects.map(_.objectName).sorted == Seq("nation", "region"), mode)
+      assert(info.totalRows == 30)
+    }
+  }
+
   test("APPEND validates on-disk schema: a mismatched append fails per-object") {
     val dump1 = tmp("jobspec-app-r"); val dump2 = tmp("jobspec-app-n")
     val tgt = tmp("jobspec-app-tgt")

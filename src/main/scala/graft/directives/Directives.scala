@@ -74,9 +74,10 @@ final case class JobSettings(
   def schemaOf(source: String): String =
     schemaRemaps.findLast(_._1.toLowerCase == source.toLowerCase).fold(source)(_._2)
 
-  /** REMAP_TABLE: the target table name, lower case. */
+  /** REMAP_TABLE: the target table name, lower case; the source name
+    * matches case-insensitively, as INCLUDE_TABLE and REMAP_SCHEMA do. */
   def tableOf(source: String): String =
-    tableRemaps.findLast(_._1.toLowerCase == source).fold(source)(_._2.toLowerCase)
+    tableRemaps.findLast(_._1.equalsIgnoreCase(source)).fold(source)(_._2.toLowerCase)
 
   /** REMAP_TABLESPACE (directives.py:453-454): a tablespace is physical
     * placement; on a file store that's the output root, so the remap

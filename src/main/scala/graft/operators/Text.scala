@@ -1785,11 +1785,9 @@ object Text {
     * fingerprint pins the REASSEMBLED text byte-for-byte in both
     * engines without hauling full texts through the compare.
     *
-    * Shape: spans come from the substr kernel; the rewrite is one
-    * per-doc window (lag over a doc's own spans — bounded state), one
-    * per-doc ordered agg assembling surviving segments, and one
-    * narrow join back to the text. Nothing corpus-sized leaves its
-    * partition unaggregated. */
+    * Shape: spans come from the pooled substr kernel; the rewrite is
+    * [[scrubFrom]]'s one per-doc span aggregate and one join with the
+    * text. */
   def substrScrub(spark: SparkSession, sf: String): DataFrame = {
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
@@ -1801,34 +1799,36 @@ object Text {
 
   /** The rewrite kernel: cut `spans` out of `docs` and report the
     * accounting + reassembled-text fingerprint — shared by
-    * [[substrScrub]] (all cross-doc repeats) and
-    * [[decontaminateScrub]] (eval-shared spans only). */
-  private def scrubFrom(docs: DataFrame, spans: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("span_start"))
-    // the surviving segment BEFORE each span: (prev span end, start)
-    val segs = spans
-      .withColumn("s0",
-        coalesce(lag(col("span_end"), 1).over(byDoc), lit(0L)))
-      .join(docs, "doc_id")
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        col("s0"),
-        expr("substring(text, cast(s0 + 1 as int), " +
-          "cast(span_start - s0 as int))").as("seg"))
-    val perDoc = segs.groupBy(col("doc_id"))
+    * [[substrScrub]] (all cross-doc repeats), [[substrScrubFirst]]
+    * (non-first copies) and [[decontaminateScrub]] (eval-shared spans
+    * only). One aggregate of the spans per doc, then one join with the
+    * text that cuts in its projection: the corpus text is read and
+    * shuffled once. A span whose doc is not in `docs` is dropped by the
+    * join. */
+  private[graft] def scrubFrom(docs: DataFrame,
+      spans: DataFrame): DataFrame = {
+    val perDoc = spans.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(col("span_end") - col("span_start")).as("cut_chars"),
         max(col("span_end")).as("last_end"),
-        array_join(transform(
-          sort_array(collect_list(struct(col("s0"), col("seg")))),
-          s => s.getField("seg")), "").as("head_text"))
+        sort_array(collect_list(struct(col("span_start"), col("span_end"))))
+          .as("cuts"))
+    // the surviving segment BEFORE each span: from the previous span's
+    // end (0 for the first span) to this span's start
+    val cuts = col("cuts")
+    val headText = array_join(transform(cuts, (c, i) => {
+      val prevEnd = when(i === 0, lit(0L))
+        .otherwise(cuts(i - 1).getField("span_end"))
+      col("text").substr((prevEnd + 1).cast("int"),
+        (c.getField("span_start") - prevEnd).cast("int"))
+    }), "")
     docs.join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("cut_chars"), lit(0L)).as("cut_chars"),
         (length(col("text")) - coalesce(col("cut_chars"), lit(0L)))
           .cast("long").as("kept_chars"),
-        md5(concat(coalesce(col("head_text"), lit("")),
+        md5(concat(coalesce(headText, lit("")),
           expr("substring(text, cast(coalesce(last_end, 0) + 1 as int), " +
             "length(text))"))).as("clean_fp"))
       .orderBy(col("doc_id"))
@@ -1877,7 +1877,7 @@ object Text {
   }
 
   /** DuckDB replay of [[substrScrub]]: the span oracle as a derived
-    * table, the same lag-segment reassembly via ordered string_agg,
+    * table, the segments restated with lag and an ordered string_agg,
     * md5 over the identical byte sequence. */
   def substrScrubOracle: String = scrubOracleOver(substrDedupOracle)
 

@@ -1065,6 +1065,19 @@ class JobSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/main/mystery_ledger").count() == 25)
   }
 
+  test("REMAP_TABLE matches a capitalized source table name case-insensitively") {
+    val src = tmp("jobspec-remapcase-src")
+    spark.read.parquet(graft.Tables.path(sf, "region"))
+      .write.parquet(s"$src/Orders.parquet")
+    val out = tmp("jobspec-remapcase-out")
+    val info = DataPumpJob(Operation.Export, JobMode.Full, src, out,
+      directives = Seq(IncludeTable(Seq("orders")),
+        RemapTable("orders", "orders_v2"))).run(spark)
+    assert(info.state == JobState.Completed, info.errors)
+    assert(spark.read.parquet(s"$out/main/orders_v2").count() == 5)
+    assert(!new java.io.File(s"$out/main/Orders").exists())
+  }
+
   test("PARTITION_OPTIONS=MERGE folds partitions into one table without a single-task scan") {
     val srcRoot = tmp("jobspec-merge-src")
     graft.operators.Events.load(spark, sf)

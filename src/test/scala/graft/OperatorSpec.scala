@@ -1974,6 +1974,60 @@ class OperatorSpec extends AnyFunSuite {
       assert(scrub(id)._4 != md5hex(texts(id)), s"doc $id unchanged"))
   }
 
+  test("scrub cut: planted spans at the edges, adjacent, orphaned and over non-ASCII text re-derive") {
+    import graft.operators.Text
+    val texts = Map(
+      1L -> "abcdefghij", // a span at offset 0, one ending on the last char
+      2L -> "0123456789", // two adjacent spans
+      3L -> "no spans here",
+      4L -> "héllo wörld 日本語 😀 tail", // offsets count code points
+      5L -> "")
+    // unordered on purpose; doc 9 is not in documents
+    val spans = Seq((4L, 16L, 17L), (1L, 7L, 10L), (2L, 4L, 7L),
+      (9L, 0L, 2L), (4L, 1L, 4L), (1L, 0L, 3L), (2L, 2L, 4L), (4L, 12L, 15L))
+    val docs = spark.createDataFrame(texts.toSeq).toDF("doc_id", "text")
+    val got = Text.scrubFrom(docs,
+        spark.createDataFrame(spans).toDF("doc_id", "span_start", "span_end"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getString(4))).toMap
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def md5hex(s: String): String =
+      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def clean(id: Long): String = {
+      val cps = texts(id).codePoints().toArray
+      val ss = spans.filter(_._1 == id).sortBy(_._2)
+      val keptCps = ss.foldLeft((Array.empty[Int], 0)) {
+        case ((acc, pos), (_, s, e)) => (acc ++ cps.slice(pos, s.toInt), e.toInt)
+      } match { case (acc, pos) => acc ++ cps.drop(pos) }
+      new String(keptCps, 0, keptCps.length)
+    }
+    assert(clean(1L) == "defg" && clean(2L) == "01789" &&
+      clean(4L) == "ho wörld   tail")
+    assert(got.keySet == texts.keySet, "one row per document, none for doc 9")
+    texts.foreach { case (id, t) =>
+      val ss = spans.filter(_._1 == id)
+      val cut = ss.map(s => s._3 - s._2).sum
+      val want = (ss.length.toLong, cut, t.codePointCount(0, t.length) - cut,
+        md5hex(clean(id)))
+      assert(got(id) == want, s"doc $id")
+    }
+  }
+
+  test("q_substr_scrub plan: one documents scan and no window") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = SparkEntry.queries("q_substr_scrub")(spark, sf)
+    df.collect()
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val executed = df.queryExecution.executedPlan
+    val docScans = plans.collect(executed) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths
+        .exists(_.toString.endsWith("documents.parquet")) => s }
+    assert(docScans.size == 1, executed.toString)
+    assert(plans.collect(executed) { case w: WindowExec => w }.isEmpty,
+      executed.toString)
+  }
+
   test("substr dedup at corpus scale: spans re-derive from the brute-force L-gram union") {
     import graft.operators.Text
     val got = Text.substrDedup(spark, sf).collect()
